@@ -1,6 +1,7 @@
 package graft
 
 import graft.bench.MetricsListener
+import graft.catalog.{Catalog, Tag}
 import graft.engine.GraftSession
 
 /** Benchmark main — runs the full query catalog on
@@ -54,44 +55,22 @@ object Bench {
     // per-job floor (~0.5-0.8 s × rows) IS the full-catalog total, so the
     // close-out chain's intermediate gates run a fixed representative
     // tier — the 10 weather anchors + the r14 slowest-8 — instead of the
-    // whole catalog. The env var only narrows the NAME LIST; warm-up,
-    // min-of-two passes, anchors and the JSON contract are unchanged, and
-    // the driver (which sets no env) still gets full-catalog runs.
-    val headlineTier = Seq(
-      // the 10 variance anchors
-      "q_filter", "q_sum", "q_take", "q_partition", "q_join",
-      "q_window", "q_tfidf", "q_sessionize", "q_topk_per_key",
-      "q_minhash_pairs",
-      // the r14 slowest-8
-      "q_edit_pairs", "q_stream_restart", "q_corpus_pipeline",
-      "q_stream_evict", "q_label_prop", "q_stream_outer_join",
-      "q_stream_sessionize", "q_rfm")
-    // SPARK_GRAFT_BENCH_TIER=scaling (r19 verdict #2b): the sf0.1 catalog
-    // sits on a ~0.3-0.5 s per-job fixed-overhead floor, so 8c-vs-32c
-    // ratios measure ≈1 everywhere and genuine parallelism is
-    // undemonstrable (the driver's `suspect_cpus_ignored` finding — the
-    // env var IS honored, the floor just swamps it at this SF). This tier
-    // is the scaling story: the heaviest ~10 rows, meant to run against a
-    // ×10 corpus (graft.bench.ScaleGen writes one deterministically, e.g.
+    // whole catalog. SPARK_GRAFT_BENCH_TIER=scaling (r19 verdict #2b): the
+    // sf0.1 catalog sits on a ~0.3-0.5 s per-job fixed-overhead floor, so
+    // 8c-vs-32c ratios measure ≈1 everywhere; this tier is the heaviest
+    // ~10 rows (the r14 ×10 scale-up table, BASELINE.md), meant to run
+    // against a ×10 corpus (graft.bench.ScaleGen writes one, e.g.
     //   runMain graft.bench.ScaleGen /root/testdata/sf0.1 /tmp/graft_sf1 10
     // then SPARK_GRAFT_SF_DIR=/tmp/graft_sf1) at two SPARK_GRAFT_CPUS
-    // settings — where per-row work is seconds, not floor, and the
-    // 8c/32c ratio reflects real parallel speedup. Name list only; the
-    // warm-up, min-of-two passes and the JSON contract are unchanged, and
-    // the driver (which sets no env) still gets full-catalog runs.
-    val scalingTier = Seq(
-      // the r14 ×10 scale-up table's heaviest rows (BASELINE.md): enough
-      // per-row seconds at sf1 to rise clear of the per-job floor
-      "q_edit_pairs", "q_corpus_pipeline", "q_weighted_median",
-      "q_percentile_disc", "q_salted_join", "q_naive_bayes",
-      "q_label_prop", "q_minhash_pairs", "q_join", "q_tfidf")
+    // settings. Each row declares its tiers (graft.catalog.Tag). The env
+    // var only narrows the NAME LIST; warm-up, min-of-two passes, anchors
+    // and the JSON contract are unchanged, and the driver (which sets no
+    // env) still gets full-catalog runs.
     val tier = sys.env.get("SPARK_GRAFT_BENCH_TIER")
     val names =
       if (args.nonEmpty) SparkEntry.queries.keys.toSeq.filter(args.contains).sorted
-      else if (tier.contains("headline"))
-        headlineTier.filter(SparkEntry.queries.contains).sorted
-      else if (tier.contains("scaling"))
-        scalingTier.filter(SparkEntry.queries.contains).sorted
+      else if (tier.contains("headline")) Catalog.tagged(Tag.Headline)
+      else if (tier.contains("scaling")) Catalog.tagged(Tag.Scaling)
       else SparkEntry.queries.keys.toSeq.sorted
     names.foreach(n => materialize(n, report = false)) // warm-up, unmeasured
     // two measured passes, min per query — damps scheduler/GC noise the
@@ -171,11 +150,9 @@ object Bench {
     // the pair would measure warm-up, not variance; likewise for the
     // scaling tier, where 7 of the 10 anchors are out-of-tier and the
     // corpus is the ×10 fixture — no recorded reference floor applies)
-    val anchorNames = (if (args.nonEmpty || tier.contains("scaling"))
-      Seq.empty[String] else Seq(
-      "q_filter", "q_sum", "q_take", "q_partition", "q_join",
-      "q_window", "q_tfidf", "q_sessionize", "q_topk_per_key",
-      "q_minhash_pairs")).filter(SparkEntry.queries.contains)
+    val anchorNames =
+      if (args.nonEmpty || tier.contains("scaling")) Seq.empty[String]
+      else Catalog.tagged(Tag.Anchor)
     def anchorPass(): Seq[(String, Double)] = anchorNames
       .flatMap { n =>
         val ts = (1 to 3)

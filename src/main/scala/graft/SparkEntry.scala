@@ -1,24 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.api.Typed
-import graft.ext.{Components, DataQuality, Dedup, IvfIndex, PageRank, Sampling, Similarity, TextAnalysis, Multimodal}
-import graft.functions.{GraftFunctions, NativeExpressions, TypedAggregates}
-import graft.functions.GraftFunctions._
-import graft.operators.{AsOfJoin, Changelog, PositionalTake, PrefixSum, RangeJoin, Relational, SkewJoin, SpatialJoin}
-import graft.sources.Tables
-import graft.streaming.EventsPipeline
+import graft.catalog.{Catalog, Parity, Support}
 
 /** Driver contract — the full operator catalog (SURVEY.md §2 parity rows +
   * north-star extensions), each as a named query over the testdata tables
-  * with, where SQL-expressible, a DuckDB oracle.
-  *
-  * Every query ends in a deterministic ORDER BY over a key that makes the
-  * row sequence unique-up-to-identical-rows, and every computed column is
-  * identically aliased in the Spark plan and the oracle SQL (driver
-  * hash-compares by column name).
+  * with its DuckDB oracle. The rows live in the [[graft.catalog]] families;
+  * this object is the facade that Verify, Bench, the benchmark harness and
+  * the specs call.
   */
 object SparkEntry {
 
@@ -26,165 +16,11 @@ object SparkEntry {
     * right key dropped (`host/join/join_dpu.cc:158-400`) on sf0.001.
     */
   def entry(spark: SparkSession): DataFrame =
-    qJoin(spark, "/root/testdata/sf0.001")
-
-  // ------------------------------------------------------------ parity ops
-
-  /** Filter + compaction (ref `dpu/shared/kernels/filter.c:57-177`). */
-  private def qFilter(s: SparkSession, d: String): DataFrame =
-    Relational
-      .filterCompact(
-        Tables.lineitem(s, d),
-        col("l_extendedprice") < 30000.0,
-        Seq("l_extendedprice"))
-      .withColumnRenamed("l_extendedprice", "v")
-      .orderBy("v")
-
-  /** Scalar SUM (ref `host/aggr/aggr_dpu.cc:31-89`). */
-  private def qSum(s: SparkSession, d: String): DataFrame =
-    Relational.sumAgg(Tables.lineitem(s, d), "l_quantity", "sum_v")
-      .select(col("sum_v").cast("double").as("sum_v"))
-
-  /** Positional take (ref `dpu/shared/kernels/take.c:12-47`): gather value
-    * rows at deterministic global indices (multiples of 8 — the reference's
-    * ⅛ indices-to-values ratio, `take_benchmark.cc:139`).
-    */
-  /** A unique total-order key over lineitem ((l_orderkey, l_linenumber) has
-    * duplicates in the testdata; this 6-column set is verified unique at
-    * every SF).
-    */
-  private val liKey =
-    Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity",
-      "l_extendedprice")
-
-  /** Directory tag for write-once artifacts (bucketed/partitioned/json
-    * tables) and temp-view names: a 64-bit md5 prefix of the path PLUS the
-    * (name, length, mtime) of every parquet file directly in it. A 32-bit
-    * `hashCode` tag can collide across directories, and the
-    * exists/tableExists guards would then silently serve one directory's
-    * artifacts as the other's; hashing the source fingerprint additionally
-    * invalidates every staged artifact if the testdata is ever
-    * REGENERATED in place — a path-only tag would keep serving stale
-    * staged copies while the oracle reads the fresh files (one directory
-    * listing per tag computation; memoized below). The memo is PER-JVM:
-    * the regeneration invalidation holds across processes, but a
-    * long-lived session that regenerates data in place keeps serving the
-    * old tag — use a fresh session (or process) after in-place rewrites.
-    * When a fresh JVM observes that a directory's tag CHANGED (via the
-    * breadcrumb below), the superseded tag's /tmp artifact trees are
-    * best-effort deleted, so regeneration does not accumulate orphaned
-    * staged copies unboundedly.
-    */
-  private val dirTagMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // every tag-keyed /tmp/graft_* staging root — MUST list each root the
-  // code writes under dirTag(d), or the stale-tag reaper leaks that tree
-  // across data regenerations (found missing csvrt/orcrt/pairs in r10)
-  private val artifactRoots = Seq(
-    "graft_ann", "graft_bin", "graft_bucketed", "graft_compact",
-    "graft_csvrt", "graft_dsv2cat", "graft_dsv2w",
-    "graft_evo", "graft_gk", "graft_incagg", "graft_json", "graft_knn",
-    "graft_orcrt",
-    "graft_pairs",
-    "graft_dppdim",
-    "graft_partitioned", "graft_partsupp", "graft_pr", "graft_sigs",
-    "graft_stream", "graft_xmlrt", "graft_zorder")
-  /** JVM-wide single-writer gate for the write-once `/tmp/graft_*`
-    * staging artifacts (ADVICE r10): without it, two sessions in THIS JVM
-    * racing the same check-then-write could both enter `mode(overwrite)`
-    * while a third reads a half-replaced directory. The build now
-    * serializes behind a per-directory lock with a double guard check.
-    * Cross-JVM races remain a documented single-writer assumption — the
-    * same one in-place data regeneration already carries (see [[dirTag]]'s
-    * reaper note).
-    */
-  private val stageLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def stagedOnceGuarded(dir: String)(ready: => Boolean)(
-      write: => Unit): Unit =
-    if (!ready)
-      stageLocks.computeIfAbsent(dir, _ => new Object).synchronized {
-        if (!ready) write
-      }
-  private def stagedOnce(dir: String)(write: => Unit): Unit =
-    stagedOnceGuarded(dir)(new java.io.File(dir, "_SUCCESS").exists())(write)
-
-  private def dirTag(d: String): String =
-    dirTagMemo.computeIfAbsent(d, { dir =>
-      val fp = new StringBuilder(dir)
-      val files = new java.io.File(dir).listFiles()
-      if (files != null)
-        files.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-          .foreach(f => fp.append('|').append(f.getName)
-            .append(':').append(f.length).append(':').append(f.lastModified))
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(fp.toString.getBytes("UTF-8"))
-        .take(8).map("%02x".format(_)).mkString
-      // breadcrumb dir→tag; a changed tag means the data was regenerated
-      // and every staged tree of the OLD tag is garbage — reap it now
-      try {
-        val dirKey = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-        val crumb = java.nio.file.Paths.get(s"/tmp/graft_tags/$dirKey")
-        java.nio.file.Files.createDirectories(crumb.getParent)
-        val old =
-          if (java.nio.file.Files.exists(crumb))
-            Some(java.nio.file.Files.readString(crumb).trim)
-          else None
-        if (!old.contains(tag)) {
-          // NOTE: another long-lived JVM that memoized the OLD tag may
-          // still be reading these trees; it will fail loudly on its next
-          // access instead of silently serving artifacts staged from
-          // superseded data — the intended side of that trade (in-place
-          // regeneration already requires fresh sessions, see above)
-          old.filter(_.nonEmpty).foreach { stale =>
-            artifactRoots.foreach(r =>
-              graft.engine.Fs.deleteRecursively(new java.io.File(s"/tmp/$r/$stale")))
-          }
-          java.nio.file.Files.writeString(crumb, tag): Unit
-        }
-      } catch { case _: java.io.IOException => () } // cleanup is best-effort
-      tag
-    })
-
-  /** Bounded LRU of qTake's cached indexed tables, keyed per (session,
-    * directory). The cache itself is deliberate — index ONCE, gather many —
-    * but a long-lived session serving many directories would otherwise
-    * accumulate one MEMORY_AND_DISK entry per directory forever (ADVICE
-    * r4); evicted entries are unpersisted and simply recompute if gathered
-    * again. Note when reading bench counters: cached reads are invisible to
-    * the listener's input metrics, so q_take's rows/bytes rates cover only
-    * the uncached index side.
-    */
-  private val MaxTakeCacheEntries = 4
-  private val takeIndexMemo =
-    new java.util.LinkedHashMap[String, DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DataFrame]): Boolean =
-        if (size > MaxTakeCacheEntries) { e.getValue.unpersist(false); true }
-        else false
-    }
-
-  /** Bounded LRU of [[pairRecallVerdict]]'s persisted full-outer pair
-    * joins, keyed per (session, canonical plan) — same eviction
-    * discipline as [[takeIndexMemo]] (ADVICE r11): one entry per pair
-    * family×directory would otherwise accumulate for the session
-    * lifetime, and pair-set size grows linearly with the corpus. Keyed
-    * by the analyzed plan's semantic hash so re-runs of the same family
-    * on the same directory reuse the one persisted instance (the same
-    * dedupe CacheManager would do, but now with eviction).
-    */
-  private val MaxPairVerdictCacheEntries = 4
-  private val pairVerdictMemo =
-    new java.util.LinkedHashMap[String, DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DataFrame]): Boolean =
-        if (size > MaxPairVerdictCacheEntries) { e.getValue.unpersist(false); true }
-        else false
-    }
+    Parity.qJoin(spark, "/root/testdata/sf0.001")
 
   /** Maintenance hook: drop every session-scoped cached plan this object
-    * holds ([[takeIndexMemo]], [[pairVerdictMemo]]) AND the session's
-    * CacheManager entries. The regeneration contract ([[dirTag]]) says
+    * holds ([[Support.takeIndexMemo]], [[Support.pairVerdictMemo]]) AND the session's
+    * CacheManager entries. The regeneration contract ([[Support.dirTag]]) says
     * in-place data regeneration requires a fresh session precisely
     * because persisted plans pin file listings; for the rare in-session
     * regeneration (tests, long-lived services rotating a corpus
@@ -192,15487 +28,21 @@ object SparkEntry {
     * replacing files so every consumer re-lists and re-materializes.
     */
   def evictCaches(s: SparkSession): Unit = {
-    takeIndexMemo.synchronized {
-      takeIndexMemo.values.forEach(df => df.unpersist(false))
-      takeIndexMemo.clear()
+    Support.takeIndexMemo.synchronized {
+      Support.takeIndexMemo.values.forEach(df => df.unpersist(false))
+      Support.takeIndexMemo.clear()
     }
-    pairVerdictMemo.synchronized {
-      pairVerdictMemo.values.forEach(df => df.unpersist(false))
-      pairVerdictMemo.clear()
+    Support.pairVerdictMemo.synchronized {
+      Support.pairVerdictMemo.values.forEach(df => df.unpersist(false))
+      Support.pairVerdictMemo.clear()
     }
     s.catalog.clearCache()
   }
 
-  private def qTake(s: SparkSession, d: String): DataFrame = {
-    // The indexed table is cached: index ONCE, gather many — the
-    // steady-state of the reference's take workload, whose benchmark
-    // likewise pre-builds the value array outside the measured gather
-    // (`host/take/take_native.cc:18-38`). Both the index derivation (every
-    // 8th position — no driver-side count()) and the gather read the same
-    // in-memory instance instead of re-evaluating the
-    // scan→range-shuffle→sort subtree per side, and the cache's exact size
-    // stats let AQE broadcast the index side so the values never shuffle.
-    val indexed = takeIndexMemo.synchronized {
-      takeIndexMemo.computeIfAbsent(
-        s"${System.identityHashCode(s)}:$d",
-        _ => {
-          val values = Tables.lineitem(s, d).select(liKey.map(col): _*)
-          PositionalTake
-            .withGlobalIndex(values, liKey)
-            .select(col("idx"), col("l_extendedprice").as("v"))
-            .cache()
-        })
-    }
-    val indices = indexed.filter(col("idx") % 8 === 0).select("idx")
-    PositionalTake.take(indexed, indices, "idx").orderBy("idx")
-  }
-
-  /** The DISTRIBUTED merge gather ([[PositionalTake.mergeTakeDist]] — r14
-    * verdict #5): same take semantics as [[qTake]], but the gather is a
-    * range-partitioned co-sorted merge — the values side never shuffles
-    * and nothing is broadcast or hashed, the plan that survives when the
-    * index side outgrows the broadcast build (the SF=64 knee in the
-    * RefBench sweep: a 33.5M-key hashed relation per executor). The only
-    * exchange is the index list's range shuffle to the values partitions'
-    * own boundaries. Oracle identical to q_take's (same result set).
-    */
-  private def qTakeMergeDist(s: SparkSession, d: String): DataFrame = {
-    val indexed = takeIndexMemo.synchronized {
-      takeIndexMemo.computeIfAbsent(
-        s"${System.identityHashCode(s)}:$d",
-        _ => {
-          val values = Tables.lineitem(s, d).select(liKey.map(col): _*)
-          PositionalTake
-            .withGlobalIndex(values, liKey)
-            .select(col("idx"), col("l_extendedprice").as("v"))
-            .cache()
-        })
-    }
-    val indices = indexed.filter(col("idx") % 8 === 0).select("idx")
-    PositionalTake.mergeTakeDist(indexed, indices, "idx").orderBy("idx")
-  }
-
-  /** Hash partition conservation (ref `host/partition/partition_dpu.cc:49-131`):
-    * repartition on the key, then prove the row multiset survived (the
-    * reference's own — disabled — invariants, `partition_test.cc:40-56`).
-    */
-  private def qPartition(s: SparkSession, d: String): DataFrame =
-    Relational
-      .hashPartition(Tables.lineitem(s, d), 32, "l_orderkey")
-      .agg(
-        count(lit(1)).as("n_rows"),
-        sum(col("l_quantity")).cast("double").as("sum_qty"),
-        sum(col("l_orderkey")).cast("long").as("sum_key"))
-
-  /** PK–FK inner equi-join, right key dropped (ref `host/join/join_native.cc:31-36,75-76`).
-    * Dimension side broadcast: at any scale where orders ≪ lineitem this is
-    * the shuffle-free plan.
-    */
-  private def qJoin(s: SparkSession, d: String): DataFrame =
-    Relational
-      .pkFkJoin(
-        Tables.lineitem(s, d).select("l_orderkey", "l_quantity"),
-        Tables.orders(s, d).select("o_orderkey", "o_totalprice"),
-        "l_orderkey",
-        "o_orderkey",
-        broadcastRight = true)
-      .orderBy("l_orderkey", "l_quantity", "o_totalprice")
-
-  /** Bucket-co-located PK–FK join: both sides are written ONCE as bucketed
-    * tables on the join key (16 buckets, sorted), after which every join is
-    * exchange-free AND sort-free — the persistent form of the reference's
-    * partition-then-join pipeline (`host/join/join_dpu.cc` phase 1), paying
-    * the shuffle at write time instead of per query. Result is identical to
-    * [[qJoin]] (same oracle).
-    */
-  /** Bucketed-table gate that is write-once ACROSS JVMs, not just within
-    * one: the in-memory catalog is empty in every fresh JVM (the driver
-    * runs Verify and Bench as separate processes), so gating on
-    * `tableExists` alone would rewrite the files on every run — wasted
-    * work charged to the first touching query, and a race against any
-    * concurrent reader of the old files. If the path is already fully
-    * written (`_SUCCESS`), ATTACH it as an external bucketed table
-    * (`CREATE TABLE … CLUSTERED BY … LOCATION`) instead of rebuilding;
-    * bucket ids live in the file names, so the attached table keeps the
-    * exchange-free join property (pinned by `BucketingSpec`).
-    */
-  private def bucketedTable(
-      s: SparkSession, table: String, path: String, schemaDdl: String,
-      key: String)(build: => DataFrame): DataFrame = {
-    stagedOnceGuarded(path)(s.catalog.tableExists(table)) {
-      if (new java.io.File(path, "_SUCCESS").exists())
-        s.sql(
-          s"""CREATE TABLE IF NOT EXISTS $table ($schemaDdl) USING parquet
-             |CLUSTERED BY ($key) SORTED BY ($key) INTO 16 BUCKETS
-             |LOCATION '$path'""".stripMargin)
-      else
-        build.write.bucketBy(16, key).sortBy(key)
-          .option("path", path).mode("overwrite").saveAsTable(table)
-    }
-    s.table(table)
-  }
-
-  private def qBucketedJoin(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val li = bucketedTable(s, s"graft_li_bkt_$tag",
-      s"/tmp/graft_bucketed/$tag/lineitem",
-      "l_orderkey BIGINT, l_quantity DOUBLE", "l_orderkey") {
-      Tables.lineitem(s, d).select("l_orderkey", "l_quantity")
-    }
-    val o = bucketedTable(s, s"graft_o_bkt_$tag",
-      s"/tmp/graft_bucketed/$tag/orders",
-      "o_orderkey BIGINT, o_totalprice DOUBLE", "o_orderkey") {
-      Tables.orders(s, d).select("o_orderkey", "o_totalprice")
-    }
-    li.join(o.hint("MERGE"), li("l_orderkey") === o("o_orderkey"), "inner")
-      .drop("o_orderkey")
-      .orderBy("l_orderkey", "l_quantity", "o_totalprice")
-  }
-
-  /** Bucket-PRUNED point lookup — the at-scale point-query story the
-    * bucketed layout buys beyond shuffle-free joins ([[qBucketedJoin]]):
-    * an equality/IN probe on the bucket column opens ONLY the buckets the
-    * keys hash into (`SelectedBucketsCount` in the scan, pinned by
-    * `PlanAuditSpec`), so a needle query on a 100 TB table reads 3/16ths
-    * of the files instead of all of them — no index structure, just the
-    * write-time layout. Reuses [[qBucketedJoin]]'s staged orders table.
-    * `autoBucketedScan` is pinned OFF around the read: Spark's
-    * DisableUnnecessaryBucketedScan rule models only exchange-avoidance
-    * benefits, so left alone it turns the bucketed scan off here and
-    * forfeits the pruning this query exists for.
-    */
-  private def qBucketLookup(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "false")
-    try {
-      val o = bucketedTable(s, s"graft_o_bkt_$tag",
-        s"/tmp/graft_bucketed/$tag/orders",
-        "o_orderkey BIGINT, o_totalprice DOUBLE", "o_orderkey") {
-        Tables.orders(s, d).select("o_orderkey", "o_totalprice")
-      }
-      val out = o.filter(col("o_orderkey").isin(64L, 128L, 999L))
-        .select(col("o_orderkey"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .orderBy("o_orderkey")
-      // planning is lazy and reads SQLConf at plan time — force it while
-      // the conf override is live (QueryExecution caches the result)
-      out.queryExecution.executedPlan
-      out
-    } finally s.conf.set(key, prev)
-  }
-
-  // -------------------------------------------------------- analytics ops
-
-  /** Scan-heavy filter+aggregate (TPC-H Q6 shape): every predicate reaches
-    * the parquet scan; the aggregate is a single partial→final pair.
-    */
-  private def qFilterAgg(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .filter(
-        col("l_shipdate") >= lit("1995-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1996-01-01").cast("timestamp") &&
-          col("l_discount").between(0.03, 0.07) &&
-          col("l_quantity") < 24.0)
-      .agg(round(sum(col("l_extendedprice") * col("l_discount")), 2).as("revenue"),
-        count(lit(1)).as("n"))
-
-  /** Grouped aggregation (TPC-H Q1 shape — beyond the reference's scalar-only
-    * SUM, SURVEY §2.3).
-    */
-  private def qGroupAgg(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        sum(col("l_quantity")).cast("double").as("sum_qty"),
-        round(sum(col("l_extendedprice")), 2).as("sum_base"),
-        round(avg(col("l_quantity")), 4).as("avg_qty"),
-        count(lit(1)).as("n"))
-      .orderBy("l_returnflag", "l_linestatus")
-
-  /** Top-k: per-partition heap + driver merge (`TakeOrderedAndProject`),
-    * never a global sort.
-    */
-  private def qTopK(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .select("o_orderkey", "o_totalprice")
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .limit(100)
-
-  /** Join + group + top-k (TPC-H Q3 shape). */
-  private def qJoinAggTopK(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-    val o = Tables.orders(s, d)
-    li.join(broadcast(o), li("l_orderkey") === o("o_orderkey"))
-      .groupBy(col("o_orderkey"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-        .as("revenue"))
-      .orderBy(col("revenue").desc, col("o_orderkey"))
-      .limit(10)
-  }
-
-  /** Left-semi join (EXISTS). */
-  private def qSemiJoin(s: SparkSession, d: String): DataFrame = {
-    val c = Tables.customer(s, d)
-    val o = Tables.orders(s, d)
-    c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-      .select("c_custkey")
-      .orderBy("c_custkey")
-  }
-
-  /** Left-anti join (NOT EXISTS): customers with no urgent orders (the
-    * unfiltered variant is empty in the testdata).
-    */
-  private def qAntiJoin(s: SparkSession, d: String): DataFrame = {
-    val c = Tables.customer(s, d)
-    val o = Tables.orders(s, d).filter(col("o_orderpriority") === "1-URGENT")
-    c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-      .select("c_custkey")
-      .orderBy("c_custkey")
-  }
-
-  /** Window functions: rank + running sum per order (absent from the
-    * reference, SURVEY §2.3).
-    */
-  private def qWindow(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Order within the partition by the full unique key so rank and running
-    // sum are deterministic across engines.
-    val tie = liKey.tail.map(col)
-    val w = Window.partitionBy(col("l_orderkey")).orderBy(tie: _*)
-    Tables.lineitem(s, d)
-      .select(
-        col("l_orderkey"),
-        col("l_linenumber").cast("long").as("l_linenumber"),
-        row_number().over(w).cast("long").as("rn"),
-        sum(col("l_quantity"))
-          .over(w.rowsBetween(Window.unboundedPreceding, 0))
-          .cast("double").as("run_qty"))
-      .orderBy(col("l_orderkey") +: tie :+ col("rn"): _*)
-      .select("l_orderkey", "l_linenumber", "rn", "run_qty")
-  }
-
-  /** Multi-way join (TPC-H Q5 shape): region → nation → customer → orders
-    * → lineitem with a date-range filter; dims broadcast down the chain,
-    * the fact table never shuffles for the joins.
-    */
-  private def qMultiJoin(s: SparkSession, d: String): DataFrame = {
-    val r = Tables.region(s, d).filter(col("r_name") === "ASIA")
-    val n = Tables.nation(s, d)
-    val c = Tables.customer(s, d)
-    val o = Tables.orders(s, d)
-      .filter(col("o_orderdate") >= lit("1995-01-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-    val li = Tables.lineitem(s, d)
-    li.join(broadcast(o), li("l_orderkey") === o("o_orderkey"))
-      .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-      .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-      .groupBy(col("n_name"))
-      .agg(
-        round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"),
-        count(lit(1)).as("n_items"))
-      .orderBy("n_name")
-  }
-
-  /** Exact percentiles (linear interpolation — matches QUANTILE_CONT).
-    * One `percentile(col, array(...))` aggregate: a single value buffer
-    * per group instead of three.
-    */
-  private def qPercentiles(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .agg(percentile(col("l_extendedprice"),
-        array(lit(0.5), lit(0.9), lit(0.99))).as("ps"))
-      .select(
-        col("l_returnflag"),
-        round(col("ps").getItem(0), 4).as("p50"),
-        round(col("ps").getItem(1), 4).as("p90"),
-        round(col("ps").getItem(2), 4).as("p99"))
-      .orderBy("l_returnflag")
-
-  /** Per-key top-k via the custom bounded-heap operator
-    * (`graft.plans.TopKPerKey` — logical node + strategy + exec): no
-    * per-group sort, one shuffle on the key. Ordering struct carries the
-    * full unique key so ties are deterministic.
-    */
-  private def qTopKPerKey(s: SparkSession, d: String): DataFrame = {
-    val ord = struct(
-      col("l_extendedprice"), col("l_orderkey"), col("l_partkey"),
-      col("l_suppkey"), col("l_quantity"), col("l_linenumber"))
-    graft.plans.TopKPerKey
-      .topKPerKey(Tables.lineitem(s, d), Seq("l_returnflag"), ord, k = 3)
-      .select(
-        col("l_returnflag"), col("l_extendedprice"), col("l_orderkey"),
-        col("l_linenumber").cast("long").as("l_linenumber"))
-      .orderBy(
-        col("l_returnflag"), col("l_extendedprice").desc, col("l_orderkey").desc,
-        col("l_linenumber").desc)
-  }
-
-  /** Exact decimal aggregation: sums carried in DECIMAL (no float drift),
-    * converted to double only for the final comparison.
-    */
-  private def qDecimalSum(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        sum(col("l_extendedprice").cast("decimal(12,2)")).cast("double").as("sum_price"),
-        sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(14,4)")).cast("double").as("sum_disc_price"))
-      .orderBy("l_returnflag")
-
-  /** ROLLUP grouping sets (no grouping concept at all in the reference). */
-  private def qRollup(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .rollup(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        sum(col("l_quantity")).cast("double").as("sum_qty"),
-        count(lit(1)).as("n"))
-      .orderBy(
-        col("l_returnflag").asc_nulls_first,
-        col("l_linestatus").asc_nulls_first)
-
-  /** Correlated LATERAL subquery — per-nation top-2 customers by exact
-    * integer-unit spend, through the ANSI LATERAL surface (the SQL twin
-    * of the [[plans.TopKPerKey]] operator family: same semantics, third
-    * mechanism — Catalyst DECORRELATES the ordered-limited correlated
-    * subquery into a per-key rank under the hood, so no nation's
-    * candidate list is ever evaluated per outer row). Spend accumulates
-    * as exact 1e-2 currency longs (order-independent, bit-identical
-    * across engines); ties break on c_custkey. At 100 TB the aggregate
-    * shuffles once on (nationkey, custkey) and the decorrelated rank
-    * shuffles once on nationkey — the 25-row nation side never drives
-    * per-row re-execution.
-    */
-  private def qLateralTopn(s: SparkSession, d: String): DataFrame = {
-    val nation = tempView(s, d, "graft_nation", Tables.nation(s, d))
-    val cust = tempView(s, d, "graft_customer", Tables.customer(s, d))
-    val orders = tempView(s, d, "graft_orders", Tables.orders(s, d))
-    s.sql(
-      s"""WITH spend AS (
-         |  SELECT c.c_nationkey, c.c_custkey,
-         |         SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS sp
-         |  FROM $cust c JOIN $orders o ON o.o_custkey = c.c_custkey
-         |  GROUP BY 1, 2)
-         |SELECT n.n_name, t.c_custkey, CAST(t.sp AS DOUBLE) / 100.0 AS spend
-         |FROM $nation n
-         |JOIN LATERAL (
-         |  SELECT s.c_custkey, s.sp FROM spend s
-         |  WHERE s.c_nationkey = n.n_nationkey
-         |  ORDER BY s.sp DESC, s.c_custkey LIMIT 2) t
-         |ORDER BY n.n_name, spend DESC, c_custkey""".stripMargin)
-  }
-
-  /** percentile_disc vs percentile_cont cross-check per group — the two
-    * ANSI WITHIN-GROUP order statistics side by side over per-flag
-    * quantities. The oracle derives `disc` from FIRST PRINCIPLES (the
-    * smallest value whose cume_dist ≥ p — the ANSI definition — via a
-    * window, not DuckDB's quantile_disc, whose index rounding is not
-    * guaranteed to match), so Spark's builtin is checked against the
-    * definition itself; `cont` interpolates linearly at (n−1)·p, which
-    * over whole-number quantities at quarter fractions is EXACT
-    * quarter-integer arithmetic in any engine — bit-identical without
-    * rounding. Scale: one hash shuffle on the group key; each group's
-    * sort is per-key (no global ordering).
-    */
-  private def qPercentilesWithin(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY l_quantity)")
-          .cast("double").as("p25_disc"),
-        expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY l_quantity)")
-          .cast("double").as("p50_disc"),
-        expr("percentile_disc(0.75) WITHIN GROUP (ORDER BY l_quantity)")
-          .cast("double").as("p75_disc"),
-        expr("percentile_cont(0.25) WITHIN GROUP (ORDER BY l_quantity)")
-          .cast("double").as("p25_cont"),
-        expr("percentile_cont(0.5) WITHIN GROUP (ORDER BY l_quantity)")
-          .cast("double").as("p50_cont"),
-        expr("percentile_cont(0.75) WITHIN GROUP (ORDER BY l_quantity)")
-          .cast("double").as("p75_cont"))
-      .orderBy("l_returnflag")
-
-  /** Interval-OVERLAP join (the symmetric sibling of [[qAsofJoin]] and
-    * the point-in-interval [[qRangeJoin]]): per-user daily sessions
-    * [first event, last event] from two disjoint user cohorts, paired
-    * when they overlap in time — the co-presence join behind concurrency
-    * billing, contention analysis, and contact tracing. The production
-    * shape is day-partitioned + HOUR-BANDED: each interval explodes into
-    * the hour buckets it spans (sessions are hours long, so the
-    * expansion is small and bounded), candidates meet on the (day,
-    * bucket) equi-key — never a per-day cross product — and a pair is
-    * counted only in the bucket holding its overlap START
-    * (`floor(max(a_start, b_start))` — the standard dedup that avoids a
-    * distinct shuffle over multi-bucket pairs). Overlap lengths sum as
-    * exact integer µs. The DuckDB oracle is the quadratic per-day join —
-    * differential proof that banding loses no pair. At 100 TB the
-    * candidate volume is governed by bucket width: narrower bands trade
-    * map-side expansion for fewer false candidates, and the day key
-    * partition-prunes both sides.
-    */
-  private def qIntervalOverlap(s: SparkSession, d: String): DataFrame = {
-    val sess = Tables.events(s, d)
-      .select(col("user_id"), to_date(col("ts")).as("day"),
-        unix_micros(col("ts")).as("us"))
-      .groupBy("user_id", "day")
-      .agg(min(col("us")).as("a"), max(col("us")).as("b"))
-    def side(m: Int, p: String) = sess
-      .filter(pmod(col("user_id"), lit(10)) === m)
-      .select(col("user_id").as(s"${p}_uid"), col("day"),
-        col("a").as(s"${p}_a"), col("b").as(s"${p}_b"))
-    RangeJoin
-      .overlapJoin(side(0, "x"), side(1, "y"), Seq("day"),
-        "x_a", "x_b", "y_a", "y_b", bucketWidth = 3600000000L)
-      .select(col("day"),
-        (least(col("x_b"), col("y_b")) - greatest(col("x_a"), col("y_a")))
-          .as("ov_us"))
-      .groupBy("day")
-      .agg(count(lit(1)).as("n_pairs"), sum(col("ov_us")).as("sum_overlap_us"))
-      .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-        col("n_pairs"), col("sum_overlap_us"))
-      .orderBy("day")
-  }
-
-  /** Set operations: UNION ALL / INTERSECT / EXCEPT over key projections. */
-  private def qSetOps(s: SparkSession, d: String): DataFrame = {
-    val a = Tables.orders(s, d).filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_custkey").as("k"))
-    val b = Tables.orders(s, d).filter(col("o_orderpriority") === "5-LOW")
-      .select(col("o_custkey").as("k"))
-    a.intersect(b).withColumn("op", lit("both"))
-      .unionAll(a.distinct().exceptAll(b.distinct()).withColumn("op", lit("urgent_only")))
-      .orderBy("op", "k")
-  }
-
-  /** Scalar-function sampler: math/string/conditional projections. */
-  private def qScalarFuncs(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .select(
-        col("o_orderkey"),
-        round(abs(col("o_totalprice") - 100000.0), 2).as("abs_diff"),
-        round(sqrt(col("o_totalprice")), 4).as("sqrt_price"),
-        substring(col("o_orderpriority"), 1, 1).as("prio_code"),
-        upper(col("o_orderstatus")).as("status_u"),
-        length(col("o_orderpriority")).cast("long").as("prio_len"),
-        when(col("o_totalprice") > 200000.0, lit("big"))
-          .otherwise(lit("small")).as("bucket"),
-        year(col("o_orderdate")).cast("long").as("o_year"),
-        month(col("o_orderdate")).cast("long").as("o_month"))
-      .orderBy("o_orderkey")
-
-  /** Distinct (dedup as a relational operator) + exact distinct count. */
-  private def qDistinct(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .select(col("l_returnflag"), col("l_linestatus"))
-      .distinct()
-      .groupBy(col("l_returnflag"))
-      .agg(countDistinct(col("l_linestatus")).as("n_status"))
-      .orderBy("l_returnflag")
-
-  /** As-of join: each error event picks up the user's most recent prior
-    * purchase value (see [[graft.operators.AsOfJoin]]).
-    */
-  private def qAsOfJoin(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .groupBy(col("user_id"), col("ts"))
-      .agg(max(col("value")).as("purchase_value"))
-    val errors = ev.filter(col("event_type") === "error")
-      .select("event_id", "user_id", "ts")
-    AsOfJoin
-      .asOfJoinLatest(errors, purchases, Seq("user_id"), "ts", "ts",
-        Seq("purchase_value"))
-      .select(col("event_id"), round(col("purchase_value"), 4).as("purchase_value"))
-      .orderBy("event_id")
-  }
-
-  /** Range join: customers whose balance falls within ±50 of a supplier's
-    * balance — bucketed interval join, no cross product
-    * (see [[graft.operators.RangeJoin]]).
-    */
-  private def qRangeJoin(s: SparkSession, d: String): DataFrame = {
-    val c = Tables.customer(s, d).select(col("c_custkey"), col("c_acctbal"))
-    val bands = Tables.supplier(s, d)
-      .select(
-        col("s_suppkey"),
-        (col("s_acctbal") - 50.0).as("lo"),
-        (col("s_acctbal") + 50.0).as("hi"))
-    RangeJoin
-      .pointInIntervalJoin(c, bands, "c_acctbal", "lo", "hi", bucketWidth = 100.0)
-      .select("c_custkey", "s_suppkey")
-      .orderBy("c_custkey", "s_suppkey")
-  }
-
-  /** Sketch aggregates: HLL distinct counts audited in-plan against the
-    * exact counts. The estimates themselves are engine-specific (DuckDB has
-    * no HLL++ at rsd 0.05), so the row emits the exact counts plus a bound
-    * verdict per sketch — rsd = 0.05, 3σ = 15% bounds the relative error
-    * with overwhelming probability (the floor `CrossCheckSpec` has pinned
-    * since round 3) — and the oracle computes the exact side and asserts
-    * the guarantee as literal TRUE. A sketch drifting past its declared
-    * error hash-mismatches this row. Same differential-oracle discipline as
-    * the reference's aggregate tests (host/aggr/aggr_test.cc:25-48). The
-    * exact side is the audit, not the production path — at 100 TB only the
-    * mergeable sketch runs. The two exact distincts are SPLIT into
-    * two-level aggregations (distinct-pairs then count) joined back to the
-    * one-pass sketch aggregate, NOT packed into one agg: two
-    * countDistincts in a single aggregate plan an Expand that triples
-    * every row through one wide shuffle — measured 1.41 s vs 0.55 s for
-    * the split form at sf0.1, and each split branch scans only its two
-    * pruned columns.
-    */
-  private def qSketches(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-    val exactOrders = li.select("l_returnflag", "l_orderkey").distinct()
-      .groupBy("l_returnflag").agg(count(lit(1)).as("exact_orders"))
-    val exactParts = li.select("l_returnflag", "l_partkey").distinct()
-      .groupBy("l_returnflag").agg(count(lit(1)).as("exact_parts"))
-    val sketches = li.groupBy("l_returnflag").agg(
-      approx_count_distinct(col("l_orderkey"), 0.05).as("approx_orders"),
-      approx_count_distinct(col("l_partkey"), 0.05).as("approx_parts"))
-    exactOrders.join(exactParts, "l_returnflag").join(sketches, "l_returnflag")
-      .select(
-        col("l_returnflag"),
-        col("exact_orders"),
-        col("exact_parts"),
-        (abs(col("approx_orders") - col("exact_orders"))
-          <= col("exact_orders") * 0.15).as("hll_orders_ok"),
-        (abs(col("approx_parts") - col("exact_parts"))
-          <= col("exact_parts") * 0.15).as("hll_parts_ok"))
-      .orderBy("l_returnflag")
-  }
-
-  /** Approximate-quantile sketch (Greenwald–Khanna via `percentile_approx`)
-    * audited in-plan against the exact distribution — completing the
-    * mergeable-sketch family (HLL `q_sketches`, Misra-Gries
-    * `q_heavy_hitters`, quantiles here). One scalar row per (group, q)
-    * carrying the exact percentile (oracle-checkable), the group count, and
-    * `gk_bound_ok`: whether the sketch's pick lands within the GK
-    * rank-error bound (|rank(pick) − q·n| ≤ max(1, ⌊n/1000⌋) + 1). The
-    * picks themselves are engine-specific (DuckDB's approx_quantile is a
-    * t-digest), so the oracle asserts the GUARANTEE as a literal TRUE plus
-    * the exact percentiles — canonicalize-before-compare, the reference's
-    * own test discipline (host/join/join_test.cc:27-38). At 100 TB the
-    * sketch is the only viable path — exact percentiles need a full sort
-    * per group, GK merges bounded summaries; the rank audit broadcasts the
-    * 9 pick rows back over the scan, so it adds no extra shuffle.
-    */
-  private def qApproxQuantiles(s: SparkSession, d: String): DataFrame = {
-    val qs = array(lit(0.5), lit(0.95), lit(0.99))
-    val li = Tables.lineitem(s, d)
-      .select(col("l_returnflag"), col("l_extendedprice"))
-    // per-group sketch picks + exact percentiles + count, exploded to one
-    // scalar row per (group, q)
-    val picks = li
-      .groupBy(col("l_returnflag"))
-      .agg(
-        percentile_approx(col("l_extendedprice"), qs, lit(1000)).as("approx_arr"),
-        percentile(col("l_extendedprice"), qs).as("exact_arr"),
-        count(lit(1)).as("n"))
-      .select(col("l_returnflag"), col("n"), col("exact_arr"),
-        posexplode(col("approx_arr")))
-      .select(
-        col("l_returnflag"),
-        element_at(qs, col("pos") + 1).as("q"),
-        col("col").as("approx_p"),
-        element_at(col("exact_arr"), col("pos") + 1).as("exact_p"),
-        col("n"))
-    // rank each pick in the exact distribution (broadcast of 9 rows — no
-    // shuffle) and emit the bound verdict instead of the engine-specific pick
-    // The GK guarantee says SOME rank of the picked value lies within
-    // eps*n of q*n. A duplicated pick value occupies a whole rank
-    // interval [count(<pick)+1, count(<=pick)], so the verdict must test
-    // that the INTERVAL intersects the band — testing only the max-rank
-    // (count <= pick) would flag a correct sketch as out-of-bound
-    // whenever the pick value's duplicate run is longer than the band.
-    li.join(broadcast(picks), Seq("l_returnflag"))
-      .groupBy(col("l_returnflag"), col("q"), col("approx_p"),
-        col("exact_p"), col("n"))
-      .agg(
-        sum(when(col("l_extendedprice") < col("approx_p"), 1L)
-          .otherwise(0L)).as("rank_lo"),
-        sum(when(col("l_extendedprice") <= col("approx_p"), 1L)
-          .otherwise(0L)).as("rank_hi"))
-      .select(
-        col("l_returnflag"),
-        col("q"),
-        round(col("exact_p"), 4).as("exact_p"),
-        col("n"),
-        {
-          val band =
-            greatest(lit(1L), floor(col("n") / 1000)).cast("double") + 1
-          val target = col("q") * col("n")
-          ((col("rank_lo") + 1 <= target + band) &&
-            (col("rank_hi") >= target - band)).as("gk_bound_ok")
-        })
-      .orderBy("l_returnflag", "q")
-  }
-
-  /** GK-sketch PARTIAL-MERGE across the storage boundary (the
-    * mergeability contract beside [[qIncrementalAgg]]'s sum-merge and
-    * [[qHllMerge]]'s HLL roll-up, now for QUANTILES): the corpus is split
-    * into two halves; the even-key half's Greenwald–Khanna summary
-    * ([[TypedAggregates.GkBuild]] — Spark's own `QuantileSummaries`
-    * engine, the state inside `percentile_approx`, driven through its
-    * public insert/compress/merge/query surface) is a WRITE-ONCE PARQUET
-    * artifact (the standing daily sketch); the odd-key half's summary is
-    * computed fresh (the delta); [[TypedAggregates.GkMergeQuery]]
-    * re-aggregates the stored states by GK-merge and answers
-    * q ∈ {0.5, 0.9, 0.99} — raw data is never rescanned for the roll-up.
-    * At 100 TB this is the only viable percentile-over-any-window path:
-    * per-shard/per-day KB-scale summaries stored once, merged per query.
-    * The merged picks are sketch-internal, so the row emits the
-    * [[qApproxQuantiles]] rank-interval audit instead: rank(pick) must
-    * lie within 2·ε·n + 1 of q·n (ε = 1/10000; the factor 2 covers the
-    * error growth a two-summary merge is allowed), plus the exact
-    * percentiles and count for the DuckDB differential. A merge that
-    * loses or double-counts rank mass fails the bound.
-    */
-  private def qQuantileMerge(s: SparkSession, d: String): DataFrame = {
-    val qVals = Seq(0.5, 0.9, 0.99)
-    val eps = 1.0 / 10000
-    val build = udaf(new TypedAggregates.GkBuild(eps))
-    val mergeQ = udaf(new TypedAggregates.GkMergeQuery(qVals),
-      org.apache.spark.sql.Encoders.product[TypedAggregates.GkState])
-    val orders = Tables.orders(s, d).select("o_orderkey", "o_totalprice")
-    def half(parity: Int) = orders
-      .filter(pmod(col("o_orderkey"), lit(2)) === parity)
-      .agg(build(col("o_totalprice")).as("state"))
-    val baseDir = s"/tmp/graft_gk/${dirTag(d)}/base"
-    stagedOnce(baseDir) {
-      // the state is ONE summary row (KB-scale); repartition(1) after the
-      // aggregate per the house law (never coalesce above an agg)
-      half(0).repartition(1).write.mode("overwrite").parquet(baseDir)
-    }
-    val qArr = array(qVals.map(lit): _*)
-    // a product input encoder is flattened top-level: one arg per field
-    val picks = s.read.parquet(baseDir)
-      .unionAll(half(1))
-      .agg(mergeQ(col("state.values"), col("state.gs"), col("state.deltas"),
-        col("state.count"), col("state.relativeError")).as("picks"))
-      .select(posexplode(col("picks")).as(Seq("pos", "pick")))
-      .select(element_at(qArr, col("pos") + 1).as("q"), col("pick"))
-    // rank-interval audit: one corpus pass against the 3 broadcast picks
-    // (the qApproxQuantiles shape), plus the exact percentiles for the
-    // oracle — the sketch pick itself is engine-internal and never emitted
-    val ranks = orders.join(broadcast(picks))
-      .groupBy("q", "pick")
-      .agg(
-        sum(when(col("o_totalprice") < col("pick"), 1L).otherwise(0L))
-          .as("rank_lo"),
-        sum(when(col("o_totalprice") <= col("pick"), 1L).otherwise(0L))
-          .as("rank_hi"),
-        count(lit(1)).as("n"))
-    val exact = orders
-      .agg(percentile(col("o_totalprice"), qArr).as("exact_arr"))
-      .select(posexplode(col("exact_arr")).as(Seq("pos", "exact_p")))
-      .select(element_at(qArr, col("pos") + 1).as("q"), col("exact_p"))
-    ranks.join(broadcast(exact), "q")
-      .select(
-        col("q"),
-        round(col("exact_p"), 4).as("exact_p"),
-        col("n"),
-        {
-          val band = lit(2.0) * lit(eps) * col("n") + 1.0
-          val target = col("q") * col("n")
-          ((col("rank_lo") + 1 <= target + band) &&
-            (col("rank_hi") >= target - band)).as("gk_merge_bound_ok")
-        })
-      .orderBy("q")
-  }
-
-  /** Bloom semi-join reduction — the 100 TB shuffle-cutting pattern made
-    * explicit as an operator: build a bloom filter over the selective build
-    * side (distributed treeAggregate via `stat.bloomFilter`; the filter
-    * itself is KB-scale host metadata), probe it in the fact scan's filter
-    * BEFORE the shuffle, then run the exact semi-join over the survivors.
-    * False positives are removed by the join, so the result is exact and
-    * the DuckDB oracle is the plain semi-join — the bloom changes the
-    * plan's traffic, never its answer. The probe is a fully-codegen'd
-    * native expression ([[graft.functions.NativeExpressions.BloomMightContain]]);
-    * at 1000 executors the filter broadcast replaces shuffling the ~96% of
-    * fact rows that cannot match. (Session-level runtime bloom stays
-    * opt-in — `GraftSession` measured it regressing on unselective builds;
-    * this row is the measured-selective case where the pattern pays.)
-    */
-  private def qBloomPrefilter(s: SparkSession, d: String): DataFrame = {
-    val urgent = Tables.orders(s, d)
-      .filter(col("o_orderpriority") === "1-URGENT")
-      .select("o_orderkey")
-    // build-side cardinality sizes the filter: one metadata-sized count
-    // job, then the distributed build (fpp 1% at that capacity)
-    val bytes = GraftFunctions.buildBloom(urgent, "o_orderkey")
-    Tables.lineitem(s, d)
-      .filter(NativeExpressions.bloom_might_contain(col("l_orderkey"), bytes))
-      .join(urgent, col("l_orderkey") === col("o_orderkey"), "left_semi")
-      .groupBy(col("l_returnflag"))
-      .agg(
-        count(lit(1)).as("n_items"),
-        sum(col("l_quantity")).as("sum_qty"))
-      .orderBy("l_returnflag")
-  }
-
-  /** Mergeable-sketch re-aggregation: per-day HLL user sketches unioned
-    * into a single corpus-wide estimate WITHOUT rescanning the events —
-    * the store-daily / roll-up-monthly shape that makes sketches the only
-    * viable distinct-count path at 100 TB (exact distinct needs a full
-    * user_id shuffle per window). The merged estimate is engine-specific
-    * (DataSketches HLL internals), so the row emits the exact distinct
-    * count plus an in-plan bound verdict: lgConfigK=12 → relative standard
-    * error ≈ 1.04/√4096 ≈ 1.6%, and the 5σ = 8% band `CrossCheckSpec` has
-    * pinned since round 3 becomes `hll_bound_ok`. The DuckDB oracle
-    * computes the exact side and asserts the guarantee as literal TRUE — a
-    * merge that loses precision hash-mismatches this row. The exact
-    * distinct is the audit, not the production path; at 100 TB only the
-    * daily-sketch roll-up runs.
-    */
-  private def qHllMerge(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d)
-    val daily = e
-      .groupBy(to_date(col("ts")).as("day"))
-      .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk"))
-    val merged = daily
-      .agg(
-        count(lit(1)).as("n_days"),
-        hll_sketch_estimate(hll_union_agg(col("sk"))).as("merged_users"))
-    val exact = e.agg(countDistinct(col("user_id")).as("exact_users"))
-    // both sides are one scalar row; a literal-key equi-join keeps the
-    // combine a BroadcastHashJoin (the cartesian gate in PlanAuditSpec
-    // stays allowlist-free)
-    merged.withColumn("one", lit(1))
-      .join(broadcast(exact.withColumn("one", lit(1))), "one")
-      .select(
-        col("n_days"),
-        col("exact_users"),
-        (abs(col("merged_users") - col("exact_users"))
-          <= col("exact_users") * 0.08).as("hll_bound_ok"))
-  }
-
-  /** Typed COGROUP — the `KeyValueGroupedDataset` batch surface
-    * ([[graft.api.Typed]]'s escape hatch): orders and lineitems
-    * co-partitioned on the order key, per-key ITERATORS handed to
-    * arbitrary JVM logic. The reconciliation here (line count + cents
-    * total + empty-order flag per order) folds the lineitem iterator in
-    * a single streaming pass — nothing per-key is materialized except
-    * the ≤1 order row — and orphan line groups (no parent order) emit an
-    * ORPHAN marker the relational LEFT JOIN cannot express without a
-    * second anti-join pass. Scale: one shuffle per side (the same
-    * exchange a join would pay), per-key memory O(1); the cost is that
-    * typed lambdas opaque-box rows — no codegen, no pushdown past the
-    * scan — so cogroup is reserved for logic SQL can't state (sequence
-    * alignment, custom merges). THIS row's logic deliberately can be
-    * stated in SQL (left join + conditional aggregate), which is what
-    * makes it fully oracle-checkable; the compact per-status rollup
-    * rides a normal relational aggregate after the typed seam.
-    */
-  private def qCogroup(s: SparkSession, d: String): DataFrame = {
-    val recon = Typed
-      .reconcileOrders(Typed.orders(s, d), Typed.lineitem(s, d))
-      .toDF("status", "n_lines", "line_cents", "empty")
-    recon.groupBy("status")
-      .agg(
-        count(lit(1)).as("n_orders"),
-        sum(col("n_lines")).as("n_lines"),
-        sum(col("line_cents")).as("line_cents"),
-        sum(col("empty")).as("n_empty_orders"))
-      .orderBy("status")
-  }
-
-  /** MULTIPLE DISTINCT aggregates in one pass — the query shape Catalyst
-    * executes via EXPAND: each input row is replicated once per distinct
-    * group (×3 here: partkey-distinct, suppkey-distinct, plain), then a
-    * two-level aggregate dedups and combines. The row exists to PIN that
-    * shape and its 100 TB implication (PlanAuditSpec asserts the Expand):
-    * shuffle input multiplies by the distinct-aggregate count, so at
-    * scale the alternatives are `approx_count_distinct` (the
-    * [[qHllMerge]] family — no Expand, mergeable KB sketches) or
-    * separate per-column rollups joined on the group key; exact
-    * multi-distinct is the AUDIT, not the steady-state dashboard query.
-    * The non-distinct aggregates ride the same pass unchanged (Expand
-    * routes them through the null-extended branch).
-    */
-  private def qMultiDistinct(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        countDistinct(col("l_partkey")).as("n_parts"),
-        countDistinct(col("l_suppkey")).as("n_supps"),
-        count(lit(1)).as("n_rows"),
-        sum(col("l_quantity").cast("long")).as("sum_qty"))
-      .orderBy("l_returnflag")
-
-  /** HLL sketch SET ALGEBRA — audience overlap by inclusion-exclusion
-    * (|A∩B| ≈ est(A) + est(B) − est(A∪B)), the estimator every
-    * overlap/reach dashboard runs because HLL has union but NO native
-    * intersection: purchase-audience ∩ click-audience from three
-    * KB-scale sketches built in ONE conditional-aggregation pass (never
-    * a per-pair user-set join). The exact sides ride the same single
-    * scan (per-user bool_or flags → one compact distinct-user aggregate)
-    * as the audit, and the verdict pins the known caveat — inclusion-
-    * exclusion COMPOUNDS the per-sketch error (3 sketches ⇒ ~3× the
-    * 1.6% lgK=12 bound, and the RELATIVE error blows up as the true
-    * intersection shrinks vs the union) — with a bound scaled to the
-    * union size, the estimator's actual error scale. At 100 TB: three
-    * mergeable sketches vs a full user_id shuffle per audience pair.
-    */
-  private def qHllIntersect(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d)
-      .filter(col("event_type").isin("purchase", "click"))
-    val sk = e.agg(
-      hll_sketch_estimate(
-        hll_sketch_agg(when(col("event_type") === "purchase",
-          col("user_id")), lit(12))).as("est_a"),
-      hll_sketch_estimate(
-        hll_sketch_agg(when(col("event_type") === "click",
-          col("user_id")), lit(12))).as("est_b"),
-      hll_sketch_estimate(
-        hll_sketch_agg(col("user_id"), lit(12))).as("est_u"))
-    val exact = e.groupBy(col("user_id"))
-      .agg(
-        max(col("event_type") === "purchase").as("a"),
-        max(col("event_type") === "click").as("b"))
-      .agg(
-        sum(when(col("a"), 1L).otherwise(0L)).as("exact_a"),
-        sum(when(col("b"), 1L).otherwise(0L)).as("exact_b"),
-        count(lit(1)).as("exact_union"),
-        sum(when(col("a") && col("b"), 1L).otherwise(0L)).as("exact_inter"))
-    exact.withColumn("one", lit(1))
-      .join(broadcast(sk.withColumn("one", lit(1))), "one")
-      .select(
-        col("exact_a"), col("exact_b"), col("exact_union"),
-        col("exact_inter"),
-        (abs(col("est_a") + col("est_b") - col("est_u")
-          - col("exact_inter")) <= col("exact_union") * 0.10 + 1.0)
-          .as("inter_bound_ok"))
-  }
-
-  /** Count-min-sketch frequency estimates beside the exact counts: one
-    * pass builds the sketch (mergeable, fixed KB-scale memory); the probe
-    * is a native expression over the serialized sketch
-    * ([[graft.functions.NativeExpressions.CmsEstimate]]). The estimate is
-    * engine-specific (Spark's CMS layout), so the row emits the exact
-    * count plus an in-plan verdict of the CMS guarantee — estimate ≥
-    * exact always, and ≤ exact + ⌈ε·N⌉ at the configured confidence (the
-    * bound `CrossCheckSpec` has pinned since round 3; deterministic here
-    * because the seed is fixed). The DuckDB oracle computes the exact side
-    * and asserts the guarantee as literal TRUE — a sketch that under- or
-    * over-counts past ε·N hash-mismatches this row. At 100 TB the sketch
-    * answers point-frequency queries from KBs of state where the exact
-    * group-by needs a full shuffle of the key column; the exact side here
-    * is the audit, and N rides the same group-by via a window sum over the
-    * handful of group rows (no second scan).
-    */
-  private def qCmsFreq(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = Tables.events(s, d)
-    // eps=0.001 → width 2719, depth 5 at 99% confidence; seed fixed for
-    // deterministic output. The sketch binary is host metadata (KBs).
-    val skBytes = e
-      .agg(expr("count_min_sketch(event_type, 0.001d, 0.99d, 42)"))
-      .head().getAs[Array[Byte]](0)
-    e.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("exact_n"))
-      .withColumn("est_n",
-        NativeExpressions.cms_estimate(col("event_type"), skBytes))
-      // total stream length N, summed over the (few) group rows — the
-      // window is over a single-digit row set, not the events table
-      .withColumn("n_total",
-        sum(col("exact_n")).over(Window.partitionBy(lit(1))))
-      .select(
-        col("event_type"),
-        col("exact_n"),
-        (col("est_n") >= col("exact_n") &&
-          col("est_n") <= col("exact_n")
-            + ceil(col("n_total") * 0.001).cast("long"))
-          .as("cms_bound_ok"))
-      .orderBy("event_type")
-  }
-
-  /** Equi-width histogram over a measure column: one partial-agg pass, the
-    * primitive behind distribution profiling at 100 TB (each executor emits
-    * ≤ n_buckets partials; the final reduce is bucket-count-sized). Fixed
-    * a-priori bucket edges (width 6000) keep the bucketing engine-portable:
-    * k·6000 is exactly representable in IEEE double, so Spark and DuckDB
-    * floor identically at the boundaries.
-    */
-  private def qHistogram(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(floor(col("l_extendedprice") / lit(6000.0)).cast("int").as("bucket"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(min(col("l_extendedprice")), 2).as("lo"),
-        round(max(col("l_extendedprice")), 2).as("hi"))
-      .orderBy("bucket")
-
-  /** Quantile discretization (ML feature prep): per-group deciles of the
-    * price column via `ntile` over a TOTAL order (price + the unique
-    * 6-column key — ties would otherwise make bucket assignment
-    * engine-dependent), summarized per bucket. This is the exact variant:
-    * it pays a per-group sort, which is the right tool up to the sizes a
-    * partition sort handles; past that, [[qApproxQuantiles]]' GK cutpoints
-    * are the 100 TB path (bounded summaries, no global sort) — the two
-    * rows document the trade explicitly.
-    */
-  private def qDeciles(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("l_returnflag").orderBy(
-      col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"),
-      col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-    Tables.lineitem(s, d)
-      .withColumn("decile", ntile(10).over(w))
-      .groupBy("l_returnflag", "decile")
-      .agg(
-        count(lit(1)).as("n"),
-        round(min(col("l_extendedprice")), 2).as("lo"),
-        round(max(col("l_extendedprice")), 2).as("hi"))
-      .orderBy("l_returnflag", "decile")
-  }
-
-  /** Gaps-and-islands: each user's longest run of consecutive active days.
-    * The island key is `day − row_number·1d` (constant within a run,
-    * distinct across runs) — a window over the user partition, so the only
-    * wide state is one row per (user, active-day) after the distinct, and
-    * every step shuffles on user_id alone.
-    */
-  private def qStreaks(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val days = Tables.events(s, d)
-      .select(col("user_id"), to_date(col("ts")).as("day"))
-      .distinct()
-    val w = Window.partitionBy("user_id").orderBy("day")
-    days
-      .withColumn("grp", date_add(col("day"), -row_number().over(w)))
-      .groupBy("user_id", "grp")
-      .agg(count(lit(1)).as("streak"))
-      .groupBy("user_id")
-      .agg(max(col("streak")).as("longest_streak"))
-      .orderBy("user_id")
-  }
-
-  /** Generator/flatten (Catalyst `Generate`): one row per token. */
-  private def qExplodeTokens(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .filter(col("doc_id") < 50)
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .orderBy("doc_id", "token")
-
-  /** Okapi BM25 (k1=1.2, b=0.75) relevance of every document to a fixed
-    * three-term query, top-10 by score.
-    *
-    * Scale shape — the reason this is NOT the textbook explode→tf→df→join
-    * pipeline: with a known (small) query-term set, per-term tf is
-    * computed INSIDE each row from the token array (three `filter` passes
-    * over an already-materialized array — row-local CPU, no Generate, no
-    * per-token shuffle), and the corpus statistics (N, avgdl, per-term
-    * df) reduce to ONE scalar row that a broadcast cross-join feeds back.
-    * The whole query is TWO passes over documents — one feeding the 1-row
-    * stats aggregate, one scoring against the broadcast of that row (the
-    * tokenize runs in each; at scale the second pass is the price of not
-    * materializing a tokenized copy of the corpus) — plus a
-    * TakeOrderedAndProject; nothing token-shaped ever crosses an
-    * exchange. Every constant is written as the same decimal literal in
-    * the Spark plan and the DuckDB oracle, and the arithmetic tree shapes
-    * match, so the rounded scores agree bit-for-bit.
-    */
-  private def qBm25(s: SparkSession, d: String): DataFrame = {
-    val terms = Seq("hash", "join", "merge")
-    val withToks = Tables.documents(s, d)
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-    // toks is a plain attribute here, so CollapseProject keeps the
-    // tokenize single-evaluation (non-cheap expressions referenced more
-    // than once are not inlined). tf via the native codegen'd equals loop
-    // (the HOF `size(filter(...))` dispatched an interpreted lambda per
-    // token × term)
-    val perDoc = withToks.select(
-      col("doc_id") +: size(col("toks")).as("dl") +:
-        terms.map(t =>
-          NativeExpressions.array_count_eq(col("toks"), t).as(s"tf_$t")): _*)
-    val statCols = count(lit(1)).as("n_docs") +: avg(col("dl")).as("avgdl") +:
-      terms.map(t =>
-        sum(when(col(s"tf_$t") > 0, 1L).otherwise(0L)).as(s"df_$t"))
-    val stats = perDoc.agg(statCols.head, statCols.tail: _*)
-    val score = terms.map { t =>
-      val tf = col(s"tf_$t")
-      val df = col(s"df_$t")
-      log((col("n_docs") - df + 0.5) / (df + 0.5) + 1.0) *
-        (tf * 2.2) /
-        (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
-    }.reduce(_ + _)
-    perDoc.crossJoin(broadcast(stats))
-      .select(col("doc_id"), round(score, 6).as("bm25"))
-      .filter(col("bm25") > 0)
-      .orderBy(col("bm25").desc, col("doc_id"))
-      .limit(10)
-  }
-
-  /** TF-IDF: the highest-scoring term per document (score = tf · ln(N/df),
-    * rounded before ranking so the Spark and oracle rankings agree at ties;
-    * term-ascending tie-break makes the winner unique). Shape: tokenize →
-    * (doc, term) partial-agg tf → term-keyed df agg → term-keyed join back —
-    * two aggregations and one join, each with map-side combine. The corpus
-    * size N is an uncorrelated scalar subquery: Catalyst executes it once
-    * and inlines the value (no join node, no driver collect). The per-doc
-    * argmax is a window over the doc partition — each doc's postings are
-    * tiny, so the window never spills.
-    *
-    * The df branch is a ROLLUP OF THE tf AGGREGATE, not an independent
-    * re-derivation (r19 finding: the corpus tokenized TWICE): column
-    * pruning used to strip the COUNT from df's copy of the tf subtree, the
-    * canonicalized subtrees diverged, and ReuseExchange re-ran the whole
-    * tokenize+explode+aggregate for the df side. The semantically-no-op
-    * `WHERE tf > 0` (COUNT(*) is always ≥ 1) references the count column,
-    * so both consumers see the IDENTICAL aggregate and the df branch reads
-    * the (doc_id, term) exchange back as ReusedExchange — one
-    * `Generate explode(tokenize)` subtree in the executed plan (the
-    * q_lm_score null-filter-pinning discipline).
-    */
-  private def qTfidf(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.registerAll(s)
-    val docs = tempView(s, d, "graft_tfidf_docs", Tables.documents(s, d))
-    s.sql(
-      s"""WITH tf AS (
-         |  SELECT doc_id, term, COUNT(*) AS tf
-         |  FROM (SELECT doc_id, explode(graft_tokenize(text)) AS term
-         |        FROM $docs)
-         |  GROUP BY doc_id, term),
-         |df AS (SELECT term, COUNT(*) AS df FROM tf WHERE tf > 0 GROUP BY term),
-         |scored AS (
-         |  SELECT tf.doc_id, tf.term,
-         |         ROUND(tf.tf * ln(CAST((SELECT COUNT(*) FROM $docs) AS DOUBLE)
-         |                          / df.df), 6) AS score
-         |  FROM tf JOIN df USING (term))
-         |SELECT doc_id, term AS top_term, score FROM (
-         |  SELECT *, row_number() OVER (
-         |    PARTITION BY doc_id ORDER BY score DESC, term) AS rn
-         |  FROM scored)
-         |WHERE rn = 1 ORDER BY doc_id""".stripMargin)
-  }
-
-  /** Bigram language-model document scoring — the statistical-LM quality
-    * filter (KenLM-style perplexity gate) of a pretraining pipeline,
-    * model-free: train a bigram LM on the corpus itself (p(w2|w1) =
-    * c(w1,w2) / c(w1·), context counts, so probabilities sum to 1 and
-    * every doc bigram is in-vocabulary by construction), then score each
-    * document by its average bigram log-likelihood — low scores = word
-    * salad, high = formulaic repetition. Shape: bigram instances are
-    * pre-aggregated PER DOCUMENT before anything wide (map-side combine on
-    * (doc_id,w1,w2)), the LM tables are corpus-level aggregates of that
-    * same relation (AQE reuses the (w1,w2) exchange), and the score join
-    * is keyed on the bigram alone — no per-token shuffle, no driver-side
-    * vocabulary. ln(c2/c1) is written identically in both engines (single
-    * double division, then ln) so the 6-decimal rounding compares exactly.
-    */
-  private def qLmScore(s: SparkSession, d: String): DataFrame = {
-    // r20: the bigram pair list is built by ONE native loop per document
-    // (NativeExpressions.BigramPairs, property-pinned ≡ the r19
-    // zip_with(slice, slice) formulation) — the HOF tree allocated two
-    // array slices and dispatched an interpreted lambda per element
-    // inside the Generate, where whole-stage codegen cannot reach. The
-    // tokenize stays single-evaluation: it is the expression's one
-    // argument, evaluated once per row inside the Generate.
-    val perDoc = Tables.documents(s, d)
-      .select(col("doc_id"),
-        explode(NativeExpressions.bigram_pairs(tokens(col("text")))).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      // semantically a no-op (zip_with over non-null token arrays), but it
-      // pins BOTH null filters explicitly: the c1 branch's join otherwise
-      // infers only isnotnull(w1), the c2/score branches infer both, the
-      // canonicalized subtrees differ, and ReuseExchange re-tokenizes the
-      // whole corpus for the c1 branch (observed in the -exec plan)
-      .filter(col("w1").isNotNull && col("w2").isNotNull)
-      .groupBy("doc_id", "w1", "w2")
-      .agg(count(lit(1)).as("k"))
-    val c2 = perDoc.groupBy("w1", "w2").agg(sum(col("k")).as("c2"))
-    val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1"))
-    val lm = c2.join(c1, "w1")
-      .select(col("w1"), col("w2"), log(col("c2") / col("c1")).as("logp"))
-    perDoc.join(lm, Seq("w1", "w2"))
-      .groupBy("doc_id")
-      .agg(
-        sum(col("k")).as("n_bigrams"),
-        round(sum(col("k") * col("logp")) / sum(col("k")), 6).as("avg_logp"))
-      .orderBy("doc_id")
-  }
-
-  /** Unigram Shannon entropy per document — the token-diversity quality
-    * signal (low entropy = repetitive boilerplate/keyword stuffing, the
-    * complement of [[qRepetition]]'s repeated-span ratio and
-    * [[qLmScore]]'s corpus-LM likelihood). Computed in the
-    * numerically-portable decomposition H = ln(n) − Σ c·ln(c) / n over
-    * per-doc term counts (each ln applied to an exact integer, one
-    * division at the end — both engines evaluate the identical IEEE
-    * expression), rounded to 6. Shape: one (doc_id, term) map-side-combined
-    * count, then a doc-keyed aggregate — no corpus-wide state at all, so
-    * the operator is embarrassingly parallel at any corpus size.
-    */
-  private def qEntropy(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .groupBy("doc_id", "term")
-      .agg(count(lit(1)).as("c"))
-      .groupBy("doc_id")
-      .agg(
-        sum(col("c")).as("n_tokens"),
-        sum(col("c") * log(col("c"))).as("clogc"))
-      .select(
-        col("doc_id"), col("n_tokens"),
-        round(log(col("n_tokens")) - col("clogc") / col("n_tokens"), 6)
-          .as("entropy"))
-      .orderBy("doc_id")
-
-  /** Top-20 corpus bigrams: adjacent-token pairs via a zip of the token
-    * array against its own tail (no generator self-join — the pair list is
-    * built inside the row), then a count partial-agg and a
-    * TakeOrderedAndProject. The only shuffle is the bigram-keyed count; the
-    * top-k never materializes a global sort.
-    */
-  private def qBigrams(s: SparkSession, d: String): DataFrame = {
-    // tokenize ONCE in a codegen'd projection below the Generate (r19):
-    // inlining `tokens(text)` into the explode argument repeats the
-    // CodegenFallback tokenizer 5× per document — Generate sits outside
-    // whole-stage codegen, so no subexpression elimination saves it
-    val t = col("__toks")
-    val pairs = when(size(t) >= 2,
-        zip_with(
-          slice(t, lit(1), size(t) - 1),
-          slice(t, lit(2), size(t) - 1),
-          (a, b) => concat_ws(" ", a, b)))
-      .otherwise(array().cast("array<string>"))
-    Tables.documents(s, d)
-      .select(tokens(col("text")).as("__toks"))
-      .select(explode(pairs).as("bigram"))
-      .groupBy("bigram")
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("bigram"))
-      .limit(20)
-  }
-
-  /** Top-20 collocations by pointwise mutual information — the
-    * association-mining upgrade of raw bigram counts ([[qBigrams]] ranks
-    * by frequency, which surfaces stopword pairs; PMI ranks by how much
-    * MORE often a pair occurs than its parts predict, the standard
-    * phrase-extraction signal). All marginals derive from ONE bigram-count
-    * relation (start counts, end counts, total) so the corpus tokenizes
-    * once; ln applied to an exact integer ratio, frequency floor ≥ 5
-    * (PMI's low-count pathology), deterministic tie-break. The joins are
-    * keyed on single words against word-level aggregates — vocabulary-
-    * sized, broadcastable at any corpus scale.
-    */
-  private def qCollocations(s: SparkSession, d: String): DataFrame = {
-    // tokenize once below the Generate — see qBigrams (r19)
-    val t = col("__toks")
-    val bgArr = when(size(t) >= 2,
-        zip_with(
-          slice(t, lit(1), size(t) - 1),
-          slice(t, lit(2), size(t) - 1),
-          (a, b) => struct(a.as("w1"), b.as("w2"))))
-      .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
-    val bg = Tables.documents(s, d)
-      .select(tokens(col("text")).as("__toks"))
-      .select(explode(bgArr).as("bg"))
-      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .filter(col("w1").isNotNull && col("w2").isNotNull)
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-    val cs = bg.groupBy("w1").agg(sum(col("c")).as("cs"))
-    val ce = bg.groupBy("w2").agg(sum(col("c")).as("ce"))
-    val n = bg.agg(sum(col("c")).as("n_bg"))
-    bg.filter(col("c") >= 5)
-      .join(cs, "w1")
-      .join(ce, "w2")
-      .crossJoin(n)
-      .select(
-        col("w1"), col("w2"), col("c"),
-        round(log(col("n_bg") * col("c") / (col("cs") * col("ce"))), 6)
-          .as("pmi"))
-      .orderBy(col("pmi").desc, col("w1"), col("w2"))
-      .limit(20)
-  }
-
-  /** DAU/WAU stickiness per ISO week — the engagement ratio a product
-    * pipeline reports next to [[qFunnel]] and [[qRetention]]: how many of
-    * the week's actives show up on an average day. Daily and weekly
-    * distinct-user sets are both exact count-distincts keyed on compact
-    * (period, user) pairs — map-side dedup before any exchange; the
-    * week-level join is week-keyed.
-    */
-  private def qDauStickiness(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d).select(
-      to_date(col("ts")).as("day"),
-      weekofyear(col("ts")).as("week"),
-      col("user_id"))
-    val dau = e.groupBy("week", "day").agg(countDistinct(col("user_id")).as("dau"))
-      .groupBy("week").agg(
-        count(lit(1)).as("n_days"),
-        round(avg(col("dau")), 4).as("avg_dau"))
-    val wau = e.groupBy("week").agg(countDistinct(col("user_id")).as("wau"))
-    dau.join(wau, "week")
-      .select(
-        col("week"), col("n_days"), col("avg_dau"), col("wau"),
-        round(col("avg_dau") / col("wau"), 6).as("stickiness"))
-      .orderBy("week")
-  }
-
-  /** Pivot: status × returnflag quantity matrix. */
-  private def qPivot(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .pivot("l_linestatus", Seq("F", "O"))
-      .agg(sum(col("l_quantity")))
-      .select(
-        col("l_returnflag"),
-        coalesce(col("F"), lit(0.0)).cast("double").as("qty_f"),
-        coalesce(col("O"), lit(0.0)).cast("double").as("qty_o"))
-      .orderBy("l_returnflag")
-
-  /** Registers a temp view whose name is unique per data directory, so
-    * queries over different directories can run concurrently in one
-    * session without clobbering each other's views (a fixed name would be
-    * replaced mid-query by the other run). Within one directory the
-    * replace is idempotent — same definition, benign.
-    */
-  private def tempView(
-      s: SparkSession, d: String, name: String,
-      df: org.apache.spark.sql.DataFrame): String = {
-    val full = s"${name}_${dirTag(d)}"
-    df.createOrReplaceTempView(full)
-    full
-  }
-
-  /** Uncorrelated scalar subquery through the SQL surface. */
-  private def qScalarSubquery(s: SparkSession, d: String): DataFrame = {
-    val orders = tempView(s, d, "graft_orders", Tables.orders(s, d))
-    s.sql(
-      s"""SELECT o_orderkey,
-         |       ROUND(o_totalprice - (SELECT AVG(o_totalprice) FROM $orders), 2)
-         |         AS diff_from_avg
-         |FROM $orders
-         |ORDER BY o_orderkey""".stripMargin)
-  }
-
-  /** Tumbling-window event aggregation (batch twin of the streaming path). */
-  private def qEventsWindow(s: SparkSession, d: String): DataFrame =
-    EventsPipeline.windowedAgg(Tables.events(s, d))
-      .orderBy("window_start", "event_type")
-
-  /** Write-once staged copy of the events table for the streaming rows
-    * (dirTag discipline): `readStream` needs an explicit schema and the µs
-    * normalization only [[Tables.events]] applies. Staged as ONE file
-    * deliberately — the file source with maxFilesPerTrigger unset then
-    * ingests the whole feed in a single micro-batch, which is the
-    * assumption that makes finite-stream == batch-oracle equality
-    * watermark-proof: with one batch, no row can arrive more than the
-    * watermark delay after a batch that already advanced the watermark,
-    * so the inner joins/aggs can never drop late rows the batch oracle
-    * keeps.
-    */
-  private def stagedEvents(s: SparkSession, d: String): String = {
-    val staged = s"/tmp/graft_stream/${dirTag(d)}/events"
-    stagedOnce(staged) {
-      Tables.events(s, d).coalesce(1).write.mode("overwrite").parquet(staged)
-    }
-    staged
-  }
-
-  /** The STREAMING tier as a catalog row: the same tumbling-window
-    * aggregate executed as a real Structured Streaming query (micro-batch
-    * source → watermark → stateful agg → complete-mode memory sink), run
-    * to completion on the finite [[stagedEvents]] input. With all input
-    * processed, the final complete-mode table equals the batch aggregate,
-    * so the SAME DuckDB oracle that checks [[qEventsWindow]] now also
-    * checks a true micro-batch execution end to end.
-    */
-  private def qStreamAgg(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val staged = stagedEvents(s, d)
-    val name = s"graft_stream_agg_$tag"
-    // state partitions sized to state volume, not batch shuffle width —
-    // see qStreamIntervalJoin
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = EventsPipeline.streamingWindowedAgg(s, staged, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.table(name).orderBy("window_start", "event_type")
-  }
-
-  /** The scale-grade state BACKEND as a catalog row: the [[qStreamAgg]]
-    * micro-batch windowed aggregate executed on the RocksDB state store
-    * provider instead of the default in-heap HDFS-backed store. At 100 TB
-    * the stateful-agg state (watermark-deep windows × key domain) outgrows
-    * executor heaps; RocksDB keeps working state on local disk with
-    * incremental snapshot checkpointing, turning state size into a disk
-    * problem instead of an OOM. local[32] proves the real wiring — native
-    * library load, provider lifecycle per state partition, correctness of
-    * get/put/commit — under the same finite-input oracle parity contract
-    * as [[qStreamAgg]]; 30-minute windows differentiate the oracle from
-    * that row's hourly one. Conf is set/restored around the query because
-    * the provider is resolved per-query-start from session conf.
-    */
-  private def qStreamRocksdb(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val staged = stagedEvents(s, d)
-    val name = s"graft_stream_rocksdb_$tag"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevPart = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = s.conf.getOption(provKey)
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = EventsPipeline.streamingWindowedAgg(
-        s, staged, name, windowLen = "30 minutes")
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevPart)
-      prevProv match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None => s.conf.unset(provKey)
-      }
-    }
-    s.table(name).orderBy("window_start", "event_type")
-  }
-
-  /** KILL-AND-RESUME exactly-once (r13 verdict #7; the recovery property
-    * `StreamingSpec` asserts, promoted to an oracled catalog row): a
-    * RocksDB-checkpointed windowed aggregate is STOPPED MID-FEED and a
-    * brand-new query object resumes from the same checkpoint after more
-    * data arrives. The feed is a private copy of the 6 time-ordered
-    * [[stagedEventsByTime]] files, staged in two installments: phase 1
-    * sees only the first half (Trigger.AvailableNow + maxFilesPerTrigger=1
-    * drains it as per-file micro-batches, commits offsets + RocksDB state,
-    * terminates — the deterministic "kill" point, no polling race);
-    * phase 2 drops in the remaining files and starts a NEW query on the
-    * same checkpoint — the file-source offset log must skip every
-    * already-committed file and the state store must resume, not rebuild.
-    * The emitted complete-mode table equals the batch per-day aggregate
-    * ONLY under exactly-once: a replayed phase-1 file double-counts state,
-    * a dropped file under-counts — either hash-fails the DuckDB
-    * differential. `resumed_ok` additionally pins that phase 2's batch ids
-    * CONTINUED phase 1's (recovery, not a from-scratch restart). Both
-    * phases delete + restage per invocation, so the kill/resume cycle is
-    * exercised on every run — that re-staging (a file copy of the KB-scale
-    * feed) is the row's declared cost. At 100 TB this is the property that
-    * makes streaming ingestion restartable at all: executor/driver loss
-    * costs one micro-batch of recomputation, never a double-count.
-    */
-  /** STATE-STORE READER (Spark 4 state data source): the state of a
-    * checkpointed streaming aggregate read back as a BATCH DataFrame —
-    * `format("statestore")` over the checkpoint path, no stream replay,
-    * no query restart. At 100 TB this is the operational surface state
-    * debugging lives on: audit what a long-running job has accumulated
-    * (skewed keys, leaked windows, watermark bugs) directly from the
-    * checkpoint, while the query keeps running. The staged fixture is a
-    * write-once per-corpus checkpoint (a 1-day windowed count+sum driven
-    * to completion); the row reads `key.window/key.event_type` and the
-    * raw agg BUFFER (`value.count`, `value.sum`) out of the store and
-    * must reproduce the batch aggregate exactly — state content, not
-    * sink output, is what the oracle checks. `op_ok` additionally pins
-    * the `state-metadata` source (operator name + a committed batch), a
-    * 1-row driver read. HDFS-backed provider here; the RocksDB rows
-    * ([[qStreamRocksdb]]/[[qStreamRestart]]) cover the scale backend —
-    * the reader API is provider-agnostic.
-    */
-  private def qStateReader(s: SparkSession, d: String): DataFrame = {
-    val staged = stagedEvents(s, d)
-    val tag = dirTag(d)
-    val root = s"/tmp/graft_stream/$tag/statesrc"
-    val ckpt = s"$root/ckpt"
-    stagedOnceGuarded(root)(new java.io.File(root, "_STAGED").exists()) {
-      // a root WITHOUT the sentinel is a torn previous staging (the JVM
-      // died mid-stream); restart the checkpoint from scratch rather than
-      // relying on Spark's recovery over an arbitrarily torn ckpt dir —
-      // the delete-and-restage discipline qStreamRestart's fixture uses
-      // (ADVICE r14)
-      graft.engine.Fs.deleteRecursively(new java.io.File(root))
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = s.readStream
-          .schema(EventsPipeline.eventSchema)
-          .parquet(staged)
-          .groupBy(window(col("ts"), "1 day"), col("event_type"))
-          .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-          .writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName(s"graft_statesrc_$tag")
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(root, "_STAGED"), Array.emptyByteArray): Unit
-    }
-    // The state source's partition readers look up the driver's
-    // StateStoreCoordinator RPC endpoint, which only exists once
-    // something streaming-side created it — true in the JVM that staged
-    // the checkpoint, FALSE in a fresh batch-only session reading the
-    // standing artifact (RpcEndpointNotFoundException from loadMap's
-    // snapshot-upload report). Touch the manager's lazy coordinator so a
-    // checkpoint-only session can read state too.
-    org.apache.spark.sql.graftshim.StateCoordinatorShim.ensure(s)
-    // 1-row operator-metadata read (driver-side, KB-bounded): the
-    // state-metadata source names the stateful operator and its committed
-    // batch range — the "which stores exist in this checkpoint" probe an
-    // operator audit starts from
-    val md = s.read.format("state-metadata").load(ckpt)
-      .select("operatorName", "maxBatchId").head()
-    val opOk = md.getString(0) == "stateStoreSave" && md.getLong(1) >= 0L
-    s.read.format("statestore").load(ckpt)
-      .select(
-        unix_timestamp(col("key.window.start")).as("window_start"),
-        col("key.event_type").as("event_type"),
-        col("value.count").as("n_events"),
-        round(col("value.sum"), 4).as("sum_value"),
-        lit(opOk).as("op_ok"))
-      .orderBy("window_start", "event_type")
-  }
-
-  /** Streaming state REWRITE — checkpoint repartitioning through the
-    * state data source (r14 verdict #8: the operational task the Spark 4
-    * state source exists for; builds on [[qStateReader]]). An 8-partition
-    * stateful query drains the first half of the feed and stops; its
-    * state is read back through `format("statestore")`, converted to a
-    * typed initial-state Dataset, and handed to a NEW query over the
-    * second half running at 16 shuffle partitions — the new query's own
-    * hash partitioning redistributes every carried key (the rewrite).
-    * Both phases are staged write-once; the catalog row then reads the
-    * NEW checkpoint's state (state-in, state-out: the totals come from
-    * the 16-partition store, not from a sink) and verifies via
-    * `state-metadata` that the partition counts really were 8 → 16.
-    * Totals are exact integers (count, Σ cents), oracled against the
-    * whole events table — if the carry, the repartition, or the resumed
-    * arithmetic dropped anything, the totals split.
-    */
-  private def qStateRewrite(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val srcDir = stagedEventsByTime(s, d)
-    val tag = dirTag(d)
-    val root = s"/tmp/graft_stream/$tag/staterw"
-    val ckptA = s"$root/ckpt8"
-    val ckptB = s"$root/ckpt16"
-    stagedOnceGuarded(root)(new java.io.File(root, "_STAGED").exists()) {
-      // torn previous staging: restart from scratch (qStateReader's
-      // delete-and-restage discipline)
-      graft.engine.Fs.deleteRecursively(new java.io.File(root))
-      val files = new java.io.File(srcDir).listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val (firstHalf, secondHalf) = files.splitAt((files.length + 1) / 2)
-      def stage(fs: Array[java.io.File], feed: String): Unit = {
-        new java.io.File(feed).mkdirs(): Unit
-        fs.foreach(f => java.nio.file.Files.copy(
-          f.toPath, new java.io.File(feed, f.getName).toPath): Unit)
-      }
-      stage(firstHalf, s"$root/feedA")
-      stage(secondHalf, s"$root/feedB")
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        EventsPipeline.typeTotalsLifecycle(
-          s, s"$root/feedA", ckptA, s"graft_staterw_a_$tag")
-        // the REWRITE: old state out of the 8-partition checkpoint …
-        org.apache.spark.sql.graftshim.StateCoordinatorShim.ensure(s)
-        // mapGroupsWithState's state rides nested under value.groupState
-        // (the value row also carries the operator's timeout slot)
-        val old = s.read.format("statestore").load(ckptA)
-        val keyField = old.select("key.*").schema.fieldNames.head
-        val init = old
-          .select(col(s"key.$keyField").as("k"),
-            col("value.groupState.count").as("count"),
-            col("value.groupState.cents").as("cents"))
-          .as[(String, Long, Long)]
-          .groupByKey(_._1)
-          .mapValues(r => EventsPipeline.TypeAgg(r._2, r._3))
-        // … carried into a fresh 16-partition query over the rest
-        s.conf.set("spark.sql.shuffle.partitions", "16")
-        EventsPipeline.typeTotalsLifecycle(
-          s, s"$root/feedB", ckptB, s"graft_staterw_b_$tag", Some(init))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(root, "_STAGED"), Array.emptyByteArray): Unit
-    }
-    org.apache.spark.sql.graftshim.StateCoordinatorShim.ensure(s)
-    def parts(ckpt: String): Long =
-      s.read.format("state-metadata").load(ckpt)
-        .select(col("numPartitions").cast("long")).head().getLong(0)
-    val repartitionedOk = parts(ckptA) == 8L && parts(ckptB) == 16L
-    val st = s.read.format("statestore").load(ckptB)
-    val keyField = st.select("key.*").schema.fieldNames.head
-    st.select(
-        col(s"key.$keyField").as("event_type"),
-        col("value.groupState.count").as("n_events"),
-        col("value.groupState.cents").as("cents"),
-        lit(repartitionedOk).as("repartitioned_ok"))
-      .orderBy("event_type")
-  }
-
-  private def qStreamRestart(s: SparkSession, d: String): DataFrame = {
-    val srcDir = stagedEventsByTime(s, d)
-    val tag = dirTag(d)
-    val root = s"/tmp/graft_stream/$tag/restart"
-    val feed = s"$root/feed"
-    graft.engine.Fs.deleteRecursively(new java.io.File(root))
-    new java.io.File(feed).mkdirs(): Unit
-    val files = new java.io.File(srcDir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val (firstHalf, rest) = files.splitAt((files.length + 1) / 2)
-    def copyIn(fs: Array[java.io.File]): Unit = fs.foreach { f =>
-      java.nio.file.Files.copy(
-        f.toPath, new java.io.File(feed, f.getName).toPath): Unit
-    }
-    val name = s"graft_stream_restart_$tag"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevPart = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = s.conf.getOption(provKey)
-    val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // one phase = one query lifecycle: AvailableNow drains what is
-    // currently in the feed dir as one micro-batch per file, then
-    // terminates — state + offsets live only in the checkpoint between
-    // phases (complete-mode memory sink supports checkpoint recovery:
-    // the sink table is rebuilt from recovered state)
-    def phase(): Long = {
-      val q = s.readStream
-        .schema(EventsPipeline.eventSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .groupBy(window(col("ts"), "1 day"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          round(sum(col("value")), 4).as("sum_value"))
-        .select(
-          unix_timestamp(col("window.start")).as("window_start"),
-          col("event_type"), col("n_events"), col("sum_value"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
-    }
-    val (lastB1, lastB2) =
-      try {
-        copyIn(firstHalf)
-        val b1 = phase() // the mid-feed kill: offsets+state committed, query gone
-        copyIn(rest)
-        val b2 = phase() // a NEW query resumes the same checkpoint
-        (b1, b2)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevPart)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-        prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    s.table(name)
-      .withColumn("resumed_ok", lit(lastB2 > lastB1 && lastB1 >= 0))
-      .orderBy("window_start", "event_type")
-  }
-
-  /** The stateful-streaming seam as a catalog row: per-user running
-    * counters via `flatMapGroupsWithState` (custom state, not windowed
-    * agg), driven to completion on the staged finite events copy (same
-    * write-once artifact as [[qStreamAgg]]). The memory sink in Update
-    * mode may emit one row per user per micro-batch; the final state is
-    * selected with `max_by` on the monotonically-growing event counter, so
-    * the row is batch-count-independent. With all input processed the
-    * final state equals the batch group-by, giving the row a plain DuckDB
-    * oracle. State is per-key and hash-partitioned — it scales with user
-    * cardinality, never stream length.
-    */
-  private def qStreamStats(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val staged = stagedEvents(s, d)
-    val name = s"graft_stream_stats_$tag"
-    // state partitions sized to state volume, not batch shuffle width —
-    // see qStreamIntervalJoin
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = EventsPipeline.streamingUserStats(s, staged, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.table(name)
-      .groupBy("user_id")
-      .agg(
-        max(col("n_events")).as("n_events"),
-        max_by(col("sum_value"), col("n_events")).as("sum_value"))
-      .orderBy("user_id")
-  }
-
-  /** Spark 4's `transformWithState` as a catalog row: the same per-user
-    * running counters as [[qStreamStats]] executed on the NEW arbitrary-
-    * stateful-processing operator ([[graft.streaming.EventsPipeline.UserStatsTwsProcessor]]
-    * — typed named ValueState, TTL surface, timers) instead of
-    * `flatMapGroupsWithState`. The operator requires the RocksDB state
-    * store (set/restored around the query, the [[qStreamRocksdb]]
-    * discipline); sharing [[qStreamStats]]'s oracle means any semantic
-    * drift between the v1 and v2 stateful APIs is a correctness failure,
-    * not a silent difference. State is per-key on disk — scales with user
-    * cardinality and spills past heap, never with stream length.
-    */
-  private def qStreamTws(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val staged = stagedEvents(s, d)
-    val name = s"graft_stream_tws_$tag"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevPart = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = s.conf.getOption(provKey)
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = EventsPipeline.streamingUserStatsTws(s, staged, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevPart)
-      prevProv match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None => s.conf.unset(provKey)
-      }
-    }
-    s.table(name)
-      .groupBy("user_id")
-      .agg(
-        max(col("n_events")).as("n_events"),
-        max_by(col("sum_value"), col("n_events")).as("sum_value"))
-      .orderBy("user_id")
-  }
-
-  /** Stream-stream LEFT OUTER interval join as a catalog row
-    * ([[EventsPipeline.streamingLeftOuterJoin]]): the append-mode outer
-    * result — matches plus watermark-released null rows — equals the
-    * batch left join EXACTLY because the staged feed carries one
-    * far-future sentinel row (type `__wm`, filtered out of both join
-    * sides) whose only job is to push the final watermark past every
-    * error's join horizon; without it the last watermark-delay's worth
-    * of unmatched errors would sit in state forever on a finite feed,
-    * which is precisely the semantics this row documents. State on an
-    * unbounded feed stays watermark-deep on both sides.
-    */
-  private def qStreamOuterJoin(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val dir = s"/tmp/graft_stream/$tag/events_wm"
-    stagedOnce(dir) {
-      val e = Tables.events(s, d)
-      // one ERROR and one PURCHASE sentinel on disjoint negative users:
-      // each side's watermark operator must see a far-future row of ITS
-      // OWN type (see streamingLeftOuterJoin's caveat)
-      val sentinels = e.agg(max(col("ts")).as("mts"))
-        .select(explode(array(
-          struct(lit(-1L).as("event_id"),
-            (col("mts") + expr("INTERVAL 10 DAYS")).as("ts"),
-            lit(-1L).as("user_id"), lit("error").as("event_type"),
-            lit(0.0).as("value"), lit(null).cast("string").as("props")),
-          struct(lit(-2L).as("event_id"),
-            (col("mts") + expr("INTERVAL 10 DAYS")).as("ts"),
-            lit(-2L).as("user_id"), lit("purchase").as("event_type"),
-            lit(0.0).as("value"), lit(null).cast("string").as("props"))))
-          .as("r"))
-        .select(col("r.*"))
-      e.unionByName(sentinels).coalesce(1)
-        .write.mode("overwrite").parquet(dir)
-    }
-    val name = s"graft_stream_loj_$tag"
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = EventsPipeline.streamingLeftOuterJoin(s, dir, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.table(name).filter(col("eid") >= 0)
-      .orderBy(col("eid"), col("p_us").asc_nulls_first)
-  }
-
-  /** Stream-stream INTERVAL join as a driver-gated catalog row: errors
-    * joined to the same user's purchases within the preceding hour, both
-    * sides watermarked so the state store retains only a bounded horizon
-    * (the attribution-window shape). A finite stream driven to completion
-    * emits exactly the batch interval join, so the row carries a full
-    * DuckDB oracle; timestamps are emitted as epoch MICROSECONDS (exact
-    * integers on both engines — epoch seconds would round vs truncate
-    * differently on fractional-second timestamps).
-    */
-  private def qStreamIntervalJoin(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val staged = stagedEvents(s, d)
-    val name = s"graft_stream_ssj_$tag"
-    // Size the STATE partitioning explicitly: a stream-stream join keeps
-    // four state stores per shuffle partition, and the partition count is
-    // pinned into the query's checkpoint at start — it should track state
-    // SIZE, not the session's batch shuffle width (32 stores of a few
-    // thousand rows each is pure per-batch commit overhead, measured 4x
-    // the query's cost; ~40k buffered rows at sf0.1 sit comfortably in 4
-    // stores-per-operator). Measured breakdown at sf0.1 (round 7): batch 0
-    // — the whole join — 1.0 s; the trailing NO-DATA batch another 0.9 s
-    // spent only evicting state that q.stop() discards anyway. An inner
-    // stream-stream join emits eagerly, so with the single-file staged
-    // source its output is complete after batch 0 and the no-data batch is
-    // disabled for this finite drive-to-completion (production unbounded
-    // streams keep it on — there it is what bounds state between sparse
-    // data arrivals). Both confs restored after the run; the driver
-    // executes catalog queries sequentially.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val q = EventsPipeline.streamingPurchaseErrorJoin(s, staged, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-    }
-    s.table(name)
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("e_ts")).as("e_us"),
-        unix_micros(col("p_ts")).as("p_us"),
-        col("p_value"))
-      .orderBy("event_id", "p_us", "p_value")
-  }
-
-  /** Streaming exact dedup as a driver-gated catalog row: the staged feed
-    * is the events table DUPLICATED (every event twice — the at-least-once
-    * delivery reality this operator exists for; the raw table's event_ids
-    * are unique at every SF, which would make dedup a no-op),
-    * `dropDuplicatesWithinWatermark` halves it back to exactly the batch
-    * DISTINCT. Duplicate rows are byte-identical, so the kept row is
-    * deterministic and the row carries a full-column DuckDB oracle — the
-    * strongest check of the family (row CONTENT, not just key counts).
-    * State is one row per key within the watermark horizon; partitions
-    * sized to state volume and the finite-drive no-data batch skipped,
-    * both per [[qStreamIntervalJoin]]'s measured rationale.
-    */
-  private def qStreamDedup(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val dupStaged = s"/tmp/graft_stream/$tag/events_dup"
-    stagedOnce(dupStaged) {
-      val e = Tables.events(s, d)
-      e.unionAll(e).coalesce(1).write.mode("overwrite").parquet(dupStaged)
-    }
-    val name = s"graft_stream_dedup_$tag"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val q = EventsPipeline.streamingDedup(s, dupStaged, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-    }
-    s.table(name)
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts")).as("ts_us"),
-        col("event_type"), round(col("value"), 4).as("value"))
-      .orderBy("event_id")
-  }
-
-  /** Streaming SESSION windows as a driver-gated catalog row: per-user
-    * gap-merged sessions via `session_window` in Append mode — emitted
-    * exactly once when the watermark passes a session's end, state evicted
-    * (the production dynamic-window shape; see
-    * [[EventsPipeline.streamingSessionize]]). The staged feed is the
-    * events file followed by two sentinel flush rows with far-future
-    * timestamps and strictly later file mtimes; with `maxFilesPerTrigger=1`
-    * each sentinel is its own micro-batch, so the watermark advances past
-    * every real session's end and the emission happens in the second
-    * sentinel's DATA batch — the finite drive never depends on the
-    * no-data-batch race. The emitted set then equals the batch gap
-    * sessionization, giving the row a full DuckDB oracle (the same
-    * lag/cumsum recipe as `q_sessionize`, here at per-session grain with
-    * aggregates).
-    */
-  private def qStreamSessionize(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val dir = s"/tmp/graft_stream/$tag/events_sess"
-    // guard on the LAST artifact staged, not _SUCCESS: the parquet write
-    // drops _SUCCESS before the sentinels are moved in, and a crash in
-    // that window would otherwise leave a half-staged feed that emits
-    // nothing (no sentinel → watermark never passes any session's end)
-    stagedOnceGuarded(dir)(
-      new java.io.File(dir, "zz-sentinel2.parquet").exists()) {
-      val e = Tables.events(s, d)
-      e.coalesce(1).write.mode("overwrite").parquet(dir)
-      val maxUs = e.agg(unix_micros(max(col("ts")))).head().getLong(0)
-      val now = System.currentTimeMillis()
-      // Two sentinels, one micro-batch each: sentinel 1 advances the
-      // watermark past every real session; sentinel 2's batch then EMITS
-      // them (Append emission uses the watermark computed at the previous
-      // batch's end). Day-scale offsets dwarf the 30-minute gap.
-      for (i <- 1 to 2) {
-        val sentinelUs = maxUs + i * 86400L * 1000000L
-        val tmp = s"$dir-sentinel$i"
-        s.sql(
-          s"""SELECT CAST(${-i} AS BIGINT) AS event_id,
-             |       timestamp_micros(${sentinelUs}L) AS ts,
-             |       CAST(-1 AS BIGINT) AS user_id,
-             |       'flush' AS event_type, CAST(0.0 AS DOUBLE) AS value,
-             |       CAST(NULL AS STRING) AS props""".stripMargin)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val target = new java.io.File(dir, s"zz-sentinel$i.parquet")
-        java.nio.file.Files.move(part.toPath, target.toPath)
-        graft.engine.Fs.deleteRecursively(new java.io.File(tmp))
-        // the file source processes oldest-mtime first; make the order
-        // main → sentinel1 → sentinel2 explicit instead of trusting
-        // write-timing granularity
-        target.setLastModified(now + i * 60000L)
-      }
-    }
-    val name = s"graft_stream_sess_$tag"
-    // state partitions sized to state volume (qStreamIntervalJoin's
-    // rationale); measured 4 ≈ 8 at sf0.1 (~3.2 s) — the row's cost is the
-    // genuine 3-micro-batch session-state execution (ingest + two
-    // sentinel-driven emission batches), not partition-commit overhead
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val q = EventsPipeline.streamingSessionize(s, dir, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-    }
-    s.table(name)
-      .filter(col("user_id") >= 0)
-      .orderBy("user_id", "session_start_us")
-  }
-
-  /** Stream-static enrichment join as a driver-gated catalog row: every
-    * micro-batch joins the customer dimension map-side (broadcast — the
-    * stream is never shuffled), the standard reference-data join at any
-    * scale. Finite stream to completion == the batch left join.
-    */
-  private def qStreamEnrich(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val staged = stagedEvents(s, d)
-    val name = s"graft_stream_enrich_$tag"
-    val dim = Tables.customer(s, d).select(
-      col("c_custkey").as("user_id"),
-      col("c_mktsegment").as("segment"),
-      col("c_nationkey").as("nation"))
-    val q = EventsPipeline.streamingEnrich(s, staged, dim, name)
-    try q.processAllAvailable()
-    finally q.stop()
-    s.table(name)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("segment"), col("nation"))
-      .orderBy("event_id")
-  }
-
-  /** Schema-on-read evolution: two parquet generations of the events feed
-    * — an early one without the `value` column, a later one with it —
-    * merged by `mergeSchema` into one logical table (missing columns read
-    * as null), then aggregated. This is the ingest reality at 100 TB:
-    * upstream producers add columns mid-corpus and a rewrite of petabytes
-    * of old files is not an option; schema merge at the footer level costs
-    * metadata only. Write-once staged artifact (dirTag discipline); the
-    * oracle reconstructs the same split arithmetically from the original
-    * table.
-    */
-  private def qSchemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val base = s"/tmp/graft_evo/$tag"
-    stagedOnceGuarded(base)(
-      new java.io.File(s"$base/gen2", "_SUCCESS").exists()) {
-      val e = Tables.events(s, d)
-      e.filter(col("event_id") % 2 === 0)
-        .select("event_id", "event_type")
-        .write.mode("overwrite").parquet(s"$base/gen1")
-      e.filter(col("event_id") % 2 =!= 0)
-        .select("event_id", "event_type", "value")
-        .write.mode("overwrite").parquet(s"$base/gen2")
-    }
-    s.read.option("mergeSchema", "true")
-      .parquet(s"$base/gen1", s"$base/gen2")
-      .groupBy(col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        count(col("value")).as("n_with_value"),
-        round(sum(coalesce(col("value"), lit(0.0))), 4).as("sum_value"))
-      .orderBy("event_type")
-  }
-
-  /** PageRank centrality over the customer↔supplier co-purchase graph of
-    * urgent-priority orders (edges: customer bought a lineitem that
-    * supplier supplied; symmetrized, supplier ids offset into a disjoint
-    * id space — the priority filter keeps the demo row's edge build
-    * proportionate while exercising the identical operator). The
-    * quality-weighting signal of a curation pipeline — rank sources by
-    * linkage — on a genuinely multi-hop bipartite graph. Five fixed power
-    * iterations ([[graft.ext.PageRank]]); the oracle unrolls the identical
-    * recurrence as five chained CTEs, so even the iterative operator is
-    * DuckDB-checked value-for-value (rounded to 8 decimals — double
-    * summation-order slack is ~1e-15 of rank mass, six orders below the
-    * rounding grain).
-    */
-  /** The iteration-invariant co-purchase graph — orders⋈lineitem edge
-    * build, distinct, symmetrize, degree aggregation, dangling
-    * validation — STAGED once per directory as a bucketed-on-src table
-    * (dirTag discipline, like the ANN index) and SHARED by both
-    * iterative graph rows ([[qPagerank]], [[qLabelProp]]): every
-    * execution runs only its iterations, and the bucketing keeps the
-    * edge side of each iteration's join exchange-free.
-    */
-  private def pagerankEdges(s: SparkSession, d: String): DataFrame =
-    bucketedTable(s, s"graft_pr_ed_${dirTag(d)}",
-      s"/tmp/graft_pr/${dirTag(d)}/edges",
-      "src BIGINT, dst BIGINT, deg BIGINT", "src") {
-      val cs = Tables.orders(s, d)
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey"), col("o_custkey"))
-        .join(
-          Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(
-          col("o_custkey").as("cust"),
-          (col("l_suppkey") + 1000000L).as("supp"))
-        .distinct()
-      val edges = cs.select(col("cust").as("src"), col("supp").as("dst"))
-        .union(cs.select(col("supp").as("src"), col("cust").as("dst")))
-      PageRank.prepare(edges, "src", "dst")
-    }
-
-  private def qPagerank(s: SparkSession, d: String): DataFrame = {
-    PageRank.runPrepared(pagerankEdges(s, d), iterations = 5)
-      .select(col("id"), round(col("rank"), 8).as("rank"))
-      .orderBy("id")
-  }
-
-  /** Label-propagation COMMUNITY DETECTION over the same staged
-    * co-purchase graph as [[qPagerank]] — the third member of the
-    * iterative-graph family (components find who's CONNECTED, PageRank
-    * who's CENTRAL, LPA who CLUSTERS): three synchronous plurality
-    * rounds with the deterministic min-label tie rule
-    * ([[Components.labelPropagation]] documents why the schedule and tie
-    * rule are fixed). The oracle unrolls the identical three rounds as
-    * chained CTEs — the plurality argmax replayed as a
-    * `row_number() OVER (ORDER BY cnt DESC, lbl ASC) = 1` window, the
-    * exact order the operator's `min(struct(-cnt, lbl))` aggregate
-    * encodes — so community assignments are value-checked end to end.
-    * Integer counts and id comparisons only: no float portability
-    * surface at all.
-    */
-  private def qLabelProp(s: SparkSession, d: String): DataFrame =
-    Components.labelPropagation(pagerankEdges(s, d), "src", "dst", 3)
-      .select(col("id"), col("lbl").as("community"))
-      .orderBy("id")
-
-  /** Gap-based sessionization statistics. */
-  private def qSessionize(s: SparkSession, d: String): DataFrame =
-    EventsPipeline.sessionize(Tables.events(s, d))
-      .groupBy(col("user_id"))
-      .agg(
-        max(col("session_seq")).cast("long").as("n_sessions"),
-        count(lit(1)).as("n_events"))
-      .orderBy("user_id")
-
-  /** Order-independent CONTENT SIGNATURE per partition-day — the
-    * anti-entropy primitive behind table sync/diff at scale: each row
-    * contributes the engine-portable md5 bucket of its canonical string
-    * form ([[qAbAssign]]'s first-12-hex construction), and the per-day
-    * signature is the SUM of contributions — commutative and mergeable,
-    * so two replicas compare a day by exchanging ONE (count, sig) pair
-    * instead of rows, and an incremental writer updates the signature
-    * from the delta alone. Contributions are bounded to 2⁴⁰ so bigint
-    * sums hold to ~8M rows/day in ANSI mode; a 100 TB deployment lifts
-    * the partial sums to DECIMAL(38,0) (the [[qDecimalSum]] seam) with
-    * the same per-row math. Any single-row difference moves the sum.
-    */
-  private def qContentSignature(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .select(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"),
-        pmod(
-          conv(substring(md5(concat_ws("|",
-            col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-            round(col("o_totalprice") * 100).cast("long"),
-            col("o_orderpriority"))), 1, 12), 16, 10).cast("long"),
-          lit(1099511627776L)).as("h"))
-      .groupBy("day")
-      .agg(count(lit(1)).as("n_rows"), sum(col("h")).as("sig"))
-      .orderBy("day")
-
-  /** Leave-one-out target encoding — the categorical feature encoder a
-    * training pipeline runs where plain mean-encoding would LEAK the
-    * row's own label: each row gets (Σ_group target − own) / (n_group − 1).
-    * Shape: one map-side-combinable group aggregate over the tiny
-    * category domain, broadcast back onto the stream — per-row arithmetic
-    * from exact integer counts, one division (bit-identical), no window.
-    * Singleton groups read out NULL (undefined LOO) rather than dividing
-    * by zero under ANSI. Target = order completion ('F').
-    */
-  private def qTargetEncode(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.orders(s, d).select(
-      col("o_orderkey"), col("o_orderpriority").as("cat"),
-      when(col("o_orderstatus") === "F", 1L).otherwise(0L).as("t"))
-    val grp = base.groupBy(col("cat").as("gcat"))
-      .agg(sum(col("t")).as("gsum"), count(lit(1)).as("gn"))
-    base.join(broadcast(grp), col("cat") === col("gcat"))
-      .select(col("o_orderkey"), col("cat"), col("t"),
-        when(col("gn") > 1,
-          (col("gsum") - col("t")).cast("double") /
-            (col("gn") - 1L).cast("double")).as("loo_mean"))
-      .orderBy("o_orderkey")
-  }
-
-  /** Growth accounting — the weekly NEW / RETAINED / RESURRECTED /
-    * CHURNED user decomposition under every growth dashboard (states
-    * partition active users; churn counts last week's actives who went
-    * dark). Shape: the event stream reduces ONCE to the distinct
-    * (user, week) activity table plus per-user first weeks (both
-    * map-side-combinable); states come from user-keyed self-joins of that
-    * compact table — never the raw stream. Churn is counted only for
-    * OBSERVED weeks (a semi-join on the week set), which bounds the grid
-    * without a max-week scalar attach. All-integer arithmetic; weeks are
-    * epoch-day div 7 from the fixture origin.
-    */
-  private def qGrowthAccounting(s: SparkSession, d: String): DataFrame = {
-    val weekly = Tables.events(s, d)
-      .select(col("user_id").as("u"),
-        floor(datediff(to_date(col("ts")), lit("2024-01-01")) / 7)
-          .cast("long").as("w"))
-      .distinct()
-    val firstW = weekly.groupBy("u").agg(min(col("w")).as("fw"))
-    val prev = weekly.select(col("u").as("pu"), (col("w") + 1L).as("pw"))
-    val states = weekly
-      .join(firstW, "u")
-      .join(prev, col("u") === col("pu") && col("w") === col("pw"), "left")
-      .select(col("w"),
-        when(col("w") === col("fw"), lit("new"))
-          .when(col("pu").isNotNull, lit("retained"))
-          .otherwise(lit("resurrected")).as("state"))
-      .groupBy("w").pivot("state", Seq("new", "retained", "resurrected"))
-      .count()
-    val churned = prev
-      .join(weekly, col("pu") === col("u") && col("pw") === col("w"),
-        "left_anti")
-      .join(weekly.select(col("w").as("ow")).distinct(),
-        col("pw") === col("ow"), "left_semi")
-      .groupBy(col("pw").as("w")).agg(count(lit(1)).as("churned"))
-    states.join(churned, Seq("w"), "left")
-      .select(col("w").as("week"),
-        coalesce(col("new"), lit(0L)).as("n_new"),
-        coalesce(col("retained"), lit(0L)).as("n_retained"),
-        coalesce(col("resurrected"), lit(0L)).as("n_resurrected"),
-        coalesce(col("churned"), lit(0L)).as("n_churned"))
-      .orderBy("week")
-  }
-
-  /** Native `session_window` sessionization — the same 30-minute-gap
-    * sessions as [[qSessionize]]'s manual gaps-and-islands window, through
-    * Spark's built-in session aggregation (plans as a dedicated
-    * session-merging aggregate, no lag window) — the cross-mechanism pin
-    * (the [[qRecursiveCte]] discipline). SEMANTIC BOUNDARY NOTE, which is
-    * exactly what this row documents: a session window spans
-    * [first, last + gap), so an event at EXACTLY last + gap starts a NEW
-    * session (`>=`), while the manual lag formulation extends on `>` —
-    * the oracle replays `>=`, and a corpus with exact-gap timestamps
-    * would tell the two rows apart.
-    */
-  private def qSessionWindow(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .groupBy(session_window(col("ts"), "30 minutes").as("sw"),
-        col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_sessions"),
-        sum(col("n_events")).as("n_events"))
-      .orderBy("user_id")
-
-  /** SLIDING (hopping) event-time windows — 1-hour windows every 30
-    * minutes, the overlapping-window shape [[qEventsWindow]]'s tumbling
-    * row cannot express (each event lands in exactly two windows; Spark's
-    * `window(ts, size, slide)` plans it as a generator, no self-join). The
-    * oracle replays the same membership with integer epoch-µs arithmetic:
-    * slot = µs DIV slide, the two window starts are slot·30min and its
-    * predecessor — exact at any timestamp precision.
-    */
-  private def qSlidingWindow(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        round(sum(col("value")), 4).as("sum_value"))
-      .select(
-        unix_timestamp(col("w.start")).as("window_start"),
-        col("event_type"), col("n_events"), col("sum_value"))
-      .orderBy("window_start", "event_type")
-
-  /** Robust (IQR-fence) outlier counts per event type — the Tukey-fence
-    * data-cleaning gate run before metrics ingestion: exact q1/q3 via the
-    * `percentile` aggregate (linear interpolation, the same definition as
-    * DuckDB's `quantile_cont`), fences at 1.5·IQR, one broadcast-sized
-    * stats row per group joined back onto the scan. Fences and counts are
-    * both emitted so the oracle pins the bounds arithmetic, not just the
-    * classification.
-    */
-  private def qIqrOutliers(s: SparkSession, d: String): DataFrame = {
-    val stats = Tables.events(s, d)
-      .groupBy("event_type")
-      .agg(expr("percentile(value, array(0.25D, 0.75D))").as("q"))
-      .select(
-        col("event_type"),
-        col("q").getItem(0).as("q1"),
-        col("q").getItem(1).as("q3"))
-      .select(
-        col("event_type"),
-        (col("q1") - (col("q3") - col("q1")) * 1.5).as("lo"),
-        (col("q3") + (col("q3") - col("q1")) * 1.5).as("hi"))
-    Tables.events(s, d)
-      .join(broadcast(stats), "event_type")
-      .groupBy("event_type")
-      .agg(
-        count(lit(1)).as("n"),
-        sum(when(col("value") < col("lo") || col("value") > col("hi"), 1L)
-          .otherwise(0L)).as("n_outliers"),
-        round(max(col("lo")), 6).as("lo"),
-        round(max(col("hi")), 6).as("hi"))
-      .orderBy("event_type")
-  }
-
-  /** First-order Markov transition matrix over each user's ordered event
-    * stream — the "what happens next" model behind session-path analysis
-    * and synthetic-trace generation. One user_id-keyed window computes the
-    * predecessor type (ties broken by event_id, so both engines see the
-    * same ordering); counts and row-normalized probabilities then reduce
-    * onto the (src,dst) grid — wide state is |event_type|² cells
-    * regardless of stream length, and the only full-data shuffle is keyed
-    * on user_id. The per-src totals are a broadcast-sized side table.
-    */
-  private def qMarkov(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val tr = Tables.events(s, d)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("src", lag(col("event_type"), 1).over(w))
-      .filter(col("src").isNotNull)
-      .groupBy(col("src"), col("event_type").as("dst"))
-      .agg(count(lit(1)).as("n"))
-    val tot = tr.groupBy("src").agg(sum(col("n")).as("n_src"))
-    tr.join(broadcast(tot), "src")
-      .select(
-        col("src"), col("dst"), col("n"),
-        round(col("n") / col("n_src"), 6).as("p"))
-      .orderBy("src", "dst")
-  }
-
-  /** Pearson chi-squared drift monitor over a categorical column — the
-    * discrete complement to [[qKsDrift]] (numeric, KS) and [[qPsiDrift]]
-    * (binned, PSI): contingency cells of event_type × time-half with
-    * expected counts from the marginals. The reference period is the first
-    * half of the stream by midpoint timestamp (integer-µs arithmetic, so
-    * the split is reproducible in any engine). Emits every cell with its
-    * expected count and chi-squared contribution — the statistic is the
-    * contribution sum, and pinning the cells oracles the marginal algebra,
-    * not just one scalar. Shapes: one scan → compact cell grid; marginals
-    * and the 1-row midpoint/total attach via broadcast.
-    */
-  private def qChi2Drift(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-      .select(col("event_type"), unix_micros(col("ts")).as("us"))
-    val mid = ev.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
-      .select(expr("(mn + mx) div 2").as("mid"))
-    val cells = ev.crossJoin(broadcast(mid))
-      .select(
-        col("event_type"),
-        when(col("us") < col("mid"), lit("a")).otherwise(lit("b")).as("period"))
-      .groupBy("event_type", "period")
-      .agg(count(lit(1)).as("n"))
-    val rowT = cells.groupBy("event_type").agg(sum(col("n")).as("rt"))
-    val colT = cells.groupBy("period").agg(sum(col("n")).as("ct"))
-    val g = cells.agg(sum(col("n")).as("gt"))
-    cells
-      .join(broadcast(rowT), "event_type")
-      .join(broadcast(colT), "period")
-      .crossJoin(broadcast(g))
-      .select(
-        col("event_type"), col("period"), col("n"),
-        round(col("rt") * col("ct") / col("gt"), 6).as("expected"),
-        round(
-          pow(col("n") - col("rt") * col("ct") / col("gt"), 2) /
-            (col("rt") * col("ct") / col("gt")), 6).as("contrib"))
-      .orderBy("event_type", "period")
-  }
-
-  /** Market-basket co-occurrence: support counts of part pairs bought in
-    * the same order — the association-mining primitive (and the same
-    * within-group pair-expansion shape as recommendation co-visitation).
-    * The self-join is keyed on the basket id, so the single shuffle moves
-    * (order, part) once and the quadratic blow-up is bounded by the basket
-    * size (≤7 lines in this schema; a 100 TB run caps basket size or
-    * pre-filters to frequent items first — the standard a-priori
-    * reduction). `p1 < p2` keeps each unordered pair once.
-    */
-  private def qBasketPairs(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct()
-    li.select(col("ok"), col("pk").as("p1"))
-      .join(li.select(col("ok"), col("pk").as("p2")), Seq("ok"))
-      .filter(col("p1") < col("p2"))
-      .groupBy("p1", "p2")
-      .agg(count(lit(1)).as("support"))
-      .filter(col("support") >= 2)
-      .orderBy(col("support").desc, col("p1"), col("p2"))
-      .limit(50)
-  }
-
-  /** SCD type-2 dimension build from the event stream: each user's
-    * event_type state history as validity intervals — the point-in-time
-    * dimension every warehouse derives from a mutation log. Consecutive
-    * duplicates collapse (a row opens only when the state CHANGES), the
-    * open row carries the 9999-12-31 sentinel end. Two windows over the
-    * same user_id partitioning → one shuffle; ordering ties broken by
-    * event_id so both engines agree on the change sequence.
-    */
-  private def qScd2(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val changes = Tables.events(s, d)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("prev", lag(col("event_type"), 1).over(w))
-      .filter(col("prev").isNull || col("prev") =!= col("event_type"))
-    changes
-      .withColumn("nxt", lead(unix_micros(col("ts")), 1).over(w))
-      .select(
-        col("user_id"), col("event_type"),
-        unix_micros(col("ts")).as("valid_from_us"),
-        coalesce(col("nxt"), lit(253402300799000000L)).as("valid_to_us"))
-      .orderBy("user_id", "valid_from_us", "event_type")
-  }
-
-  /** Winsorized per-group statistics — the clip-then-aggregate
-    * normalization run before feeding a metric to training (clamp to
-    * [p01, p99], then mean/stddev): exact percentiles via the same
-    * linear-interpolation `percentile` aggregate as [[qIqrOutliers]], one
-    * broadcast stats row per group, clamping inline in the second scan so
-    * nothing wide ever shuffles.
-    */
-  private def qWinsorize(s: SparkSession, d: String): DataFrame = {
-    val stats = Tables.events(s, d)
-      .groupBy("event_type")
-      .agg(expr("percentile(value, array(0.01D, 0.99D))").as("q"))
-      .select(
-        col("event_type"),
-        col("q").getItem(0).as("lo"),
-        col("q").getItem(1).as("hi"))
-    Tables.events(s, d)
-      .join(broadcast(stats), "event_type")
-      .select(
-        col("event_type"),
-        greatest(col("lo"), least(col("hi"), col("value"))).as("w"))
-      .groupBy("event_type")
-      .agg(
-        count(lit(1)).as("n"),
-        round(avg(col("w")), 6).as("wmean"),
-        round(stddev_samp(col("w")), 6).as("wstd"))
-      .orderBy("event_type")
-  }
-
-  /** Vocabulary coverage: out-of-vocabulary token rate per language
-    * against the corpus top-1000 vocabulary — the tokenizer-fit metric a
-    * training pipeline tracks when deciding vocab size. The vocabulary is
-    * deliberately broadcast-sized (top-K by count, ties broken by term, so
-    * the cutoff is deterministic); per-doc OOV ratios then need only a
-    * broadcast semi-probe on the token stream — no shuffle keyed on the
-    * (unbounded) term domain ever carries document payload.
-    */
-  private def qVocabCoverage(s: SparkSession, d: String): DataFrame = {
-    // MEASURED REJECTION (r20): deriving the vocabulary as a rollup of a
-    // shared (doc, lang, term) count aggregate — the qTfidf tokenize-once
-    // pattern — DOES collapse the two tokenize subtrees to one
-    // (ReusedExchange verified in the executed plan), but regressed the
-    // row 1.4× same-sitting (0.94 → 1.94 s full-run-context equivalent):
-    // the OOV probe side here has NO exchange at all (raw token stream →
-    // broadcast probe → map-side-combined (doc, lang) aggregate), so the
-    // shared aggregate ADDS a full-width (doc, lang, term) exchange —
-    // nearly instance-sized, most terms occur once per doc — to save one
-    // CPU-cheap tokenize pass. tfidf differs: BOTH of its branches already
-    // paid that exchange, so reuse was strictly less work. At 100 TB the
-    // trade is the same (narrow CPU rescan beats a corpus-wide shuffle);
-    // the double tokenize stays.
-    val toks = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), explode(tokens(col("text"))).as("term"))
-    val vocab = toks.groupBy("term").agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("term")).limit(1000)
-      .select(col("term"), lit(1).as("in_v"))
-    toks.join(broadcast(vocab), Seq("term"), "left")
-      .groupBy("doc_id", "lang")
-      .agg((sum(when(col("in_v").isNull, 1L).otherwise(0L)) / count(lit(1)))
-        .as("oov"))
-      .groupBy("lang")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        round(avg(col("oov")), 6).as("avg_oov"))
-      .orderBy("lang")
-  }
-
-  /** Deterministic A/B experiment assignment + readout: users hash into
-    * two arms via the engine-portable md5 bucket (the same first-12-hex
-    * construction as [[graft.ext.Sampling]]'s portable splits, so any SQL
-    * engine reproduces the assignment bit-for-bit — the property an
-    * experimentation system needs for audits), then per-arm × event-type
-    * counts and mean values. Assignment is a stateless per-row expression:
-    * no shuffle beyond the final compact readout group-by.
-    */
-  private def qAbAssign(s: SparkSession, d: String): DataFrame = {
-    val bucket = pmod(
-      conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10)
-        .cast("long"),
-      lit(1000000L))
-    Tables.events(s, d)
-      .withColumn("arm", when(bucket < 500000L, lit("a")).otherwise(lit("b")))
-      .groupBy("arm", "event_type")
-      .agg(
-        count(lit(1)).as("n"),
-        countDistinct(col("user_id")).as("n_users"),
-        round(avg(col("value")), 6).as("mean_value"))
-      .orderBy("arm", "event_type")
-  }
-
-  /** RFM (recency / frequency / monetary) customer segmentation — the
-    * classic marketing feature triple, each dimension cut into ANSI-ntile
-    * quintiles. Per-customer base facts are one map-side-combinable
-    * group-by; the three quintile cuts ride ONE distributed global rank
-    * ([[PositionalTake.withGlobalIndex]] — range-partition sort +
-    * per-partition offsets, never a single-partition ntile window) over
-    * the long-format (metric, −value, cust) rows, with the ANSI bucket
-    * split (first n%k buckets one row larger) replayed in closed form
-    * from (rank − metric·n, n). Descending dimensions sort ascending on
-    * the negated metric; ties break on customer id, so the cut is
-    * deterministic and any engine's native ntile reproduces it. Output is
-    * the ≤5³-cell segment grid, independent of customer count.
-    */
-  private def qRfm(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.orders(s, d)
-      .groupBy(col("o_custkey").as("cust"))
-      .agg(
-        // o_orderdate loads as TIMESTAMP_NTZ; the session is pinned UTC so
-        // the cast to TIMESTAMP is wall-clock identity (same as Tables.events)
-        unix_micros(max(col("o_orderdate")).cast("timestamp")).as("last_us"),
-        count(lit(1)).as("freq"),
-        sum(col("o_totalprice")).as("mon"))
-    // LONG FORMAT, one sort instead of three (r19 optimization): the three
-    // descending quintile cuts ride ONE range-partitioned global index over
-    // (metric, −value, cust) — per metric the block is contiguous and its
-    // local rank is idx − metric·n, so the old shape's three independent
-    // sort+index pipelines (each re-aggregating orders, each crossJoining
-    // its own count subtree) and the two cust-keyed joins collapse into one
-    // sort plus one conditional-aggregation pivot. The negated metrics stay
-    // order-exact as doubles (epoch-µs ≈ 1.7e15 and counts are < 2^53, and
-    // only the ORDER reaches the output, never the value). Ordering per
-    // metric is unchanged — (−metric, cust) — so every bucket assignment,
-    // and therefore the ≤5³ grid, is bit-identical to the three-sort shape.
-    val long = base.select(col("cust"), explode(array(
-        struct(lit(0).as("m"), (-col("last_us")).cast("double").as("v")),
-        struct(lit(1).as("m"), (-col("freq")).cast("double").as("v")),
-        struct(lit(2).as("m"), (-col("mon")).cast("double").as("v"))))
-        .as("mv"))
-      .select(col("cust"), col("mv.m").as("m"), col("mv.v").as("v"))
-    val n = base.agg(count(lit(1)).as("n_tot"))
-    // ANSI ntile from a dense 0-based per-metric rank: first n%5 buckets
-    // hold (n div 5)+1 rows, the rest n div 5 (assumes n >= 5).
-    PositionalTake.withGlobalIndex(long, Seq("m", "v", "cust"), "gidx")
-      .crossJoin(broadcast(n))
-      .select(
-        col("cust"), col("m"),
-        expr("CASE WHEN (gidx - m * n_tot) < (n_tot % 5) * (n_tot div 5 + 1) " +
-          "THEN (gidx - m * n_tot) div (n_tot div 5 + 1) + 1 " +
-          "ELSE (n_tot % 5) + ((gidx - m * n_tot) - (n_tot % 5) * (n_tot div 5 + 1)) " +
-          "div (n_tot div 5) + 1 END").as("q"))
-      .groupBy("cust")
-      .agg(
-        max(when(col("m") === 0, col("q"))).as("r_q"),
-        max(when(col("m") === 1, col("q"))).as("f_q"),
-        max(when(col("m") === 2, col("q"))).as("m_q"))
-      .groupBy("r_q", "f_q", "m_q")
-      .agg(count(lit(1)).as("n_custs"))
-      .orderBy("r_q", "f_q", "m_q")
-  }
-
-  /** Cohort LTV curve: customers cohorted by first-order month, revenue
-    * accumulated by month offset since the cohort month — the
-    * lifetime-value table under every retention dashboard. Month math is
-    * integer (year·12+month), identical in any engine. Two shuffles, both
-    * keyed small (customer, then cohort×offset grid); the running total is
-    * a window over the compact grid, not the order stream.
-    */
-  private def qCohortLtv(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val o = Tables.orders(s, d).select(
-      col("o_custkey").as("cust"),
-      (year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).as("m"),
-      col("o_totalprice").as("rev"))
-    val cohort = o.groupBy("cust").agg(min(col("m")).as("cm"))
-    val grid = o.join(cohort, "cust")
-      .groupBy(col("cm"), (col("m") - col("cm")).as("offset"))
-      .agg(sum(col("rev")).as("rev"), countDistinct(col("cust")).as("n_custs"))
-    grid
-      .withColumn("cum_rev", sum(col("rev")).over(
-        Window.partitionBy("cm").orderBy("offset")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .select(
-        col("cm").as("cohort_month"), col("offset"), col("n_custs"),
-        round(col("rev"), 4).as("rev"),
-        round(col("cum_rev"), 4).as("cum_rev"))
-      .orderBy("cohort_month", "offset")
-  }
-
-  /** Exponentially time-decayed engagement score per user (30-day
-    * half-life, anchored at the stream's max timestamp) — the
-    * recency-weighted feature a feature store materializes instead of a
-    * raw sum. The anchor is a broadcast 1-row attach; the decay is a
-    * stateless per-row expression, so the whole feature is one scan + one
-    * user-keyed reduce. Top-25 by score with id tie-break keeps the row
-    * deterministic.
-    */
-  private def qDecayScore(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"), col("value"))
-    val anchor = ev.agg(max(col("us")).as("max_us"))
-    ev.crossJoin(broadcast(anchor))
-      .select(
-        col("user_id"),
-        (col("value") *
-          exp(lit(-math.log(2.0) / 30.0) *
-            ((col("max_us") - col("us")) / lit(86400000000.0)))).as("dv"))
-      .groupBy("user_id")
-      .agg(round(sum(col("dv")), 4).as("score"), count(lit(1)).as("n"))
-      .orderBy(col("score").desc, col("user_id"))
-      .limit(25)
-  }
-
-  /** MAD (median-absolute-deviation) robust outliers per event type — the
-    * heavier-tailed companion to [[qIqrOutliers]]: median via the exact
-    * `percentile` aggregate, MAD as the median of absolute deviations
-    * (second percentile pass over the broadcast-joined scan), outliers at
-    * modified z-score |0.6745·(x−med)/mad| > 3.5. Group stats stay
-    * broadcast-sized at any scale; the data shuffles only into the two
-    * per-group percentile reduces.
-    */
-  private def qMadOutliers(s: SparkSession, d: String): DataFrame = {
-    val med = Tables.events(s, d)
-      .groupBy("event_type")
-      .agg(expr("percentile(value, 0.5D)").as("med"))
-    val withDev = Tables.events(s, d)
-      .join(broadcast(med), "event_type")
-    val mad = withDev
-      .groupBy("event_type")
-      .agg(expr("percentile(abs(value - med), 0.5D)").as("mad"))
-    withDev.join(broadcast(mad), "event_type")
-      .groupBy("event_type")
-      .agg(
-        count(lit(1)).as("n"),
-        round(max(col("med")), 6).as("med"),
-        round(max(col("mad")), 6).as("mad"),
-        sum(when(
-          abs(lit(0.6745) * (col("value") - col("med")) / col("mad")) > 3.5,
-          1L).otherwise(0L)).as("n_outliers"))
-      .orderBy("event_type")
-  }
-
-  /** Time-to-conversion: signup → first subsequent purchase latency
-    * distribution — the funnel-velocity metric next to [[qFunnel]]'s
-    * stage counts. Both stage timestamps are per-user min-reduces (map-side
-    * combinable), the join is user-keyed, and the output is one row of
-    * exact quartiles (hours) plus conversion counts; the two scalar
-    * aggregates meet in a 1-row broadcast attach.
-    */
-  private def qTimeToEvent(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-    val su = ev.filter(col("event_type") === "signup")
-      .groupBy("user_id").agg(min(col("us")).as("s_us"))
-    val conv = ev.filter(col("event_type") === "purchase")
-      .join(su, "user_id")
-      .filter(col("us") >= col("s_us"))
-      .groupBy("user_id").agg(min(col("us")).as("p_us"), max(col("s_us")).as("s_us"))
-      .select(((col("p_us") - col("s_us")) / lit(3600000000.0)).as("hours"))
-    val nSignups = su.agg(count(lit(1)).as("n_signups"))
-    conv.agg(
-        count(lit(1)).as("n_converted"),
-        expr("percentile(hours, array(0.25D, 0.5D, 0.75D))").as("q"))
-      .crossJoin(broadcast(nSignups))
-      .select(
-        col("n_signups"), col("n_converted"),
-        round(col("q").getItem(0), 6).as("p25_h"),
-        round(col("q").getItem(1), 6).as("p50_h"),
-        round(col("q").getItem(2), 6).as("p75_h"))
-  }
-
-  /** Week-over-week growth per event type — the period-over-period metric
-    * sheet every KPI pipeline emits: weekly counts/sums on the compact
-    * (type × week) grid, growth as a lag over that grid. The full stream
-    * reduces map-side into the grid before any window; the window itself
-    * runs over rows-per-key = weeks, never raw events.
-    */
-  private def qWowGrowth(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wk = Tables.events(s, d)
-      .groupBy(col("event_type"), date_trunc("week", col("ts")).as("wk"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
-    val w = Window.partitionBy("event_type").orderBy("wk")
-    wk.withColumn("prev_n", lag(col("n"), 1).over(w))
-      .select(
-        col("event_type"), unix_timestamp(col("wk")).as("week_start"),
-        col("n"), col("sum_value"),
-        round((col("n") - col("prev_n")) / col("prev_n"), 6).as("wow_growth"))
-      .orderBy("event_type", "week_start")
-  }
-
-  /** Zipf fit of the corpus token distribution: least-squares slope of
-    * log-frequency against log-rank — the vocabulary-health scalar (a
-    * natural corpus sits near −1; boilerplate flattens it) reported next
-    * to [[qVocabCoverage]]. Rank is the DISTRIBUTED global index over
-    * (count desc, term), and the fit is the built-in `regr_slope` /
-    * `regr_intercept` aggregates — one pass over the term table, no
-    * driver-side math.
-    */
-  private def qZipfSlope(s: SparkSession, d: String): DataFrame = {
-    val freq = Tables.documents(s, d)
-      .select(explode(tokens(col("text"))).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("c"))
-      .withColumn("neg_c", -col("c"))
-    PositionalTake.withGlobalIndex(freq, Seq("neg_c", "term"), "idx")
-      .select(log(col("idx") + 1).as("lx"), log(col("c")).as("ly"))
-      .agg(
-        count(lit(1)).as("n_terms"),
-        round(regr_slope(col("ly"), col("lx")), 4).as("slope"),
-        round(regr_intercept(col("ly"), col("lx")), 4).as("intercept"))
-  }
-
-  /** Data-profiling audit: per-column row/null/distinct counts over
-    * lineitem — the schema-wide quality report a pipeline runs on every
-    * new drop. One narrow aggregate per column, unioned (the [[qSketches]]
-    * two-level decomposition): each branch's parquet scan reads exactly
-    * ONE column (pruned ReadSchema), collapses onto that column's compact
-    * distinct domain with map-side combine, then reduces to a single
-    * profile row. The previous single-pass form exploded every row into
-    * stringified (column, value) pairs — an N×width row expansion dragging
-    * full-width string casts through one shuffle; the per-column branches
-    * shuffle only (value, count) partials and run as independent stages.
-    */
-  private def qDataProfile(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-    li.columns.toSeq.sorted
-      .map { c =>
-        li.select(col(c).as("v"))
-          .groupBy("v").agg(count(lit(1)).as("cnt"))
-          .agg(
-            // coalesce: an empty input must profile as n=0 per column (the
-            // oracle's COUNT(*) branches emit one row each), not n=NULL
-            coalesce(sum(col("cnt")), lit(0L)).as("n"),
-            coalesce(sum(when(col("v").isNull, col("cnt"))), lit(0L))
-              .as("n_nulls"),
-            count(when(col("v").isNotNull, lit(1))).as("n_distinct"))
-          .select(lit(c).as("col_name"),
-            col("n"), col("n_nulls"), col("n_distinct"))
-      }
-      .reduce(_ unionAll _)
-      .orderBy("col_name")
-  }
-
-  /** Per-dimension statistics of the embedding column (min/max/mean/std
-    * for each vector coordinate) — the feature-normalization profile an
-    * ANN or training pipeline computes before scaling. `posexplode` keys
-    * the shuffle on the dimension index, so state per reducer is one
-    * running moment set per dimension regardless of corpus size.
-    */
-  private def qEmbedStats(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
-      .select(posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("dim").cast("long").as("dim"), col("x").cast("double").as("x"))
-      .groupBy("dim")
-      .agg(
-        count(lit(1)).as("n"),
-        round(min(col("x")), 6).as("mn"),
-        round(max(col("x")), 6).as("mx"),
-        round(avg(col("x")), 6).as("mean"),
-        round(stddev_samp(col("x")), 6).as("std"))
-      .orderBy("dim")
-
-  /** Cross-source duplicate-overlap matrix: how many 64-char-prefix
-    * fingerprints each pair of sources shares — the contamination heat map
-    * a corpus audit draws before choosing dedup scope (exact texts never
-    * collide across sources in this corpus; the prefix fingerprint is the
-    * boilerplate-header detector). The self-join is keyed on the
-    * fingerprint, and the per-fingerprint blow-up is bounded by the SOURCE
-    * count (the distinct collapses each source to one row per
-    * fingerprint), so the shape survives any corpus size.
-    */
-  private def qOverlapMatrix(s: SparkSession, d: String): DataFrame = {
-    val h = Tables.documents(s, d)
-      .select(col("source"), md5(substring(col("text"), 1, 64)).as("fp"))
-      .distinct()
-    h.as("a").join(h.as("b"),
-        col("a.fp") === col("b.fp") && col("a.source") < col("b.source"))
-      .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .orderBy("src_a", "src_b")
-  }
-
-  /** 2-D skyline (Pareto frontier): parts not dominated on (minimize
-    * price, maximize size) — the multi-objective shortlist operator
-    * (cheapest-per-capability). Decomposition: collapse to the per-price
-    * grid (one max-size per distinct price — the only full-data shuffle),
-    * run the strictly-cheaper prefix-max over that COMPACT grid (the
-    * [[qKsDrift]] ECDF precedent: the window is over grid rows, never raw
-    * data), then one broadcast probe back. A part survives iff its size
-    * beats every strictly-cheaper price's max and equals its own price's
-    * max — exactly the ¬∃-dominator definition the oracle replays
-    * quadratically.
-    */
-  private def qSkyline(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val p = Tables.part(s, d).select(
-      col("p_partkey"), col("p_retailprice").as("price"), col("p_size").as("size"))
-    val grid = p.groupBy("price").agg(max(col("size")).as("pmax"))
-    val w = Window.orderBy("price")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val gridPrev = grid.withColumn("prev_max", max(col("pmax")).over(w))
-    p.join(broadcast(gridPrev), "price")
-      .filter(
-        (col("prev_max").isNull || col("size") > col("prev_max")) &&
-          col("size") === col("pmax"))
-      .select(col("p_partkey"), col("price"), col("size"))
-      .orderBy("price", "size", "p_partkey")
-  }
-
-  /** CDC-style snapshot diff: two deterministic derivations of the event
-    * log stand in for corpus v1/v2, and the diff classifies every key as
-    * added / removed / changed / unchanged with net value drift — the
-    * what-changed audit run between dataset versions. One co-keyed
-    * full-outer join (sort-merge on the id at scale), classification
-    * inline; the v2 mutation is `value + 1` — an IEEE-exact double op, so
-    * both engines agree bit-for-bit on the changed set.
-    */
-  private def qSnapshotDiff(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d).select(col("event_id"), col("value"))
-    val v1 = ev.filter(pmod(col("event_id"), lit(10)) =!= 0)
-      .select(col("event_id"), col("value").as("v1"))
-    val v2 = ev.filter(pmod(col("event_id"), lit(13)) =!= 0)
-      .select(
-        col("event_id"),
-        when(pmod(col("event_id"), lit(7)) === 0, col("value") + 1.0)
-          .otherwise(col("value")).as("v2"))
-    v1.join(v2, Seq("event_id"), "full_outer")
-      .select(
-        when(col("v1").isNull, lit("added"))
-          .when(col("v2").isNull, lit("removed"))
-          .when(col("v1") =!= col("v2"), lit("changed"))
-          .otherwise(lit("unchanged")).as("status"),
-        coalesce(col("v2"), lit(0.0)) - coalesce(col("v1"), lit(0.0)))
-      .toDF("status", "delta")
-      .groupBy("status")
-      .agg(count(lit(1)).as("n"), round(sum(col("delta")), 4).as("net_delta"))
-      .orderBy("status")
-  }
-
-  /** Dataset card: the one-row corpus summary (docs, languages, sources,
-    * chars, whitespace tokens, exact-unique ratio) published alongside a
-    * training-data release. Three narrow passes instead of one
-    * multi-distinct aggregate — a 3-way distinct over (lang, source,
-    * md5(text)) would Expand the scan 4× and drag full text through the
-    * shuffle (the [[qSketches]] lesson); here each distinct reduces its
-    * own compact column and the 1-row results meet in broadcast attaches.
-    */
-  private def qDatasetCard(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val base = docs.agg(
-      count(lit(1)).as("n_docs"),
-      sum(col("n_chars")).as("total_chars"),
-      round(avg(col("n_chars")), 4).as("mean_chars"),
-      sum(size(tokens(col("text"))).cast("long")).as("total_tokens"))
-    val dims = docs.agg(
-      countDistinct(col("lang")).as("n_langs"),
-      countDistinct(col("source")).as("n_sources"))
-    val uniq = docs.agg(countDistinct(md5(col("text"))).as("n_unique"))
-    base.crossJoin(broadcast(dims)).crossJoin(broadcast(uniq))
-      .select(
-        col("n_docs"), col("n_langs"), col("n_sources"),
-        col("total_chars"), col("mean_chars"), col("total_tokens"),
-        round(col("n_unique") / col("n_docs"), 6).as("unique_ratio"))
-  }
-
-  /** ROC AUC of the event value as a purchase-vs-rest score, by the
-    * Mann–Whitney rank identity — the offline model-quality readout a
-    * training pipeline runs on every scored snapshot. The rank interval of
-    * each distinct score comes from an aggregate-then-prefix decomposition:
-    * per-value (positives, count) first, then an exclusive prefix sum over
-    * the value order via [[graft.operators.PrefixSum.exclusive]] with
-    * fixed-width value buckets — segmented, so no single-partition
-    * cumulative window exists at any scale (only bucket totals cross the
-    * carry window), and nothing row-sized is ever range-shuffled: the one
-    * full-width exchange is the map-side-combined groupBy(value).
-    * Ties get the standard midrank half credit from the per-value
-    * rank interval [lo, lo+m−1]: 2·ΣR⁺ = Σ p·(2·lo + m + 1), then
-    * 2·U = 2·ΣR⁺ − n⁺(n⁺+1). Every sum is an exact integer until the one
-    * final division, identically in both engines.
-    */
-  private def qAuc(s: SparkSession, d: String): DataFrame = {
-    // r19 optimization: the rank identity only ever consumed the PER-VALUE
-    // rank interval (min idx, max idx), so the row-level global index —
-    // a full range-shuffle + zipWithIndex double pass over every event,
-    // followed by a second full-size groupBy(value) shuffle — is replaced
-    // by aggregate-then-prefix: reduce to (value, p, m) first (map-side
-    // combine, the only full-width shuffle), then lo = Σ m over values
-    // strictly below via the segmented prefix sum (fixed-width value
-    // buckets, the [[qRankTest]] contract — only bucket totals cross the
-    // carry window). lo' = exclusive prefix = old min(idx), and
-    // hi = lo + m − 1 gives p·(lo+hi+2) = p·(2·lo + m + 1): every sum is
-    // the same exact integer as the ranked shape, bit-identical AUC.
-    // PRECONDITION (ADVICE r19): scores must be non-NULL and non-NaN.
-    // floor(NULL) buckets to NULL (the carry inner-join drops the rows)
-    // and floor(NaN) casts to 0L while NaN sorts above every double,
-    // breaking the bucket-monotone contract — either skews n_pos/n_neg.
-    // events.value is generated NOT NULL / finite at every SF (the
-    // differential pins it); a production caller scoring nullable model
-    // output must filter `value IS NOT NULL AND NOT isnan(value)` first,
-    // the same precondition the old ranked shape implicitly relied on for
-    // a defined order.
-    val perValue = Tables.events(s, d)
-      .select(col("value"),
-        (col("event_type") === "purchase").cast("long").as("pos"))
-      .groupBy("value")
-      .agg(sum(col("pos")).as("p"), count(lit(1)).as("m"))
-    PrefixSum.exclusive(
-        perValue, floor(col("value")), Seq(col("value")), col("m"), "lo")
-      .agg(
-        sum(col("p")).as("n_pos"),
-        sum(col("m") - col("p")).as("n_neg"),
-        sum(col("p") * (lit(2L) * col("lo") + col("m") + 1)).as("r2"))
-      .select(
-        col("n_pos"), col("n_neg"),
-        round(
-          (col("r2") - col("n_pos") * (col("n_pos") + 1)) /
-            (lit(2.0) * col("n_pos") * col("n_neg")), 6)
-          .as("auc"))
-  }
-
-  /** Decile calibration curve: events bucketed into 10 equal-count score
-    * bands, per-band mean score vs observed purchase rate — the
-    * calibration table that accompanies any scored dataset release. The
-    * decile assignment comes from [[PositionalTake.withGlobalIndex]]
-    * (range-partition + per-partition offsets — the sort stays
-    * distributed), bucket = idx·10 div n with the total attached as a
-    * 1-row broadcast; the purchase rate is an exact integer ratio.
-    */
-  private def qCalibration(s: SparkSession, d: String): DataFrame = {
-    val scored = Tables.events(s, d).select(
-      col("event_id"), col("value"),
-      (col("event_type") === "purchase").cast("long").as("label"))
-    val total = scored.agg(count(lit(1)).as("n_total"))
-    PositionalTake.withGlobalIndex(scored, Seq("value", "event_id"), "idx")
-      .crossJoin(broadcast(total))
-      .groupBy((col("idx") * 10 / col("n_total")).cast("long").as("decile"))
-      .agg(
-        count(lit(1)).as("n"),
-        // exact 1e-4-unit accumulation, ONE double division — a raw
-        // double avg is partial-order-dependent, and its last-ulp wiggle
-        // flipped a round() boundary between runs (r12 flake)
-        (sum(round(col("value") * 10000).cast("long")).cast("double") /
-          count(lit(1)).cast("double") / 10000.0).as("mean_score"),
-        (sum(col("label")).cast("double") / count(lit(1)).cast("double"))
-          .as("pos_rate"))
-      .orderBy("decile")
-  }
-
-  /** Top-20 per-user event-type trigrams (the "path analysis" view:
-    * which 3-step journeys dominate?). The sequence windows are
-    * user-partitioned — lead() never crosses the key, so the only wide
-    * shuffle is the per-user repartition the events already need — and
-    * the trigram count collapses onto a ≤125-key domain with map-side
-    * combine. Deterministic intra-user order via (ts, event_id).
-    */
-  private def qPathTrigrams(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    Tables.events(s, d)
-      .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      .withColumn("step2", lead(col("event_type"), 1).over(w))
-      .withColumn("step3", lead(col("event_type"), 2).over(w))
-      .filter(col("step2").isNotNull && col("step3").isNotNull)
-      .groupBy(col("event_type").as("step1"), col("step2"), col("step3"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), asc("step1"), asc("step2"), asc("step3"))
-      .limit(20)
-  }
-
-  /** First BPE merge step over the corpus: frequencies of adjacent
-    * lowercase character pairs — the inner loop of tokenizer training,
-    * run corpus-wide. The pair extraction is a per-row array transform
-    * (no row explosion carries the full text: the lambda materializes
-    * only the 2-char pairs), and the count collapses onto the ≤676-key
-    * [a-z]² domain with map-side combine — at 100 TB this is a linear
-    * scan plus a compact-domain aggregate, exactly how production BPE
-    * counts its merge candidates.
-    */
-  private def qBpeMerges(s: SparkSession, d: String): DataFrame =
-    // Pair extraction is a native single-pass expression (r19
-    // optimization, [[graft.functions.NativeExpressions.BpePairs]]): the
-    // HOF formulation — transform(sequence(...), lower∘substr) filtered by
-    // `rlike '^[a-z]{2}$'` — evaluated an interpreted lambda tree plus a
-    // regex matcher per adjacent pair, ~1.5M evaluations at sf0.1 all in
-    // the scan's single task. The expression emits the identical pair
-    // multiset in the identical order (unicode edge cases included — see
-    // its scaladoc), allocating only on match.
-    Tables.documents(s, d)
-      .select(explode(
-        graft.functions.NativeExpressions.bpe_pairs(col("text"))).as("pair"))
-      .groupBy("pair")
-      .agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), asc("pair"))
-      .limit(30)
-
-  /** Deterministic hash bootstrap of the mean purchase value: 32
-    * replicates, each row's replicate weight drawn as a Poisson(1)
-    * approximation from the engine-portable md5 bucket (same recipe as
-    * the portable samplers — any engine reproduces the exact resample).
-    * The 32× expansion happens map-side against a broadcast replicate
-    * axis and immediately collapses to one (rep, Σw, Σw·v) row — the
-    * standard way to bootstrap a statistic over data too large to
-    * resample by materialization.
-    */
-  private def qBootstrapCi(s: SparkSession, d: String): DataFrame = {
-    val reps = s.range(32).select(col("id").cast("int").as("rep"))
-    val u = pmod(
-      conv(substring(md5(concat(
-        lit("boot|"), col("event_id").cast("string"),
-        lit("|"), col("rep").cast("string"))), 1, 12), 16, 10).cast("long"),
-      lit(1000000L))
-    // cumulative Poisson(1) thresholds on the 1e6 bucket: e^-1, 2e^-1, ...
-    val w = when(u < 367879L, 0L).when(u < 735759L, 1L)
-      .when(u < 919699L, 2L).when(u < 981012L, 3L).otherwise(4L)
-    Tables.events(s, d)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("value"))
-      .crossJoin(broadcast(reps))
-      .select(col("rep"), w.as("w"), col("value"))
-      .groupBy("rep")
-      .agg(
-        sum(col("w")).as("n_eff"),
-        round(sum(col("w") * col("value")) / sum(col("w")), 6)
-          .as("mean_value"))
-      .orderBy("rep")
-  }
-
-  /** Benford first-digit audit over order totals — the classic
-    * fabricated-data / unit-mixup detector for money columns (natural
-    * multiplicative amounts follow P(d) = log10(1+1/d); flat or spiked
-    * digit profiles flag synthetic or truncated feeds). The digit is
-    * extracted from the EXACT integer-cent string — never from float
-    * formatting, which differs across engines — so the per-digit counts
-    * are engine-identical; expected shares are pinned as shared literal
-    * constants on both sides (not each engine's own log10, whose libm
-    * may differ in the last ulp). One map-side-combined 9-row aggregate
-    * plus the [[qSeasonality]]-shape 1-row grand-total broadcast attach
-    * for the share/χ² columns.
-    */
-  private def qBenford(s: SparkSession, d: String): DataFrame = {
-    // log10(1 + 1/d), d = 1..9 — shortest-roundtrip literals shared
-    // verbatim with the oracle SQL
-    val benfordShare = Seq(
-      0.3010299956639812, 0.17609125905568124, 0.12493873660829992,
-      0.09691001300805642, 0.07918124604762482, 0.06694678963061322,
-      0.05799194697768673, 0.05115252244738129, 0.04575749056067514)
-    val digits = Tables.orders(s, d)
-      .select(round(col("o_totalprice") * 100).cast("long").as("u2"))
-      .filter(col("u2") > 0L)
-      .select(substring(col("u2").cast("string"), 1, 1).cast("int").as("digit"))
-      .groupBy("digit").agg(count(lit(1)).as("n"))
-    val total = digits.agg(sum(col("n")).as("__n_total"))
-      .withColumn("one", lit(1))
-    val expShare = (2 to 9).foldLeft(
-      when(col("digit") === 1, lit(benfordShare.head))) { (acc, dd) =>
-        acc.when(col("digit") === dd, lit(benfordShare(dd - 1)))
-    }
-    digits
-      .withColumn("one", lit(1))
-      .join(broadcast(total), "one")
-      .withColumn("share", col("n").cast("double") / col("__n_total").cast("double"))
-      .withColumn("exp_share", expShare)
-      .withColumn("chi2_term",
-        (col("share") - col("exp_share")) * (col("share") - col("exp_share"))
-          / col("exp_share") * col("__n_total").cast("double"))
-      .select(col("digit"), col("n"), col("share"), col("exp_share"),
-        col("chi2_term"))
-      .orderBy("digit")
-  }
-
-  /** Ratio-to-parent rollup: each nation's share of its region's order
-    * revenue — the canonical drill-down report column. Geography joins
-    * are broadcast dimension attaches onto the orders fact; revenue
-    * accumulates once per (region, nation) as exact cents, and the
-    * parent total comes from a region-partitioned window OVER THE
-    * COMPACT ROLLUP — the scale trap with ratio-to-parent is windowing
-    * the fact table (corpus-sized partitions through a sort); windowing
-    * the ≤nations-sized aggregate is metadata work, and the fact rows
-    * move exactly once (the groupBy shuffle, map-side combined). Shares
-    * divide exact integers, so they are engine-identical.
-    */
-  private def qShareOfParent(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val geo = Tables.customer(s, d).select("c_custkey", "c_nationkey")
-      .join(broadcast(Tables.nation(s, d)
-          .select("n_nationkey", "n_name", "n_regionkey")),
-        col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, d).select("r_regionkey", "r_name")),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey"), col("n_name"), col("r_name"))
-    Tables.orders(s, d)
-      .select(col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("u2"))
-      .join(geo, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("r_name"), col("n_name"))
-      .agg(sum(col("u2")).as("nat_u2"))
-      .withColumn("reg_u2",
-        sum(col("nat_u2")).over(Window.partitionBy("r_name")))
-      .select(col("r_name"), col("n_name"),
-        (col("nat_u2").cast("double") / 100.0).as("revenue"),
-        (col("nat_u2").cast("double") / col("reg_u2").cast("double"))
-          .as("share_of_region"))
-      .orderBy("r_name", "n_name")
-  }
-
-  /** Day-of-week × hour-of-day traffic profile — the seasonality heatmap
-    * behind capacity planning and anomaly baselines. One compact-domain
-    * aggregate (≤168 cells, map-side combine) with the grand total
-    * attached as a 1-row broadcast for the share column. `dayofweek - 1`
-    * matches the ISO-agnostic 0=Sunday convention the oracle uses.
-    */
-  private def qSeasonality(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d)
-      .select((dayofweek(col("ts")) - 1).as("dow"), hour(col("ts")).as("hr"))
-    val total = e.agg(count(lit(1)).as("n_total"))
-    e.groupBy("dow", "hr")
-      .agg(count(lit(1)).as("n"))
-      .crossJoin(broadcast(total))
-      .select(
-        col("dow"), col("hr"), col("n"),
-        round(lit(100.0) * col("n") / col("n_total"), 4).as("pct"))
-      .orderBy("dow", "hr")
-  }
-
-  /** Time-constrained funnel: view → click within 12 h of the first view
-    * → purchase within 12 h of that click. [[qFunnel]] checks ordering
-    * only; real conversion windows bound each step, which changes both
-    * the semantics (stale clicks don't count) and the plan (the bound is
-    * a per-row filter on the joined stage, not new shuffle structure —
-    * every exchange is still keyed on user_id alone, and survivor sets
-    * shrink monotonically so later stage joins broadcast under AQE).
-    */
-  private def qFunnelWindowed(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d).select("user_id", "event_type", "ts")
-    def withinWindow(evType: String, prev: DataFrame, prevTs: String, outTs: String) =
-      e.filter(col("event_type") === evType)
-        .join(prev, "user_id")
-        .filter(col("ts") > col(prevTs) &&
-          col("ts") <= col(prevTs) + expr("INTERVAL 12 HOUR"))
-        .groupBy("user_id")
-        .agg(min(col("ts")).as(outTs))
-    val v = e.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min(col("ts")).as("t_view"))
-    val c = withinWindow("click", v, "t_view", "t_click")
-    val p = withinWindow("purchase", c, "t_click", "t_purchase")
-    v.select(lit(1).as("stage"), col("user_id"))
-      .union(c.select(lit(2).as("stage"), col("user_id")))
-      .union(p.select(lit(3).as("stage"), col("user_id")))
-      .groupBy("stage")
-      .agg(count(lit(1)).as("n_users"))
-      .orderBy("stage")
-  }
-
-  /** Degree distribution of the near-dup graph — the shape diagnostic
-    * read next to [[qGraphTriangles]]' transitivity: a long degree tail
-    * means hub documents (templates, boilerplate) stitching unlike docs
-    * into one cluster. Reads the write-once [[stagedDupPairs]] artifact;
-    * the histogram is two compact aggregates (per-node degree with
-    * map-side combine, then counts over the tiny degree domain).
-    */
-  private def qGraphDegreeDist(s: SparkSession, d: String): DataFrame = {
-    val e = stagedDupPairs(s, d)
-    e.select(col("id_a").as("id"))
-      .unionAll(e.select(col("id_b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-      .groupBy("deg").agg(count(lit(1)).as("n_nodes"))
-      .orderBy("deg")
-  }
-
-  /** Per-source decile boundaries of document length — the quantile table
-    * behind cross-source length normalization (and the input you'd feed a
-    * quantile-matching resampler). Exact order statistics, not sketches:
-    * the within-source rank is a source-PARTITIONED window (distributed
-    * by the group key), the 9 target ranks per source are computed on the
-    * compact per-source count table and JOINED back on (source, rank) —
-    * no 9× row expansion of the corpus, and every boundary is an integer.
-    */
-  private def qQuantileNormalize(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("source").orderBy("n_chars", "doc_id")
-    val ranked = Tables.documents(s, d)
-      .select(col("source"), col("doc_id"), col("n_chars"))
-      .withColumn("r", row_number().over(w) - 1)
-    val targets = ranked.groupBy("source").agg(count(lit(1)).as("n"))
-      .crossJoin(broadcast(
-        s.range(1, 10).select(col("id").cast("int").as("decile"))))
-      .select(col("source"), col("decile"),
-        ((col("n") - 1) * col("decile") / 10).cast("long").as("r"))
-    ranked.join(targets, Seq("source", "r"))
-      .select(col("source"), col("decile"), col("n_chars").as("boundary"))
-      .orderBy("source", "decile")
-  }
-
-  /** Single change-point detection on the daily event-count series: the
-    * split minimizing two-segment squared error — the "did the pipeline's
-    * volume regime shift, and when?" monitor. Decomposition: the daily
-    * series is a compact map-side-combinable aggregate; both segment SSEs
-    * come from cumulative Σc and Σc² windows over that tiny domain in
-    * closed form, so every input to the argmin is derived from exact
-    * integer sums and the winning split is engine-independent.
-    */
-  private def qChangepoint(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val daily = Tables.events(s, d)
-      .groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("c"))
-    val cum = Window.orderBy("day")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val full = Window.orderBy("day")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val pick = Window.orderBy("sse", "day")
-    daily
-      .select(col("day"),
-        sum(col("c")).over(cum).as("s1"),
-        sum(col("c") * col("c")).over(cum).as("s2"),
-        sum(col("c")).over(full).as("t1"),
-        sum(col("c") * col("c")).over(full).as("t2"),
-        count(lit(1)).over(cum).as("k"),
-        count(lit(1)).over(full).as("n"))
-      .filter(col("k") < col("n"))
-      .select(col("day"), col("k"), col("n"), col("s1"), col("t1"),
-        ((col("s2") - col("s1") * col("s1") / col("k").cast("double")) +
-          (col("t2") - col("s2") -
-            (col("t1") - col("s1")) * (col("t1") - col("s1")) /
-              (col("n") - col("k")).cast("double"))).as("sse"))
-      .withColumn("rn", row_number().over(pick))
-      .filter(col("rn") === 1)
-      .select(
-        date_format(col("day"), "yyyy-MM-dd").as("split_day"),
-        col("n").as("n_days"),
-        round(col("s1") / col("k").cast("double"), 4).as("mean_before"),
-        round((col("t1") - col("s1")) / (col("n") - col("k")).cast("double"), 4)
-          .as("mean_after"),
-        round(col("sse"), 4).as("sse"))
-  }
-
-  /** Event-time-weighted average value per event type: each reading
-    * holds until the NEXT reading of its type, so the mean weights every
-    * value by its holding duration — the right average for irregularly
-    * sampled gauges, where the arithmetic mean over-counts bursts (the
-    * monitoring read beside [[qEventGaps]]). The lead window is
-    * type-partitioned (distributed by key, never global), durations are
-    * exact integer µs (`unix_micros`, tie rows → dt 0, dropped
-    * deterministically), and the weighted sum accumulates as
-    * DECIMAL(38,0) — value-units × µs exceeds the int64 range at month
-    * gaps, so the product is promoted BEFORE the multiply on both
-    * engines (HUGEINT on the oracle side) — with ONE double division at
-    * the end. Everything after the window is a map-side-combinable
-    * per-type aggregate.
-    */
-  private def qTimeWeightedAvg(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("event_type").orderBy("us", "event_id")
-    Tables.events(s, d)
-      .select(col("event_type"), col("event_id"),
-        unix_micros(col("ts")).as("us"),
-        round(col("value") * 10000).cast("long").as("v_u4"))
-      .withColumn("dt_us", lead(col("us"), 1).over(w) - col("us"))
-      .filter(col("dt_us").isNotNull && col("dt_us") > 0L)
-      .groupBy("event_type")
-      .agg(
-        count(lit(1)).as("n_intervals"),
-        sum(col("dt_us")).as("sum_dt_us"),
-        (sum(col("v_u4").cast("decimal(38,0)") * col("dt_us"))
-          .cast("double") / sum(col("dt_us")).cast("double") / 10000.0)
-          .as("twa_value"))
-      .orderBy("event_type")
-  }
-
-  /** Deterministic per-group MODE (most frequent value, ties → smallest
-    * value): two cascaded map-side-combinable aggregates, window-free —
-    * count per (group, value), then argmax via a lexicographic struct
-    * MAX whose second field is the NEGATED value, so the tie-break is
-    * part of the aggregate itself. Spark's built-in `mode` is
-    * tie-nondeterministic (any modal value may win), which cannot be
-    * oracled; this shape pins the answer AND scales better than the
-    * rank-window formulation — no sort, no per-group row funnel, state
-    * is one (count, value) pair per partition per group.
-    */
-  private def qMode(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .select(col("l_returnflag"), col("l_quantity").cast("long").as("qty"))
-      .groupBy("l_returnflag", "qty")
-      .agg(count(lit(1)).as("n"))
-      .groupBy("l_returnflag")
-      .agg(
-        max(struct(col("n"), (-col("qty")).as("neg_qty"))).as("m"),
-        sum(col("n")).as("n_rows"))
-      .select(col("l_returnflag"),
-        col("m.n").as("mode_count"),
-        (-col("m.neg_qty")).as("mode_qty"),
-        col("n_rows"))
-      .orderBy("l_returnflag")
-
-  /** Inter-event gap profile: per-user time between consecutive events,
-    * bucketed into operational bands — the cadence distribution that
-    * sizes session timeouts and retention windows. The lag window is
-    * user-partitioned (distributed by key), gaps stay integer seconds,
-    * and the rollup is a ≤6-row aggregate whose means are exact integer
-    * ratios.
-    */
-  private def qEventGaps(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // µs epoch is order-isomorphic to ts, so ordering on it is identical
-    val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    Tables.events(s, d)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
-      .withColumn("gap_s", ((col("us") - lag(col("us"), 1).over(w)) / 1000000L)
-        .cast("long"))
-      .filter(col("gap_s").isNotNull)
-      .groupBy(
-        when(col("gap_s") < 60, "a_under_1m")
-          .when(col("gap_s") < 600, "b_1m_10m")
-          .when(col("gap_s") < 3600, "c_10m_1h")
-          .when(col("gap_s") < 21600, "d_1h_6h")
-          .when(col("gap_s") < 86400, "e_6h_1d")
-          .otherwise("f_over_1d").as("band"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(avg(col("gap_s")), 4).as("mean_gap_s"))
-      .orderBy("band")
-  }
-
-  /** N-gram containment pairs ([[Dedup.ngramContainmentPairs]]): the
-    * subset/quote detector Jaccard structurally misses — a short document
-    * fully contained in a long one has containment ≈ 1 but Jaccard ≈ 0.
-    * Threshold 0.4 on 3-gram sets; the contained (smaller) side is
-    * identified per pair, which is what a curation pipeline drops or
-    * merges.
-    */
-  private def qContainmentPairs(s: SparkSession, d: String): DataFrame =
-    Dedup.ngramContainmentPairs(Tables.documents(s, d), "doc_id", "text",
-        n = 3, threshold = 0.4)
-      .orderBy("id_a", "id_b")
-
-  /** Last-touch attribution: each purchase credited to the user's most
-    * recent PRECEDING click, banded by click→purchase latency (the
-    * conversion-lag report behind attribution-window choices; `z_no_click`
-    * = organic). The carry-forward is a user-partitioned window (`last`
-    * with ignoreNulls over rows preceding), so the scan stays distributed
-    * by user and no self-join materializes click×purchase candidates.
-    */
-  private def qAttribution(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    Tables.events(s, d)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("value"), unix_micros(col("ts")).as("us"))
-      .withColumn("click_us",
-        last(when(col("event_type") === "click", col("us")), ignoreNulls = true)
-          .over(w))
-      .filter(col("event_type") === "purchase")
-      .groupBy(
-        when(col("click_us").isNull, "z_no_click")
-          .when(col("us") - col("click_us") < 3600000000L, "a_under_1h")
-          .when(col("us") - col("click_us") < 86400000000L, "b_1h_1d")
-          .otherwise("c_over_1d").as("band"))
-      .agg(
-        count(lit(1)).as("n_purchases"),
-        round(sum(col("value")), 4).as("total_value"))
-      .orderBy("band")
-  }
-
-  /** Mann–Kendall trend test on the daily event-count series — the
-    * monotone-trend monitor read next to [[qChangepoint]]'s regime-shift
-    * detector: S = Σ_{i<j} sign(cⱼ−cᵢ) with the tie-corrected normal
-    * approximation. The daily series is a compact map-side-combinable
-    * aggregate; the pair sum is a deliberate triangular join over that
-    * ~30-row domain (metadata-sized, the q_take prefix-sum shape), the tie
-    * correction a group-by over equal counts, and every input to z is an
-    * exact integer so the verdict is engine-independent.
-    */
-  // (qOlsTrend lives below qTrendTest: the parametric line next to the
-  // non-parametric verdict)
-  private def qTrendTest(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.events(s, d)
-      .groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("c"))
-    val sStat = daily.as("a")
-      .join(daily.as("b"), col("a.day") < col("b.day"))
-      .agg(sum(signum(col("b.c") - col("a.c")).cast("long")).as("s_stat"))
-    val ties = daily.groupBy("c").agg(count(lit(1)).as("t"))
-      .agg(coalesce(
-        sum(col("t") * (col("t") - 1) * (lit(2) * col("t") + 5)), lit(0L))
-        .as("tie_term"))
-    val base = daily.agg(count(lit(1)).as("n_days"))
-    base.crossJoin(sStat).crossJoin(ties)
-      .select(
-        col("n_days"), col("s_stat"),
-        ((col("n_days") * (col("n_days") - 1) * (lit(2) * col("n_days") + 5)
-          - col("tie_term")) / lit(18.0)).as("var_s"))
-      .select(
-        col("n_days"), col("s_stat"), round(col("var_s"), 4).as("var_s"),
-        round(
-          when(col("s_stat") > 0, (col("s_stat") - 1) / sqrt(col("var_s")))
-            .when(col("s_stat") < 0, (col("s_stat") + 1) / sqrt(col("var_s")))
-            .otherwise(lit(0.0)), 4).as("z"))
-  }
-
-  /** Per-type OLS trend line of the daily event-count series — the
-    * parametric line beside [[qTrendTest]]'s non-parametric verdict (a
-    * monitor wants both: Mann-Kendall says WHETHER, the slope says HOW
-    * FAST). x is the day offset from the corpus epoch, y the daily
-    * count, so all five sufficient statistics (n, Σx, Σy, Σxy, Σxx) are
-    * EXACT integers from ONE map-side-combinable aggregate over the
-    * compact (type, day) domain; slope and intercept are closed-form
-    * ratios of those integers — two double divisions at the end, no
-    * iterative fitting, no window. This is the textbook
-    * sufficient-statistics decomposition that makes regression a single
-    * distributed pass at any scale (the same shape `regr_slope` uses,
-    * spelled out so both engines compute bit-identical ratios).
-    */
-  private def qOlsTrend(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .groupBy(col("event_type"),
-        datediff(to_date(col("ts")), lit("2024-01-01")).cast("long").as("x"))
-      .agg(count(lit(1)).as("y"))
-      .groupBy("event_type")
-      .agg(
-        count(lit(1)).as("n_days"),
-        sum(col("x")).as("sx"),
-        sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"))
-      .select(
-        col("event_type"), col("n_days"), col("sy").as("n_events"),
-        ((col("n_days") * col("sxy") - col("sx") * col("sy")).cast("double") /
-          (col("n_days") * col("sxx") - col("sx") * col("sx")).cast("double"))
-          .as("slope_per_day"),
-        col("sx"), col("sy"))
-      .withColumn("intercept",
-        (col("sy").cast("double") - col("slope_per_day") * col("sx").cast("double"))
-          / col("n_days").cast("double"))
-      .drop("sx", "sy")
-      .orderBy("event_type")
-
-  /** Lagged cross-correlation between the view and click daily series —
-    * does today's view volume predict clicks k days later? (the
-    * lead-indicator probe next to [[qOlsTrend]]'s within-series line).
-    * Pearson r at lags 0–3 from the six exact integer sufficient
-    * statistics per lag; numerator and the two variance terms are exact
-    * bigints cast to double ONCE each (products of the n·Σ terms can
-    * exceed int64 at large corpora, so the multiply happens in double
-    * space on both engines — identical op order, identical bits). The
-    * corpus-sized work is ONE map-side-combined daily count; the lag
-    * expansion and self-join ride the compact ~30-row-per-type series,
-    * the same compact-domain contract as [[qTrendTest]].
-    */
-  private def qCrossCorr(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.events(s, d)
-      .filter(col("event_type").isin("view", "click"))
-      .groupBy(col("event_type"),
-        datediff(to_date(col("ts")), lit("2024-01-01")).cast("long").as("day"))
-      .agg(count(lit(1)).as("n"))
-    val views = daily.filter(col("event_type") === "view")
-      .select(col("day"), col("n").as("x"))
-    val clicks = daily.filter(col("event_type") === "click")
-      .select(col("day").as("bday"), col("n").as("y"))
-    views
-      .withColumn("lag",
-        explode(array(lit(0L), lit(1L), lit(2L), lit(3L))))
-      .join(clicks, col("bday") === col("day") + col("lag"))
-      .groupBy("lag")
-      .agg(
-        count(lit(1)).as("n_days"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
-      .select(col("lag"), col("n_days"),
-        ((col("n_days") * col("sxy") - col("sx") * col("sy")).cast("double") /
-          sqrt((col("n_days") * col("sxx") - col("sx") * col("sx")).cast("double") *
-            (col("n_days") * col("syy") - col("sy") * col("sy")).cast("double")))
-          .as("pearson_r"))
-      .orderBy("lag")
-  }
-
-  /** Join-key skew diagnostic over lineitem.l_partkey — the pre-flight a
-    * pipeline runs before choosing plain vs salted vs broadcast joins
-    * ([[qSaltedJoin]] is the remedy this report motivates). Per-key counts
-    * aggregate map-side onto the key domain; the five summary stats (max,
-    * mean, exact p50/p99 of the frequency distribution, top-key share) are
-    * one scalar aggregate over that compact count table.
-    */
-  private def qKeySkew(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy("l_partkey").agg(count(lit(1)).as("c"))
-      .agg(
-        count(lit(1)).as("n_keys"),
-        sum(col("c")).as("n_rows"),
-        max(col("c")).as("max_freq"),
-        percentile(col("c"), array(lit(0.5), lit(0.99))).as("ps"))
-      .select(
-        col("n_keys"), col("n_rows"), col("max_freq"),
-        round(col("ps").getItem(0), 4).as("p50_freq"),
-        round(col("ps").getItem(1), 4).as("p99_freq"),
-        round(col("max_freq") * col("n_keys") / col("n_rows").cast("double"), 4)
-          .as("skew_ratio"))
-
-  /** ORC source/sink roundtrip — the third interchange format next to
-    * [[qJsonRoundtrip]] and [[qCsvRoundtrip]]: columnar like parquet
-    * (predicate pushdown, column pruning, stripe statistics), so it is the
-    * format an engine meets when ingesting from Hive-era warehouses. The
-    * timestamp travels as epoch-µs BIGINT for the same reason as the CSV
-    * row: the roundtrip under comparison is the engine's, and pinning the
-    * value to an integer keeps the oracle independent of each reader's
-    * timestamp-zone reconstruction rules.
-    */
-  private def qOrcRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = s"/tmp/graft_orcrt/${dirTag(d)}/events"
-    // guard on _SUCCESS, not the directory: a crashed mid-write leaves a
-    // partial directory that a bare exists-check would serve forever
-    stagedOnce(dir) {
-      Tables.events(s, d)
-        .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-          col("user_id"), col("event_type"), col("value"))
-        .write.mode("overwrite").orc(dir)
-    }
-    s.read.orc(dir).orderBy("event_id")
-  }
-
-  /** Multinomial naive Bayes language classifier trained AND scored
-    * in-engine (resubstitution), reported as the lang × predicted
-    * confusion matrix — the in-database classical-ML shape next to
-    * [[qKmeans]]. Add-1 smoothing over the corpus vocabulary; every
-    * per-token log-likelihood is quantized ONCE to an integer
-    * (`round(1e6·ln…)`), so document scores are exact BIGINT sums — fp
-    * summation order can never flip an argmax, and the prediction is
-    * engine-independent by construction (ties break to the
-    * lexicographically first class). Shape: per-doc token counts and
-    * class-conditional counts are posting-list aggregates; scoring is a
-    * token-keyed join (the [[Dedup]] inverted-index shape); the 5-row
-    * class axis and 1-row vocab size ride broadcast attaches.
-    */
-  private def qNaiveBayes(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // EVERYTHING derives from this one (doc, lang, token)-count aggregate
-    // and the class-conditional rollup below it — its consumers see
-    // byte-identical subtrees, so the tokenize+explode shuffle
-    // materializes once and every other reader is a ReusedExchange
-    // (pinned in PlanAuditSpec; the q_lm_score single-tokenize
-    // discipline — the naive formulation re-tokenized the corpus 9×
-    // because differently-pruned branches canonicalize differently)
-    val dt = Tables.documents(s, d)
-      // semantically a no-op (both columns are non-null), but it pins the
-      // null filters the consumers otherwise infer UNEVENLY — the seen
-      // join infers isnotnull(doc_id), the class rollup isnotnull(lang),
-      // the doc rollup neither — three canonically different subtrees,
-      // three corpus tokenizations (the q_lm_score regression)
-      .filter(col("doc_id").isNotNull && col("lang").isNotNull)
-      .select(col("doc_id"), col("lang"), explode(tokens(lower(col("text")))).as("w"))
-      .groupBy("doc_id", "lang", "w").agg(count(lit(1)).as("n_td"))
-    // class-conditional token counts; vocab size and per-class totals are
-    // rollups of THIS table, not fresh corpus passes
-    val cw = dt.groupBy(col("lang").as("cls"), col("w"))
-      .agg(sum(col("n_td")).as("c"))
-    // the c>0 filter is always true; referencing the aggregate output
-    // stops RemoveRedundantAggregates from collapsing this branch into a
-    // fresh pruned corpus scan — it reads the cw exchange back instead
-    val vocab = cw.filter(col("c") > 0).agg(countDistinct(col("w")).as("v"))
-    val classAxis = cw.groupBy("cls").agg(sum(col("c")).as("ct"))
-      .crossJoin(broadcast(vocab))
-      .select(col("cls"), round(lit(1e6) * log(col("ct") + col("v")))
-        .cast("long").as("a_denom"))
-    val lik = cw.select(col("cls"), col("w"),
-      round(lit(1e6) * log(col("c") + 1)).cast("long").as("l_tok"))
-    val docTotals = dt.groupBy("doc_id")
-      .agg(max(col("lang")).as("lang"), sum(col("n_td")).as("n_d"))
-    // priors come straight off the documents scan (textbook P(c) over ALL
-    // docs) — no tokenization needed, so this branch is a cheap pruned
-    // column scan instead of a fourth corpus explode
-    val docsPerClass = Tables.documents(s, d)
-      .groupBy(col("lang").as("cls")).agg(count(lit(1)).as("n_c"))
-    val nDocs = docsPerClass.agg(sum(col("n_c")).as("n"))
-    val prior = docsPerClass.crossJoin(broadcast(nDocs))
-      .select(col("cls"),
-        (round(lit(1e6) * log(col("n_c"))) - round(lit(1e6) * log(col("n"))))
-          .cast("long").as("p_prior"))
-    // seen-token credit per (doc, class); unseen tokens contribute only
-    // the -n_d·a_denom term, which the class-axis attach below supplies
-    val seen = dt.join(lik, "w")
-      .groupBy("doc_id", "cls")
-      .agg(sum(col("n_td") * col("l_tok")).as("s_seen"))
-    val scored = docTotals
-      .crossJoin(broadcast(classAxis.join(prior, "cls")))
-      .join(seen, Seq("doc_id", "cls"), "left")
-      .select(col("doc_id"), col("lang"), col("cls"),
-        (col("p_prior") - col("n_d") * col("a_denom") +
-          coalesce(col("s_seen"), lit(0L))).as("score"))
-    val pick = Window.partitionBy("doc_id")
-      .orderBy(col("score").desc, col("cls"))
-    scored.withColumn("rn", row_number().over(pick))
-      .filter(col("rn") === 1)
-      .groupBy(col("lang"), col("cls").as("predicted"))
-      .agg(count(lit(1)).as("n_docs"))
-      .orderBy("lang", "predicted")
-  }
-
-  /** Kaplan–Meier survival curve for signup→purchase conversion,
-    * right-censored at each user's last observed event — the estimator
-    * [[qTimeToEvent]]'s converters-only quartiles cannot give you (it
-    * silently drops the censored majority; KM keeps them at risk until
-    * they disappear). Day-granularity risk table: d/c counts aggregate
-    * map-side onto the compact day domain, at-risk counts and the product
-    * Π(1−d/n) are cumulative windows over that domain (the product via
-    * exp∘Σln — the [[qPsiDrift]]-family fp discipline, rounded once at the
-    * end).
-    */
-  private def qKaplanMeier(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables.events(s, d)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-    val su = ev.filter(col("event_type") === "signup")
-      .groupBy("user_id").agg(min(col("us")).as("s_us"))
-    val endU = ev.groupBy("user_id").agg(max(col("us")).as("e_us"))
-    val pu = ev.filter(col("event_type") === "purchase")
-      .join(su, "user_id")
-      .filter(col("us") >= col("s_us"))
-      .groupBy("user_id").agg(min(col("us")).as("p_us"))
-    val subj = su.join(endU, "user_id").join(pu, Seq("user_id"), "left")
-      .select(
-        floor((coalesce(col("p_us"), col("e_us")) - col("s_us")) /
-          86400000000L).as("t_days"),
-        col("p_us").isNotNull.as("converted"))
-    val byDay = subj.groupBy("t_days")
-      .agg(
-        sum(when(col("converted"), 1L).otherwise(0L)).as("d_events"),
-        sum(when(col("converted"), 0L).otherwise(1L)).as("c_censored"))
-    val after = Window.orderBy("t_days")
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val upTo = Window.orderBy("t_days")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    byDay
-      .withColumn("n_risk",
-        sum(col("d_events") + col("c_censored")).over(after))
-      // d = n (everyone remaining converts) makes the factor 0 and S ≡ 0
-      // from there on; it must be an EXPLICIT zero because ln(0) is NULL
-      // in Spark but -inf in DuckDB — the one place exp∘Σln diverges
-      .withColumn("survival",
-        when(max(when(col("d_events") === col("n_risk"), 1).otherwise(0))
-          .over(upTo) === 1, lit(0.0))
-          .otherwise(exp(sum(
-            when(col("d_events") < col("n_risk"),
-              log(lit(1.0) - col("d_events") / col("n_risk").cast("double"))))
-            .over(upTo))))
-      .filter(col("d_events") > 0)
-      .select(col("t_days"), col("n_risk"), col("d_events"),
-        round(col("survival"), 6).as("survival"))
-      .orderBy("t_days")
-  }
-
-  /** k-anonymity audit over the (event_type, day, value-decade)
-    * quasi-identifier — the privacy gate run before sharing an events
-    * extract: rows in groups smaller than k are re-identifiable. One
-    * group-by onto the QI domain, then a ≤3-row banded rollup with exact
-    * integer counts.
-    */
-  private def qKAnonymity(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .select(col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") / 10).cast("long").as("vb"))
-      .groupBy("event_type", "day", "vb").agg(count(lit(1)).as("k"))
-      .groupBy(
-        when(col("k") < 5, "a_k_lt_5")
-          .when(col("k") < 20, "b_k_5_20")
-          .otherwise("c_k_ge_20").as("band"))
-      .agg(
-        count(lit(1)).as("n_groups"),
-        sum(col("k")).as("n_rows"))
-      .orderBy("band")
-
-  /** Temporal train/eval split at the 70% point of the observed time
-    * range, with the user-overlap report — time-based splitting is how
-    * event pipelines avoid the future-leaks-into-train failure of random
-    * splits, and the overlap count is the "same user on both sides"
-    * caveat a model card must carry. The cutoff is exact integer µs
-    * arithmetic on the 1-row min/max attach; per-user side flags reduce
-    * in one pass.
-    */
-  private def qTemporalSplit(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"))
-    val bounds = ev.agg(min(col("us")).as("mn"), max(col("us")).as("mx"))
-      .select((col("mn") + ((col("mx") - col("mn")) * 7) / 10).as("cut_us"))
-    val flags = ev.crossJoin(broadcast(bounds))
-      .groupBy("user_id")
-      .agg(
-        sum(when(col("us") <= col("cut_us"), 1L).otherwise(0L)).as("n_tr"),
-        sum(when(col("us") > col("cut_us"), 1L).otherwise(0L)).as("n_te"))
-    flags.agg(
-      sum(col("n_tr")).as("n_train_rows"),
-      sum(col("n_te")).as("n_test_rows"),
-      sum(when(col("n_tr") > 0, 1L).otherwise(0L)).as("n_train_users"),
-      sum(when(col("n_te") > 0, 1L).otherwise(0L)).as("n_test_users"),
-      sum(when(col("n_tr") > 0 && col("n_te") > 0, 1L).otherwise(0L))
-        .as("n_overlap_users"))
-  }
-
-  /** One power-iteration of PCA over the embedding table: the dominant
-    * principal direction (64 loadings) plus the Rayleigh-quotient
-    * eigenvalue estimate — in-engine linear algebra without materializing
-    * the 64×64 covariance: y = Σᵣ xᵣ·(xᵣᵀv₀) needs only a per-row dot
-    * product (codegen'd `aggregate` fold) and a per-dimension sum over a
-    * posexplode — two map-side-combinable aggregates, no dim² shuffle.
-    * v₀ = 1/√64 = 0.125 exactly (a power of two), so the seed introduces
-    * no fp noise of its own; loadings are rounded once after
-    * normalization.
-    */
-  private def qPcaPower(s: SparkSession, d: String): DataFrame = {
-    val withZ = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"),
-        (aggregate(col("embedding"), lit(0.0d),
-          (acc, x) => acc + x.cast("double")) * lit(0.125d)).as("z"))
-    val y = withZ
-      .select(posexplode(col("embedding")).as(Seq("i", "x")), col("z"))
-      .groupBy("i").agg(sum(col("x").cast("double") * col("z")).as("y"))
-    val nrm = y.agg(sqrt(sum(col("y") * col("y"))).as("nrm"))
-    y.crossJoin(broadcast(nrm))
-      .select(
-        col("i").cast("long").as("dim"),
-        round(col("y") / col("nrm"), 6).as("loading"),
-        round(col("nrm"), 4).as("lambda"))
-      .orderBy("dim")
-  }
-
-  /** Class-balanced downsample: at most 60 documents per language, chosen
-    * by the engine-portable md5 shuffle order (the [[Sampling]] recipe —
-    * any SQL engine reproduces the same subset bit-for-bit). This is the
-    * balance-the-label-distribution op run before training on skewed
-    * corpora; the rank is a lang-partitioned window, so the scan stays
-    * distributed by the group key and no global sort exists.
-    */
-  private def qBalancedSample(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("lang")
-      .orderBy(md5(concat(lit("bal|"), col("doc_id").cast("string"))), col("doc_id"))
-    Tables.documents(s, d)
-      .select(col("lang"), col("doc_id"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 60)
-      .select(col("lang"), col("doc_id"))
-      .orderBy("lang", "doc_id")
-  }
-
-  /** Corpus coverage curve: the share of total characters held by the
-    * top-1/5/10/25/50% largest documents — the concentration report
-    * behind "half the corpus is a handful of giant files" curation calls
-    * (the curve form of [[qGini]]'s scalar). The global size rank rides
-    * [[PositionalTake.withGlobalIndex]] (range partition + zipWithIndex —
-    * distributed at any corpus size, no single-partition window); the
-    * five shares are conditional sums against the 1-row corpus-stats
-    * attach, all exact integers until the final divisions.
-    */
-  private def qCoverageCurve(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
-    val ranked = PositionalTake.withGlobalIndex(docs, Seq("n_chars", "doc_id"))
-    val stats = docs.agg(
-      count(lit(1)).as("n"), sum(col("n_chars")).as("total"))
-    def share(pct: Int) =
-      round(sum(when(col("idx") >= col("n") - floor(col("n") * pct / 100),
-        col("n_chars")).otherwise(0L)) / col("total").cast("double"), 6)
-        .as(s"share_top$pct")
-    ranked.crossJoin(broadcast(stats))
-      .groupBy("n", "total")
-      .agg(share(1), share(5), share(10), share(25), share(50))
-      .select(col("n").as("n_docs"), col("total").as("total_chars"),
-        col("share_top1"), col("share_top5"), col("share_top10"),
-        col("share_top25"), col("share_top50"))
-  }
-
-  /** Differential-privacy sensitivity report: the per-user contribution
-    * bounds (rows, value mass, busiest day) a DP release needs before
-    * choosing clipping thresholds — unbounded user contribution means
-    * unbounded sensitivity means no ε guarantee. Two compact keyed
-    * aggregates (per-user, per-user-day) reduced to one row of exact
-    * maxima plus the p99 row-count quantile.
-    */
-  private def qDpSensitivity(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-      .select(col("user_id"), to_date(col("ts")).as("day"), col("value"))
-    val perUser = ev.groupBy("user_id")
-      .agg(count(lit(1)).as("n_rows"), sum(col("value")).as("v_sum"))
-    val perUserDay = ev.groupBy("user_id", "day")
-      .agg(count(lit(1)).as("n_day"))
-      .groupBy("user_id").agg(max(col("n_day")).as("max_day"))
-    perUser.join(perUserDay, "user_id")
-      .agg(
-        count(lit(1)).as("n_users"),
-        max(col("n_rows")).as("max_rows_per_user"),
-        percentile(col("n_rows"), lit(0.99)).as("p99"),
-        round(max(col("v_sum")), 4).as("max_value_sum_per_user"),
-        max(col("max_day")).as("max_rows_per_user_day"))
-      .select(col("n_users"), col("max_rows_per_user"),
-        round(col("p99"), 4).as("p99_rows_per_user"),
-        col("max_value_sum_per_user"), col("max_rows_per_user_day"))
-  }
-
-  /** Per-label centroids and their pairwise cosine separability — the
-    * "are my classes actually separated in embedding space?" report read
-    * before training a classifier on labeled vectors. Centroid components
-    * are per-(label, dim) averages over a posexplode (map-side
-    * combinable, dim·labels output rows); the 45-pair cosine matrix is a
-    * triangular join over the 10-row centroid table (metadata-sized).
-    * Centroids are reassembled into arrays via a dim-sorted collect so
-    * the dot product folds in one deterministic order.
-    */
-  private def qLabelCentroids(s: SparkSession, d: String): DataFrame = {
-    val cent = Tables.embeddings(s, d)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("i", "x")))
-      .groupBy("label", "i").agg(avg(col("x").cast("double")).as("m"))
-      .groupBy("label")
-      .agg(array_sort(collect_list(struct(col("i"), col("m")))).as("sm"))
-      .select(col("label"), transform(col("sm"), e => e.getField("m")).as("c"))
-    cent.as("a").join(cent.as("b"), col("a.label") < col("b.label"))
-      .select(
-        col("a.label").as("label_a"), col("b.label").as("label_b"),
-        round(cosineSimilarity(col("a.c"), col("b.c")), 6).as("cos"))
-      .orderBy("label_a", "label_b")
-  }
-
-  /** Hard-negative mining: for each label's centroid, the top-5 most
-    * similar vectors carrying a DIFFERENT label — the contrastive-training
-    * batch builder (and a mislabeling surfacing pass: a foreign vector
-    * nearly on your centroid is either a hard negative or a wrong label).
-    * The 10-row centroid table broadcasts against one corpus scan; per-row
-    * dots are bit-identical across engines (same sequential fold), so the
-    * top-5 rank needs no quantization. At 100 TB the scan side routes
-    * through the IVF index ([[qIvfTopk]]) instead of a full pass.
-    */
-  private def qHardNegatives(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cent = Tables.embeddings(s, d)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("i", "x")))
-      .groupBy("label", "i").agg(avg(col("x").cast("double")).as("m"))
-      .groupBy("label")
-      .agg(array_sort(collect_list(struct(col("i"), col("m")))).as("sm"))
-      .select(col("label").as("c_label"),
-        transform(col("sm"), e => e.getField("m")).as("c"))
-    val w = Window.partitionBy("c_label")
-      .orderBy(col("cos").desc, col("vec_id"))
-    Tables.embeddings(s, d)
-      .join(broadcast(cent), col("label") =!= col("c_label"))
-      .select(col("c_label"), col("vec_id"),
-        round(cosineSimilarity(toDoubleArray(col("embedding")), col("c")), 6)
-          .as("cos"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("c_label").as("label"), col("vec_id"), col("cos"))
-      .orderBy("label", "vec_id")
-  }
-
-  /** k-NN label-noise audit (confident-learning-lite): for a portable
-    * 30% hash sample of vectors, find the 3 nearest neighbors; a vector
-    * NONE of whose neighbors share its label is a suspected mislabel.
-    * The PRODUCTION path runs against the persisted ANN index
-    * ([[annIndex]] — the write-once `graft_ann_idx_*` table): each query
-    * ranks the 16 broadcast centroids, probes its top-4 lists through a
-    * list_id-keyed join (sample × corpus/4 candidate work, shrinking with
-    * nlist at scale), and votes neighbor labels from the probed lists.
-    * The exact sample×corpus side — the [[Similarity.sampledRecallAudit]]
-    * quarantined-audit shape, bounded by the sample — is the write-once
-    * [[stagedKnnSuspects]] artifact (paid once per corpus), read here as
-    * the recall audit, and the row emits the exact suspects (per-pair
-    * dots are bit-identical across engines, so the DuckDB oracle
-    * reproduces them) plus `ann_ok`: the in-plan verdict that the
-    * index-served suspect set covers the exact set at the measured floor
-    * (suspect overlap 75/87/87% at sf0.001/0.01/0.1; floor 60%, the
-    * probe-pruning trade on structureless embeddings).
-    */
-  /** The corpus (vec_id, label, v) projection and its portable 30% hash
-    * sample of query vectors — shared by [[qKnnLabelNoise]]'s ANN
-    * production path and the [[stagedKnnSuspects]] exact-audit builder.
-    */
-  private def knnFrames(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"), toDoubleArray(col("embedding")).as("v"))
-    val q = e.filter(
-      pmod(conv(substring(md5(concat(lit("knn|"), col("vec_id").cast("string"))),
-        1, 12), 16, 10).cast("long"), lit(1000000L)) < 300000L)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("v").as("qv"))
-    (e, q)
-  }
-
-  /** Write-once staged EXACT k-NN suspect set — the quarantined
-    * sample×corpus audit side of [[qKnnLabelNoise]], now staged under the
-    * [[stagedDupPairs]] discipline (r10 verdict #6): the exact audit is a
-    * pure function of the corpus directory and was the row's dominant
-    * cost, so it is paid ONCE per corpus and every later run (bench,
-    * verify, repeated sessions) reads the KB-scale (q_id, q_label)
-    * parquet instead of re-scanning sample×corpus. The audit semantics
-    * are unchanged — the staged set IS the exact answer the verdict
-    * compares the index-served suspects against.
-    */
-  private def stagedKnnSuspects(s: SparkSession, d: String): DataFrame = {
-    val dir = s"/tmp/graft_knn/${dirTag(d)}/suspects3"
-    stagedOnce(dir) {
-      import org.apache.spark.sql.expressions.Window
-      val (e, q) = knnFrames(s, d)
-      val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-      q.join(e, col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
-          cosineSimilarity(col("qv"), col("v")).as("cos"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .groupBy("q_id", "q_label")
-        .agg(sum(when(col("label") === col("q_label"), 1L).otherwise(0L))
-          .as("n_agree"))
-        .filter(col("n_agree") === 0)
-        .select(col("q_id"), col("q_label"))
-        .repartition(1).write.mode("overwrite").parquet(dir)
-    }
-    s.read.parquet(dir)
-  }
-
-  private def qKnnLabelNoise(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import s.implicits._
-    val (idx, cents, _) = annIndex(s, d)
-    val (e, q) = knnFrames(s, d)
-    // ANN path: per-query probe lists from the broadcast centroid
-    // metadata (16 rows), then candidates from the PERSISTED index
-    val centDf = cents.toDF("list_id", "centroid")
-    val pw = Window.partitionBy("q_id").orderBy(col("ccos").desc, col("list_id"))
-    val probes = q.crossJoin(broadcast(centDf))
-      .select(col("q_id"), col("q_label"), col("qv"), col("list_id"),
-        cosineSimilarity(col("qv"), col("centroid")).as("ccos"))
-      .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") <= 4)
-      .select(col("q_id"), col("q_label"), col("qv"), col("list_id"))
-    val nw = Window.partitionBy("q_id").orderBy(col("cos").desc, col("id"))
-    val annSuspects = probes.join(idx.select(col("id"), col("v"), col("list_id")),
-        "list_id")
-      .filter(col("id") =!= col("q_id"))
-      .select(col("q_id"), col("q_label"), col("id"),
-        cosineSimilarity(col("qv"), col("v")).as("cos"))
-      .withColumn("rn", row_number().over(nw))
-      .filter(col("rn") <= 3)
-      .join(e.select(col("vec_id").as("id"), col("label").as("n_label")), "id")
-      .groupBy("q_id", "q_label")
-      .agg(sum(when(col("n_label") === col("q_label"), 1L).otherwise(0L))
-        .as("n_agree"))
-      .filter(col("n_agree") === 0)
-      .select(col("q_id"))
-    // exact audit side: the write-once staged suspect set (quarantined
-    // sample×corpus scan, paid once per corpus — [[stagedKnnSuspects]])
-    val exact = stagedKnnSuspects(s, d)
-    val verdict = exact.select(col("q_id")).withColumn("in_ex", lit(1L))
-      .join(annSuspects.withColumn("in_ann", lit(1L)), Seq("q_id"), "full_outer")
-      .agg(
-        sum(coalesce(col("in_ex"), lit(0L))).as("n_exact"),
-        sum(when(col("in_ex").isNotNull && col("in_ann").isNotNull, 1L)
-          .otherwise(0L)).as("n_hit"))
-      .select(
-        (col("n_hit") * 10L >= col("n_exact") * 6L).as("ann_ok"),
-        lit(1).as("one"))
-    exact
-      .withColumn("one", lit(1))
-      .join(broadcast(verdict), "one")
-      .select(col("q_id"), col("q_label"), col("ann_ok"))
-      .orderBy("q_id")
-  }
-
-  /** Hybrid retrieval via reciprocal-rank fusion: the BM25 ranking and a
-    * vector-space (tf·idf cosine over the query terms) ranking for the
-    * same 3-term query, fused as Σ 1/(60+rankᵢ) over the top-50 of each
-    * system — the standard hybrid-search combiner, and deliberately
-    * rank-based so the fusion is EXACT integer arithmetic even though the
-    * two scoring functions are floats (both rankings order on scores
-    * rounded to 6dp with a doc_id tiebreak, so the ranks themselves are
-    * engine-independent). One corpus scan + the 1-row stats attach feed
-    * BOTH scorers; the fusion join touches ≤100 candidate rows.
-    */
-  private def qHybridFusion(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val terms = Seq("hash", "join", "merge")
-    val withToks = Tables.documents(s, d)
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-    // tf via the native codegen'd equals loop — see [[qBm25]]
-    val perDoc = withToks.select(
-      col("doc_id") +: size(col("toks")).as("dl") +:
-        terms.map(t =>
-          NativeExpressions.array_count_eq(col("toks"), t).as(s"tf_$t")): _*)
-    val statCols = count(lit(1)).as("n_docs") +: avg(col("dl")).as("avgdl") +:
-      terms.map(t =>
-        sum(when(col(s"tf_$t") > 0, 1L).otherwise(0L)).as(s"df_$t"))
-    val stats = perDoc.agg(statCols.head, statCols.tail: _*)
-    val bm25 = terms.map { t =>
-      val tf = col(s"tf_$t"); val df = col(s"df_$t")
-      log((col("n_docs") - df + 0.5) / (df + 0.5) + 1.0) *
-        (tf * 2.2) /
-        (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
-    }.reduce(_ + _)
-    // vector-space side: query vector = idf per term, doc vector = tf·idf;
-    // cosine restricted to the query's term subspace
-    val idf = terms.map(t => log(col("n_docs") / (col(s"df_$t") + 1.0)))
-    val dotQ = terms.zip(idf).map { case (t, w) => col(s"tf_$t") * w * w }
-      .reduce(_ + _)
-    val docNorm = sqrt(terms.zip(idf).map { case (t, w) =>
-      col(s"tf_$t") * col(s"tf_$t") * w * w }.reduce(_ + _))
-    val qNorm = sqrt(idf.map(w => w * w).reduce(_ + _))
-    val cosv = when(docNorm === 0, lit(0.0))
-      .otherwise(dotQ / (docNorm * qNorm))
-    val scored = perDoc.crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        round(bm25, 6).as("s_bm25"), round(cosv, 6).as("s_vec"))
-    // each ranking's top-50 is an orderBy.limit (TakeOrderedAndProject — a
-    // per-partition heap + driver merge, never an Exchange SinglePartition
-    // of every scored doc); ranks are then derived by a window over the
-    // ≤50 SURVIVORS only. Identical result: limit keeps exactly the rows
-    // with rank ≤ 50 under the same total order (rounded score, doc_id
-    // tiebreak), and re-ranking a prefix of a total order preserves ranks.
-    val wB = Window.orderBy(col("s_bm25").desc, col("doc_id"))
-    val wV = Window.orderBy(col("s_vec").desc, col("doc_id"))
-    val rB = scored.filter(col("s_bm25") > 0)
-      .select(col("doc_id"), col("s_bm25"))
-      .orderBy(col("s_bm25").desc, col("doc_id")).limit(50)
-      .select(col("doc_id"), row_number().over(wB).as("r_bm25"))
-    val rV = scored.filter(col("s_vec") > 0)
-      .select(col("doc_id"), col("s_vec"))
-      .orderBy(col("s_vec").desc, col("doc_id")).limit(50)
-      .select(col("doc_id"), row_number().over(wV).as("r_vec"))
-    rB.join(rV, Seq("doc_id"), "full_outer")
-      .select(col("doc_id"),
-        coalesce(col("r_bm25"), lit(0)).as("r_bm25"),
-        coalesce(col("r_vec"), lit(0)).as("r_vec"),
-        round(
-          coalesce(lit(1.0) / (lit(60) + col("r_bm25")), lit(0.0)) +
-            coalesce(lit(1.0) / (lit(60) + col("r_vec")), lit(0.0)), 6)
-          .as("rrf"))
-      .orderBy(col("rrf").desc, col("doc_id"))
-      .limit(10)
-  }
-
-  /** Autocomplete index: the top-3 completions (by corpus frequency) for
-    * every 3-char token prefix with enough support — the typeahead table a
-    * search box serves. The per-prefix top-k is a `row_number<=k` window
-    * the [[graft.plans.RankLimitRule]] rewrites onto the bounded-heap
-    * [[graft.plans.TopKPerKey]] operator — with a STRING in the ordering
-    * struct, the exact path the heap's deep-copy fix guards (ties break
-    * token-descending so the all-desc ordering stays rule-rewritable).
-    */
-  private def qAutocomplete(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val tok = Tables.documents(s, d)
-      .select(explode(tokens(lower(col("text")))).as("t"))
-      .filter(length(col("t")) >= 3)
-      .groupBy(substring(col("t"), 1, 3).as("prefix"), col("t"))
-      .agg(count(lit(1)).as("n"))
-    val w = Window.partitionBy("prefix")
-      .orderBy(col("n").desc, col("t").desc)
-    tok.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3 && col("n") >= 20)
-      .select(col("prefix"), col("t").as("token"), col("n"))
-      .orderBy("prefix", "token")
-  }
-
-  /** Per-label centroid outliers: the 5 vectors FARTHEST (lowest cosine)
-    * from their own label's centroid — the "probably mislabeled or
-    * genuinely hard" review queue next to [[qKnnLabelNoise]]'s
-    * neighbor-vote audit. Same centroid recipe as [[qLabelCentroids]];
-    * the rank orders on the ROUNDED cosine with a vec_id tiebreak, so
-    * both engines pick identical rows.
-    */
-  private def qCentroidOutliers(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cent = Tables.embeddings(s, d)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("i", "x")))
-      .groupBy("label", "i").agg(avg(col("x").cast("double")).as("m"))
-      .groupBy("label")
-      .agg(array_sort(collect_list(struct(col("i"), col("m")))).as("sm"))
-      .select(col("label"), transform(col("sm"), e => e.getField("m")).as("c"))
-    val w = Window.partitionBy("label").orderBy(col("cos"), col("vec_id"))
-    Tables.embeddings(s, d)
-      .join(broadcast(cent), "label")
-      .select(col("label"), col("vec_id"),
-        round(cosineSimilarity(toDoubleArray(col("embedding")), col("c")), 6)
-          .as("cos"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("label"), col("vec_id"), col("cos"))
-      .orderBy("label", "vec_id")
-  }
-
-  /** The canonical TPC-H Q1 pricing summary in full — every aggregate of
-    * the classic report (sum qty/base/disc-price/charge, three averages,
-    * count) with the shipdate cutoff, grouped on the 4-cell
-    * (returnflag, linestatus) domain. [[qGroupAgg]] carries a reduced
-    * form; this row is the recognizable benchmark shape: one map-side-
-    * combinable aggregate over a pushed-down scan filter, the plan every
-    * OLAP engine is first judged on. Money sums accumulate as EXACT
-    * integer units (cents × discount% × tax% — 1e-6-currency units for
-    * the charge; r12: a fixture sum_disc_price lands EXACTLY on a
-    * 2dp round boundary at two SFs, so the old round(double-sum) was a
-    * partial-order coin flip) with one unrounded double division each;
-    * averages stay round(avg) — audited boundary-free on these
-    * fixtures, and quantity/discount sums are order-exact integers in
-    * double space. Unit products stay < 2e11 per row, 7 orders below
-    * int64 overflow even at 1e7-row groups; a larger engine would
-    * switch the charge sum to decimal(38,0).
-    */
-  private def qTpchQ1(s: SparkSession, d: String): DataFrame = {
-    val pu2 = round(col("l_extendedprice") * 100).cast("long")
-    val d2 = round(col("l_discount") * 100).cast("long")
-    val t2 = round(col("l_tax") * 100).cast("long")
-    Tables.lineitem(s, d)
-      .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        sum(col("l_quantity")).cast("double").as("sum_qty"),
-        (sum(pu2).cast("double") / 100.0).as("sum_base_price"),
-        (sum(pu2 * (lit(100L) - d2)).cast("double") / 10000.0)
-          .as("sum_disc_price"),
-        (sum(pu2 * (lit(100L) - d2) * (lit(100L) + t2)).cast("double")
-          / 1000000.0).as("sum_charge"),
-        round(avg(col("l_quantity")), 6).as("avg_qty"),
-        round(avg(col("l_extendedprice")), 6).as("avg_price"),
-        round(avg(col("l_discount")), 6).as("avg_disc"),
-        count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
-  }
-
-  /** Peak concurrency via the interval-sweep pattern: per-user-per-day
-    * sessions ([first event, last event]) opened as +1/closed as −1
-    * boundary rows, swept in time order with a running sum — the maximum
-    * is the most sessions ever open at once (capacity planning's number).
-    * Boundary rows are 2 per session (compact); the sweep is SEGMENTED by
-    * day — the standard distributed prefix-sum shape: each day's running
-    * sum is a day-partitioned window, and the carry-in from all prior days
-    * is a cumulative window over the per-day NET aggregate (one row per
-    * day — KB-scale for years of data), so no window ever orders more than
-    * one day's boundary rows on one task. (Sessions here are intra-day by
-    * construction, making every carry-in zero — but the carry is computed,
-    * not assumed, and each boundary row is tagged with the day of its OWN
-    * timestamp, so the decomposition stays correct for midnight-spanning
-    * intervals.) Ties order +1 before −1 so touching intervals count as
-    * overlapping. The peak row is a 1-row broadcast max attach plus an
-    * orderBy.limit(1) — no global rank window. Output: the peak and the
-    * first sweep position attaining it.
-    */
-  private def qPeakConcurrency(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sess = Tables.events(s, d)
-      .select(col("user_id"), to_date(col("ts")).as("day"),
-        unix_micros(col("ts")).as("us"))
-      .groupBy("user_id", "day")
-      .agg(min(col("us")).as("s_us"), max(col("us")).as("e_us"))
-    // each boundary's sweep day comes from its OWN timestamp, not the
-    // session's opening day (ADVICE r10): a close boundary landing past
-    // midnight must sort into the NEXT day's partition for the carry
-    // decomposition's ordering to hold on midnight-spanning intervals
-    val bounds = sess
-      .select(col("s_us").as("us"), lit(1).as("delta"))
-      .unionAll(sess.select(col("e_us").as("us"), lit(-1).as("delta")))
-      .withColumn("day", to_date(timestamp_micros(col("us"))))
-      .groupBy("day", "us", "delta").agg(count(lit(1)).as("m"))
-    val dayNet = bounds.groupBy("day")
-      .agg(sum(col("delta") * col("m")).as("net"))
-    val carryW = Window.orderBy("day")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = dayNet.select(col("day"),
-      coalesce(sum(col("net")).over(carryW), lit(0L)).as("carry_in"))
-    val sweep = Window.partitionBy("day")
-      .orderBy(col("us"), col("delta").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val open = bounds
-      .withColumn("run", sum(col("delta") * col("m")).over(sweep))
-      .join(broadcast(carry), "day")
-      .select(col("us"), col("delta"),
-        (col("carry_in") + col("run")).as("open"))
-    val peak = open.agg(max(col("open")).as("peak"))
-    open.join(broadcast(peak), col("open") === col("peak"))
-      .orderBy(col("us"), col("delta").desc)
-      .limit(1)
-      .select(col("open").as("peak_concurrent"), col("us").as("at_us"))
-  }
-
-  /** Per-group weighted median: the l_extendedprice at which half the
-    * QUANTITY mass of each return flag sits — the order statistic plain
-    * medians get wrong when rows carry different weights. Classic
-    * distributed shape: the sort and the cumulative-weight window are
-    * PARTITIONED by the group key (no global sort), and the winner is the
-    * first row whose running weight reaches half the group total (exact
-    * integer-scaled comparisons — quantities are whole numbers carried as
-    * doubles, so 2·cum ≥ total is exact).
-    */
-  private def qWeightedMedian(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Aggregate-then-prefix (r20, the qAuc decomposition applied to the
-    // weighted order statistic — r19 deferred this for the tie-handling
-    // re-scan; the crossing-bucket re-scan below bounds that cost):
-    // the old shape ranged-shuffled EVERY row into 3 flag partitions and
-    // ran a full per-flag window sort of the 600k-row table — at scale a
-    // 3-task sort of the whole fact. Now: (1) per-(flag, unit-price
-    // bucket) weight totals — ONE map-side-combined aggregate, output
-    // bounded by the price RANGE, not the row count; (2) per-flag
-    // exclusive prefix over bucket totals finds the bucket where the
-    // cumulative weight crosses half (window input = bucket rows only);
-    // (3) a second scan re-reads JUST the crossing bucket's rows
-    // (broadcast 3-row semi-join) and replays the row-level sweep inside
-    // that bucket — the only per-row sort left is over one bucket per
-    // flag. Quantity sums are whole numbers in doubles, so bucket-partial
-    // summation is order-exact and cumw/totw are bit-identical to the
-    // row-level window's running sums.
-    val ord = col("l_extendedprice") +: liKey.map(col)
-    val rows = Tables.lineitem(s, d)
-      .select((Seq("l_returnflag", "l_quantity") ++ liKey.filterNot(
-        Seq("l_returnflag", "l_quantity").contains)).map(col): _*)
-    val perBucket = rows
-      .groupBy(col("l_returnflag"), floor(col("l_extendedprice")).as("b"))
-      .agg(sum(col("l_quantity")).as("bw"))
-    val wPrefix = Window.partitionBy("l_returnflag").orderBy("b")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wTot = Window.partitionBy("l_returnflag")
-    val crossing = perBucket
-      .withColumn("lo", coalesce(sum(col("bw")).over(wPrefix),
-        lit(0L).cast(perBucket.schema("bw").dataType)))
-      .withColumn("totw", sum(col("bw")).over(wTot))
-      // the first bucket whose INCLUSIVE prefix reaches half holds the
-      // crossing row (all rows of earlier buckets are strictly below)
-      .filter(lit(2.0) * (col("lo") + col("bw")) >= col("totw"))
-      .groupBy(col("l_returnflag").as("xflag"))
-      .agg(min(struct(col("b"), col("lo"), col("totw"))).as("x"))
-      .select(col("xflag"), col("x.b").as("xb"),
-        col("x.lo").as("xlo"), col("x.totw").as("xtotw"))
-    val pick = Window.partitionBy("l_returnflag").orderBy(ord: _*)
-    val cum = Window.partitionBy("l_returnflag")
-      .orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    rows
-      .join(broadcast(crossing),
-        // null-safe equality: a (hypothetical) NULL flag or price is a
-        // window partition / groupBy group in both shapes — an equi-join
-        // would silently drop it here while the old windowed shape kept it
-        col("l_returnflag") <=> col("xflag") &&
-          floor(col("l_extendedprice")) <=> col("xb"))
-      .withColumn("cumw", col("xlo") + sum(col("l_quantity")).over(cum))
-      .filter(lit(2.0) * col("cumw") >= col("xtotw"))
-      .withColumn("rn", row_number().over(pick))
-      .filter(col("rn") === 1)
-      .select(col("l_returnflag"), col("l_extendedprice").as("w_median"),
-        col("cumw").cast("double").as("cum_weight"),
-        col("xtotw").cast("double").as("total_weight"))
-      .orderBy("l_returnflag")
-  }
-
-  /** Streaming HLL distinct as a catalog row: the per-day approximate
-    * user cardinality computed IN the stream
-    * ([[EventsPipeline.streamingWindowedDistinct]] — merge-order-
-    * independent sketch state, KB per window), audited in-plan against
-    * the exact batch distinct — the [[qSketches]] verdict discipline, so
-    * the engine-specific sketch value never reaches the oracle, only the
-    * exact side plus a literal-TRUE error-bound verdict.
-    */
-  private def qStreamHll(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val staged = stagedEvents(s, d)
-    val name = s"graft_stream_hll_$tag"
-    // state partitions sized to state volume, not batch shuffle width —
-    // see qStreamIntervalJoin
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = EventsPipeline.streamingWindowedDistinct(s, staged, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    val exact = Tables.events(s, d)
-      .select((floor(unix_micros(col("ts")) / 86400000000L) * 86400L)
-        .as("window_start"), col("user_id"))
-      .distinct()
-      .groupBy("window_start").agg(count(lit(1)).as("exact_users"))
-    s.table(name)
-      .join(exact, "window_start")
-      .select(col("window_start"), col("exact_users"), col("n_events"),
-        (abs(col("approx_users") - col("exact_users"))
-          <= col("exact_users") * 0.15).as("hll_ok"))
-      .orderBy("window_start")
-  }
-
-  /** Write-once staged TIME-ORDERED multi-file feed: the events table
-    * split into 6 contiguous time ranges, one file per range with
-    * strictly ascending mtimes, so `maxFilesPerTrigger=1` replays the
-    * month as 6 micro-batches whose watermark advances monotonically —
-    * the harness that makes watermark EVICTION observable
-    * ([[qStreamEvict]]). Range boundaries cut mid-day at worst: a
-    * window's last rows always arrive before the watermark (max seen ts
-    * − 2 h, necessarily inside that same window or earlier) can pass the
-    * window's END, so no upserted window is ever incomplete and the
-    * final sink equals the batch aggregate exactly.
-    */
-  private def stagedEventsByTime(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_stream/${dirTag(d)}/events_bytime"
-    // guard on the marker written LAST: the directory is hand-assembled
-    // file by file, so no parquet _SUCCESS covers the whole feed
-    stagedOnceGuarded(dir)(new java.io.File(dir, "_STAGED").exists()) {
-      val e = Tables.events(s, d)
-      val mm = e.agg(unix_micros(min(col("ts"))).as("a"),
-        unix_micros(max(col("ts"))).as("b")).head()
-      val (minUs, span) = (mm.getLong(0), (mm.getLong(1) - mm.getLong(0)) / 6 + 1)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir)): Unit
-      val now = System.currentTimeMillis()
-      // ONE pass: partitionBy(bucket) writes all 6 range files in a single
-      // scan (the per-bucket filter loop this replaces re-read the source
-      // 6 times); partition values live in directory names, so the moved
-      // files keep the plain event schema the stream reader expects
-      val tmp = s"$dir-staging"
-      e.withColumn("bucket",
-          ((unix_micros(col("ts")) - lit(minUs)) / lit(span)).cast("long"))
-        .repartition(1)
-        .write.partitionBy("bucket").mode("overwrite").parquet(tmp)
-      for (b <- 0 until 6) {
-        val bucketDir = new java.io.File(tmp, s"bucket=$b")
-        val part = Option(bucketDir.listFiles())
-          .flatMap(_.find(_.getName.endsWith(".parquet")))
-        part.foreach { p => // an empty range writes no dir; skip it
-          val target = new java.io.File(dir, f"part-$b%02d.parquet")
-          java.nio.file.Files.move(p.toPath, target.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-          target.setLastModified(now + b * 60000L): Unit
-        }
-      }
-      graft.engine.Fs.deleteRecursively(new java.io.File(tmp))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(dir, "_STAGED"), Array.emptyByteArray): Unit
-    }
-    dir
-  }
-
-  /** Streaming day-window distinct in UPDATE mode with watermark eviction
-    * EXECUTED (r10 verdict #5; [[EventsPipeline
-    * .streamingWindowedDistinctUpdate]]): the [[stagedEventsByTime]] feed
-    * replays as 6 time-ordered micro-batches, the watermark advances
-    * between them, closed windows are evicted from state, and every
-    * emission lands in the idempotent window_start-keyed upsert sink. The
-    * row emits the final upserted per-window state — n_events is exact
-    * content (the strongest check), approx_users rides the same ±15%
-    * bound verdict as [[qStreamHll]] — plus `evicted_ok`: the final
-    * progress's state-row count is at most a THIRD of the window count
-    * (measured ~6 of 30: only the last ~5 days stay in state). The
-    * complete-mode variant necessarily retains all 30 windows, so the
-    * floor separates the two modes and fails if eviction regresses.
-    */
-  private def qStreamEvict(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val staged = stagedEventsByTime(s, d)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val (sink, stateRows) =
-      try {
-        val (m, q) = EventsPipeline.streamingWindowedDistinctUpdate(s, staged)
-        try {
-          q.processAllAvailable()
-          (m, q.lastProgress.stateOperators.head.numRowsTotal)
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-    import scala.jdk.CollectionConverters._
-    val rows = sink.asScala.toSeq.map { case (ws, (au, ne)) => (ws, au, ne) }
-    val evicted = stateRows * 3 <= rows.size
-    val exact = Tables.events(s, d)
-      .select((floor(unix_micros(col("ts")) / 86400000000L) * 86400L)
-        .as("window_start"), col("user_id"))
-      .distinct()
-      .groupBy("window_start").agg(count(lit(1)).as("exact_users"))
-    rows.toDF("window_start", "approx_users", "n_events")
-      .join(exact, "window_start")
-      .select(col("window_start"), col("exact_users"), col("n_events"),
-        (abs(col("approx_users") - col("exact_users"))
-          <= col("exact_users") * 0.15).as("hll_ok"),
-        lit(evicted).as("evicted_ok"))
-      .orderBy("window_start")
-  }
-
-  /** TPC-H Q6, the forecast-revenue-change query — the OTHER benchmark
-    * signature next to [[qTpchQ1]]: a pure filter-aggregate whose entire
-    * cost is the scan, so it measures pushdown + vectorized decode and
-    * nothing else. All three predicates reach the parquet reader
-    * (`PushedFilters`), the aggregate is one partial/final sum, and no
-    * shuffle carries more than a single running double per partition.
-    */
-  private def qTpchQ6(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .filter(
-        col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-          col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
-          col("l_quantity") < 24)
-      .agg(
-        round(sum(col("l_extendedprice") * col("l_discount")), 2)
-          .as("revenue"),
-        count(lit(1)).as("n_rows"))
-
-  // The TPC-H join suite, adapted to this corpus's reduced schemas (no
-  // partsupp table, no l_shipmode/commitdate, single-word p_type, no
-  // o_shippriority): Q3/Q4/Q5/Q7/Q8/Q10/Q13/Q14/Q15/Q17/Q18/Q19 beside
-  // Q1/Q6's scans — the canonical multi-join benchmark shapes an OLAP
-  // engine is judged on. (Q2/Q9/Q11/Q16/Q20 are fixture-blocked: the
-  // test corpus ships no partsupp table; Q12 needs ship mode and Q22 the
-  // phone column, both absent. Q21's commit/receipt lateness is adapted
-  // as qTpchQ21 via the same ship-after-order test Q4 uses.)
-  // Plan discipline shared by all five: filters sit ON the scans (pushed
-  // to parquet), tiny dims (region, nation) are explicit broadcasts,
-  // SF-scaling tables (customer, orders, supplier, part) join by hash on
-  // their PK-FK keys and are left to AQE to broadcast when a filter makes
-  // a side small — at 100 TB those sides are cluster-scale and the
-  // shuffle join on the key IS the plan. Every top-k is orderBy.limit
-  // (TakeOrderedAndProject), ordered on the revenue with key tiebreaks.
-  // Exactness discipline: price and discount are 2-decimal values, so
-  // per-line revenue is accumulated as the EXACT integer
-  // round(price·100)·(100 − round(disc·100)) in 10⁻⁴ currency units; the
-  // integer sum is bit-identical everywhere and divides back to money
-  // ONCE per group with no decimal rounding at all — a float sum rounds
-  // differently by add order, and even an exact sum hits the
-  // round-semantics split (Spark rounds the shortest decimal string,
-  // DuckDB the binary value: an exact 307843.595 went .60 vs .59), so
-  // the row's money value is the raw units/1e4 quotient, identical in
-  // both engines because both divide the same long by the same constant.
-
-  /** Per-line revenue `l_extendedprice·(1−l_discount)` in exact 1e-4
-    * currency units (long). Safe to 2^53 ≈ 9e15 units per sum.
-    */
-  private[graft] def revUnits: org.apache.spark.sql.Column =
-    round(col("l_extendedprice") * 100).cast("long") *
-      (lit(100L) - round(col("l_discount") * 100).cast("long"))
-
-  /** TPC-H Q3 (shipping priority): unshipped BUILDING-segment orders by
-    * revenue. Output drops o_shippriority (absent here).
-    */
-  private def qTpchQ3(s: SparkSession, d: String): DataFrame = {
-    val cust = Tables.customer(s, d)
-      .filter(col("c_mktsegment") === "BUILDING").select("c_custkey")
-    val ord = Tables.orders(s, d)
-      .filter(col("o_orderdate") < lit("1998-07-01").cast("timestamp"))
-      .select("o_orderkey", "o_custkey", "o_orderdate")
-    Tables.lineitem(s, d)
-      .filter(col("l_shipdate") > lit("1998-07-01").cast("timestamp"))
-      .select(col("l_orderkey"), revUnits.as("rev"))
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(cust, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("l_orderkey"), col("o_orderdate"))
-      .agg((sum(col("rev")) / 10000.0).as("revenue"))
-      .orderBy(desc("revenue"), col("o_orderdate"), col("l_orderkey"))
-      .limit(10)
-      .select(col("l_orderkey"), col("revenue"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_orderdate"))
-  }
-
-  /** TPC-H Q5 (local supplier volume): 1996 revenue per ASIA nation where
-    * the supplier and customer share the nation. The nation⋈region
-    * reduction broadcasts (≤25 rows); the supplier join carries BOTH the
-    * s_suppkey equi-key and the s_nationkey=c_nationkey locality condition
-    * in one hash join.
-    */
-  private def qTpchQ5(s: SparkSession, d: String): DataFrame = {
-    val asiaN = Tables.nation(s, d)
-      .join(broadcast(Tables.region(s, d).filter(col("r_name") === "ASIA")),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("n_nationkey"), col("n_name"))
-    val ord = Tables.orders(s, d)
-      .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-      .select("o_orderkey", "o_custkey")
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_suppkey"), revUnits.as("rev"))
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, d).select("c_custkey", "c_nationkey"),
-        col("o_custkey") === col("c_custkey"))
-      .join(Tables.supplier(s, d).select("s_suppkey", "s_nationkey"),
-        col("l_suppkey") === col("s_suppkey") &&
-          col("s_nationkey") === col("c_nationkey"))
-      .join(broadcast(asiaN), col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name"))
-      .agg((sum(col("rev")) / 10000.0).as("revenue"))
-      .orderBy(desc("revenue"), col("n_name"))
-  }
-
-  /** TPC-H Q4 (order-priority checking), adapted: orders in a quarter
-    * with at least one line item shipped AFTER the order date (the
-    * reduced schema has no commit/receipt dates; ship-after-order is the
-    * analogous lateness EXISTS), counted by priority. The correlated
-    * EXISTS plans as a LEFT SEMI join whose non-equi lateness condition
-    * rides the equi-join on the order key — one shuffle, no subquery
-    * re-execution per row.
-    */
-  private def qTpchQ4(s: SparkSession, d: String): DataFrame = {
-    val ord = Tables.orders(s, d)
-      .filter(col("o_orderdate") >= lit("1996-07-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1996-10-01").cast("timestamp"))
-      .select("o_orderkey", "o_orderdate", "o_orderpriority")
-    ord.join(
-        Tables.lineitem(s, d).select("l_orderkey", "l_shipdate"),
-        col("l_orderkey") === col("o_orderkey") &&
-          col("l_shipdate") > col("o_orderdate"),
-        "left_semi")
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("order_count"))
-      .orderBy("o_orderpriority")
-  }
-
-  /** TPC-H Q7 (volume shipping): 1996-1997 revenue between a nation PAIR,
-    * supplier nation × customer nation × year — the two-role dimension
-    * join (nation joined twice under different roles). Both nation sides
-    * are pre-filtered to the pair and broadcast, so the supplier and
-    * customer joins SEMI-reduce their fact sides before the asymmetric
-    * pair filter runs.
-    */
-  private def qTpchQ7(s: SparkSession, d: String): DataFrame = {
-    // NATION_18/19: a supplier-populated pair at every test SF (sf0.001
-    // carries only 10 suppliers across 25 nations, so most pairs are empty
-    // there)
-    val pair = Seq("NATION_18", "NATION_19")
-    val n1 = Tables.nation(s, d).filter(col("n_name").isin(pair: _*))
-      .select(col("n_nationkey").as("sk"), col("n_name").as("supp_nation"))
-    val n2 = Tables.nation(s, d).filter(col("n_name").isin(pair: _*))
-      .select(col("n_nationkey").as("ck"), col("n_name").as("cust_nation"))
-    Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-      .select(col("l_orderkey"), col("l_suppkey"),
-        year(col("l_shipdate")).cast("long").as("l_year"), revUnits.as("rev"))
-      .join(Tables.supplier(s, d).select("s_suppkey", "s_nationkey"),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(n1), col("s_nationkey") === col("sk"))
-      .join(Tables.orders(s, d).select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, d).select("c_custkey", "c_nationkey"),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n2), col("c_nationkey") === col("ck"))
-      .filter(col("supp_nation") =!= col("cust_nation"))
-      .groupBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-      .agg((sum(col("rev")) / 10000.0).as("revenue"))
-      .orderBy("supp_nation", "cust_nation", "l_year")
-  }
-
-  /** TPC-H Q8 (national market share): the share of ASIA customers'
-    * PROMO-part revenue supplied from NATION_19, per order year — the
-    * conditional-share aggregate over the full dimensional join. The
-    * share divides two exact integer unit sums, so it is engine-identical
-    * with no rounding.
-    */
-  private def qTpchQ8(s: SparkSession, d: String): DataFrame = {
-    val asiaN = Tables.nation(s, d)
-      .join(broadcast(Tables.region(s, d).filter(col("r_name") === "ASIA")),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("n_nationkey").as("ck"))
-    val suppN = Tables.nation(s, d)
-      .select(col("n_nationkey").as("sk"), col("n_name").as("supp_nation"))
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-        revUnits.as("rev"))
-      .join(Tables.part(s, d).filter(col("p_type") === "PROMO")
-          .select("p_partkey"),
-        col("l_partkey") === col("p_partkey"))
-      .join(Tables.orders(s, d)
-          .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-            col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-          .select(col("o_orderkey"), col("o_custkey"),
-            year(col("o_orderdate")).cast("long").as("o_year")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, d).select("c_custkey", "c_nationkey"),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(asiaN), col("c_nationkey") === col("ck"))
-      .join(Tables.supplier(s, d).select("s_suppkey", "s_nationkey"),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(suppN), col("s_nationkey") === col("sk"))
-      .groupBy(col("o_year"))
-      .agg(
-        (sum(when(col("supp_nation") === "NATION_19", col("rev")).otherwise(0L))
-          .cast("double") / sum(col("rev"))).as("mkt_share"),
-        count(lit(1)).as("n_rows"))
-      .orderBy("o_year")
-  }
-
-  /** TPC-H Q13 (customer distribution): the histogram of per-customer
-    * order counts INCLUDING zero-order customers — the left-outer-join +
-    * two-level-aggregate shape (count lands on the compact count domain;
-    * customers with no orders survive the outer join as count 0).
-    */
-  private def qTpchQ13(s: SparkSession, d: String): DataFrame =
-    Tables.customer(s, d).select(col("c_custkey"))
-      .join(Tables.orders(s, d).select("o_orderkey", "o_custkey"),
-        col("c_custkey") === col("o_custkey"), "left_outer")
-      .groupBy(col("c_custkey"))
-      .agg(count(col("o_orderkey")).as("c_count"))
-      .groupBy(col("c_count"))
-      .agg(count(lit(1)).as("custdist"))
-      .orderBy(desc("custdist"), desc("c_count"))
-
-  /** TPC-H Q15 (top supplier): the supplier(s) with the maximum revenue
-    * over a quarter — the view + scalar-max-subquery shape: the revenue
-    * "view" materializes as one per-supplier aggregate, its max attaches
-    * back as a 1-row broadcast, and the winner filter is an exact
-    * integer-unit equality (no float max ties to break).
-    */
-  private def qTpchQ15(s: SparkSession, d: String): DataFrame = {
-    val rev = Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
-      .select(col("l_suppkey"), revUnits.as("rev"))
-      .groupBy(col("l_suppkey"))
-      .agg(sum(col("rev")).as("total_rev"))
-    val maxRev = rev.agg(max(col("total_rev")).as("max_rev"))
-    rev.join(broadcast(maxRev), col("total_rev") === col("max_rev"))
-      .join(Tables.supplier(s, d).select("s_suppkey", "s_name"),
-        col("l_suppkey") === col("s_suppkey"))
-      .select(col("s_suppkey"), col("s_name"),
-        (col("total_rev") / 10000.0).as("total_revenue"))
-      .orderBy("s_suppkey")
-  }
-
-  /** Declarative data-quality report ([[DataQuality.evaluate]]): five
-    * named rules — domain membership, format regex, range, positivity,
-    * and cross-table referential integrity (the FK flag pre-joined so
-    * Catalyst plans ONE broadcast join + ONE aggregate pass for the whole
-    * rule set) — compiled into per-rule conditional counters in a single
-    * scan. Two rules genuinely fail on this corpus (late orders past the
-    * freshness bound, totals under the floor), so the report exercises
-    * both outcomes. Exact integer counts; rule count never adds scans.
-    */
-  private def qDqRules(s: SparkSession, d: String): DataFrame = {
-    val custKeys = Tables.customer(s, d).select(col("c_custkey"))
-    val base = Tables.orders(s, d)
-      .join(broadcast(custKeys), col("o_custkey") === col("c_custkey"),
-        "left")
-      .withColumn("fk_ok", col("c_custkey").isNotNull)
-    DataQuality.evaluate(base, Seq(
-      "status_domain" -> col("o_orderstatus").isin("O", "F", "P"),
-      "priority_format" -> col("o_orderpriority").rlike("^[1-5]-"),
-      "date_fresh" ->
-        (col("o_orderdate") < lit("2000-01-01").cast("timestamp")),
-      "total_above_floor" -> (col("o_totalprice") >= 5000.0),
-      "fk_customer" -> col("fk_ok")))
-  }
-
-  /** Incremental aggregate MAINTENANCE: the daily revenue rollup kept as
-    * two PARTIAL aggregates — a write-once staged base partial (even
-    * order keys, standing artifact) and a freshly-computed delta partial
-    * (odd keys) — merged by re-aggregating the union of partials
-    * (Σ of Σ, Σ of counts: the associative-merge property that makes
-    * partial aggregates composable). The deliberately OVERLAPPING day
-    * keys across the two partials make this a true merge, not a
-    * concatenation. At 100 TB this is the view-maintenance shape: the
-    * standing partial is never rescanned from raw data — only the delta
-    * is, and the merge runs over two compact day-keyed aggregates. The
-    * oracle recomputes the rollup from scratch, pinning merge == rebuild.
-    */
-  private def incrementalPartial(
-      s: SparkSession, d: String, parity: Int): DataFrame = Tables.orders(s, d)
-    .filter(pmod(col("o_orderkey"), lit(2)) === parity)
-    .groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
-    .agg(
-      sum(round(col("o_totalprice") * 100).cast("long")).as("sum_cents"),
-      count(lit(1)).as("n_orders"))
-
-  /** [[qIncrementalAgg]]'s base-partial staging plan, exposed for the
-    * PlanAuditSpec pin (the [[partsuppStaging]] pattern): the corpus-wide
-    * partial aggregate must reduce on a parallel exchange; only the
-    * KB-scale day-keyed artifact write serializes — via a post-agg
-    * `repartition(1)`, never `coalesce(1)` (which propagates into the
-    * reduce stage and runs the aggregation on one task).
-    */
-  private[graft] def incrementalAggBase(s: SparkSession, d: String): DataFrame =
-    incrementalPartial(s, d, 0).repartition(1)
-
-  private def qIncrementalAgg(s: SparkSession, d: String): DataFrame = {
-    val baseDir = s"/tmp/graft_incagg/${dirTag(d)}/base"
-    stagedOnce(baseDir) {
-      incrementalAggBase(s, d).write.mode("overwrite").parquet(baseDir)
-    }
-    s.read.parquet(baseDir)
-      .unionAll(incrementalPartial(s, d, 1))
-      .groupBy("day")
-      .agg(sum(col("sum_cents")).as("sum_cents"),
-        sum(col("n_orders")).as("n_orders"))
-      .orderBy("day")
-  }
-
-  /** DERIVED partsupp — the one TPC-H table this corpus does not ship.
-    * Reconstructed deterministically from the OBSERVED part-supplier
-    * relationships (distinct (l_partkey, l_suppkey) pairs — so every
-    * lineitem row joins a partsupp row, the property Q9/Q20 need) with
-    * hash-derived availqty and integer-cent supplycost; the oracle derives
-    * the IDENTICAL table in SQL, so the five partsupp TPC-H queries are
-    * fully differential despite the fixture gap (keys are non-negative, so
-    * pmod and SQL's % agree). Write-once staged per directory (the
-    * [[stagedDupPairs]] discipline): the distinct pair scan runs once per
-    * corpus and the five consumers read the KB-scale artifact. At 100 TB
-    * the distinct is one map-side-combinable shuffle on the pair key —
-    * kept parallel by `repartition(1)` AFTER the distinct (NOT coalesce,
-    * which would propagate to the reduce side and run the corpus-wide
-    * dedup on one task); only the tiny deduped artifact write serializes.
-    */
-  private def partsuppDerived(s: SparkSession, d: String): DataFrame = {
-    val dir = s"/tmp/graft_partsupp/${dirTag(d)}/ps"
-    stagedOnce(dir) {
-      partsuppStaging(s, d).write.mode("overwrite").parquet(dir)
-    }
-    s.read.parquet(dir)
-  }
-
-  /** The partsupp staging plan, exposed for the PlanAuditSpec pin that the
-    * corpus-wide (partkey, suppkey) distinct keeps a multi-partition
-    * reduce side (hashpartitioning exchange) and only the post-dedup
-    * artifact write serializes (round-robin repartition(1), NOT a
-    * coalesce, which would collapse the distinct to one task).
-    */
-  private[graft] def partsuppStaging(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .select(col("l_partkey").as("ps_partkey"),
-        col("l_suppkey").as("ps_suppkey"))
-      .distinct()
-      .select(col("ps_partkey"), col("ps_suppkey"),
-        (lit(1L) + pmod(col("ps_partkey") * 37 + col("ps_suppkey") * 61,
-          lit(9999L))).as("ps_availqty"),
-        (lit(100L) + pmod(col("ps_partkey") * 31 + col("ps_suppkey") * 17,
-          lit(99900L))).as("ps_supplycost_cents"))
-      .repartition(1)
-
-  /** TPC-H Q2 (minimum-cost supplier) on [[partsuppDerived]]: for each
-    * STANDARD size-15 part, the cheapest EUROPE-region supplier. The
-    * correlated min-cost subquery decorrelates into a per-part struct-MIN
-    * (cost, suppkey) — the tie rule is part of the aggregate, so the
-    * pick is deterministic in any engine. Output drops the columns this
-    * corpus does not carry (address/phone/comment).
-    */
-  private def qTpchQ2(s: SparkSession, d: String): DataFrame = {
-    val parts = Tables.part(s, d)
-      .filter(col("p_size") === 15 && col("p_type") === "STANDARD")
-      .select("p_partkey")
-    val euroSup = Tables.supplier(s, d)
-      .join(Tables.nation(s, d),
-        col("s_nationkey") === col("n_nationkey"))
-      .join(Tables.region(s, d).filter(col("r_name") === "EUROPE"),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("n_name"))
-    val cand = partsuppDerived(s, d)
-      .join(parts, col("ps_partkey") === col("p_partkey"))
-      .join(broadcast(euroSup), col("ps_suppkey") === col("s_suppkey"))
-    val best = cand.groupBy(col("ps_partkey").as("bp"))
-      .agg(min(struct(col("ps_supplycost_cents"), col("ps_suppkey")))
-        .as("b"))
-    cand
-      .join(best, col("ps_partkey") === col("bp") &&
-        struct(col("ps_supplycost_cents"), col("ps_suppkey")) === col("b"))
-      .select(col("s_acctbal"), col("s_name"), col("n_name"),
-        col("ps_partkey").as("p_partkey"), col("ps_supplycost_cents"))
-      .orderBy(col("s_acctbal").desc, col("n_name"), col("s_name"),
-        col("p_partkey"))
-      .limit(100)
-  }
-
-  /** TPC-H Q9 (product-type profit) on [[partsuppDerived]]: profit by
-    * supplier nation × order year over 'red' parts, accumulated entirely
-    * in exact 1e-4 currency units (revUnits minus cost·qty scaled to the
-    * same unit) — bigint-exact at any corpus size.
-    */
-  private def qTpchQ9(s: SparkSession, d: String): DataFrame = {
-    val redParts = Tables.part(s, d)
-      .filter(col("p_name").like("%red%")).select("p_partkey")
-    val supNation = Tables.supplier(s, d)
-      .join(Tables.nation(s, d), col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("n_name"))
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-        revUnits.as("rev"),
-        round(col("l_quantity")).cast("long").as("qty"))
-      .join(redParts, col("l_partkey") === col("p_partkey"))
-      .join(partsuppDerived(s, d),
-        col("l_partkey") === col("ps_partkey") &&
-          col("l_suppkey") === col("ps_suppkey"))
-      .join(broadcast(supNation), col("l_suppkey") === col("s_suppkey"))
-      .join(Tables.orders(s, d).select(col("o_orderkey"),
-          year(col("o_orderdate")).cast("long").as("o_year")),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("n_name").as("nation"), col("o_year"))
-      .agg(sum(col("rev") -
-        col("ps_supplycost_cents") * 100L * col("qty")).as("profit_units"))
-      .orderBy(col("nation"), col("o_year").desc)
-  }
-
-  /** TPC-H Q11 (important stock) on [[partsuppDerived]]: per-part stock
-    * value held by EUROPE-region suppliers, keeping parts whose value
-    * exceeds TWICE the mean part value — the reference scales its
-    * fraction by 1/SF precisely so the cut tracks the part count; tying
-    * it to the count does the same at any scale, and the comparison is
-    * integer-exact (value·n_parts > 2·total), never a double threshold.
-    * The 1-row total attaches as a broadcast (allowlisted q_bm25 shape).
-    */
-  private def qTpchQ11(s: SparkSession, d: String): DataFrame = {
-    val euroSup = Tables.supplier(s, d)
-      .join(Tables.nation(s, d), col("s_nationkey") === col("n_nationkey"))
-      .join(Tables.region(s, d).filter(col("r_name") === "EUROPE"),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("s_suppkey"))
-    val value = partsuppDerived(s, d)
-      .join(broadcast(euroSup), col("ps_suppkey") === col("s_suppkey"))
-      .groupBy(col("ps_partkey"))
-      .agg(sum(col("ps_supplycost_cents") * col("ps_availqty"))
-        .as("value_cents"))
-    val total = value.agg(sum(col("value_cents")).as("total_cents"),
-      count(lit(1)).as("n_parts"))
-    value.crossJoin(broadcast(total))
-      .filter(col("value_cents") * col("n_parts") > lit(2L) * col("total_cents"))
-      .select(col("ps_partkey"), col("value_cents"))
-      .orderBy(col("value_cents").desc, col("ps_partkey"))
-  }
-
-  /** TPC-H Q16 (parts/supplier relationship) on [[partsuppDerived]]:
-    * supplier counts per (brand, type, size) over a brand/type/size
-    * screen. The reference's complaint-comment supplier exclusion is
-    * adapted to the deterministic negative-balance rule (this corpus
-    * ships no s_comment) — stated, not silent.
-    */
-  private def qTpchQ16(s: SparkSession, d: String): DataFrame = {
-    val screened = Tables.part(s, d)
-      .filter(col("p_brand") =!= "Brand#5" && col("p_type") =!= "PROMO" &&
-        col("p_size").isin(1, 4, 9, 14, 23, 36, 45, 49))
-      .select("p_partkey", "p_brand", "p_type", "p_size")
-    val excluded = Tables.supplier(s, d)
-      .filter(col("s_acctbal") < 0).select(col("s_suppkey"))
-    partsuppDerived(s, d)
-      .join(screened, col("ps_partkey") === col("p_partkey"))
-      .join(broadcast(excluded), col("ps_suppkey") === col("s_suppkey"),
-        "left_anti")
-      .groupBy(col("p_brand"), col("p_type"),
-        col("p_size").cast("long").as("p_size"))
-      .agg(countDistinct(col("ps_suppkey")).as("supplier_cnt"))
-      .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
-        col("p_size"))
-  }
-
-  /** TPC-H Q20 (potential excess stock) on [[partsuppDerived]]:
-    * suppliers holding more than half a year's shipped quantity of some
-    * 'red' part — `2·availqty > Σqty(1996)` as an exact integer
-    * comparison; pairs with no 1996 shipments drop via the inner join,
-    * matching the reference's NULL-false subquery comparison.
-    */
-  private def qTpchQ20(s: SparkSession, d: String): DataFrame = {
-    val redParts = Tables.part(s, d)
-      .filter(col("p_name").like("%red%")).select("p_partkey")
-    val qty96 = Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
-      .groupBy(col("l_partkey"), col("l_suppkey"))
-      .agg(sum(round(col("l_quantity")).cast("long")).as("qty"))
-    partsuppDerived(s, d)
-      .join(redParts, col("ps_partkey") === col("p_partkey"))
-      .join(qty96, col("ps_partkey") === col("l_partkey") &&
-        col("ps_suppkey") === col("l_suppkey"))
-      .filter(col("ps_availqty") * 2L > col("qty"))
-      .select(col("ps_suppkey")).distinct()
-      .join(Tables.supplier(s, d), col("ps_suppkey") === col("s_suppkey"))
-      .select(col("s_suppkey"), col("s_name"))
-      .orderBy("s_suppkey")
-  }
-
-  /** TPC-H Q17 (small-quantity-order revenue): Brand#1 lines whose
-    * quantity is under half their PART's average quantity — the
-    * correlated-aggregate-subquery shape, decorrelated into a per-part
-    * average joined back on the part key (two lineitem scans, one
-    * partkey shuffle each; the quantity average is exact — whole-number
-    * doubles summed then divided identically in both engines).
-    */
-  private def qTpchQ17(s: SparkSession, d: String): DataFrame = {
-    val avgQ = Tables.lineitem(s, d)
-      .groupBy(col("l_partkey").as("ap"))
-      .agg(avg(col("l_quantity")).as("aq"))
-    Tables.lineitem(s, d)
-      .select(col("l_partkey"), col("l_quantity"), revUnits.as("rev"))
-      .join(Tables.part(s, d).filter(col("p_brand") === "Brand#1")
-          .select("p_partkey"),
-        col("l_partkey") === col("p_partkey"))
-      .join(avgQ, col("l_partkey") === col("ap"))
-      .filter(col("l_quantity") < lit(0.5) * col("aq"))
-      .agg(
-        (sum(col("rev")) / 10000.0).as("revenue"),
-        count(lit(1)).as("n_rows"))
-  }
-
-  /** TPC-H Q10 (returned-item reporting): top-20 customers by revenue
-    * lost to returns in 1996-Q1. Output reduced to the columns this
-    * corpus carries (no address/phone/comment).
-    */
-  private def qTpchQ10(s: SparkSession, d: String): DataFrame = {
-    val ord = Tables.orders(s, d)
-      .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
-      .select("o_orderkey", "o_custkey")
-    Tables.lineitem(s, d)
-      .filter(col("l_returnflag") === "R")
-      .select(col("l_orderkey"), revUnits.as("rev"))
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, d)
-          .select("c_custkey", "c_name", "c_acctbal", "c_nationkey"),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, d).select("n_nationkey", "n_name")),
-        col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-      .agg((sum(col("rev")) / 10000.0).as("revenue"))
-      .orderBy(desc("revenue"), col("c_custkey"))
-      .limit(20)
-      .select(col("c_custkey"), col("c_name"), col("revenue"),
-        col("c_acctbal"), col("n_name"))
-  }
-
-  /** TPC-H Q14 (promotion effect): the share of September-1996 revenue
-    * from PROMO parts — filter-join-aggregate to ONE row. p_type here is
-    * a single word, so the predicate is equality, not LIKE 'PROMO%'.
-    */
-  private def qTpchQ14(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit("1996-09-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1996-10-01").cast("timestamp"))
-      .select(col("l_partkey"), revUnits.as("rev"))
-      .join(Tables.part(s, d).select("p_partkey", "p_type"),
-        col("l_partkey") === col("p_partkey"))
-      .agg(
-        (lit(100.0) *
-          sum(when(col("p_type") === "PROMO", col("rev")).otherwise(0L)) /
-          sum(col("rev"))).as("promo_revenue_pct"),
-        count(lit(1)).as("n_rows"))
-
-  /** TPC-H Q19 (discounted revenue, disjunctive predicates): three
-    * brand×quantity-band arms OR-ed together — the shape that exercises
-    * predicate pushdown under disjunction (the l_quantity bounds are
-    * per-arm, so only the DOMAIN hull `quantity between 1 and 35` can
-    * prune the scan; the full disjunction evaluates post-join). One
-    * PK-FK join against part; revenue in exact integer units.
-    */
-  private def qTpchQ19(s: SparkSession, d: String): DataFrame = {
-    val arms =
-      (col("p_brand") === "Brand#1" && col("l_quantity").between(1, 15)) ||
-        (col("p_brand") === "Brand#2" && col("l_quantity").between(10, 25)) ||
-        (col("p_brand") === "Brand#3" && col("l_quantity").between(20, 35))
-    Tables.lineitem(s, d)
-      // domain hull of the three arms — prunable at the scan even though
-      // the disjunction itself is not
-      .filter(col("l_quantity") >= 1 && col("l_quantity") <= 35)
-      .select(col("l_partkey"), col("l_quantity"), revUnits.as("rev"))
-      .join(Tables.part(s, d).select("p_partkey", "p_brand"),
-        col("l_partkey") === col("p_partkey"))
-      .filter(arms)
-      .agg(
-        (sum(col("rev")) / 10000.0).as("revenue"),
-        count(lit(1)).as("n_rows"))
-  }
-
-  /** Embedding-column quality gate: the audit an ANN/training ingest runs
-    * before touching vectors — wrong-dimension rows, non-finite
-    * coordinates, zero-norm vectors (all of which poison cosine math and
-    * k-means), plus the norm envelope. One narrow scan, one row out; at
-    * 100 TB this is a map-side-combined aggregate over the vector column
-    * only. The expected result is all-zero counts — the row's value IS
-    * the standing zero, and a poisoned drop hash-mismatches the oracle.
-    */
-  private def qVectorAudit(s: SparkSession, d: String): DataFrame = {
-    val v = toDoubleArray(col("embedding"))
-    val nonFinite = size(filter(v, x => x.isNaN || x === Double.PositiveInfinity ||
-      x === Double.NegativeInfinity))
-    Tables.embeddings(s, d)
-      .select(
-        size(col("embedding")).as("dim"),
-        nonFinite.as("n_bad"),
-        NativeExpressions.vec_dot(v, v).as("sq"))
-      .agg(
-        count(lit(1)).as("n_vectors"),
-        sum(when(col("dim") =!= 64, 1L).otherwise(0L)).as("n_wrong_dim"),
-        sum(when(col("n_bad") > 0, 1L).otherwise(0L)).as("n_nonfinite"),
-        sum(when(col("sq") === 0.0, 1L).otherwise(0L)).as("n_zero_norm"),
-        round(sqrt(min(col("sq"))), 6).as("min_norm"),
-        round(sqrt(max(col("sq"))), 6).as("max_norm"))
-  }
-
-  /** Deterministic negative sampling for a (customer, part) interaction
-    * model — the recsys/contrastive data-prep op: per customer, 3
-    * hash-generated candidate parts (portable salted md5 onto the valid
-    * part-id range), then the POSITIVES ANTI-JOIN — a generated candidate
-    * the customer actually bought is dropped, which is the step naive
-    * samplers skip and the reason this is a distributed op at all (the
-    * positive set is corpus-sized; candidates join against it on the
-    * compact (cust, part) key). Output is the per-customer negative count
-    * plus the collision count with positives, both exact.
-    */
-  private def qNegativeSample(s: SparkSession, d: String): DataFrame = {
-    val pos = Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .join(Tables.orders(s, d).select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("custkey"), col("l_partkey").as("partkey"))
-      .distinct()
-    val maxPk = Tables.part(s, d).agg(max(col("p_partkey")).as("max_pk"))
-    val cand = Tables.customer(s, d).select(col("c_custkey").as("custkey"))
-      .crossJoin(broadcast(maxPk))
-      .select(col("custkey"), explode(array((1 to 3).map(lit): _*)).as("i"),
-        col("max_pk"))
-      .select(col("custkey"),
-        (pmod(conv(substring(md5(concat(lit("neg|"), col("custkey"),
-          lit("|"), col("i"))), 1, 12), 16, 10).cast("long"), col("max_pk"))
-          + 1).as("partkey"))
-    cand
-      .join(pos.withColumn("is_pos", lit(1L)), Seq("custkey", "partkey"), "left")
-      .groupBy("custkey")
-      .agg(
-        sum(when(col("is_pos").isNull, 1L).otherwise(0L)).as("n_negatives"),
-        sum(when(col("is_pos").isNotNull, 1L).otherwise(0L)).as("n_collisions"))
-      .orderBy("custkey")
-  }
-
-  /** Dedup-impact report: per source, how many documents and characters
-    * exact dedup (min-doc_id survivorship over the md5 fingerprint, the
-    * [[graft.ext.Dedup.exact]] rule) would remove — the "what does dedup
-    * buy us" table in every corpus release note, and the number that
-    * justifies the pipeline stage. Compact shapes only: the fingerprint
-    * group-by shuffles (fp, id) pairs, the survivor set anti-joins back
-    * on doc_id, and both rollups land on the source domain.
-    */
-  private def qDedupSavings(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("source"), col("n_chars"), col("text"))
-    val survivors = docs.groupBy(md5(col("text")).as("fp"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id")
-    val dropped = docs.join(survivors, Seq("doc_id"), "left_anti")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_dupes"), sum(col("n_chars")).as("dup_chars"))
-    docs.groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
-      .join(dropped, Seq("source"), "left")
-      .select(col("source"), col("n_docs"),
-        coalesce(col("n_dupes"), lit(0L)).as("n_dupes"),
-        col("total_chars"),
-        coalesce(col("dup_chars"), lit(0L)).as("dup_chars"))
-      .orderBy("source")
-  }
-
-  /** Deterministic per-group sample: 5 documents per source, chosen by
-    * the portable md5 rank (salted "gs|" — the sampling-salt discipline:
-    * unsalted, this sampler would correlate with every other key-hash
-    * sampler it composes with) — the "inspect a few examples from every
-    * source" utility a corpus review runs. The per-key `row_number <= 5`
-    * window is the [[graft.plans.RankLimitRule]] → TopKPerKey bounded-heap
-    * shape: one partitioned shuffle, O(k) state per source, no full
-    * per-group sort at any corpus size.
-    */
-  private def qGroupSample(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("source").orderBy(col("h"), col("doc_id"))
-    Tables.documents(s, d)
-      .select(col("source"), col("doc_id"),
-        md5(concat(lit("gs|"), col("doc_id").cast("string"))).as("h"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("source"), col("doc_id"))
-      .orderBy("source", "doc_id")
-  }
-
-  /** Cross-split near-dup leakage matrix: how many near-dup pairs (the
-    * write-once [[stagedDupPairs]] artifact at threshold 0.5) land with
-    * both members in the same train/val/test split vs straddling two —
-    * the contamination audit run on every split assignment before
-    * training (a test document with a train near-dup inflates eval). The
-    * pair set is read from the staged artifact (no pair recomputation);
-    * split assignment is the portable md5 rule of `q_split_counts`, so
-    * the oracle reproduces the exact matrix. Pairs are normalized to
-    * (least, greatest) split so the matrix is triangular.
-    */
-  private def qSplitLeakage(s: SparkSession, d: String): DataFrame = {
-    val sp = Sampling.assignSplitsPortable(
-        Tables.documents(s, d).select(col("doc_id")), "doc_id",
-        valFraction = 0.1, testFraction = 0.1)
-      .select(col("doc_id"), col("split"))
-    stagedDupPairs(s, d)
-      .join(sp.select(col("doc_id").as("id_a"), col("split").as("sa")), "id_a")
-      .join(sp.select(col("doc_id").as("id_b"), col("split").as("sb")), "id_b")
-      .groupBy(
-        least(col("sa"), col("sb")).as("split_a"),
-        greatest(col("sa"), col("sb")).as("split_b"))
-      .agg(count(lit(1)).as("n_pairs"))
-      .withColumn("is_leak", col("split_a") =!= col("split_b"))
-      .orderBy("split_a", "split_b")
-  }
-
-  /** TPC-H Q18 (large-volume customers): orders whose total quantity
-    * exceeds 300, with their customer — the classic
-    * aggregate-then-join-back shape: the HAVING filter reduces lineitem
-    * to a tiny order set BEFORE any wide join, so the orders/customer
-    * joins probe with the survivors only. Quantities are whole numbers
-    * in doubles, so the >300 cut is exact in both engines; o_totalprice
-    * is stored data, not a float computation.
-    */
-  private def qTpchQ18(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_orderkey"))
-      .agg(sum(col("l_quantity")).as("sum_qty"))
-      .filter(col("sum_qty") > 300.0)
-      .join(Tables.orders(s, d)
-          .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, d).select("c_custkey", "c_name"),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_orderdate"),
-        col("o_totalprice"), col("sum_qty"))
-      .orderBy(desc("o_totalprice"), col("o_orderkey"))
-      .limit(100)
-
-  /** TPC-H Q21 (suppliers who kept orders waiting), adapted to the
-    * reduced schema: the commit/receipt lateness test becomes the Q4
-    * ship-after-order adaptation (`l_shipdate > o_orderdate`; the fixture
-    * has no commit/receipt dates). A supplier "kept an order waiting"
-    * when, in a finished ('F') multi-supplier order, it is the ONLY
-    * supplier with a late line. The classic correlated EXISTS/NOT-EXISTS
-    * pair is DECORRELATED into one per-(order, supplier) lateness
-    * aggregate plus an order-partitioned window: `n_supp > 1` realizes
-    * EXISTS(other supplier), `n_late = 1` realizes NOT EXISTS(other late
-    * supplier) given the probe supplier is itself late. The plan is one
-    * map-side-combinable aggregate, one key-partitioned window on the
-    * already-reduced (order, supplier) rows, one supplier-keyed count,
-    * and a broadcast supplier attach — no subquery re-execution per line.
-    * `numwait` counts DISTINCT waiting orders (the per-order grain makes
-    * the count independent of how many late lines the supplier had in
-    * one order); the DuckDB oracle keeps the literal EXISTS/NOT-EXISTS
-    * formulation, so the decorrelation itself is what the differential
-    * oracle checks (reference discipline: `host/join/join_test.cc:27-38`).
-    */
-  private def qTpchQ21(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ord = Tables.orders(s, d)
-      .filter(col("o_orderstatus") === "F")
-      .select("o_orderkey", "o_orderdate")
-    val perOrderSupp = Tables.lineitem(s, d)
-      .select("l_orderkey", "l_suppkey", "l_shipdate")
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .groupBy("l_orderkey", "l_suppkey")
-      .agg(max(when(col("l_shipdate") > col("o_orderdate"), 1L)
-        .otherwise(0L)).as("late"))
-    val w = Window.partitionBy("l_orderkey")
-    perOrderSupp
-      .withColumn("n_supp", count(lit(1)).over(w))
-      .withColumn("n_late", sum(col("late")).over(w))
-      .filter(col("late") === 1L && col("n_supp") > 1 && col("n_late") === 1L)
-      .groupBy("l_suppkey")
-      .agg(count(lit(1)).as("numwait"))
-      .join(broadcast(Tables.supplier(s, d).select("s_suppkey", "s_name")),
-        col("l_suppkey") === col("s_suppkey"))
-      .select(col("s_name"), col("numwait"))
-      .orderBy(desc("numwait"), col("s_name"))
-      .limit(100)
-  }
-
-  /** TPC-H Q12 (shipping-mode / order-priority split), adapted: the
-    * reduced schema carries no l_shipmode / l_commitdate / l_receiptdate,
-    * so the mode dimension is `l_returnflag` and "late delivery" is the
-    * Q4/Q21 ship-after-order lateness, here > 30 days past the order date
-    * (reference discipline: differential oracle, `host/join/
-    * join_test.cc:27-38`). Per flag, 1996-shipped late lines split into
-    * high-priority (1-URGENT / 2-HIGH) vs low-priority counts — the
-    * canonical conditional two-counter aggregate. ONE equi-shuffle join
-    * carries the priority column onto the lines (AQE broadcasts the
-    * pruned orders side when it fits); the year filter is pushed to the
-    * lineitem scan and both counters are map-side partials, so the only
-    * row movement is the join itself.
-    */
-  private def qTpchQ12(s: SparkSession, d: String): DataFrame = {
-    val high = Seq("1-URGENT", "2-HIGH")
-    Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
-      .select("l_orderkey", "l_returnflag", "l_shipdate")
-      .join(Tables.orders(s, d)
-          .select("o_orderkey", "o_orderdate", "o_orderpriority"),
-        col("l_orderkey") === col("o_orderkey") &&
-          col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 30 DAYS"))
-      .groupBy(col("l_returnflag"))
-      .agg(
-        sum(when(col("o_orderpriority").isin(high: _*), 1L).otherwise(0L))
-          .as("high_line_count"),
-        sum(when(!col("o_orderpriority").isin(high: _*), 1L).otherwise(0L))
-          .as("low_line_count"))
-      .orderBy("l_returnflag")
-  }
-
-  /** TPC-H Q22 (global sales opportunity), adapted: no `c_phone`, so the
-    * country code is `c_nationkey % 10` restricted to the odd codes, and
-    * "customers with no orders" — empty in this fixture, every customer
-    * has ordered — becomes the equivalent DORMANT-customer anti-join (no
-    * order since 2000-01-01). Keeps Q22's whole shape: an uncorrelated
-    * scalar subquery (mean positive balance) gating the probe side, a
-    * NOT-EXISTS anti-join against orders, and the country-code rollup.
-    * Money is exact integer cents end to end with ONE double division at
-    * the end. Scale: the average is a 1-row broadcast attach (no
-    * re-execution per row), the anti-join is an equi-keyed LEFT ANTI on
-    * the customer key (shuffle- or broadcast-hash, never quadratic), and
-    * the date predicate prunes the orders side at the scan.
-    */
-  private def qTpchQ22(s: SparkSession, d: String): DataFrame = {
-    val cust = Tables.customer(s, d)
-      .select(col("c_custkey"),
-        (col("c_nationkey") % 10).cast("long").as("cntrycode"),
-        round(col("c_acctbal") * 100).cast("long").as("bal_u2"))
-      .filter(col("cntrycode").isin(1L, 3L, 5L, 7L, 9L))
-    val avgBal = cust.filter(col("bal_u2") > 0L)
-      .agg((sum(col("bal_u2")).cast("double") / count(lit(1)))
-        .as("__avg_u2"))
-      .withColumn("one", lit(1))
-    val recent = Tables.orders(s, d)
-      .filter(col("o_orderdate") >= lit("2000-01-01").cast("timestamp"))
-      .select("o_custkey")
-    cust
-      .withColumn("one", lit(1))
-      .join(broadcast(avgBal), "one")
-      .filter(col("bal_u2").cast("double") > col("__avg_u2"))
-      .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
-      .groupBy(col("cntrycode"))
-      .agg(
-        count(lit(1)).as("numcust"),
-        (sum(col("bal_u2")).cast("double") / 100.0).as("totacctbal"))
-      .orderBy("cntrycode")
-  }
-
-  /** Zero-seeded EWMA (α = ½) of the daily event-count series — the
-    * smoothing monitor read next to [[qChangepoint]] and [[qTrendTest]].
-    * Computed by the literal recursion eₜ = (eₜ₋₁ + cₜ)·½, folded over the
-    * day series with `aggregate` — the per-day domain is compact by
-    * construction (a decade is ~3,650 rows, KB-scale after the count
-    * aggregate), so one row carries the sorted series through the fold and
-    * explodes back. The previous closed form 2^-(t+1)·Σ cᵢ·2ⁱ was exact
-    * only while cᵢ·2ᵗ stayed under 2⁵³ (~36 days at 1e5 events/day) and
-    * overflowed to Infinity past t≈1023; the recursion is BOUNDED
-    * (eₜ ≤ max c) for arbitrarily long ranges, and both engines evaluate
-    * the identical (prev + c)·0.5 operation order, so values stay
-    * bit-identical with the oracle's recursive CTE. The raw-event shuffle
-    * is still the map-side-combined daily count — only the compact series
-    * funnels through the fold.
-    *
-    * GAP SEMANTICS (deliberate, r10 verdict #7): decay steps are
-    * PER-PRESENT-DAY — the recursion advances once per day that has
-    * events, so a gap day contributes no extra halving. This is the
-    * "observation-indexed" EWMA (smooth over the observed series), the
-    * standard choice when absent days mean "no measurement" rather than
-    * "measured zero"; a calendar-indexed variant would first densify the
-    * day axis with zero counts (or decay by 2^-gap) — a different
-    * monitor, not a bug fix. Both engines implement the same choice, so
-    * the oracle pins it.
-    */
-  private def qEwma(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.events(s, d)
-      .groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("c"))
-    daily
-      .agg(array_sort(collect_list(struct(col("day"), col("c")))).as("series"))
-      .select(aggregate(
-        col("series"),
-        struct(
-          lit(0.0).as("e"),
-          array().cast("array<struct<day:date,c:bigint,ewma:double>>")
-            .as("out")),
-        (acc, x) => {
-          val e = (acc.getField("e") + x.getField("c")) * lit(0.5)
-          struct(
-            e.as("e"),
-            array_append(acc.getField("out"),
-              struct(x.getField("day").as("day"), x.getField("c").as("c"),
-                e.as("ewma"))).as("out"))
-        },
-        acc => acc.getField("out")).as("out"))
-      .select(explode(col("out")).as("r"))
-      .select(
-        date_format(col("r.day"), "yyyy-MM-dd").as("day"),
-        col("r.c").as("c"),
-        round(col("r.ewma"), 6).as("ewma"))
-      .orderBy("day")
-  }
-
-  /** Common-neighbor analysis of the near-dup graph: every document pair
-    * sharing ≥ 1 neighbor, with its support count and whether the pair is
-    * ALREADY an edge. A non-edge here is a link-prediction candidate
-    * ("these two co-match the same documents but never matched directly"
-    * — a threshold chaining templated families); an all-edges result is
-    * the transitivity certificate (near-dup clusters are cliques — what
-    * this corpus shows, consistent with [[qGraphTriangles]]). Standard
-    * shape: symmetrize the oriented edge list, join adjacency to itself
-    * on the SHARED neighbor (the only full-width shuffle, bounded by the
-    * dedup family's degree ceilings upstream), count per pair, flag
-    * membership with a left join.
-    */
-  private def qLinkPrediction(s: SparkSession, d: String): DataFrame = {
-    val e = stagedDupPairs(s, d)
-    val adj = e.select(col("id_a").as("u"), col("id_b").as("v"))
-      .unionAll(e.select(col("id_b").as("u"), col("id_a").as("v")))
-    val cand = adj.as("x").join(adj.as("y"), "u")
-      .filter(col("x.v") < col("y.v"))
-      .groupBy(col("x.v").as("id_a"), col("y.v").as("id_b"))
-      .agg(count(lit(1)).as("n_common"))
-    cand.join(e.withColumn("is_edge", lit(true)), Seq("id_a", "id_b"), "left")
-      .select(col("id_a"), col("id_b"), col("n_common"),
-        coalesce(col("is_edge"), lit(false)).as("is_edge"))
-      .orderBy("id_a", "id_b")
-  }
-
-  /** Two Lloyd iterations of k-means (k=4) over the embedding table — the
-    * clustering pass a corpus pipeline runs for topic balance or
-    * diversity-aware sampling. Classic distributed shape: centroids are
-    * k×dim (KB-scale) and BROADCAST to the assignment join; per-point
-    * work is linear and the two shuffles are compact (N×k partial
-    * distances reduced map-side; (cluster, dim) cells for the update).
-    * Portability discipline: deterministic init (the k lowest vec_ids),
-    * argmin ties broken by cluster id, and the iteration-1 centroids
-    * ROUNDED to 6 decimals so both engines enter iteration 2 with
-    * bit-identical state. Output is the k-row cluster summary.
-    */
-  private def qKmeans(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pts = Tables.embeddings(s, d)
-      .select(col("vec_id"), posexplode(col("embedding")))
-      .select(col("vec_id"), col("pos"), col("col").cast("double").as("x"))
-    val cent0 = pts.filter(col("vec_id") < 4)
-      .select(col("vec_id").cast("int").as("cluster"), col("pos"),
-        col("x").as("c"))
-    def assign(cent: DataFrame): DataFrame = {
-      val w = Window.partitionBy("vec_id").orderBy("dist", "cluster")
-      pts.join(broadcast(cent), "pos")
-        .groupBy("vec_id", "cluster")
-        .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("dist"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("cluster"), col("dist"))
-    }
-    val cent1 = pts
-      .join(assign(cent0).select("vec_id", "cluster"), "vec_id")
-      .groupBy("cluster", "pos")
-      .agg(round(avg(col("x")), 6).as("c"))
-    assign(cent1)
-      .groupBy("cluster")
-      .agg(count(lit(1)).as("n_members"), round(sum(col("dist")), 4).as("inertia"))
-      .orderBy("cluster")
-  }
-
-  /** Sample-ratio-mismatch check on the A/B assignment — the guardrail
-    * every experimentation platform runs before reading a single metric
-    * (a 50/50 split whose arms differ beyond chi-square noise means the
-    * assignment itself is broken). Same portable md5 bucket as
-    * [[qAbAssign]]; the statistic collapses algebraically to
-    * (n_a−n_b)²/(n_a+n_b), so every term is an exact integer until one
-    * final division.
-    */
-  private def qAbSrm(s: SparkSession, d: String): DataFrame = {
-    val bucket = pmod(
-      conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10)
-        .cast("long"),
-      lit(1000000L))
-    Tables.events(s, d)
-      .select(col("user_id"), (bucket < 500000L).as("is_a"))
-      .agg(
-        countDistinct(when(col("is_a"), col("user_id"))).as("n_a"),
-        countDistinct(when(!col("is_a"), col("user_id"))).as("n_b"))
-      .select(
-        col("n_a"), col("n_b"),
-        round(
-          (col("n_a") - col("n_b")) * (col("n_a") - col("n_b")) /
-            (col("n_a") + col("n_b")).cast("double"),
-          6).as("chi2"))
-  }
-
-  /** FORWARD as-of join ([[AsOfJoin.asOfJoinNext]]): each error event
-    * picks the same user's NEXT purchase at-or-after it — the
-    * time-to-recovery probe, the mirror of [[qAsOfJoin]]'s
-    * latest-before direction. Same single-shuffle shape (tag + union +
-    * one descending keyed window, no per-row range probing); the oracle
-    * is the independent MIN-over-inequality-join formulation, so the
-    * window trick is differentially checked, not assumed. Purchases
-    * dedupe to (user, ts) first — the operator's uniqueness contract.
-    * Timestamps stay in exact epoch MICROSECONDS end to end.
-    */
-  private def qAsofForward(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val errors = ev.filter(col("event_type") === "error")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts")).as("err_us"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), unix_micros(col("ts")).as("p_us"))
-      .distinct()
-      .withColumn("next_us", col("p_us"))
-    AsOfJoin.asOfJoinNext(errors, purchases, Seq("user_id"),
-        "err_us", "p_us", Seq("next_us"))
-      .select(col("event_id"), col("user_id"), col("err_us"),
-        col("next_us"), (col("next_us") - col("err_us")).as("wait_us"))
-      .orderBy("event_id")
-  }
-
-  /** Decile lift / gains table — rank users by an activity score, cut
-    * ANSI deciles, and read conversion concentration per decile with
-    * cumulative lift: the standard evaluation for any targeting/quality
-    * score before it gates a pipeline. The ranking rides the DISTRIBUTED
-    * global index ([[PositionalTake.withGlobalIndex]] — range-partitioned
-    * sort, never a single-partition ntile window) with the ANSI bucket
-    * split replayed in closed form from (rank, n) — the [[qRfm]]
-    * discipline at k=10; ties break on user_id so any engine's native
-    * ntile reproduces the cut. Cumulative/total sums then ride the 10-row
-    * decile grid (allowlisted compact-domain window); rates and lift are
-    * mirrored exact-integer divisions.
-    */
-  private def qDecileLift(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val users = Tables.events(s, d)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_ev"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("conv"))
-    val n = users.agg(count(lit(1)).as("n_tot"))
-    val ranked = PositionalTake.withGlobalIndex(
-      users.select(col("user_id"), (-col("n_ev")).as("neg_ev"), col("conv")),
-      Seq("neg_ev", "user_id"), "idx")
-    val wCum = Window.orderBy("decile")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.orderBy("decile")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    ranked.crossJoin(broadcast(n))
-      .select(col("conv"),
-        expr("CASE WHEN idx < (n_tot % 10) * (n_tot div 10 + 1) " +
-          "THEN idx div (n_tot div 10 + 1) + 1 " +
-          "ELSE (n_tot % 10) + (idx - (n_tot % 10) * (n_tot div 10 + 1)) " +
-          "div (n_tot div 10) + 1 END").as("decile"))
-      .groupBy("decile")
-      .agg(count(lit(1)).as("n_users"), sum(col("conv")).as("n_conv"))
-      .withColumn("cum_users", sum(col("n_users")).over(wCum))
-      .withColumn("cum_conv", sum(col("n_conv")).over(wCum))
-      .withColumn("tot_users", sum(col("n_users")).over(wAll))
-      .withColumn("tot_conv", sum(col("n_conv")).over(wAll))
-      .select(col("decile"), col("n_users"), col("n_conv"),
-        (col("n_conv").cast("double") / col("n_users").cast("double"))
-          .as("conv_rate"),
-        when(col("tot_conv") > 0,
-          (col("cum_conv").cast("double") / col("cum_users").cast("double")) /
-            (col("tot_conv").cast("double") / col("tot_users").cast("double")))
-          .as("cum_lift"))
-      .orderBy("decile")
-  }
-
-  /** Two-proportion z-test on per-user conversion between the portable
-    * md5 arms — the readout that turns [[qAbAssign]]'s assignment into a
-    * ship/no-ship decision. Scale shape: conversion collapses to ONE
-    * per-user flag first (user-keyed map-side-combinable aggregate), so
-    * the four cell counts come from a scan of the compact user table —
-    * never a ×4 Expand of the raw event stream (the multi-countDistinct
-    * plan this row deliberately avoids). The z statistic is a mirrored
-    * double chain over the four exact counts; IEEE-754 requires sqrt to
-    * be correctly rounded, so — unlike pow()/exp(), banned in
-    * [[qMinhashTuning]] — sqrt is safe cross-engine and z hashes
-    * bit-for-bit unrounded.
-    */
-  private def qAbZtest(s: SparkSession, d: String): DataFrame = {
-    val bucket = pmod(
-      conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10)
-        .cast("long"),
-      lit(1000000L))
-    val users = Tables.events(s, d)
-      .groupBy(col("user_id"))
-      .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-        .as("conv"))
-      .select((bucket < 500000L).as("is_a"), col("conv"))
-    users
-      .agg(
-        sum(when(col("is_a"), 1L).otherwise(0L)).as("n_a"),
-        sum(when(!col("is_a"), 1L).otherwise(0L)).as("n_b"),
-        sum(when(col("is_a"), col("conv")).otherwise(0L)).as("c_a"),
-        sum(when(!col("is_a"), col("conv")).otherwise(0L)).as("c_b"))
-      // tiny fixtures can leave an arm EMPTY (sf0.001 has 15 users) —
-      // the degenerate readout is NULL, not a division error, and the
-      // CASE guard short-circuits the ANSI-mode division on both engines
-      .withColumn("p_a",
-        when(col("n_a") > 0,
-          col("c_a").cast("double") / col("n_a").cast("double")))
-      .withColumn("p_b",
-        when(col("n_b") > 0,
-          col("c_b").cast("double") / col("n_b").cast("double")))
-      .withColumn("p",
-        (col("c_a") + col("c_b")).cast("double") /
-          (col("n_a") + col("n_b")).cast("double"))
-      // pooled p of exactly 0 or 1 (tiny fixtures: EVERY user converts at
-      // sf0.001) zeroes the standard error — also a NULL readout
-      .withColumn("z",
-        when(col("n_a") > 0 && col("n_b") > 0 &&
-            col("c_a") + col("c_b") > 0 &&
-            col("c_a") + col("c_b") < col("n_a") + col("n_b"),
-          (col("p_a") - col("p_b")) /
-            sqrt(col("p") * (lit(1.0) - col("p")) *
-              (lit(1.0) / col("n_a").cast("double") +
-                lit(1.0) / col("n_b").cast("double")))))
-      .select(col("n_a"), col("n_b"), col("c_a"), col("c_b"),
-        col("p_a"), col("p_b"), col("z"))
-  }
-
-  /** Token-budget allocation across sources — the data-mixing step that
-    * fills a training budget greedily by source quality (here: exact
-    * unique-text ratio, the dedup health signal) until the budget is
-    * exhausted, leaving a partial allocation at the cutoff source. The
-    * per-source stats are one map-side-combinable aggregate; the greedy
-    * fill is a cumulative window over the compact source domain (≤ a few
-    * thousand sources at any corpus size); tokens are integer
-    * (n_chars div 4) throughout.
-    */
-  private def qTokenBudget(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val src = Tables.documents(s, d)
-      .select(col("source"), (col("n_chars") / 4).cast("long").as("toks"),
-        md5(col("text")).as("fp"))
-      .groupBy("source")
-      .agg(
-        sum(col("toks")).as("src_tokens"),
-        (countDistinct(col("fp")) / count(lit(1)).cast("double"))
-          .as("unique_ratio"))
-    val budget = src.agg((sum(col("src_tokens")) * 3 / 10).cast("long").as("budget"))
-    // greedy order: quality first, then prefer LARGER sources (fewer
-    // cutoff fragments), source id as the final deterministic tiebreak
-    val before = Window
-      .orderBy(desc("unique_ratio"), desc("src_tokens"), asc("source"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    src
-      .withColumn("cum_before", coalesce(sum(col("src_tokens")).over(before), lit(0L)))
-      .crossJoin(broadcast(budget))
-      .select(
-        col("source"), col("src_tokens"),
-        round(col("unique_ratio"), 6).as("unique_ratio"),
-        greatest(lit(0L),
-          least(col("src_tokens"), col("budget") - col("cum_before")))
-          .as("allocated"))
-      .orderBy("source")
-  }
-
-  /** Event-time disorder audit: per-user out-of-order arrivals and worst
-    * lateness per event type — the measurement that picks a streaming
-    * watermark delay. The driver's event log is perfectly time-ordered,
-    * so arrival delay is modeled with DETERMINISTIC md5 jitter (±1 h per
-    * event, the portable-hash recipe) — the operator itself is the real
-    * artifact: a per-USER cumulative event-time high-watermark (the
-    * partition key keeps the window distributed), integer-microsecond
-    * lateness, and a compact per-type rollup.
-    */
-  private def qOutOfOrder(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val jitterUs = pmod(
-      conv(substring(md5(concat(lit("j|"), col("event_id").cast("string"))),
-        1, 12), 16, 10).cast("long"),
-      lit(7200000000L)) - lit(3600000000L)
-    val w = Window.partitionBy("user_id").orderBy("arrival_us", "event_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    Tables.events(s, d)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        unix_micros(col("ts")).as("us"),
-        (unix_micros(col("ts")) + jitterUs).as("arrival_us"))
-      .withColumn("late_us", max(col("us")).over(w) - col("us"))
-      .groupBy("event_type")
-      .agg(
-        count(lit(1)).as("n"),
-        sum(when(col("late_us") > 0, 1L).otherwise(0L)).as("n_ooo"),
-        coalesce(max(when(col("late_us") > 0, col("late_us"))), lit(0L))
-          .as("max_late_us"))
-      .select(col("event_type"), col("n"), col("n_ooo"),
-        (col("max_late_us") / 1000000L).cast("long").as("max_late_s"))
-      .orderBy("event_type")
-  }
-
-  /** JSON scalar extraction from the event props column. */
-  private def qEventsJson(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .select(
-        col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))
-      .orderBy("event_id")
-
-  /** Semi-structured analytics through the VARIANT type (Spark 4):
-    * `parse_json` decodes each `props` document ONCE into the binary
-    * columnar VARIANT encoding and `variant_get` does typed path access
-    * on the decoded form — the scale story vs [[qEventsJson]]'s
-    * `get_json_object`, which re-parses the JSON STRING on every path
-    * touch (one parse per path per row; a wide extraction re-tokenizes
-    * the document k times, where VARIANT pays one parse then O(path)
-    * binary walks). Grouped rollup by the extracted key's decade with
-    * exact measures only: counts, min/max of the key, and the value sum
-    * in exact 1e-4 units (a raw double sum is partial-order-dependent
-    * and would not be bit-stable across engines). The oracle extracts
-    * the same path with DuckDB's native JSON reader — the differential
-    * checks the VARIANT decode end to end.
-    */
-  private def qVariant(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .select(
-        expr("variant_get(parse_json(props), '$.k', 'bigint')").as("k"),
-        col("value"))
-      .groupBy((col("k") - pmod(col("k"), lit(10))).as("k_decade"))
-      .agg(
-        count(lit(1)).as("n"),
-        min(col("k")).as("min_k"),
-        max(col("k")).as("max_k"),
-        sum(round(col("value") * 10000).cast("long")).as("sum_value_u4"))
-      .orderBy("k_decade")
-
-  /** In-flight data-quality metrics via the Observation API
-    * (`df.observe` → `CollectMetrics`): the quality counters piggyback
-    * on the SAME single pass that feeds the sink — the operational shape
-    * for ETL writes at 100 TB, where a separate validation query would
-    * re-scan the table (here: one noop-sink pass, metrics collected as
-    * accumulator-style aggregates on the executors, zero extra scans).
-    * Emitted metrics are all exact (counts, whole-number quantity sum,
-    * a predicate count), so the 1-row result is fully oracled by a
-    * DuckDB recompute of the same aggregates.
-    */
-  private def qObserve(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val obs = org.apache.spark.sql.Observation()
-    Tables.lineitem(s, d)
-      .observe(obs,
-        count(lit(1)).as("n_rows"),
-        sum(col("l_quantity")).cast("double").as("sum_qty"),
-        count(when(col("l_discount") > 0.05, 1)).as("n_disc_gt5"))
-      .write.format("noop").mode("overwrite").save()
-    val m = obs.get
-    Seq((m("n_rows").asInstanceOf[Long],
-        m("sum_qty").asInstanceOf[Double],
-        m("n_disc_gt5").asInstanceOf[Long]))
-      .toDF("n_rows", "sum_qty", "n_disc_gt5")
-  }
-
-  /** Ordered-sequence funnel (view → click-after-view →
-    * purchase-after-click): per-stage user counts where each stage's event
-    * must strictly follow the user's earliest previous-stage event. Every
-    * stage is a per-user min-reduce (map-side partial agg) followed by a
-    * user_id-keyed join — every shuffle in the plan is keyed on user_id
-    * alone, and each stage's wide state is one timestamp per surviving
-    * user (the event stream itself is reduced map-side before any
-    * exchange). The stage joins are AQE-sized: survivor sets shrink
-    * monotonically, so later stages broadcast.
-    */
-  private def qFunnel(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d).select("user_id", "event_type", "ts")
-    def stage(evType: String, prev: DataFrame, prevTs: String, outTs: String) =
-      e.filter(col("event_type") === evType)
-        .join(prev, "user_id")
-        .filter(col("ts") > col(prevTs))
-        .groupBy("user_id")
-        .agg(min(col("ts")).as(outTs))
-    val v = e.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min(col("ts")).as("t_view"))
-    val c = stage("click", v, "t_view", "t_click")
-    val p = stage("purchase", c, "t_click", "t_purchase")
-    v.select(lit(1).as("stage"), col("user_id"))
-      .union(c.select(lit(2).as("stage"), col("user_id")))
-      .union(p.select(lit(3).as("stage"), col("user_id")))
-      .groupBy("stage")
-      .agg(count(lit(1)).as("n_users"))
-      .orderBy("stage")
-  }
-
-  /** Cohort retention: users grouped by first-seen day, counted on day
-    * offsets 0/1/7/14. The cohort assignment is a per-user min-reduce; the
-    * activity join is user_id-keyed (same partitioning as the cohort
-    * reduce); the final matrix is tiny. At 100 TB the only wide state is
-    * one (user_id, cohort_day) row per user — the offset filter prunes the
-    * activity stream before the distinct-count shuffle.
-    */
-  private def qRetention(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.events(s, d)
-      .select(col("user_id"), to_date(col("ts")).as("day"))
-    val cohort = e.groupBy("user_id").agg(min(col("day")).as("cohort_day"))
-    e.join(cohort, "user_id")
-      .select(
-        col("user_id"), col("cohort_day"),
-        datediff(col("day"), col("cohort_day")).as("day_offset"))
-      .filter(col("day_offset").isin(0, 1, 7, 14))
-      .groupBy("cohort_day", "day_offset")
-      .agg(countDistinct(col("user_id")).as("n_users"))
-      .select(
-        date_format(col("cohort_day"), "yyyy-MM-dd").as("cohort_day"),
-        col("day_offset"), col("n_users"))
-      .orderBy("cohort_day", "day_offset")
-  }
-
-  // -------------------------------------------------- north-star: dedup
-
-  private def qDedupExact(s: SparkSession, d: String): DataFrame =
-    Dedup.exact(Tables.documents(s, d), "doc_id", "text")
-      .select(col("text"), col("keep_id"), col("n_copies"))
-      .orderBy("keep_id")
-
-  private def qDedupNormalized(s: SparkSession, d: String): DataFrame =
-    Dedup.normalized(Tables.documents(s, d), "doc_id", "text")
-      .orderBy("keep_id")
-
-  /** Verdict-row wrapper for approximate PAIR families — the pair-set
-    * counterpart of [[annRecallVerdict]]: the output rows are the EXACT
-    * pair set at the threshold (engine-portable, so the DuckDB oracle
-    * recomputes them from the raw tables) plus one in-plan verdict column
-    * asserting the approximate family's guarantee — every approximate pair
-    * is in the exact set (the families verify the exact measure on every
-    * candidate, so precision is 1.0 by construction) AND recall clears
-    * `floor`. The oracle emits the verdict as literal TRUE: an LSH recall
-    * collapse hash-mismatches the row. The verdict is a full-outer join of
-    * two compact (id_a, id_b) sets followed by one scalar aggregate and a
-    * 1-row broadcast re-attach — no shuffle beyond the two pair pipelines
-    * themselves. (Reference analog: differential-oracle discipline,
-    * `host/join/join_test.cc:27-38`.)
-    */
-  private def pairRecallVerdict(
-      exact: DataFrame,
-      approx: DataFrame,
-      floor: Double,
-      verdictName: String): DataFrame = {
-    // Both pair pipelines are non-trivial, so the full-outer join of the
-    // two (id_a, id_b) sets is evaluated exactly ONCE: a LAZY local
-    // checkpoint materializes it at first use, the hit/miss/extra counts
-    // come out of ONE scalar aggregate over it (map-side partial — no row
-    // movement beyond the 1-per-partition partials), and the 1-row count
-    // is broadcast back onto the surviving exact rows. Pair sets grow
-    // linearly with the corpus (a web-scale corpus at 30-50% dup rate has
-    // billions of pairs), so nothing here may funnel them through one
-    // task. persist, NOT localCheckpoint: a checkpoint replaces the plan
-    // with an opaque LogicalRDD, hiding the staged-artifact scans from
-    // the catalog plan audits; the persist entries are bounded by the
-    // same LRU eviction discipline as [[takeIndexMemo]] (ADVICE r11:
-    // CacheManager deduping alone still accumulates one entry per
-    // family×directory for the session lifetime, and pair sets grow with
-    // the corpus, so a long mixed-corpus session would pin growing cache
-    // state — evicted entries unpersist and simply recompute); the one
-    // hazard a persisted staged input carries — rebuilt at the same path
-    // mid-session serving the stale cached relation — is already excluded
-    // by the regeneration contract ([[dirTag]]: in-place data
-    // regeneration requires fresh sessions).
-    val joinedPlan = exact
-      .withColumn("in_ex", lit(1L))
-      .join(approx.select(col("id_a"), col("id_b")).withColumn("in_ap", lit(1L)),
-        Seq("id_a", "id_b"), "full_outer")
-    val joined = pairVerdictMemo.synchronized {
-      pairVerdictMemo.computeIfAbsent(
-        s"${System.identityHashCode(exact.sparkSession)}:" +
-          joinedPlan.queryExecution.analyzed.semanticHash(),
-        _ => joinedPlan.persist())
-    }
-    val counts = joined
-      .agg(
-        coalesce(sum(col("in_ex")), lit(0L)).as("__n_exact"),
-        coalesce(sum(when(col("in_ex").isNotNull && col("in_ap").isNotNull,
-          lit(1L))), lit(0L)).as("__n_hit"),
-        coalesce(sum(when(col("in_ex").isNull, lit(1L))), lit(0L))
-          .as("__n_extra"))
-      .withColumn("one", lit(1))
-    joined
-      .filter(col("in_ex").isNotNull)
-      .withColumn("one", lit(1))
-      .join(broadcast(counts), "one")
-      .withColumn(verdictName,
-        col("__n_extra") === 0L &&
-          col("__n_hit").cast("double") >= lit(floor) * col("__n_exact").cast("double"))
-      .drop("one", "in_ex", "in_ap", "__n_exact", "__n_hit", "__n_extra")
-      .orderBy("id_a", "id_b")
-  }
-
-  /** Write-once staged compact (id, signature) projections — the
-    * pay-at-write discipline the [[graft.ext.Dedup]] scale note promises
-    * (and [[stagedDupPairs]]/[[annIndex]] already follow): signatures are
-    * derived from full text ONCE per corpus directory and every consumer
-    * reads the KB-per-row parquet instead of re-running the text pass.
-    * `minhash64`: (id, 64-long minhash signature of char-5 shingles) —
-    * consumed three times per [[qMinhashPairs]] run (banding + both
-    * plausibility-attach sides). `tfvec256`: (id, 256-dim md5 hashing-TF
-    * bigram vector) — [[qDocEmbedPairs]] consumes it five times (brute
-    * exact side + LSH side, each with attaches). Single-file coalesce is
-    * an oracle-scale convenience; a production artifact stays partitioned.
-    */
-  // repartition(1), NOT coalesce(1): these derivation plans are
-  // shuffle-free, so a coalesce would propagate up and run the corpus-wide
-  // text→signature pass on ONE task — repartition keeps the map side
-  // parallel and only the tiny single-file write serializes
-  private def stagedMinhashSigs(s: SparkSession, d: String): DataFrame = {
-    val dir = s"/tmp/graft_sigs/${dirTag(d)}/minhash64"
-    stagedOnce(dir) {
-      Tables.documents(s, d)
-        .select(col("doc_id").as("id"),
-          minhashSignature(charShingles(col("text"), 5), 64).as("sig"))
-        .repartition(1).write.mode("overwrite").parquet(dir)
-    }
-    s.read.parquet(dir)
-  }
-
-  private def stagedTfVecs(s: SparkSession, d: String): DataFrame = {
-    val dir = s"/tmp/graft_sigs/${dirTag(d)}/tfvec256"
-    stagedOnce(dir) {
-      Similarity.portableTfVecs(
-          Tables.documents(s, d), "doc_id", "text", dims = 256, ngram = 2)
-        .repartition(1).write.mode("overwrite").parquet(dir)
-    }
-    s.read.parquet(dir)
-  }
-
-  /** Write-once staged EXACT pair-audit sets — the [[stagedKnnSuspects]]
-    * discipline generalized to the pairRecallVerdict families: each exact
-    * side is a pure function of the corpus directory and is its row's
-    * dominant cost (the quarantined quadratic or banded scan), so it is
-    * paid ONCE per corpus and every later run reads the KB-scale pair
-    * parquet. The live operators stay exercised — the first build per
-    * corpus runs them, [[qCosinePairs]] runs the brute scan live as its
-    * own row every time, and the LSH production sides run on every
-    * invocation (pinned by the staged-artifact plan audit).
-    */
-  private def stagedExactPairs(s: SparkSession, d: String, family: String)(
-      build: => DataFrame): DataFrame = {
-    val dir = s"/tmp/graft_pairs/${dirTag(d)}/$family"
-    stagedOnce(dir) {
-      build.repartition(1).write.mode("overwrite").parquet(dir)
-    }
-    s.read.parquet(dir)
-  }
-
-  /** MinHash+LSH near-dup pairs wrapped in the pair-set exactness audit
-    * ([[pairRecallVerdict]]): output = the EXACT char-5-shingle Jaccard
-    * pairs at 0.8 ([[graft.ext.Dedup.charJaccardPairs]] — size-ratio-banded,
-    * DuckDB-expressible) + `mh_ok`, asserting the banded minhash retrieved
-    * the full planted-near-dup pair set (banding 8×8 → recall ≥ 0.999 at
-    * the corpus's ~0.93 Jaccard dups; measured recall 1.0 at every test SF,
-    * floor 0.9 leaves margin for an unlucky seedless corpus). The LSH side
-    * reads its signatures from the [[stagedMinhashSigs]] write-once
-    * artifact; shingles (corpus-sized) stay derived-on-demand for the
-    * exact verify of the few candidates. The exact audit side is the
-    * write-once [[stagedExactPairs]] artifact (paid once per corpus).
-    */
-  private def qMinhashPairs(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    pairRecallVerdict(
-      stagedExactPairs(s, d, "charjac08")(
-        Dedup.charJaccardPairs(docs, "doc_id", "text", k = 5, threshold = 0.8)),
-      Dedup.minhashPairsFromSigs(
-        docs.select(col("doc_id").as("id"),
-          charShingles(col("text"), 5).as("shingles")),
-        stagedMinhashSigs(s, d),
-        numHashes = 64, bands = 8, threshold = 0.8),
-      floor = 0.9,
-      verdictName = "mh_ok")
-  }
-
-  /** SimHash near-dup pairs on the ENGINE-PORTABLE 60-bit md5-prefix
-    * signature ([[graft.ext.Dedup.portableSimhashSigs]]): chunks = 4 makes
-    * candidate recall COMPLETE for hamming < 4 (pigeonhole), so
-    * maxHamming = 3 yields the EXACT pair set — which the DuckDB oracle
-    * reproduces by brute-force quadratic hamming over independently
-    * recomputed signatures, making this a FULLY-oracled row (stronger than
-    * a recall-floor verdict: every pair, both ids and the hamming value,
-    * is hash-compared). Conditional on no chunk bucket exceeding maxBucket
-    * (true at every test SF; `Dedup.bucketStats` audits). The library's
-    * production path stays [[graft.ext.Dedup.simhashPairs]] (native seeded
-    * xxhash, codegen'd); the portable signature exists so the bucketing
-    * pipeline is differentially testable end to end.
-    */
-  private def qSimhashPairs(s: SparkSession, d: String): DataFrame =
-    Dedup.simhashPairsFromSigs(
-        Dedup.portableSimhashSigs(Tables.documents(s, d), "doc_id", "text"),
-        totalBits = 60, maxHamming = 3, chunks = 4)
-      .orderBy("id_a", "id_b")
-
-  private def qNgramJaccardPairs(s: SparkSession, d: String): DataFrame =
-    Dedup.ngramJaccardPairs(Tables.documents(s, d), "doc_id", "text",
-        n = 3, threshold = 0.03)
-      .orderBy("id_a", "id_b")
-
-  /** Incremental-ingest dedup: the simulated daily batch (every 10th doc)
-    * checked against the standing corpus — only (new, old) pairs, never
-    * corpus×corpus ([[Dedup.ngramJaccardAcross]]). The per-ingest cost at
-    * scale is |batch|-driven candidate generation against the shared
-    * inverted index, not a rescan of the corpus pair space.
-    */
-  private def qIncrementalDedup(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    Dedup.ngramJaccardAcross(
-        docs.filter(col("doc_id") % 10 === 0),
-        docs.filter(col("doc_id") % 10 =!= 0),
-        "doc_id", "text", n = 3, threshold = 0.03)
-      .orderBy("id_new", "id_old")
-  }
-
-  /** Train/test CONTAMINATION check — the release gate every training
-    * pipeline runs: near-dup document pairs whose members land in
-    * DIFFERENT splits of the held-out assignment. Composes two oracled
-    * pieces — exact n-gram Jaccard pairs and the engine-portable md5
-    * split — so the whole pipeline query is DuckDB-checkable end to end.
-    * The split attach is a compact (id, split) projection joined onto the
-    * (small) verified pair set, so the composition adds no quadratic work.
-    */
-  private def qContamination(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      n = 3, threshold = 0.03)
-    val splits = Sampling
-      .assignSplitsPortable(docs, "doc_id", valFraction = 0.1, testFraction = 0.1)
-      .select(col("doc_id"), col("split"))
-    pairs
-      .join(splits.select(col("doc_id").as("id_a"), col("split").as("split_a")), "id_a")
-      .join(splits.select(col("doc_id").as("id_b"), col("split").as("split_b")), "id_b")
-      .filter(col("split_a") =!= col("split_b"))
-      .select("id_a", "id_b", "jaccard", "split_a", "split_b")
-      .orderBy("id_a", "id_b")
-  }
-
-  /** END-TO-END training-corpus pipeline — the five stages a pretraining
-    * data build runs, composed as ONE declarative plan so Catalyst sees
-    * (and the oracle checks) the whole dataflow: normalize→dedup (survivor
-    * = min id per normalized text), quality gate (integer-form predicates —
-    * `2·alpha_len >= len` and a token floor — so the comparisons are exact
-    * in every engine), contamination-safe split (portable md5 splits; any
-    * near-dup pair [[graft.ext.Dedup.ngramJaccardPairs]] that straddles
-    * splits drops its non-train member, ties drop the larger id),
-    * mix-sample to target source weights ([[graft.ext.Sampling.sampleToMix]]),
-    * and sequence packing ([[graft.ext.TextAnalysis.packSequences]]).
-    * Every stage is individually oracled elsewhere
-    * (q_dedup_normalized/q_split_counts/q_ngram_jaccard/q_contamination/
-    * q_sample_mix/q_pack_sequences); this row pins their COMPOSITION.
-    * Output: one row per packed document (source, id, n_tokens, bin).
-    */
-  private def qCorpusPipeline(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val survivors = docs.join(
-      Dedup.normalized(docs, "doc_id", "text")
-        .select(col("keep_id").as("doc_id")),
-      Seq("doc_id"), "left_semi")
-    val qual = survivors.filter(
-      length(regexp_replace(col("text"), "[^A-Za-z]", "")) * 2 >= length(col("text")) &&
-        size(tokens(col("text"))) >= 10)
-    val split = Sampling.assignSplitsPortable(qual, "doc_id",
-      valFraction = 0.1, testFraction = 0.1)
-    val sp = split.select(col("doc_id"), col("split"))
-    val drops = Dedup.ngramJaccardPairs(qual, "doc_id", "text", n = 3, threshold = 0.03)
-      .join(sp.select(col("doc_id").as("id_a"), col("split").as("split_a")), "id_a")
-      .join(sp.select(col("doc_id").as("id_b"), col("split").as("split_b")), "id_b")
-      .filter(col("split_a") =!= col("split_b"))
-      .select(
-        when(col("split_a") === "train", col("id_b"))
-          .when(col("split_b") === "train", col("id_a"))
-          .otherwise(greatest(col("id_a"), col("id_b"))).as("doc_id"))
-      .distinct()
-    val clean = split.join(drops, Seq("doc_id"), "left_anti")
-    val target = (0 until 20)
-      .map(i => s"src$i" -> (if (i < 10) 1.0 else 3.0)).toMap
-    val mixed = Sampling.sampleToMix(clean, "doc_id", "source", target)
-    TextAnalysis.packSequences(mixed, "source", "doc_id", "text", capacity = 512)
-      .select(col("grp").as("source"), col("id"), col("n_tokens"), col("bin"))
-      .orderBy("source", "id")
-  }
-
-  // --------------------------------------------- north-star: similarity
-
-  private def queryVector(s: SparkSession, d: String): Seq[Double] =
-    Tables.embeddings(s, d)
-      .filter(col("vec_id") === 0)
-      .select(toDoubleArray(col("embedding")).as("v"))
-      .head()
-      .getSeq[Double](0)
-
-  private def qEmbedTopK(s: SparkSession, d: String): DataFrame =
-    Similarity.bruteForceTopK(
-      Tables.embeddings(s, d), "vec_id", "embedding", queryVector(s, d), 20)
-
-  /** Wrap an ANN top-k result in exactness-audit verdict rows: the output
-    * is the EXACT cosine top-20 (rank, id, cos — the embeddings are
-    * unit-norm, so cosine and L2 rankings coincide and one exact side
-    * serves every ANN family) plus `ann_ok`, an in-plan verdict that the
-    * ANN candidate set overlaps the true top-20 at `floor` or better AND
-    * retrieved the query vector itself. The ANN ids are engine-specific
-    * (seeded hyperplanes / k-means / PQ codebooks no portable SQL engine
-    * reproduces), so the DuckDB oracle computes the exact side — already
-    * proven portable by q_embed_topk — and asserts the recall guarantee as
-    * literal TRUE: an index whose recall decays below its floor
-    * hash-mismatches the row. The exact side is the AUDIT, not the
-    * production path (at 100 TB the ANN probe runs alone; the audit is
-    * the q_embed_topk-shaped linear scan, run here beside it — the same
-    * sampled-exactness discipline as [[Similarity.sampledRecallAudit]]).
-    * All verdict windows run over the 20 exact rows post-TopK, so the
-    * audit adds one TakeOrderedAndProject scan and a 20-row broadcast
-    * join, never a shuffle.
-    */
-  private def annRecallVerdict(
-      s: SparkSession,
-      d: String,
-      ann: DataFrame,
-      floor: Int,
-      reference: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val exact = Similarity.bruteForceTopK(
-      Tables.embeddings(s, d), "vec_id", "embedding", queryVector(s, d), 20)
-    val annIds = ann.select(col(ann.columns.head).as("id"))
-    // the recall reference defaults to the exact top-20; the composed
-    // IVF+PQ family audits against the full PQ scan instead (isolating
-    // probe-pruning loss — quantization loss is q_pq_topk's verdict)
-    val refIds = reference
-      .map(r => r.select(col(r.columns.head).as("id")))
-      .getOrElse(exact.select(col("id")))
-    // scalar verdict over the k ANN rows: overlap with the reference set
-    // clears the floor AND the query vector itself was retrieved
-    val verdict = annIds
-      .withColumn("is_self", when(col("id") === 0, 1L).otherwise(0L))
-      .join(refIds.withColumn("in_ref", lit(1L)), Seq("id"), "left")
-      .agg(
-        sum(coalesce(col("in_ref"), lit(0L))).as("n_hits"),
-        max(col("is_self")).as("self_hit"))
-      .select(
-        (col("n_hits") >= floor && col("self_hit") === 1L).as("ann_ok"),
-        lit(1).as("one"))
-    exact
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(lit(1)).orderBy(col("cos").desc, col("id"))))
-      .withColumn("one", lit(1))
-      .join(broadcast(verdict), "one")
-      .select(
-        col("rnk").cast("long").as("rnk"),
-        col("id"), col("cos"), col("ann_ok"))
-      .orderBy("rnk")
-  }
-
-  /** LSH top-k wrapped in the exactness audit ([[annRecallVerdict]]):
-    * measured overlap 6/20 (sf0.001) and 8/20 (sf0.01), floor 5 — the
-    * recall trade of 4-bit signature chunks over deliberately
-    * structureless embeddings, deterministic because the hyperplanes are
-    * seeded.
-    */
-  private def qEmbedLshTopK(s: SparkSession, d: String): DataFrame =
-    annRecallVerdict(s, d,
-      Similarity.lshTopK(
-        Tables.embeddings(s, d), "vec_id", "embedding", queryVector(s, d), 20),
-      floor = 5)
-
-  /** Embedding-LSH pairs wrapped in the pair-set exactness audit
-    * ([[pairRecallVerdict]]): output = the exact cosine pairs at 0.3 (the
-    * q_cosine_pairs side, already DuckDB-proven) + `lsh_ok`. planes=16/
-    * chunks=4 → 4-bit buckets: ~6% of random pairs per chunk become
-    * candidates (vs 25% with 2-bit buckets, which grows quadratic bucket
-    * joins at scale). Recall at cos≥0.3 is ~0.4 by design over these
-    * deliberately structureless embeddings (measured 0.40–0.44 across the
-    * test SFs) — floor 0.25 asserts the bucketing stays functional without
-    * pinning the trade.
-    */
-  private def qEmbedPairs(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    pairRecallVerdict(
-      stagedExactPairs(s, d, "cos03")(
-        Similarity.bruteForcePairs(emb, "vec_id", "embedding", threshold = 0.3)),
-      Dedup.embeddingPairs(emb, "vec_id", "embedding",
-        threshold = 0.3, planes = 16, chunks = 4),
-      floor = 0.25,
-      verdictName = "lsh_ok")
-  }
-
-  /** Exact quadratic pair scan — the recall oracle for [[qEmbedPairs]];
-    * oracled in SQL, unlike the LSH variants.
-    */
-  private def qCosinePairs(s: SparkSession, d: String): DataFrame =
-    Similarity.bruteForcePairs(Tables.embeddings(s, d), "vec_id", "embedding",
-        threshold = 0.3)
-      .orderBy("id_a", "id_b")
-
-  /** End-to-end text→embedding→near-dup pipeline wrapped in the pair-set
-    * exactness audit ([[pairRecallVerdict]]): ENGINE-PORTABLE md5 hashing-TF
-    * bigram vectors ([[graft.ext.Similarity.portableTfPosting]], the
-    * portable twin of [[graft.ext.TextAnalysis.hashingTfEmbedding]],
-    * densified once), then (a) the exact cosine pair set at 0.8 — integer-
-    * valued weights make every dot and norm an exact cross-engine sum, so
-    * the DuckDB oracle reproduces the rows bit-for-bit from its SPARSE
-    * posting formulation (the [[graft.ext.Similarity.sparseCosinePairs]]
-    * shape; `OperatorPropertySpec` pins sparse ≡ dense) — and (b) the same
-    * vectors through the production LSH pair finder, asserted by the
-    * `lsh_ok` recall verdict (measured recall ≥ 0.97 at every test SF on
-    * the planted dups; floor 0.8).
-    */
-  private def qDocEmbedPairs(s: SparkSession, d: String): DataFrame = {
-    // write-once staged (id, vec) projection — both pair pipelines (and
-    // their attach sides) read the compact artifact instead of re-running
-    // the text→hashing-TF pass per consumer
-    val vecs = stagedTfVecs(s, d)
-    pairRecallVerdict(
-      stagedExactPairs(s, d, "tfcos08")(
-        Similarity.bruteForcePairs(vecs, "id", "vec", threshold = 0.8)),
-      Dedup.embeddingPairs(vecs, "id", "vec",
-        threshold = 0.8, planes = 32, chunks = 4),
-      floor = 0.8,
-      verdictName = "lsh_ok")
-  }
-
-  // ------------------------------------------------- north-star: text
-
-  private def qTextStats(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.qualityStats(Tables.documents(s, d), "doc_id", "text")
-      .select(
-        col("id"),
-        col("n_chars").cast("long").as("n_chars"),
-        col("n_tokens").cast("long").as("n_tokens"),
-        col("avg_token_len"), col("alpha_ratio"),
-        col("punct_ratio"), col("stopword_ratio"))
-      .orderBy("id")
-
-  private def qLangId(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .select(col("doc_id").as("id"), TextAnalysis.langId(col("text")).as("lang_pred"))
-      .orderBy("id")
-
-  /** Declared vs detected language confusion — the metadata-QA pass over
-    * [[qLangId]]'s per-doc predictions: rows off the diagonal are either
-    * mislabeled metadata or documents the stopword detector cannot place
-    * (`und`, and zh — which has no stopword list — lands there by
-    * construction, making the zh row the detector's honest coverage
-    * statement). One compact (declared, detected) aggregate.
-    */
-  private def qLangConfusion(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .select(col("lang"), TextAnalysis.langId(col("text")).as("lang_pred"))
-      .groupBy("lang", "lang_pred")
-      .agg(count(lit(1)).as("n_docs"))
-      .orderBy("lang", "lang_pred")
-
-  private def qTokenCount(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .select(
-        col("doc_id").as("id"),
-        tokenCount(col("text")).cast("long").as("n_tokens_ws"),
-        regexTokenCount(col("text")).cast("long").as("n_tokens_re"))
-      .orderBy("id")
-
-  /** Intra-document repetition ratio (the Gopher-class quality signal): the
-    * fraction of word-3-gram occurrences that repeat an earlier gram of the
-    * SAME document, 1 − distinct/total. High values flag boilerplate, spam,
-    * and degenerate generations; pure per-row math — scales as a scan.
-    */
-  private def qRepetition(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .select(
-        col("doc_id").as("id"),
-        tokenCount(col("text")).cast("long").as("n_tokens"),
-        size(wordShingles(col("text"), 3)).cast("long").as("n_distinct"))
-      .select(
-        col("id"), col("n_tokens"),
-        when(col("n_tokens") < 3, lit(0.0))
-          .otherwise(round(
-            lit(1.0) - col("n_distinct").cast("double") /
-              (col("n_tokens") - 2).cast("double"), 6))
-          .as("rep_frac"))
-      .orderBy("id")
-
-  private def qFingerprint(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .select(
-        col("doc_id").as("id"),
-        rollingFingerprint(col("text")).as("fingerprint"))
-      .orderBy("id")
-
-  /** Pure-SQL path through the registered graft_* functions: the library's
-    * SQL surface (`GraftExtensions` / `GraftFunctions.registerAll`).
-    */
-  private def qSqlText(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.registerAll(s)
-    val docs = tempView(s, d, "graft_documents", Tables.documents(s, d))
-    s.sql(
-      s"""SELECT doc_id AS id,
-         |       CAST(size(graft_tokenize(text)) AS BIGINT) AS n_tokens,
-         |       CAST(size(graft_word_shingles(text, 3)) AS BIGINT) AS n_shingles
-         |FROM $docs ORDER BY id""".stripMargin)
-  }
-
-  /** Spark 4 COLLATION surface: grouping under the case-insensitive
-    * UTF8_LCASE collation — comparison semantics attached to the TYPE, so
-    * every operator downstream (group-by here; joins, distinct, order-by
-    * equally) honors them without scattering `lower()` calls, and the
-    * collation-aware hash stays codegen'd. Mixed-case inputs are
-    * fabricated deterministically (every even event upper-cased); the
-    * emitted key is explicitly lower-cased because a CI group's
-    * REPRESENTATIVE value is engine-arbitrary — exactly the pitfall this
-    * row documents. Oracle = the lower()-normalized classic grouping.
-    */
-  private def qCollation(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .select(
-        when(pmod(col("event_id"), lit(2)) === 0, upper(col("event_type")))
-          .otherwise(col("event_type")).as("et"))
-      .groupBy(expr("et COLLATE UTF8_LCASE").as("et_ci"))
-      .agg(count(lit(1)).as("n"))
-      .select(lower(col("et_ci")).as("event_type"), col("n"))
-      .orderBy("event_type")
-
-  /** Spark 4 SQL SCRIPTING (`BEGIN … END`): a declared session variable
-    * feeds two sequential statements — a procedural surface (variables,
-    * control flow) that ports stored-procedure-style logic WITHOUT a
-    * driver-side string-formatting layer; each statement inside the block
-    * still plans through Catalyst, and the block returns the last
-    * statement's result. The conf flag is set/restored around the call
-    * ([[qStreamRocksdb]] discipline). The variable participates in
-    * constant folding, so the filter still pushes to the scan. The cut is
-    * MAX/2, not AVG — max of doubles is exact and halving is a power-of-two
-    * scale, so the threshold is bit-identical cross-engine; an averaged
-    * cut would carry summation-order ulps that can flip membership of a
-    * price sitting near it.
-    */
-  private def qSqlScript(s: SparkSession, d: String): DataFrame = {
-    val ord = tempView(s, d, "graft_orders", Tables.orders(s, d))
-    val key = "spark.sql.scripting.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try {
-      s.sql(
-        s"""BEGIN
-           |  DECLARE graft_cut DOUBLE DEFAULT 0.0;
-           |  SET graft_cut = (SELECT MAX(o_totalprice) / 2 FROM $ord);
-           |  SELECT o_orderpriority,
-           |         COUNT(*) AS n_above,
-           |         CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-           |              AS BIGINT) AS sum_cents
-           |  FROM $ord WHERE o_totalprice > graft_cut
-           |  GROUP BY o_orderpriority ORDER BY o_orderpriority;
-           |END""".stripMargin)
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
-  /** Spark 4 SQL surface: PIPE syntax (`|>` — linear dataflow SQL, each
-    * stage a Catalyst-planned relational op, not string preprocessing)
-    * combined with a NAMED PARAMETER marker (`:minprice` bound via
-    * `sql(text, args)` — injection-proof parameterization, the contract a
-    * query service needs). The pipeline parses to exactly the plan the
-    * classic form produces — filter → project → hash aggregate with
-    * map-side combine — so the feature costs nothing at scale; the oracle
-    * is the classic-syntax equivalent, pinning that pipe syntax is pure
-    * surface, not semantics.
-    */
-  private def qSqlPipe(s: SparkSession, d: String): DataFrame = {
-    val ord = tempView(s, d, "graft_orders", Tables.orders(s, d))
-    s.sql(
-      s"""FROM $ord
-         ||> WHERE o_totalprice > :minprice
-         ||> EXTEND CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
-         ||> AGGREGATE COUNT(*) AS n_orders, SUM(cents) AS sum_cents
-         |   GROUP BY o_orderpriority
-         ||> ORDER BY o_orderpriority""".stripMargin,
-      Map("minprice" -> 100000))
-  }
-
-  /** Spark 4 `GROUP BY ALL` — group by every non-aggregate SELECT item,
-    * resolved at analysis time (the analyzer expands ALL to the explicit
-    * grouping list, so the plan, exchange, and codegen are IDENTICAL to
-    * the spelled-out `GROUP BY 1, 2`; this is an API-surface row, not a
-    * new physical shape). The production value at 100 TB is
-    * maintenance-shaped: wide rollups whose dimension list evolves can't
-    * silently drift between the SELECT and the GROUP BY. DuckDB
-    * originated the syntax, so the oracle mirrors it verbatim — the one
-    * catalog row whose oracle SQL is character-identical to the Spark
-    * SQL.
-    */
-  private def qGroupByAll(s: SparkSession, d: String): DataFrame = {
-    val ord = tempView(s, d, "graft_orders", Tables.orders(s, d))
-    s.sql(
-      s"""SELECT o_orderstatus, o_orderpriority,
-         |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-         |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-         |         AS sum_cents
-         |FROM $ord
-         |GROUP BY ALL
-         |ORDER BY o_orderstatus, o_orderpriority""".stripMargin)
-  }
-
-  /** PARAMETERIZED QUERY (`spark.sql(text, args)` named-parameter
-    * markers) — the injection-safe surface a production catalog serves
-    * untrusted filters through: values bind as TYPED literals at parse
-    * time (`:seg` a string, `:floor` a double, `:segs` an ARRAY bound
-    * into an IN-style membership test), never via string interpolation,
-    * so a hostile segment name cannot become SQL. Because markers bind
-    * as literals, everything downstream behaves as if the values were
-    * inline: the predicate still pushes to the parquet scan and constant-
-    * folds — parameterization costs nothing at plan time (one text, many
-    * binds also keys the plan cache by the TEXT, not the values). The
-    * oracle is the same query with the literals spelled inline.
-    */
-  private def qParamQuery(s: SparkSession, d: String): DataFrame = {
-    val cust = tempView(s, d, "graft_customer", Tables.customer(s, d))
-    s.sql(
-      s"""SELECT c_mktsegment,
-         |       CAST(COUNT(*) AS BIGINT) AS n_customers,
-         |       MIN(c_custkey) AS min_key,
-         |       CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS BIGINT)
-         |         AS sum_bal_cents
-         |FROM $cust
-         |WHERE (array_contains(:segs, c_mktsegment) OR c_mktsegment = :seg)
-         |  AND c_acctbal >= :floor
-         |GROUP BY c_mktsegment
-         |ORDER BY c_mktsegment""".stripMargin,
-      Map(
-        "segs" -> Array("BUILDING", "MACHINERY"),
-        "seg" -> "AUTOMOBILE",
-        "floor" -> 250.0))
-  }
-
-  /** `IDENTIFIER(:param)` — the injection-safe surface for dynamic NAMES
-    * (the piece [[qParamQuery]]'s value binds cannot cover: a parameter
-    * marker binds a literal, never a table or column reference, so
-    * templated object names historically meant string concatenation —
-    * the classic injection hole in multi-tenant catalogs where the
-    * tenant picks the table). `IDENTIFIER(:t)` parses the bound STRING
-    * as a name at analysis time: it resolves or fails as an identifier,
-    * and can never smuggle a predicate or an extra statement. Same
-    * grouped scan as any static query once resolved — pure parse-time
-    * surface, zero plan cost.
-    */
-  private def qIdentifierParam(s: SparkSession, d: String): DataFrame = {
-    val ord = tempView(s, d, "graft_orders", Tables.orders(s, d))
-    s.sql(
-      s"""SELECT o_orderpriority,
-         |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-         |       MAX(IDENTIFIER(:c)) AS max_price
-         |FROM IDENTIFIER(:t)
-         |GROUP BY o_orderpriority
-         |ORDER BY o_orderpriority""".stripMargin,
-      Map("t" -> ord, "c" -> "o_totalprice"))
-  }
-
-  /** Typed custom aggregate (the reference's `aggregator_fn_t` seam →
-    * `Aggregator[IN,BUF,OUT]`, SURVEY §2.3): Welford mean/variance.
-    */
-  private def qStatsMoments(s: SparkSession, d: String): DataFrame = {
-    val moments = udaf(TypedAggregates.Moments)
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .agg(moments(col("l_quantity")).as("m"))
-      .select(
-        col("l_returnflag"),
-        round(col("m._1"), 4).as("mean_qty"),
-        round(col("m._2"), 4).as("var_qty"))
-      .orderBy("l_returnflag")
-  }
-
-  /** Salted skew join — row-multiset identical to the plain PK–FK join. */
-  private def qSaltedJoin(s: SparkSession, d: String): DataFrame =
-    SkewJoin.saltedInnerJoin(
-        Tables.lineitem(s, d).select("l_orderkey", "l_quantity"),
-        Tables.orders(s, d).select("o_orderkey", "o_totalprice"),
-        "l_orderkey", "o_orderkey", saltFactor = 8)
-      .drop("o_orderkey")
-      .orderBy("l_orderkey", "l_quantity", "o_totalprice")
-
-  /** WRITE-ONCE ANN index — the persisted-artifact discipline the bucketed
-    * join and partitioned events already follow (and the reference's own
-    * build-once-probe-many hash table, `host/join/join_dpu.cc:255-301`),
-    * applied to the vector index: per data directory, ONE k-means/PQ
-    * training + list assignment writes
-    *   (id, v, list_id, code)  partitioned by list_id   — the index,
-    *   (list_id, centroid)                              — coarse quantizer,
-    *   (sub, code, centroid)                            — PQ codebook,
-    * and every subsequent ivf/pq/ivfpq query only READS: probe selection is
-    * driver metadata math over the 16 collected centroids, and the `isin`
-    * filter on the partition column prunes unprobed lists at the source.
-    * Training cost moves from per-query-execution to per-corpus.
-    */
-  private def annIndex(
-      s: SparkSession,
-      d: String): (DataFrame, Seq[(Int, Seq[Double])], graft.ext.Pq.Codebook) = {
-    import s.implicits._
-    val tag = dirTag(d)
-    val idxTable = s"graft_ann_idx_$tag"
-    val centTable = s"graft_ann_cent_$tag"
-    val cbTable = s"graft_ann_cb_$tag"
-    // the INDEX table is written last: it is the existence gate, so a
-    // partial earlier failure re-runs the whole build rather than serving
-    // a centroid table with no index behind it. The gate is CROSS-JVM:
-    // a fresh JVM (empty in-memory catalog) whose path already carries
-    // the fully-written artifact ATTACHES it (external tables + partition
-    // recovery) instead of retraining — training stays per-corpus, not
-    // per-process, and no overwrite can race a concurrent reader.
-    stagedOnceGuarded(s"/tmp/graft_ann/$tag")(s.catalog.tableExists(idxTable)) {
-      if (new java.io.File(s"/tmp/graft_ann/$tag/index", "_SUCCESS").exists()) {
-      s.sql(
-        s"""CREATE TABLE IF NOT EXISTS $cbTable
-           |(sub INT, code INT, centroid ARRAY<DOUBLE>)
-           |USING parquet LOCATION '/tmp/graft_ann/$tag/codebook'""".stripMargin)
-      s.sql(
-        s"""CREATE TABLE IF NOT EXISTS $centTable
-           |(list_id INT, centroid ARRAY<DOUBLE>)
-           |USING parquet LOCATION '/tmp/graft_ann/$tag/centroids'""".stripMargin)
-      s.sql(
-        s"""CREATE TABLE IF NOT EXISTS $idxTable
-           |(id BIGINT, v ARRAY<DOUBLE>, code BINARY, list_id INT)
-           |USING parquet PARTITIONED BY (list_id)
-           |LOCATION '/tmp/graft_ann/$tag/index'""".stripMargin)
-      s.sql(s"ALTER TABLE $idxTable RECOVER PARTITIONS")
-      } else {
-      val emb = Tables.embeddings(s, d)
-      val cb = graft.ext.Pq.train(emb, "embedding", m = 16, k = 16)
-      val (assigned, cents) = IvfIndex.build(emb, "vec_id", "embedding", nlist = 16)
-      cb.centroids.zipWithIndex.flatMap { case (codes, sub) =>
-        codes.zipWithIndex.map { case (c, code) => (sub, code, c.toSeq) }
-      }.toSeq.toDF("sub", "code", "centroid")
-        .write.option("path", s"/tmp/graft_ann/$tag/codebook")
-        .mode("overwrite").saveAsTable(cbTable)
-      cents
-        .write.option("path", s"/tmp/graft_ann/$tag/centroids")
-        .mode("overwrite").saveAsTable(centTable)
-      assigned
-        .withColumn("code",
-          graft.functions.NativeExpressions.pq_encode(col("v"), cb.centroids))
-        .write.partitionBy("list_id")
-        .option("path", s"/tmp/graft_ann/$tag/index")
-        .mode("overwrite").saveAsTable(idxTable)
-      }
-    }
-    val cents = s.table(centTable)
-      .as[(Int, Seq[Double])].collect().sortBy(_._1).toSeq
-    val cbRows = s.table(cbTable)
-      .as[(Int, Int, Seq[Double])].collect()
-    val m = cbRows.iterator.map(_._1).max + 1
-    val kk = cbRows.iterator.map(_._2).max + 1
-    val dsub = cbRows.head._3.length
-    val centroids = Array.ofDim[Array[Double]](m, kk)
-    cbRows.foreach { case (sub, code, c) => centroids(sub)(code) = c.toArray }
-    (s.table(idxTable), cents, graft.ext.Pq.Codebook(m, dsub, kk, centroids))
-  }
-
-  /** Product-quantization top-k: ADC scan over the PERSISTED 16-byte codes,
-    * wrapped in the exactness audit ([[annRecallVerdict]]; measured
-    * overlap 10/20 at sf0.001, 12/20 at sf0.01, floor 5 — quantization
-    * error only, no probe pruning; ADC approximates L2 and the unit-norm
-    * embeddings make L2 and cosine rankings coincide. CrossCheck
-    * additionally pins ADC score agreement with a fresh codebook).
-    */
-  private def qPqTopK(s: SparkSession, d: String): DataFrame = {
-    val (assigned, _, cb) = annIndex(s, d)
-    annRecallVerdict(s, d,
-      assigned
-        .select(
-          col("id"),
-          graft.functions.NativeExpressions
-            .pq_adc_dist(col("code"), cb.adcTable(queryVector(s, d))).as("adc_dist"))
-        .orderBy(col("adc_dist"), col("id"))
-        .limit(20),
-      floor = 5)
-  }
-
-  /** IVF approximate top-k over the persisted index (coarse-quantizer ANN
-    * scale path): probe lists chosen from collected centroid metadata,
-    * partition-pruned scan of 4/16 lists — wrapped in the exactness audit
-    * ([[annRecallVerdict]]; measured overlap 7/20 at sf0.001, 11/20 at
-    * sf0.01, floor 5, deterministic because k-means init is seeded).
-    */
-  private def qIvfTopK(s: SparkSession, d: String): DataFrame = {
-    val (assigned, cents, _) = annIndex(s, d)
-    val qv = queryVector(s, d)
-    annRecallVerdict(s, d,
-      IvfIndex.searchIndexed(assigned, IvfIndex.probeListIds(cents, qv, 4), qv, 20),
-      floor = 5)
-  }
-
-  /** Composed IVF+PQ top-k over the persisted index: partition-pruned
-    * lists scanned as PQ codes — probe coverage × 32× code shrink
-    * multiply. Wrapped in the exactness audit ([[annRecallVerdict]]) with
-    * the FULL PQ scan as the recall reference: the verdict isolates
-    * probe-pruning loss (measured overlap vs full-PQ 6/13/8 at
-    * sf0.001/0.01/0.1, floor 5), while quantization loss is q_pq_topk's
-    * verdict — together they bound the composition. Against exact cosine
-    * the compounded overlap bottoms at 3/20 (sf0.1, structureless
-    * embeddings — the coarse quantizer's worst case), which is the
-    * documented reason this row's floor is layered rather than direct.
-    * CrossCheck additionally pins ADC score agreement with a fresh
-    * codebook.
-    */
-  private def qIvfPqTopK(s: SparkSession, d: String): DataFrame = {
-    val (assigned, cents, cb) = annIndex(s, d)
-    val qv = queryVector(s, d)
-    val fullPq = assigned
-      .select(
-        col("id"),
-        graft.functions.NativeExpressions
-          .pq_adc_dist(col("code"), cb.adcTable(qv)).as("adc_dist"))
-      .orderBy(col("adc_dist"), col("id"))
-      .limit(20)
-    annRecallVerdict(s, d,
-      IvfIndex.searchIndexedPq(assigned, IvfIndex.probeListIds(cents, qv, 4), qv, 20, cb),
-      floor = 5, reference = Some(fullPq))
-  }
-
-  /** Importance-weighted sampling (training-mix primitive): keep each
-    * document with probability `min(1, n_chars/1000)` — longer documents
-    * preferred — decided by the engine-portable per-key hash, so the
-    * sampled SET itself is DuckDB-checked, not just its size. One scan,
-    * no shuffle before the final summary aggregate.
-    */
-  private def qWeightedSample(s: SparkSession, d: String): DataFrame =
-    Sampling.weightedPortableSample(
-      Tables.documents(s, d)
-        .withColumn("w", least(lit(1.0), col("n_chars") / lit(1000.0))),
-      "doc_id", "w")
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_sampled"), round(sum(col("w")), 4).as("sum_w"))
-      .orderBy("lang")
-
-  /** Sample-to-target-mix (the data-mixing step of a training pipeline):
-    * resample the corpus so sources sit in a prescribed ratio — here
-    * "curated" sources src10–19 weighted 3× over src0–9 — keeping the
-    * scarcest source whole ([[graft.ext.Sampling.sampleToMix]]). Source
-    * counts ride as an in-plan broadcastable table; membership is the
-    * portable hash, so the exact sampled multiset is oracle-checked.
-    */
-  private def qSampleMix(s: SparkSession, d: String): DataFrame = {
-    val target = (0 until 20)
-      .map(i => s"src$i" -> (if (i < 10) 1.0 else 3.0)).toMap
-    Sampling.sampleToMix(Tables.documents(s, d), "doc_id", "source", target)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_sampled"))
-      .orderBy("source")
-  }
-
-  /** Incremental ANN ingest: a hash-designated new batch (vec_id ≡ 9 mod
-    * 10) assigned to the PERSISTED coarse quantizer — no retraining, pure
-    * scan against the collected centroid metadata. The per-list landing
-    * counts are k-means artifacts no portable engine reproduces, so the
-    * row emits the verdict form: the batch size (conservation — the DuckDB
-    * oracle counts the same mod-designated batch) plus `assign_ok`, the
-    * in-plan check that every vector landed exactly once in a valid list
-    * (ids are 1-based, 1..nlist). `CrossCheckSpec` keeps the stronger
-    * floor — incremental assignment equals the list a full rebuild
-    * chooses, and the per-list breakdown stays tested there via
-    * [[IvfIndex.assign]] directly. At 100 TB this is the ingest path that
-    * keeps the index write-once-plus-appends instead of periodically
-    * retrained.
-    */
-  private def qIvfIncremental(s: SparkSession, d: String): DataFrame = {
-    val (_, cents, _) = annIndex(s, d)
-    val nlist = cents.size
-    val batch = Tables.embeddings(s, d)
-      .filter(pmod(col("vec_id"), lit(10)) === 9)
-    IvfIndex.assign(batch, "vec_id", "embedding", cents.map(_._2))
-      .agg(
-        count(lit(1)).as("n_assigned"),
-        countDistinct(col("id")).as("n_distinct"),
-        min(col("list_id")).as("min_list"),
-        max(col("list_id")).as("max_list"))
-      .select(
-        col("n_assigned"),
-        (col("min_list") >= 1 && col("max_list") <= nlist &&
-          col("n_assigned") === col("n_distinct")).as("assign_ok"))
-  }
-
-  /** Deterministic mod-sample: engine-portable membership (`key % m = 0`),
-    * so the DuckDB oracle reproduces the exact sampled SET. The hash-based
-    * split assignment is its own oracled row ([[qSplitCounts]]).
-    */
-  private def qSample(s: SparkSession, d: String): DataFrame =
-    Sampling.modSample(Tables.orders(s, d), "o_orderkey", m = 10)
-      .select(col("o_orderkey"), col("o_totalprice"))
-      .orderBy("o_orderkey")
-
-  /** Per-stratum deterministic sample (balance a training mix): an
-    * independent 20% within every event_type, on the engine-portable md5
-    * hash so the DuckDB oracle reproduces the exact sampled SET, not just
-    * its size. Stable under repartitioning — membership is a pure function
-    * of (stratum, key) — which `df.sample`/`sampleBy` are not.
-    */
-  private def qStratifiedSample(s: SparkSession, d: String): DataFrame =
-    Sampling.stratifiedPortableSample(
-        Tables.events(s, d), "event_id", "event_type", fraction = 0.2)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_sampled"),
-        sum(col("event_id")).cast("long").as("sum_ids"))
-      .orderBy("event_type")
-
-  /** Train/val/test assignment on the engine-portable md5 key hash — the
-    * same SQL reproduces the split in DuckDB, which makes the disjoint
-    * partition itself oracle-checkable (the xxhash64 variant stays
-    * available as [[Sampling.assignSplits]] for Spark-only pipelines).
-    */
-  private def qSplitCounts(s: SparkSession, d: String): DataFrame =
-    Sampling.assignSplitsPortable(Tables.documents(s, d), "doc_id",
-        valFraction = 0.1, testFraction = 0.1)
-      .groupBy(col("split"))
-      .agg(count(lit(1)).as("n_docs"))
-      .orderBy("split")
-
-  // ------------------------------------------- relational surface, cont.
-
-  /** Ranking/navigation window battery: lag, lead, ntile, percent_rank,
-    * cume_dist over a per-group total order (full unique key ⇒
-    * deterministic across engines).
-    */
-  private def qWindowFuncs(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ord = Seq(col("o_totalprice"), col("o_orderkey"))
-    val w = Window.partitionBy(col("o_orderpriority")).orderBy(ord: _*)
-    Tables.orders(s, d)
-      .select(
-        col("o_orderkey"),
-        col("o_orderpriority"),
-        lag(col("o_totalprice"), 1).over(w).as("prev_price"),
-        lead(col("o_totalprice"), 1).over(w).as("next_price"),
-        ntile(4).over(w).cast("long").as("quartile"),
-        round(percent_rank().over(w), 6).as("pct_rank"),
-        round(cume_dist().over(w), 6).as("cdist"))
-      .orderBy("o_orderkey")
-  }
-
-  /** Time-RANGE rolling window: per event, count/sum of the SAME TYPE's
-    * events in the trailing hour — a RANGE frame over epoch seconds, the
-    * per-row sliding aggregate (vs `q_events_window`'s tumbling buckets).
-    * RANGE semantics include peers, so ties on the timestamp are
-    * order-independent and the result is deterministic in both engines.
-    */
-  private def qRollingWindow(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("event_type")).orderBy(col("ts_sec"))
-      .rangeBetween(-3600L, 0L)
-    Tables.events(s, d)
-      .select(
-        col("event_id"), col("event_type"),
-        unix_timestamp(col("ts")).as("ts_sec"), col("value"))
-      .select(
-        col("event_id"), col("event_type"),
-        count(lit(1)).over(w).as("n_prev_hour"),
-        round(sum(col("value")).over(w), 4).as("sum_prev_hour"))
-      .orderBy("event_id")
-  }
-
-  /** Edit-distance near-dup pairs: customer names within levenshtein ≤ 2,
-    * same-nation only — via symmetric-delete blocking
-    * ([[Dedup.editDistancePairs]]). The earlier nation-only blocking had a
-    * FIXED 25-block key space: within-block work is quadratic and block
-    * size grows linearly with the corpus, so at 100× the per-block verify
-    * is 10,000× on 25 tasks. Deletion-variant buckets grow WITH the corpus
-    * (block count ≫ cores already at sf0.1), keep the verify linear in the
-    * number of true near-dup families, and inherit the capBuckets ceiling
-    * + drop audit. Result set is identical (the blocking is complete for
-    * lev ≤ 2 — see DeletionHashes' completeness argument), so the oracle is
-    * unchanged.
-    */
-  private def qEditPairs(s: SparkSession, d: String): DataFrame =
-    Dedup.editDistancePairs(
-        Tables.customer(s, d).select("c_custkey", "c_nationkey", "c_name"),
-        "c_custkey", "c_name", maxDist = 2, groupCols = Seq("c_nationkey"))
-      .orderBy("id_a", "id_b")
-
-  /** HAVING + IN-subquery (TPC-H Q18 shape): orders whose total line
-    * quantity clears a threshold.
-    */
-  private def qHavingIn(s: SparkSession, d: String): DataFrame = {
-    val orders = tempView(s, d, "graft_orders", Tables.orders(s, d))
-    val li = tempView(s, d, "graft_lineitem", Tables.lineitem(s, d))
-    s.sql(
-      s"""SELECT o.o_orderkey, o.o_totalprice,
-         |       CAST(SUM(l.l_quantity) AS DOUBLE) AS total_qty
-         |FROM $orders o JOIN $li l ON o.o_orderkey = l.l_orderkey
-         |WHERE o.o_orderkey IN (SELECT l_orderkey FROM $li
-         |                       GROUP BY l_orderkey HAVING SUM(l_quantity) > 210)
-         |GROUP BY o.o_orderkey, o.o_totalprice
-         |ORDER BY o.o_orderkey""".stripMargin)
-  }
-
-  /** Explicit GROUPING SETS — the general form behind rollup/cube. */
-  private def qGroupingSets(s: SparkSession, d: String): DataFrame = {
-    val li = tempView(s, d, "graft_lineitem", Tables.lineitem(s, d))
-    s.sql(
-      s"""SELECT l_returnflag, l_linestatus,
-         |       CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty,
-         |       COUNT(*) AS n
-         |FROM $li
-         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-         |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin)
-  }
-
-  /** Left outer join with null-aware aggregation: per customer, the count
-    * and value of URGENT orders (0 for customers with none — the rows an
-    * inner join would drop).
-    */
-  private def qOuterJoin(s: SparkSession, d: String): DataFrame = {
-    val c = Tables.customer(s, d)
-    val o = Tables.orders(s, d).filter(col("o_orderpriority") === "1-URGENT")
-    c.join(o, c("c_custkey") === o("o_custkey"), "left_outer")
-      .groupBy(col("c_custkey"))
-      .agg(
-        count(col("o_orderkey")).as("n_urgent"),
-        round(coalesce(sum(col("o_totalprice")), lit(0.0)), 2).as("urgent_value"))
-      .orderBy("c_custkey")
-  }
-
-  /** Full outer join of two keyed aggregates (urgent vs low order counts
-    * per customer) — exercises null key coalescing on both sides.
-    */
-  private def qFullOuterJoin(s: SparkSession, d: String): DataFrame = {
-    val o = Tables.orders(s, d)
-    val a = o.filter(col("o_orderpriority") === "1-URGENT")
-      .groupBy(col("o_custkey").as("k")).agg(count(lit(1)).as("n_urgent"))
-    val b = o.filter(col("o_orderpriority") === "5-LOW")
-      .groupBy(col("o_custkey").as("k")).agg(count(lit(1)).as("n_low"))
-    a.join(b, Seq("k"), "full_outer")
-      .select(
-        col("k"),
-        coalesce(col("n_urgent"), lit(0L)).as("n_urgent"),
-        coalesce(col("n_low"), lit(0L)).as("n_low"))
-      .orderBy("k")
-  }
-
-  /** CUBE grouping sets with grouping flags (ROLLUP's sibling). */
-  private def qCube(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .cube(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        grouping(col("l_returnflag")).cast("long").as("g_rf"),
-        grouping(col("l_linestatus")).cast("long").as("g_ls"),
-        sum(col("l_quantity")).cast("double").as("sum_qty"),
-        count(lit(1)).as("n"))
-      .orderBy(
-        col("g_rf"), col("g_ls"),
-        col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-
-  /** Correlated EXISTS (TPC-H Q4 shape): orders with at least one
-    * max-quantity line, counted by priority.
-    */
-  private def qExistsCorrelated(s: SparkSession, d: String): DataFrame = {
-    val orders = tempView(s, d, "graft_orders", Tables.orders(s, d))
-    val li = tempView(s, d, "graft_lineitem", Tables.lineitem(s, d))
-    s.sql(
-      s"""SELECT o_orderpriority, COUNT(*) AS n_orders
-         |FROM $orders o
-         |WHERE EXISTS (SELECT 1 FROM $li l
-         |              WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity >= 48)
-         |GROUP BY o_orderpriority
-         |ORDER BY o_orderpriority""".stripMargin)
-  }
-
-  /** Correlated scalar subquery: line items priced at their order's
-    * minimum (Q2's min-per-group shape on the tables we have).
-    */
-  private def qCorrelatedScalar(s: SparkSession, d: String): DataFrame = {
-    val li = tempView(s, d, "graft_lineitem", Tables.lineitem(s, d))
-    s.sql(
-      s"""SELECT l_orderkey, l_extendedprice
-         |FROM $li l1
-         |WHERE l_extendedprice = (SELECT MIN(l2.l_extendedprice)
-         |                         FROM $li l2
-         |                         WHERE l2.l_orderkey = l1.l_orderkey)
-         |ORDER BY l_orderkey, l_extendedprice""".stripMargin)
-  }
-
-  /** arg-min/arg-max aggregates (value at the extremum of another column —
-    * keyed on the unique o_orderkey so ties cannot occur).
-    */
-  private def qArgMinMax(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .groupBy(col("o_orderpriority"))
-      .agg(
-        max_by(col("o_totalprice"), col("o_orderkey")).as("price_at_max_key"),
-        min_by(col("o_totalprice"), col("o_orderkey")).as("price_at_min_key"),
-        max(col("o_orderkey")).as("max_key"))
-      .orderBy("o_orderpriority")
-
-  /** List aggregation, canonicalized to a string so the result is
-    * engine-comparable: each customer's sorted order ids.
-    */
-  private def qCollectList(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .groupBy(col("o_custkey"))
-      .agg(concat_ws(",",
-        transform(sort_array(collect_list(col("o_orderkey"))), _.cast("string")))
-        .as("order_ids"))
-      .orderBy("o_custkey")
-
-  /** Second-moment statistics: correlation / covariance / stddev (rounded —
-    * float summation order differs across engines).
-    */
-  private def qStatsCorr(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        round(corr(col("l_quantity"), col("l_extendedprice")), 4).as("corr_qp"),
-        round(covar_samp(col("l_quantity"), col("l_extendedprice")), 2).as("covar_qp"),
-        round(stddev_samp(col("l_extendedprice")), 4).as("sd_price"))
-      .orderBy("l_returnflag")
-
-  /** Date/time arithmetic surface (dates rendered as strings — identical
-    * text in every engine beats praying over date encodings).
-    */
-  private def qDateOps(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .select(
-        col("o_orderkey"),
-        date_format(col("o_orderdate").cast("date"), "yyyy-MM-dd").as("o_date"),
-        date_format(trunc(col("o_orderdate").cast("date"), "month"), "yyyy-MM-dd")
-          .as("month_start"),
-        date_format(last_day(col("o_orderdate").cast("date")), "yyyy-MM-dd")
-          .as("month_end"),
-        date_format(add_months(col("o_orderdate").cast("date"), 3), "yyyy-MM-dd")
-          .as("plus3m"),
-        datediff(col("o_orderdate").cast("date"), lit("1992-01-01").cast("date"))
-          .cast("long").as("days_since"),
-        dayofweek(col("o_orderdate").cast("date")).cast("long").as("dow"),
-        quarter(col("o_orderdate").cast("date")).cast("long").as("qtr"))
-      .orderBy("o_orderkey")
-
-  /** String-function surface over the customer dimension. */
-  private def qStringOps(s: SparkSession, d: String): DataFrame =
-    Tables.customer(s, d)
-      .select(
-        col("c_custkey"),
-        upper(col("c_mktsegment")).as("seg_u"),
-        lpad(col("c_custkey").cast("string"), 10, "0").as("key_pad"),
-        reverse(col("c_name")).as("name_rev"),
-        regexp_extract(col("c_name"), "([0-9]+)", 1).as("name_num"),
-        replace(col("c_name"), lit("Customer"), lit("C")).as("name_short"),
-        concat_ws("|", col("c_mktsegment"), col("c_custkey").cast("string"))
-          .as("seg_key"))
-      .orderBy("c_custkey")
-
-  /** Fact-to-dimension join on part (TPC-H Q14 flavor): revenue by brand,
-    * dimension broadcast.
-    */
-  private def qPartJoin(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-    val p = Tables.part(s, d)
-    li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
-      .groupBy(col("p_brand"))
-      .agg(
-        round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"),
-        count(lit(1)).as("n_items"))
-      .orderBy("p_brand")
-  }
-
-  /** Conditional/null-handling scalar surface. */
-  private def qConditional(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .select(
-        col("o_orderkey"),
-        coalesce(nullif(col("o_orderstatus"), lit("O")), lit("open")).as("status_x"),
-        greatest(col("o_totalprice"), lit(50000.0)).as("floor_price"),
-        least(col("o_totalprice"), lit(250000.0)).as("cap_price"),
-        when(col("o_totalprice").between(50000.0, 250000.0), lit("mid"))
-          .when(col("o_totalprice") < 50000.0, lit("low"))
-          .otherwise(lit("high")).as("band"))
-      .orderBy("o_orderkey")
-
-  /** CDC-style merge/upsert expressed relationally: a deterministic
-    * "updates" slice (every 7th order, repriced) full-outer-merged into the
-    * base — updated rows take the new values, inserts survive, untouched
-    * rows pass through. The engine-level building block behind MERGE INTO.
-    */
-  private def qMergeUpsert(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.orders(s, d)
-      .select(col("o_orderkey").as("k"), col("o_totalprice").as("price"))
-    val updates = Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(7)) === 0)
-      .select(col("o_orderkey").as("k"),
-        // +1000 not ×1.1: a multiply can land exactly on a half-cent
-        // boundary where Spark (HALF_UP on shortest repr) and DuckDB
-        // round differently; adding an exact constant cannot
-        round(col("o_totalprice") + 1000.0, 2).as("new_price"))
-    base.join(updates, Seq("k"), "full_outer")
-      .select(
-        col("k"),
-        round(coalesce(col("new_price"), col("price")), 2).as("price"),
-        when(col("new_price").isNotNull, lit("updated"))
-          .otherwise(lit("unchanged")).as("op"))
-      .orderBy("k")
-  }
-
-  /** Per-dimension standardization (z-scores) of the embedding column —
-    * classic feature scaling, kept in exploded (vec_id, dim, z) form: the
-    * per-dim moments are a 64-row aggregate joined back to the elements.
-    */
-  private def qStandardize(s: SparkSession, d: String): DataFrame = {
-    val el = Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        posexplode(toDoubleArray(col("embedding"))).as(Seq("dim", "x")))
-    val stats = el.groupBy(col("dim"))
-      .agg(avg(col("x")).as("mu"), stddev_samp(col("x")).as("sd"))
-    el.join(broadcast(stats), Seq("dim"))
-      .select(
-        col("vec_id"),
-        col("dim").cast("long").as("dim"),
-        // + 0.0 canonicalizes IEEE -0.0 (a tiny negative rounded to
-        // zero keeps its sign bit and breaks byte-level hash compares)
-        (round((col("x") - col("mu")) / col("sd"), 4) + lit(0.0)).as("z"))
-      .filter(col("vec_id") < 100)
-      .orderBy("vec_id", "dim")
-  }
-
-  /** Boolean aggregates: bool_and / bool_or / count_if per group. */
-  private def qBoolAgg(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        bool_and(col("l_quantity") > 0.0).as("all_positive"),
-        bool_or(col("l_discount") > 0.09).as("any_deep_discount"),
-        count_if(col("l_tax") > 0.04).as("n_high_tax"))
-      .orderBy("l_returnflag")
-
-  /** Unpivot/melt: wide per-flag aggregates to (flag, metric, value) rows. */
-  private def qUnpivot(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        sum(col("l_quantity")).cast("double").as("sum_qty"),
-        round(sum(col("l_extendedprice")), 2).as("sum_base"))
-      .unpivot(
-        Array(col("l_returnflag")),
-        Array(col("sum_qty"), col("sum_base")),
-        "metric", "value")
-      .orderBy("l_returnflag", "metric")
-
-  /** Map-function battery — MapType as a first-class column: per return
-    * flag, the linestatus→count map is BUILT in an aggregate
-    * (`map_from_entries` over a `sort_array`ed entry list — maps are
-    * unordered, so deterministic construction sorts the entries first),
-    * then read back through the higher-order map surface: `size`,
-    * `try_element_at` (typed point lookup, NULL on miss — the ANSI-safe
-    * form: plain `element_at` THROWS on a missing key under Spark 4's
-    * default ANSI mode, so a corpus where some flag group lacks one
-    * linestatus would kill the row instead of reading NULL), `map_filter` (the
-    * lambda prunes small statuses), and a `map_values`+`aggregate` fold
-    * re-summing the counts. The collect_list rides a BOUNDED domain (the
-    * per-flag status alphabet, ≤ a handful of entries) — the same
-    * compact-domain contract [[qEwma]] documents, never corpus-sized
-    * rows. Everything is oracled as scalars: the map round-trips back to
-    * the conditional counts DuckDB computes relationally.
-    */
-  private def qMapOps(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("n"))
-      .groupBy(col("l_returnflag"))
-      .agg(map_from_entries(
-        sort_array(collect_list(struct(col("l_linestatus"), col("n")))))
-        .as("m"))
-      .select(
-        col("l_returnflag"),
-        size(col("m")).as("n_statuses"),
-        try_element_at(col("m"), lit("O")).as("n_open"),
-        try_element_at(col("m"), lit("F")).as("n_final"),
-        size(map_filter(col("m"), (_, v) => v >= lit(1000L)))
-          .as("n_big_statuses"),
-        aggregate(map_values(col("m")), lit(0L), (acc, v) => acc + v)
-          .as("n_total"))
-      .orderBy("l_returnflag")
-
-  /** Array-function battery over the token arrays (canonicalized to
-    * scalars/strings so results are engine-comparable).
-    */
-  private def qArrayOps(s: SparkSession, d: String): DataFrame = {
-    val toks = tokens(lower(col("text")))
-    Tables.documents(s, d)
-      .select(
-        col("doc_id").as("id"),
-        array_join(slice(sort_array(toks), 1, 3), ",").as("first3"),
-        size(array_distinct(toks)).cast("long").as("n_distinct"),
-        array_contains(toks, "the").cast("int").cast("long").as("has_the"),
-        array_position(toks, "the").as("pos_the"))
-      .orderBy("id")
-  }
-
-  /** Time-series resample: hourly buckets per user over each user's active
-    * span, zero-filled where no events landed (sequence + explode + left
-    * join — the standard gap-fill shape).
-    */
-  private def qResampleFill(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d).filter(col("user_id") < 50)
-    val buckets = ev.groupBy(col("user_id"))
-      .agg(
-        date_trunc("hour", min(col("ts"))).as("h0"),
-        date_trunc("hour", max(col("ts"))).as("h1"))
-      .select(col("user_id"),
-        explode(sequence(col("h0"), col("h1"), expr("INTERVAL 1 HOUR"))).as("bucket"))
-    val counts = ev
-      .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg(count(lit(1)).as("n"))
-    buckets.join(counts, Seq("user_id", "bucket"), "left_outer")
-      .select(
-        col("user_id"),
-        unix_timestamp(col("bucket")).as("bucket_ts"),
-        coalesce(col("n"), lit(0L)).as("n_events"))
-      .orderBy("user_id", "bucket_ts")
-  }
-
-  /** PII scrub over the corpus: redacted text + did-anything-change flag. */
-  private def qRedact(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .select(
-        col("doc_id").as("id"),
-        TextAnalysis.redactPii(col("text")).as("clean_text"))
-      .withColumn("changed",
-        (col("clean_text") rlike "<EMAIL>|<PHONE>|<ID>").cast("int").cast("long"))
-      .orderBy("id")
-
-  /** Sliding-window chunking — one row per (doc, token window). */
-  private def qChunkDocs(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.chunkDocuments(Tables.documents(s, d), "doc_id", "text",
-        chunkSize = 64, stride = 48)
-      .select(col("id"), col("chunk_idx"), col("n_chunk_tokens"),
-        substring(col("chunk_text"), 1, 40).as("chunk_head"))
-      .orderBy("id", "chunk_idx")
-
-  /** Boilerplate detection: per-document fraction of word-8-gram spans
-    * that also occur in ANOTHER document — the repeated-header/footer
-    * signal a curation pipeline thresholds to strip templated content.
-    * Same counting-only inverted-index shape as the Jaccard family: spans
-    * are distinct within a doc ([[GraftFunctions.wordShingles]]), so the
-    * span's group count IS its document frequency; only the 8-byte span
-    * hash crosses the shuffle, never the text. The oracle reproduces the
-    * shingling with raw strings — hash collisions would show up as a
-    * value mismatch, so the gate also audits the hashing assumption.
-    */
-  private def qBoilerplate(s: SparkSession, d: String): DataFrame = {
-    val spans = Tables.documents(s, d)
-      .select(col("doc_id"), explode(wordShingles(col("text"), 8)).as("g"))
-      .select(col("doc_id"), xxhash64(col("g")).as("g_h"))
-    val docFreq = spans.groupBy("g_h").agg(count(lit(1)).as("df"))
-    spans.join(docFreq, "g_h")
-      .groupBy("doc_id")
-      .agg(
-        count(lit(1)).as("n_spans"),
-        sum(when(col("df") >= 2, lit(1L)).otherwise(lit(0L))).as("n_shared"))
-      .withColumn("shared_frac",
-        round(col("n_shared").cast("double") / col("n_spans").cast("double"), 6))
-      .orderBy("doc_id")
-  }
-
-  /** Deterministic per-source sequence packing into 512-token bins. */
-  private def qPackSequences(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.packSequences(Tables.documents(s, d), "source", "doc_id", "text",
-        capacity = 512)
-      .groupBy(col("grp"), col("bin"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("bin_tokens"))
-      .orderBy("grp", "bin")
-
-  // -------------------------------------------- north-star: multimodal
-
-  private def qMultimodal(s: SparkSession, d: String): DataFrame = {
-    val feats = Multimodal.featurize(Tables.documents(s, d), "doc_id", "text", "text/plain")
-    Multimodal.sampleFrames(Multimodal.resizeMeta(feats, 256, 256), 4)
-      .select(
-        col("id"), col("media_type"), col("byte_len"), col("width"), col("height"),
-        col("n_frames"), col("resized_width"), col("resized_height"),
-        size(col("frame_idx")).as("n_sampled"))
-      .orderBy("id")
-  }
-
-  /** REAL codec-free media-header audit: serialize a valid PNG
-    * signature+IHDR prefix per document (dims derived from doc_id), then
-    * parse width/height/signature BACK from the raw bytes with
-    * [[Multimodal.pngWidth]]/[[Multimodal.pngHeight]] — fixed-offset
-    * big-endian byte slicing as codegen'd column expressions, no image
-    * library. This is the header-level pass a 100 TB multimodal ingest
-    * runs BEFORE paying for decode (dimension filters, corrupt-signature
-    * quarantine): stateless per-row expressions, no shuffle. The oracle
-    * computes the expected dims ARITHMETICALLY — only a byte-correct
-    * serializer + parser round-trip can match it.
-    */
-  private def qMediaHeaders(s: SparkSession, d: String): DataFrame = {
-    val media = Tables.documents(s, d).select(
-      col("doc_id"),
-      Multimodal.pngHeader(
-        lit(1L) + pmod(col("doc_id"), lit(640L)),
-        lit(1L) + pmod(col("doc_id") * 7L, lit(480L))).as("media"))
-    media.select(
-        col("doc_id"),
-        Multimodal.pngSigOk(col("media")).as("sig_ok"),
-        Multimodal.pngWidth(col("media")).as("width"),
-        Multimodal.pngHeight(col("media")).as("height"),
-        length(col("media")).cast("long").as("n_bytes"))
-      .orderBy("doc_id")
-  }
-
-  /** `binaryFile` SOURCE — the multimodal INGESTION path the
-    * [[qMediaHeaders]]/[[qMultimodal]] rows assume upstream of them: a
-    * directory of opaque media files becomes one row per file (path +
-    * length metadata + the raw bytes as a `binary` column), which is how
-    * an image/audio corpus enters Spark at 100 TB (one file = one row;
-    * parallelism = files-per-task via `maxPartitionBytes`;
-    * `pathGlobFilter`/`recursiveFileLookup` are the production intake
-    * knobs). The staged fixture is 16 deterministic PNG-header blobs
-    * derived by the SAME codegen'd serializer the parse row uses —
-    * written once per corpus dir by a driver loop over the collected
-    * 16-row, 29-bytes-each result (KB-scale by construction, the
-    * IvfIndex collect-contract); the read side parses width/height back
-    * out of the `content` bytes with the native byte-slice expressions
-    * (no UDF) and recovers the shard id from the file PATH — the
-    * metadata-join every file-addressed corpus does. The oracle
-    * recomputes the expected table purely arithmetically (the blob
-    * dimensions are formulas of the shard id), so the round-trip
-    * through real files on disk is value-checked end to end.
-    */
-  private def qBinarySource(s: SparkSession, d: String): DataFrame = {
-    val dir = s"/tmp/graft_bin/${dirTag(d)}/shards"
-    // guard on ALL 16 shards, not a sentinel: a crash mid-staging must
-    // make the next run re-stage, not serve a partial corpus forever
-    def allShards = (0 until 16).forall(i =>
-      new java.io.File(dir, s"shard_$i.png").exists())
-    stagedOnceGuarded(dir)(allShards) {
-      val blobs = s.range(16).select(
-        col("id"),
-        Multimodal.pngHeader(
-          lit(1L) + col("id") * 40L,
-          lit(1L) + col("id") * 30L).as("media"))
-        .collect() // 16 rows × 29 bytes — driver-side file write is the point
-      // write into a sibling temp dir, then rename into place: readers
-      // never observe a half-written corpus, and a crash leaves only the
-      // temp dir (which the next stage attempt clears)
-      val tmp = new java.io.File(s"$dir.tmp")
-      graft.engine.Fs.deleteRecursively(tmp)
-      tmp.mkdirs()
-      blobs.foreach { r =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(tmp.getPath, f"shard_${r.getLong(0)}%d.png"),
-          r.getAs[Array[Byte]](1))
-      }
-      graft.engine.Fs.deleteRecursively(new java.io.File(dir))
-      if (!tmp.renameTo(new java.io.File(dir)))
-        throw new IllegalStateException(s"rename $tmp -> $dir failed")
-    }
-    s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.png")
-      .load(dir)
-      .select(
-        regexp_extract(col("path"), "shard_(\\d+)\\.png$", 1)
-          .cast("long").as("shard"),
-        Multimodal.pngSigOk(col("content")).as("sig_ok"),
-        Multimodal.pngWidth(col("content")).as("width"),
-        Multimodal.pngHeight(col("content")).as("height"),
-        col("length").as("n_bytes"))
-      .orderBy("shard")
-  }
-
-  /** Custom DataSourceV2 READ path as a catalog row
-    * ([[graft.sources.v2.SeqSource]] — the connector seam itself): a
-    * range predicate on `id` and a 2-column projection run against the
-    * synthetic source, and the SOURCE must do the work — the id filters
-    * fold into the generated range (no residual FilterExec re-checks
-    * them, no out-of-range row is ever materialized), the projection
-    * prunes to the requested columns, post-pushdown statistics feed the
-    * planner, and the surviving range splits into 8 input partitions.
-    * PlanAuditSpec pins the folded range + pruned column list in the
-    * scan description. The mod7 predicate is deliberately NOT consumable
-    * by the source — it must survive as the plan's only row-level
-    * filter, pinning the residual-filter contract. The oracle recomputes
-    * the row formula arithmetically over generate_series.
-    */
-  private def qDsv2Source(s: SparkSession, d: String): DataFrame =
-    s.read.format("graft.sources.v2.SeqSource")
-      .option("n", 1000000L).option("slices", 8).load()
-      .filter(col("id") >= 250000L && col("id") < 750000L &&
-        col("mod7") =!= 3L)
-      .groupBy(col("mod7"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("cents")).as("sum_cents"))
-      .orderBy("mod7")
-
-  /** DSv2 AGGREGATE pushdown ([[graft.sources.v2.SeqSource]] again, one
-    * seam deeper than [[qDsv2Source]]): COUNT(*)/SUM/MIN/MAX over the id
-    * range push INTO the source, which answers them in closed form —
-    * count = hi−lo, the arithmetic series for sum, the range ends for
-    * min/max — without generating a single data row. Complete pushdown:
-    * the plan contains NO aggregate operator, just a project over the
-    * 1-row scan (PlanAuditSpec pins the `SeqAggScan` description and the
-    * absence of HashAggregate). This is what a 100 TB source does with
-    * its zone-map/footer statistics: a full-table COUNT/MIN/MAX is a
-    * metadata read, not a scan. Aggregates the source has no closed form
-    * for (mod7, cents) are DECLINED and fall back to the row path — the
-    * decline leg of the contract. The oracle replays the same aggregates
-    * over generate_series.
-    */
-  private def qDsv2AggPushdown(s: SparkSession, d: String): DataFrame =
-    s.read.format("graft.sources.v2.SeqSource")
-      .option("n", 1000000L).option("slices", 8).load()
-      .filter(col("id") >= 100000L && col("id") < 900000L)
-      .agg(count(lit(1)).as("n_rows"), sum(col("id")).as("sum_id"),
-        min(col("id")).as("min_id"), max(col("id")).as("max_id"))
-
-  /** DSv2 TopN pushdown (the third connector leg):
-    * `ORDER BY id DESC LIMIT 5` pushes COMPLETELY into the source — the
-    * sequence is totally ordered by id, so the top-5 is the last 5 of
-    * the filter-folded range, answered by range arithmetic and emitted
-    * in order from one partition. The plan keeps NO Sort, TakeOrdered or
-    * Limit operator (PlanAuditSpec pins the `ordered=desc` 5-row range
-    * in the scan description and the operators' absence); TopN on a
-    * non-monotone column (mod7/cents) is DECLINED and falls back to
-    * Spark's TakeOrdered — the decline leg. At 100 TB this is "give me
-    * the newest k records" answered from source order metadata instead
-    * of a full scan + global top-k. LIMIT/OFFSET pushdown ride the same
-    * range arithmetic ([[graft.sources.v2.SeqScanBuilder]]).
-    */
-  private def qDsv2TopN(s: SparkSession, d: String): DataFrame =
-    s.read.format("graft.sources.v2.SeqSource")
-      .option("n", 1000000L).option("slices", 8).load()
-      .filter(col("id") >= 100000L && col("id") < 900000L)
-      .orderBy(col("id").desc)
-      .limit(5)
-      .select(col("id"), col("cents"))
-
-  /** RUNTIME filtering into the custom source (r14 verdict #4 —
-    * [[graft.sources.v2.SeqScan]]'s [[
-    * org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering]]
-    * leg, the connector analog of the parquet path's DPP row): the fact
-    * side is the synthetic source's FULL million-row domain, the dim side
-    * is a selectively-filtered orders slice, and at runtime Spark
-    * evaluates the dim's join keys first and hands them to the scan as an
-    * IN predicate — the scan narrows its id range and PRUNES the grid
-    * cells outside it before generating a single fact row (32 static
-    * slices → 1 surviving, pinned via the scan description's
-    * `runtime=`/`parts=` fields in PlanAuditSpec). The join still
-    * verifies every surviving row, so min/max narrowing (the zone-map
-    * discipline) is sufficient, never wrong. At 100 TB this is "the dim
-    * filter decides which fact files are opened".
-    *
-    * The dim's selective predicate is deliberately NOT on the join key:
-    * a key predicate (`o_orderkey < 500`) is propagated onto the fact
-    * side STATICALLY by constraint inference and folds into the scan
-    * range at plan time — real work for the pushdown leg, but it leaves
-    * the runtime filter trivially true. A non-key predicate (priority)
-    * cannot be inferred across the join, so the id bound exists only in
-    * the dim's runtime key set — exactly the case runtime filtering is
-    * for.
-    */
-  private def qDsv2RuntimeFilter(s: SparkSession, d: String): DataFrame = {
-    val fact = s.read.format("graft.sources.v2.SeqSource")
-      .option("n", 1000000L).option("slices", 32).load()
-    val dim = Tables.orders(s, d)
-      .filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_orderkey").as("id"), col("o_totalprice"))
-    fact.join(dim, "id")
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("mod7")).as("sum_mod7"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("price_cents"))
-  }
-
-  /** DSv2 WRITE path ([[graft.sources.v2.StageSource]] — r14 verdict #3,
-    * the connector seam's other half, the reference's first-class sink
-    * node `host/filter/filter_native.cc:64-66`): an aggregate is written
-    * THROUGH the custom connector (SupportsWrite/BatchWrite with the
-    * two-phase task/job commit a 1000-executor write needs — unique
-    * per-attempt temp files, job-commit move, `_SUCCESS` marker last,
-    * truncate-on-overwrite deferred to commit so a failed overwrite never
-    * destroys the previous snapshot) and read back through the
-    * connector's scan. Integral cent sums keep the oracle portable.
-    * PlanAuditSpec pins the V2 write node (OverwriteByExpression) and the
-    * commit layout.
-    */
-  private def qDsv2Write(s: SparkSession, d: String): DataFrame = {
-    val root = s"/tmp/graft_dsv2w/${dirTag(d)}/flagstats"
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag").as("flag"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(round(col("l_extendedprice") * 100).cast("long")).as("price_cents"))
-      .write.format("graft.sources.v2.StageSource")
-      .option("path", root).mode("overwrite").save()
-    s.read.format("graft.sources.v2.StageSource").option("path", root).load()
-      .orderBy("flag")
-  }
-
-  /** MERGE-INTO-shaped upsert THROUGH the DSv2 write path (r14 verdict
-    * #8): a base snapshot is written via the connector, a delta (updated
-    * cents + literal status for an overlapping key range, plus brand-new
-    * keys) is merged with delta-wins semantics — full-outer join on the
-    * key, COALESCE preferring the delta side, exactly what `MERGE INTO
-    * ... WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT` resolves to — and
-    * the merged snapshot is written via the connector AGAIN (a NEW
-    * snapshot directory: the read of the old snapshot is lazy, so
-    * overwriting in place would race the files being read; snapshot-in,
-    * snapshot-out is also how table formats express merges). The final
-    * state is read back through the connector and oracled against the
-    * same upsert in SQL.
-    */
-  private def qDsv2Upsert(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val baseRoot = s"/tmp/graft_dsv2w/$tag/upsert_base"
-    val outRoot = s"/tmp/graft_dsv2w/$tag/upsert_out"
-    val orders = Tables.orders(s, d)
-    val base = orders.filter(col("o_orderkey") < 400)
-      .select(col("o_orderkey").as("k"), col("o_orderstatus").as("status"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    base.write.format("graft.sources.v2.StageSource")
-      .option("path", baseRoot).mode("overwrite").save()
-    val delta = orders
-      .filter(col("o_orderkey") >= 200 && col("o_orderkey") < 600)
-      .select(col("o_orderkey").as("k"), lit("U").as("status"),
-        (round(col("o_totalprice") * 100).cast("long") + 7).as("cents"))
-    val baseBack = s.read.format("graft.sources.v2.StageSource")
-      .option("path", baseRoot).load()
-    baseBack.as("b")
-      .join(delta.as("d"), col("b.k") === col("d.k"), "full_outer")
-      .select(
-        coalesce(col("d.k"), col("b.k")).as("k"),
-        coalesce(col("d.status"), col("b.status")).as("status"),
-        coalesce(col("d.cents"), col("b.cents")).as("cents"))
-      .write.format("graft.sources.v2.StageSource")
-      .option("path", outRoot).mode("overwrite").save()
-    s.read.format("graft.sources.v2.StageSource").option("path", outRoot).load()
-      .orderBy("k")
-  }
-
-  /** SQL `MERGE INTO` through the connector's row-level-operation seam
-    * ([[graft.sources.v2.StageRowLevelOperation]], Spark's GROUP-BASED
-    * copy-on-write contract — the statement [[qDsv2Upsert]] spells as an
-    * explicit full-outer join, now planned by Spark's
-    * RewriteMergeIntoTable): the operation's scan plans the affected
-    * files (zone maps prune provably-clean groups, which are carried
-    * over without rewrite), the rewrite computes those groups'
-    * post-image, and job commit swaps `previous − scanned + rewritten`
-    * as one new snapshot. All three MERGE legs run: matched-update,
-    * not-matched-insert, and not-matched-by-source delete (the sync
-    * idiom). At 100 TB this is THE daily upsert surface — one statement,
-    * snapshot-isolated, file-grain rewrite cost.
-    */
-  private def qDsv2Merge(s: SparkSession, d: String): DataFrame = {
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.ord_merge"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""CREATE TABLE $t AS
-      SELECT o_orderkey AS k, o_orderstatus AS status,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
-      FROM $v WHERE o_orderkey < 400""")
-    val src = s"graft_merge_src_${dirTag(d)}"
-    s.sql(s"""SELECT o_orderkey AS k,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT) + 7 AS cents
-      FROM $v WHERE o_orderkey >= 200 AND o_orderkey < 600""")
-      .createOrReplaceTempView(src)
-    s.sql(s"""MERGE INTO $t t USING $src s ON t.k = s.k
-      WHEN MATCHED THEN UPDATE SET status = 'U', cents = s.cents
-      WHEN NOT MATCHED THEN INSERT (k, status, cents) VALUES (s.k, 'N', s.cents)
-      WHEN NOT MATCHED BY SOURCE AND t.k < 100 THEN DELETE""")
-    s.sql(s"SELECT k, status, cents FROM $t ORDER BY k")
-  }
-
-  /** SQL `UPDATE` through the same copy-on-write seam as [[qDsv2Merge]]
-    * (`RewriteUpdateTable` → ReplaceData): a price correction applied to
-    * ONE status class, in place, as one new snapshot — the zone-map-
-    * pruned groups (files provably holding no 'F' rows, when the layout
-    * separates them) carry over without rewrite. Also runs a row-level
-    * DELETE on a NON-partition predicate (the path the takedown's
-    * metadata fast path declines), so all three rewrite commands are
-    * driver-oracled. The readback aggregates per status, replayed in
-    * DuckDB with the correction + deletion applied arithmetically.
-    */
-  private def qDsv2Update(s: SparkSession, d: String): DataFrame = {
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.ord_upd"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""CREATE TABLE $t AS
-      SELECT o_orderkey AS k, o_orderstatus AS status,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
-      FROM $v WHERE o_orderkey < 2000""")
-    s.sql(s"UPDATE $t SET cents = cents + 9 WHERE status = 'F'")
-    s.sql(s"DELETE FROM $t WHERE k % 10 = 3") // non-partition row-level
-    s.sql(s"""SELECT status, COUNT(*) AS n_orders, SUM(cents) AS sum_cents
-      FROM $t GROUP BY status ORDER BY status""")
-  }
-
-  /** STORAGE-PARTITIONED join through the DSv2 connector
-    * ([[graft.sources.v2.SeqSource]] `keyed` mode — the connector
-    * generalization of [[qBucketedJoin]]'s co-located story, the
-    * reference's partitioned-join mode `host/join/join_native.cc:94-111`
-    * expressed as a connector LAYOUT contract): both sides declare
-    * `KeyGroupedPartitioning(identity(mod7))` with [[
-    * org.apache.spark.sql.connector.read.HasPartitionKey]] partitions, so
-    * with `spark.sql.sources.v2.bucketing.enabled` the per-side GROUP BY
-    * mod7 aggregates AND the join between them plan with ZERO shuffle
-    * exchanges — Spark lines the residue-class partitions up
-    * one-to-one (PlanAuditSpec pins no-ShuffleExchange and the
-    * `keyed=mod7` scan descriptions). This is how Iceberg/Delta
-    * bucket-partitioned tables join at 100 TB: the layout is written
-    * once, declared by the connector, and every downstream join/agg on
-    * the partition key rides it for free. The merge-join hint keeps the
-    * tiny post-aggregate sides from broadcasting so the row exercises
-    * the partition-aligned path end to end.
-    */
-  private def qDsv2Spj(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.sources.v2.bucketing.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "true")
-    try {
-      def keyedSeq(n: Long) = s.read.format("graft.sources.v2.SeqSource")
-        .option("n", n).option("keyed", true).load()
-      val left = keyedSeq(1000000L)
-        .filter(col("id") < 700000L)
-        .groupBy(col("mod7"))
-        .agg(count(lit(1)).as("l_rows"), sum(col("cents")).as("l_cents"))
-      val right = keyedSeq(500000L)
-        .groupBy(col("mod7"))
-        .agg(count(lit(1)).as("r_rows"))
-      val out = left.hint("merge").join(right, "mod7")
-        .select(col("mod7"), col("l_rows"), col("l_cents"), col("r_rows"))
-        .orderBy("mod7")
-      // planning is lazy and reads SQLConf at plan time — force it while
-      // the conf override is live (QueryExecution caches the result)
-      out.queryExecution.executedPlan
-      out
-    } finally s.conf.set(key, prev)
-  }
-
-  /** Storage-partitioned join over REAL STAGED DATA (r16 verdict #3 —
-    * [[qDsv2Spj]] demonstrates the contract on the synthetic keyed
-    * source; this row closes the loop on the staging connector's own
-    * committed files): orders and lineitem are staged through
-    * [[graft.sources.v2.StageSource]] identity-partitioned by the same
-    * bucket key (the write's required clustering lands each bucket
-    * wholly in its own committed file), the scans REPORT that layout
-    * (`KeyGroupedPartitioning` + per-file `HasPartitionKey`), and with
-    * v2 bucketing enabled the per-side GROUP BY b aggregations and the
-    * join between them plan with ZERO shuffle exchanges — Spark groups
-    * same-key files (appends produce several per bucket) and lines the
-    * two tables' buckets up one-to-one (PlanAuditSpec pins
-    * no-hashpartitioning over the two StageScans). At 100 TB this is
-    * the write-once/join-free discipline of co-bucketed Iceberg/Delta
-    * tables, now end to end on this connector's own format.
-    */
-  private def qDsv2SpjStaged(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val fmt = "graft.sources.v2.StageSource"
-    val ordDir = s"/tmp/graft_dsv2w/$tag/spj_ord"
-    val liDir = s"/tmp/graft_dsv2w/$tag/spj_li"
-    // WRITE-ONCE fixture (r17 verdict #6: the row used to re-stage both
-    // tables every run, so its bench number measured staging writes —
-    // slope 3.10× at ×10 — not the exchange-free join it claims; the
-    // staging write path keeps its own rows, q_dsv2_write /
-    // q_dsv2_lineage / q_dsv2_catalog). Same discipline as the IVF index
-    // artifact: guard on the connector's own _SUCCESS marker, serialize
-    // same-JVM builders on the per-directory lock.
-    stagedOnce(ordDir) {
-      Tables.orders(s, d)
-        .select((col("o_orderkey") % 8).as("b"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .write.format(fmt).option("path", ordDir)
-        .option("partition_by", "b").mode("overwrite").save()
-    }
-    stagedOnce(liDir) {
-      Tables.lineitem(s, d)
-        .select((col("l_orderkey") % 8).as("b"),
-          col("l_quantity").cast("long").as("qty"))
-        .write.format(fmt).option("path", liDir)
-        .option("partition_by", "b").mode("overwrite").save()
-    }
-    val key = "spark.sql.sources.v2.bucketing.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "true")
-    try {
-      val o = s.read.format(fmt).option("path", ordDir).load()
-        .groupBy("b")
-        .agg(count(lit(1)).as("n_ord"), sum("cents").as("ord_cents"))
-      val l = s.read.format(fmt).option("path", liDir).load()
-        .groupBy("b")
-        .agg(count(lit(1)).as("n_li"), sum("qty").as("qty_sum"))
-      val out = o.hint("merge").join(l, "b")
-        .select(col("b"), col("n_ord"), col("ord_cents"),
-          col("n_li"), col("qty_sum"))
-        .orderBy("b")
-      // planning is lazy and reads SQLConf at plan time — force it while
-      // the conf override is live
-      out.queryExecution.executedPlan
-      out
-    } finally s.conf.set(key, prev)
-  }
-
-  /** Schema EVOLUTION through the catalog ([[graft.sources.v2
-    * .StageCatalog]]'s append-only `ALTER TABLE … ADD COLUMNS`, the
-    * reference's one evolution primitive — its generator grows tables by
-    * appending columns, `generator.cc:32-44`, `join_dpu.cc:356-360`):
-    * rows staged under the OLD schema are never rewritten — the
-    * connector records each file's stored column count and the reader
-    * null-fills the evolved tail — while rows staged after the ALTER
-    * carry the new column. The mixed-schema read-back is oracled against
-    * the same shape computed straight from orders (NULL priority for the
-    * pre-alter keys). At 100 TB this is the only affordable ADD COLUMN:
-    * a metadata-only change, zero bytes rewritten.
-    */
-  private def qDsv2AddColumn(s: SparkSession, d: String): DataFrame = {
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.ord_evolve"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""CREATE TABLE $t AS
-      SELECT o_orderkey AS k,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
-      FROM $v WHERE o_orderkey < 300""")
-    s.sql(s"ALTER TABLE $t ADD COLUMNS (prio STRING)")
-    s.sql(s"""INSERT INTO $t
-      SELECT o_orderkey, CAST(ROUND(o_totalprice * 100) AS BIGINT),
-             o_orderpriority
-      FROM $v WHERE o_orderkey >= 300 AND o_orderkey < 600""")
-    s.sql(s"SELECT k, cents, prio FROM $t ORDER BY k")
-  }
-
-  /** MERGE-ON-READ delete ([[graft.sources.v2.StageDeltaDeleteOperation]],
-    * Iceberg's positional-delete contract, r16 verdict #4): the table
-    * opts in with `delete.mode=merge-on-read`, a selective `DELETE`
-    * records (file, row-ordinal) DELETE VECTORS in the next manifest —
-    * zero data bytes rewritten (spec-pinned: the data file set is
-    * byte-identical before and after) — and every read applies the
-    * vectors. At 100 TB this is what makes a row-level takedown
-    * affordable: copy-on-write pays gigabytes of rewrite per touched
-    * file; merge-on-read pays bytes proportional to the deleted rows and
-    * compaction repays the read debt lazily, off the critical path. The
-    * read-back aggregate is oracled against orders minus the deleted
-    * keys.
-    */
-  private def qDsv2MorDelete(s: SparkSession, d: String): DataFrame = {
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.ord_mor"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT)
-      TBLPROPERTIES ('delete.mode'='merge-on-read')""")
-    s.sql(s"""INSERT INTO $t
-      SELECT o_orderkey, o_orderstatus,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT)
-      FROM $v WHERE o_orderkey < 2000""")
-    s.sql(s"DELETE FROM $t WHERE k % 7 = 2") // non-partition row-level
-    s.sql(s"""SELECT status, COUNT(*) AS n_orders, SUM(cents) AS sum_cents
-      FROM $t GROUP BY status ORDER BY status""")
-  }
-
-  /** MERGE-ON-READ for the WRITE-HEAVY commands ([[graft.sources.v2
-    * .StageDeltaOperation]] with `representUpdateAsDeleteAndInsert` —
-    * Iceberg's MOR update/merge): the same three-leg MERGE as
-    * [[qDsv2Merge]] but on a table whose `update.mode`/`merge.mode` are
-    * merge-on-read, so the matched-update leg writes delete vectors for
-    * the old images plus a small insert file — pre-existing data files
-    * are NEVER rewritten (spec-pinned) — and the not-matched-by-source
-    * delete leg writes vectors only. Same oracle arithmetic as the
-    * copy-on-write MERGE row: the storage strategy must be invisible in
-    * the answer.
-    */
-  private def qDsv2MorMerge(s: SparkSession, d: String): DataFrame = {
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.ord_mor_m"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT)
-      TBLPROPERTIES ('update.mode'='merge-on-read',
-                     'merge.mode'='merge-on-read',
-                     'delete.mode'='merge-on-read')""")
-    s.sql(s"""INSERT INTO $t
-      SELECT o_orderkey, o_orderstatus,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT)
-      FROM $v WHERE o_orderkey < 400""")
-    val src = s"graft_morm_src_${dirTag(d)}"
-    s.sql(s"""SELECT o_orderkey AS k,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT) + 7 AS cents
-      FROM $v WHERE o_orderkey >= 200 AND o_orderkey < 600""")
-      .createOrReplaceTempView(src)
-    s.sql(s"""MERGE INTO $t t USING $src s ON t.k = s.k
-      WHEN MATCHED THEN UPDATE SET status = 'U', cents = s.cents
-      WHEN NOT MATCHED THEN INSERT (k, status, cents) VALUES (s.k, 'N', s.cents)
-      WHEN NOT MATCHED BY SOURCE AND t.k < 100 THEN DELETE""")
-    s.sql(s"SELECT k, status, cents FROM $t ORDER BY k")
-  }
-
-  /** COMPACTION EQUIVALENCE for the merge-on-read path
-    * ([[graft.sources.v2.StageSource.compact]], Iceberg's
-    * `rewrite_data_files` scoped to the dirty set): the same table shape
-    * as [[qDsv2MorDelete]] takes a vector delete, then compaction
-    * rewrites ONLY the files carrying vectors (through the standard
-    * two-phase commit with full `replaceFiles`+`expectDvs` conflict
-    * validation) and the read-back must be IDENTICAL — same oracle as
-    * the uncompacted read, proving MOR-read ≡ compacted-read ≡ the
-    * copy-on-write result. A second post-compaction delete exercises
-    * fresh row ordinals over the rewritten files.
-    */
-  private def qDsv2MorCompact(s: SparkSession, d: String): DataFrame = {
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.ord_mor_c"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT)
-      TBLPROPERTIES ('delete.mode'='merge-on-read')""")
-    s.sql(s"""INSERT INTO $t
-      SELECT o_orderkey, o_orderstatus,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT)
-      FROM $v WHERE o_orderkey < 2000""")
-    s.sql(s"DELETE FROM $t WHERE k % 7 = 2")
-    // derive the table directory from the catalog's own root conf (the
-    // layout knowledge lives in ONE place, stageCatalog)
-    val dir = s"${s.conf.get(s"spark.sql.catalog.$cat.root")}/default/ord_mor_c"
-    graft.sources.v2.StageSource.compact(dir)
-    s.sql(s"DELETE FROM $t WHERE k % 11 = 3") // fresh ordinals post-compact
-    s.sql(s"""SELECT status, COUNT(*) AS n_orders, SUM(cents) AS sum_cents
-      FROM $t GROUP BY status ORDER BY status""")
-  }
-
-  /** BOUNDED delete-vector encoding (r17 verdict #1, [[graft.sources.v2
-    * .StageSource.writeDvFile]]): merge-on-read deletes used to ride the
-    * manifest as one CUMULATIVE per-row line each, so after N accumulated
-    * deletes EVERY commit — including unrelated appends — rewrote O(N)
-    * manifest bytes driver-side. Vectors now live in immutable
-    * CONTENT-ADDRESSED run-length sidecars (`_dv-<md5>.bin`) and the
-    * manifest carries one constant-size reference line per dirty file;
-    * carry-forward copies the reference, never the rows. The row proves
-    * the contract live: a vector DELETE, then an UNRELATED append, then
-    * two in-plan verdicts from the connector's own metadata —
-    * `no_per_row_manifest_lines` (the post-append manifest holds zero
-    * legacy D-lines) and `append_wrote_zero_dv_bytes` (the sidecar set
-    * and the reference map are BYTE-IDENTICAL across the append — the
-    * append's commit cost excluded the delete state entirely). At 100 TB
-    * with 10M accumulated deletes this is the difference between a
-    * ~570 MB manifest rewrite per commit and a few KB of reference
-    * lines. The read-back aggregate is oracled against orders minus the
-    * deleted keys plus the appended range.
-    */
-  private def qDsv2DvEncoding(s: SparkSession, d: String): DataFrame = {
-    import graft.sources.v2.StageSource
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.ord_dvenc"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT)
-      TBLPROPERTIES ('delete.mode'='merge-on-read')""")
-    s.sql(s"""INSERT INTO $t
-      SELECT o_orderkey, o_orderstatus,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT)
-      FROM $v WHERE o_orderkey < 2000""")
-    s.sql(s"DELETE FROM $t WHERE k % 7 = 2") // vectors across every file
-    val dir = s"${s.conf.get(s"spark.sql.catalog.$cat.root")}/default/ord_dvenc"
-    def sidecars = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .map(_.getName).filter(_.startsWith("_dv-")).toSet
-    val sidecarsBefore = sidecars
-    val refsBefore = StageSource.readDvRefs(dir, None)
-    // the UNRELATED append: its commit must carry the delete state as
-    // references, writing zero vector bytes
-    s.sql(s"""INSERT INTO $t
-      SELECT o_orderkey, o_orderstatus,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT)
-      FROM $v WHERE o_orderkey >= 2000 AND o_orderkey < 2400""")
-    val manifest = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(dir, StageSource.manifestName(
-        StageSource.latestVersion(dir).get)).toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val noPerRow = !manifest.linesIterator.exists(_.startsWith("D\t"))
-    val zeroDvBytes = sidecars == sidecarsBefore &&
-      StageSource.readDvRefs(dir, None) == refsBefore
-    s.sql(s"""SELECT status, COUNT(*) AS n_orders, SUM(cents) AS sum_cents
-      FROM $t GROUP BY status ORDER BY status""")
-      .withColumn("no_per_row_manifest_lines", lit(noPerRow))
-      .withColumn("append_wrote_zero_dv_bytes", lit(zeroDvBytes))
-  }
-
-  /** STREAMING READ of a staged table ([[graft.sources.v2
-    * .StageMicroBatchStream]], r17 verdict #2 — the connector could sink
-    * streams but not be TAILED): snapshot versions are the epochs, a
-    * micro-batch is the files a version range appended, and
-    * `maxFilesPerTrigger` + `Trigger.AvailableNow` drain the backlog in
-    * BOUNDED batches (the `SupportsTriggerAvailableNow` contract — with
-    * sub-version offset positions, so even one giant backfill commit
-    * drains bounded). The row runs the full lifecycle: stage 3 shards →
-    * drain through a streaming query into a staged SINK table (the
-    * connector's own exactly-once streaming write) → append 2 more
-    * shards → resume from the SAME checkpoint (the committed offset
-    * version), which must re-read nothing — a re-read or a missed file
-    * shifts the sink's content and hash-mismatches the oracle. The
-    * `bounded_drain` verdict asserts the two drains took exactly
-    * 3-then-2 single-file batches. At 100 TB this is the incremental
-    *-consumption contract: downstream jobs tail committed snapshots
-    * instead of re-scanning the table, and admission control keeps each
-    * micro-batch executor-sized.
-    */
-  private def qDsv2StreamSource(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tag = dirTag(d)
-    val fmt = "graft.sources.v2.StageSource"
-    val srcDir = s"/tmp/graft_dsv2w/$tag/tail_src"
-    val sinkDir = s"/tmp/graft_dsv2w/$tag/tail_sink"
-    val ckpt = s"/tmp/graft_dsv2w/$tag/tail_ckpt"
-    Seq(srcDir, sinkDir, ckpt).foreach(p =>
-      graft.engine.Fs.deleteRecursively(new java.io.File(p)))
-    val ord = Tables.orders(s, d).select(
-      col("o_orderkey").as("k"), col("o_orderstatus").as("status"),
-      round(col("o_totalprice") * 100).cast("long").as("cents"))
-    ord.filter(col("k") < 1200).repartition(3)
-      .write.format(fmt).option("path", srcDir).mode("append").save()
-    def drain(): Long = {
-      val q = s.readStream.format(fmt).option("path", srcDir)
-        .option("maxFilesPerTrigger", "1").load()
-        .writeStream.format(fmt).option("path", sinkDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.recentProgress.count(_.numInputRows > 0).toLong
-    }
-    val batches1 = drain()
-    ord.filter(col("k") >= 1200 && col("k") < 1500).repartition(2)
-      .write.format(fmt).option("path", srcDir).mode("append").save()
-    val batches2 = drain()
-    s.read.format(fmt).option("path", sinkDir).load()
-      .groupBy("status")
-      .agg(count(lit(1)).as("n_orders"), sum("cents").as("sum_cents"))
-      .withColumn("bounded_drain", lit(batches1 == 3L && batches2 == 2L))
-      .orderBy("status")
-  }
-
-  /** END-TO-END staged-table CDC (r17 verdict #2's composition: the new
-    * streaming read × [[graft.operators.Changelog]]): an append-only CDC
-    * LOG staged through the connector is TAILED by the micro-batch
-    * source (each log epoch = one snapshot version = one batch under
-    * `maxFilesPerTrigger=1`), and each batch incrementally advances a
-    * MATERIALIZED staged table — read the current snapshot, apply the
-    * batch's compacted log (last-writer-wins by seq, upserts + delete
-    * tombstones), overwrite. Reading and overwriting the SAME staged
-    * table inside one batch is safe by snapshot isolation: the scan is
-    * pinned to the old manifest while the commit claims the next.
-    * Correctness rides Changelog's split-invariance property (pinned in
-    * OperatorPropertySpec): batch-at-a-time application at sequence
-    * boundaries must equal the one-shot apply, which is exactly what the
-    * oracle computes arithmetically. At 100 TB this is the lakehouse CDC
-    * loop — Debezium-shaped log tailed from committed snapshots, bounded
-    * batches, materialization advanced without rescanning the log.
-    */
-  private def qDsv2StreamCdc(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tag = dirTag(d)
-    val fmt = "graft.sources.v2.StageSource"
-    val logDir = s"/tmp/graft_dsv2w/$tag/cdc_log"
-    val matDir = s"/tmp/graft_dsv2w/$tag/cdc_mat"
-    val ckpt = s"/tmp/graft_dsv2w/$tag/cdc_ckpt"
-    Seq(logDir, matDir, ckpt).foreach(p =>
-      graft.engine.Fs.deleteRecursively(new java.io.File(p)))
-    val ord = Tables.orders(s, d).select(col("o_orderkey").as("k"),
-      round(col("o_totalprice") * 100).cast("long").as("cents"))
-    // the base materialization: orders under 1000
-    ord.filter(col("k") < 1000).select(col("k"), col("cents").as("v"))
-      .coalesce(1)
-      .write.format(fmt).option("path", matDir).mode("overwrite").save()
-    // log epoch 1 (seq=1): updates for k%3=0, tombstones for the
-    // k%5=0 remainder — one snapshot version, one file
-    ord.filter(col("k") < 1000 && (col("k") % 3 === 0 || col("k") % 5 === 0))
-      .select(col("k"), lit(1L).as("seq"),
-        when(col("k") % 3 === 0, lit("U")).otherwise(lit("D")).as("op"),
-        (col("cents") + 1).as("v"))
-      .coalesce(1)
-      .write.format(fmt).option("path", logDir).mode("append").save()
-    // log epoch 2 (seq=2): k%7=0 upserts (re-inserting some epoch-1
-    // tombstones) plus brand-new keys in [1000, 1200)
-    ord.filter((col("k") < 1000 && col("k") % 7 === 0) ||
-        (col("k") >= 1000 && col("k") < 1200))
-      .select(col("k"), lit(2L).as("seq"), lit("U").as("op"),
-        (col("cents") + 2).as("v"))
-      .coalesce(1)
-      .write.format(fmt).option("path", logDir).mode("append").save()
-    val q = s.readStream.format(fmt).option("path", logDir)
-      .option("maxFilesPerTrigger", "1").load()
-      .writeStream.option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val mat = s.read.format(fmt).option("path", matDir).load()
-        graft.operators.Changelog(mat, batch.select("k", "seq", "op", "v"))
-          .select("k", "v")
-          .write.format(fmt).option("path", matDir).mode("overwrite").save()
-      }.start()
-    q.awaitTermination()
-    val batches = q.recentProgress.count(_.numInputRows > 0)
-    s.read.format(fmt).option("path", matDir).load()
-      .select(col("k"), col("v"))
-      .withColumn("one_epoch_per_batch", lit(batches == 2))
-      .orderBy("k")
-  }
-
-  /** AUTO-COMPACTION policy ([[graft.sources.v2.StageSource.maintain]],
-    * r17 verdict #4 — compaction existed but was caller-invoked): the
-    * table declares `compact.dv-threshold` as a TBLPROPERTY and the
-    * maintenance entry point repays exactly the files whose
-    * delete-vector fraction exceeds it. The row stages two partitions,
-    * deletes ~2/3 of one (far over the 0.3 threshold) and ~1% of the
-    * other (far under), runs `maintain`, and asserts BOTH policy edges
-    * from the connector's own metadata: `heavy_repaid` (every
-    * over-threshold file was rewritten vector-free) and `light_kept`
-    * (every under-threshold file kept its vectors BYTE-IDENTICAL — the
-    * policy never pays a rewrite the read debt doesn't justify). Content
-    * is oracled unchanged across the maintenance pass. At 100 TB this
-    * is the scheduled-maintenance contract: debt repayment is
-    * dirty-file-only, priced per file from the `__rows` sidecar, and
-    * claim-atomic under the same conflict validation as any rewrite.
-    */
-  private def qDsv2AutoCompact(s: SparkSession, d: String): DataFrame = {
-    import graft.sources.v2.StageSource
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.ord_ac"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""CREATE TABLE $t (k BIGINT, grp STRING, cents BIGINT)
-      PARTITIONED BY (grp)
-      TBLPROPERTIES ('delete.mode'='merge-on-read',
-                     'compact.dv-threshold'='0.3')""")
-    s.sql(s"""INSERT INTO $t
-      SELECT o_orderkey,
-             CASE WHEN o_orderkey % 2 = 0 THEN 'even' ELSE 'odd' END,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT)
-      FROM $v WHERE o_orderkey < 2000""")
-    s.sql(s"DELETE FROM $t WHERE grp = 'even' AND k % 3 <> 0") // ~2/3 dirty
-    s.sql(s"DELETE FROM $t WHERE grp = 'odd' AND k % 97 = 1")  // ~1% dirty
-    val dir = s"${s.conf.get(s"spark.sql.catalog.$cat.root")}/default/ord_ac"
-    val stats = StageSource.readStats(dir)
-    def frac(f: String, n: Int): Double =
-      n.toDouble / stats(f)("__rows").min
-    val before = StageSource.readDeletes(dir, None)
-      .map { case (f, ps) => f -> ps.toSeq }
-    StageSource.maintain(dir)
-    val after = StageSource.readDeletes(dir, None)
-      .map { case (f, ps) => f -> ps.toSeq }
-    val heavyRepaid = before.forall { case (f, ps) =>
-      frac(f, ps.size) <= 0.3 || !after.contains(f) }
-    val lightKept = before.forall { case (f, ps) =>
-      frac(f, ps.size) > 0.3 || after.get(f).contains(ps) }
-    val policyFired = before.exists { case (f, ps) => frac(f, ps.size) > 0.3 } &&
-      before.exists { case (f, ps) => frac(f, ps.size) <= 0.3 }
-    s.sql(s"""SELECT grp, COUNT(*) AS n_rows, SUM(cents) AS sum_cents
-      FROM $t GROUP BY grp ORDER BY grp""")
-      .withColumn("heavy_repaid", lit(heavyRepaid && policyFired))
-      .withColumn("light_kept", lit(lightKept))
-  }
-
-  /** SMALL-FILE BIN-PACKING via the maintenance policy ([[
-    * graft.sources.v2.StageSource.binpack]], r18 verdict #2 — `maintain`
-    * priced only DV debt, so steady micro-batch appends grew file count
-    * without bound): the table declares `compact.target-file-bytes` and
-    * the scheduled entry point coalesces under-sized files per PARTITION
-    * VALUE through the standard claim-atomic rewrite
-    * (`replaceFiles`+`expectDvs`), repaying any delete-vector debt on
-    * the binned files in the same pass. The row stages six tiny appends
-    * per partition (the `maxFilesPerTrigger=1` accumulation shape),
-    * lands a MOR delete, runs `maintain`, and asserts from the
-    * connector's own metadata: `files_packed` (count collapsed to one
-    * per partition), `layout_kept` (no output file mixes partition
-    * values), and `second_pass_noop` (idempotent — nothing left under
-    * target worth packing). Content is oracled invariant across the
-    * pass. At 100 TB this is what keeps manifest lines, per-file tasks
-    * and sidecar entries O(data), not O(ingest epochs).
-    */
-  private def qDsv2Binpack(s: SparkSession, d: String): DataFrame = {
-    import graft.sources.v2.StageSource
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.ord_bp"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""CREATE TABLE $t (k BIGINT, grp STRING, cents BIGINT)
-      PARTITIONED BY (grp)
-      TBLPROPERTIES ('delete.mode'='merge-on-read',
-                     'compact.target-file-bytes'='1048576')""")
-    (0 until 6).foreach { i =>
-      s.sql(s"""INSERT INTO $t
-        SELECT o_orderkey,
-               CASE WHEN o_orderkey % 2 = 0 THEN 'even' ELSE 'odd' END,
-               CAST(ROUND(o_totalprice * 100) AS BIGINT)
-        FROM $v WHERE o_orderkey >= ${i * 300} AND o_orderkey < ${(i + 1) * 300}""")
-    }
-    s.sql(s"DELETE FROM $t WHERE k % 13 = 2") // MOR debt the pack repays
-    val dir = s"${s.conf.get(s"spark.sql.catalog.$cat.root")}/default/ord_bp"
-    val before = StageSource.snapshotFiles(dir, None).length
-    StageSource.maintain(dir)
-    val after = StageSource.snapshotFiles(dir, None)
-    val parts = StageSource.readParts(dir)
-    val filesPacked = before > 2 && after.length == 2 &&
-      StageSource.readDeletes(dir, None).isEmpty
-    val layoutKept = after.forall(f => parts(f.getName).length == 1)
-    val vAfter = StageSource.latestVersion(dir).get
-    StageSource.maintain(dir)
-    val secondPassNoop = StageSource.latestVersion(dir).get == vAfter
-    s.sql(s"""SELECT grp, COUNT(*) AS n_rows, SUM(cents) AS sum_cents
-      FROM $t GROUP BY grp ORDER BY grp""")
-      .withColumn("files_packed", lit(filesPacked))
-      .withColumn("layout_kept", lit(layoutKept))
-      .withColumn("second_pass_noop", lit(secondPassNoop))
-  }
-
-  /** SNAPSHOTS metadata table ([[graft.sources.v2.StageSnapshots]], the
-    * Iceberg `table$snapshots` / Delta `DESCRIBE HISTORY` surface on the
-    * staging connector): one row per live snapshot with its commit time
-    * and what its commit CHANGED — added/removed files, delete-vector
-    * delta files and rows — read from the r19 self-contained manifest
-    * change summaries, zero data bytes. The staging is exactly
-    * file-deterministic (single-partition range inserts, a MOR delete
-    * whose delta spans both files), so every count is oracled as a
-    * literal: a drift in ANY commit's bookkeeping hash-mismatches the
-    * row. At 100 TB this is the operability loop — "which commit
-    * bloated the file count", "how much MOR debt did last night add" —
-    * as one driver-side metadata scan.
-    */
-  private def qDsv2Snapshots(s: SparkSession, d: String): DataFrame = {
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.hist_snap"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    s.sql(s"""CREATE TABLE $t (k BIGINT, cents BIGINT)
-      TBLPROPERTIES ('delete.mode'='merge-on-read')""")
-    s.sql(s"INSERT INTO $t SELECT id, id * 10 FROM range(0, 500, 1, 1)")
-    s.sql(s"INSERT INTO $t SELECT id, id * 10 FROM range(500, 800, 1, 1)")
-    s.sql(s"DELETE FROM $t WHERE k % 7 = 3") // 114 rows across both files
-    s.sql(s"INSERT INTO $t SELECT id, id * 10 FROM range(800, 850, 1, 1)")
-    val dir = s"${s.conf.get(s"spark.sql.catalog.$cat.root")}/default/hist_snap"
-    s.read.format("graft.sources.v2.StageSource").option("path", dir)
-      .option("snapshots", "true").load()
-      .select(col("version"), col("n_added"), col("n_removed"),
-        col("n_dv_delta_files"), col("n_dv_deleted_rows"),
-        col("committed_at_millis").isNotNull.as("commit_timed"),
-        col("self_contained"))
-      .orderBy("version")
-  }
-
-  /** TIMESTAMP-WINDOWED change feed (`changes.start-timestamp` /
-    * `changes.end-timestamp`, the Delta CDF timestamp-range idiom):
-    * bounds resolve through the commit-time ledger to "the snapshot
-    * current at that instant" — the window here starts at v1's commit
-    * instant (excluding v1's bulk load) and ends at the delete's, so
-    * the feed is exactly v2's inserts plus v3's retractions, grouped
-    * and oracled arithmetically from orders. The incremental-consumer
-    * story at 100 TB: "give me everything since last night's run" is a
-    * ledger lookup plus the versions in the window, never a table diff.
-    */
-  private def qDsv2CdcWindow(s: SparkSession, d: String): DataFrame = {
-    import graft.sources.v2.StageSource
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.ord_cw"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""CREATE TABLE $t (k BIGINT, cents BIGINT)
-      TBLPROPERTIES ('delete.mode'='merge-on-read')""")
-    s.sql(s"""INSERT INTO $t
-      SELECT o_orderkey, CAST(ROUND(o_totalprice * 100) AS BIGINT)
-      FROM $v WHERE o_orderkey < 1200""")                            // v1
-    s.sql(s"""INSERT INTO $t
-      SELECT o_orderkey, CAST(ROUND(o_totalprice * 100) AS BIGINT)
-      FROM $v WHERE o_orderkey >= 1200 AND o_orderkey < 1500""")     // v2
-    s.sql(s"DELETE FROM $t WHERE k % 9 = 4")                         // v3
-    val dir = s"${s.conf.get(s"spark.sql.catalog.$cat.root")}/default/ord_cw"
-    val times = StageSource.readCommitTimes(dir)
-    s.read.format("graft.sources.v2.StageSource").option("path", dir)
-      .option("read-change-feed", "true")
-      .option("changes.start-timestamp", times(1).toString)
-      .option("changes.end-timestamp", times(3).toString)
-      .load()
-      .groupBy(col("_change_type").as("change_type"))
-      .agg(count(lit(1)).as("n_rows"), sum("cents").as("sum_cents"))
-      .orderBy("change_type")
-  }
-
-  /** BUCKETED storage-partitioned join over staged CATALOG tables (r18
-    * verdict #4 — StageSource accepted identity partitioning only, so
-    * the measured SPJ width knob, 2.6× at w32 on the synthetic source,
-    * was unreachable on real committed data): both tables declare
-    * `PARTITIONED BY (bucket(16, custkey))`, writes route by the
-    * catalog's own `bucket` V2 function (the same multiplicative hash
-    * the scan reports as KeyGroupedPartitioning and the oracle replays
-    * arithmetically), and the PK–FK join plans with ZERO exchanges in
-    * its join subtree — the `exchange_free` verdict is read off the
-    * executed plan. Unlike the identity-partitioned SPJ rows, the
-    * bucket width here is a free knob: 16 buckets of a million-key
-    * dimension, not a million key groups — exactly the at-scale shape
-    * (a real cluster sizes width to executor count, not cardinality).
-    */
-  private def qDsv2SpjBucketed(s: SparkSession, d: String): DataFrame = {
-    val cat = stageCatalog(s, d)
-    val fact = s"$cat.default.ord_bk"
-    val dim = s"$cat.default.cust_bk"
-    // WRITE-ONCE fixture (r19 — the qDsv2SpjStaged discipline): the row's
-    // declared object is the exchange-free join over the bucket(16)
-    // layout; re-creating both tables every run measured two DDL + two
-    // bucket-clustered INSERT jobs beside it. The bucket WRITE acceptance
-    // itself stays exercised (first build per corpus, plus
-    // SourcesSpec's bucket-transform specs). Marker written LAST, after
-    // both inserts, so a crashed partial build re-runs whole.
-    val marker = new java.io.File(
-      s"${s.conf.get(s"spark.sql.catalog.$cat.root")}/default", "_spj_bk_STAGED")
-    stagedOnceGuarded(marker.getPath)(marker.exists()) {
-      s.sql(s"DROP TABLE IF EXISTS $fact")
-      s.sql(s"DROP TABLE IF EXISTS $dim")
-      val vo = s"graft_cat_orders_${dirTag(d)}"
-      val vc = s"graft_cat_customer_${dirTag(d)}"
-      Tables.orders(s, d).createOrReplaceTempView(vo)
-      Tables.customer(s, d).createOrReplaceTempView(vc)
-      s.sql(s"""CREATE TABLE $fact (custkey BIGINT, cents BIGINT)
-        PARTITIONED BY (bucket(16, custkey))""")
-      s.sql(s"""INSERT INTO $fact
-        SELECT o_custkey, CAST(ROUND(o_totalprice * 100) AS BIGINT) FROM $vo""")
-      s.sql(s"""CREATE TABLE $dim (custkey BIGINT, segment STRING)
-        PARTITIONED BY (bucket(16, custkey))""")
-      s.sql(s"INSERT INTO $dim SELECT c_custkey, c_mktsegment FROM $vc")
-      marker.createNewFile(): Unit
-    }
-    val key = "spark.sql.sources.v2.bucketing.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "true")
-    try {
-      val j = s.table(fact).hint("merge").join(s.table(dim), "custkey")
-        .groupBy("segment")
-        .agg(count(lit(1)).as("n_orders"), sum("cents").as("sum_cents"))
-      j.collect(): Unit
-      val plan = j.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      // the ONLY exchange allowed is the post-join aggregate's own small
-      // shuffle: the join subtree (below SortMergeJoin) must be clean
-      val joinSub = plan.linesIterator
-        .dropWhile(!_.contains("SortMergeJoin")).mkString("\n")
-      val exchangeFree = plan.contains("SortMergeJoin") &&
-        !joinSub.linesIterator.exists(_.contains("Exchange "))
-      j.withColumn("exchange_free", lit(exchangeFree)).orderBy("segment")
-    } finally s.conf.set(key, prev)
-  }
-
-  /** STRING ZONE MAPS (r18 verdict #3 — `readStats` recorded nothing for
-    * string columns, so `lang = 'en'` / `source = 'web'` predicates, the
-    * most common filters in an LLM-data pipeline, scanned every file):
-    * commits now record truncated UTF-8 byte bounds per string column
-    * (the Iceberg 16-byte idiom — plain-prefix lower bound, incremented-
-    * prefix upper bound, compared in the same unsigned byte order Spark
-    * itself sorts strings by, so pruning is conservative by
-    * construction), wired into the same skip path as numeric ranges.
-    * The row stages documents range-clustered by `lang`, runs the
-    * point-predicate read, and asserts `files_skipped` from the executed
-    * plan's `files=a/b` scan description; content is oracled against
-    * the parquet source. The multi-byte / truncation-boundary edge
-    * cases are fuzz-pinned in SourcesSpec.
-    */
-  private def qDsv2StringPrune(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val fmt = "graft.sources.v2.StageSource"
-    val dir = s"/tmp/graft_dsv2w/$tag/strprune"
-    Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      .repartitionByRange(8, col("lang"))
-      .write.format(fmt).option("path", dir).mode("overwrite").save()
-    val q = s.read.format(fmt).option("path", dir).load()
-      .filter(col("lang") === "en")
-    val agg = q.groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
-    agg.collect(): Unit // execute so the scan description carries counts
-    val plan = agg.queryExecution.executedPlan.toString
-    val skipped = "files=(\\d+)/(\\d+)".r.findFirstMatchIn(plan)
-      .exists(m => m.group(1).toInt < m.group(2).toInt &&
-        m.group(2).toInt >= 2)
-    agg.withColumn("files_skipped", lit(skipped)).orderBy("source")
-  }
-
-  /** CHANGE-DATA-FEED of a staged table's OWN history ([[
-    * graft.sources.v2.StageChangeFeed]], r18 verdict #1 — the streaming
-    * tail refuses non-append changes and says "consume a CDC view
-    * instead"; this row IS that view, end to end): appended files
-    * surface as `insert` records, merge-on-read delete-vector deltas as
-    * `delete` records bounded by the commit's own delta, and a
-    * compaction rewrite as delete+insert that nets to zero. The row
-    * drives the full lifecycle — two appends, a MOR delete, a
-    * compaction, then STREAMS the feed (`Trigger.AvailableNow`,
-    * `maxFilesPerTrigger=1`), lands a second MOR delete mid-stream (the
-    * exact case that kills the plain tail), resumes from the same
-    * checkpoint, and rebuilds the live table by multiset replay
-    * (inserts ∖ deletes) of the STREAMED records. Four verdicts ride
-    * the row: stream≡batch feed, rewrite nets zero, the mid-stream
-    * delete arrived as exactly its delta, and the replay matches the
-    * table. The accumulated feed is bounded by the staged slice (~500
-    * rows — a driver-side fold like every streaming lifecycle row).
-    * At 100 TB this is the lakehouse CDC loop on the table's own
-    * history: downstream consumers follow inserts AND retractions
-    * incrementally, no refusal, no rescan.
-    */
-  private def qDsv2CdcFeed(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.sources.v2.StageSource
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.ord_cdf"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT)
-      TBLPROPERTIES ('delete.mode'='merge-on-read')""")
-    def ins(where: String): Unit = s.sql(s"""INSERT INTO $t
-      SELECT o_orderkey, o_orderstatus,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT)
-      FROM $v WHERE $where"""): Unit
-    ins("o_orderkey < 1500")                       // v1
-    ins("o_orderkey >= 1500 AND o_orderkey < 2000") // v2
-    s.sql(s"DELETE FROM $t WHERE k % 7 = 3")       // v3: MOR delta
-    val dir = s"${s.conf.get(s"spark.sql.catalog.$cat.root")}/default/ord_cdf"
-    StageSource.compact(dir)                       // v4: rewrite = delete+insert
-    val fmt = "graft.sources.v2.StageSource"
-    val ckpt = s"/tmp/graft_dsv2w/${dirTag(d)}/cdf_ckpt"
-    graft.engine.Fs.deleteRecursively(new java.io.File(ckpt))
-    val acc = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long, String, Long)]
-    def drain(): Long = {
-      val q = s.readStream.format(fmt).option("path", dir)
-        .option("read-change-feed", "true")
-        .option("maxFilesPerTrigger", "1").load()
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.collect().foreach(r => acc.add((r.getLong(0), r.getString(1),
-            r.getLong(2), r.getString(3), r.getLong(4))))
-          (): Unit
-        }.start()
-      q.awaitTermination()
-      acc.size().toLong
-    }
-    drain()
-    val preMid = acc.size()
-    // the rows the mid-stream delete will retract, counted from the
-    // PINNED pre-delete snapshot
-    val midExpected = s.read.format(fmt).option("path", dir).load()
-      .filter(col("k") % 11 === 5).count()
-    s.sql(s"DELETE FROM $t WHERE k % 11 = 5")      // v5: mid-stream delete
-    drain()                                        // resumes, consumes it
-    import scala.jdk.CollectionConverters._
-    val streamed = acc.asScala.toSeq
-    import s.implicits._
-    val feedDf = streamed.toDF("k", "status", "cents", "ctype", "ver")
-    val batch = s.read.format(fmt).option("path", dir)
-      .option("read-change-feed", "true").load()
-      .select("k", "status", "cents", "_change_type", "_commit_version")
-      .as[(Long, String, Long, String, Long)].collect().toSeq
-    val streamEqBatch = streamed.sorted == batch.sorted
-    val midDeltaExact = streamed.size - preMid == midExpected &&
-      streamed.drop(preMid.toInt).forall(r => r._4 == "delete" && r._5 == 5L)
-    val rewriteNetsZero = {
-      val v4 = streamed.filter(_._5 == 4L)
-      val insM = v4.filter(_._4 == "insert").map(r => (r._1, r._2, r._3))
-      val delM = v4.filter(_._4 == "delete").map(r => (r._1, r._2, r._3))
-      insM.nonEmpty && insM.sorted == delM.sorted
-    }
-    val replay = feedDf.filter($"ctype" === "insert").select("k", "status", "cents")
-      .exceptAll(feedDf.filter($"ctype" === "delete").select("k", "status", "cents"))
-    val live = s.read.format(fmt).option("path", dir).load()
-    // both multiset-difference directions in ONE job (r19: two sequential
-    // isEmpty actions paid a second scheduling round-trip for the same
-    // verdict; the union is still exact — empty iff both sides are empty)
-    val replayMatches =
-      replay.exceptAll(live).union(live.exceptAll(replay)).isEmpty
-    replay.groupBy("status")
-      .agg(count(lit(1)).as("n_orders"), sum("cents").as("sum_cents"))
-      .withColumn("stream_equals_batch", lit(streamEqBatch))
-      .withColumn("mid_stream_delete_consumed", lit(midDeltaExact))
-      .withColumn("rewrite_nets_zero", lit(rewriteNetsZero))
-      .withColumn("replay_matches_table", lit(replayMatches))
-      .orderBy("status")
-  }
-
-  /** DIRECT storage-partitioned PK–FK join over staged tables — the
-    * sort-free leg ([[qDsv2SpjStaged]] aggregates before joining, so its
-    * merge join sorts above the hash aggregates; here the fact table
-    * joins the bucket dimension DIRECTLY and the scans' declared
-    * ordering — each key-grouped partition holds one constant key —
-    * lets the planner delete the per-partition sorts too: the join
-    * subtree plans with ZERO exchanges and ZERO sorts, plan-pinned).
-    * The post-join aggregate's own small shuffle is the only exchange.
-    */
-  private def qDsv2SpjDim(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val fmt = "graft.sources.v2.StageSource"
-    val factDir = s"/tmp/graft_dsv2w/$tag/spjd_fact"
-    val dimDir = s"/tmp/graft_dsv2w/$tag/spjd_dim"
-    // WRITE-ONCE fixture (r19 — the [[qDsv2SpjStaged]] r17-verdict-#6
-    // discipline applied to this row too): the row's declared object is
-    // the exchange-free, sort-free join over the staged layout, and
-    // re-staging both tables every run made the bench number measure the
-    // staging writes beside it. The write path keeps its own rows
-    // (q_dsv2_write / q_dsv2_lineage / q_dsv2_catalog).
-    stagedOnce(factDir) {
-      Tables.orders(s, d)
-        .select((col("o_orderkey") % 8).as("b"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .write.format(fmt).option("path", factDir)
-        .option("partition_by", "b").mode("overwrite").save()
-    }
-    stagedOnce(dimDir) {
-      s.range(0, 8)
-        .select(col("id").as("b"),
-          concat(lit("bucket_"), col("id")).as("label"))
-        .write.format(fmt).option("path", dimDir)
-        .option("partition_by", "b").mode("overwrite").save()
-    }
-    val key = "spark.sql.sources.v2.bucketing.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "true")
-    try {
-      val fact = s.read.format(fmt).option("path", factDir).load()
-      val dim = s.read.format(fmt).option("path", dimDir).load()
-      val out = fact.hint("merge").join(dim, "b")
-        .groupBy("label")
-        .agg(count(lit(1)).as("n_orders"), sum("cents").as("sum_cents"))
-        .orderBy("label")
-      out.queryExecution.executedPlan // force planning under the conf
-      out
-    } finally s.conf.set(key, prev)
-  }
-
-  /** Row LINEAGE through the connector's metadata column
-    * ([[graft.sources.v2.StageTable]]'s `SupportsMetadataColumns` — the
-    * `_metadata.file_path` analog): lineitem is written through the
-    * staging connector IDENTITY-PARTITIONED by return flag (the write
-    * declares clustered distribution via `RequiresDistributionAndOrdering`
-    * — Spark plans the shuffle, each flag lands wholly in one task, the
-    * writer routes one committed shard per flag value), read back with
-    * the hidden `_file` column, and the audit proves the layout from
-    * lineage alone: every flag's rows live in exactly ONE shard
-    * (`n_files` = 1) and the three flags live in THREE distinct shards
-    * (`total_files`, attached via a broadcast 1-row aggregate). `_file`
-    * is absent from `SELECT *` (pinned in ConnectorSpec) — lineage is
-    * materialized only when asked for. At 100 TB this is the shard audit
-    * a takedown/dedup pipeline runs before acting file-wise: which files
-    * hold which cohort, without a provenance column baked into every row.
-    */
-  private def qDsv2Lineage(s: SparkSession, d: String): DataFrame = {
-    val root = s"/tmp/graft_dsv2w/${dirTag(d)}/lineage"
-    Tables.lineitem(s, d)
-      .select(col("l_returnflag").as("flag"),
-        round(col("l_extendedprice") * 100).cast("long").as("cents"))
-      .write.format("graft.sources.v2.StageSource")
-      .option("path", root).option("partition_by", "flag")
-      .mode("overwrite").save()
-    val back = s.read.format("graft.sources.v2.StageSource")
-      .option("path", root).load()
-      .select(col("flag"), col("cents"), col("_file"))
-    val perFlag = back.groupBy("flag")
-      .agg(count(lit(1)).as("n_rows"), sum("cents").as("sum_cents"),
-        countDistinct(col("_file")).as("n_files"))
-    val total = back.agg(countDistinct(col("_file")).as("total_files"))
-    perFlag.withColumn("one", lit(1))
-      .join(broadcast(total.withColumn("one", lit(1))), "one")
-      .drop("one")
-      .select("flag", "n_rows", "sum_cents", "n_files", "total_files")
-      .orderBy("flag")
-  }
-
-  /** Register the staging catalog once per session (idempotent): SQL
-    * DDL/DML address the connector's tables as `stage_<tag>.default.<t>`.
-    */
-  private def stageCatalog(s: SparkSession, d: String): String = {
-    val tag = dirTag(d)
-    val cat = s"stage_$tag"
-    s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.StageCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_dsv2cat/$tag")
-    cat
-  }
-
-  /** SQL DDL/DML THROUGH the custom catalog ([[graft.sources.v2
-    * .StageCatalog]] — the seam that turns the path-based connector into
-    * addressable tables, the surface a table format exposes): CREATE
-    * TABLE … PARTITIONED BY (status) declares the identity layout, INSERT
-    * INTO routes every status to its own committed shard (the write's
-    * required clustering plans the shuffle), and the read-back GROUP BY
-    * runs over the catalog identifier, not a path. The oracle replays the
-    * content straight from orders — the catalog must be a pure naming
-    * seam, never a data transformation.
-    */
-  private def qDsv2Catalog(s: SparkSession, d: String): DataFrame = {
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.ord_part"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    s.sql(s"CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT) " +
-      "PARTITIONED BY (status)")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""INSERT INTO $t
-      SELECT o_orderkey, o_orderstatus,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT)
-      FROM $v""")
-    s.sql(s"""SELECT status, COUNT(*) AS n_orders, SUM(cents) AS sum_cents,
-             MIN(k) AS min_k, MAX(k) AS max_k
-      FROM $t GROUP BY status ORDER BY status""")
-  }
-
-  /** Partition-predicate DELETE — the TAKEDOWN path ([[graft.sources.v2
-    * .StageTable]]'s `SupportsDeleteV2`, Iceberg's metadata-delete
-    * contract): `DELETE FROM … WHERE status IN (…)` on an
-    * identity-partitioned table resolves to dropping whole committed
-    * files from the snapshot — every file carries exactly one partition
-    * value, so the predicate is decidable per-file and NO row is read or
-    * rewritten. A predicate the layout cannot decide (a non-partition
-    * column) is DECLINED loudly (canDeleteWhere=false → Spark raises;
-    * the decline leg is pinned in SourcesSpec) — at 100 TB a takedown
-    * that silently rewrote petabytes row-wise would be a bug. The
-    * read-back after the delete is oracled against orders minus the
-    * deleted statuses, and the scan's `files=` evidence (pinned in
-    * PlanAuditSpec) proves the surviving partitions were never touched.
-    */
-  private def qDsv2Delete(s: SparkSession, d: String): DataFrame = {
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.ord_takedown"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    s.sql(s"CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT) " +
-      "PARTITIONED BY (status)")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""INSERT INTO $t
-      SELECT o_orderkey, o_orderstatus,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT)
-      FROM $v""")
-    s.sql(s"DELETE FROM $t WHERE status IN ('P', 'F')")
-    s.sql(s"""SELECT status, COUNT(*) AS n_orders, SUM(cents) AS sum_cents
-      FROM $t GROUP BY status ORDER BY status""")
-  }
-
-  /** STREAMING read through the custom connector ([[graft.sources.v2
-    * .SeqMicroBatchStream]] — the connector's MICRO_BATCH_READ half, with
-    * real offset bookkeeping and admission control): the same
-    * deterministic domain is consumed as a sequence of bounded
-    * micro-batches (`maxRowsPerBatch` = 50k over 210k rows → ≥5 batches,
-    * the Kafka `maxOffsetsPerTrigger` back-pressure contract),
-    * aggregated in complete mode, drained by Trigger.AvailableNow. The
-    * final aggregate must equal the batch answer over the whole domain —
-    * streaming-in-bounded-pieces is an execution strategy, never a
-    * semantics change. The multi-batch lifecycle is pinned in
-    * StreamingSpec (progress count ≥ 5, offsets strictly increasing).
-    */
-  private def qDsv2Stream(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.format("graft.sources.v2.SeqSource")
-        .option("n", 210000L).option("slices", 8)
-        .option("maxRowsPerBatch", 50000L)
-        .load()
-        .groupBy(col("mod7"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(s"graft_dsv2_stream_$tag")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.table(s"graft_dsv2_stream_$tag").orderBy("mod7")
-  }
-
-  /** STREAMING sink THROUGH the custom connector ([[graft.sources.v2
-    * .StageStreamingWrite]] — the last quadrant of the connector matrix:
-    * batch read/write and streaming read are already rows): the
-    * connector-streamed sequence (3 bounded micro-batches via admission
-    * control) is appended epoch-by-epoch through the same two-phase
-    * commit as the batch write, made effectively EXACTLY-ONCE by the
-    * epoch ledger (`_epochs.txt` + epoch-deterministic file names — Spark
-    * re-offers the last epoch after a restart between sink commit and
-    * offset log; the ledger skips it; SourcesSpec pins the re-delivery
-    * no-op). The read-back aggregate over the committed table must equal
-    * the whole-domain batch answer: micro-batched delivery through an
-    * at-least-once channel changes nothing about the content.
-    */
-  private def qDsv2StreamSink(s: SparkSession, d: String): DataFrame = {
-    val root = s"/tmp/graft_dsv2w/${dirTag(d)}/streamsink"
-    graft.engine.Fs.deleteRecursively(new java.io.File(root))
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.format("graft.sources.v2.SeqSource")
-        .option("n", 120000L).option("slices", 4)
-        .option("maxRowsPerBatch", 40000L)
-        .load()
-        .writeStream.format("graft.sources.v2.StageSource")
-        .option("path", root)
-        .option("checkpointLocation", s"$root/.ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.read.format("graft.sources.v2.StageSource").option("path", root).load()
-      .groupBy(col("mod7"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"))
-      .orderBy("mod7")
-  }
-
-  /** Catalog-scoped SQL FUNCTIONS ([[graft.sources.v2.StageCatalog]]'s
-    * `FunctionCatalog` half — Iceberg's system-function surface): the
-    * query calls `<cat>.default.knuth_bucket(16, k)` (multiplicative-hash
-    * bucketing, Knuth §6.4 — engine-portable by design) and
-    * `<cat>.default.cents(x)` (the catalog's exact-money idiom) resolved
-    * THROUGH the catalog, not the session registry. Both carry a magic
-    * `invoke` over primitives, so the calls codegen via Invoke straight
-    * into the aggregate — no UDF boxing (ExtensionsSpec pins
-    * ApplyFunctionExpression's absence from the executed plan). At 100 TB
-    * this is shared write/query vocabulary: the bucket function that laid
-    * the table out is the same catalog object queries filter with.
-    */
-  private def qDsv2Function(s: SparkSession, d: String): DataFrame = {
-    val cat = stageCatalog(s, d)
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""SELECT $cat.default.knuth_bucket(16L, o_orderkey) AS b,
-             COUNT(*) AS n_orders,
-             SUM($cat.default.cents(o_totalprice)) AS sum_cents
-      FROM $v GROUP BY b ORDER BY b""")
-  }
-
-  /** SNAPSHOT versioning + TIME TRAVEL through the staging connector
-    * (every commit writes a `_v<N>.manifest` naming its exact file set;
-    * overwrite is LOGICAL — the old snapshot's files stay on disk until
-    * a vacuum expires them — so crash safety and time travel are the
-    * same mechanism): three catalog commits (INSERT, INSERT, INSERT
-    * OVERWRITE) build versions 1..3, and the row reads all three via SQL
-    * `VERSION AS OF`, the default (latest) read (must equal v3), and
-    * three `TIMESTAMP AS OF` instants bracketing the commits — each
-    * resolved through the per-manifest commit-time ledger
-    * (`_commits.tsv`, Iceberg's snapshot-timestamp contract) to the
-    * snapshot current at that instant. A reproducible training run pins
-    * either form and gets the same corpus next month regardless of later
-    * appends/overwrites — snapshot isolation. Vacuum semantics (history
-    * expired, pre-vacuum versions fail loudly, takedown-deleted files
-    * make older versions unreconstructible BY DESIGN) and the
-    * pre-ledger-table decline are pinned in SourcesSpec.
-    */
-  private def qDsv2TimeTravel(s: SparkSession, d: String): DataFrame = {
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.tt_orders"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    s.sql(s"CREATE TABLE $t (k BIGINT, cents BIGINT)")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    def insert(lo: Long, hi: Long, overwrite: Boolean): Unit =
-      s.sql(s"""INSERT ${if (overwrite) "OVERWRITE" else "INTO"} $t
-        SELECT o_orderkey, CAST(ROUND(o_totalprice * 100) AS BIGINT)
-        FROM $v WHERE o_orderkey >= $lo AND o_orderkey < $hi""")
-    // commit instants bracket each snapshot; the 5 ms gap keeps the
-    // millisecond-resolution ledger strictly ordered so TIMESTAMP AS OF
-    // an instant between commits is unambiguous
-    insert(0, 200, overwrite = false) // v1
-    val afterV1 = System.currentTimeMillis(); Thread.sleep(5)
-    insert(200, 500, overwrite = false) // v2 = v1 + [200,500)
-    val afterV2 = System.currentTimeMillis(); Thread.sleep(5)
-    insert(500, 600, overwrite = true) // v3: logical truncate — [500,600)
-    val afterV3 = System.currentTimeMillis()
-    def agg(df: DataFrame, v: Long) = df
-      .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"))
-      .select(lit(v).as("version"), col("n_rows"), col("sum_cents"))
-    def atV(ver: Int) = s.sql(s"SELECT * FROM $t VERSION AS OF $ver")
-    // TIMESTAMP AS OF resolves through the per-manifest commit-time
-    // ledger to the snapshot current at that instant (Iceberg's
-    // snapshot-timestamp contract); pre-ledger tables decline loudly
-    // (SourcesSpec pins the decline)
-    def atT(ms: Long) =
-      s.sql(s"SELECT * FROM $t TIMESTAMP AS OF timestamp_millis($ms)")
-    agg(atV(1), 1).unionAll(agg(atV(2), 2)).unionAll(agg(atV(3), 3))
-      .unionAll(agg(s.sql(s"SELECT * FROM $t"), 4)) // default read = v3
-      .unionAll(agg(atT(afterV1), 5)) // instant after v1 → v1
-      .unionAll(agg(atT(afterV2), 6)) // instant between v2 and v3 → v2
-      .unionAll(agg(atT(afterV3), 7)) // instant after the last → v3
-      .orderBy("version")
-  }
-
-  /** TYPED staging (r15 verdict #5): the connector's framing carries
-    * TIMESTAMP (epoch micros) and DECIMAL (unscaled bytes) columns —
-    * the events schema and the catalog's exact-currency discipline —
-    * through write → zone maps → partition pruning → read. Events are
-    * staged partitioned by day-of-month with an exact-integer
-    * DECIMAL(18,2) money column; the read back prunes to three day
-    * partitions AND zone-map-skips on a timestamp cutoff (both
-    * predicates visible in the scan description, pinned in SourcesSpec
-    * at the unit level), then aggregates per day. At 100 TB this is the
-    * difference between a staging table that can hold a real event feed
-    * and one that needs every temporal/money column laundered through
-    * longs at the boundary.
-    */
-  private def qDsv2TypedStage(s: SparkSession, d: String): DataFrame = {
-    val root = s"/tmp/graft_dsv2w/${dirTag(d)}/typed"
-    val fmt = "graft.sources.v2.StageSource"
-    Tables.events(s, d)
-      .select(col("event_id"), col("ts"),
-        round(col("value") * 100).cast("long")
-          .cast(org.apache.spark.sql.types.DecimalType(18, 2)).as("val_dec"),
-        dayofmonth(col("ts")).cast("long").as("day"))
-      .write.format(fmt).option("path", root)
-      .option("partition_by", "day").mode("overwrite").save()
-    val back = s.read.format(fmt).option("path", root).load()
-    back
-      .filter(col("day") >= 10 && col("day") <= 12) // partition pruning
-      .filter(col("ts") >= // zone-map skip on the timestamp column
-        lit(java.time.Instant.parse("2024-01-10T12:00:00Z")))
-      .groupBy("day")
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("val_dec")).cast("double").as("sum_val"),
-        unix_micros(max(col("ts"))).as("max_ts_us"))
-      .orderBy("day")
-  }
-
-  /** Partition-scoped INSERT OVERWRITE ([[graft.sources.v2
-    * .StageWriteBuilder]]'s `SupportsOverwrite` — the daily-pipeline
-    * idiom): `INSERT INTO … REPLACE WHERE status = 'O'` recomputes ONE
-    * partition (corrected cents) while every other partition's files are
-    * carried into the new snapshot untouched — no read, no rewrite, just
-    * manifest surgery plus the one new shard. The predicate must be
-    * decidable from the partition layout; anything finer throws at plan
-    * time (pinned in SourcesSpec) instead of half-replacing data. The
-    * read-back is oracled against orders with the recompute applied to
-    * 'O' only.
-    */
-  private def qDsv2ReplaceWhere(s: SparkSession, d: String): DataFrame = {
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.ord_daily"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    s.sql(s"CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT) " +
-      "PARTITIONED BY (status)")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""INSERT INTO $t
-      SELECT o_orderkey, o_orderstatus,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT)
-      FROM $v""")
-    // the daily recompute: partition 'O' replaced with corrected cents
-    s.sql(s"""INSERT INTO $t REPLACE WHERE status = 'O'
-      SELECT o_orderkey, o_orderstatus,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT) + 5
-      FROM $v WHERE o_orderstatus = 'O'""")
-    s.sql(s"""SELECT status, COUNT(*) AS n_orders, SUM(cents) AS sum_cents
-      FROM $t GROUP BY status ORDER BY status""")
-  }
-
-  /** CREATE TABLE AS SELECT through the custom catalog (the other DDL
-    * entry point: schema inferred from the query, partitioning declared,
-    * creation + first snapshot in one statement). Content must again be
-    * exactly orders — CTAS is naming + the write path, nothing more.
-    */
-  private def qDsv2Ctas(s: SparkSession, d: String): DataFrame = {
-    val cat = stageCatalog(s, d)
-    val t = s"$cat.default.ord_ctas"
-    s.sql(s"DROP TABLE IF EXISTS $t")
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""CREATE TABLE $t PARTITIONED BY (status) AS
-      SELECT o_orderkey AS k, o_orderstatus AS status,
-             CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
-      FROM $v""")
-    s.sql(s"""SELECT status, COUNT(*) AS n_orders, SUM(cents) AS sum_cents,
-             MIN(k) AS min_k, MAX(k) AS max_k
-      FROM $t GROUP BY status ORDER BY status""")
-  }
-
-  /** Catalog-scoped AGGREGATE function ([[graft.sources.v2.StageCatalog
-    * .GMean]] — the V2 `AggregateFunction` contract: per-partition
-    * `update`, associative `merge` of partials, one final
-    * `produceResult` — the reference's partial/final aggregate seam
-    * (`aggregator_fn_t`) expressed at the connector function layer, so
-    * SQL calls it like a builtin and Spark plans the same two-phase
-    * hash aggregate it plans for SUM). Geometric mean per order status,
-    * oracled against DuckDB's `EXP(AVG(LN(x)))` at 4 decimals.
-    */
-  private def qDsv2AggFunction(s: SparkSession, d: String): DataFrame = {
-    val cat = stageCatalog(s, d)
-    val v = s"graft_cat_orders_${dirTag(d)}"
-    Tables.orders(s, d).createOrReplaceTempView(v)
-    s.sql(s"""SELECT o_orderstatus AS status,
-             ROUND($cat.default.gmean(o_totalprice), 4) AS gm,
-             COUNT(*) AS n_orders
-      FROM $v GROUP BY 1 ORDER BY status""")
-  }
-
-  /** Aggregate pushdown into the STAGING connector ([[graft.sources.v2
-    * .StageScanBuilder]]'s `SupportsPushDownAggregates` — the parquet
-    * footer-statistics story on the connector's own format): COUNT(*) /
-    * MIN / MAX over the staged table are answered ENTIRELY from the
-    * commit-time sidecar statistics (`__rows` counts + per-file zone
-    * maps) — the plan is a bare project over a 1-row `StageAggScan`, no
-    * data file opened, no aggregate operator (pinned in PlanAuditSpec
-    * with the decline legs: filters, GROUP BY, SUM and double columns
-    * all fall back to the row path). At 100 TB a full-table count/key
-    * range is a metadata read, not a scan.
-    */
-  private def qDsv2StatsAgg(s: SparkSession, d: String): DataFrame = {
-    val root = s"/tmp/graft_dsv2w/${dirTag(d)}/statsagg"
-    Tables.orders(s, d)
-      .select(col("o_orderkey").as("k"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-      .write.format("graft.sources.v2.StageSource")
-      .option("path", root).mode("overwrite").save()
-    s.read.format("graft.sources.v2.StageSource").option("path", root).load()
-      .agg(count(lit(1)).as("n_rows"),
-        min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-  }
-
-  /** Snapshot-history EXPIRY ([[graft.sources.v2.StageSource.vacuum]] —
-    * Iceberg's `expire_snapshots`): three commits build versions 1..3,
-    * vacuum expires everything but the latest — pre-vacuum versions
-    * fail loudly afterwards (`history_expired`, asserted in-plan as a
-    * literal the oracle checks as TRUE), the physical file set shrinks
-    * to exactly the latest manifest (`files_pruned`), and the surviving
-    * content is oracled against the v3 slice of orders. This is the
-    * retention half of the time-travel contract: storage is reclaimed
-    * on an explicit, auditable boundary, never implicitly.
-    */
-  private def qDsv2Vacuum(s: SparkSession, d: String): DataFrame = {
-    val root = s"/tmp/graft_dsv2w/${dirTag(d)}/vacuum"
-    graft.engine.Fs.deleteRecursively(new java.io.File(root))
-    val fmt = "graft.sources.v2.StageSource"
-    val orders = Tables.orders(s, d)
-    def slice(lo: Long, hi: Long) = orders
-      .filter(col("o_orderkey") >= lo && col("o_orderkey") < hi)
-      .select(col("o_orderkey").as("k"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    slice(0, 300).write.format(fmt).option("path", root)
-      .mode("overwrite").save() // v1
-    slice(300, 500).write.format(fmt).option("path", root)
-      .mode("append").save() // v2
-    slice(500, 700).write.format(fmt).option("path", root)
-      .mode("overwrite").save() // v3
-    graft.sources.v2.StageSource.vacuum(root)
-    // probe history expiry through the snapshot RESOLVER (the exact
-    // function every reader calls), not through a full Spark action: a
-    // deliberately-failing count() leaves a failed QueryExecution that
-    // every registered QueryExecutionListener then re-analyzes — the
-    // same require throws again INSIDE the listener bus and spams ERROR
-    // lines into every bench/verify log (observed at the sf1 run). The
-    // read-path failure itself stays pinned in SourcesSpec's vacuum test.
-    val historyExpired =
-      try {
-        graft.sources.v2.StageSource.snapshotFiles(root, Some(1))
-        false
-      } catch { case _: IllegalArgumentException => true }
-    val physical = graft.sources.v2.StageSource
-      .dataFiles(root).map(_.getName).toSet
-    val manifest = graft.sources.v2.StageSource
-      .snapshotFiles(root, None).map(_.getName).toSet
-    val nVersions = graft.sources.v2.StageSource.manifestVersions(root).length
-    s.read.format(fmt).option("path", root).load()
-      .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"))
-      .select(col("n_rows"), col("sum_cents"),
-        lit(nVersions.toLong).as("n_versions"),
-        lit(historyExpired).as("history_expired"),
-        lit(physical == manifest).as("files_pruned"))
-  }
-
-  /** Misra-Gries heavy hitters (the reference's `aggregator_fn_t` seam,
-    * `dpu/shared/kernels/aggr.c:16`, as a mergeable sketch): one pass, k
-    * counters per partition, merged map-side — no shuffle of raw items.
-    *
-    * The catalog row checks the sketch's GUARANTEE set: every item with
-    * true frequency > n/(k+1) must appear, and Misra-Gries estimates are
-    * under-counts, so `est > T` implies `true > T`. The item column is
-    * derived with a designed gap (h0 ≈ 50%, h1 ≈ 25%, each tail item
-    * ≈ 0.05%) so that with k = 19 (error ≤ n/20) the set
-    * `{item : est·10 > n}` provably equals the exact-frequency set
-    * `{item : freq·10 > n}` DuckDB computes — the sketch is oracle-checked
-    * without requiring exact counts from an approximate operator.
-    */
-  private def qHeavyHitters(s: SparkSession, d: String): DataFrame = {
-    val hh = udaf(new TypedAggregates.HeavyHitters(19))
-    val items = Tables.orders(s, d).select(
-      when(col("o_orderkey") % 2 === 0, lit("h0"))
-        .when(col("o_orderkey") % 4 === 1, lit("h1"))
-        .otherwise(concat(lit("tail_"), (col("o_orderkey") % 499).cast("string")))
-        .as("item"))
-    items
-      .agg(hh(col("item")).as("sketch"), count(lit(1)).as("n"))
-      .select(explode(col("sketch")).as(Seq("item", "est")), col("n"))
-      .filter(col("est") * 10 > col("n"))
-      .select("item")
-      .orderBy("item")
-  }
-
-  /** Partition-pruned scan: events are written ONCE as a date-partitioned
-    * table — the write-side layout that lets a 100 TB time-range query read
-    * only the partitions it touches (directory-level pruning, before any
-    * row group is opened) — then one day is read back through a partition
-    * filter. `PlanAuditSpec` asserts the scan's `PartitionFilters` is
-    * non-empty, the plan-shape property this query exists to pin (the
-    * bucketed-join counterpart of `BucketingSpec`'s exchange-free check).
-    */
-  /** The date-partitioned events table (write-once staged) — the layout
-    * under [[qPrunedScan]] (static pruning) and [[qDppJoin]] (dynamic
-    * pruning).
-    */
-  private def eventsByDate(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val table = s"graft_ev_bydate_$tag"
-    val path = s"/tmp/graft_partitioned/$tag/events"
-    // cross-JVM write-once, same discipline as bucketedTable/annIndex: a
-    // fresh process whose path is fully written ATTACHES it instead of
-    // rewriting (which would also race any concurrent reader)
-    stagedOnceGuarded(path)(s.catalog.tableExists(table)) {
-      if (new java.io.File(path, "_SUCCESS").exists()) {
-        s.sql(
-          s"""CREATE TABLE IF NOT EXISTS $table
-             |(event_id BIGINT, ts TIMESTAMP, user_id BIGINT,
-             | event_type STRING, value DOUBLE, props STRING, event_date DATE)
-             |USING parquet PARTITIONED BY (event_date)
-             |LOCATION '$path'""".stripMargin)
-        s.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
-      } else {
-        Tables.events(s, d)
-          .withColumn("event_date", to_date(col("ts")))
-          .write.partitionBy("event_date")
-          .option("path", path)
-          .mode("overwrite").saveAsTable(table)
-      }
-    }
-    s.table(table)
-  }
-
-  private def qPrunedScan(s: SparkSession, d: String): DataFrame =
-    eventsByDate(s, d)
-      .filter(col("event_date") === lit("2024-01-15").cast("date"))
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      .orderBy("event_id")
-
-  /** DYNAMIC partition pruning — the runtime half of the pruning story:
-    * [[qPrunedScan]] pins the static case (a literal predicate prunes at
-    * plan time), but the common 100 TB shape is a fact table joined to a
-    * FILTERED dimension whose surviving keys are only known at run time.
-    * Catalyst plants a DynamicPruningSubquery on the fact's partition
-    * column: the broadcast dim materializes first, and only the
-    * partitions its keys name are ever listed/read — 3 of ~30 days here,
-    * the difference between scanning 100 TB and 10 TB in production.
-    * `PlanAuditSpec` pins `dynamicpruning` in the fact scan's partition
-    * filters. Aggregates stay in exact integer space.
-    */
-  /** The campaign-days dim for [[qDppJoin]]/[[qBloomSemijoin]] — staged as
-    * a real parquet source so its selective filter survives as a live
-    * Filter node (a local relation constant-folds it away, and without a
-    * selective dim-side predicate Catalyst correctly skips DPP).
-    */
-  private def dppDim(s: SparkSession, d: String): DataFrame = {
-    val dir = s"/tmp/graft_dppdim/${dirTag(d)}/campaign_days"
-    stagedOnce(dir) {
-      s.createDataFrame(Seq(
-          ("2024-01-05", "promo"), ("2024-01-15", "promo"),
-          ("2024-01-25", "control"), ("2024-02-14", "unused")))
-        .toDF("dim_day", "campaign")
-        .select(col("dim_day").cast("date").as("dim_date"), col("campaign"))
-        .write.mode("overwrite").parquet(dir)
-    }
-    s.read.parquet(dir)
-  }
-
-  private def qDppJoin(s: SparkSession, d: String): DataFrame = {
-    eventsByDate(s, d)
-      .join(broadcast(dppDim(s, d).filter(col("campaign") =!= "unused")),
-        col("event_date") === col("dim_date"))
-      .groupBy(date_format(col("event_date"), "yyyy-MM-dd").as("day"),
-        col("campaign"))
-      .agg(count(lit(1)).as("n"),
-        countDistinct(col("user_id")).as("n_users"),
-        sum(col("event_id")).as("sum_id"))
-      .orderBy("day")
-  }
-
-  /** Bloom SEMI-JOIN PUSHDOWN measured against DPP (r13 verdict #7) —
-    * the same selective dim ⋈ partitioned-fact query as [[qDppJoin]],
-    * answered WITHOUT dynamic partition pruning: the dim's join keys are
-    * collapsed into a KB-scale bloom filter at query build (one
-    * metadata-sized dim job), and the probe on the fact's partition
-    * column is attached as a STATIC scan predicate. Because the probe
-    * references ONLY the partition column, Catalyst classifies it as a
-    * PartitionFilter — directory-level pruning at file-listing time, the
-    * same I/O cut DPP achieves with its runtime subquery, minus the
-    * subquery stage (PlanAuditSpec pins `might_contain` inside
-    * PartitionFilters and the absence of `dynamicpruning`). False
-    * positives pass the bloom but are removed by the exact join, so the
-    * answer is identical to [[qDppJoin]]'s — one oracle, two pruning
-    * strategies. Trade-off this row documents: DPP is automatic and
-    * exact but pays a subquery + broadcast exchange at runtime; the
-    * static bloom costs one dim pass up front, admits ~fpp of extra
-    * partitions, and — the 100 TB reason it exists — also works when the
-    * planner DECLINES DPP (non-broadcastable dims, pruning ratio below
-    * `fallbackFilterRatio`, or a filter the subquery rewrite can't see).
-    * DPP is conf-disabled inside the build window (q_cbo_reorder
-    * discipline: plan forced + result cached inside), so the measured
-    * plan carries exactly one pruning mechanism.
-    */
-  private def qBloomSemijoin(s: SparkSession, d: String): DataFrame = {
-    val active = dppDim(s, d).filter(col("campaign") =!= "unused")
-    // bloom over the dim's join keys as epoch-days (bloomFilter wants
-    // long/string); the fact-side probe applies the SAME derivation
-    val epochDay = (c: Column) =>
-      datediff(c, lit("1970-01-01").cast("date")).cast("long")
-    val bytes = GraftFunctions.buildBloom(
-      active.select(epochDay(col("dim_date")).as("k")), "k")
-    val key = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
-    val saved = s.conf.getOption(key)
-    try {
-      s.conf.set(key, "false")
-      val df = eventsByDate(s, d)
-        .filter(NativeExpressions.bloom_might_contain(
-          epochDay(col("event_date")), bytes))
-        .join(broadcast(active), col("event_date") === col("dim_date"))
-        .groupBy(date_format(col("event_date"), "yyyy-MM-dd").as("day"),
-          col("campaign"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("user_id")).as("n_users"),
-          sum(col("event_id")).as("sum_id"))
-        .orderBy("day")
-      df.queryExecution.executedPlan // plan inside the no-DPP window
-      df.cache()
-      df.count()
-      df
-    } finally saved match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
-  /** Small-file compaction — the lakehouse maintenance op a 100 TB table
-    * needs continuously: streaming/incremental writers leave thousands of
-    * KB-scale files whose per-file open/footer cost dominates scans; the
-    * compactor rewrites them into few large range-clustered files (sorted
-    * within each, so min/max stats stay tight on the cluster key). Staged
-    * once per directory (dirTag discipline): a 64-file fragmented copy,
-    * then the 4-file compaction. The oracle is CONTENT equality with the
-    * source — compaction must change layout, never answers; the file-count
-    * reduction itself is pinned by `PlanAuditSpec`.
-    */
-  private def qCompaction(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val small = s"/tmp/graft_compact/$tag/small"
-    val compacted = s"/tmp/graft_compact/$tag/compacted"
-    stagedOnce(compacted) {
-      if (!new java.io.File(small, "_SUCCESS").exists())
-        Tables.events(s, d).select("event_id", "event_type", "value")
-          .repartition(64) // the fragmented state a drip-writer leaves
-          .write.mode("overwrite").parquet(small)
-      s.read.parquet(small)
-        .repartitionByRange(4, col("event_id"))
-        .sortWithinPartitions("event_id")
-        .write.mode("overwrite").parquet(compacted)
-    }
-    s.read.parquet(compacted).orderBy("event_id")
-  }
-
-  /** Multi-dimensional clustered scan: events are written ONCE z-ordered
-    * on (user_id, value) ([[graft.sources.Layout]]), then a range
-    * predicate on `value` — NOT the leading dimension of any
-    * lexicographic sort — reads only the files whose min/max stats admit
-    * the range. The plan-audit spec measures the decoded-row reduction vs
-    * a user_id-sorted layout of the same data; the oracle checks the
-    * filtered result itself against DuckDB on the original table (layout
-    * must never change ANSWERS, only bytes touched).
-    */
-  private def qZorderScan(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    val path = s"/tmp/graft_zorder/$tag/events"
-    stagedOnce(path) {
-      graft.sources.Layout.writeZOrdered(
-        Tables.events(s, d)
-          .select(col("event_id"), col("user_id"), col("event_type"), col("value")),
-        Seq("user_id", "value"), path)
-    }
-    s.read.parquet(path)
-      .filter(col("value") >= 100.0 && col("value") < 120.0)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      .orderBy("event_id")
-  }
-
-  /** Duplicate-cluster resolution: connected components over the exact
-    * n-gram-Jaccard near-dup graph — pair finding tells you WHO matches;
-    * this answers what a dedup pipeline actually needs, WHICH GROUPS to
-    * collapse and which survivor to keep (cluster_id = min member doc id).
-    * Oracled in DuckDB with a recursive CTE computing min-reachable-id
-    * over the identical pair set.
-    *
-    * Threshold 0.5 (vs q_ngram_jaccard's 0.03): clustering needs DUP-level
-    * edges. At 0.03 the pair graph is topic-level similarity — long chains
-    * of weakly-related docs merge into sprawling components (measured:
-    * 8 pointer-jumping rounds, i.e. ~100-hop paths), which is both slow
-    * and the wrong semantics for "collapse these duplicates".
-    */
-  /** Write-once staged near-dup pair set at threshold 0.5 (dirTag
-    * discipline, like the PageRank edge table and the ANN index):
-    * `q_dup_clusters`, `q_dedup_canonical`, and `q_graph_triangles` are
-    * three downstream CONSUMERS of one pair-finding run — exactly how a
-    * production pipeline amortizes its expensive stage (find pairs once,
-    * cluster/canonicalize/diagnose from the artifact). The live pair
-    * operator itself stays exercised end-to-end by `q_ngram_jaccard` (and
-    * at threshold 0.03 by `q_contamination`/`q_corpus_pipeline`). The
-    * single-file coalesce is an oracle-scale convenience (hundreds of
-    * rows); a production artifact stays partitioned.
-    */
-  private def stagedDupPairs(s: SparkSession, d: String): DataFrame =
-    stagedExactPairs(s, d, "t05")(
-      Dedup.ngramJaccardPairs(Tables.documents(s, d), "doc_id", "text",
-          n = 3, threshold = 0.5)
-        .select(col("id_a"), col("id_b")))
-
-  private def qDupClusters(s: SparkSession, d: String): DataFrame =
-    Components.duplicateClusters(stagedDupPairs(s, d), "id_a", "id_b")
-      .orderBy("cluster_id")
-
-  /** BFS hop distance from each near-dup cluster's canonical survivor
-    * ([[Components.hopDistance]]): how many near-dup links separate a
-    * document from the representative its cluster keeps — the "dup
-    * chain depth" a curation pipeline inspects when transitive
-    * near-dup merging (A≈B≈C) starts fusing documents that are NOT
-    * pairwise similar (dist ≥ 2 = kept only via a chain). Seeds are the
-    * component minima from the same one staged pair set every graph row
-    * consumes; both the labeling and the BFS are
-    * one-edge-shuffle-per-round iterations, O(diameter) rounds. The
-    * oracle recomputes labels AND distances from raw text via recursive
-    * CTEs — a full differential on the iterative machinery.
-    */
-  private def qGraphBfs(s: SparkSession, d: String): DataFrame = {
-    val pairs = stagedDupPairs(s, d)
-    val labels = Components.connectedComponents(pairs, "id_a", "id_b")
-    val seeds = labels.filter(col("id") === col("comp")).select("id")
-    Components.hopDistance(pairs, "id_a", "id_b", seeds, "id")
-      .join(labels, "id")
-      .select(col("id").as("doc_id"), col("comp").as("cluster_id"), col("dist"))
-      .orderBy("doc_id")
-  }
-
-  /** Connected-component labels through Spark's native `WITH RECURSIVE`
-    * SQL surface — the same cluster_id/n_members result as
-    * [[qDupClusters]] (identical oracle), computed by the ANSI recursive
-    * CTE instead of [[graft.ext.Components]]' pointer jumping. Three
-    * engines, three mechanisms, one answer: DuckDB's unbounded
-    * UNION-dedup recursion (the oracle), Spark's iterative UnionLoop
-    * here, and the log-hop pointer jumping — a genuine differential on
-    * the recursion machinery itself. The recursive term propagates a
-    * label only DOWNWARD (`r.comp < e.dst`) and is depth-bounded at 3:
-    * near-dup clusters at threshold 0.5 are cliques (the
-    * [[qGraphTriangles]] transitivity certificate), so the component
-    * minimum reaches every member in ONE hop and the bound is safety
-    * margin, not a correctness assumption the oracle can't check — a
-    * diameter-4 chain would hash-mismatch against DuckDB's unbounded
-    * recursion. Scale note: recursive SQL with UNION ALL grows the
-    * frontier per level, so the 100 TB path for deep graphs remains the
-    * pointer-jumping operator (log-hop, deduped per round); this row
-    * pins the SQL surface on the graph shape it is right for.
-    */
-  private def qRecursiveCte(s: SparkSession, d: String): DataFrame = {
-    val pairs = tempView(s, d, "graft_dup_pairs", stagedDupPairs(s, d))
-    // the recursion's working set scales with the pair graph, and Spark's
-    // default cteRecursionRowLimit (1M rows) is a safety valve, not a
-    // semantic bound — the ×10 fixture tripped it (sf1 bench r16). The
-    // query's own guards (dist < 3, comp < dst) bound the recursion;
-    // raise the valve so the bound that terminates is the DECLARED one.
-    // At 100 TB this conf is sized to the expected frontier, same as any
-    // iterate-to-fixpoint job.
-    s.conf.set("spark.sql.cteRecursionRowLimit", "100000000")
-    s.sql(
-      s"""WITH RECURSIVE reach(id, comp, dist) AS (
-         |  SELECT DISTINCT src, src, 0 FROM (
-         |    SELECT id_a AS src FROM $pairs
-         |    UNION ALL SELECT id_b FROM $pairs)
-         |  UNION ALL
-         |  SELECT e.dst, r.comp, r.dist + 1
-         |  FROM reach r
-         |  JOIN (SELECT id_a AS src, id_b AS dst FROM $pairs
-         |        UNION ALL SELECT id_b, id_a FROM $pairs) e
-         |    ON e.src = r.id
-         |  WHERE r.dist < 3 AND r.comp < e.dst
-         |),
-         |lbl AS (SELECT id, MIN(comp) AS comp FROM reach GROUP BY id)
-         |SELECT comp AS cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members
-         |FROM lbl GROUP BY comp ORDER BY cluster_id""".stripMargin)
-  }
-
-  /** Triangle count + global clustering coefficient over the near-dup
-    * pair graph — the transitivity diagnostic of a dedup pipeline: near-dup
-    * SHOULD be roughly transitive (A≈B≈C ⇒ A≈C), so a low
-    * triangles-to-wedges ratio flags a threshold that is chaining unlike
-    * documents into clusters. Algorithm: the pair list is already
-    * id-oriented (id_a < id_b — each undirected edge exactly once), so
-    * triangles enumerate as wedge (a;b<c) ⋈ closing edge (b,c) — every
-    * triangle counted exactly once, the standard oriented-join shape whose
-    * 100 TB form orients by DEGREE instead of id (bounding per-vertex
-    * fan-out by √E); wedges come from a degree aggregate, integer-exact
-    * via DIV. The edge list is the write-once [[stagedDupPairs]] artifact,
-    * so the expensive pair pipeline runs once per directory and all three
-    * edge roles plus the degree count read the materialized file.
-    */
-  private def qGraphTriangles(s: SparkSession, d: String): DataFrame = {
-    // staged artifact (already materialized) — no localCheckpoint needed
-    // for the three edge roles to share one computation
-    val e = stagedDupPairs(s, d)
-    val tri = e.as("ab")
-      .join(e.as("ac"),
-        col("ab.id_a") === col("ac.id_a") && col("ab.id_b") < col("ac.id_b"))
-      .select(col("ab.id_b").as("b"), col("ac.id_b").as("c"))
-      .join(e.as("bc"), col("b") === col("bc.id_a") && col("c") === col("bc.id_b"))
-      .agg(count(lit(1)).as("n_triangles"))
-    val wedges = e.select(col("id_a").as("id"))
-      .unionAll(e.select(col("id_b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-      .agg(sum(expr("deg * (deg - 1) DIV 2")).as("n_wedges"))
-    e.agg(count(lit(1)).as("n_edges"))
-      .crossJoin(tri)
-      .crossJoin(wedges)
-      .select(
-        col("n_edges"), col("n_triangles"), col("n_wedges"),
-        when(col("n_wedges") > 0,
-          round(col("n_triangles") * lit(3) / col("n_wedges"), 6))
-          .otherwise(lit(0.0)).as("transitivity"))
-  }
-
-  /** Canonical-survivor selection — the step a dedup pipeline runs AFTER
-    * clustering: within each near-dup cluster keep the BEST member (max
-    * [[graft.ext.TextAnalysis.qualityScore]], min doc_id tie-break), drop
-    * the rest. Min-id survivorship ([[graft.ext.Dedup.normalized]],
-    * [[graft.ext.Components]]' cluster label) is arbitrary; real corpus
-    * builds keep the highest-quality copy. Shape: the label table is
-    * joined to documents FIRST, so only cluster members are ever scored,
-    * and the pick is a `max_by` AGGREGATE over a totally-ordered
-    * (quality, -doc_id) struct — one doc_id-keyed shuffle plus a
-    * cluster_id-keyed agg with map-side partials, no per-cluster window
-    * sort. The oracle replays the recursive-CTE clustering of
-    * `q_dup_clusters` plus the arithmetic quality formula of
-    * `q_text_stats`, then takes the same arg-max via row_number.
-    */
-  private def qDedupCanonical(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val labels = Components.connectedComponents(
-      stagedDupPairs(s, d), "id_a", "id_b")
-    docs
-      .join(labels.select(col("id").as("doc_id"), col("comp").as("cluster_id")),
-        "doc_id")
-      .select(col("cluster_id"), col("doc_id"),
-        TextAnalysis.qualityScore(col("text")).as("quality"))
-      .groupBy("cluster_id")
-      .agg(
-        count(lit(1)).as("n_members"),
-        max_by(col("doc_id"), struct(col("quality"), -col("doc_id")))
-          .as("canonical_id"),
-        max(col("quality")).as("canonical_quality"))
-      .orderBy("cluster_id")
-  }
-
-  /** JSON-lines source/sink roundtrip: events written once as JSON (the
-    * interchange format ingest pipelines actually receive), read back with
-    * an explicit schema — schema-on-read, no inference pass over the data —
-    * and oracle-verified against the parquet original. Doubles survive via
-    * shortest-representation roundtrip. The timestamp column deliberately
-    * stays out: Spark's default JSON timestamp format is
-    * millisecond-precision, so a µs-precision event stream silently loses
-    * fidelity through JSON — a real interchange pitfall this query's
-    * column choice documents rather than papers over.
-    */
-  private def qJsonRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = s"/tmp/graft_json/${dirTag(d)}/events"
-    // guard on _SUCCESS, not the directory: a crashed mid-write leaves a
-    // partial directory that a bare exists-check would serve forever
-    stagedOnce(dir) {
-      Tables.events(s, d).select("event_id", "event_type", "value")
-        .write.mode("overwrite").json(dir)
-    }
-    s.read.schema("event_id BIGINT, event_type STRING, value DOUBLE").json(dir)
-      .orderBy("event_id")
-  }
-
-  /** Gini coefficient of per-document size — the corpus-balance audit (is
-    * the token budget spread across documents or concentrated in a few
-    * giants?) that sits next to the drift monitors in a pipeline's data
-    * health report. Uses the rank formula G = 2·Σ i·xᵢ / (n·Σ xᵢ) −
-    * (n+1)/n over ascending sizes, with the global rank i coming from
-    * [[graft.operators.PositionalTake.withGlobalIndex]] — the
-    * range-partition + per-partition-offset machinery, NOT a
-    * single-partition row_number window, so the sort stays distributed at
-    * any corpus size. Every sum is an exact integer; the two divisions
-    * happen once at the end, identically in both engines.
-    */
-  private def qGini(s: SparkSession, d: String): DataFrame =
-    PositionalTake.withGlobalIndex(
-        Tables.documents(s, d).select(col("doc_id"), col("n_chars")),
-        Seq("n_chars", "doc_id"), "idx")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("total_chars"),
-        sum((col("idx") + 1) * col("n_chars")).as("weighted"))
-      .select(
-        col("n_docs"), col("total_chars"),
-        round(
-          lit(2) * col("weighted") / (col("n_docs") * col("total_chars")) -
-            (col("n_docs") + 1) / col("n_docs"),
-          6).as("gini"))
-
-  /** Two-sample Kolmogorov–Smirnov statistic between the document-length
-    * distributions of two source cohorts — the distribution-drift monitor
-    * a production corpus pipeline runs between snapshots (did the new
-    * crawl's length profile shift?). Scalable decomposition: per-VALUE
-    * counts aggregate first (map-side combine onto the compact distinct
-    * domain — for a continuous metric you'd pre-bucket), then the ECDF
-    * difference is a cumulative window over that compact domain, and the
-    * cohort totals come from full-frame window sums — no 1-row cross-join,
-    * no driver-side state. The final max-abs-difference is one scalar
-    * aggregate.
-    */
-  private def qKsDrift(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val grp = when(expr("CAST(substring(source, 4) AS INT)") < 10, lit("a"))
-      .otherwise(lit("b"))
-    val cnt = Tables.documents(s, d)
-      .select(grp.as("grp"), col("n_chars"))
-      .groupBy("n_chars")
-      .agg(
-        sum(when(col("grp") === "a", 1L).otherwise(0L)).as("ca"),
-        sum(when(col("grp") === "b", 1L).otherwise(0L)).as("cb"))
-    val cum = Window.orderBy("n_chars")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val full = Window.orderBy("n_chars")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    cnt
-      .select(
-        (sum(col("ca")).over(cum) / sum(col("ca")).over(full)).as("fa"),
-        (sum(col("cb")).over(cum) / sum(col("cb")).over(full)).as("fb"),
-        sum(col("ca")).over(full).as("n_a"),
-        sum(col("cb")).over(full).as("n_b"))
-      .agg(
-        max(col("n_a")).as("n_a"),
-        max(col("n_b")).as("n_b"),
-        round(max(abs(col("fa") - col("fb"))), 6).as("ks_stat"))
-  }
-
-  /** Population Stability Index between two event cohorts' value
-    * distributions (purchases vs views, equi-width buckets) — the bucketed
-    * drift score monitoring pipelines alert on (rule of thumb: >0.25 =
-    * population shifted). Σ (pa−pb)·ln(pa/pb) over buckets observed in
-    * BOTH cohorts (the zero-bucket epsilon fudge is non-portable across
-    * engines, so absence-drift is reported by the bucket counts instead).
-    * Same scalable shape as [[qKsDrift]]: bucket counts aggregate
-    * map-side, proportions come from full-frame window sums over the
-    * compact bucket domain, one scalar aggregate at the end.
-    */
-  private def qPsiDrift(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = Tables.events(s, d)
-      .filter(col("event_type").isin("purchase", "view"))
-      .select(col("event_type"), floor(col("value") / 20).cast("long").as("bucket"))
-    val cnt = e.groupBy("bucket")
-      .agg(
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("cp"),
-        sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("cv"))
-    val full = Window.orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    cnt
-      .select(
-        col("bucket"), col("cp"), col("cv"),
-        (col("cp") / sum(col("cp")).over(full)).as("pp"),
-        (col("cv") / sum(col("cv")).over(full)).as("pv"))
-      .filter(col("cp") > 0 && col("cv") > 0)
-      .agg(
-        count(lit(1)).as("n_buckets"),
-        round(sum((col("pp") - col("pv")) * log(col("pp") / col("pv"))), 6)
-          .as("psi"))
-  }
-
-  /** CSV source/sink roundtrip — the other interchange format ingest
-    * pipelines receive (exports, logs, spreadsheets). The staged write
-    * includes the `props` JSON column on purpose: its embedded quotes,
-    * commas, and braces force the writer through real CSV quoting and the
-    * reader through real unquoting — the part of the format that actually
-    * breaks naive pipelines. Read back with an explicit schema + header
-    * (schema-on-read, no inference pass over the data). Doubles survive
-    * via shortest-representation roundtrip; the timestamp travels as an
-    * epoch-µs BIGINT column because CSV has no timestamp type — parsing
-    * falls back to format strings, the same fidelity trap the JSON row's
-    * docstring records for ms-precision JSON timestamps.
-    */
-  private def qCsvRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = s"/tmp/graft_csvrt/${dirTag(d)}/events"
-    stagedOnce(dir) {
-      Tables.events(s, d)
-        .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-          col("user_id"), col("event_type"), col("value"), col("props"))
-        .write.mode("overwrite").option("header", "true").csv(dir)
-    }
-    s.read
-      .schema("event_id BIGINT, ts_us BIGINT, user_id BIGINT, " +
-        "event_type STRING, value DOUBLE, props STRING")
-      .option("header", "true").csv(dir)
-      .orderBy("event_id")
-  }
-
-  /** Mann–Whitney U rank-sum test (returnflag R vs A on l_extendedprice)
-    * with exact tie-averaged ranks computed WITHOUT a global window: cent
-    * values aggregate to a (value → per-group count) table, values segment
-    * into fixed-width $1,000 buckets, the within-bucket rank prefix is a
-    * bucket-PARTITIONED window, and the cross-bucket carry is a window over
-    * the bucket-total table whose size is bounded by the VALUE RANGE (~110
-    * rows for TPC-H prices at any corpus size), never the row count — the
-    * [[graft.operators.PrefixSum.exclusive]] library operator (same
-    * carry-in decomposition as [[qPeakConcurrency]]). Statistics stay
-    * in exact integer space doubled to clear half-ranks (2·avgrank =
-    * 2·cum + t + 1), so `u2_a` = 2·U is an exact bigint far past 100 TB;
-    * the AUC estimate U/(n_a·n_b) is the only double — one cast-and-divide
-    * per engine, bit-identical. Reference discipline: differential oracle
-    * (host/join/join_test.cc:27-38).
-    */
-  private def qRankTest(s: SparkSession, d: String): DataFrame = {
-    val perValue = Tables.lineitem(s, d)
-      .filter(col("l_returnflag").isin("R", "A"))
-      .select(
-        round(col("l_extendedprice") * 100).cast("long").as("v"),
-        (col("l_returnflag") === "R").as("is_a"))
-      .groupBy("v")
-      .agg(
-        sum(when(col("is_a"), 1L).otherwise(0L)).as("na"),
-        sum(when(col("is_a"), 0L).otherwise(1L)).as("nb"))
-    PrefixSum.exclusive(perValue, floor(col("v") / lit(100000L)),
-        Seq(col("v")), col("na") + col("nb"), "cum")
-      .select(col("na"), col("nb"), col("cum"),
-        (col("na") + col("nb")).as("t"))
-      .agg(
-        sum(col("na")).as("n_a"),
-        sum(col("nb")).as("n_b"),
-        sum(col("na") * (lit(2L) * col("cum") + col("t") + lit(1L))).as("r2_a"))
-      .select(col("n_a"), col("n_b"),
-        (col("r2_a") - col("n_a") * (col("n_a") + lit(1L))).as("u2_a"))
-      .withColumn("auc_a",
-        col("u2_a").cast("double") /
-          (lit(2L) * col("n_a") * col("n_b")).cast("double"))
-  }
-
-  /** NULL-semantics battery in one aggregate pass: a nullable group key
-    * (NULLIF collapses 'O' status to NULL — ANSI groups every NULL into
-    * one bucket) and a nullable measure (every 7th order's price withheld)
-    * exercise the aggregate null contract: COUNT(*) counts rows,
-    * COUNT(col)/SUM/MIN/MAX skip NULLs. The sort pins NULLS FIRST
-    * explicitly because engine DEFAULTS disagree (Spark ASC = NULLS
-    * FIRST, DuckDB = NULLS LAST) — left implicit this row would
-    * hash-diverge, which is exactly the portability trap it documents.
-    * One map-side-combinable shuffle onto a ≤3-value key domain; o_orderkey
-    * is non-negative so pmod and truncated % agree (the [[qVariant]]
-    * floor-mod lesson, stated rather than assumed).
-    */
-  private def qNullSemantics(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d)
-      .select(
-        nullif(col("o_orderstatus"), lit("O")).as("st"),
-        when(pmod(col("o_orderkey"), lit(7)) === 0, lit(null))
-          .otherwise(round(col("o_totalprice") * 100).cast("long"))
-          .as("cents"))
-      .groupBy("st")
-      .agg(
-        count(lit(1)).as("n_rows"),
-        count(col("cents")).as("n_priced"),
-        count(when(col("cents").isNull, 1)).as("n_null_price"),
-        sum(col("cents")).as("sum_cents"),
-        min(col("cents")).as("min_cents"),
-        max(col("cents")).as("max_cents"))
-      .orderBy(col("st").asc_nulls_first)
-
-  /** Null-safe equi-join (`<=>` / IS NOT DISTINCT FROM) with the scale
-    * discipline that makes it survivable: NULL is a legitimate join-key
-    * value that hash-partitions like any other, so a ROW-level null-safe
-    * join concentrates every null×null pair into one task (n_null² pair
-    * blowup — the null-key analogue of [[qSaltedJoin]]'s hot key). The
-    * remedy is aggregate-first: each side reduces to per-key counts
-    * (map-side combine), the null-safe join runs over the compact key
-    * domain, and pair counts multiply — identical answer, no blowup.
-    * Spark plans EqualNullSafe as a real hash-join key (not a nested
-    * loop), which the catalog-wide cartesian audit pins.
-    */
-  private def qNullsafeJoin(s: SparkSession, d: String): DataFrame = {
-    def side(m: Int) = Tables.orders(s, d)
-      .filter(pmod(col("o_orderkey"), lit(2)) === m)
-      .select(
-        nullif(substring(col("o_orderpriority"), 1, 1), lit("3")).as("k"))
-      .groupBy("k").agg(count(lit(1)).as("n"))
-    val a = side(0).select(col("k"), col("n").as("n_a"))
-    val b = side(1).select(col("k").as("kb"), col("n").as("n_b"))
-    a.join(b, col("k") <=> col("kb"))
-      .select(col("k"), col("n_a"), col("n_b"),
-        (col("n_a") * col("n_b")).as("n_pairs"))
-      .orderBy(col("k").asc_nulls_first)
-  }
-
-  /** Ridge regression (price ~ quantity + discount, λ=1000) by
-    * DISTRIBUTED normal equations: the corpus-sized pass is ONE scalar
-    * aggregate of nine exact-integer sufficient statistics (cent-unit y,
-    * whole-unit quantity, percent-unit discount keep every Σ an exact
-    * bigint to ~10^17 rows); the centered 2×2 closed-form solve runs on
-    * the 1-row result in double space with the SAME operation order on
-    * both engines, so every IEEE op rounds identically and the
-    * coefficients hash bit-for-bit unrounded. The model-fit shape a
-    * feature pipeline needs at 100 TB: no driver loop, no gradient
-    * iterations, one shuffle of nine numbers.
-    */
-  private def qRidge(s: SparkSession, d: String): DataFrame = {
-    val lam = lit(1000.0)
-    def d_(c: String) = col(c).cast("double")
-    Tables.lineitem(s, d)
-      .select(
-        round(col("l_quantity")).cast("long").as("x1"),
-        round(col("l_discount") * 100).cast("long").as("x2"),
-        round(col("l_extendedprice") * 100).cast("long").as("y"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("x1")).as("s1"), sum(col("x2")).as("s2"),
-        sum(col("y")).as("sy"),
-        sum(col("x1") * col("x1")).as("s11"),
-        sum(col("x1") * col("x2")).as("s12"),
-        sum(col("x2") * col("x2")).as("s22"),
-        sum(col("x1") * col("y")).as("s1y"),
-        sum(col("x2") * col("y")).as("s2y"))
-      .select(col("n"),
-        (d_("s11") - d_("s1") * d_("s1") / d_("n")).as("c11"),
-        (d_("s12") - d_("s1") * d_("s2") / d_("n")).as("c12"),
-        (d_("s22") - d_("s2") * d_("s2") / d_("n")).as("c22"),
-        (d_("s1y") - d_("s1") * d_("sy") / d_("n")).as("cy1"),
-        (d_("s2y") - d_("s2") * d_("sy") / d_("n")).as("cy2"),
-        (d_("s1") / d_("n")).as("xb1"),
-        (d_("s2") / d_("n")).as("xb2"),
-        (d_("sy") / d_("n")).as("yb"))
-      .withColumn("det",
-        (col("c11") + lam) * (col("c22") + lam) - col("c12") * col("c12"))
-      .withColumn("b1",
-        ((col("c22") + lam) * col("cy1") - col("c12") * col("cy2")) /
-          col("det"))
-      .withColumn("b2",
-        ((col("c11") + lam) * col("cy2") - col("c12") * col("cy1")) /
-          col("det"))
-      .withColumn("b0",
-        col("yb") - col("b1") * col("xb1") - col("b2") * col("xb2"))
-      .select(col("n"), col("b0"), col("b1"), col("b2"))
-  }
-
-  /** MinHash/LSH band-config PLANNER: before committing 100 TB to a
-    * (bands, rows) choice, score the candidate configs against the
-    * corpus's OWN pair-similarity distribution. The corpus-sized work is
-    * the exact n-gram pair scan already audited by [[qNgramJaccard]]
-    * (threshold 0.03, inverted-index + df-ceiling discipline); pairs then
-    * reduce to a ≤10-row Jaccard-decile histogram, and each (b, r) config
-    * with b·r = 128 gets the S-curve catch probability 1 − (1 − s^r)^b at
-    * the decile midpoint plus the expected caught-pair count. Powers are
-    * EXPLICIT square chains (s→s²→s⁴→…) mirrored op-for-op in the oracle —
-    * never pow()/exp(), whose libm rounding differs across engines. The
-    * 10×3 grid cross-join is metadata-sized (cartesian-audit allowlisted).
-    */
-  private def qMinhashTuning(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val decs = Dedup.ngramJaccardPairs(Tables.documents(s, d), "doc_id",
-        "text", n = 3, threshold = 0.03)
-      .select(least(floor(col("jaccard") * 10), lit(9L)).as("dec"))
-      .groupBy("dec").agg(count(lit(1)).as("n_pairs"))
-    val configs = Seq((32, 4), (16, 8), (8, 16)).toDF("b", "r")
-    decs.crossJoin(broadcast(configs))
-      .withColumn("s",
-        (col("dec").cast("double") + lit(0.5)) / lit(10.0))
-      .withColumn("s2", col("s") * col("s"))
-      .withColumn("s4", col("s2") * col("s2"))
-      .withColumn("s8", col("s4") * col("s4"))
-      .withColumn("s16", col("s8") * col("s8"))
-      .withColumn("q",
-        lit(1.0) - when(col("r") === 4, col("s4"))
-          .when(col("r") === 8, col("s8")).otherwise(col("s16")))
-      .withColumn("q2", col("q") * col("q"))
-      .withColumn("q4", col("q2") * col("q2"))
-      .withColumn("q8", col("q4") * col("q4"))
-      .withColumn("q16", col("q8") * col("q8"))
-      .withColumn("q32", col("q16") * col("q16"))
-      .withColumn("p_mid",
-        lit(1.0) - when(col("b") === 8, col("q8"))
-          .when(col("b") === 16, col("q16")).otherwise(col("q32")))
-      .select(col("b"), col("r"), col("dec"), col("n_pairs"), col("p_mid"),
-        (col("n_pairs").cast("double") * col("p_mid")).as("exp_caught"))
-      .orderBy("b", "dec")
-  }
-
-  /** EXACT distinct counting via mergeable roaring-style bitmaps
-    * (Spark's `bitmap_*` family) — the scale answer when HLL's ±2% error
-    * (the [[qSketches]] row) is not acceptable but a full
-    * `COUNT(DISTINCT)` shuffle of raw 8-byte keys is too expensive: each
-    * input row reduces map-side to a bit in a fixed 4 KB bucket bitmap
-    * (`bitmap_bucket_number` = id >> 15, `bitmap_bit_position` = id &
-    * 32767), partial bitmaps OR-merge associatively, and the shuffle
-    * carries only (type, bucket, ≤4 KB) partials — state is bounded by
-    * the ID RANGE / 32768, never the row count. The final readout sums
-    * exact per-bucket popcounts. At 100 TB the same plan holds: the
-    * bitmap partials are also persistable as an incremental-refresh
-    * sketch table (the [[qIncrementalAgg]] merge discipline), something a
-    * raw COUNT(DISTINCT) can never be.
-    */
-  private def qBitmapDistinct(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .groupBy(col("event_type"),
-        expr("bitmap_bucket_number(user_id)").as("bucket"))
-      .agg(expr("bitmap_construct_agg(bitmap_bit_position(user_id))")
-        .as("bm"))
-      .groupBy(col("event_type"))
-      .agg(sum(expr("bitmap_count(bm)")).as("n_users"))
-      .orderBy("event_type")
-
-  /** Error-SAFE arithmetic (`try_divide` / `try_add` / `try_mod`) — the
-    * ANSI-mode survival kit for dirty data at scale: a single bad row in
-    * a 100 TB scan must yield NULL, not kill the stage (and with it the
-    * retry storm a failing 10k-task stage triggers). `safe_div`/`safe_mod`
-    * NULL out the ~0.1% zero-divisor rows; `safe_add` NULLs the rare
-    * bigint-overflow rows — all codegen'd, no UDF, each one exact-integer
-    * op or a single division (bit-identical across engines). The error
-    * rows are deliberately RARE: Spark's try_* catch a thrown JVM
-    * exception per bad row, so they are the right tool for sparse dirt
-    * only — a column where errors are DENSE belongs behind an explicit
-    * `when()` guard instead (a first cut of this row overflowed on 99% of
-    * rows and ran 10× slower than the guarded form). The oracle mirrors
-    * the NULL semantics as CASE guards, pinning exactly which rows NULL
-    * out rather than just "doesn't crash".
-    */
-  private def qTryArithmetic(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .select(col("event_id"), pmod(col("user_id"), lit(997)).as("dv"),
-        when(pmod(col("event_id"), lit(997)) === 0,
-          lit(9223372036854775000L)).otherwise(lit(0L)).as("addend"))
-      .select(
-        col("event_id"),
-        expr("try_divide(event_id, dv)").as("safe_div"),
-        expr("try_mod(event_id, dv)").as("safe_mod"),
-        expr("try_add(addend, event_id)").as("safe_add"))
-      .orderBy("event_id")
-
-  /** Ordered LISTAGG readout (Spark 4 `listagg ... WITHIN GROUP`) — the
-    * denormalized "children as one string" export BI handoffs ask for.
-    * Scale shape: group state is the concatenation itself, so this is
-    * safe ONLY over a bounded-fanout group (suppliers per nation —
-    * fanout is suppliers/25 at every SF); an unbounded-fanout listagg is
-    * the same anti-pattern as an unbounded collect_list and belongs
-    * behind the [[qTopkPerKey]] rank-limit first. The WITHIN GROUP order
-    * makes the string deterministic — an unordered listagg is a
-    * flaky-diff generator across retries/partitionings.
-    */
-  private def qListagg(s: SparkSession, d: String): DataFrame =
-    Tables.supplier(s, d)
-      .join(broadcast(Tables.nation(s, d)),
-        col("s_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name"))
-      .agg(
-        count(lit(1)).as("n_suppliers"),
-        expr("listagg(s_name, ',') within group (order by s_name)")
-          .as("supplier_csv"))
-      .orderBy("n_name")
-
-  /** XML source/sink roundtrip (Spark 4 built-in XML data source) — the
-    * third interchange format beside [[qCsvRoundtrip]]/[[qJsonRoundtrip]]:
-    * feeds, sitemaps, and legacy enterprise exports arrive as XML. The
-    * staged write keeps the `props` JSON column on purpose — its quotes,
-    * braces, and ampersand-free-but-bracketed content force real XML
-    * entity escaping on write and unescaping on read. Read back with an
-    * explicit schema + rowTag (schema-on-read; no inference pass), the
-    * timestamp travelling as epoch-µs BIGINT exactly as the CSV row does
-    * (XML has no timestamp type either). Write-once staged under the
-    * dirTag discipline; reads parallelize per file like any text source.
-    */
-  private def qXmlRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = s"/tmp/graft_xmlrt/${dirTag(d)}/events"
-    stagedOnce(dir) {
-      Tables.events(s, d)
-        .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-          col("user_id"), col("event_type"), col("value"), col("props"))
-        .write.mode("overwrite").option("rootTag", "events")
-        .option("rowTag", "event").format("xml").save(dir)
-    }
-    s.read
-      .schema("event_id BIGINT, ts_us BIGINT, user_id BIGINT, " +
-        "event_type STRING, value DOUBLE, props STRING")
-      .option("rowTag", "event").format("xml").load(dir)
-      .select("event_id", "ts_us", "user_id", "event_type", "value", "props")
-      .orderBy("event_id")
-  }
-
-  /** Grid-bucketed SPATIAL within-distance self-join — the scale pattern
-    * for "all point pairs within radius r" (geo dedup, store/competitor
-    * matching, sensor correlation) without the all-pairs cross join: each
-    * point lands in an r-sized grid cell, ONE side replicates to its 3×3
-    * neighbor cells (constant ×9 map-side expansion — no broadcast of the
-    * corpus), and the join is an equi-join on cell id, so it shuffles and
-    * hash-partitions like any PK–FK join. Any pair within r is guaranteed
-    * to meet (cell size = r), each pair meets exactly once per orientation
-    * (the home cell is unique), and `id_a < id_b` keeps one orientation.
-    * Candidates are bounded by local density × 9, never n²; a dense-cell
-    * hotspot is ordinary join skew (AQE skew split / salting, the
-    * [[qSaltedJoin]] remedy). Coordinates derive from the portable md5
-    * construction ([[qAbAssign]]) so the oracle replays them; distance
-    * stays in exact integer space (squared, no sqrt).
-    */
-  private def qSpatialJoin(s: SparkSession, d: String): DataFrame = {
-    def coord(pos: Int) = pmod(
-      conv(substring(md5(col("c_custkey").cast("string")), pos, 12), 16, 10)
-        .cast("long"),
-      lit(10000L))
-    val pts = Tables.customer(s, d)
-      .filter(pmod(col("c_custkey"), lit(10)) === 0)
-      .select(col("c_custkey").as("id"), coord(1).as("x"), coord(13).as("y"))
-    SpatialJoin.withinDistance(pts, "id", "x", "y", 1000L)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** CUPED variance-reduced experiment readout — the pre-period covariate
-    * adjustment every mature A/B platform applies (ŷ_adj = ȳ − θ(x̄ −
-    * x̄_all), θ = cov(x,y)/var(x)): same point estimate discipline as
-    * [[qAbZtest]] but with the pre-period activity soaked out, which is
-    * what makes small effects readable at fixed sample size. Shape: ONE
-    * pass reduces events to the per-user (pre, post) count pair; θ and the
-    * global pre-mean come from exact bigint sums (n·Σxy − ΣxΣy over
-    * n·Σx² − Σx², one division — bit-identical), which are ADDITIVE and
-    * so fold up from the per-arm aggregate through a compact-domain
-    * window — events is scanned exactly once; per-arm means are single
-    * divisions of exact sums. A 100 TB run lifts the bigint products to
-    * DECIMAL(38,0) (the [[qDecimalSum]] seam) with the same plan. The
-    * var(x)=0 degenerate (no pre-period signal) reads θ=0 — plain means —
-    * under the ANSI divide guard.
-    */
-  private def qCuped(s: SparkSession, d: String): DataFrame = {
-    val cut = lit("2024-01-15").cast("timestamp")
-    val arm = when(
-      pmod(conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10)
-        .cast("long"), lit(1000000L)) < 500000L, lit("a"))
-      .otherwise(lit("b"))
-    val perUser = Tables.events(s, d)
-      .groupBy(col("user_id"))
-      .agg(
-        sum(when(col("ts") < cut, 1L).otherwise(0L)).as("x"),
-        sum(when(col("ts") < cut, 0L).otherwise(1L)).as("y"))
-      .withColumn("arm", arm)
-    // θ's sufficient statistics are additive, so the GLOBAL sums come
-    // from the ≤2-row per-arm table through a compact-domain window
-    // (PlanAuditSpec-allowlisted) instead of a second pass over the
-    // per-user table — the first cut scanned events twice for them
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy()
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val den = col("n") * col("sxx") - col("sx") * col("sx")
-    val num = col("n") * col("sxy") - col("sx") * col("sy")
-    val theta =
-      when(den === 0L, lit(0.0)).otherwise(num.cast("double") / den.cast("double"))
-    val xbar = col("sx").cast("double") / col("n").cast("double")
-    val meanPost = col("ay").cast("double") / col("n_users").cast("double")
-    val meanPre = col("ax").cast("double") / col("n_users").cast("double")
-    perUser.groupBy("arm")
-      .agg(count(lit(1)).as("n_users"),
-        sum(col("x")).as("ax"), sum(col("y")).as("ay"),
-        sum(col("x") * col("y")).as("axy"),
-        sum(col("x") * col("x")).as("axx"))
-      .withColumn("n", sum(col("n_users")).over(w))
-      .withColumn("sx", sum(col("ax")).over(w))
-      .withColumn("sy", sum(col("ay")).over(w))
-      .withColumn("sxy", sum(col("axy")).over(w))
-      .withColumn("sxx", sum(col("axx")).over(w))
-      .select(col("arm"), col("n_users"),
-        round(meanPost, 6).as("mean_post"),
-        round(meanPre, 6).as("mean_pre"),
-        round(meanPost - theta * (meanPre - xbar), 6).as("mean_adj"))
-      .orderBy("arm")
-  }
-
-  /** Partition MANIFEST statistics — the per-partition (min, max, count,
-    * null-count) table a lakehouse keeps beside the data (Iceberg
-    * manifests, Delta file stats, parquet row-group footers) so planners
-    * can prune partitions WITHOUT opening them: a point/range predicate
-    * on `event_id` or `value` consults this KB-scale table and skips
-    * every day whose [min, max] misses the predicate — the mechanism
-    * behind [[qPrunedScan]]'s PushedFilters actually skipping IO at
-    * 100 TB. Shape: one map-side-combinable pass (min/max/count are all
-    * mergeable — no sums of doubles, so the readout is bit-exact);
-    * output is bounded by the partition count, never the row count, and
-    * refreshes incrementally per written partition (the
-    * [[qIncrementalAgg]] discipline).
-    */
-  private def qPartitionStats(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"),
-        min(col("value")).as("min_value"), max(col("value")).as("max_value"),
-        sum(when(col("value").isNull, 1L).otherwise(0L)).as("n_null_value"),
-        countDistinct(col("user_id")).as("n_users"))
-      .orderBy("day")
-
-  /** Difference-in-differences readout — the quasi-experimental estimate
-    * when only a BEFORE/AFTER boundary and a treated/control split exist
-    * (feature rollout, pricing change): dd = (ȳ_t,post − ȳ_t,pre) −
-    * (ȳ_c,post − ȳ_c,pre), which cancels both the group baseline and the
-    * common time trend. Same one-pass shape as [[qCuped]]: events reduce
-    * to per-user (pre, post) counts, the four cell means are single
-    * divisions of exact bigint sums (bit-identical), and the subtraction
-    * chain is mirrored operand-for-operand in the oracle. Degenerate
-    * empty arms (possible at tiny SF — the md5 arm warning on
-    * [[qAbZtest]]) read NULL through the guarded divisions instead of
-    * throwing under ANSI.
-    */
-  private def qDiffInDiff(s: SparkSession, d: String): DataFrame = {
-    val cut = lit("2024-01-15").cast("timestamp")
-    val treated =
-      pmod(conv(substring(md5(col("user_id").cast("string")), 1, 12), 16, 10)
-        .cast("long"), lit(1000000L)) < 500000L
-    val perUser = Tables.events(s, d)
-      .groupBy(col("user_id"))
-      .agg(
-        sum(when(col("ts") < cut, 1L).otherwise(0L)).as("x"),
-        sum(when(col("ts") < cut, 0L).otherwise(1L)).as("y"))
-      .withColumn("t", treated)
-    def cellMean(num: Column, den: Column): Column =
-      when(den > 0L, num.cast("double") / den.cast("double"))
-    val agg = perUser.agg(
-      sum(when(col("t"), 1L).otherwise(0L)).as("n_t"),
-      sum(when(!col("t"), 1L).otherwise(0L)).as("n_c"),
-      sum(when(col("t"), col("x")).otherwise(0L)).as("sx_t"),
-      sum(when(col("t"), col("y")).otherwise(0L)).as("sy_t"),
-      sum(when(!col("t"), col("x")).otherwise(0L)).as("sx_c"),
-      sum(when(!col("t"), col("y")).otherwise(0L)).as("sy_c"))
-    val (mtPre, mtPost) = (cellMean(col("sx_t"), col("n_t")),
-      cellMean(col("sy_t"), col("n_t")))
-    val (mcPre, mcPost) = (cellMean(col("sx_c"), col("n_c")),
-      cellMean(col("sy_c"), col("n_c")))
-    agg.select(
-      col("n_t"), col("n_c"),
-      round(mtPre, 6).as("mean_t_pre"), round(mtPost, 6).as("mean_t_post"),
-      round(mcPre, 6).as("mean_c_pre"), round(mcPost, 6).as("mean_c_post"),
-      round((mtPost - mtPre) - (mcPost - mcPre), 6).as("dd"))
-  }
-
-  /** CDC changelog APPLY — materializing a base table forward through an
-    * out-of-order insert/update/delete log (Debezium → lakehouse, Hudi/
-    * Delta CDF): last-writer-wins per key by sequence number, deletes
-    * drop the key, updates replace the value. Shape: the changelog
-    * reduces FIRST with a map-side-combinable `max_by(payload, seq)` —
-    * the log compaction a streaming CDC sink runs continuously — so the
-    * base table joins against ONE row per touched key, never the raw
-    * log; no window over the log, no ordering shuffle. The base join is
-    * key-equi (bucket co-location at 100 TB — the [[qBucketedJoin]]
-    * seam), and deletes fall out as a post-join filter, not an anti-join
-    * pass. Beats [[qMergeUpsert]]'s single-batch full-outer shape on the
-    * semantics that matter in production: multiple events per key,
-    * sequence ordering, tombstones.
-    */
-  private def qCdcApply(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.customer(s, d)
-      .select(col("c_custkey").as("k"), col("c_acctbal").as("v"))
-    val log = Tables.orders(s, d).select(
-      col("o_custkey").as("k"), col("o_orderkey").as("seq"),
-      when(pmod(col("o_orderkey"), lit(10)) === 0, lit("D"))
-        .otherwise(lit("U")).as("op"),
-      col("o_totalprice").as("v"))
-    // every log key exists in base here (o_custkey FK), so the operator's
-    // upsert-insert path is exercised by OperatorPropertySpec instead
-    Changelog(base, log)
-      .select(col("k"), col("v").as("val"), col("src"))
-      .orderBy("k")
-  }
-
-  /** CDC → SCD2 COMPOSITION — the two changelog operators run against
-    * the SAME log through genuinely different code paths, pinned
-    * consistent per key: the SCD2 side replays the log as a versioned
-    * history (one ordering window per key: a version opens on the first
-    * U, on a value change, or on a U after a tombstone; the OPEN
-    * version's value is the last row's if it is a U), while the CDC side
-    * is [[graft.operators.Changelog]]'s window-free max_by compaction +
-    * base join. `consistent` = open-version value null-safe-equals the
-    * applied state (absent for finally-tombstoned keys) — TRUE for every
-    * key is the cross-operator invariant that makes a warehouse's
-    * dimension history trustworthy against its own snapshot, and the
-    * oracle hash-pins it row by row. Scale: one shuffle on k for the
-    * history window, the compaction is map-side combinable, values
-    * compared exactly (no arithmetic on doubles).
-    */
-  private def qCdcScd2(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = Tables.customer(s, d)
-      .select(col("c_custkey").as("k"), col("c_acctbal").as("v"))
-    val log = Tables.orders(s, d).select(
-      col("o_custkey").as("k"), col("o_orderkey").as("seq"),
-      when(pmod(col("o_orderkey"), lit(10)) === 0, lit("D"))
-        .otherwise(lit("U")).as("op"),
-      col("o_totalprice").as("v"))
-    val w = Window.partitionBy("k").orderBy("seq")
-    val hist = log
-      .withColumn("prev_op", lag(col("op"), 1).over(w))
-      .withColumn("prev_v", lag(col("v"), 1).over(w))
-    val nv = hist.filter(col("op") === "U" &&
-        (col("prev_op").isNull || col("prev_op") === "D" ||
-          col("prev_v") =!= col("v")))
-      .groupBy("k").agg(count(lit(1)).as("n_versions"))
-    val open = log.groupBy("k")
-      .agg(max_by(struct(col("op"), col("v")), col("seq")).as("f"))
-      .select(col("k"), when(col("f.op") === "U", col("f.v")).as("open_v"))
-    val applied = Changelog(base, log)
-      .filter(col("src") === "updated") // touched keys only
-      .select(col("k"), col("v").as("cdc_v"))
-    open.join(nv, Seq("k"), "left")
-      .join(applied, Seq("k"), "left") // finally-tombstoned keys: no row
-      .select(col("k"),
-        coalesce(col("n_versions"), lit(0L)).as("n_versions"),
-        col("open_v"), col("cdc_v"),
-        (col("open_v") <=> col("cdc_v")).as("consistent"))
-      .orderBy("k")
-  }
-
-  /** Mix-shift DECOMPOSITION — the "why did the topline move" answer a
-    * metrics platform owes every on-call analyst: between two periods,
-    * ΔR splits exactly into Σ(w₂−w₁)·r₁ (MIX — traffic moved across
-    * segments) plus Σw₂·(r₂−r₁) (WITHIN — segments themselves changed),
-    * per segment. Rate here is share of events with value > 500, so
-    * every input is an exact bigint count; weights and rates are single
-    * divisions, and the contribution products are mirrored
-    * operand-for-operand in the oracle (bit-identical doubles). Shape:
-    * ONE conditional-sum aggregate over segments — map-side combinable,
-    * output bounded by the segment domain, events scanned exactly once —
-    * with period totals folded over the compact result; segments absent
-    * from a period read 0 through the conditional sums instead of
-    * NULL-poisoning the decomposition.
-    */
-  private def qMixShift(s: SparkSession, d: String): DataFrame = {
-    val cut = lit("2024-01-15").cast("timestamp")
-    // ONE conditional-sum aggregate replaces the (seg, period) grid +
-    // full-outer period self-join + totals pass of the first cut (which
-    // planned FOUR events scans); absent-period cells read 0 through the
-    // conditional sums, and the period totals ride a compact-domain
-    // window over the ≤|segment|-row table (PlanAuditSpec-allowlisted)
-    val pre = col("ts") < cut
-    val conv = col("value") > 500.0
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy()
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val joined = Tables.events(s, d)
-      .groupBy(col("event_type").as("seg"))
-      .agg(
-        sum(when(pre, 1L).otherwise(0L)).as("n1"),
-        sum(when(pre && conv, 1L).otherwise(0L)).as("c1"),
-        sum(when(!pre, 1L).otherwise(0L)).as("n2"),
-        sum(when(!pre && conv, 1L).otherwise(0L)).as("c2"))
-      .withColumn("t1", sum(col("n1")).over(w))
-      .withColumn("t2", sum(col("n2")).over(w))
-    def rate(c: Column, n: Column): Column =
-      when(n > 0L, c.cast("double") / n.cast("double")).otherwise(lit(0.0))
-    val (w1, w2) = (rate(col("n1"), col("t1")), rate(col("n2"), col("t2")))
-    val (r1, r2) = (rate(col("c1"), col("n1")), rate(col("c2"), col("n2")))
-    joined.select(col("seg"),
-        round(w1, 6).as("w1"), round(w2, 6).as("w2"),
-        round(r1, 6).as("r1"), round(r2, 6).as("r2"),
-        // + 0.0 canonicalizes IEEE -0.0 from tiny negative contributions
-        (round((w2 - w1) * r1, 6) + 0.0).as("mix_contrib"),
-        (round(w2 * (r2 - r1), 6) + 0.0).as("within_contrib"))
-      .orderBy("seg")
-  }
-
-  /** Global DICTIONARY ENCODING — assigning dense contiguous ids to a
-    * string domain (vocab building, categorical interning, the id
-    * remapping every embedding table / one-hot pipeline needs before
-    * training): ids are frequency-descending (ties on term) so the
-    * hottest terms get the smallest ids — the layout that makes the
-    * downstream embedding table cache-friendly. Shape: one
-    * map-side-combinable frequency aggregate over the token stream, then
-    * the DISTRIBUTED global index ([[PositionalTake.withGlobalIndex]] —
-    * range-partition sort + per-partition offsets, never a
-    * single-partition ROW_NUMBER window) hands out dense ids; output is
-    * bounded by the vocabulary, not the corpus. Encoding the corpus back
-    * is then one broadcast (small vocab) or shuffle (web-scale vocab)
-    * equi-join against this table — the [[qJoin]] seam.
-    */
-  private def qDictEncode(s: SparkSession, d: String): DataFrame = {
-    val vocab = Tables.documents(s, d)
-      .select(explode(tokens(col("text"))).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("freq"))
-      .withColumn("neg_freq", -col("freq"))
-    PositionalTake.withGlobalIndex(vocab, Seq("neg_freq", "term"), "id")
-      .select(col("term"), col("id"), col("freq"))
-      .orderBy("id")
-  }
-
-  /** AUDIO header audit — [[qMediaHeaders]]'s counterpart for the second
-    * media modality: serialize a real 44-byte PCM WAV (RIFF) header per
-    * row, then parse the fields back by byte offset. RIFF integers are
-    * LITTLE-endian, so this exercises the opposite byte order from PNG's
-    * big-endian IHDR — the serializer and parser both go through an
-    * explicit per-byte swap ([[Multimodal.wavHeader]]), all codegen'd
-    * binary slicing, no UDF. This is the header-level pass a 100 TB
-    * audio-ingest runs BEFORE paying for sample decode: container magic,
-    * channel/rate sanity, and declared-size vs actual-size reconciliation
-    * — only sample decode itself stays behind the declared codec stub.
-    * The oracle computes the expected fields arithmetically, so only a
-    * byte-correct serialize+parse round trip matches.
-    */
-  private def qAudioHeaders(s: SparkSession, d: String): DataFrame = {
-    val media = Tables.documents(s, d).select(
-      col("doc_id"),
-      Multimodal.wavHeader(
-        lit(1L) + pmod(col("doc_id"), lit(2L)),
-        lit(8000L) + lit(100L) * pmod(col("doc_id"), lit(80L))).as("media"))
-    media.select(
-        col("doc_id"),
-        Multimodal.wavRiffOk(col("media")).as("riff_ok"),
-        Multimodal.wavChannels(col("media")).as("channels"),
-        Multimodal.wavSampleRate(col("media")).as("sample_rate"),
-        Multimodal.wavByteRate(col("media")).as("byte_rate"),
-        Multimodal.wavDataSize(col("media")).as("data_size"),
-        length(col("media")).cast("long").as("n_bytes"))
-      .orderBy("doc_id")
-  }
-
-  /** SQL-defined scalar function (Spark 4 `CREATE FUNCTION … RETURN`) —
-    * the UDF users SHOULD write at 100 TB: unlike a JVM/Python UDF
-    * (black box: blocks predicate pushdown, column pruning through it,
-    * and whole-stage codegen), a SQL UDF is INLINED into the plan by
-    * Catalyst, so `softsign(value)` below costs exactly what writing the
-    * expression by hand costs — it stays inside WholeStageCodegen and
-    * the optimizer sees through it. The function body is a rational
-    * softsign x/(1+|x|) (one division of IEEE-exact operands — portable;
-    * a sigmoid's exp() would not be, libm differs across engines). The
-    * oracle inlines the same expression, which is also exactly what
-    * Catalyst does — the row pins that equivalence.
-    */
-  private def qSqlUdf(s: SparkSession, d: String): DataFrame = {
-    s.sql(
-      """CREATE OR REPLACE TEMPORARY FUNCTION graft_softsign(x DOUBLE)
-        |RETURNS DOUBLE RETURN x / (1.0 + abs(x))""".stripMargin)
-    Tables.events(s, d).createOrReplaceTempView(s"graft_udf_ev_${dirTag(d)}")
-    s.sql(
-      s"""SELECT event_type,
-         |       ROUND(SUM(graft_softsign(value - 500.0)), 6) AS score,
-         |       COUNT(*) AS n
-         |FROM graft_udf_ev_${dirTag(d)}
-         |GROUP BY event_type ORDER BY event_type""".stripMargin)
-  }
-
-  /** SQL-defined TABLE function (Spark 4 `CREATE FUNCTION … RETURNS
-    * TABLE`) applied via LATERAL — the set-returning companion of
-    * [[qSqlUdf]]: each order priority's total revenue splits into
-    * progressive tier bands (the tax-bracket decomposition), one output
-    * row per non-empty band. PLAN DISCIPLINE (measured, not assumed):
-    * Spark executes a correlated SQL UDTF by DEDUPLICATING the
-    * correlation key, running the body once per distinct value, and
-    * joining back — so a LATERAL over a raw fact column would add a
-    * corpus-wide distinct shuffle plus a join-back per use (and the
-    * UNION-of-SELECTs body form is worse still: one aggregated fact scan
-    * PER BRANCH). The rule this row pins: correlate SQL UDTFs on COMPACT
-    * domains (here the 5-row per-priority aggregate; the fact is scanned
-    * exactly once), and keep the body a single Generate-able `inline`
-    * projection. Per-priority totals are summed as integer CENTS (exact)
-    * and the band arithmetic is single LEAST/subtractions of the
-    * cents-derived double — every value bit-stable across engines, no
-    * rounding anywhere.
-    */
-  private def qSqlUdtf(s: SparkSession, d: String): DataFrame = {
-    s.sql(
-      """CREATE OR REPLACE TEMPORARY FUNCTION graft_tiers(total DOUBLE)
-        |RETURNS TABLE (tier STRING, amount DOUBLE)
-        |RETURN SELECT tier, amount FROM (
-        |  SELECT inline(array(
-        |    struct('low' AS tier, LEAST(total, 10000000.0D) AS amount),
-        |    struct('mid' AS tier,
-        |           LEAST(total - 10000000.0D, 40000000.0D) AS amount),
-        |    struct('high' AS tier, (total - 50000000.0D) AS amount))))
-        |WHERE amount > 0.0D""".stripMargin)
-    Tables.orders(s, d).createOrReplaceTempView(s"graft_udtf_o_${dirTag(d)}")
-    s.sql(
-      s"""WITH p AS (
-         |  SELECT o_orderpriority AS priority,
-         |         CAST(SUM(CAST(ROUND(o_totalprice * 100.0D) AS BIGINT))
-         |              AS DOUBLE) / 100.0D AS total
-         |  FROM graft_udtf_o_${dirTag(d)} GROUP BY o_orderpriority)
-         |SELECT priority, tier, amount
-         |FROM p, LATERAL graft_tiers(total)
-         |ORDER BY priority, tier""".stripMargin)
-  }
-
-  /** NULL-KEY skew bypass on an outer join — the silent 100 TB killer
-    * this row pins the remedy for: in a shuffled left join, every
-    * null-key row hashes to the SAME partition, so a 33%-null FK column
-    * (unset optional references are exactly this common) turns into one
-    * straggler task holding a third of the fact table. SQL semantics say
-    * null keys can never match, so the fix is structural, not statistical
-    * (AQE skew-split can only shave it): route `k IS NULL` rows AROUND
-    * the exchange entirely and union them back as unmatched — the join
-    * shuffles only the matchable minority. The oracle is the plain LEFT
-    * JOIN (bypass must be invisible in results); negative keys provide a
-    * real unmatched-but-non-null population so all three outcome buckets
-    * are exercised. Sums stay exact (integer-valued quantities).
-    * Deliberate tradeoff: the two union branches scan the fact twice
-    * (column-pruned to 2 columns) — at scale a second pruned scan is
-    * cheap, the straggler shuffle partition is not.
-    */
-  private def qNullSkewJoin(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d).select(
-      when(pmod(col("l_orderkey"), lit(3)) === 0, lit(null))
-        .when(pmod(col("l_orderkey"), lit(3)) === 1, -col("l_orderkey"))
-        .otherwise(col("l_orderkey")).cast("long").as("k"),
-      col("l_quantity").as("qty"))
-    val nulls = li.filter(col("k").isNull)
-      .select(lit("null_key").as("bucket"), col("qty"))
-    val probe = li.filter(col("k").isNotNull)
-      .join(Tables.orders(s, d).select(col("o_orderkey")),
-        col("k") === col("o_orderkey"), "left")
-      .select(when(col("o_orderkey").isNull, lit("unmatched"))
-        .otherwise(lit("matched")).as("bucket"), col("qty"))
-    nulls.unionByName(probe)
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n"),
-        sum(col("qty")).cast("double").as("sum_qty"))
-      .orderBy("bucket")
-  }
-
-  /** Rolling 7-day distinct users (rolling MAU) — the windowed
-    * COUNT(DISTINCT) no window frame can express (distinct aggregates
-    * are unsupported over RANGE frames, and a naive per-day self-join
-    * rescans the stream once per day). Scale shape: the stream reduces
-    * ONCE to the compact distinct (user, day) activity table; each
-    * activity row then fans out to the ≤7 window anchors it supports (a
-    * CONSTANT map-side `explode(sequence(...))` — the [[qSpatialJoin]]
-    * replication idea on the time axis), a semi-join bounds anchors to
-    * observed days, and one (day)-keyed shuffle finishes with
-    * countDistinct. State is bounded by 7 × |activity|, never
-    * days × stream. The observed-day bound ("report only days that have
-    * their own activity") is folded into the SAME aggregate as a
-    * day==anchor flag rather than a second distinct + semi-join — the
-    * first cut planned the activity distinct twice (no runtime exchange
-    * reuse: 12 exchanges, two events scans; this shape halves both).
-    */
-  private def qRollingMau(s: SparkSession, d: String): DataFrame = {
-    val act = Tables.events(s, d)
-      .select(to_date(col("ts")).as("aday"), col("user_id").as("u"))
-      .distinct()
-    act.select(col("aday"), col("u"),
-        explode(sequence(col("aday"), date_add(col("aday"), 6))).as("day"))
-      .groupBy("day")
-      .agg(countDistinct(col("u")).as("mau7"),
-        max(when(col("day") === col("aday"), 1).otherwise(0)).as("obs"))
-      .filter(col("obs") === 1)
-      .select(date_format(col("day"), "yyyy-MM-dd").as("day"), col("mau7"))
-      .orderBy("day")
-  }
-
-  /** Seasonal-naive forecast BACKTEST — the baseline every forecasting
-    * pipeline must beat (and the degradation alarm when a fancier model
-    * silently rots): forecast(d) = actual(d − 7), scored per day. Shape:
-    * the stream reduces ONCE to the compact daily-count table (exact
-    * bigint counts — the whole backtest stays in integer space, no libm,
-    * no fitted coefficients to drift across engines); forecast attachment
-    * is a self-equi-join of that ~|days| table on the shifted key, never
-    * a second pass over events. Days without a 7-back observation emit
-    * NULL forecast (the honest cold-start readout) rather than being
-    * silently dropped.
-    */
-  private def qSeasonalNaive(s: SparkSession, d: String): DataFrame = {
-    // forecast attachment is a RANGE [-7,-7] window over the compact
-    // daily table (date-valued, so calendar gaps read NULL — a row-offset
-    // lag(7) would silently mis-align across gaps); the first cut
-    // self-joined the aggregate on the shifted key, which planned the
-    // events scan twice with no runtime exchange reuse
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.orderBy("day_num").rangeBetween(-7, -7)
-    Tables.events(s, d)
-      .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
-      .agg(count(lit(1)).as("actual"))
-      .withColumn("day_num",
-        datediff(to_date(col("day")), to_date(lit("2024-01-01"))))
-      .withColumn("forecast", max(col("actual")).over(w))
-      .select(col("day"), col("actual"), col("forecast"),
-        abs(col("actual") - col("forecast")).as("abs_err"))
-      .orderBy("day")
-  }
-
-  /** Byte-range COALESCING — the shard-read planner a WebDataset-style
-    * ingest runs before touching storage: given (shard, offset, length)
-    * index entries, merge ranges whose gap is ≤ 4 KB into one contiguous
-    * read, because at 100 TB the seek/request count — not bytes — is
-    * what kills object-store throughput (every merged gap is one less
-    * GET). The classic interval-union: per shard, a range starts a new
-    * island iff its offset clears the running max end-so-far + gap
-    * (prefix-max window, PARTITIONED by shard — parallel in the shard
-    * count, no global state); island ids are a running flag sum; one
-    * group-by emits (read_start, read_end, n_ranges) per coalesced read.
-    * All exact integer arithmetic; deterministic tie order (offset, end).
-    */
-  private def qRangeCoalesce(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // same-offset entries pre-combine map-side (max end carries both;
-    // the count keeps them audited) — this also makes the window sort
-    // key TOTAL, so the two window passes cannot disagree on tie order
-    // in any engine (a non-total order here is a cross-engine
-    // nondeterminism trap: island ids of tied rows depend on visit order)
-    // r19 MEASURED REJECTION (guide §2.4 candidate): collapsing the two
-    // exchanges — repartition(shard) up front so the (shard, off)
-    // pre-combine, the shard window, and the (shard, island) group-by all
-    // ride one shuffle — measured 1.82 s vs 1.30 s baseline same-sitting
-    // (calm sentinel): the pre-combine's map-side partial runs inside the
-    // codegen'd scan stage today and the single-exchange shape serializes
-    // scan + full aggregation + two window passes into one post-shuffle
-    // stage. The two-exchange shape stays.
-    val uniq = Tables.lineitem(s, d).select(
-        pmod(col("l_suppkey"), lit(50L)).as("shard"),
-        pmod(col("l_orderkey") * 1000L, lit(10000000L)).as("off"),
-        (lit(500L) + col("l_quantity").cast("long") * 10L).as("len"))
-      .groupBy("shard", "off")
-      .agg(max(col("off") + col("len")).as("end"), count(lit(1)).as("cnt"))
-    val order = Window.partitionBy("shard").orderBy("off")
-    val prevMaxEnd = max(col("end"))
-      .over(order.rowsBetween(Window.unboundedPreceding, -1))
-    uniq
-      .withColumn("brk",
-        when(prevMaxEnd.isNull || col("off") > prevMaxEnd + 4096L, 1L)
-          .otherwise(0L))
-      .withColumn("island", sum(col("brk")).over(
-        order.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy("shard", "island")
-      .agg(min(col("off")).as("read_start"), max(col("end")).as("read_end"),
-        sum(col("cnt")).as("n_ranges"))
-      .select(col("shard"), col("read_start"), col("read_end"),
-        col("n_ranges"))
-      .orderBy("shard", "read_start")
-  }
-
-  /** Corpus ASSEMBLY offsets — the byte/char-offset map a pretraining
-    * pipeline materializes when it concatenates documents (doc-id order,
-    * one separator char) into a flat training stream: each doc's global
-    * start offset, so any sample index maps back to its source document
-    * (the provenance lookup audits and dedup-tracing need). The global
-    * running total rides [[PrefixSum.exclusive]] — per-bucket prefix
-    * windows plus a carry over the bucket-total table — never a
-    * single-partition ROW_NUMBER/SUM window over the corpus. The bucket
-    * WIDTH is derived from the observed id range (max_doc_id / 1024,
-    * floor 1) so the carry table is capped at ~1025 rows no matter the
-    * corpus size — PrefixSum's data-independent bucket-count contract
-    * held by construction, not by a constant that happens to fit the
-    * test SFs. The max() probe is one columnar-stats-cheap scalar job;
-    * bucketing never changes the prefix values, only the decomposition,
-    * so the oracle is width-independent. Exact integer lengths end to end.
-    */
-  /** Cost-based-optimizer star join — the one Catalyst surface the rest
-    * of the catalog leaves untouched: catalog tables carry ANALYZE'd
-    * row/column statistics, and with `spark.sql.cbo.enabled` +
-    * `joinReorder.enabled` the optimizer REORDERS the syntactic
-    * ((lineitem ⋈ orders) ⋈ customer) chain so the two small relations
-    * join first (the filtered customer side, then orders) and the fact
-    * table joins the reduced intermediate — the stats-driven plan a
-    * 100 TB star schema lives or dies by, vs the syntactic order that
-    * would join the two big tables first. The conf window try/finally-
-    * restores (shared session) and forces `executedPlan` INSIDE it —
-    * SQLConf is read at plan time, not build time — so the pinned
-    * `optimizedPlan` is the CBO one (PlanAuditSpec asserts the innermost
-    * join excludes lineitem). Tables are session-scoped (in-memory
-    * catalog) external parquet mappings named per corpus dir; ANALYZE
-    * cost is one metadata+stats scan per table, amortizable in
-    * production as a post-ingest step. Result is join-order-invariant,
-    * so the oracle is the plain relational answer.
-    */
-  private def qCboReorder(s: SparkSession, d: String): DataFrame = {
-    val tag = dirTag(d)
-    def tbl(name: String) = s"graft_cbo_${tag}_$name"
-    // stats are a POST-INGEST step, not per-query work: create + ANALYZE
-    // once per session per corpus dir (the in-memory catalog is the
-    // session-scoped staging here); repeat invocations pay zero stat scans
-    Seq("lineitem" -> "l_orderkey", "orders" -> "o_orderkey, o_custkey",
-        "customer" -> "c_custkey, c_mktsegment").foreach { case (t, cols) =>
-      if (!s.catalog.tableExists(tbl(t))) {
-        s.sql(s"CREATE TABLE ${tbl(t)} USING parquet " +
-          s"LOCATION '$d/$t.parquet'")
-        s.sql(s"ANALYZE TABLE ${tbl(t)} COMPUTE STATISTICS FOR COLUMNS $cols")
-      }
-    }
-    val keys = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val saved = keys.map(k => k -> s.conf.getOption(k))
-    try {
-      keys.foreach(s.conf.set(_, "true"))
-      val df = s.sql(
-        s"""SELECT c_mktsegment,
-           |       COUNT(*) AS n_items,
-           |       SUM(CAST(l_quantity AS BIGINT)) AS sum_qty
-           |FROM ${tbl("lineitem")}
-           |JOIN ${tbl("orders")} ON l_orderkey = o_orderkey
-           |JOIN ${tbl("customer")} ON o_custkey = c_custkey
-           |WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-           |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
-      df.queryExecution.executedPlan // force planning inside the CBO window
-      // Verify/Bench materialize via a NEW QueryExecution (.coalesce(1)
-      // .write) built AFTER the finally-restore — without a cache they
-      // would execute a non-CBO replan. Cache the (2-row) result and
-      // populate it HERE, so every downstream action reads the plan this
-      // row exists to exercise. cache() after the force above keeps THIS
-      // df's optimizedPlan the raw CBO join tree (what PlanAuditSpec pins).
-      df.cache()
-      df.count()
-      df
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
-  private def qCorpusOffsets(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"),
-        (length(col("text")).cast("long") + 1L).as("n_chars"))
-    // max() over an empty corpus is SQL NULL — fall back to width 1
-    // rather than NPE (the probe itself stays one columnar-stats scalar job)
-    val maxId = Option(docs.agg(max(col("doc_id"))).first().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val width = math.max(1L, maxId / 1024L)
-    PrefixSum.exclusive(docs, expr(s"doc_id div ${width}L"),
-        Seq(col("doc_id")), col("n_chars"), "offset")
-      .select(col("doc_id"), col("n_chars"), col("offset"))
-      .orderBy("doc_id")
-  }
-
-  /** `percentile_disc` vs `percentile_cont` CROSS-CHECK (the ANSI
-    * WITHIN GROUP forms) — the semantics difference that silently skews
-    * SLO dashboards: cont INTERPOLATES between observations (its p99 may
-    * be a latency no request ever had), disc returns the smallest
-    * OBSERVED value with cume_dist ≥ p (what "p99 latency" should
-    * report). Emitting both per group pins the divergence explicitly.
-    * The Spark side and the oracle BOTH replay disc AND cont from their
-    * definitions (disc: min value with cume_dist ≥ p; cont: linear
-    * interpolation between the two order statistics bracketing position
-    * p·(n−1)) so no builtin tie/index convention is trusted. ONE sort,
-    * not four buffers: cume_dist, row_number and the unbounded count
-    * share a single window spec → one WindowExec, one per-group sort —
-    * and the follow-on aggregate reuses the window's flag-partitioning
-    * (no second exchange). No percentile buffer at all: the cont points
-    * are positional CASE-mins over the same sorted stream. FP
-    * portability: the interpolation is the identical op chain on both
-    * engines (one multiply of exact ints, floor, one subtract, one
-    * multiply, one add — no multi-term sums), with 0.5/0.9 cast to
-    * DOUBLE on the DuckDB side (it parses bare decimals as DECIMAL).
-    * Scale note: exact sort-based — the 100 TB path is the GK sketch
-    * row ([[qApproxQuantiles]]) with this as the audit.
-    */
-  private def qPercentileDisc(s: SparkSession, d: String): DataFrame = {
-    Tables.lineitem(s, d)
-      .createOrReplaceTempView(s"graft_pd_li_${dirTag(d)}")
-    s.sql(
-      s"""WITH c AS (
-         |  SELECT l_returnflag, l_extendedprice AS v,
-         |         cume_dist() OVER w AS cd,
-         |         row_number() OVER w AS rn,
-         |         count(*) OVER (PARTITION BY l_returnflag
-         |           ORDER BY l_extendedprice
-         |           ROWS BETWEEN UNBOUNDED PRECEDING
-         |                    AND UNBOUNDED FOLLOWING) AS n
-         |  FROM graft_pd_li_${dirTag(d)}
-         |  WINDOW w AS (PARTITION BY l_returnflag
-         |               ORDER BY l_extendedprice)),
-         |g AS (
-         |  SELECT l_returnflag,
-         |         MAX(CAST(0.5D * CAST(n - 1 AS DOUBLE) AS DOUBLE)) AS pos50,
-         |         MAX(CAST(0.9D * CAST(n - 1 AS DOUBLE) AS DOUBLE)) AS pos90,
-         |         MIN(CASE WHEN cd >= 0.5D THEN v END) AS p50_disc,
-         |         MIN(CASE WHEN cd >= 0.9D THEN v END) AS p90_disc,
-         |         MIN(CASE WHEN rn = CAST(FLOOR(0.5D * CAST(n - 1 AS DOUBLE))
-         |             AS BIGINT) + 1 THEN v END) AS lo50,
-         |         MIN(CASE WHEN rn = CAST(CEIL(0.5D * CAST(n - 1 AS DOUBLE))
-         |             AS BIGINT) + 1 THEN v END) AS hi50,
-         |         MIN(CASE WHEN rn = CAST(FLOOR(0.9D * CAST(n - 1 AS DOUBLE))
-         |             AS BIGINT) + 1 THEN v END) AS lo90,
-         |         MIN(CASE WHEN rn = CAST(CEIL(0.9D * CAST(n - 1 AS DOUBLE))
-         |             AS BIGINT) + 1 THEN v END) AS hi90
-         |  FROM c GROUP BY 1)
-         |SELECT l_returnflag, p50_disc, p90_disc,
-         |       ROUND(lo50 + (hi50 - lo50) * (pos50 - FLOOR(pos50)), 4)
-         |         AS p50_cont,
-         |       ROUND(lo90 + (hi90 - lo90) * (pos90 - FLOOR(pos90)), 4)
-         |         AS p90_cont
-         |FROM g ORDER BY l_returnflag""".stripMargin)
-  }
-
-  // -------------------------------------------------------------- catalog
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_percentile_disc" -> (qPercentileDisc _),
-    "q_cbo_reorder" -> (qCboReorder _),
-    "q_corpus_offsets" -> (qCorpusOffsets _),
-    "q_range_coalesce" -> (qRangeCoalesce _),
-    "q_seasonal_naive" -> (qSeasonalNaive _),
-    "q_null_skew_join" -> (qNullSkewJoin _),
-    "q_rolling_mau" -> (qRollingMau _),
-    "q_sql_udf" -> (qSqlUdf _),
-    "q_sql_udtf" -> (qSqlUdtf _),
-    "q_dpp_join" -> (qDppJoin _),
-    "q_bloom_semijoin" -> (qBloomSemijoin _),
-    "q_audio_headers" -> (qAudioHeaders _),
-    "q_dict_encode" -> (qDictEncode _),
-    "q_cdc_apply" -> (qCdcApply _),
-    "q_cdc_scd2" -> (qCdcScd2 _),
-    "q_hll_intersect" -> (qHllIntersect _),
-    "q_multi_distinct" -> (qMultiDistinct _),
-    "q_cogroup" -> (qCogroup _),
-    "q_binary_source" -> (qBinarySource _),
-    "q_dsv2_source" -> (qDsv2Source _),
-    "q_dsv2_agg_pushdown" -> (qDsv2AggPushdown _),
-    "q_dsv2_topn" -> (qDsv2TopN _),
-    "q_dsv2_write" -> (qDsv2Write _),
-    "q_dsv2_upsert" -> (qDsv2Upsert _),
-    "q_dsv2_merge" -> (qDsv2Merge _),
-    "q_dsv2_update" -> (qDsv2Update _),
-    "q_dsv2_runtime_filter" -> (qDsv2RuntimeFilter _),
-    "q_dsv2_spj" -> (qDsv2Spj _),
-    "q_dsv2_spj_staged" -> (qDsv2SpjStaged _),
-    "q_dsv2_spj_dim" -> (qDsv2SpjDim _),
-    "q_dsv2_add_column" -> (qDsv2AddColumn _),
-    "q_dsv2_mor_delete" -> (qDsv2MorDelete _),
-    "q_dsv2_mor_compact" -> (qDsv2MorCompact _),
-    "q_dsv2_dv_encoding" -> (qDsv2DvEncoding _),
-    "q_dsv2_stream_source" -> (qDsv2StreamSource _),
-    "q_dsv2_auto_compact" -> (qDsv2AutoCompact _),
-    "q_dsv2_stream_cdc" -> (qDsv2StreamCdc _),
-    "q_dsv2_cdc_feed" -> (qDsv2CdcFeed _),
-    "q_dsv2_binpack" -> (qDsv2Binpack _),
-    "q_dsv2_string_prune" -> (qDsv2StringPrune _),
-    "q_dsv2_spj_bucketed" -> (qDsv2SpjBucketed _),
-    "q_dsv2_snapshots" -> (qDsv2Snapshots _),
-    "q_dsv2_cdc_window" -> (qDsv2CdcWindow _),
-    "q_dsv2_mor_merge" -> (qDsv2MorMerge _),
-    "q_dsv2_lineage" -> (qDsv2Lineage _),
-    "q_dsv2_catalog" -> (qDsv2Catalog _),
-    "q_dsv2_delete" -> (qDsv2Delete _),
-    "q_dsv2_stream" -> (qDsv2Stream _),
-    "q_dsv2_stream_sink" -> (qDsv2StreamSink _),
-    "q_dsv2_function" -> (qDsv2Function _),
-    "q_dsv2_time_travel" -> (qDsv2TimeTravel _),
-    "q_dsv2_typed_stage" -> (qDsv2TypedStage _),
-    "q_dsv2_replace_where" -> (qDsv2ReplaceWhere _),
-    "q_dsv2_ctas" -> (qDsv2Ctas _),
-    "q_dsv2_agg_function" -> (qDsv2AggFunction _),
-    "q_dsv2_stats_agg" -> (qDsv2StatsAgg _),
-    "q_dsv2_vacuum" -> (qDsv2Vacuum _),
-    "q_mix_shift" -> (qMixShift _),
-    "q_partition_stats" -> (qPartitionStats _),
-    "q_diff_in_diff" -> (qDiffInDiff _),
-    "q_spatial_join" -> (qSpatialJoin _),
-    "q_cuped" -> (qCuped _),
-    "q_bitmap_distinct" -> (qBitmapDistinct _),
-    "q_try_arithmetic" -> (qTryArithmetic _),
-    "q_listagg" -> (qListagg _),
-    "q_xml_roundtrip" -> (qXmlRoundtrip _),
-    "q_filter" -> (qFilter _),
-    "q_sum" -> (qSum _),
-    "q_take" -> (qTake _),
-    "q_take_merge_dist" -> (qTakeMergeDist _),
-    "q_partition" -> (qPartition _),
-    "q_join" -> (qJoin _),
-    "q_filter_agg" -> (qFilterAgg _),
-    "q_group_agg" -> (qGroupAgg _),
-    "q_topk" -> (qTopK _),
-    "q_join_agg_topk" -> (qJoinAggTopK _),
-    "q_semi_join" -> (qSemiJoin _),
-    "q_anti_join" -> (qAntiJoin _),
-    "q_window" -> (qWindow _),
-    "q_topk_per_key" -> (qTopKPerKey _),
-    "q_multi_join" -> (qMultiJoin _),
-    "q_percentiles" -> (qPercentiles _),
-    "q_rollup" -> (qRollup _),
-    "q_percentiles_within" -> (qPercentilesWithin _),
-    "q_interval_overlap" -> (qIntervalOverlap _),
-    "q_lateral_topn" -> (qLateralTopn _),
-    "q_set_ops" -> (qSetOps _),
-    "q_scalar_funcs" -> (qScalarFuncs _),
-    "q_distinct" -> (qDistinct _),
-    "q_decimal_sum" -> (qDecimalSum _),
-    "q_pivot" -> (qPivot _),
-    "q_sketches" -> (qSketches _),
-    "q_approx_quantiles" -> (qApproxQuantiles _),
-    "q_bloom_prefilter" -> (qBloomPrefilter _),
-    "q_hll_merge" -> (qHllMerge _),
-    "q_cms_freq" -> (qCmsFreq _),
-    "q_asof_join" -> (qAsOfJoin _),
-    "q_asof_forward" -> (qAsofForward _),
-    "q_range_join" -> (qRangeJoin _),
-    "q_explode_tokens" -> (qExplodeTokens _),
-    "q_scalar_subquery" -> (qScalarSubquery _),
-    "q_events_window" -> (qEventsWindow _),
-    "q_sliding_window" -> (qSlidingWindow _),
-    "q_iqr_outliers" -> (qIqrOutliers _),
-    "q_markov" -> (qMarkov _),
-    "q_chi2_drift" -> (qChi2Drift _),
-    "q_basket_pairs" -> (qBasketPairs _),
-    "q_scd2" -> (qScd2 _),
-    "q_winsorize" -> (qWinsorize _),
-    "q_vocab_coverage" -> (qVocabCoverage _),
-    "q_ab_assign" -> (qAbAssign _),
-    "q_rfm" -> (qRfm _),
-    "q_cohort_ltv" -> (qCohortLtv _),
-    "q_decay_score" -> (qDecayScore _),
-    "q_mad_outliers" -> (qMadOutliers _),
-    "q_time_to_event" -> (qTimeToEvent _),
-    "q_wow_growth" -> (qWowGrowth _),
-    "q_zipf_slope" -> (qZipfSlope _),
-    "q_data_profile" -> (qDataProfile _),
-    "q_embed_stats" -> (qEmbedStats _),
-    "q_overlap_matrix" -> (qOverlapMatrix _),
-    "q_skyline" -> (qSkyline _),
-    "q_snapshot_diff" -> (qSnapshotDiff _),
-    "q_dataset_card" -> (qDatasetCard _),
-    "q_stream_agg" -> (qStreamAgg _),
-    "q_stream_rocksdb" -> (qStreamRocksdb _),
-    "q_stream_restart" -> (qStreamRestart _),
-    "q_stream_stats" -> (qStreamStats _),
-    "q_stream_tws" -> (qStreamTws _),
-    "q_stream_outer_join" -> (qStreamOuterJoin _),
-    "q_stream_interval_join" -> (qStreamIntervalJoin _),
-    "q_stream_enrich" -> (qStreamEnrich _),
-    "q_stream_dedup" -> (qStreamDedup _),
-    "q_stream_sessionize" -> (qStreamSessionize _),
-    "q_schema_evolution" -> (qSchemaEvolution _),
-    "q_sessionize" -> (qSessionize _),
-    "q_session_window" -> (qSessionWindow _),
-    "q_growth_accounting" -> (qGrowthAccounting _),
-    "q_target_encode" -> (qTargetEncode _),
-    "q_content_signature" -> (qContentSignature _),
-    "q_events_json" -> (qEventsJson _),
-    "q_variant" -> (qVariant _),
-    "q_observe" -> (qObserve _),
-    "q_funnel" -> (qFunnel _),
-    "q_retention" -> (qRetention _),
-    "q_histogram" -> (qHistogram _),
-    "q_deciles" -> (qDeciles _),
-    "q_streaks" -> (qStreaks _),
-    "q_pagerank" -> (qPagerank _),
-    "q_label_prop" -> (qLabelProp _),
-    "q_bm25" -> (qBm25 _),
-    "q_tfidf" -> (qTfidf _),
-    "q_lm_score" -> (qLmScore _),
-    "q_entropy" -> (qEntropy _),
-    "q_collocations" -> (qCollocations _),
-    "q_dau_stickiness" -> (qDauStickiness _),
-    "q_bigrams" -> (qBigrams _),
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_dedup_normalized" -> (qDedupNormalized _),
-    "q_minhash_pairs" -> (qMinhashPairs _),
-    "q_simhash_pairs" -> (qSimhashPairs _),
-    "q_ngram_jaccard" -> (qNgramJaccardPairs _),
-    "q_contamination" -> (qContamination _),
-    "q_corpus_pipeline" -> (qCorpusPipeline _),
-    "q_incremental_dedup" -> (qIncrementalDedup _),
-    "q_embed_topk" -> (qEmbedTopK _),
-    "q_embed_lsh_topk" -> (qEmbedLshTopK _),
-    "q_embed_pairs" -> (qEmbedPairs _),
-    "q_doc_embed_pairs" -> (qDocEmbedPairs _),
-    "q_text_stats" -> (qTextStats _),
-    "q_lang_id" -> (qLangId _),
-    "q_token_count" -> (qTokenCount _),
-    "q_repetition" -> (qRepetition _),
-    "q_fingerprint" -> (qFingerprint _),
-    "q_multimodal" -> (qMultimodal _),
-    "q_media_headers" -> (qMediaHeaders _),
-    "q_sample" -> (qSample _),
-    "q_split_counts" -> (qSplitCounts _),
-    "q_stratified_sample" -> (qStratifiedSample _),
-    "q_weighted_sample" -> (qWeightedSample _),
-    "q_sample_mix" -> (qSampleMix _),
-    "q_sql_text" -> (qSqlText _),
-    "q_sql_pipe" -> (qSqlPipe _),
-    "q_sql_script" -> (qSqlScript _),
-    "q_group_by_all" -> (qGroupByAll _),
-    "q_param_query" -> (qParamQuery _),
-    "q_identifier_param" -> (qIdentifierParam _),
-    "q_state_reader" -> (qStateReader _),
-    "q_state_rewrite" -> (qStateRewrite _),
-    "q_collation" -> (qCollation _),
-    "q_stats_moments" -> (qStatsMoments _),
-    "q_salted_join" -> (qSaltedJoin _),
-    "q_ivf_topk" -> (qIvfTopK _),
-    "q_outer_join" -> (qOuterJoin _),
-    "q_full_outer_join" -> (qFullOuterJoin _),
-    "q_cube" -> (qCube _),
-    "q_exists_correlated" -> (qExistsCorrelated _),
-    "q_correlated_scalar" -> (qCorrelatedScalar _),
-    "q_arg_minmax" -> (qArgMinMax _),
-    "q_collect_list" -> (qCollectList _),
-    "q_stats_corr" -> (qStatsCorr _),
-    "q_date_ops" -> (qDateOps _),
-    "q_string_ops" -> (qStringOps _),
-    "q_part_join" -> (qPartJoin _),
-    "q_conditional" -> (qConditional _),
-    "q_cosine_pairs" -> (qCosinePairs _),
-    "q_window_funcs" -> (qWindowFuncs _),
-    "q_having_in" -> (qHavingIn _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_chunk_docs" -> (qChunkDocs _),
-    "q_boilerplate" -> (qBoilerplate _),
-    "q_pack_sequences" -> (qPackSequences _),
-    "q_redact" -> (qRedact _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_array_ops" -> (qArrayOps _),
-    "q_resample_fill" -> (qResampleFill _),
-    "q_merge_upsert" -> (qMergeUpsert _),
-    "q_standardize" -> (qStandardize _),
-    "q_bucketed_join" -> (qBucketedJoin _),
-    "q_bucket_lookup" -> (qBucketLookup _),
-    "q_pq_topk" -> (qPqTopK _),
-    "q_bool_agg" -> (qBoolAgg _),
-    "q_heavy_hitters" -> (qHeavyHitters _),
-    "q_pruned_scan" -> (qPrunedScan _),
-    "q_zorder_scan" -> (qZorderScan _),
-    "q_compaction" -> (qCompaction _),
-    "q_json_roundtrip" -> (qJsonRoundtrip _),
-    "q_csv_roundtrip" -> (qCsvRoundtrip _),
-    "q_ks_drift" -> (qKsDrift _),
-    "q_gini" -> (qGini _),
-    "q_psi_drift" -> (qPsiDrift _),
-    "q_dup_clusters" -> (qDupClusters _),
-    "q_graph_bfs" -> (qGraphBfs _),
-    "q_recursive_cte" -> (qRecursiveCte _),
-    "q_dedup_canonical" -> (qDedupCanonical _),
-    "q_graph_triangles" -> (qGraphTriangles _),
-    "q_rolling_window" -> (qRollingWindow _),
-    "q_edit_pairs" -> (qEditPairs _),
-    "q_ivfpq_topk" -> (qIvfPqTopK _),
-    "q_ivf_incremental" -> (qIvfIncremental _),
-    "q_auc" -> (qAuc _),
-    "q_calibration" -> (qCalibration _),
-    "q_path_trigrams" -> (qPathTrigrams _),
-    "q_bpe_merges" -> (qBpeMerges _),
-    "q_bootstrap_ci" -> (qBootstrapCi _),
-    "q_seasonality" -> (qSeasonality _),
-    "q_kmeans" -> (qKmeans _),
-    "q_ab_srm" -> (qAbSrm _),
-    "q_token_budget" -> (qTokenBudget _),
-    "q_out_of_order" -> (qOutOfOrder _),
-    "q_funnel_windowed" -> (qFunnelWindowed _),
-    "q_graph_degree_dist" -> (qGraphDegreeDist _),
-    "q_quantile_normalize" -> (qQuantileNormalize _),
-    "q_changepoint" -> (qChangepoint _),
-    "q_event_gaps" -> (qEventGaps _),
-    "q_containment_pairs" -> (qContainmentPairs _),
-    "q_attribution" -> (qAttribution _),
-    "q_trend_test" -> (qTrendTest _),
-    "q_key_skew" -> (qKeySkew _),
-    "q_orc_roundtrip" -> (qOrcRoundtrip _),
-    "q_naive_bayes" -> (qNaiveBayes _),
-    "q_kaplan_meier" -> (qKaplanMeier _),
-    "q_k_anonymity" -> (qKAnonymity _),
-    "q_temporal_split" -> (qTemporalSplit _),
-    "q_pca_power" -> (qPcaPower _),
-    "q_balanced_sample" -> (qBalancedSample _),
-    "q_coverage_curve" -> (qCoverageCurve _),
-    "q_dp_sensitivity" -> (qDpSensitivity _),
-    "q_label_centroids" -> (qLabelCentroids _),
-    "q_hard_negatives" -> (qHardNegatives _),
-    "q_knn_label_noise" -> (qKnnLabelNoise _),
-    "q_hybrid_fusion" -> (qHybridFusion _),
-    "q_autocomplete" -> (qAutocomplete _),
-    "q_centroid_outliers" -> (qCentroidOutliers _),
-    "q_tpch_q1" -> (qTpchQ1 _),
-    "q_peak_concurrency" -> (qPeakConcurrency _),
-    "q_weighted_median" -> (qWeightedMedian _),
-    "q_stream_evict" -> (qStreamEvict _),
-    "q_stream_hll" -> (qStreamHll _),
-    "q_tpch_q3" -> (qTpchQ3 _),
-    "q_tpch_q5" -> (qTpchQ5 _),
-    "q_tpch_q6" -> (qTpchQ6 _),
-    "q_tpch_q7" -> (qTpchQ7 _),
-    "q_tpch_q8" -> (qTpchQ8 _),
-    "q_tpch_q10" -> (qTpchQ10 _),
-    "q_tpch_q13" -> (qTpchQ13 _),
-    "q_tpch_q15" -> (qTpchQ15 _),
-    "q_tpch_q17" -> (qTpchQ17 _),
-    "q_tpch_q14" -> (qTpchQ14 _),
-    "q_tpch_q18" -> (qTpchQ18 _),
-    "q_tpch_q4" -> (qTpchQ4 _),
-    "q_tpch_q19" -> (qTpchQ19 _),
-    "q_tpch_q21" -> (qTpchQ21 _),
-    "q_dq_rules" -> (qDqRules _),
-    "q_incremental_agg" -> (qIncrementalAgg _),
-    "q_quantile_merge" -> (qQuantileMerge _),
-    "q_tpch_q2" -> (qTpchQ2 _),
-    "q_tpch_q9" -> (qTpchQ9 _),
-    "q_tpch_q11" -> (qTpchQ11 _),
-    "q_tpch_q16" -> (qTpchQ16 _),
-    "q_tpch_q20" -> (qTpchQ20 _),
-    "q_tpch_q12" -> (qTpchQ12 _),
-    "q_tpch_q22" -> (qTpchQ22 _),
-    "q_time_weighted_avg" -> (qTimeWeightedAvg _),
-    "q_mode" -> (qMode _),
-    "q_ols_trend" -> (qOlsTrend _),
-    "q_map_ops" -> (qMapOps _),
-    "q_share_of_parent" -> (qShareOfParent _),
-    "q_benford" -> (qBenford _),
-    "q_cross_corr" -> (qCrossCorr _),
-    "q_rank_test" -> (qRankTest _),
-    "q_minhash_tuning" -> (qMinhashTuning _),
-    "q_ab_ztest" -> (qAbZtest _),
-    "q_decile_lift" -> (qDecileLift _),
-    "q_null_semantics" -> (qNullSemantics _),
-    "q_nullsafe_join" -> (qNullsafeJoin _),
-    "q_ridge" -> (qRidge _),
-    "q_group_sample" -> (qGroupSample _),
-    "q_split_leakage" -> (qSplitLeakage _),
-    "q_vector_audit" -> (qVectorAudit _),
-    "q_dedup_savings" -> (qDedupSavings _),
-    "q_negative_sample" -> (qNegativeSample _),
-    "q_ewma" -> (qEwma _),
-    "q_link_prediction" -> (qLinkPrediction _),
-    "q_lang_confusion" -> (qLangConfusion _)
-  )
-
-  /** Shared oracle for the ANN verdict rows ([[annRecallVerdict]]): the
-    * exact cosine top-20 with rank, plus the recall verdict asserted TRUE.
-    * One SQL text serves all four families because their output IS the
-    * exact side — only the in-plan audit differs, and that collapses to a
-    * boolean.
-    */
-  private val annVerdictOracleSql: String =
-    """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      |           FROM embeddings),
-      |     q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-      |     top AS (
-      |       SELECT e.vec_id AS id,
-      |              CASE WHEN list_dot_product(e.v, e.v) = 0
-      |                     OR list_dot_product(q.qv, q.qv) = 0 THEN 0.0
-      |                   ELSE ROUND(list_dot_product(e.v, q.qv) /
-      |                              (sqrt(list_dot_product(e.v, e.v)) *
-      |                               sqrt(list_dot_product(q.qv, q.qv))), 6)
-      |              END AS cos
-      |       FROM e, q ORDER BY cos DESC, id LIMIT 20)
-      |SELECT CAST(ROW_NUMBER() OVER (ORDER BY cos DESC, id) AS BIGINT) AS rnk,
-      |       id, cos, TRUE AS ann_ok
-      |FROM top ORDER BY rnk""".stripMargin
-
-  /** DuckDB oracles — one per catalog query, no omissions. Rows whose
-    * primary estimate is engine-specific (the sketch, ANN, and LSH/simhash
-    * pair families) use the verdict-row form: the emitted result is the
-    * exact/deterministic side plus an in-plan bound-or-recall verdict
-    * asserted TRUE, so the oracle checks both the exact values and that
-    * the approximate operator met its floor.
-    */
-  // q_dup_clusters and q_recursive_cte share ONE oracle text: same
-  // cluster labels, two engine-side mechanisms (pointer jumping vs the
-  // native recursive CTE) — the sharpest possible differential
-  private val dupClustersOracle: String =
-    """WITH RECURSIVE
-      |sh AS (
-      |  SELECT doc_id AS id,
-      |         CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-      |              ELSE list_distinct([concat_ws(' ', t[i], t[i+1], t[i+2])
-      |                                  for i in generate_series(1, len(t) - 2)])
-      |         END AS g
-      |  FROM (SELECT doc_id,
-      |               list_filter(string_split_regex(lower(text), '\s+'),
-      |                           x -> len(x) > 0) AS t
-      |        FROM documents)),
-      |posting AS (SELECT id, unnest(g) AS gram FROM sh),
-      |sizes AS (SELECT id, len(g) AS n_sh FROM sh),
-      |shared AS (SELECT gram FROM posting
-      |           GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 10000),
-      |pruned AS (SELECT id, gram FROM posting JOIN shared USING (gram)),
-      |inter AS (
-      |  SELECT a.id AS id_a, b.id AS id_b, CAST(COUNT(*) AS BIGINT) AS n_inter
-      |  FROM pruned a JOIN pruned b USING (gram)
-      |  WHERE a.id < b.id GROUP BY 1, 2),
-      |pairs AS (
-      |  SELECT i.id_a, i.id_b
-      |  FROM inter i
-      |  JOIN sizes sa ON i.id_a = sa.id
-      |  JOIN sizes sb ON i.id_b = sb.id
-      |  WHERE CAST(i.n_inter AS DOUBLE) /
-      |        CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE) >= 0.5),
-      |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-      |          UNION ALL SELECT id_b, id_a FROM pairs),
-      |reach(id, comp) AS (
-      |  SELECT DISTINCT src, src FROM edges
-      |  UNION
-      |  SELECT e.dst, r.comp FROM reach r JOIN edges e ON e.src = r.id),
-      |lbl AS (SELECT id, MIN(comp) AS comp FROM reach GROUP BY id)
-      |SELECT comp AS cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members
-      |FROM lbl GROUP BY comp ORDER BY cluster_id""".stripMargin
-
-  /** [[dupClustersOracle]]'s graph rebuilt from raw text, extended with a
-    * recursive BFS from the component minima — the oracle for
-    * [[qGraphBfs]]. The recursion is depth-bounded (dist < 20, matching
-    * hopDistance's maxIter) so cycles terminate; MIN(dist) per node then
-    * yields the shortest hop count.
-    */
-  private val dupBfsOracle: String = {
-    val cut = dupClustersOracle.lastIndexOf("\nSELECT comp AS cluster_id")
-    dupClustersOracle.substring(0, cut) +
-      """,
-        |seeds AS (SELECT DISTINCT comp AS id FROM lbl),
-        |bfs(id, dist) AS (
-        |  SELECT id, 0 FROM seeds
-        |  UNION
-        |  SELECT e.dst, b.dist + 1 FROM bfs b JOIN edges e ON e.src = b.id
-        |  WHERE b.dist < 20),
-        |dmin AS (SELECT id, MIN(dist) AS dist FROM bfs GROUP BY id)
-        |SELECT l.id AS doc_id, l.comp AS cluster_id,
-        |       CAST(d.dist AS BIGINT) AS dist
-        |FROM lbl l JOIN dmin d ON l.id = d.id
-        |ORDER BY doc_id""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    // q_percentile_disc: disc AND cont replayed from their DEFINITIONS
-    // (disc: min observed value with cume_dist >= p; cont: interpolation
-    // between the order statistics at floor/ceil of p*(n-1)) so no
-    // builtin tie/index convention is trusted; the interpolation is the
-    // IDENTICAL op chain as the Spark side (oracle float law), with the
-    // p literals cast to DOUBLE (DuckDB parses bare decimals as DECIMAL)
-    "q_percentile_disc" ->
-      """WITH c AS (
-        |  SELECT l_returnflag, l_extendedprice AS v,
-        |         cume_dist() OVER w AS cd,
-        |         row_number() OVER w AS rn,
-        |         count(*) OVER (PARTITION BY l_returnflag
-        |           ORDER BY l_extendedprice
-        |           ROWS BETWEEN UNBOUNDED PRECEDING
-        |                    AND UNBOUNDED FOLLOWING) AS n
-        |  FROM lineitem
-        |  WINDOW w AS (PARTITION BY l_returnflag ORDER BY l_extendedprice)),
-        |g AS (
-        |  SELECT l_returnflag,
-        |    MAX(CAST(0.5 AS DOUBLE) * CAST(n - 1 AS DOUBLE)) AS pos50,
-        |    MAX(CAST(0.9 AS DOUBLE) * CAST(n - 1 AS DOUBLE)) AS pos90,
-        |    MIN(CASE WHEN cd >= CAST(0.5 AS DOUBLE) THEN v END) AS p50_disc,
-        |    MIN(CASE WHEN cd >= CAST(0.9 AS DOUBLE) THEN v END) AS p90_disc,
-        |    MIN(CASE WHEN rn = CAST(FLOOR(CAST(0.5 AS DOUBLE)
-        |        * CAST(n - 1 AS DOUBLE)) AS BIGINT) + 1 THEN v END) AS lo50,
-        |    MIN(CASE WHEN rn = CAST(CEIL(CAST(0.5 AS DOUBLE)
-        |        * CAST(n - 1 AS DOUBLE)) AS BIGINT) + 1 THEN v END) AS hi50,
-        |    MIN(CASE WHEN rn = CAST(FLOOR(CAST(0.9 AS DOUBLE)
-        |        * CAST(n - 1 AS DOUBLE)) AS BIGINT) + 1 THEN v END) AS lo90,
-        |    MIN(CASE WHEN rn = CAST(CEIL(CAST(0.9 AS DOUBLE)
-        |        * CAST(n - 1 AS DOUBLE)) AS BIGINT) + 1 THEN v END) AS hi90
-        |  FROM c GROUP BY 1)
-        |SELECT l_returnflag, p50_disc, p90_disc,
-        |       ROUND(lo50 + (hi50 - lo50) * (pos50 - FLOOR(pos50)), 4)
-        |         AS p50_cont,
-        |       ROUND(lo90 + (hi90 - lo90) * (pos90 - FLOOR(pos90)), 4)
-        |         AS p90_cont
-        |FROM g ORDER BY 1""".stripMargin,
-    // q_cbo_reorder: join-order-invariant relational answer — the Spark
-    // side exists to exercise ANALYZE stats + CBO join reorder; the
-    // result must be the plain 3-table star answer under any order
-    "q_cbo_reorder" ->
-      """SELECT c_mktsegment,
-        |       COUNT(*) AS n_items,
-        |       CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    // q_corpus_offsets: the bucketed prefix sum replayed as one running
-    // window (fine at oracle scale)
-    "q_corpus_offsets" ->
-      """SELECT doc_id,
-        |       CAST(LENGTH(text) + 1 AS BIGINT) AS n_chars,
-        |       CAST(COALESCE(SUM(LENGTH(text) + 1) OVER (
-        |              ORDER BY doc_id
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |            0) AS BIGINT) AS offset
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // q_range_coalesce: identical interval-union replay; the (shard, off)
-    // pre-combine makes the window order total, so both engines assign
-    // identical islands
-    "q_range_coalesce" ->
-      """WITH uniq AS (
-        |  SELECT ((l_suppkey % 50) + 50) % 50 AS shard,
-        |         ((l_orderkey * 1000) % 10000000 + 10000000) % 10000000
-        |           AS off,
-        |         MAX(((l_orderkey * 1000) % 10000000 + 10000000) % 10000000
-        |             + 500 + CAST(l_quantity AS BIGINT) * 10) AS e,
-        |         CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM lineitem GROUP BY 1, 2),
-        |m AS (SELECT shard, off, e, cnt,
-        |        MAX(e) OVER (PARTITION BY shard ORDER BY off
-        |                     ROWS BETWEEN UNBOUNDED PRECEDING
-        |                     AND 1 PRECEDING) AS pme
-        |      FROM uniq),
-        |i AS (SELECT shard, off, e, cnt,
-        |        SUM(CASE WHEN pme IS NULL OR off > pme + 4096
-        |                 THEN 1 ELSE 0 END)
-        |          OVER (PARTITION BY shard ORDER BY off
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |          AS island
-        |      FROM m)
-        |SELECT shard, MIN(off) AS read_start, MAX(e) AS read_end,
-        |       CAST(SUM(cnt) AS BIGINT) AS n_ranges
-        |FROM i GROUP BY shard, island
-        |ORDER BY shard, read_start""".stripMargin,
-    "q_seasonal_naive" ->
-      """WITH daily AS (
-        |  SELECT strftime(ts, '%Y-%m-%d') AS day,
-        |         CAST(COUNT(*) AS BIGINT) AS actual
-        |  FROM events GROUP BY 1)
-        |SELECT d.day, d.actual, l.actual AS forecast,
-        |       ABS(d.actual - l.actual) AS abs_err
-        |FROM daily d LEFT JOIN daily l
-        |  ON CAST(d.day AS DATE) = CAST(l.day AS DATE) + 7
-        |ORDER BY d.day""".stripMargin,
-    // q_null_skew_join: the oracle is the PLAIN left join — the engine's
-    // null-key bypass must be invisible in results
-    "q_null_skew_join" ->
-      """WITH li AS (
-        |  SELECT CASE WHEN l_orderkey % 3 = 0 THEN NULL
-        |              WHEN l_orderkey % 3 = 1 THEN -l_orderkey
-        |              ELSE l_orderkey END AS k,
-        |         l_quantity AS qty
-        |  FROM lineitem)
-        |SELECT CASE WHEN k IS NULL THEN 'null_key'
-        |            WHEN o_orderkey IS NULL THEN 'unmatched'
-        |            ELSE 'matched' END AS bucket,
-        |       CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(SUM(qty) AS DOUBLE) AS sum_qty
-        |FROM li LEFT JOIN orders ON k = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_rolling_mau: the fan-out-to-anchors plan replayed as a direct
-    // interval join over the compact activity table
-    "q_rolling_mau" ->
-      """WITH act AS (
-        |  SELECT DISTINCT CAST(ts AS DATE) AS aday, user_id FROM events),
-        |axis AS (SELECT DISTINCT aday AS day FROM act)
-        |SELECT strftime(day, '%Y-%m-%d') AS day,
-        |       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS mau7
-        |FROM axis JOIN act ON aday BETWEEN day - 6 AND day
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_sql_udf: the oracle inlines the function body — exactly what
-    // Catalyst does with a SQL UDF (the equivalence this row pins)
-    "q_sql_udf" ->
-      """SELECT event_type,
-        |       ROUND(SUM((value - 500.0) / (1.0 + abs(value - 500.0))), 6)
-        |         AS score,
-        |       CAST(COUNT(*) AS BIGINT) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // q_sql_udtf: the table function's body replayed as a LATERAL
-    // union over the same compact per-priority cents-exact totals; band
-    // amounts are single LEAST/subtractions of the identical cents-
-    // derived double (bit-stable both engines, no rounding)
-    "q_sql_udtf" ->
-      """WITH p AS (
-        |  SELECT o_orderpriority AS priority,
-        |         CAST(SUM(CAST(ROUND(o_totalprice * CAST(100.0 AS DOUBLE))
-        |              AS BIGINT)) AS DOUBLE) / CAST(100.0 AS DOUBLE) AS total
-        |  FROM orders GROUP BY o_orderpriority)
-        |SELECT priority, t.tier, t.amount
-        |FROM p, LATERAL (
-        |  SELECT u.tier, u.amount FROM (
-        |    SELECT 'low' AS tier,
-        |           LEAST(total, CAST(10000000.0 AS DOUBLE)) AS amount
-        |    UNION ALL
-        |    SELECT 'mid', LEAST(total - CAST(10000000.0 AS DOUBLE),
-        |                        CAST(40000000.0 AS DOUBLE))
-        |    UNION ALL
-        |    SELECT 'high', total - CAST(50000000.0 AS DOUBLE)) u
-        |  WHERE u.amount > CAST(0.0 AS DOUBLE)) t
-        |ORDER BY priority, tier""".stripMargin,
-    "q_dpp_join" ->
-      """WITH dim(dim_day, campaign) AS (VALUES
-        |  ('2024-01-05', 'promo'), ('2024-01-15', 'promo'),
-        |  ('2024-01-25', 'control'))
-        |SELECT strftime(ts, '%Y-%m-%d') AS day, campaign,
-        |       CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-        |       CAST(SUM(event_id) AS BIGINT) AS sum_id
-        |FROM events JOIN dim ON strftime(ts, '%Y-%m-%d') = dim_day
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-    // q_bloom_semijoin: answer-identical to q_dpp_join — the bloom only
-    // changes which partitions are LISTED, never the result
-    "q_bloom_semijoin" ->
-      """WITH dim(dim_day, campaign) AS (VALUES
-        |  ('2024-01-05', 'promo'), ('2024-01-15', 'promo'),
-        |  ('2024-01-25', 'control'))
-        |SELECT strftime(ts, '%Y-%m-%d') AS day, campaign,
-        |       CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-        |       CAST(SUM(event_id) AS BIGINT) AS sum_id
-        |FROM events JOIN dim ON strftime(ts, '%Y-%m-%d') = dim_day
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-    // q_audio_headers: expected fields computed arithmetically — only a
-    // byte-correct little-endian WAV serialize+parse round trip matches
-    "q_audio_headers" ->
-      """SELECT doc_id, TRUE AS riff_ok,
-        |       CAST(1 + doc_id % 2 AS BIGINT) AS channels,
-        |       CAST(8000 + 100 * (doc_id % 80) AS BIGINT) AS sample_rate,
-        |       CAST((8000 + 100 * (doc_id % 80)) * (1 + doc_id % 2) * 2
-        |            AS BIGINT) AS byte_rate,
-        |       CAST((8000 + 100 * (doc_id % 80)) * (1 + doc_id % 2) * 2
-        |            AS BIGINT) AS data_size,
-        |       CAST(44 AS BIGINT) AS n_bytes
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // q_dict_encode: the distributed global index replayed as DuckDB's
-    // ROW_NUMBER over the same (freq DESC, term) total order; same
-    // whitespace tokenization as q_explode_tokens
-    "q_dict_encode" ->
-      """WITH tok AS (
-        |  SELECT unnest(list_filter(string_split_regex(trim(text), '\s+'),
-        |                            x -> len(x) > 0)) AS term
-        |  FROM documents),
-        |v AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS freq
-        |      FROM tok GROUP BY term)
-        |SELECT term,
-        |       CAST(ROW_NUMBER() OVER (ORDER BY freq DESC, term) - 1
-        |            AS BIGINT) AS id,
-        |       freq
-        |FROM v ORDER BY id""".stripMargin,
-    // q_cdc_apply: last-writer-wins replayed as join-on-max-seq (seq is
-    // unique per key, so it picks the same row as the engine's max_by)
-    "q_cdc_apply" ->
-      """WITH ch AS (
-        |  SELECT o_custkey AS k, o_orderkey AS seq,
-        |         CASE WHEN o_orderkey % 10 = 0 THEN 'D' ELSE 'U' END AS op,
-        |         o_totalprice AS v
-        |  FROM orders),
-        |last AS (SELECT k, MAX(seq) AS mseq FROM ch GROUP BY k),
-        |fin AS (SELECT ch.k, ch.op, ch.v
-        |        FROM ch JOIN last ON ch.k = last.k AND ch.seq = last.mseq)
-        |SELECT c.c_custkey AS k,
-        |       COALESCE(f.v, c.c_acctbal) AS val,
-        |       CASE WHEN f.k IS NULL THEN 'base' ELSE 'updated' END AS src
-        |FROM customer c LEFT JOIN fin f ON c.c_custkey = f.k
-        |WHERE f.op IS NULL OR f.op = 'U'
-        |ORDER BY k""".stripMargin,
-    // q_cdc_scd2: SCD2 history replayed via a per-key lag window, CDC
-    // state via join-on-max-seq (unique seq -> same row as max_by);
-    // consistent pinned TRUE per key via null-safe equality
-    "q_cdc_scd2" ->
-      """WITH log AS (
-        |  SELECT o_custkey AS k, o_orderkey AS seq,
-        |         CASE WHEN o_orderkey % 10 = 0 THEN 'D' ELSE 'U' END AS op,
-        |         o_totalprice AS v
-        |  FROM orders),
-        |h AS (SELECT k, op, v,
-        |             lag(op) OVER w AS prev_op, lag(v) OVER w AS prev_v
-        |      FROM log WINDOW w AS (PARTITION BY k ORDER BY seq)),
-        |nv AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n_versions FROM h
-        |       WHERE op = 'U' AND (prev_op IS NULL OR prev_op = 'D'
-        |             OR prev_v <> v)
-        |       GROUP BY k),
-        |last AS (SELECT k, MAX(seq) AS mseq FROM log GROUP BY k),
-        |fin AS (SELECT log.k, log.op, log.v
-        |        FROM log JOIN last ON log.k = last.k AND log.seq = last.mseq),
-        |o AS (SELECT k, CASE WHEN op = 'U' THEN v END AS open_v FROM fin),
-        |c AS (SELECT k, CASE WHEN op = 'U' THEN v END AS cdc_v FROM fin)
-        |SELECT o.k, CAST(COALESCE(nv.n_versions, 0) AS BIGINT) AS n_versions,
-        |       o.open_v, c.cdc_v,
-        |       o.open_v IS NOT DISTINCT FROM c.cdc_v AS consistent
-        |FROM o LEFT JOIN nv ON o.k = nv.k LEFT JOIN c ON o.k = c.k
-        |ORDER BY o.k""".stripMargin,
-    // q_mix_shift: weights/rates as guarded single divisions of exact
-    // bigint counts; contribution products mirrored operand-for-operand
-    "q_mix_shift" ->
-      """WITH cell AS (
-        |  SELECT event_type AS seg, ts < TIMESTAMP '2024-01-15' AS pre,
-        |         CAST(COUNT(*) AS BIGINT) AS n,
-        |         CAST(SUM(CASE WHEN value > 500.0 THEN 1 ELSE 0 END)
-        |              AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
-        |p1 AS (SELECT seg, n AS n1, c AS c1 FROM cell WHERE pre),
-        |p2 AS (SELECT seg AS seg2, n AS n2, c AS c2 FROM cell WHERE NOT pre),
-        |tot AS (SELECT (SELECT CAST(SUM(n1) AS BIGINT) FROM p1) AS t1,
-        |               (SELECT CAST(SUM(n2) AS BIGINT) FROM p2) AS t2),
-        |j AS (SELECT COALESCE(seg, seg2) AS seg,
-        |             COALESCE(n1, 0) AS n1, COALESCE(c1, 0) AS c1,
-        |             COALESCE(n2, 0) AS n2, COALESCE(c2, 0) AS c2, t1, t2
-        |      FROM p1 FULL OUTER JOIN p2 ON seg = seg2, tot),
-        |r AS (SELECT seg,
-        |        CASE WHEN t1 > 0 THEN CAST(n1 AS DOUBLE) / CAST(t1 AS DOUBLE)
-        |             ELSE 0.0 END AS w1,
-        |        CASE WHEN t2 > 0 THEN CAST(n2 AS DOUBLE) / CAST(t2 AS DOUBLE)
-        |             ELSE 0.0 END AS w2,
-        |        CASE WHEN n1 > 0 THEN CAST(c1 AS DOUBLE) / CAST(n1 AS DOUBLE)
-        |             ELSE 0.0 END AS r1,
-        |        CASE WHEN n2 > 0 THEN CAST(c2 AS DOUBLE) / CAST(n2 AS DOUBLE)
-        |             ELSE 0.0 END AS r2
-        |      FROM j)
-        |SELECT seg, ROUND(w1, 6) AS w1, ROUND(w2, 6) AS w2,
-        |       ROUND(r1, 6) AS r1, ROUND(r2, 6) AS r2,
-        |       ROUND((w2 - w1) * r1, 6) + 0.0 AS mix_contrib,
-        |       ROUND(w2 * (r2 - r1), 6) + 0.0 AS within_contrib
-        |FROM r ORDER BY seg""".stripMargin,
-    "q_partition_stats" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS day,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       MIN(event_id) AS min_id, MAX(event_id) AS max_id,
-        |       MIN(value) AS min_value, MAX(value) AS max_value,
-        |       CAST(SUM(CASE WHEN value IS NULL THEN 1 ELSE 0 END)
-        |            AS BIGINT) AS n_null_value,
-        |       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_diff_in_diff: four cell means as guarded single divisions of
-    // exact bigint sums; the dd subtraction chain mirrored operand-for-
-    // operand (bit-identical doubles)
-    "q_diff_in_diff" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    SUM(CASE WHEN ts < TIMESTAMP '2024-01-15' THEN 1 ELSE 0 END) AS x,
-        |    SUM(CASE WHEN ts < TIMESTAMP '2024-01-15' THEN 0 ELSE 1 END) AS y,
-        |    CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))
-        |         AS BIGINT) % 1000000 < 500000 AS t
-        |  FROM events GROUP BY user_id),
-        |g AS (
-        |  SELECT CAST(SUM(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS n_t,
-        |         CAST(SUM(CASE WHEN t THEN 0 ELSE 1 END) AS BIGINT) AS n_c,
-        |         CAST(SUM(CASE WHEN t THEN x ELSE 0 END) AS BIGINT) AS sx_t,
-        |         CAST(SUM(CASE WHEN t THEN y ELSE 0 END) AS BIGINT) AS sy_t,
-        |         CAST(SUM(CASE WHEN t THEN 0 ELSE x END) AS BIGINT) AS sx_c,
-        |         CAST(SUM(CASE WHEN t THEN 0 ELSE y END) AS BIGINT) AS sy_c
-        |  FROM u)
-        |SELECT n_t, n_c,
-        |  ROUND(CASE WHEN n_t > 0
-        |             THEN CAST(sx_t AS DOUBLE) / CAST(n_t AS DOUBLE) END, 6)
-        |    AS mean_t_pre,
-        |  ROUND(CASE WHEN n_t > 0
-        |             THEN CAST(sy_t AS DOUBLE) / CAST(n_t AS DOUBLE) END, 6)
-        |    AS mean_t_post,
-        |  ROUND(CASE WHEN n_c > 0
-        |             THEN CAST(sx_c AS DOUBLE) / CAST(n_c AS DOUBLE) END, 6)
-        |    AS mean_c_pre,
-        |  ROUND(CASE WHEN n_c > 0
-        |             THEN CAST(sy_c AS DOUBLE) / CAST(n_c AS DOUBLE) END, 6)
-        |    AS mean_c_post,
-        |  ROUND((CASE WHEN n_t > 0
-        |              THEN CAST(sy_t AS DOUBLE) / CAST(n_t AS DOUBLE) END
-        |         - CASE WHEN n_t > 0
-        |                THEN CAST(sx_t AS DOUBLE) / CAST(n_t AS DOUBLE) END)
-        |        - (CASE WHEN n_c > 0
-        |                THEN CAST(sy_c AS DOUBLE) / CAST(n_c AS DOUBLE) END
-        |           - CASE WHEN n_c > 0
-        |                  THEN CAST(sx_c AS DOUBLE) / CAST(n_c AS DOUBLE) END),
-        |        6) AS dd
-        |FROM g""".stripMargin,
-    // q_spatial_join: the oracle verifies by direct quadratic join over
-    // the sampled point set (fine at oracle scale; the engine side is the
-    // grid-bucketed equi-join) — coordinates replayed via the portable
-    // md5 construction, distance kept squared in exact integer space
-    "q_spatial_join" ->
-      """WITH pts AS (
-        |  SELECT c_custkey AS id,
-        |    CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 12))
-        |         AS BIGINT) % 10000 AS x,
-        |    CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 13, 12))
-        |         AS BIGINT) % 10000 AS y
-        |  FROM customer WHERE c_custkey % 10 = 0)
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |       CAST((a.x - b.x) * (a.x - b.x)
-        |            + (a.y - b.y) * (a.y - b.y) AS BIGINT) AS dist2
-        |FROM pts a JOIN pts b ON a.id < b.id
-        |WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-        |      <= 1000000
-        |ORDER BY id_a, id_b""".stripMargin,
-    // q_cuped: θ and all means replayed from the same exact bigint sums,
-    // single divisions, mirrored operand trees (bit-identical doubles)
-    "q_cuped" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    SUM(CASE WHEN ts < TIMESTAMP '2024-01-15' THEN 1 ELSE 0 END) AS x,
-        |    SUM(CASE WHEN ts < TIMESTAMP '2024-01-15' THEN 0 ELSE 1 END) AS y,
-        |    CASE WHEN CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)),
-        |                                   1, 12)) AS BIGINT)
-        |              % 1000000 < 500000
-        |         THEN 'a' ELSE 'b' END AS arm
-        |  FROM events GROUP BY user_id),
-        |g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |             CAST(SUM(x) AS BIGINT) AS sx,
-        |             CAST(SUM(y) AS BIGINT) AS sy,
-        |             CAST(SUM(x * y) AS BIGINT) AS sxy,
-        |             CAST(SUM(x * x) AS BIGINT) AS sxx
-        |      FROM u),
-        |a AS (SELECT arm, CAST(COUNT(*) AS BIGINT) AS n_users,
-        |             CAST(SUM(x) AS BIGINT) AS ax,
-        |             CAST(SUM(y) AS BIGINT) AS ay
-        |      FROM u GROUP BY arm)
-        |SELECT arm, n_users,
-        |  ROUND(CAST(ay AS DOUBLE) / CAST(n_users AS DOUBLE), 6) AS mean_post,
-        |  ROUND(CAST(ax AS DOUBLE) / CAST(n_users AS DOUBLE), 6) AS mean_pre,
-        |  ROUND(CAST(ay AS DOUBLE) / CAST(n_users AS DOUBLE)
-        |        - (CASE WHEN n * sxx - sx * sx = 0 THEN 0.0
-        |                ELSE CAST(n * sxy - sx * sy AS DOUBLE)
-        |                     / CAST(n * sxx - sx * sx AS DOUBLE) END)
-        |          * (CAST(ax AS DOUBLE) / CAST(n_users AS DOUBLE)
-        |             - CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)), 6) AS mean_adj
-        |FROM a, g ORDER BY arm""".stripMargin,
-    "q_bitmap_distinct" ->
-      """SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // q_try_arithmetic: NULL semantics mirrored as CASE guards (floor-mod
-    // divisor on both sides; the guard also keeps DuckDB's bigint
-    // overflow-throw from firing where Spark's try_add yields NULL)
-    "q_try_arithmetic" ->
-      """SELECT event_id,
-        |  CASE WHEN ((user_id % 997) + 997) % 997 = 0 THEN NULL
-        |       ELSE CAST(event_id AS DOUBLE) /
-        |            CAST(((user_id % 997) + 997) % 997 AS DOUBLE)
-        |       END AS safe_div,
-        |  CASE WHEN ((user_id % 997) + 997) % 997 = 0 THEN NULL
-        |       ELSE event_id % (((user_id % 997) + 997) % 997) END AS safe_mod,
-        |  CASE WHEN event_id % 997 = 0 AND event_id > 807 THEN NULL
-        |       WHEN event_id % 997 = 0 THEN 9223372036854775000 + event_id
-        |       ELSE event_id END AS safe_add
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_listagg" ->
-      """SELECT n_name, CAST(COUNT(*) AS BIGINT) AS n_suppliers,
-        |       string_agg(s_name, ',' ORDER BY s_name) AS supplier_csv
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    // q_xml_roundtrip: entity-escaping-safe identity on these columns
-    // (props is JSON — quotes/braces must survive XML write+read verbatim)
-    "q_xml_roundtrip" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type,
-        |       value, props
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_recursive_cte" -> dupClustersOracle,
-    "q_filter" ->
-      "SELECT l_extendedprice AS v FROM lineitem WHERE l_extendedprice < 30000 ORDER BY v",
-    "q_sum" ->
-      "SELECT CAST(SUM(l_quantity) AS DOUBLE) AS sum_v FROM lineitem",
-    "q_take" ->
-      """WITH v AS (
-        |  SELECT ROW_NUMBER() OVER (ORDER BY l_orderkey, l_linenumber, l_partkey,
-        |                                     l_suppkey, l_quantity, l_extendedprice)
-        |           - 1 AS idx,
-        |         l_extendedprice AS v
-        |  FROM lineitem)
-        |SELECT idx, v FROM v WHERE idx % 8 = 0 ORDER BY idx""".stripMargin,
-    // q_take_merge_dist: identical semantics to q_take — only the gather's
-    // physical strategy differs (range-partitioned merge, no broadcast)
-    "q_take_merge_dist" ->
-      """WITH v AS (
-        |  SELECT ROW_NUMBER() OVER (ORDER BY l_orderkey, l_linenumber, l_partkey,
-        |                                     l_suppkey, l_quantity, l_extendedprice)
-        |           - 1 AS idx,
-        |         l_extendedprice AS v
-        |  FROM lineitem)
-        |SELECT idx, v FROM v WHERE idx % 8 = 0 ORDER BY idx""".stripMargin,
-    "q_partition" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty,
-        |       CAST(SUM(l_orderkey) AS BIGINT) AS sum_key
-        |FROM lineitem""".stripMargin,
-    "q_join" ->
-      """SELECT l.l_orderkey, l.l_quantity, o.o_totalprice
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |ORDER BY l.l_orderkey, l.l_quantity, o.o_totalprice""".stripMargin,
-    "q_filter_agg" ->
-      """SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue,
-        |       CAST(COUNT(*) AS BIGINT) AS n
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-        |  AND l_shipdate < TIMESTAMP '1996-01-01'
-        |  AND l_discount BETWEEN 0.03 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    "q_group_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty,
-        |       ROUND(SUM(l_extendedprice), 2) AS sum_base,
-        |       ROUND(AVG(l_quantity), 4) AS avg_qty,
-        |       CAST(COUNT(*) AS BIGINT) AS n
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_topk" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-    "q_join_agg_topk" ->
-      """SELECT o.o_orderkey,
-        |       ROUND(SUM(l.l_extendedprice * (1.0 - l.l_discount)), 2) AS revenue
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |GROUP BY o.o_orderkey
-        |ORDER BY revenue DESC, o.o_orderkey LIMIT 10""".stripMargin,
-    "q_semi_join" ->
-      """SELECT c_custkey FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q_anti_join" ->
-      """SELECT c_custkey FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-        |                  AND o.o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-    "q_window" ->
-      """SELECT l_orderkey,
-        |       CAST(l_linenumber AS BIGINT) AS l_linenumber,
-        |       CAST(ROW_NUMBER() OVER w AS BIGINT) AS rn,
-        |       CAST(SUM(l_quantity) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-        |                                  AND CURRENT ROW) AS DOUBLE) AS run_qty
-        |FROM lineitem
-        |WINDOW w AS (PARTITION BY l_orderkey
-        |             ORDER BY l_linenumber, l_partkey, l_suppkey, l_quantity,
-        |                      l_extendedprice)
-        |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity,
-        |         l_extendedprice, rn""".stripMargin,
-    "q_topk_per_key" ->
-      """SELECT l_returnflag, l_extendedprice, l_orderkey,
-        |       CAST(l_linenumber AS BIGINT) AS l_linenumber
-        |FROM (
-        |  SELECT l_returnflag, l_extendedprice, l_orderkey, l_linenumber,
-        |         ROW_NUMBER() OVER (
-        |           PARTITION BY l_returnflag
-        |           ORDER BY l_extendedprice DESC, l_orderkey DESC, l_partkey DESC,
-        |                    l_suppkey DESC, l_quantity DESC, l_linenumber DESC) AS rn
-        |  FROM lineitem)
-        |WHERE rn <= 3
-        |ORDER BY l_returnflag, l_extendedprice DESC, l_orderkey DESC,
-        |         l_linenumber DESC""".stripMargin,
-    "q_multi_join" ->
-      """SELECT n.n_name,
-        |       ROUND(SUM(l.l_extendedprice * (1.0 - l.l_discount)), 2) AS revenue,
-        |       CAST(COUNT(*) AS BIGINT) AS n_items
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |JOIN region r ON n.n_regionkey = r.r_regionkey
-        |WHERE r.r_name = 'ASIA'
-        |  AND o.o_orderdate >= TIMESTAMP '1995-01-01'
-        |  AND o.o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n.n_name ORDER BY n.n_name""".stripMargin,
-    "q_percentiles" ->
-      """SELECT l_returnflag,
-        |       ROUND(QUANTILE_CONT(l_extendedprice, 0.5), 4) AS p50,
-        |       ROUND(QUANTILE_CONT(l_extendedprice, 0.9), 4) AS p90,
-        |       ROUND(QUANTILE_CONT(l_extendedprice, 0.99), 4) AS p99
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // the GK picks are engine-specific (DuckDB approx_quantile is a
-    // t-digest), so the oracle checks the exact percentiles and asserts the
-    // rank-error guarantee as a literal TRUE — Spark computes gk_bound_ok
-    // in-plan; a sketch violating its bound hash-mismatches this row
-    "q_approx_quantiles" ->
-      """SELECT l_returnflag, CAST(0.5 AS DOUBLE) AS q,
-        |       ROUND(QUANTILE_CONT(l_extendedprice, 0.5), 4) AS exact_p,
-        |       COUNT(*) AS n, TRUE AS gk_bound_ok
-        |FROM lineitem GROUP BY l_returnflag
-        |UNION ALL
-        |SELECT l_returnflag, CAST(0.95 AS DOUBLE),
-        |       ROUND(QUANTILE_CONT(l_extendedprice, 0.95), 4),
-        |       COUNT(*), TRUE
-        |FROM lineitem GROUP BY l_returnflag
-        |UNION ALL
-        |SELECT l_returnflag, CAST(0.99 AS DOUBLE),
-        |       ROUND(QUANTILE_CONT(l_extendedprice, 0.99), 4),
-        |       COUNT(*), TRUE
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag, q""".stripMargin,
-    // the HLL estimates are engine-specific, so the oracle checks the exact
-    // distinct counts and asserts the rsd-derived error bound as literal
-    // TRUE — Spark computes the hll_*_ok verdicts in-plan
-    "q_sketches" ->
-      """SELECT l_returnflag,
-        |       CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS exact_orders,
-        |       CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
-        |       TRUE AS hll_orders_ok, TRUE AS hll_parts_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // merged-HLL estimate is engine-specific; the oracle checks n_days and
-    // the exact distinct users, asserting the 5-sigma band as literal TRUE
-    "q_hll_merge" ->
-      """SELECT CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days,
-        |       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
-        |       TRUE AS hll_bound_ok
-        |FROM events""".stripMargin,
-    // q_binary_source: the staged blobs' dimensions are pure formulas of
-    // the shard id and the IHDR-header blob is a fixed 29 bytes, so the
-    // oracle recomputes the expected table arithmetically — the Spark
-    // side must recover the identical values from REAL file bytes
-    "q_binary_source" ->
-      """SELECT CAST(range AS BIGINT) AS shard,
-        |       TRUE AS sig_ok,
-        |       CAST(1 + 40 * range AS BIGINT) AS width,
-        |       CAST(1 + 30 * range AS BIGINT) AS height,
-        |       CAST(29 AS BIGINT) AS n_bytes
-        |FROM range(16) ORDER BY shard""".stripMargin,
-    // q_dsv2_source: the synthetic source's row formula replayed
-    // arithmetically over the same pushed-down range
-    "q_dsv2_source" ->
-      """SELECT CAST(id % 7 AS BIGINT) AS mod7,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM((id * 37) % 10000) AS BIGINT) AS sum_cents
-        |FROM (SELECT range AS id FROM range(250000, 750000))
-        |WHERE id % 7 <> 3
-        |GROUP BY 1 ORDER BY mod7""".stripMargin,
-    // q_dsv2_agg_pushdown: the closed forms replayed by brute force
-    "q_dsv2_agg_pushdown" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM(id) AS BIGINT) AS sum_id,
-        |       CAST(MIN(id) AS BIGINT) AS min_id,
-        |       CAST(MAX(id) AS BIGINT) AS max_id
-        |FROM (SELECT range AS id FROM range(100000, 900000))""".stripMargin,
-    // q_dsv2_topn: the pushed top-5 replayed by brute force
-    "q_dsv2_topn" ->
-      """SELECT CAST(id AS BIGINT) AS id,
-        |       CAST((id * 37) % 10000 AS BIGINT) AS cents
-        |FROM (SELECT range AS id FROM range(100000, 900000))
-        |ORDER BY id DESC LIMIT 5""".stripMargin,
-    // q_dsv2_write: the content that went THROUGH the connector write and
-    // came back through its scan, recomputed straight from lineitem
-    "q_dsv2_write" ->
-      """SELECT l_returnflag AS flag,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-        |            AS BIGINT) AS price_cents
-        |FROM lineitem GROUP BY 1 ORDER BY flag""".stripMargin,
-    // q_dsv2_runtime_filter: the fact side's row formula (mod7 = id % 7)
-    // replayed over the dim keys alone — if runtime narrowing ever
-    // DROPPED a matching row, the counts would split
-    "q_dsv2_runtime_filter" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM(o_orderkey % 7) AS BIGINT) AS sum_mod7,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS price_cents
-        |FROM orders
-        |WHERE o_orderpriority = '1-URGENT'""".stripMargin,
-    // q_dsv2_upsert: the delta-wins merge replayed as a full join over
-    // the same base/delta slices of orders
-    "q_dsv2_upsert" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_orderstatus AS status,
-        |         CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders WHERE o_orderkey < 400),
-        |delta AS (
-        |  SELECT o_orderkey AS k, 'U' AS status,
-        |         CAST(ROUND(o_totalprice * 100) AS BIGINT) + 7 AS cents
-        |  FROM orders WHERE o_orderkey >= 200 AND o_orderkey < 600)
-        |SELECT COALESCE(d.k, b.k) AS k,
-        |       COALESCE(d.status, b.status) AS status,
-        |       COALESCE(d.cents, b.cents) AS cents
-        |FROM base b FULL JOIN delta d ON b.k = d.k
-        |ORDER BY k""".stripMargin,
-    // q_dsv2_merge: the three-leg MERGE replayed as a full-outer join —
-    // matched rows take the source's cents with status 'U', unmatched
-    // source rows insert as 'N', and unmatched target rows below k=100
-    // are deleted (the not-matched-by-source sync leg)
-    "q_dsv2_merge" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_orderstatus AS status,
-        |         CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders WHERE o_orderkey < 400),
-        |src AS (
-        |  SELECT o_orderkey AS k,
-        |         CAST(ROUND(o_totalprice * 100) AS BIGINT) + 7 AS cents
-        |  FROM orders WHERE o_orderkey >= 200 AND o_orderkey < 600)
-        |SELECT COALESCE(s.k, b.k) AS k,
-        |       CASE WHEN s.k IS NOT NULL AND b.k IS NOT NULL THEN 'U'
-        |            WHEN s.k IS NOT NULL THEN 'N'
-        |            ELSE b.status END AS status,
-        |       COALESCE(s.cents, b.cents) AS cents
-        |FROM base b FULL JOIN src s ON b.k = s.k
-        |WHERE NOT (s.k IS NULL AND b.k < 100)
-        |ORDER BY k""".stripMargin,
-    // q_dsv2_update: the per-status correction + row-level delete
-    // replayed arithmetically
-    "q_dsv2_update" ->
-      """SELECT o_orderstatus AS status,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)
-        |             + CASE WHEN o_orderstatus = 'F' THEN 9 ELSE 0 END)
-        |            AS BIGINT) AS sum_cents
-        |FROM orders
-        |WHERE o_orderkey < 2000 AND o_orderkey % 10 <> 3
-        |GROUP BY status ORDER BY status""".stripMargin,
-    // q_dsv2_spj: the storage-partitioned join's content replayed
-    // arithmetically — both keyed sides aggregated over generate_series
-    // and joined on the residue class
-    "q_dsv2_spj" ->
-      """WITH l AS (
-        |  SELECT id % 7 AS mod7,
-        |         CAST(COUNT(*) AS BIGINT) AS l_rows,
-        |         CAST(SUM((id * 37) % 10000) AS BIGINT) AS l_cents
-        |  FROM (SELECT range AS id FROM range(0, 700000)) GROUP BY 1),
-        |r AS (
-        |  SELECT id % 7 AS mod7, CAST(COUNT(*) AS BIGINT) AS r_rows
-        |  FROM (SELECT range AS id FROM range(0, 500000)) GROUP BY 1)
-        |SELECT CAST(l.mod7 AS BIGINT) AS mod7, l_rows, l_cents, r_rows
-        |FROM l JOIN r ON l.mod7 = r.mod7
-        |ORDER BY mod7""".stripMargin,
-    // q_dsv2_spj_staged: the staged co-bucketed join's content replayed
-    // straight from orders/lineitem — the staging must be a pure layout
-    // decision, never a data transformation
-    "q_dsv2_spj_staged" ->
-      """WITH o AS (
-        |  SELECT o_orderkey % 8 AS b,
-        |         CAST(COUNT(*) AS BIGINT) AS n_ord,
-        |         CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |              AS BIGINT) AS ord_cents
-        |  FROM orders GROUP BY 1),
-        |l AS (
-        |  SELECT l_orderkey % 8 AS b,
-        |         CAST(COUNT(*) AS BIGINT) AS n_li,
-        |         CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty_sum
-        |  FROM lineitem GROUP BY 1)
-        |SELECT CAST(o.b AS BIGINT) AS b, n_ord, ord_cents, n_li, qty_sum
-        |FROM o JOIN l ON o.b = l.b
-        |ORDER BY b""".stripMargin,
-    // q_dsv2_spj_dim: the direct PK-FK staged join's content — per-bucket
-    // order counts and cents straight from orders
-    "q_dsv2_spj_dim" ->
-      """SELECT 'bucket_' || CAST(o_orderkey % 8 AS VARCHAR) AS label,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents
-        |FROM orders GROUP BY 1 ORDER BY label""".stripMargin,
-    // q_dsv2_add_column: the mixed-schema read after an append-only ADD
-    // COLUMN — pre-alter rows null-fill, post-alter rows carry the value
-    "q_dsv2_add_column" ->
-      """SELECT o_orderkey AS k,
-        |       CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
-        |       CASE WHEN o_orderkey >= 300 THEN o_orderpriority
-        |            ELSE NULL END AS prio
-        |FROM orders WHERE o_orderkey < 600
-        |ORDER BY k""".stripMargin,
-    // q_dsv2_mor_delete: the vector delete replayed arithmetically —
-    // orders under 2000 minus the k % 7 = 2 keys
-    "q_dsv2_mor_delete" ->
-      """SELECT o_orderstatus AS status,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents
-        |FROM orders
-        |WHERE o_orderkey < 2000 AND o_orderkey % 7 <> 2
-        |GROUP BY status ORDER BY status""".stripMargin,
-    // q_dsv2_mor_merge: the same three-leg MERGE arithmetic as
-    // q_dsv2_merge — the storage strategy (vectors + insert files vs
-    // whole-group rewrite) must be invisible in the answer
-    "q_dsv2_mor_merge" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS k, o_orderstatus AS status,
-        |         CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders WHERE o_orderkey < 400),
-        |src AS (
-        |  SELECT o_orderkey AS k,
-        |         CAST(ROUND(o_totalprice * 100) AS BIGINT) + 7 AS cents
-        |  FROM orders WHERE o_orderkey >= 200 AND o_orderkey < 600)
-        |SELECT COALESCE(s.k, b.k) AS k,
-        |       CASE WHEN s.k IS NOT NULL AND b.k IS NOT NULL THEN 'U'
-        |            WHEN s.k IS NOT NULL THEN 'N'
-        |            ELSE b.status END AS status,
-        |       COALESCE(s.cents, b.cents) AS cents
-        |FROM base b FULL JOIN src s ON b.k = s.k
-        |WHERE NOT (s.k IS NULL AND b.k < 100)
-        |ORDER BY k""".stripMargin,
-    // q_dsv2_mor_compact: compaction must preserve content exactly —
-    // the same arithmetic with the second (post-compaction) delete
-    "q_dsv2_mor_compact" ->
-      """SELECT o_orderstatus AS status,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents
-        |FROM orders
-        |WHERE o_orderkey < 2000 AND o_orderkey % 7 <> 2
-        |  AND o_orderkey % 11 <> 3
-        |GROUP BY status ORDER BY status""".stripMargin,
-    // q_dsv2_dv_encoding: the vector delete + unrelated append replayed
-    // arithmetically; the two encoding verdicts (no per-row manifest
-    // lines, zero vector bytes written by the append) are asserted as
-    // literal TRUE — a regression to the cumulative encoding
-    // hash-mismatches the row
-    "q_dsv2_dv_encoding" ->
-      """SELECT o_orderstatus AS status,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents,
-        |       TRUE AS no_per_row_manifest_lines,
-        |       TRUE AS append_wrote_zero_dv_bytes
-        |FROM orders
-        |WHERE (o_orderkey < 2000 AND o_orderkey % 7 <> 2)
-        |   OR (o_orderkey >= 2000 AND o_orderkey < 2400)
-        |GROUP BY status ORDER BY status""".stripMargin,
-    // q_dsv2_stream_source: the two drains' streamed content must equal
-    // the batch answer over both staged ranges — a checkpoint-resume
-    // re-read would double rows, a missed epoch would drop them, and
-    // either hash-mismatches; the bounded-drain verdict (3-then-2
-    // single-file batches under maxFilesPerTrigger=1) is asserted as
-    // literal TRUE
-    "q_dsv2_stream_source" ->
-      """SELECT o_orderstatus AS status,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents,
-        |       TRUE AS bounded_drain
-        |FROM orders WHERE o_orderkey < 1500
-        |GROUP BY status ORDER BY status""".stripMargin,
-    // q_dsv2_auto_compact: content must be invariant across the
-    // maintenance pass; the two policy verdicts (over-threshold files
-    // repaid, under-threshold files untouched) are asserted as literal
-    // TRUE from the connector's own metadata
-    "q_dsv2_auto_compact" ->
-      """SELECT CASE WHEN o_orderkey % 2 = 0 THEN 'even' ELSE 'odd' END AS grp,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents,
-        |       TRUE AS heavy_repaid,
-        |       TRUE AS light_kept
-        |FROM orders
-        |WHERE o_orderkey < 2000
-        |  AND NOT (o_orderkey % 2 = 0 AND o_orderkey % 3 <> 0)
-        |  AND NOT (o_orderkey % 2 = 1 AND o_orderkey % 97 = 1)
-        |GROUP BY 1 ORDER BY grp""".stripMargin,
-    // q_dsv2_binpack: content must be invariant across the bin-packing
-    // maintenance pass (MOR delete applied — the pack repays the debt);
-    // the three policy verdicts (small files collapsed to one per
-    // partition with vectors repaid, no output file mixes partition
-    // values, second pass is a no-op) are asserted as literal TRUE
-    "q_dsv2_binpack" ->
-      """SELECT CASE WHEN o_orderkey % 2 = 0 THEN 'even' ELSE 'odd' END AS grp,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents,
-        |       TRUE AS files_packed,
-        |       TRUE AS layout_kept,
-        |       TRUE AS second_pass_noop
-        |FROM orders
-        |WHERE o_orderkey < 1800 AND o_orderkey % 13 <> 2
-        |GROUP BY 1 ORDER BY grp""".stripMargin,
-    // q_dsv2_snapshots: the metadata table's per-version bookkeeping is
-    // exactly file-deterministic (single-partition inserts, a MOR delete
-    // spanning both files) — every count a literal; 114 = |{k in [0,800):
-    // k % 7 = 3}|
-    "q_dsv2_snapshots" ->
-      """SELECT CAST(version AS BIGINT) AS version,
-        |       CAST(n_added AS BIGINT) AS n_added,
-        |       CAST(n_removed AS BIGINT) AS n_removed,
-        |       CAST(n_dv_delta_files AS BIGINT) AS n_dv_delta_files,
-        |       CAST(n_dv_deleted_rows AS BIGINT) AS n_dv_deleted_rows,
-        |       commit_timed, self_contained
-        |FROM (VALUES (1, 1, 0, 0, 0, TRUE, TRUE),
-        |             (2, 1, 0, 0, 0, TRUE, TRUE),
-        |             (3, 0, 0, 2, 114, TRUE, TRUE),
-        |             (4, 1, 0, 0, 0, TRUE, TRUE))
-        |  AS t(version, n_added, n_removed, n_dv_delta_files,
-        |       n_dv_deleted_rows, commit_timed, self_contained)
-        |ORDER BY version""".stripMargin,
-    // q_dsv2_cdc_window: the timestamp window (v1's commit instant to
-    // the delete's) is exactly v2's inserts + v3's retractions
-    "q_dsv2_cdc_window" ->
-      """SELECT * FROM (
-        |  SELECT 'delete' AS change_type,
-        |         CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |         CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |              AS BIGINT) AS sum_cents
-        |  FROM orders WHERE o_orderkey < 1500 AND o_orderkey % 9 = 4
-        |  UNION ALL
-        |  SELECT 'insert',
-        |         CAST(COUNT(*) AS BIGINT),
-        |         CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |              AS BIGINT)
-        |  FROM orders WHERE o_orderkey >= 1200 AND o_orderkey < 1500
-        |) ORDER BY change_type""".stripMargin,
-    // q_dsv2_spj_bucketed: the bucketed PK-FK join must equal the plain
-    // relational answer (bucketing is pure layout), and the
-    // exchange_free verdict — zero exchanges below the merge join, read
-    // off the executed plan — is asserted TRUE
-    "q_dsv2_spj_bucketed" ->
-      """SELECT c_mktsegment AS segment,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents,
-        |       TRUE AS exchange_free
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1 ORDER BY segment""".stripMargin,
-    // q_dsv2_string_prune: the lang='en' read over the range-clustered
-    // staging must equal the parquet-side answer, and the
-    // files_skipped verdict (string zone maps pruned whole files, from
-    // the executed plan's own scan description) is asserted TRUE
-    "q_dsv2_string_prune" ->
-      """SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-        |       TRUE AS files_skipped
-        |FROM documents WHERE lang = 'en'
-        |GROUP BY source ORDER BY source""".stripMargin,
-    // q_dsv2_cdc_feed: the streamed change-data-feed's multiset replay
-    // (inserts ∖ deletes) must equal the post-lifecycle table — both
-    // MOR deletes applied, the compaction rewrite netting zero; the
-    // four feed verdicts (stream≡batch, mid-stream delete consumed as
-    // exactly its delta, rewrite nets zero, replay matches the table)
-    // are asserted as literal TRUE
-    "q_dsv2_cdc_feed" ->
-      """SELECT o_orderstatus AS status,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents,
-        |       TRUE AS stream_equals_batch,
-        |       TRUE AS mid_stream_delete_consumed,
-        |       TRUE AS rewrite_nets_zero,
-        |       TRUE AS replay_matches_table
-        |FROM orders
-        |WHERE o_orderkey < 2000 AND o_orderkey % 7 <> 3
-        |  AND o_orderkey % 11 <> 5
-        |GROUP BY status ORDER BY status""".stripMargin,
-    // q_dsv2_stream_cdc: the batch-at-a-time CDC materialization must
-    // equal the one-shot apply (Changelog's split invariance) — epoch-2
-    // upserts win over epoch-1 updates AND resurrect epoch-1 tombstones,
-    // surviving tombstones drop the key, new keys insert; the
-    // one-epoch-per-batch verdict is asserted as literal TRUE
-    "q_dsv2_stream_cdc" ->
-      """SELECT k, v, TRUE AS one_epoch_per_batch FROM (
-        |  SELECT o_orderkey AS k,
-        |         CASE WHEN o_orderkey % 7 = 0
-        |                THEN CAST(ROUND(o_totalprice * 100) AS BIGINT) + 2
-        |              WHEN o_orderkey % 3 = 0
-        |                THEN CAST(ROUND(o_totalprice * 100) AS BIGINT) + 1
-        |              ELSE CAST(ROUND(o_totalprice * 100) AS BIGINT) END AS v
-        |  FROM orders
-        |  WHERE o_orderkey < 1000
-        |    AND NOT (o_orderkey % 5 = 0 AND o_orderkey % 3 <> 0
-        |             AND o_orderkey % 7 <> 0)
-        |  UNION ALL
-        |  SELECT o_orderkey, CAST(ROUND(o_totalprice * 100) AS BIGINT) + 2
-        |  FROM orders WHERE o_orderkey >= 1000 AND o_orderkey < 1200
-        |) ORDER BY k""".stripMargin,
-    // q_dsv2_lineage: the per-flag content straight from lineitem; the
-    // lineage claims (one shard per flag, three shards total) replayed
-    // as the constants the co-located layout guarantees
-    "q_dsv2_lineage" ->
-      """SELECT l_returnflag AS flag,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents,
-        |       CAST(1 AS BIGINT) AS n_files,
-        |       CAST(3 AS BIGINT) AS total_files
-        |FROM lineitem GROUP BY 1 ORDER BY flag""".stripMargin,
-    // q_dsv2_catalog: the catalog is a naming seam — the content through
-    // CREATE/INSERT/SELECT must be exactly orders
-    "q_dsv2_catalog" ->
-      """SELECT o_orderstatus AS status,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents,
-        |       CAST(MIN(o_orderkey) AS BIGINT) AS min_k,
-        |       CAST(MAX(o_orderkey) AS BIGINT) AS max_k
-        |FROM orders GROUP BY 1 ORDER BY status""".stripMargin,
-    // q_dsv2_delete: the takedown replayed as a NOT IN — the partition
-    // delete must remove exactly the two statuses' rows, nothing else
-    "q_dsv2_delete" ->
-      """SELECT o_orderstatus AS status,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents
-        |FROM orders WHERE o_orderstatus NOT IN ('P', 'F')
-        |GROUP BY 1 ORDER BY status""".stripMargin,
-    // q_dsv2_stream: the streamed-in-bounded-batches aggregate must equal
-    // the whole-domain batch answer
-    "q_dsv2_stream" ->
-      """SELECT CAST(id % 7 AS BIGINT) AS mod7,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM((id * 37) % 10000) AS BIGINT) AS sum_cents
-        |FROM (SELECT range AS id FROM range(0, 210000))
-        |GROUP BY 1 ORDER BY mod7""".stripMargin,
-    // q_dsv2_stream_sink: content through the streaming sink's epoch
-    // commits must be exactly the whole domain, no dups, no gaps
-    "q_dsv2_stream_sink" ->
-      """SELECT CAST(id % 7 AS BIGINT) AS mod7,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM((id * 37) % 10000) AS BIGINT) AS sum_cents
-        |FROM (SELECT range AS id FROM range(0, 120000))
-        |GROUP BY 1 ORDER BY mod7""".stripMargin,
-    // q_dsv2_function: the catalog functions replayed arithmetically —
-    // Fibonacci-hash bucket over the low 32 bits, exact-cents money
-    "q_dsv2_function" ->
-      """SELECT ((o_orderkey * 2654435761) % 4294967296) % 16 AS b,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents
-        |FROM orders GROUP BY 1 ORDER BY b""".stripMargin,
-    // q_dsv2_time_travel: each snapshot replayed from orders — v1 is the
-    // first slice, v2 accumulates, v3 (logical overwrite) replaces; the
-    // default read (4) must equal v3, and the three TIMESTAMP AS OF
-    // instants (5,6,7) must land on v1, v2, v3 respectively
-    "q_dsv2_time_travel" ->
-      """WITH s AS (
-        |  SELECT o_orderkey AS k,
-        |         CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders)
-        |SELECT CAST(1 AS BIGINT) AS version,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM(cents) AS BIGINT) AS sum_cents
-        |FROM s WHERE k < 200
-        |UNION ALL SELECT CAST(2 AS BIGINT), CAST(COUNT(*) AS BIGINT),
-        |  CAST(SUM(cents) AS BIGINT) FROM s WHERE k < 500
-        |UNION ALL SELECT CAST(3 AS BIGINT), CAST(COUNT(*) AS BIGINT),
-        |  CAST(SUM(cents) AS BIGINT) FROM s WHERE k >= 500 AND k < 600
-        |UNION ALL SELECT CAST(4 AS BIGINT), CAST(COUNT(*) AS BIGINT),
-        |  CAST(SUM(cents) AS BIGINT) FROM s WHERE k >= 500 AND k < 600
-        |UNION ALL SELECT CAST(5 AS BIGINT), CAST(COUNT(*) AS BIGINT),
-        |  CAST(SUM(cents) AS BIGINT) FROM s WHERE k < 200
-        |UNION ALL SELECT CAST(6 AS BIGINT), CAST(COUNT(*) AS BIGINT),
-        |  CAST(SUM(cents) AS BIGINT) FROM s WHERE k < 500
-        |UNION ALL SELECT CAST(7 AS BIGINT), CAST(COUNT(*) AS BIGINT),
-        |  CAST(SUM(cents) AS BIGINT) FROM s WHERE k >= 500 AND k < 600
-        |ORDER BY version""".stripMargin,
-    // q_dsv2_typed_stage: the typed staging round-trip replayed straight
-    // from events — day-of-month partitions 10..12, timestamp cutoff,
-    // exact-integer decimal money summed (emitted as double; the values
-    // are integral cents so the double is exact)
-    "q_dsv2_typed_stage" ->
-      """SELECT CAST(EXTRACT(day FROM ts) AS BIGINT) AS day,
-        |       CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) AS sum_val,
-        |       epoch_us(MAX(ts)) AS max_ts_us
-        |FROM events
-        |WHERE EXTRACT(day FROM ts) BETWEEN 10 AND 12
-        |  AND ts >= TIMESTAMP '2024-01-10 12:00:00'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_dsv2_replace_where: the one-partition recompute replayed — 'O'
-    // rows carry the +5 correction, every other status is untouched
-    "q_dsv2_replace_where" ->
-      """SELECT o_orderstatus AS status,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)
-        |             + CASE WHEN o_orderstatus = 'O' THEN 5 ELSE 0 END)
-        |            AS BIGINT) AS sum_cents
-        |FROM orders GROUP BY 1 ORDER BY status""".stripMargin,
-    // q_dsv2_ctas: CTAS is naming + the write path — content straight
-    // from orders
-    "q_dsv2_ctas" ->
-      """SELECT o_orderstatus AS status,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents,
-        |       CAST(MIN(o_orderkey) AS BIGINT) AS min_k,
-        |       CAST(MAX(o_orderkey) AS BIGINT) AS max_k
-        |FROM orders GROUP BY 1 ORDER BY status""".stripMargin,
-    // q_dsv2_agg_function: the mergeable geometric mean replayed as
-    // EXP(AVG(LN(x))) — associative log-sum, engine-portable at 4dp
-    "q_dsv2_agg_function" ->
-      """SELECT o_orderstatus AS status,
-        |       ROUND(EXP(AVG(LN(o_totalprice))), 4) AS gm,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders
-        |FROM orders GROUP BY 1 ORDER BY status""".stripMargin,
-    // q_dsv2_stats_agg: the sidecar-answered aggregates replayed by
-    // brute force over orders
-    "q_dsv2_stats_agg" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(MIN(o_orderkey) AS BIGINT) AS min_k,
-        |       CAST(MAX(o_orderkey) AS BIGINT) AS max_k
-        |FROM orders""".stripMargin,
-    // q_dsv2_vacuum: the post-expiry survivor content (v3's slice) plus
-    // the expiry verdicts asserted as literal truths
-    "q_dsv2_vacuum" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents,
-        |       CAST(1 AS BIGINT) AS n_versions,
-        |       TRUE AS history_expired,
-        |       TRUE AS files_pruned
-        |FROM orders WHERE o_orderkey >= 500 AND o_orderkey < 700""".stripMargin,
-    // q_cogroup: the typed reconciliation replayed relationally (left
-    // join + conditional aggregate); the fixture has no orphan lines
-    // (lineitem FK), so the cogroup's ORPHAN branch emits nothing and
-    // both engines see the same status domain
-    "q_cogroup" ->
-      """WITH lc AS (
-        |  SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS n,
-        |         CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-        |              AS BIGINT) AS cents
-        |  FROM lineitem GROUP BY l_orderkey)
-        |SELECT o_orderstatus AS status,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(COALESCE(lc.n, 0)) AS BIGINT) AS n_lines,
-        |       CAST(SUM(COALESCE(lc.cents, 0)) AS BIGINT) AS line_cents,
-        |       CAST(SUM(CASE WHEN lc.l_orderkey IS NULL THEN 1 ELSE 0 END)
-        |            AS BIGINT) AS n_empty_orders
-        |FROM orders LEFT JOIN lc ON o_orderkey = lc.l_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_multi_distinct: integral quantities, exact counts — plain SQL
-    "q_multi_distinct" ->
-      """SELECT l_returnflag,
-        |       CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS n_parts,
-        |       CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS n_supps,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // q_hll_intersect: exact audience sets via per-user conditional flags;
-    // the inclusion-exclusion estimate is engine-internal, so the oracle
-    // pins the exacts and asserts the union-scaled bound as literal TRUE
-    "q_hll_intersect" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |         MAX(event_type = 'purchase') AS a,
-        |         MAX(event_type = 'click') AS b
-        |  FROM events WHERE event_type IN ('purchase', 'click')
-        |  GROUP BY user_id)
-        |SELECT CAST(SUM(CASE WHEN a THEN 1 ELSE 0 END) AS BIGINT) AS exact_a,
-        |       CAST(SUM(CASE WHEN b THEN 1 ELSE 0 END) AS BIGINT) AS exact_b,
-        |       CAST(COUNT(*) AS BIGINT) AS exact_union,
-        |       CAST(SUM(CASE WHEN a AND b THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS exact_inter,
-        |       TRUE AS inter_bound_ok
-        |FROM u""".stripMargin,
-    // CMS layout is engine-specific; the oracle checks the exact counts and
-    // asserts the (never-undercount, overcount <= ceil(eps*N)) guarantee as
-    // literal TRUE — deterministic because the sketch seed is fixed
-    "q_cms_freq" ->
-      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS exact_n,
-        |       TRUE AS cms_bound_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty,
-        |       CAST(COUNT(*) AS BIGINT) AS n
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    // q_lateral_topn: same LATERAL formulation; exact 1e-2 spend units
-    "q_lateral_topn" ->
-      """WITH spend AS (
-        |  SELECT c.c_nationkey, c.c_custkey,
-        |         SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS sp
-        |  FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
-        |  GROUP BY 1, 2)
-        |SELECT n.n_name, t.c_custkey, CAST(t.sp AS DOUBLE) / 100.0 AS spend
-        |FROM nation n, LATERAL (
-        |  SELECT s.c_custkey, s.sp FROM spend s
-        |  WHERE s.c_nationkey = n.n_nationkey
-        |  ORDER BY s.sp DESC, s.c_custkey LIMIT 2) t
-        |ORDER BY n.n_name, spend DESC, c_custkey""".stripMargin,
-    // q_percentiles_within: disc from the ANSI first-principles definition
-    // (smallest value with cume_dist >= p), cont via quantile_cont (exact
-    // quarter-integer interpolation over whole-number quantities)
-    "q_percentiles_within" ->
-      """WITH r AS (
-        |  SELECT l_returnflag, l_quantity,
-        |         cume_dist() OVER (PARTITION BY l_returnflag
-        |                           ORDER BY l_quantity) AS cd
-        |  FROM lineitem),
-        |d AS (
-        |  SELECT l_returnflag,
-        |         CAST(MIN(CASE WHEN cd >= 0.25 THEN l_quantity END)
-        |              AS DOUBLE) AS p25_disc,
-        |         CAST(MIN(CASE WHEN cd >= 0.5 THEN l_quantity END)
-        |              AS DOUBLE) AS p50_disc,
-        |         CAST(MIN(CASE WHEN cd >= 0.75 THEN l_quantity END)
-        |              AS DOUBLE) AS p75_disc
-        |  FROM r GROUP BY l_returnflag),
-        |c AS (
-        |  SELECT l_returnflag,
-        |         CAST(quantile_cont(l_quantity, 0.25) AS DOUBLE) AS p25_cont,
-        |         CAST(quantile_cont(l_quantity, 0.5) AS DOUBLE) AS p50_cont,
-        |         CAST(quantile_cont(l_quantity, 0.75) AS DOUBLE) AS p75_cont
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT d.l_returnflag, p25_disc, p50_disc, p75_disc,
-        |       p25_cont, p50_cont, p75_cont
-        |FROM d JOIN c ON d.l_returnflag = c.l_returnflag
-        |ORDER BY d.l_returnflag""".stripMargin,
-    // q_interval_overlap: the quadratic per-day reference join —
-    // differential proof that the engine's hour-banding loses no pair
-    "q_interval_overlap" ->
-      """WITH s AS (
-        |  SELECT user_id, CAST(ts AS DATE) AS day,
-        |         MIN(epoch_us(ts)) AS a, MAX(epoch_us(ts)) AS b
-        |  FROM events GROUP BY 1, 2)
-        |SELECT strftime(s1.day, '%Y-%m-%d') AS day,
-        |       CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        |       CAST(SUM(LEAST(s1.b, s2.b) - GREATEST(s1.a, s2.a))
-        |            AS BIGINT) AS sum_overlap_us
-        |FROM s s1 JOIN s s2 ON s1.day = s2.day
-        |WHERE s1.user_id % 10 = 0 AND s2.user_id % 10 = 1
-        |  AND s1.a <= s2.b AND s2.a <= s1.b
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_set_ops" ->
-      """WITH a AS (SELECT o_custkey AS k FROM orders WHERE o_orderpriority = '1-URGENT'),
-        |     b AS (SELECT o_custkey AS k FROM orders WHERE o_orderpriority = '5-LOW')
-        |SELECT k, 'both' AS op FROM (SELECT k FROM a INTERSECT SELECT k FROM b)
-        |UNION ALL
-        |SELECT k, 'urgent_only' AS op
-        |FROM (SELECT DISTINCT k FROM a EXCEPT ALL SELECT DISTINCT k FROM b)
-        |ORDER BY op, k""".stripMargin,
-    "q_scalar_funcs" ->
-      """SELECT o_orderkey,
-        |       ROUND(ABS(o_totalprice - 100000.0), 2) AS abs_diff,
-        |       ROUND(SQRT(o_totalprice), 4) AS sqrt_price,
-        |       substring(o_orderpriority, 1, 1) AS prio_code,
-        |       upper(o_orderstatus) AS status_u,
-        |       CAST(length(o_orderpriority) AS BIGINT) AS prio_len,
-        |       CASE WHEN o_totalprice > 200000.0 THEN 'big' ELSE 'small' END AS bucket,
-        |       CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |       CAST(month(o_orderdate) AS BIGINT) AS o_month
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_distinct" ->
-      """SELECT l_returnflag, CAST(COUNT(DISTINCT l_linestatus) AS BIGINT) AS n_status
-        |FROM (SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem)
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_sample" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_orderkey % 10 = 0 ORDER BY o_orderkey""".stripMargin,
-    "q_decimal_sum" ->
-      """SELECT l_returnflag,
-        |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
-        |         AS sum_price,
-        |       CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(14,4)))
-        |            AS DOUBLE) AS sum_disc_price
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_pivot" ->
-      """SELECT l_returnflag,
-        |       CAST(COALESCE(SUM(CASE WHEN l_linestatus = 'F' THEN l_quantity END), 0)
-        |            AS DOUBLE) AS qty_f,
-        |       CAST(COALESCE(SUM(CASE WHEN l_linestatus = 'O' THEN l_quantity END), 0)
-        |            AS DOUBLE) AS qty_o
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_range_join" ->
-      """SELECT c.c_custkey, s.s_suppkey
-        |FROM customer c JOIN supplier s
-        |  ON c.c_acctbal BETWEEN s.s_acctbal - 50.0 AND s.s_acctbal + 50.0
-        |ORDER BY c.c_custkey, s.s_suppkey""".stripMargin,
-    // q_asof_forward: independent MIN-over-inequality-join formulation
-    // of the forward as-of pick
-    "q_asof_forward" ->
-      """WITH err AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS err_us
-        |  FROM events WHERE event_type = 'error'
-        |), pur AS (
-        |  SELECT DISTINCT user_id, epoch_us(ts) AS p_us
-        |  FROM events WHERE event_type = 'purchase'
-        |), nxt AS (
-        |  SELECT e.event_id, MIN(p.p_us) AS next_us
-        |  FROM err e JOIN pur p
-        |    ON p.user_id = e.user_id AND p.p_us >= e.err_us
-        |  GROUP BY e.event_id
-        |)
-        |SELECT e.event_id, e.user_id, e.err_us, n.next_us,
-        |       n.next_us - e.err_us AS wait_us
-        |FROM err e LEFT JOIN nxt n ON e.event_id = n.event_id
-        |ORDER BY e.event_id""".stripMargin,
-    "q_asof_join" ->
-      """WITH purchases AS (
-        |  SELECT user_id, ts, MAX(value) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts),
-        |errors AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'error')
-        |SELECT e.event_id, ROUND(p.purchase_value, 4) AS purchase_value
-        |FROM errors e ASOF LEFT JOIN purchases p
-        |  ON e.user_id = p.user_id AND e.ts >= p.ts
-        |ORDER BY e.event_id""".stripMargin,
-    "q_explode_tokens" ->
-      """SELECT doc_id,
-        |       unnest(list_filter(string_split_regex(trim(text), '\s+'),
-        |                          x -> len(x) > 0)) AS token
-        |FROM documents WHERE doc_id < 50
-        |ORDER BY doc_id, token""".stripMargin,
-    "q_scalar_subquery" ->
-      """SELECT o_orderkey,
-        |       ROUND(o_totalprice - (SELECT AVG(o_totalprice) FROM orders), 2)
-        |         AS diff_from_avg
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_events_window" ->
-      """SELECT CAST(epoch(time_bucket(INTERVAL '1 hour', ts)) AS BIGINT) AS window_start,
-        |       event_type,
-        |       CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       ROUND(SUM(value), 4) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // q_stream_agg: a finite stream processed to completion equals the
-    // batch aggregate, so the streaming row shares q_events_window's oracle
-    "q_stream_agg" ->
-      """SELECT CAST(epoch(time_bucket(INTERVAL '1 hour', ts)) AS BIGINT) AS window_start,
-        |       event_type,
-        |       CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       ROUND(SUM(value), 4) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // q_stream_rocksdb: same parity contract as q_stream_agg on the
-    // RocksDB state store; 30-minute buckets
-    "q_stream_rocksdb" ->
-      """SELECT CAST(epoch(time_bucket(INTERVAL '30 minutes', ts)) AS BIGINT)
-        |         AS window_start,
-        |       event_type,
-        |       CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       ROUND(SUM(value), 4) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // q_stream_restart: exactly-once across a kill/resume — the final
-    // complete-mode table equals the batch per-day aggregate only if no
-    // file was replayed or dropped across the checkpoint recovery; the
-    // batch-id continuation verdict is asserted as literal TRUE
-    "q_stream_restart" ->
-      """SELECT CAST(epoch(time_bucket(INTERVAL '1 day', ts)) AS BIGINT)
-        |         AS window_start,
-        |       event_type,
-        |       CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       ROUND(SUM(value), 4) AS sum_value,
-        |       TRUE AS resumed_ok
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // q_stream_stats: finite stream driven to completion — final
-    // flatMapGroupsWithState state equals the batch per-user aggregate
-    "q_stream_stats" ->
-      """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       ROUND(SUM(value), 4) AS sum_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // q_stream_outer_join: the batch left interval join; NULLS FIRST
-    // pinned (engine defaults disagree)
-    "q_stream_outer_join" ->
-      """WITH err AS (
-        |  SELECT event_id AS eid, user_id AS eu, epoch_us(ts) AS e_us
-        |  FROM events WHERE event_type = 'error'
-        |), pur AS (
-        |  SELECT user_id AS pu, epoch_us(ts) AS p_us
-        |  FROM events WHERE event_type = 'purchase'
-        |)
-        |SELECT eid, e_us, p_us
-        |FROM err LEFT JOIN pur
-        |  ON eu = pu AND p_us BETWEEN e_us - 3600000000 AND e_us
-        |ORDER BY eid, p_us NULLS FIRST""".stripMargin,
-    // q_stream_tws: transformWithState (v2 API) shares the v1 row's
-    // oracle — API drift would surface as a correctness failure
-    "q_stream_tws" ->
-      """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       ROUND(SUM(value), 4) AS sum_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // q_stream_interval_join: finite watermarked stream-stream interval
-    // join to completion == the batch interval join; epoch MICROSECONDS
-    // (exact integers both engines, no round-vs-truncate at fractional
-    // seconds)
-    "q_stream_interval_join" ->
-      """SELECT e.event_id, e.user_id,
-        |       epoch_us(e.ts) AS e_us, epoch_us(p.ts) AS p_us,
-        |       p.value AS p_value
-        |FROM events e JOIN events p
-        |  ON e.user_id = p.user_id
-        | AND e.event_type = 'error' AND p.event_type = 'purchase'
-        | AND e.ts >= p.ts AND e.ts <= p.ts + INTERVAL 1 HOUR
-        |ORDER BY e.event_id, p_us, p_value""".stripMargin,
-    // q_sliding_window: every event lands in exactly two 1h/30min hopping
-    // windows; integer epoch-µs slot arithmetic replays the membership
-    "q_sliding_window" ->
-      """WITH x AS (
-        |  SELECT epoch_us(ts) // 1800000000 AS slot, event_type, value
-        |  FROM events),
-        |w AS (
-        |  SELECT slot * 1800 AS window_start, event_type, value FROM x
-        |  UNION ALL
-        |  SELECT (slot - 1) * 1800, event_type, value FROM x)
-        |SELECT window_start, event_type,
-        |       CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       ROUND(SUM(value), 4) AS sum_value
-        |FROM w GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // q_markov: lag over (user_id, ts, event_id) — identical tie-break in
-    // both engines; integer / integer is float division in both
-    "q_markov" ->
-      """WITH t AS (
-        |  SELECT lag(event_type) OVER (PARTITION BY user_id
-        |                               ORDER BY ts, event_id) AS src,
-        |         event_type AS dst
-        |  FROM events),
-        |c AS (SELECT src, dst, COUNT(*) AS n FROM t
-        |      WHERE src IS NOT NULL GROUP BY 1, 2),
-        |s AS (SELECT src, SUM(n) AS n_src FROM c GROUP BY 1)
-        |SELECT c.src, c.dst, CAST(c.n AS BIGINT) AS n,
-        |       ROUND(c.n / s.n_src, 6) AS p
-        |FROM c JOIN s USING (src) ORDER BY 1, 2""".stripMargin,
-    // q_chi2_drift: midpoint split on integer epoch-µs ((mn+mx) // 2 ==
-    // Spark's `div` on positive longs); expected counts from marginals
-    "q_chi2_drift" ->
-      """WITH e AS (SELECT event_type, epoch_us(ts) AS us FROM events),
-        |m AS (SELECT (MIN(us) + MAX(us)) // 2 AS mid FROM e),
-        |c AS (SELECT event_type,
-        |             CASE WHEN us < (SELECT mid FROM m) THEN 'a'
-        |                  ELSE 'b' END AS period,
-        |             COUNT(*) AS n
-        |      FROM e GROUP BY 1, 2),
-        |rt AS (SELECT event_type, SUM(n) AS rt FROM c GROUP BY 1),
-        |ct AS (SELECT period, SUM(n) AS ct FROM c GROUP BY 1),
-        |g AS (SELECT SUM(n) AS gt FROM c)
-        |SELECT c.event_type, c.period, CAST(c.n AS BIGINT) AS n,
-        |       ROUND(rt.rt * ct.ct / g.gt, 6) AS expected,
-        |       ROUND(POW(c.n - rt.rt * ct.ct / g.gt, 2)
-        |             / (rt.rt * ct.ct / g.gt), 6) AS contrib
-        |FROM c JOIN rt USING (event_type) JOIN ct USING (period) CROSS JOIN g
-        |ORDER BY 1, 2""".stripMargin,
-    // q_basket_pairs: unordered pair kept once via p1 < p2; support-desc
-    // top-50 with (p1, p2) tie-break is a deterministic cutoff
-    "q_basket_pairs" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |            FROM lineitem)
-        |SELECT a.pk AS p1, b.pk AS p2, CAST(COUNT(*) AS BIGINT) AS support
-        |FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-        |GROUP BY 1, 2 HAVING COUNT(*) >= 2
-        |ORDER BY support DESC, p1, p2 LIMIT 50""".stripMargin,
-    // q_scd2: change rows via lag over (ts, event_id); open interval ends
-    // at the 9999-12-31 23:59:59 sentinel (253402300799000000 µs)
-    "q_scd2" ->
-      """WITH o AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |         lag(event_type) OVER (PARTITION BY user_id
-        |                               ORDER BY ts, event_id) AS prev
-        |  FROM events),
-        |ch AS (SELECT user_id, ts, event_id, event_type FROM o
-        |       WHERE prev IS NULL OR prev <> event_type)
-        |SELECT user_id, event_type, epoch_us(ts) AS valid_from_us,
-        |       COALESCE(lead(epoch_us(ts)) OVER (PARTITION BY user_id
-        |                                         ORDER BY ts, event_id),
-        |                253402300799000000) AS valid_to_us
-        |FROM ch ORDER BY user_id, valid_from_us, event_type""".stripMargin,
-    // q_winsorize: quantile_cont == Spark percentile (proven by
-    // q_iqr_outliers); clamp on UNROUNDED bounds in both engines
-    "q_winsorize" ->
-      """WITH s AS (
-        |  SELECT event_type,
-        |         quantile_cont(value, 0.01) AS lo,
-        |         quantile_cont(value, 0.99) AS hi
-        |  FROM events GROUP BY event_type),
-        |w AS (SELECT e.event_type,
-        |             GREATEST(s.lo, LEAST(s.hi, e.value)) AS w
-        |      FROM events e JOIN s USING (event_type))
-        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |       ROUND(AVG(w), 6) AS wmean,
-        |       ROUND(STDDEV_SAMP(w), 6) AS wstd
-        |FROM w GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_vocab_coverage: same whitespace tokenization as q_tfidf; top-1000
-    // vocab cutoff deterministic via (count DESC, term) ordering
-    "q_vocab_coverage" ->
-      """WITH tok AS (
-        |  SELECT doc_id, lang,
-        |         unnest(list_filter(string_split_regex(trim(text), '\s+'),
-        |                            x -> len(x) > 0)) AS term
-        |  FROM documents),
-        |v AS (SELECT term FROM tok GROUP BY term
-        |      ORDER BY COUNT(*) DESC, term LIMIT 1000),
-        |d AS (SELECT t.doc_id, t.lang,
-        |             SUM(CASE WHEN v.term IS NULL THEN 1 ELSE 0 END)
-        |               * 1.0 / COUNT(*) AS oov
-        |      FROM tok t LEFT JOIN v ON t.term = v.term
-        |      GROUP BY t.doc_id, t.lang)
-        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |       ROUND(AVG(oov), 6) AS avg_oov
-        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_ab_assign: same portable md5 bucket as q_split_counts (first 12
-    // hex chars as integer mod 1e6); arm cut at bucket < 500000
-    "q_ab_assign" ->
-      """SELECT CASE WHEN CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)),
-        |                                      1, 12)) AS BIGINT)
-        |                  % 1000000 < 500000
-        |            THEN 'a' ELSE 'b' END AS arm,
-        |       event_type,
-        |       CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-        |       ROUND(AVG(value), 6) AS mean_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // q_decile_lift: DuckDB's native NTILE(10) over (n_ev DESC, user_id)
-    // replays the closed-form ANSI split from the distributed global rank
-    "q_decile_lift" ->
-      """WITH u AS (
-        |  SELECT user_id, COUNT(*) AS n_ev,
-        |         MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |           AS conv
-        |  FROM events GROUP BY user_id
-        |), d AS (
-        |  SELECT conv,
-        |         CAST(NTILE(10) OVER (ORDER BY n_ev DESC, user_id)
-        |              AS BIGINT) AS decile
-        |  FROM u
-        |), g AS (
-        |  SELECT decile, CAST(COUNT(*) AS BIGINT) AS n_users,
-        |         CAST(SUM(conv) AS BIGINT) AS n_conv
-        |  FROM d GROUP BY 1
-        |), c AS (
-        |  SELECT *,
-        |         CAST(SUM(n_users) OVER (ORDER BY decile ROWS BETWEEN
-        |              UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |           AS cum_users,
-        |         CAST(SUM(n_conv) OVER (ORDER BY decile ROWS BETWEEN
-        |              UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |           AS cum_conv,
-        |         CAST(SUM(n_users) OVER () AS BIGINT) AS tot_users,
-        |         CAST(SUM(n_conv) OVER () AS BIGINT) AS tot_conv
-        |  FROM g
-        |)
-        |SELECT decile, n_users, n_conv,
-        |       CAST(n_conv AS DOUBLE) / CAST(n_users AS DOUBLE) AS conv_rate,
-        |       CASE WHEN tot_conv > 0 THEN
-        |         (CAST(cum_conv AS DOUBLE) / CAST(cum_users AS DOUBLE)) /
-        |         (CAST(tot_conv AS DOUBLE) / CAST(tot_users AS DOUBLE))
-        |       END AS cum_lift
-        |FROM c ORDER BY decile""".stripMargin,
-    // q_media_headers: expected dims computed arithmetically — only a
-    // byte-correct PNG serialize+parse round trip matches
-    "q_media_headers" ->
-      """SELECT doc_id, TRUE AS sig_ok,
-        |       1 + doc_id % 640 AS width,
-        |       1 + (doc_id * 7) % 480 AS height,
-        |       CAST(29 AS BIGINT) AS n_bytes
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // q_ab_ztest: mirrored double chain over four exact counts; sqrt is
-    // IEEE-correctly-rounded in both engines so z is bit-identical
-    "q_ab_ztest" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |         MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |           AS conv
-        |  FROM events GROUP BY user_id
-        |), f AS (
-        |  SELECT (CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))
-        |               AS BIGINT) % 1000000 < 500000) AS is_a,
-        |         conv
-        |  FROM u
-        |), s AS (
-        |  SELECT CAST(SUM(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |         CAST(SUM(CASE WHEN NOT is_a THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-        |         CAST(SUM(CASE WHEN is_a THEN conv ELSE 0 END) AS BIGINT) AS c_a,
-        |         CAST(SUM(CASE WHEN NOT is_a THEN conv ELSE 0 END) AS BIGINT) AS c_b
-        |  FROM f
-        |), t AS (
-        |  SELECT *,
-        |         CASE WHEN n_a > 0
-        |              THEN CAST(c_a AS DOUBLE) / CAST(n_a AS DOUBLE) END AS p_a,
-        |         CASE WHEN n_b > 0
-        |              THEN CAST(c_b AS DOUBLE) / CAST(n_b AS DOUBLE) END AS p_b,
-        |         CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE) AS p
-        |  FROM s
-        |)
-        |SELECT n_a, n_b, c_a, c_b, p_a, p_b,
-        |       CASE WHEN n_a > 0 AND n_b > 0
-        |                 AND c_a + c_b > 0 AND c_a + c_b < n_a + n_b THEN
-        |         (p_a - p_b) /
-        |           SQRT(p * (CAST(1.0 AS DOUBLE) - p) *
-        |                (CAST(1.0 AS DOUBLE) / CAST(n_a AS DOUBLE) +
-        |                 CAST(1.0 AS DOUBLE) / CAST(n_b AS DOUBLE)))
-        |       END AS z
-        |FROM t""".stripMargin,
-    // q_rfm: DuckDB's native ntile over (metric DESC, cust) replays the
-    // engine's closed-form ANSI split from the distributed global rank
-    "q_rfm" ->
-      """WITH base AS (
-        |  SELECT o_custkey AS cust,
-        |         epoch_us(MAX(o_orderdate)) AS last_us,
-        |         COUNT(*) AS freq,
-        |         SUM(o_totalprice) AS mon
-        |  FROM orders GROUP BY 1),
-        |seg AS (
-        |  SELECT cust,
-        |         ntile(5) OVER (ORDER BY last_us DESC, cust) AS r_q,
-        |         ntile(5) OVER (ORDER BY freq DESC, cust) AS f_q,
-        |         ntile(5) OVER (ORDER BY mon DESC, cust) AS m_q
-        |  FROM base)
-        |SELECT r_q, f_q, m_q, CAST(COUNT(*) AS BIGINT) AS n_custs
-        |FROM seg GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    // q_cohort_ltv: integer month index (year*12+month) — no interval
-    // arithmetic to diverge; running total over the compact cohort grid
-    "q_cohort_ltv" ->
-      """WITH o AS (
-        |  SELECT o_custkey AS cust,
-        |         year(o_orderdate) * 12 + month(o_orderdate) AS m,
-        |         o_totalprice AS rev
-        |  FROM orders),
-        |c AS (SELECT cust, MIN(m) AS cm FROM o GROUP BY 1),
-        |g AS (SELECT c.cm, o.m - c.cm AS "offset",
-        |             SUM(o.rev) AS rev, COUNT(DISTINCT o.cust) AS n_custs
-        |      FROM o JOIN c USING (cust) GROUP BY 1, 2)
-        |SELECT cm AS cohort_month, "offset",
-        |       CAST(n_custs AS BIGINT) AS n_custs,
-        |       ROUND(rev, 4) AS rev,
-        |       ROUND(SUM(rev) OVER (PARTITION BY cm ORDER BY "offset"
-        |                            ROWS UNBOUNDED PRECEDING), 4) AS cum_rev
-        |FROM g ORDER BY 1, 2""".stripMargin,
-    // q_decay_score: exp/ln differ by at most 1 ulp per term between
-    // libm and the JVM; round(4) over O(100)-term sums absorbs it
-    "q_decay_score" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS us, value FROM events),
-        |a AS (SELECT MAX(us) AS max_us FROM e)
-        |SELECT user_id,
-        |       ROUND(SUM(value * exp(-ln(2) / 30.0
-        |                             * ((a.max_us - us) / 86400000000.0))),
-        |             4) AS score,
-        |       CAST(COUNT(*) AS BIGINT) AS n
-        |FROM e CROSS JOIN a
-        |GROUP BY user_id
-        |ORDER BY score DESC, user_id LIMIT 25""".stripMargin,
-    // q_mad_outliers: two exact-median passes (quantile_cont == Spark
-    // percentile); classification on UNROUNDED med/mad in both engines
-    "q_mad_outliers" ->
-      """WITH med AS (
-        |  SELECT event_type, quantile_cont(value, 0.5) AS med
-        |  FROM events GROUP BY 1),
-        |mad AS (
-        |  SELECT e.event_type,
-        |         quantile_cont(abs(e.value - med.med), 0.5) AS mad
-        |  FROM events e JOIN med USING (event_type) GROUP BY 1)
-        |SELECT e.event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |       ROUND(MAX(med.med), 6) AS med,
-        |       ROUND(MAX(mad.mad), 6) AS mad,
-        |       CAST(SUM(CASE WHEN abs(0.6745 * (e.value - med.med) / mad.mad)
-        |                          > 3.5
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        |FROM events e JOIN med USING (event_type) JOIN mad USING (event_type)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_time_to_event: first purchase at-or-after first signup; exact
-    // quartiles of the latency in hours
-    "q_time_to_event" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-        |su AS (SELECT user_id, MIN(us) AS s_us FROM e
-        |       WHERE event_type = 'signup' GROUP BY 1),
-        |cv AS (SELECT e.user_id,
-        |              (MIN(e.us) - MAX(su.s_us)) / 3600000000.0 AS hours
-        |       FROM e JOIN su USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.us >= su.s_us
-        |       GROUP BY 1)
-        |SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM su) AS n_signups,
-        |       CAST(COUNT(*) AS BIGINT) AS n_converted,
-        |       ROUND(quantile_cont(hours, 0.25), 6) AS p25_h,
-        |       ROUND(quantile_cont(hours, 0.5), 6) AS p50_h,
-        |       ROUND(quantile_cont(hours, 0.75), 6) AS p75_h
-        |FROM cv""".stripMargin,
-    // q_wow_growth: Monday-start date_trunc('week') in both engines;
-    // first week's growth is NULL in both
-    "q_wow_growth" ->
-      """WITH wk AS (
-        |  SELECT event_type, date_trunc('week', ts) AS wk,
-        |         COUNT(*) AS n, ROUND(SUM(value), 4) AS sum_value
-        |  FROM events GROUP BY 1, 2)
-        |SELECT event_type, epoch_us(wk) // 1000000 AS week_start,
-        |       CAST(n AS BIGINT) AS n, sum_value,
-        |       ROUND((n - lag(n) OVER (PARTITION BY event_type ORDER BY wk))
-        |             / lag(n) OVER (PARTITION BY event_type ORDER BY wk),
-        |             6) AS wow_growth
-        |FROM wk ORDER BY 1, 2""".stripMargin,
-    // q_zipf_slope: rank = row_number over (count DESC, term) == the
-    // engine's distributed global index + 1; ln == Spark log
-    "q_zipf_slope" ->
-      """WITH tok AS (
-        |  SELECT unnest(list_filter(string_split_regex(trim(text), '\s+'),
-        |                            x -> len(x) > 0)) AS term
-        |  FROM documents),
-        |f AS (SELECT term, COUNT(*) AS c FROM tok GROUP BY 1),
-        |r AS (SELECT c, row_number() OVER (ORDER BY c DESC, term) AS rnk
-        |      FROM f)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_terms,
-        |       ROUND(regr_slope(ln(c), ln(rnk)), 4) AS slope,
-        |       ROUND(regr_intercept(ln(c), ln(rnk)), 4) AS intercept
-        |FROM r""".stripMargin,
-    // q_data_profile: COUNT(DISTINCT raw) == the engine's distinct on the
-    // per-column string cast (injective per column); one branch per column
-    "q_data_profile" -> Seq(
-        "l_discount", "l_extendedprice", "l_linenumber", "l_linestatus",
-        "l_orderkey", "l_partkey", "l_quantity", "l_returnflag",
-        "l_shipdate", "l_suppkey", "l_tax")
-      .map(c =>
-        s"""SELECT '$c' AS col_name, CAST(COUNT(*) AS BIGINT) AS n,
-           |       CAST(COUNT(*) - COUNT($c) AS BIGINT) AS n_nulls,
-           |       CAST(COUNT(DISTINCT $c) AS BIGINT) AS n_distinct
-           |FROM lineitem""".stripMargin)
-      .mkString("", "\nUNION ALL\n", "\nORDER BY col_name"),
-    // q_embed_stats: generate_subscripts/unnest stay positionally aligned
-    // in DuckDB; float → double cast is exact in both engines
-    "q_embed_stats" ->
-      """WITH x AS (
-        |  SELECT generate_subscripts(embedding, 1) - 1 AS dim,
-        |         CAST(unnest(embedding) AS DOUBLE) AS x
-        |  FROM embeddings)
-        |SELECT CAST(dim AS BIGINT) AS dim, CAST(COUNT(*) AS BIGINT) AS n,
-        |       ROUND(MIN(x), 6) AS mn, ROUND(MAX(x), 6) AS mx,
-        |       ROUND(AVG(x), 6) AS mean, ROUND(STDDEV_SAMP(x), 6) AS std
-        |FROM x GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_overlap_matrix: md5 over the identical UTF-8 prefix bytes; source
-    // pair kept once via a.source < b.source
-    "q_overlap_matrix" ->
-      """WITH h AS (SELECT DISTINCT source, md5(substr(text, 1, 64)) AS fp
-        |           FROM documents)
-        |SELECT a.source AS src_a, b.source AS src_b,
-        |       CAST(COUNT(*) AS BIGINT) AS n_shared
-        |FROM h a JOIN h b ON a.fp = b.fp AND a.source < b.source
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // q_skyline: ¬∃-dominator definition replayed quadratically — the
-    // engine's grid prefix-max must produce the identical frontier
-    "q_skyline" ->
-      """WITH p AS (SELECT p_partkey, p_retailprice AS price, p_size AS size
-        |           FROM part)
-        |SELECT p_partkey, price, size FROM p a
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM p b
-        |  WHERE b.price <= a.price AND b.size >= a.size
-        |    AND (b.price < a.price OR b.size > a.size))
-        |ORDER BY price, size, p_partkey""".stripMargin,
-    // q_snapshot_diff: v2's mutation is value + 1 — IEEE-exact in both
-    // engines, so the changed-set classification is bitwise identical
-    "q_snapshot_diff" ->
-      """WITH v1 AS (SELECT event_id, value AS v1 FROM events
-        |            WHERE event_id % 10 <> 0),
-        |v2 AS (SELECT event_id,
-        |              CASE WHEN event_id % 7 = 0 THEN value + 1
-        |                   ELSE value END AS v2
-        |       FROM events WHERE event_id % 13 <> 0),
-        |j AS (SELECT CASE WHEN v1.v1 IS NULL THEN 'added'
-        |                  WHEN v2.v2 IS NULL THEN 'removed'
-        |                  WHEN v1.v1 <> v2.v2 THEN 'changed'
-        |                  ELSE 'unchanged' END AS status,
-        |             COALESCE(v2.v2, 0) - COALESCE(v1.v1, 0) AS delta
-        |      FROM v1 FULL OUTER JOIN v2 USING (event_id))
-        |SELECT status, CAST(COUNT(*) AS BIGINT) AS n,
-        |       ROUND(SUM(delta), 4) AS net_delta
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_dataset_card: single-select aggregate card; unique ratio over the
-    // md5 text digest; same whitespace tokenization as q_tfidf
-    "q_dataset_card" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |       CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
-        |       CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
-        |       CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-        |       ROUND(AVG(n_chars), 4) AS mean_chars,
-        |       CAST(SUM(len(list_filter(string_split_regex(trim(text), '\s+'),
-        |                                x -> len(x) > 0))) AS BIGINT)
-        |         AS total_tokens,
-        |       ROUND(COUNT(DISTINCT md5(text)) * 1.0 / COUNT(*), 6)
-        |         AS unique_ratio
-        |FROM documents""".stripMargin,
-    // q_iqr_outliers: quantile_cont == Spark percentile (same linear
-    // interpolation); classification on UNROUNDED fences in both engines
-    "q_iqr_outliers" ->
-      """WITH s AS (
-        |  SELECT event_type,
-        |         quantile_cont(value, 0.25) AS q1,
-        |         quantile_cont(value, 0.75) AS q3
-        |  FROM events GROUP BY event_type),
-        |f AS (SELECT event_type, q1 - (q3 - q1) * 1.5 AS lo,
-        |             q3 + (q3 - q1) * 1.5 AS hi
-        |      FROM s)
-        |SELECT e.event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(SUM(CASE WHEN e.value < f.lo OR e.value > f.hi
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-        |       ROUND(MAX(f.lo), 6) AS lo, ROUND(MAX(f.hi), 6) AS hi
-        |FROM events e JOIN f USING (event_type)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_stream_sessionize: Append-mode session_window driven to full
-    // emission == batch gap sessionization at per-session grain (sentinel
-    // flush rows are user_id < 0 and filtered; boundary note — Spark
-    // starts a new session at ts >= prev+gap, the oracle at ts > prev+gap:
-    // they differ only at exact-µs equality, measure-zero on this data)
-    "q_stream_sessionize" ->
-      """WITH x AS (
-        |  SELECT user_id, ts, value,
-        |         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |                OR ts > lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-        |                        + INTERVAL '30 minutes'
-        |              THEN 1 ELSE 0 END AS new_session
-        |  FROM events),
-        |y AS (
-        |  SELECT user_id, ts, value,
-        |         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-        |                                ROWS UNBOUNDED PRECEDING) AS seq
-        |  FROM x)
-        |SELECT user_id, epoch_us(MIN(ts)) AS session_start_us,
-        |       CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       ROUND(SUM(value), 4) AS sum_value
-        |FROM y GROUP BY user_id, seq
-        |ORDER BY user_id, session_start_us""".stripMargin,
-    // q_stream_dedup: the staged feed duplicates every event; watermarked
-    // streaming dedup to completion == DISTINCT over the original table
-    // (duplicates are byte-identical, so full row content is checkable)
-    "q_stream_dedup" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type,
-        |       ROUND(value, 4) AS value
-        |FROM events ORDER BY event_id""".stripMargin,
-    // q_stream_enrich: stream-static broadcast left join to completion ==
-    // the batch left join
-    "q_stream_enrich" ->
-      """SELECT e.event_id, e.user_id, e.event_type,
-        |       c.c_mktsegment AS segment, c.c_nationkey AS nation
-        |FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-        |ORDER BY e.event_id""".stripMargin,
-    // q_schema_evolution: the two staged parquet generations split events
-    // by event_id parity (gen1 lacks `value`); the oracle reconstructs the
-    // same split arithmetically
-    "q_schema_evolution" ->
-      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       CAST(SUM(CASE WHEN event_id % 2 <> 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_with_value,
-        |       ROUND(SUM(CASE WHEN event_id % 2 <> 0 THEN value ELSE 0 END), 4)
-        |         AS sum_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_sessionize" ->
-      """WITH x AS (
-        |  SELECT user_id,
-        |         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |                OR ts > lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-        |                        + INTERVAL '30 minutes'
-        |              THEN 1 ELSE 0 END AS new_session
-        |  FROM events)
-        |SELECT user_id,
-        |       CAST(SUM(new_session) AS BIGINT) AS n_sessions,
-        |       CAST(COUNT(*) AS BIGINT) AS n_events
-        |FROM x GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // q_content_signature: identical md5-bucket row contribution; the
-    // concat must match Spark's cast-to-string forms exactly
-    "q_content_signature" ->
-      """SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM(CAST(('0x' || substr(md5(
-        |           o_orderkey || '|' || o_custkey || '|' || o_orderstatus
-        |           || '|' || CAST(ROUND(o_totalprice * 100) AS BIGINT)
-        |           || '|' || o_orderpriority), 1, 12)) AS BIGINT)
-        |         % 1099511627776) AS BIGINT) AS sig
-        |FROM orders GROUP BY 1 ORDER BY day""".stripMargin,
-    // q_target_encode: identical LOO arithmetic from the group sums
-    "q_target_encode" ->
-      """WITH b AS (
-        |  SELECT o_orderkey, o_orderpriority AS cat,
-        |         CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS t
-        |  FROM orders
-        |), g AS (
-        |  SELECT cat, CAST(SUM(t) AS BIGINT) AS gsum,
-        |         CAST(COUNT(*) AS BIGINT) AS gn
-        |  FROM b GROUP BY cat
-        |)
-        |SELECT o_orderkey, b.cat, CAST(t AS BIGINT) AS t,
-        |       CASE WHEN gn > 1 THEN
-        |         CAST(gsum - t AS DOUBLE) / CAST(gn - 1 AS DOUBLE)
-        |       END AS loo_mean
-        |FROM b JOIN g ON b.cat = g.cat
-        |ORDER BY o_orderkey""".stripMargin,
-    // q_growth_accounting: states replayed with window functions; churn
-    // only for observed weeks
-    "q_growth_accounting" ->
-      """WITH weekly AS (
-        |  SELECT DISTINCT user_id AS u,
-        |         date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7
-        |           AS w
-        |  FROM events
-        |), fw AS (SELECT u, MIN(w) AS fw FROM weekly GROUP BY u),
-        |st AS (
-        |  SELECT wk.w,
-        |         CASE WHEN wk.w = fw.fw THEN 'new'
-        |              WHEN p.u IS NOT NULL THEN 'retained'
-        |              ELSE 'resurrected' END AS state
-        |  FROM weekly wk
-        |  JOIN fw ON wk.u = fw.u
-        |  LEFT JOIN weekly p ON p.u = wk.u AND p.w = wk.w - 1
-        |), agg AS (
-        |  SELECT w,
-        |    CAST(SUM(CASE WHEN state = 'new' THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_new,
-        |    CAST(SUM(CASE WHEN state = 'retained' THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_retained,
-        |    CAST(SUM(CASE WHEN state = 'resurrected' THEN 1 ELSE 0 END)
-        |         AS BIGINT) AS n_resurrected
-        |  FROM st GROUP BY w
-        |), ch AS (
-        |  SELECT p.w + 1 AS w, CAST(COUNT(*) AS BIGINT) AS n_churned
-        |  FROM weekly p
-        |  LEFT JOIN weekly c ON c.u = p.u AND c.w = p.w + 1
-        |  WHERE c.u IS NULL AND p.w + 1 IN (SELECT w FROM weekly)
-        |  GROUP BY 1
-        |)
-        |SELECT agg.w AS week, n_new, n_retained, n_resurrected,
-        |       COALESCE(ch.n_churned, 0) AS n_churned
-        |FROM agg LEFT JOIN ch ON agg.w = ch.w
-        |ORDER BY week""".stripMargin,
-    // q_session_window: >= at the gap boundary (session spans
-    // [first, last+gap)) — vs q_sessionize's manual > formulation
-    "q_session_window" ->
-      """WITH x AS (
-        |  SELECT user_id,
-        |         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |                OR ts >= lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-        |                        + INTERVAL '30 minutes'
-        |              THEN 1 ELSE 0 END AS new_session
-        |  FROM events)
-        |SELECT user_id,
-        |       CAST(SUM(new_session) AS BIGINT) AS n_sessions,
-        |       CAST(COUNT(*) AS BIGINT) AS n_events
-        |FROM x GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // q_observe: the observed single-pass metrics, recomputed directly
-    "q_observe" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty,
-        |       CAST(COUNT(CASE WHEN l_discount > 0.05 THEN 1 END) AS BIGINT)
-        |         AS n_disc_gt5
-        |FROM lineitem""".stripMargin,
-    // q_variant: DuckDB's native JSON reader extracts the same path the
-    // VARIANT decode serves on the Spark side; measures all exact.
-    // Decade is FLOOR-mod on both sides (Spark pmod(k,10) is
-    // always-positive; DuckDB % truncates toward zero, so the oracle
-    // normalizes: ((k % 10) + 10) % 10 — ADVICE r11: without this the
-    // two sides diverge for negative k, e.g. -13 → -20 vs -10).
-    "q_variant" ->
-      """WITH x AS (
-        |  SELECT CAST(json_extract(props, '$.k') AS BIGINT) AS k, value
-        |  FROM events)
-        |SELECT k - (((k % 10) + 10) % 10) AS k_decade,
-        |       CAST(COUNT(*) AS BIGINT) AS n,
-        |       MIN(k) AS min_k, MAX(k) AS max_k,
-        |       CAST(SUM(CAST(ROUND(value * 10000) AS BIGINT)) AS BIGINT)
-        |         AS sum_value_u4
-        |FROM x GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_events_json" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-    // q_bloom_prefilter: the bloom probe is plan traffic, not semantics —
-    // the oracle is the plain exact semi-join
-    "q_bloom_prefilter" ->
-      """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_items,
-        |       SUM(l_quantity) AS sum_qty
-        |FROM lineitem
-        |WHERE l_orderkey IN (SELECT o_orderkey FROM orders
-        |                     WHERE o_orderpriority = '1-URGENT')
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_funnel" ->
-      """WITH v AS (
-        |  SELECT user_id, MIN(ts) AS t_view FROM events
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |c AS (
-        |  SELECT e.user_id, MIN(e.ts) AS t_click
-        |  FROM events e JOIN v ON e.user_id = v.user_id
-        |  WHERE e.event_type = 'click' AND e.ts > v.t_view
-        |  GROUP BY e.user_id),
-        |p AS (
-        |  SELECT e.user_id, MIN(e.ts) AS t_purchase
-        |  FROM events e JOIN c ON e.user_id = c.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts > c.t_click
-        |  GROUP BY e.user_id)
-        |SELECT stage, CAST(COUNT(*) AS BIGINT) AS n_users FROM (
-        |  SELECT CAST(1 AS INT) AS stage, user_id FROM v
-        |  UNION ALL SELECT CAST(2 AS INT), user_id FROM c
-        |  UNION ALL SELECT CAST(3 AS INT), user_id FROM p)
-        |GROUP BY stage ORDER BY stage""".stripMargin,
-    "q_retention" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
-        |cohort AS (SELECT user_id, MIN(day) AS cohort_day FROM e GROUP BY user_id),
-        |x AS (
-        |  SELECT e.user_id, c.cohort_day,
-        |         CAST(datediff('day', c.cohort_day, e.day) AS INT) AS day_offset
-        |  FROM e JOIN cohort c ON e.user_id = c.user_id)
-        |SELECT strftime(cohort_day, '%Y-%m-%d') AS cohort_day, day_offset,
-        |       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM x WHERE day_offset IN (0, 1, 7, 14)
-        |GROUP BY cohort_day, day_offset ORDER BY cohort_day, day_offset""".stripMargin,
-    // q_pagerank: the same 5-step power iteration unrolled as chained CTEs
-    // (recursive CTEs cannot aggregate over their own recursive term).
-    // VALID ONLY FOR SYMMETRIZED EDGE LISTS: each r_i groups by e.dst, so a
-    // vertex with out-edges but no in-edges would silently vanish from the
-    // CTE chain — here symmetrization guarantees every src is also a dst
-    // (the operator itself handles source-only vertices via its left join
-    // onto the full vertex set; OperatorPropertySpec pins that). Do not
-    // reuse this CTE shape on a directed graph.
-    "q_pagerank" ->
-      """WITH cs AS (
-        |  SELECT DISTINCT o_custkey AS cust, 1000000 + l_suppkey AS supp
-        |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        |  WHERE o_orderpriority = '1-URGENT'),
-        |edges AS (SELECT cust AS src, supp AS dst FROM cs
-        |          UNION ALL SELECT supp, cust FROM cs),
-        |deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
-        |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM deg),
-        |r0 AS (SELECT src AS id, 1.0 / nn.n AS rank FROM deg, nn),
-        |r1 AS (SELECT e.dst AS id, 0.15 / MAX(nn.n) + 0.85 * SUM(r.rank / d.deg) AS rank
-        |       FROM edges e JOIN deg d ON e.src = d.src JOIN r0 r ON e.src = r.id, nn
-        |       GROUP BY e.dst),
-        |r2 AS (SELECT e.dst AS id, 0.15 / MAX(nn.n) + 0.85 * SUM(r.rank / d.deg) AS rank
-        |       FROM edges e JOIN deg d ON e.src = d.src JOIN r1 r ON e.src = r.id, nn
-        |       GROUP BY e.dst),
-        |r3 AS (SELECT e.dst AS id, 0.15 / MAX(nn.n) + 0.85 * SUM(r.rank / d.deg) AS rank
-        |       FROM edges e JOIN deg d ON e.src = d.src JOIN r2 r ON e.src = r.id, nn
-        |       GROUP BY e.dst),
-        |r4 AS (SELECT e.dst AS id, 0.15 / MAX(nn.n) + 0.85 * SUM(r.rank / d.deg) AS rank
-        |       FROM edges e JOIN deg d ON e.src = d.src JOIN r3 r ON e.src = r.id, nn
-        |       GROUP BY e.dst),
-        |r5 AS (SELECT e.dst AS id, 0.15 / MAX(nn.n) + 0.85 * SUM(r.rank / d.deg) AS rank
-        |       FROM edges e JOIN deg d ON e.src = d.src JOIN r4 r ON e.src = r.id, nn
-        |       GROUP BY e.dst)
-        |SELECT id, ROUND(rank, 8) AS rank FROM r5 ORDER BY id""".stripMargin,
-    // q_label_prop: the same 3 synchronous plurality rounds unrolled as
-    // chained CTEs; the argmax is replayed as a row_number window with
-    // the operator's exact order (cnt DESC, lbl ASC). Same symmetrized-
-    // edges caveat as q_pagerank: each round groups by e.dst.
-    "q_label_prop" ->
-      """WITH cs AS (
-        |  SELECT DISTINCT o_custkey AS cust, 1000000 + l_suppkey AS supp
-        |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        |  WHERE o_orderpriority = '1-URGENT'),
-        |edges AS (SELECT cust AS src, supp AS dst FROM cs
-        |          UNION ALL SELECT supp, cust FROM cs),
-        |l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM edges),
-        |t1 AS (SELECT e.dst AS id, l.lbl, COUNT(*) AS cnt
-        |       FROM edges e JOIN l0 l ON e.src = l.id GROUP BY 1, 2),
-        |l1 AS (SELECT id, lbl FROM (
-        |         SELECT id, lbl, ROW_NUMBER() OVER (PARTITION BY id
-        |           ORDER BY cnt DESC, lbl ASC) AS rn FROM t1) z
-        |       WHERE rn = 1),
-        |t2 AS (SELECT e.dst AS id, l.lbl, COUNT(*) AS cnt
-        |       FROM edges e JOIN l1 l ON e.src = l.id GROUP BY 1, 2),
-        |l2 AS (SELECT id, lbl FROM (
-        |         SELECT id, lbl, ROW_NUMBER() OVER (PARTITION BY id
-        |           ORDER BY cnt DESC, lbl ASC) AS rn FROM t2) z
-        |       WHERE rn = 1),
-        |t3 AS (SELECT e.dst AS id, l.lbl, COUNT(*) AS cnt
-        |       FROM edges e JOIN l2 l ON e.src = l.id GROUP BY 1, 2),
-        |l3 AS (SELECT id, lbl FROM (
-        |         SELECT id, lbl, ROW_NUMBER() OVER (PARTITION BY id
-        |           ORDER BY cnt DESC, lbl ASC) AS rn FROM t3) z
-        |       WHERE rn = 1)
-        |SELECT id, lbl AS community FROM l3 ORDER BY id""".stripMargin,
-    "q_histogram" ->
-      """SELECT CAST(floor(l_extendedprice / 6000.0) AS INT) AS bucket,
-        |       CAST(COUNT(*) AS BIGINT) AS n,
-        |       ROUND(MIN(l_extendedprice), 2) AS lo,
-        |       ROUND(MAX(l_extendedprice), 2) AS hi
-        |FROM lineitem GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q_deciles" ->
-      """WITH t AS (
-        |  SELECT l_returnflag, l_extendedprice,
-        |         ntile(10) OVER (PARTITION BY l_returnflag
-        |           ORDER BY l_extendedprice, l_orderkey, l_linenumber,
-        |                    l_partkey, l_suppkey, l_quantity) AS decile
-        |  FROM lineitem)
-        |SELECT l_returnflag, decile, CAST(COUNT(*) AS BIGINT) AS n,
-        |       ROUND(MIN(l_extendedprice), 2) AS lo,
-        |       ROUND(MAX(l_extendedprice), 2) AS hi
-        |FROM t GROUP BY l_returnflag, decile
-        |ORDER BY l_returnflag, decile""".stripMargin,
-    "q_streaks" ->
-      """WITH days AS (
-        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |runs AS (
-        |  SELECT user_id,
-        |         day - CAST(row_number() OVER (
-        |           PARTITION BY user_id ORDER BY day) AS INT) AS grp
-        |  FROM days),
-        |streaks AS (
-        |  SELECT user_id, grp, COUNT(*) AS streak
-        |  FROM runs GROUP BY user_id, grp)
-        |SELECT user_id, CAST(MAX(streak) AS BIGINT) AS longest_streak
-        |FROM streaks GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // q_bm25: identical arithmetic tree and literals as the Spark side
-    // (ln/division/multiplication order), so the 6-decimal rounding agrees
-    // bit-for-bit. The one non-obvious cast: tf * 2.2 would be EXACT
-    // DECIMAL arithmetic in DuckDB (int x DECIMAL(2,1)), ~2 ulps from
-    // Spark's double product — CAST(2.2 AS DOUBLE) forces the same IEEE
-    // multiply. The other constants (0.25, 0.75, 0.5, 1.0) are
-    // binary-exact, and 1.2 multiplies an already-double operand, so they
-    // promote identically.
-    "q_bm25" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(trim(text), '\s+'),
-        |                     x -> len(x) > 0) AS toks
-        |  FROM documents),
-        |per_doc AS (
-        |  SELECT doc_id, len(toks) AS dl,
-        |         len(list_filter(toks, x -> x = 'hash'))  AS tf_hash,
-        |         len(list_filter(toks, x -> x = 'join'))  AS tf_join,
-        |         len(list_filter(toks, x -> x = 'merge')) AS tf_merge
-        |  FROM tok),
-        |stats AS (
-        |  SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl,
-        |         SUM(CASE WHEN tf_hash  > 0 THEN 1 ELSE 0 END) AS df_hash,
-        |         SUM(CASE WHEN tf_join  > 0 THEN 1 ELSE 0 END) AS df_join,
-        |         SUM(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END) AS df_merge
-        |  FROM per_doc)
-        |SELECT doc_id, bm25 FROM (
-        |  SELECT doc_id, ROUND(
-        |      ln((n_docs - df_hash + 0.5) / (df_hash + 0.5) + 1.0)
-        |        * (tf_hash * CAST(2.2 AS DOUBLE))
-        |        / (tf_hash + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |    + ln((n_docs - df_join + 0.5) / (df_join + 0.5) + 1.0)
-        |        * (tf_join * CAST(2.2 AS DOUBLE))
-        |        / (tf_join + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |    + ln((n_docs - df_merge + 0.5) / (df_merge + 0.5) + 1.0)
-        |        * (tf_merge * CAST(2.2 AS DOUBLE))
-        |        / (tf_merge + 1.2 * (0.25 + 0.75 * dl / avgdl)), 6) AS bm25
-        |  FROM per_doc, stats)
-        |WHERE bm25 > 0
-        |ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin,
-    "q_tfidf" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |         unnest(list_filter(string_split_regex(trim(text), '\s+'),
-        |                            x -> len(x) > 0)) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
-        |df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-        |n AS (SELECT COUNT(*) AS n_docs FROM documents),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term,
-        |         ROUND(tf.tf * ln(CAST(n.n_docs AS DOUBLE) / df.df), 6) AS score
-        |  FROM tf JOIN df USING (term), n)
-        |SELECT doc_id, term AS top_term, score FROM (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY doc_id ORDER BY score DESC, term) AS rn
-        |  FROM scored)
-        |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    // q_entropy: H = ln(n) - sum(c*ln c)/n over per-doc term counts — each
-    // ln applied to an exact integer, one division at the end, identical
-    // IEEE expression in both engines
-    "q_entropy" ->
-      """WITH tf AS (
-        |  SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM (SELECT doc_id,
-        |               unnest(list_filter(string_split_regex(trim(text), '\s+'),
-        |                                  x -> len(x) > 0)) AS term
-        |        FROM documents)
-        |  GROUP BY doc_id, term),
-        |agg AS (
-        |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
-        |         SUM(c * ln(c)) AS clogc
-        |  FROM tf GROUP BY doc_id)
-        |SELECT doc_id, n_tokens,
-        |       ROUND(ln(n_tokens) - clogc / n_tokens, 6) AS entropy
-        |FROM agg ORDER BY doc_id""".stripMargin,
-    // q_lm_score: corpus-trained bigram LM (context counts), per-doc
-    // average log-likelihood; ln(c2/c1) written identically in both
-    // engines so the 6-decimal rounding compares exactly
-    "q_lm_score" ->
-      """WITH tok AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'),
-        |                             x -> len(x) > 0) AS l
-        |  FROM documents),
-        |inst AS (
-        |  SELECT doc_id, unnest(list_transform(generate_series(2, len(l)),
-        |                                       i -> [l[i-1], l[i]])) AS bg
-        |  FROM tok WHERE len(l) >= 2),
-        |perdoc AS (
-        |  SELECT doc_id, bg[1] AS w1, bg[2] AS w2, CAST(COUNT(*) AS BIGINT) AS k
-        |  FROM inst GROUP BY 1, 2, 3),
-        |c2 AS (SELECT w1, w2, CAST(SUM(k) AS BIGINT) AS c2 FROM perdoc GROUP BY 1, 2),
-        |c1 AS (SELECT w1, CAST(SUM(c2) AS BIGINT) AS c1 FROM c2 GROUP BY 1),
-        |lm AS (SELECT c2.w1, c2.w2, ln(c2.c2 / c1.c1) AS logp
-        |       FROM c2 JOIN c1 USING (w1))
-        |SELECT doc_id, CAST(SUM(k) AS BIGINT) AS n_bigrams,
-        |       ROUND(SUM(k * logp) / SUM(k), 6) AS avg_logp
-        |FROM perdoc JOIN lm USING (w1, w2)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // q_collocations: PMI from one bigram-count relation (start/end
-    // marginals + total), exact-integer ratio under ln, floor c >= 5
-    "q_collocations" ->
-      """WITH tok AS (
-        |  SELECT list_filter(string_split_regex(trim(text), '\s+'),
-        |                     x -> len(x) > 0) AS l
-        |  FROM documents),
-        |bgi AS (
-        |  SELECT unnest(list_transform(generate_series(2, len(l)),
-        |                               i -> [l[i-1], l[i]])) AS bg
-        |  FROM tok WHERE len(l) >= 2),
-        |bg AS (SELECT bg[1] AS w1, bg[2] AS w2, CAST(COUNT(*) AS BIGINT) AS c
-        |       FROM bgi GROUP BY 1, 2),
-        |cs AS (SELECT w1, CAST(SUM(c) AS BIGINT) AS cs FROM bg GROUP BY 1),
-        |ce AS (SELECT w2, CAST(SUM(c) AS BIGINT) AS ce FROM bg GROUP BY 1),
-        |n AS (SELECT CAST(SUM(c) AS BIGINT) AS n_bg FROM bg)
-        |SELECT w1, w2, c, ROUND(ln(n_bg * c / (cs.cs * ce.ce)), 6) AS pmi
-        |FROM bg JOIN cs USING (w1) JOIN ce USING (w2), n
-        |WHERE c >= 5
-        |ORDER BY pmi DESC, w1, w2 LIMIT 20""".stripMargin,
-    // q_dau_stickiness: exact distinct actives per day and week, ISO week
-    // numbers agree across engines on this data range
-    "q_dau_stickiness" ->
-      """WITH e AS (SELECT CAST(ts AS DATE) AS day, weekofyear(ts) AS week,
-        |                  user_id
-        |           FROM events),
-        |dau AS (SELECT week, day, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS dau
-        |        FROM e GROUP BY 1, 2),
-        |d2 AS (SELECT week, CAST(COUNT(*) AS BIGINT) AS n_days,
-        |              ROUND(AVG(dau), 4) AS avg_dau
-        |       FROM dau GROUP BY 1),
-        |wau AS (SELECT week, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS wau
-        |        FROM e GROUP BY 1)
-        |SELECT d2.week, n_days, avg_dau, wau.wau,
-        |       ROUND(avg_dau / wau.wau, 6) AS stickiness
-        |FROM d2 JOIN wau USING (week) ORDER BY week""".stripMargin,
-    "q_bigrams" ->
-      """WITH tok AS (
-        |  SELECT list_filter(string_split_regex(trim(text), '\s+'),
-        |                     x -> len(x) > 0) AS l
-        |  FROM documents),
-        |bg AS (
-        |  SELECT unnest(list_transform(generate_series(2, len(l)),
-        |                               i -> l[i-1] || ' ' || l[i])) AS bigram
-        |  FROM tok WHERE len(l) >= 2)
-        |SELECT bigram, CAST(COUNT(*) AS BIGINT) AS n
-        |FROM bg GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20""".stripMargin,
-    "q_dedup_exact" ->
-      """SELECT text, CAST(MIN(doc_id) AS BIGINT) AS keep_id,
-        |       CAST(COUNT(*) AS BIGINT) AS n_copies
-        |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin,
-    "q_dedup_normalized" ->
-      """SELECT trim(regexp_replace(regexp_replace(lower(text), '[^\p{L}\p{N} ]', '', 'g'),
-        |                           ' +', ' ', 'g')) AS norm_text,
-        |       CAST(MIN(doc_id) AS BIGINT) AS keep_id,
-        |       CAST(COUNT(*) AS BIGINT) AS n_copies
-        |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin,
-    // zero-norm guard mirrors the Spark side: 0/0 is NaN, and DuckDB (like
-    // Spark) orders NaN above every value — an unguarded oracle would rank
-    // a zero vector first / pair it with the whole corpus while the engine
-    // correctly emits cos = 0
-    "q_embed_topk" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |     q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |       CASE WHEN list_dot_product(e.v, e.v) = 0
-        |              OR list_dot_product(q.qv, q.qv) = 0 THEN 0.0
-        |            ELSE ROUND(list_dot_product(e.v, q.qv) /
-        |                       (sqrt(list_dot_product(e.v, e.v)) *
-        |                        sqrt(list_dot_product(q.qv, q.qv))), 6)
-        |       END AS cos
-        |FROM e, q ORDER BY cos DESC, id LIMIT 20""".stripMargin,
-    // ANN verdict rows: each approximate-top-k row emits the EXACT cosine
-    // top-20 (rank, id, cos) plus an in-plan recall verdict — the ANN ids
-    // themselves are seeded-hash/k-means artifacts no portable engine
-    // reproduces, so the oracle computes the exact side and asserts the
-    // recall guarantee as literal TRUE
-    "q_embed_lsh_topk" -> annVerdictOracleSql,
-    "q_ivf_topk" -> annVerdictOracleSql,
-    "q_pq_topk" -> annVerdictOracleSql,
-    "q_ivfpq_topk" -> annVerdictOracleSql,
-    // incremental ingest: conservation of the mod-designated batch is the
-    // portable side; valid-list landing is the in-plan verdict
-    "q_ivf_incremental" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_assigned, TRUE AS assign_ok
-        |FROM embeddings WHERE vec_id % 10 = 9""".stripMargin,
-    // q_auc: Mann-Whitney rank identity replayed over the same compact
-    // per-value domain; every sum is an exact integer, one final division
-    "q_auc" ->
-      """WITH cnt AS (
-        |  SELECT value,
-        |         CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |              AS BIGINT) AS p,
-        |         CAST(SUM(CASE WHEN event_type = 'purchase' THEN 0 ELSE 1 END)
-        |              AS BIGINT) AS n
-        |  FROM events GROUP BY value),
-        |w AS (
-        |  SELECT p, n,
-        |         COALESCE(CAST(SUM(n) OVER (ORDER BY value
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |           AS BIGINT), 0) AS n_below
-        |  FROM cnt),
-        |a AS (
-        |  SELECT CAST(SUM(p) AS BIGINT) AS n_pos,
-        |         CAST(SUM(n) AS BIGINT) AS n_neg,
-        |         CAST(SUM(p * (2 * n_below + n)) AS BIGINT) AS u2
-        |  FROM w)
-        |SELECT n_pos, n_neg, ROUND(u2 / (2.0 * n_pos * n_neg), 6) AS auc
-        |FROM a""".stripMargin,
-    // q_calibration: ROW_NUMBER over the identical (value, event_id)
-    // order; bucket = idx*10 div n (exact in both engines — the double
-    // quotient cannot round across an integer for n < 2^26)
-    "q_calibration" ->
-      """WITH s AS (
-        |  SELECT value,
-        |         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS label,
-        |         ROW_NUMBER() OVER (ORDER BY value, event_id) - 1 AS idx,
-        |         COUNT(*) OVER () AS n_total
-        |  FROM events)
-        |SELECT CAST(idx * 10 // n_total AS BIGINT) AS decile,
-        |       CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(SUM(CAST(ROUND(value * 10000) AS BIGINT)) AS DOUBLE)
-        |         / CAST(COUNT(*) AS DOUBLE) / 10000.0 AS mean_score,
-        |       CAST(SUM(label) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS pos_rate
-        |FROM s GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_path_trigrams: LEAD over the identical (ts, event_id) intra-user
-    // order; deterministic top-20 tiebreak on the full trigram
-    "q_path_trigrams" ->
-      """WITH s AS (
-        |  SELECT event_type AS step1,
-        |         LEAD(event_type, 1) OVER (PARTITION BY user_id
-        |           ORDER BY ts, event_id) AS step2,
-        |         LEAD(event_type, 2) OVER (PARTITION BY user_id
-        |           ORDER BY ts, event_id) AS step3
-        |  FROM events)
-        |SELECT step1, step2, step3, CAST(COUNT(*) AS BIGINT) AS n
-        |FROM s WHERE step2 IS NOT NULL AND step3 IS NOT NULL
-        |GROUP BY 1, 2, 3
-        |ORDER BY n DESC, step1, step2, step3 LIMIT 20""".stripMargin,
-    // q_bpe_merges: per-position substr replay of the same pair
-    // extraction; identical [a-z]{2} gate and deterministic top-30
-    "q_bpe_merges" ->
-      """WITH pairs AS (
-        |  SELECT lower(substr(text, CAST(i AS INT), 2)) AS pair
-        |  FROM documents,
-        |       UNNEST(generate_series(1, len(text) - 1)) AS t(i))
-        |SELECT pair, CAST(COUNT(*) AS BIGINT) AS n
-        |FROM pairs WHERE regexp_matches(pair, '^[a-z]{2}$')
-        |GROUP BY pair ORDER BY n DESC, pair LIMIT 30""".stripMargin,
-    // q_bootstrap_ci: the portable md5 bucket reproduces the exact
-    // resample weights; integer n_eff, one rounded division per replicate
-    "q_bootstrap_ci" ->
-      """WITH x AS (
-        |  SELECT t.rep, e.value,
-        |         CAST(('0x' || substr(md5('boot|' || CAST(e.event_id AS VARCHAR)
-        |                || '|' || CAST(t.rep AS VARCHAR)), 1, 12)) AS BIGINT)
-        |           % 1000000 AS u
-        |  FROM events e, (SELECT CAST(range AS INT) AS rep FROM range(32)) t
-        |  WHERE e.event_type = 'purchase'),
-        |wts AS (
-        |  SELECT rep, value,
-        |         CASE WHEN u < 367879 THEN 0 WHEN u < 735759 THEN 1
-        |              WHEN u < 919699 THEN 2 WHEN u < 981012 THEN 3
-        |              ELSE 4 END AS w
-        |  FROM x)
-        |SELECT rep, CAST(SUM(w) AS BIGINT) AS n_eff,
-        |       ROUND(SUM(w * value) / SUM(w), 6) AS mean_value
-        |FROM wts GROUP BY rep ORDER BY rep""".stripMargin,
-    // q_kmeans: the two Lloyd iterations replayed long-form; iteration-1
-    // centroids rounded to 6 decimals in BOTH engines so iteration 2
-    // starts from bit-identical state; argmin ties break on cluster id
-    "q_kmeans" ->
-      """WITH pts AS (
-        |  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS pos,
-        |         CAST(unnest(embedding) AS DOUBLE) AS x
-        |  FROM embeddings),
-        |cent0 AS (
-        |  SELECT CAST(vec_id AS INT) AS cluster, pos, x AS c
-        |  FROM pts WHERE vec_id < 4),
-        |d1 AS (
-        |  SELECT p.vec_id, c.cluster, SUM((p.x - c.c) * (p.x - c.c)) AS dist
-        |  FROM pts p JOIN cent0 c ON p.pos = c.pos GROUP BY 1, 2),
-        |a1 AS (
-        |  SELECT vec_id, cluster FROM (
-        |    SELECT vec_id, cluster,
-        |           ROW_NUMBER() OVER (PARTITION BY vec_id
-        |             ORDER BY dist, cluster) AS rn
-        |    FROM d1) WHERE rn = 1),
-        |cent1 AS (
-        |  SELECT a.cluster, p.pos, ROUND(AVG(p.x), 6) AS c
-        |  FROM pts p JOIN a1 a ON p.vec_id = a.vec_id GROUP BY 1, 2),
-        |d2 AS (
-        |  SELECT p.vec_id, c.cluster, SUM((p.x - c.c) * (p.x - c.c)) AS dist
-        |  FROM pts p JOIN cent1 c ON p.pos = c.pos GROUP BY 1, 2),
-        |a2 AS (
-        |  SELECT vec_id, cluster, dist FROM (
-        |    SELECT vec_id, cluster, dist,
-        |           ROW_NUMBER() OVER (PARTITION BY vec_id
-        |             ORDER BY dist, cluster) AS rn
-        |    FROM d2) WHERE rn = 1)
-        |SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_members,
-        |       ROUND(SUM(dist), 4) AS inertia
-        |FROM a2 GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_ab_srm: same md5 arm bucket as q_ab_assign; the chi-square
-    // collapses to (n_a-n_b)^2/(n_a+n_b) — integers until one division
-    "q_ab_srm" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |         CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))
-        |           AS BIGINT) % 1000000 < 500000 AS is_a
-        |  FROM events)
-        |SELECT CAST(COUNT(DISTINCT CASE WHEN is_a THEN user_id END)
-        |            AS BIGINT) AS n_a,
-        |       CAST(COUNT(DISTINCT CASE WHEN NOT is_a THEN user_id END)
-        |            AS BIGINT) AS n_b,
-        |       ROUND((n_a - n_b) * (n_a - n_b) / CAST(n_a + n_b AS DOUBLE), 6)
-        |         AS chi2
-        |FROM u""".stripMargin,
-    // q_token_budget: same greedy order (quality desc, size desc, source)
-    // and integer token arithmetic; the budget subquery is the 1-row total
-    "q_token_budget" ->
-      """WITH src AS (
-        |  SELECT source, CAST(SUM(n_chars // 4) AS BIGINT) AS src_tokens,
-        |         COUNT(DISTINCT md5(text)) / CAST(COUNT(*) AS DOUBLE)
-        |           AS unique_ratio
-        |  FROM documents GROUP BY source),
-        |b AS (SELECT CAST(SUM(src_tokens) * 3 // 10 AS BIGINT) AS budget
-        |      FROM src),
-        |cum AS (
-        |  SELECT source, src_tokens, unique_ratio,
-        |         COALESCE(CAST(SUM(src_tokens) OVER (
-        |           ORDER BY unique_ratio DESC, src_tokens DESC, source
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |           AS BIGINT), 0) AS cum_before
-        |  FROM src)
-        |SELECT source, src_tokens, ROUND(unique_ratio, 6) AS unique_ratio,
-        |       GREATEST(0, LEAST(src_tokens,
-        |                         (SELECT budget FROM b) - cum_before))
-        |         AS allocated
-        |FROM cum ORDER BY source""".stripMargin,
-    // q_out_of_order: identical md5 arrival jitter, per-user cumulative
-    // high-watermark, integer-microsecond lateness
-    "q_out_of_order" ->
-      """WITH x AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
-        |         epoch_us(ts) +
-        |           (CAST(('0x' || substr(md5('j|' || CAST(event_id AS VARCHAR)),
-        |                  1, 12)) AS BIGINT) % 7200000000 - 3600000000)
-        |           AS arrival_us
-        |  FROM events),
-        |y AS (
-        |  SELECT event_type, us,
-        |         MAX(us) OVER (PARTITION BY user_id
-        |           ORDER BY arrival_us, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) - us
-        |           AS late_us
-        |  FROM x)
-        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(SUM(CASE WHEN late_us > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_ooo,
-        |       CAST(COALESCE(MAX(CASE WHEN late_us > 0 THEN late_us END), 0)
-        |            // 1000000 AS BIGINT) AS max_late_s
-        |FROM y GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // q_funnel_windowed: the same three stage reductions with the 12h
-    // bound as a plain timestamp comparison in each stage join
-    "q_funnel_windowed" ->
-      """WITH v AS (
-        |  SELECT user_id, MIN(ts) AS t_view FROM events
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |c AS (
-        |  SELECT e.user_id, MIN(e.ts) AS t_click
-        |  FROM events e JOIN v ON e.user_id = v.user_id
-        |  WHERE e.event_type = 'click' AND e.ts > v.t_view
-        |    AND e.ts <= v.t_view + INTERVAL 12 HOUR
-        |  GROUP BY e.user_id),
-        |p AS (
-        |  SELECT e.user_id, MIN(e.ts) AS t_purchase
-        |  FROM events e JOIN c ON e.user_id = c.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts > c.t_click
-        |    AND e.ts <= c.t_click + INTERVAL 12 HOUR
-        |  GROUP BY e.user_id)
-        |SELECT stage, CAST(COUNT(*) AS BIGINT) AS n_users FROM (
-        |  SELECT 1 AS stage, user_id FROM v
-        |  UNION ALL SELECT 2, user_id FROM c
-        |  UNION ALL SELECT 3, user_id FROM p)
-        |GROUP BY stage ORDER BY stage""".stripMargin,
-    // q_graph_degree_dist: the q_dup_clusters exact pair set replayed,
-    // then two integer counting aggregates
-    "q_graph_degree_dist" ->
-      """WITH sh AS (
-        |  SELECT doc_id AS id,
-        |         CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |              ELSE list_distinct([concat_ws(' ', t[i], t[i+1], t[i+2])
-        |                                  for i in generate_series(1, len(t) - 2)])
-        |         END AS g
-        |  FROM (SELECT doc_id,
-        |               list_filter(string_split_regex(lower(text), '\s+'),
-        |                           x -> len(x) > 0) AS t
-        |        FROM documents)),
-        |posting AS (SELECT id, unnest(g) AS gram FROM sh),
-        |sizes AS (SELECT id, len(g) AS n_sh FROM sh),
-        |shared AS (SELECT gram FROM posting
-        |           GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 10000),
-        |pruned AS (SELECT id, gram FROM posting JOIN shared USING (gram)),
-        |inter AS (
-        |  SELECT a.id AS id_a, b.id AS id_b, CAST(COUNT(*) AS BIGINT) AS n_inter
-        |  FROM pruned a JOIN pruned b USING (gram)
-        |  WHERE a.id < b.id GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT i.id_a, i.id_b
-        |  FROM inter i
-        |  JOIN sizes sa ON i.id_a = sa.id
-        |  JOIN sizes sb ON i.id_b = sb.id
-        |  WHERE CAST(i.n_inter AS DOUBLE) /
-        |        CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE) >= 0.5),
-        |deg AS (
-        |  SELECT id, CAST(COUNT(*) AS BIGINT) AS deg
-        |  FROM (SELECT id_a AS id FROM pairs
-        |        UNION ALL SELECT id_b FROM pairs)
-        |  GROUP BY id)
-        |SELECT deg, CAST(COUNT(*) AS BIGINT) AS n_nodes
-        |FROM deg GROUP BY deg ORDER BY deg""".stripMargin,
-    // q_quantile_normalize: identical (n-1)*d div 10 target ranks joined
-    // back on (source, rank); integer boundaries throughout
-    "q_quantile_normalize" ->
-      """WITH ranked AS (
-        |  SELECT source, doc_id, n_chars,
-        |         ROW_NUMBER() OVER (PARTITION BY source
-        |           ORDER BY n_chars, doc_id) - 1 AS r,
-        |         COUNT(*) OVER (PARTITION BY source) AS n
-        |  FROM documents),
-        |t AS (SELECT DISTINCT source, n FROM ranked),
-        |targets AS (
-        |  SELECT source, CAST(d.decile AS INT) AS decile,
-        |         CAST((n - 1) * d.decile // 10 AS BIGINT) AS r
-        |  FROM t, (SELECT range AS decile FROM range(1, 10)) d)
-        |SELECT ranked.source, decile, n_chars AS boundary
-        |FROM ranked
-        |JOIN targets ON ranked.source = targets.source AND ranked.r = targets.r
-        |ORDER BY ranked.source, decile""".stripMargin,
-    // q_changepoint: closed-form two-segment SSE from cumulative integer
-    // sums; identical operand order keeps the argmin engine-independent
-    "q_changepoint" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1),
-        |cum AS (
-        |  SELECT day,
-        |         CAST(SUM(c) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-        |              AS BIGINT) AS s1,
-        |         CAST(SUM(c * c) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-        |              AS BIGINT) AS s2,
-        |         CAST(SUM(c) OVER () AS BIGINT) AS t1,
-        |         CAST(SUM(c * c) OVER () AS BIGINT) AS t2,
-        |         CAST(COUNT(*) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-        |              AS BIGINT) AS k,
-        |         CAST(COUNT(*) OVER () AS BIGINT) AS n
-        |  FROM daily),
-        |sse AS (
-        |  SELECT day, k, n, s1, t1,
-        |         (s2 - s1 * s1 / CAST(k AS DOUBLE)) +
-        |         (t2 - s2 - (t1 - s1) * (t1 - s1) / CAST(n - k AS DOUBLE))
-        |           AS sse
-        |  FROM cum WHERE k < n),
-        |best AS (SELECT * FROM sse ORDER BY sse, day LIMIT 1)
-        |SELECT strftime(day, '%Y-%m-%d') AS split_day, n AS n_days,
-        |       ROUND(s1 / CAST(k AS DOUBLE), 4) AS mean_before,
-        |       ROUND((t1 - s1) / CAST(n - k AS DOUBLE), 4) AS mean_after,
-        |       ROUND(sse, 4) AS sse
-        |FROM best""".stripMargin,
-    // q_event_gaps: same per-user lag and integer-second bands; band
-    // means are exact integer ratios
-    "q_event_gaps" ->
-      """WITH g AS (
-        |  SELECT (epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id
-        |            ORDER BY ts, event_id)) // 1000000 AS gap_s
-        |  FROM events)
-        |SELECT CASE WHEN gap_s < 60 THEN 'a_under_1m'
-        |            WHEN gap_s < 600 THEN 'b_1m_10m'
-        |            WHEN gap_s < 3600 THEN 'c_10m_1h'
-        |            WHEN gap_s < 21600 THEN 'd_1h_6h'
-        |            WHEN gap_s < 86400 THEN 'e_6h_1d'
-        |            ELSE 'f_over_1d' END AS band,
-        |       CAST(COUNT(*) AS BIGINT) AS n,
-        |       ROUND(AVG(gap_s), 4) AS mean_gap_s
-        |FROM g WHERE gap_s IS NOT NULL
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_containment_pairs: the q_ngram_jaccard counting construction with
-    // the min-size denominator; size ties resolve contained_id to id_a
-    "q_containment_pairs" ->
-      """WITH sh AS (
-        |  SELECT doc_id AS id,
-        |         CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |              ELSE list_distinct([concat_ws(' ', t[i], t[i+1], t[i+2])
-        |                                  for i in generate_series(1, len(t) - 2)])
-        |         END AS g
-        |  FROM (SELECT doc_id,
-        |               list_filter(string_split_regex(lower(text), '\s+'),
-        |                           x -> len(x) > 0) AS t
-        |        FROM documents)),
-        |posting AS (SELECT id, unnest(g) AS gram FROM sh),
-        |sizes AS (SELECT id, len(g) AS n_sh FROM sh),
-        |shared AS (SELECT gram FROM posting
-        |           GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 10000),
-        |pruned AS (SELECT id, gram FROM posting JOIN shared USING (gram)),
-        |inter AS (
-        |  SELECT a.id AS id_a, b.id AS id_b, CAST(COUNT(*) AS BIGINT) AS n_inter
-        |  FROM pruned a JOIN pruned b USING (gram)
-        |  WHERE a.id < b.id GROUP BY 1, 2)
-        |SELECT i.id_a, i.id_b,
-        |       ROUND(CAST(i.n_inter AS DOUBLE) /
-        |             CAST(LEAST(sa.n_sh, sb.n_sh) AS DOUBLE), 6) AS containment,
-        |       CASE WHEN sa.n_sh <= sb.n_sh THEN i.id_a ELSE i.id_b END
-        |         AS contained_id
-        |FROM inter i
-        |JOIN sizes sa ON i.id_a = sa.id
-        |JOIN sizes sb ON i.id_b = sb.id
-        |WHERE CAST(i.n_inter AS DOUBLE) /
-        |      CAST(LEAST(sa.n_sh, sb.n_sh) AS DOUBLE) >= 0.4
-        |ORDER BY id_a, id_b""".stripMargin,
-    // q_attribution: identical carry-forward window (rows preceding,
-    // ignore nulls) and integer-µs latency bands
-    "q_attribution" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, value, epoch_us(ts) AS us
-        |  FROM events),
-        |a AS (
-        |  SELECT *,
-        |         LAST_VALUE(CASE WHEN event_type = 'click' THEN us END
-        |                    IGNORE NULLS)
-        |           OVER (PARTITION BY user_id ORDER BY us, event_id
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |           AS click_us
-        |  FROM e)
-        |SELECT CASE WHEN click_us IS NULL THEN 'z_no_click'
-        |            WHEN us - click_us < 3600000000 THEN 'a_under_1h'
-        |            WHEN us - click_us < 86400000000 THEN 'b_1h_1d'
-        |            ELSE 'c_over_1d' END AS band,
-        |       CAST(COUNT(*) AS BIGINT) AS n_purchases,
-        |       ROUND(SUM(value), 4) AS total_value
-        |FROM a WHERE event_type = 'purchase'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_trend_test: S and the tie term are exact integer sums; identical
-    // (S∓1)/sqrt(var) continuity correction
-    "q_trend_test" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1),
-        |s AS (
-        |  SELECT CAST(SUM(SIGN(b.c - a.c)) AS BIGINT) AS s_stat
-        |  FROM daily a JOIN daily b ON a.day < b.day),
-        |t AS (
-        |  SELECT CAST(COALESCE(SUM(t * (t - 1) * (2 * t + 5)), 0) AS BIGINT)
-        |           AS tie_term
-        |  FROM (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM daily GROUP BY c)),
-        |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_days FROM daily),
-        |v AS (
-        |  SELECT n_days, s_stat,
-        |         (n_days * (n_days - 1) * (2 * n_days + 5) - tie_term) / 18.0
-        |           AS var_s
-        |  FROM n, s, t)
-        |SELECT n_days, s_stat, ROUND(var_s, 4) AS var_s,
-        |       ROUND(CASE WHEN s_stat > 0 THEN (s_stat - 1) / SQRT(var_s)
-        |                  WHEN s_stat < 0 THEN (s_stat + 1) / SQRT(var_s)
-        |                  ELSE 0.0 END, 4) AS z
-        |FROM v""".stripMargin,
-    // q_key_skew: per-key counts then one scalar aggregate; QUANTILE_CONT
-    // matches Spark's exact interpolated percentile
-    "q_key_skew" ->
-      """WITH cnt AS (
-        |  SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM lineitem GROUP BY 1)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
-        |       CAST(SUM(c) AS BIGINT) AS n_rows,
-        |       CAST(MAX(c) AS BIGINT) AS max_freq,
-        |       ROUND(QUANTILE_CONT(c, 0.5), 4) AS p50_freq,
-        |       ROUND(QUANTILE_CONT(c, 0.99), 4) AS p99_freq,
-        |       ROUND(MAX(c) * COUNT(*) / CAST(SUM(c) AS DOUBLE), 4)
-        |         AS skew_ratio
-        |FROM cnt""".stripMargin,
-    // q_orc_roundtrip: the roundtrip is the identity on these columns, so
-    // the oracle reads them straight off the parquet table
-    "q_orc_roundtrip" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value
-        |FROM events ORDER BY event_id""".stripMargin,
-    // q_naive_bayes: identical integer-quantized log-likelihoods
-    // (round(1e6·ln) once per value), so scores are exact BIGINT sums and
-    // the argmax cannot drift between engines
-    "q_naive_bayes" ->
-      """WITH tok AS (
-        |  SELECT doc_id, lang,
-        |         list_filter(string_split_regex(lower(text), '\s+'),
-        |                     x -> len(x) > 0) AS t
-        |  FROM documents),
-        |dtc AS (
-        |  SELECT doc_id, lang, w, CAST(COUNT(*) AS BIGINT) AS n_td
-        |  FROM (SELECT doc_id, lang, unnest(t) AS w FROM tok)
-        |  GROUP BY 1, 2, 3),
-        |v AS (SELECT CAST(COUNT(DISTINCT w) AS BIGINT) AS v FROM dtc),
-        |cw AS (SELECT lang AS cls, w, CAST(SUM(n_td) AS BIGINT) AS c
-        |       FROM dtc GROUP BY 1, 2),
-        |ca AS (SELECT cls,
-        |              CAST(ROUND(1e6 * LN(SUM(c) + (SELECT v FROM v)))
-        |                   AS BIGINT) AS a_denom
-        |       FROM cw GROUP BY cls),
-        |dpc AS (SELECT lang AS cls, CAST(COUNT(*) AS BIGINT) AS n_c
-        |        FROM documents GROUP BY 1),
-        |pri AS (SELECT cls,
-        |               CAST(ROUND(1e6 * LN(n_c)) AS BIGINT) -
-        |               CAST(ROUND(1e6 * LN((SELECT SUM(n_c) FROM dpc)))
-        |                    AS BIGINT) AS p_prior
-        |        FROM dpc),
-        |lik AS (SELECT cls, w, CAST(ROUND(1e6 * LN(c + 1)) AS BIGINT) AS l_tok
-        |        FROM cw),
-        |dtot AS (SELECT doc_id, MAX(lang) AS lang,
-        |                CAST(SUM(n_td) AS BIGINT) AS n_d
-        |         FROM dtc GROUP BY 1),
-        |seen AS (SELECT d.doc_id, l.cls,
-        |                CAST(SUM(d.n_td * l.l_tok) AS BIGINT) AS s_seen
-        |         FROM dtc d JOIN lik l USING (w) GROUP BY 1, 2),
-        |scored AS (
-        |  SELECT dtot.doc_id, dtot.lang, ca.cls,
-        |         pri.p_prior - dtot.n_d * ca.a_denom +
-        |           COALESCE(seen.s_seen, 0) AS score
-        |  FROM dtot CROSS JOIN ca
-        |  JOIN pri ON ca.cls = pri.cls
-        |  LEFT JOIN seen ON seen.doc_id = dtot.doc_id AND seen.cls = ca.cls),
-        |best AS (
-        |  SELECT lang, cls AS predicted,
-        |         ROW_NUMBER() OVER (PARTITION BY doc_id
-        |                            ORDER BY score DESC, cls) AS rn
-        |  FROM scored)
-        |SELECT lang, predicted, CAST(COUNT(*) AS BIGINT) AS n_docs
-        |FROM best WHERE rn = 1 GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // q_kaplan_meier: same day-granularity risk table; survival through
-    // exp∘Σln over d<n factors with the d=n zero made explicit (Spark's
-    // ln(0) is NULL, DuckDB's is -inf — the CASE removes the divergence)
-    "q_kaplan_meier" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-        |su AS (SELECT user_id, MIN(us) AS s_us FROM ev
-        |       WHERE event_type = 'signup' GROUP BY 1),
-        |endu AS (SELECT user_id, MAX(us) AS e_us FROM ev GROUP BY 1),
-        |pu AS (SELECT e.user_id, MIN(e.us) AS p_us
-        |       FROM ev e JOIN su ON e.user_id = su.user_id
-        |       WHERE e.event_type = 'purchase' AND e.us >= su.s_us
-        |       GROUP BY 1),
-        |subj AS (
-        |  SELECT CAST(FLOOR((COALESCE(p.p_us, en.e_us) - su.s_us) /
-        |              86400000000) AS BIGINT) AS t_days,
-        |         p.p_us IS NOT NULL AS converted
-        |  FROM su JOIN endu en USING (user_id) LEFT JOIN pu p USING (user_id)),
-        |byday AS (
-        |  SELECT t_days,
-        |         CAST(SUM(CASE WHEN converted THEN 1 ELSE 0 END) AS BIGINT)
-        |           AS d_events,
-        |         CAST(SUM(CASE WHEN converted THEN 0 ELSE 1 END) AS BIGINT)
-        |           AS c_censored
-        |  FROM subj GROUP BY 1),
-        |r AS (
-        |  SELECT t_days, d_events,
-        |         CAST(SUM(d_events + c_censored)
-        |              OVER (ORDER BY t_days ROWS BETWEEN CURRENT ROW AND
-        |                    UNBOUNDED FOLLOWING) AS BIGINT) AS n_risk
-        |  FROM byday),
-        |km AS (
-        |  SELECT t_days, n_risk, d_events,
-        |         CASE WHEN MAX(CASE WHEN d_events = n_risk THEN 1 ELSE 0 END)
-        |                OVER (ORDER BY t_days ROWS UNBOUNDED PRECEDING) = 1
-        |              THEN 0.0
-        |              ELSE EXP(SUM(CASE WHEN d_events < n_risk THEN
-        |                     LN(1.0 - d_events / CAST(n_risk AS DOUBLE)) END)
-        |                   OVER (ORDER BY t_days ROWS UNBOUNDED PRECEDING))
-        |         END AS survival
-        |  FROM r)
-        |SELECT t_days, n_risk, d_events, ROUND(survival, 6) AS survival
-        |FROM km WHERE d_events > 0 ORDER BY t_days""".stripMargin,
-    // q_k_anonymity: exact integer counts over the QI domain and bands
-    "q_k_anonymity" ->
-      """WITH g AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |         CAST(FLOOR(value / 10) AS BIGINT) AS vb,
-        |         CAST(COUNT(*) AS BIGINT) AS k
-        |  FROM events GROUP BY 1, 2, 3)
-        |SELECT CASE WHEN k < 5 THEN 'a_k_lt_5'
-        |            WHEN k < 20 THEN 'b_k_5_20'
-        |            ELSE 'c_k_ge_20' END AS band,
-        |       CAST(COUNT(*) AS BIGINT) AS n_groups,
-        |       CAST(SUM(k) AS BIGINT) AS n_rows
-        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_temporal_split: integer-µs cutoff arithmetic, one per-user pass
-    "q_temporal_split" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS us FROM events),
-        |b AS (SELECT MIN(us) + ((MAX(us) - MIN(us)) * 7) // 10 AS cut_us
-        |      FROM ev),
-        |f AS (
-        |  SELECT user_id,
-        |         SUM(CASE WHEN us <= (SELECT cut_us FROM b) THEN 1 ELSE 0 END)
-        |           AS n_tr,
-        |         SUM(CASE WHEN us > (SELECT cut_us FROM b) THEN 1 ELSE 0 END)
-        |           AS n_te
-        |  FROM ev GROUP BY 1)
-        |SELECT CAST(SUM(n_tr) AS BIGINT) AS n_train_rows,
-        |       CAST(SUM(n_te) AS BIGINT) AS n_test_rows,
-        |       CAST(SUM(CASE WHEN n_tr > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_train_users,
-        |       CAST(SUM(CASE WHEN n_te > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_test_users,
-        |       CAST(SUM(CASE WHEN n_tr > 0 AND n_te > 0 THEN 1 ELSE 0 END)
-        |            AS BIGINT) AS n_overlap_users
-        |FROM f""".stripMargin,
-    // q_pca_power: v0 = 0.125 is exact, both engines fold the 64-float
-    // row dot as doubles; loadings rounded once after normalization
-    "q_pca_power" ->
-      """WITH e AS (
-        |  SELECT vec_id,  embedding,
-        |         list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)))
-        |           * 0.125 AS z
-        |  FROM embeddings),
-        |y AS (
-        |  SELECT i - 1 AS dim, SUM(CAST(x AS DOUBLE) * z) AS y
-        |  FROM (SELECT z, unnest(embedding) AS x,
-        |               generate_subscripts(embedding, 1) AS i FROM e)
-        |  GROUP BY 1),
-        |n AS (SELECT SQRT(SUM(y * y)) AS nrm FROM y)
-        |SELECT CAST(dim AS BIGINT) AS dim, ROUND(y / nrm, 6) AS loading,
-        |       ROUND(nrm, 4) AS lambda
-        |FROM y, n ORDER BY dim""".stripMargin,
-    // q_balanced_sample: identical portable md5 shuffle order, so both
-    // engines pick the same 60-per-class subset bit-for-bit
-    "q_balanced_sample" ->
-      """WITH r AS (
-        |  SELECT lang, doc_id,
-        |         ROW_NUMBER() OVER (PARTITION BY lang
-        |           ORDER BY md5(concat('bal|', CAST(doc_id AS VARCHAR))),
-        |                    doc_id) AS rn
-        |  FROM documents)
-        |SELECT lang, doc_id FROM r WHERE rn <= 60
-        |ORDER BY lang, doc_id""".stripMargin,
-    // q_coverage_curve: same asc (n_chars, doc_id) rank; shares are exact
-    // integer sums divided once
-    "q_coverage_curve" ->
-      """WITH ranked AS (
-        |  SELECT n_chars,
-        |         ROW_NUMBER() OVER (ORDER BY n_chars, doc_id) - 1 AS idx,
-        |         COUNT(*) OVER () AS n,
-        |         SUM(n_chars) OVER () AS total
-        |  FROM documents)
-        |SELECT CAST(MAX(n) AS BIGINT) AS n_docs,
-        |       CAST(MAX(total) AS BIGINT) AS total_chars,
-        |       ROUND(SUM(CASE WHEN idx >= n - FLOOR(n * 1 / 100)
-        |                 THEN n_chars ELSE 0 END) /
-        |             CAST(MAX(total) AS DOUBLE), 6) AS share_top1,
-        |       ROUND(SUM(CASE WHEN idx >= n - FLOOR(n * 5 / 100)
-        |                 THEN n_chars ELSE 0 END) /
-        |             CAST(MAX(total) AS DOUBLE), 6) AS share_top5,
-        |       ROUND(SUM(CASE WHEN idx >= n - FLOOR(n * 10 / 100)
-        |                 THEN n_chars ELSE 0 END) /
-        |             CAST(MAX(total) AS DOUBLE), 6) AS share_top10,
-        |       ROUND(SUM(CASE WHEN idx >= n - FLOOR(n * 25 / 100)
-        |                 THEN n_chars ELSE 0 END) /
-        |             CAST(MAX(total) AS DOUBLE), 6) AS share_top25,
-        |       ROUND(SUM(CASE WHEN idx >= n - FLOOR(n * 50 / 100)
-        |                 THEN n_chars ELSE 0 END) /
-        |             CAST(MAX(total) AS DOUBLE), 6) AS share_top50
-        |FROM ranked""".stripMargin,
-    // q_dp_sensitivity: exact integer maxima; the per-user double sum is
-    // rounded only after the max
-    "q_dp_sensitivity" ->
-      """WITH ev AS (
-        |  SELECT user_id, CAST(ts AS DATE) AS day, value FROM events),
-        |pu AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |              SUM(value) AS v_sum
-        |       FROM ev GROUP BY 1),
-        |pud AS (SELECT user_id, CAST(MAX(n_day) AS BIGINT) AS max_day
-        |        FROM (SELECT user_id, day, COUNT(*) AS n_day
-        |              FROM ev GROUP BY 1, 2)
-        |        GROUP BY 1)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
-        |       CAST(MAX(n_rows) AS BIGINT) AS max_rows_per_user,
-        |       ROUND(QUANTILE_CONT(n_rows, 0.99), 4) AS p99_rows_per_user,
-        |       ROUND(MAX(v_sum), 4) AS max_value_sum_per_user,
-        |       CAST(MAX(max_day) AS BIGINT) AS max_rows_per_user_day
-        |FROM pu JOIN pud USING (user_id)""".stripMargin,
-    // q_label_centroids: dim-ordered centroid reassembly, then the same
-    // sequential-fold dot; one round after the division
-    "q_label_centroids" ->
-      """WITH x AS (
-        |  SELECT label, i - 1 AS i, AVG(CAST(v AS DOUBLE)) AS m
-        |  FROM (SELECT label, unnest(embedding) AS v,
-        |               generate_subscripts(embedding, 1) AS i
-        |        FROM embeddings)
-        |  GROUP BY 1, 2),
-        |c AS (SELECT label, array_agg(m ORDER BY i) AS c FROM x GROUP BY 1)
-        |SELECT a.label AS label_a, b.label AS label_b,
-        |       ROUND(CASE WHEN list_dot_product(a.c, a.c) = 0
-        |                    OR list_dot_product(b.c, b.c) = 0 THEN 0.0
-        |                  ELSE list_dot_product(a.c, b.c) /
-        |                       (sqrt(list_dot_product(a.c, a.c)) *
-        |                        sqrt(list_dot_product(b.c, b.c)))
-        |             END, 6) AS cos
-        |FROM c a JOIN c b ON a.label < b.label
-        |ORDER BY label_a, label_b""".stripMargin,
-    // q_hard_negatives: rank on the ROUNDED cosine with the vec_id
-    // tiebreak, identically in both engines
-    "q_hard_negatives" ->
-      """WITH x AS (
-        |  SELECT label, i - 1 AS i, AVG(CAST(v AS DOUBLE)) AS m
-        |  FROM (SELECT label, unnest(embedding) AS v,
-        |               generate_subscripts(embedding, 1) AS i
-        |        FROM embeddings)
-        |  GROUP BY 1, 2),
-        |c AS (SELECT label AS c_label, array_agg(m ORDER BY i) AS c
-        |      FROM x GROUP BY 1),
-        |s AS (
-        |  SELECT c.c_label, e.vec_id,
-        |         ROUND(CASE WHEN list_dot_product(c.c, c.c) = 0 THEN 0.0
-        |                    ELSE list_dot_product(
-        |                           list_transform(e.embedding,
-        |                                          v -> CAST(v AS DOUBLE)), c.c) /
-        |                         (sqrt(list_dot_product(
-        |                            list_transform(e.embedding,
-        |                                           v -> CAST(v AS DOUBLE)),
-        |                            list_transform(e.embedding,
-        |                                           v -> CAST(v AS DOUBLE)))) *
-        |                          sqrt(list_dot_product(c.c, c.c)))
-        |               END, 6) AS cos
-        |  FROM embeddings e JOIN c ON e.label <> c.c_label),
-        |r AS (SELECT c_label, vec_id, cos,
-        |             ROW_NUMBER() OVER (PARTITION BY c_label
-        |                                ORDER BY cos DESC, vec_id) AS rn
-        |      FROM s)
-        |SELECT c_label AS label, vec_id, cos FROM r WHERE rn <= 5
-        |ORDER BY label, vec_id""".stripMargin,
-    // q_knn_label_noise: same portable 30% hash sample; neighbor rank on
-    // raw dots (bit-identical sequential folds), vec_id tiebreak. The
-    // ANN-index-served suspect set is engine-specific (seeded k-means),
-    // so the oracle computes the exact side and asserts the recall floor
-    // as literal TRUE (the annRecallVerdict discipline)
-    "q_knn_label_noise" ->
-      """WITH e AS (
-        |  SELECT vec_id, label,
-        |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, label AS q_label, v AS qv FROM e
-        |      WHERE CAST(('0x' || substr(md5(concat('knn|',
-        |                  CAST(vec_id AS VARCHAR))), 1, 12)) AS BIGINT)
-        |            % 1000000 < 300000),
-        |s AS (
-        |  SELECT q.q_id, q.q_label, e.label, e.vec_id,
-        |         CASE WHEN list_dot_product(q.qv, q.qv) = 0
-        |                OR list_dot_product(e.v, e.v) = 0 THEN 0.0
-        |              ELSE list_dot_product(q.qv, e.v) /
-        |                   (sqrt(list_dot_product(q.qv, q.qv)) *
-        |                    sqrt(list_dot_product(e.v, e.v)))
-        |         END AS cos
-        |  FROM q JOIN e ON e.vec_id <> q.q_id),
-        |r AS (SELECT q_id, q_label, label,
-        |             ROW_NUMBER() OVER (PARTITION BY q_id
-        |                                ORDER BY cos DESC, vec_id) AS rn
-        |      FROM s)
-        |SELECT q_id, q_label, TRUE AS ann_ok FROM r WHERE rn <= 3
-        |GROUP BY q_id, q_label
-        |HAVING SUM(CASE WHEN label = q_label THEN 1 ELSE 0 END) = 0
-        |ORDER BY q_id""".stripMargin,
-    // q_hybrid_fusion: both scores in the q_bm25 operand order, both
-    // rankings on the ROUNDED score with doc_id tiebreak, RRF from the
-    // integer ranks
-    "q_hybrid_fusion" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(trim(text), '\s+'),
-        |                     x -> len(x) > 0) AS toks
-        |  FROM documents),
-        |per_doc AS (
-        |  SELECT doc_id, len(toks) AS dl,
-        |         len(list_filter(toks, x -> x = 'hash'))  AS tf_hash,
-        |         len(list_filter(toks, x -> x = 'join'))  AS tf_join,
-        |         len(list_filter(toks, x -> x = 'merge')) AS tf_merge
-        |  FROM tok),
-        |stats AS (
-        |  SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl,
-        |         SUM(CASE WHEN tf_hash  > 0 THEN 1 ELSE 0 END) AS df_hash,
-        |         SUM(CASE WHEN tf_join  > 0 THEN 1 ELSE 0 END) AS df_join,
-        |         SUM(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END) AS df_merge
-        |  FROM per_doc),
-        |scored AS (
-        |  SELECT doc_id,
-        |    ROUND(
-        |      ln((n_docs - df_hash + 0.5) / (df_hash + 0.5) + 1.0)
-        |        * (tf_hash * CAST(2.2 AS DOUBLE))
-        |        / (tf_hash + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |    + ln((n_docs - df_join + 0.5) / (df_join + 0.5) + 1.0)
-        |        * (tf_join * CAST(2.2 AS DOUBLE))
-        |        / (tf_join + 1.2 * (0.25 + 0.75 * dl / avgdl))
-        |    + ln((n_docs - df_merge + 0.5) / (df_merge + 0.5) + 1.0)
-        |        * (tf_merge * CAST(2.2 AS DOUBLE))
-        |        / (tf_merge + 1.2 * (0.25 + 0.75 * dl / avgdl)), 6) AS s_bm25,
-        |    ROUND(
-        |      CASE WHEN SQRT(tf_hash * tf_hash
-        |                       * ln(n_docs / (df_hash + 1.0))
-        |                       * ln(n_docs / (df_hash + 1.0))
-        |                   + tf_join * tf_join
-        |                       * ln(n_docs / (df_join + 1.0))
-        |                       * ln(n_docs / (df_join + 1.0))
-        |                   + tf_merge * tf_merge
-        |                       * ln(n_docs / (df_merge + 1.0))
-        |                       * ln(n_docs / (df_merge + 1.0))) = 0 THEN 0.0
-        |           ELSE (tf_hash * ln(n_docs / (df_hash + 1.0))
-        |                   * ln(n_docs / (df_hash + 1.0))
-        |               + tf_join * ln(n_docs / (df_join + 1.0))
-        |                   * ln(n_docs / (df_join + 1.0))
-        |               + tf_merge * ln(n_docs / (df_merge + 1.0))
-        |                   * ln(n_docs / (df_merge + 1.0)))
-        |             / (SQRT(tf_hash * tf_hash
-        |                       * ln(n_docs / (df_hash + 1.0))
-        |                       * ln(n_docs / (df_hash + 1.0))
-        |                   + tf_join * tf_join
-        |                       * ln(n_docs / (df_join + 1.0))
-        |                       * ln(n_docs / (df_join + 1.0))
-        |                   + tf_merge * tf_merge
-        |                       * ln(n_docs / (df_merge + 1.0))
-        |                       * ln(n_docs / (df_merge + 1.0)))
-        |                * SQRT(ln(n_docs / (df_hash + 1.0))
-        |                         * ln(n_docs / (df_hash + 1.0))
-        |                     + ln(n_docs / (df_join + 1.0))
-        |                         * ln(n_docs / (df_join + 1.0))
-        |                     + ln(n_docs / (df_merge + 1.0))
-        |                         * ln(n_docs / (df_merge + 1.0))))
-        |      END, 6) AS s_vec
-        |  FROM per_doc, stats),
-        |rb AS (SELECT doc_id, r_bm25 FROM (
-        |         SELECT doc_id,
-        |                ROW_NUMBER() OVER (ORDER BY s_bm25 DESC, doc_id)
-        |                  AS r_bm25
-        |         FROM scored WHERE s_bm25 > 0) WHERE r_bm25 <= 50),
-        |rv AS (SELECT doc_id, r_vec FROM (
-        |         SELECT doc_id,
-        |                ROW_NUMBER() OVER (ORDER BY s_vec DESC, doc_id)
-        |                  AS r_vec
-        |         FROM scored WHERE s_vec > 0) WHERE r_vec <= 50)
-        |SELECT doc_id,
-        |       CAST(COALESCE(r_bm25, 0) AS INT) AS r_bm25,
-        |       CAST(COALESCE(r_vec, 0) AS INT) AS r_vec,
-        |       ROUND(COALESCE(1.0 / (60 + r_bm25), 0.0) +
-        |             COALESCE(1.0 / (60 + r_vec), 0.0), 6) AS rrf
-        |FROM rb FULL OUTER JOIN rv USING (doc_id)
-        |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin,
-    // q_autocomplete: same lowercase tokenizer, char-based 3-prefix,
-    // all-desc (n, token) rank in both engines
-    "q_autocomplete" ->
-      """WITH t AS (
-        |  SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-        |                            x -> len(x) > 0)) AS t
-        |  FROM documents),
-        |c AS (SELECT substr(t, 1, 3) AS prefix, t, CAST(COUNT(*) AS BIGINT) AS n
-        |      FROM t WHERE len(t) >= 3 GROUP BY 1, 2),
-        |r AS (SELECT prefix, t AS token, n,
-        |             ROW_NUMBER() OVER (PARTITION BY prefix
-        |                                ORDER BY n DESC, t DESC) AS rn
-        |      FROM c)
-        |SELECT prefix, token, n FROM r WHERE rn <= 3 AND n >= 20
-        |ORDER BY prefix, token""".stripMargin,
-    // q_centroid_outliers: the q_label_centroids centroid CTE; rank on
-    // the rounded own-centroid cosine ascending, vec_id tiebreak
-    "q_centroid_outliers" ->
-      """WITH x AS (
-        |  SELECT label, i - 1 AS i, AVG(CAST(v AS DOUBLE)) AS m
-        |  FROM (SELECT label, unnest(embedding) AS v,
-        |               generate_subscripts(embedding, 1) AS i
-        |        FROM embeddings)
-        |  GROUP BY 1, 2),
-        |c AS (SELECT label, array_agg(m ORDER BY i) AS c FROM x GROUP BY 1),
-        |s AS (
-        |  SELECT e.label, e.vec_id,
-        |         ROUND(CASE WHEN list_dot_product(c.c, c.c) = 0 THEN 0.0
-        |                    ELSE list_dot_product(
-        |                           list_transform(e.embedding,
-        |                                          v -> CAST(v AS DOUBLE)), c.c) /
-        |                         (sqrt(list_dot_product(
-        |                            list_transform(e.embedding,
-        |                                           v -> CAST(v AS DOUBLE)),
-        |                            list_transform(e.embedding,
-        |                                           v -> CAST(v AS DOUBLE)))) *
-        |                          sqrt(list_dot_product(c.c, c.c)))
-        |               END, 6) AS cos
-        |  FROM embeddings e JOIN c USING (label)),
-        |r AS (SELECT label, vec_id, cos,
-        |             ROW_NUMBER() OVER (PARTITION BY label
-        |                                ORDER BY cos, vec_id) AS rn
-        |      FROM s)
-        |SELECT label, vec_id, cos FROM r WHERE rn <= 5
-        |ORDER BY label, vec_id""".stripMargin,
-    // q_tpch_q1: identical operand order in the derived measures; money
-    // sums round at 2, averages at 6
-    "q_tpch_q1" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty,
-        |       CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS DOUBLE)
-        |         / 100.0 AS sum_base_price,
-        |       CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) *
-        |                (100 - CAST(ROUND(l_discount * 100) AS BIGINT)))
-        |            AS DOUBLE) / 10000.0 AS sum_disc_price,
-        |       CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) *
-        |                (100 - CAST(ROUND(l_discount * 100) AS BIGINT)) *
-        |                (100 + CAST(ROUND(l_tax * 100) AS BIGINT)))
-        |            AS DOUBLE) / 1000000.0 AS sum_charge,
-        |       ROUND(AVG(l_quantity), 6) AS avg_qty,
-        |       ROUND(AVG(l_extendedprice), 6) AS avg_price,
-        |       ROUND(AVG(l_discount), 6) AS avg_disc,
-        |       CAST(COUNT(*) AS BIGINT) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    // q_peak_concurrency: same +1-before--1 sweep order (ties open before
-    // close, so touching intervals overlap); exact integer running sum
-    "q_peak_concurrency" ->
-      """WITH sess AS (
-        |  SELECT user_id, CAST(ts AS DATE) AS day,
-        |         MIN(epoch_us(ts)) AS s_us, MAX(epoch_us(ts)) AS e_us
-        |  FROM events GROUP BY 1, 2),
-        |b AS (
-        |  SELECT us, delta, CAST(COUNT(*) AS BIGINT) AS m FROM (
-        |    SELECT s_us AS us, 1 AS delta FROM sess
-        |    UNION ALL SELECT e_us, -1 FROM sess) GROUP BY 1, 2),
-        |sw AS (
-        |  SELECT us, delta,
-        |         CAST(SUM(delta * m) OVER (ORDER BY us, delta DESC
-        |              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS open
-        |  FROM b),
-        |best AS (SELECT open, us FROM sw
-        |         ORDER BY open DESC, us, delta DESC LIMIT 1)
-        |SELECT open AS peak_concurrent, CAST(us AS BIGINT) AS at_us
-        |FROM best""".stripMargin,
-    // q_weighted_median: explicit ROWS frame (both engines default to
-    // RANGE under ORDER BY, which merges price ties); quantity sums are
-    // whole numbers in doubles, so the 2·cum >= total test is exact
-    "q_weighted_median" ->
-      """WITH x AS (
-        |  SELECT l_returnflag, l_extendedprice,
-        |         SUM(l_quantity) OVER (PARTITION BY l_returnflag
-        |           ORDER BY l_extendedprice, l_orderkey, l_linenumber,
-        |                    l_partkey, l_suppkey, l_quantity
-        |           ROWS UNBOUNDED PRECEDING) AS cumw,
-        |         SUM(l_quantity) OVER (PARTITION BY l_returnflag) AS totw,
-        |         l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity
-        |  FROM lineitem),
-        |f AS (
-        |  SELECT l_returnflag, l_extendedprice, cumw, totw,
-        |         ROW_NUMBER() OVER (PARTITION BY l_returnflag
-        |           ORDER BY l_extendedprice, l_orderkey, l_linenumber,
-        |                    l_partkey, l_suppkey, l_quantity) AS rn
-        |  FROM x WHERE 2.0 * cumw >= totw)
-        |SELECT l_returnflag, l_extendedprice AS w_median,
-        |       CAST(cumw AS DOUBLE) AS cum_weight,
-        |       CAST(totw AS DOUBLE) AS total_weight
-        |FROM f WHERE rn = 1 ORDER BY l_returnflag""".stripMargin,
-    // q_stream_hll: UTC-day window start as integer epoch; exact side
-    // recomputed, sketch asserted as the literal-TRUE bound verdict
-    // q_stream_evict: same exact side as q_stream_hll; the sketch bound
-    // AND the state-eviction floor are asserted as literal-TRUE verdicts
-    "q_stream_evict" ->
-      """WITH w AS (
-        |  SELECT (epoch_us(ts) // 86400000000) * 86400 AS window_start,
-        |         user_id
-        |  FROM events)
-        |SELECT window_start,
-        |       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
-        |       CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       TRUE AS hll_ok, TRUE AS evicted_ok
-        |FROM w GROUP BY window_start ORDER BY window_start""".stripMargin,
-    "q_stream_hll" ->
-      """WITH w AS (
-        |  SELECT (epoch_us(ts) // 86400000000) * 86400 AS window_start,
-        |         user_id
-        |  FROM events)
-        |SELECT window_start,
-        |       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
-        |       CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       TRUE AS hll_ok
-        |FROM w GROUP BY window_start ORDER BY window_start""".stripMargin,
-    // q_tpch_q6: pure filter-aggregate; one rounded money sum
-    "q_tpch_q6" ->
-      """SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_discount >= 0.05 AND l_discount <= 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    // q_tpch_q3/q5/q10/q14/q18: the same joins, group keys, exact
-    // integer-unit revenue sums, and (revenue, key) top-k tiebreaks as
-    // the engine — see the qTpchQ3 suite note on rounding
-    "q_tpch_q3" ->
-      """SELECT l_orderkey, revenue,
-        |       strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate
-        |FROM (
-        |  SELECT l_orderkey, o_orderdate,
-        |         SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) *
-        |             (100 - CAST(ROUND(l_discount * 100) AS BIGINT)))
-        |           / 10000.0 AS revenue
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  WHERE c_mktsegment = 'BUILDING'
-        |    AND o_orderdate < TIMESTAMP '1998-07-01 00:00:00'
-        |    AND l_shipdate > TIMESTAMP '1998-07-01 00:00:00'
-        |  GROUP BY 1, 2)
-        |ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10""".stripMargin,
-    "q_tpch_q5" ->
-      """SELECT n_name,
-        |       SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) *
-        |           (100 - CAST(ROUND(l_discount * 100) AS BIGINT)))
-        |         / 10000.0 AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-    "q_tpch_q7" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |       year(l_shipdate) AS l_year,
-        |       SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) *
-        |           (100 - CAST(ROUND(l_discount * 100) AS BIGINT)))
-        |         / 10000.0 AS revenue
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE n1.n_name IN ('NATION_18', 'NATION_19')
-        |  AND n2.n_name IN ('NATION_18', 'NATION_19')
-        |  AND n1.n_name <> n2.n_name
-        |  AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q_tpch_q4" ->
-      """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
-        |FROM orders o
-        |WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1996-10-01 00:00:00'
-        |  AND EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey
-        |                AND l.l_shipdate > o.o_orderdate)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_bucket_lookup: plain point probe
-    "q_bucket_lookup" ->
-      """SELECT o_orderkey, CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
-        |FROM orders WHERE o_orderkey IN (64, 128, 999)
-        |ORDER BY o_orderkey""".stripMargin,
-    // q_dq_rules: plain conditional counts per rule
-    "q_dq_rules" ->
-      """WITH b AS (
-        |  SELECT o.*, (c.c_custkey IS NOT NULL) AS fk_ok
-        |  FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-        |), m AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |    CAST(SUM(CASE WHEN o_orderstatus IN ('O','F','P')
-        |             THEN 1 ELSE 0 END) AS BIGINT) AS p_status,
-        |    CAST(SUM(CASE WHEN regexp_matches(o_orderpriority, '^[1-5]-')
-        |             THEN 1 ELSE 0 END) AS BIGINT) AS p_prio,
-        |    CAST(SUM(CASE WHEN o_orderdate < TIMESTAMP '2000-01-01'
-        |             THEN 1 ELSE 0 END) AS BIGINT) AS p_fresh,
-        |    CAST(SUM(CASE WHEN o_totalprice >= 5000.0
-        |             THEN 1 ELSE 0 END) AS BIGINT) AS p_floor,
-        |    CAST(SUM(CASE WHEN fk_ok THEN 1 ELSE 0 END) AS BIGINT) AS p_fk
-        |  FROM b
-        |)
-        |SELECT rule, n_rows, n_pass, n_rows - n_pass AS n_fail FROM (
-        |  SELECT 'status_domain' AS rule, n_rows, p_status AS n_pass FROM m
-        |  UNION ALL
-        |  SELECT 'priority_format', n_rows, p_prio FROM m
-        |  UNION ALL SELECT 'date_fresh', n_rows, p_fresh FROM m
-        |  UNION ALL SELECT 'total_above_floor', n_rows, p_floor FROM m
-        |  UNION ALL SELECT 'fk_customer', n_rows, p_fk FROM m
-        |) ORDER BY rule""".stripMargin,
-    // q_incremental_agg: merge == rebuild — the from-scratch rollup
-    "q_incremental_agg" ->
-      """SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders
-        |FROM orders GROUP BY 1 ORDER BY day""".stripMargin,
-    // q_quantile_merge: the merged GK picks are sketch-internal, so the
-    // oracle checks the exact percentiles + count and asserts the merge's
-    // rank bound as literal TRUE (the q_approx_quantiles discipline)
-    "q_quantile_merge" ->
-      """SELECT CAST(0.5 AS DOUBLE) AS q,
-        |       ROUND(QUANTILE_CONT(o_totalprice, 0.5), 4) AS exact_p,
-        |       CAST(COUNT(*) AS BIGINT) AS n, TRUE AS gk_merge_bound_ok
-        |FROM orders
-        |UNION ALL
-        |SELECT CAST(0.9 AS DOUBLE),
-        |       ROUND(QUANTILE_CONT(o_totalprice, 0.9), 4),
-        |       CAST(COUNT(*) AS BIGINT), TRUE
-        |FROM orders
-        |UNION ALL
-        |SELECT CAST(0.99 AS DOUBLE),
-        |       ROUND(QUANTILE_CONT(o_totalprice, 0.99), 4),
-        |       CAST(COUNT(*) AS BIGINT), TRUE
-        |FROM orders
-        |ORDER BY q""".stripMargin,
-    // q_tpch_q2/9/11/16/20: the oracle derives the IDENTICAL partsupp
-    // from the observed lineitem pairs (non-negative keys: % == pmod)
-    "q_tpch_q2" ->
-      """WITH ps AS (
-        |  SELECT ps_partkey, ps_suppkey,
-        |         1 + (ps_partkey * 37 + ps_suppkey * 61) % 9999 AS ps_availqty,
-        |         100 + (ps_partkey * 31 + ps_suppkey * 17) % 99900
-        |           AS ps_supplycost_cents
-        |  FROM (SELECT DISTINCT l_partkey AS ps_partkey,
-        |                        l_suppkey AS ps_suppkey FROM lineitem)
-        |), parts AS (
-        |  SELECT p_partkey FROM part
-        |  WHERE p_size = 15 AND p_type = 'STANDARD'
-        |), es AS (
-        |  SELECT s_suppkey, s_name, s_acctbal, n_name
-        |  FROM supplier
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey AND r_name = 'EUROPE'
-        |), cand AS (
-        |  SELECT ps.ps_partkey, ps.ps_suppkey, ps.ps_supplycost_cents,
-        |         es.s_name, es.s_acctbal, es.n_name
-        |  FROM ps
-        |  JOIN parts ON ps_partkey = p_partkey
-        |  JOIN es ON ps_suppkey = es.s_suppkey
-        |), best AS (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY ps_partkey
-        |           ORDER BY ps_supplycost_cents, ps_suppkey) AS rk
-        |  FROM cand
-        |)
-        |SELECT s_acctbal, s_name, n_name, ps_partkey AS p_partkey,
-        |       ps_supplycost_cents
-        |FROM best WHERE rk = 1
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin,
-    "q_tpch_q9" ->
-      """WITH ps AS (
-        |  SELECT ps_partkey, ps_suppkey,
-        |         100 + (ps_partkey * 31 + ps_suppkey * 17) % 99900
-        |           AS ps_supplycost_cents
-        |  FROM (SELECT DISTINCT l_partkey AS ps_partkey,
-        |                        l_suppkey AS ps_suppkey FROM lineitem)
-        |)
-        |SELECT n_name AS nation,
-        |       CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |       CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) *
-        |                (100 - CAST(ROUND(l_discount * 100) AS BIGINT)) -
-        |                ps_supplycost_cents * 100 *
-        |                CAST(ROUND(l_quantity) AS BIGINT))
-        |            AS BIGINT) AS profit_units
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey AND p_name LIKE '%red%'
-        |JOIN ps ON l_partkey = ps_partkey AND l_suppkey = ps_suppkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-    "q_tpch_q11" ->
-      """WITH ps AS (
-        |  SELECT ps_partkey, ps_suppkey,
-        |         1 + (ps_partkey * 37 + ps_suppkey * 61) % 9999 AS ps_availqty,
-        |         100 + (ps_partkey * 31 + ps_suppkey * 17) % 99900
-        |           AS ps_supplycost_cents
-        |  FROM (SELECT DISTINCT l_partkey AS ps_partkey,
-        |                        l_suppkey AS ps_suppkey FROM lineitem)
-        |), es AS (
-        |  SELECT s_suppkey FROM supplier
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey AND r_name = 'EUROPE'
-        |), v AS (
-        |  SELECT ps_partkey,
-        |         CAST(SUM(ps_supplycost_cents * ps_availqty) AS BIGINT)
-        |           AS value_cents
-        |  FROM ps JOIN es ON ps_suppkey = s_suppkey
-        |  GROUP BY ps_partkey
-        |)
-        |SELECT ps_partkey, value_cents FROM v
-        |WHERE value_cents * (SELECT COUNT(*) FROM v) >
-        |      2 * (SELECT SUM(value_cents) FROM v)
-        |ORDER BY value_cents DESC, ps_partkey""".stripMargin,
-    "q_tpch_q16" ->
-      """WITH ps AS (
-        |  SELECT DISTINCT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey
-        |  FROM lineitem
-        |)
-        |SELECT p_brand, p_type, CAST(p_size AS BIGINT) AS p_size,
-        |       CAST(COUNT(DISTINCT ps_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM ps
-        |JOIN part ON ps_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#5' AND p_type <> 'PROMO'
-        |  AND p_size IN (1, 4, 9, 14, 23, 36, 45, 49)
-        |  AND ps_suppkey NOT IN
-        |      (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q_tpch_q20" ->
-      """WITH ps AS (
-        |  SELECT ps_partkey, ps_suppkey,
-        |         1 + (ps_partkey * 37 + ps_suppkey * 61) % 9999 AS ps_availqty
-        |  FROM (SELECT DISTINCT l_partkey AS ps_partkey,
-        |                        l_suppkey AS ps_suppkey FROM lineitem)
-        |), q96 AS (
-        |  SELECT l_partkey, l_suppkey,
-        |         CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS qty
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  GROUP BY 1, 2
-        |)
-        |SELECT DISTINCT s_suppkey, s_name
-        |FROM ps
-        |JOIN part ON ps_partkey = p_partkey AND p_name LIKE '%red%'
-        |JOIN q96 ON ps_partkey = l_partkey AND ps_suppkey = l_suppkey
-        |JOIN supplier ON ps_suppkey = s_suppkey
-        |WHERE ps_availqty * 2 > qty
-        |ORDER BY s_suppkey""".stripMargin,
-    "q_tpch_q21" ->
-      """SELECT s_name, numwait FROM (
-        |  SELECT w.l_suppkey, CAST(COUNT(*) AS BIGINT) AS numwait FROM (
-        |    SELECT DISTINCT l1.l_orderkey, l1.l_suppkey
-        |    FROM lineitem l1 JOIN orders o ON o.o_orderkey = l1.l_orderkey
-        |    WHERE o.o_orderstatus = 'F'
-        |      AND l1.l_shipdate > o.o_orderdate
-        |      AND EXISTS (SELECT 1 FROM lineitem l2
-        |                  WHERE l2.l_orderkey = l1.l_orderkey
-        |                    AND l2.l_suppkey <> l1.l_suppkey)
-        |      AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                      WHERE l3.l_orderkey = l1.l_orderkey
-        |                        AND l3.l_suppkey <> l1.l_suppkey
-        |                        AND l3.l_shipdate > o.o_orderdate)
-        |  ) w GROUP BY w.l_suppkey
-        |) c JOIN supplier ON s_suppkey = c.l_suppkey
-        |ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin,
-    "q_tpch_q12" ->
-      """SELECT l_returnflag,
-        |       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |       CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_shipdate > o_orderdate + INTERVAL 30 DAY
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_tpch_q22 adapted: cntrycode = nationkey % 10 (odd codes), dormant
-    // = no order since 2000-01-01; money exact cents, one final division
-    "q_tpch_q22" ->
-      """WITH cust AS (
-        |  SELECT c_custkey, c_nationkey % 10 AS cntrycode,
-        |         CAST(ROUND(c_acctbal * 100) AS BIGINT) AS bal_u2
-        |  FROM customer WHERE (c_nationkey % 10) IN (1, 3, 5, 7, 9)
-        |), a AS (
-        |  SELECT CAST(SUM(bal_u2) AS DOUBLE) / COUNT(*) AS avg_u2
-        |  FROM cust WHERE bal_u2 > 0
-        |)
-        |SELECT cntrycode, CAST(COUNT(*) AS BIGINT) AS numcust,
-        |       CAST(SUM(bal_u2) AS DOUBLE) / 100.0 AS totacctbal
-        |FROM cust, a
-        |WHERE CAST(bal_u2 AS DOUBLE) > avg_u2
-        |  AND NOT EXISTS (SELECT 1 FROM orders o
-        |                  WHERE o.o_custkey = cust.c_custkey
-        |                    AND o.o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_time_weighted_avg: identical lead/filter/aggregate semantics; the
-    // weighted sum is promoted to HUGEINT before the multiply (the Spark
-    // side promotes to DECIMAL(38,0)) and cast to double exactly once
-    "q_time_weighted_avg" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |         CAST(epoch_us(ts) AS BIGINT) AS us,
-        |         LEAD(epoch_us(ts)) OVER (
-        |           PARTITION BY event_type ORDER BY epoch_us(ts), event_id)
-        |           AS nxt_us,
-        |         CAST(ROUND(value * 10000) AS BIGINT) AS v_u4
-        |  FROM events
-        |), i AS (
-        |  SELECT event_type, v_u4, nxt_us - us AS dt_us
-        |  FROM e WHERE nxt_us IS NOT NULL AND nxt_us - us > 0
-        |)
-        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_intervals,
-        |       CAST(SUM(dt_us) AS BIGINT) AS sum_dt_us,
-        |       CAST(SUM(CAST(v_u4 AS HUGEINT) * dt_us) AS DOUBLE)
-        |         / CAST(SUM(dt_us) AS DOUBLE) / 10000.0 AS twa_value
-        |FROM i GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_ols_trend: the identical sufficient-statistics closed form; all
-    // five sums are exact integers, the two divisions mirror Spark's
-    "q_ols_trend" ->
-      """WITH daily AS (
-        |  SELECT event_type,
-        |         CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))
-        |              AS BIGINT) AS x,
-        |         COUNT(*) AS y
-        |  FROM events GROUP BY 1, 2
-        |), s AS (
-        |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days,
-        |         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-        |         CAST(SUM(x * y) AS BIGINT) AS sxy,
-        |         CAST(SUM(x * x) AS BIGINT) AS sxx
-        |  FROM daily GROUP BY 1
-        |)
-        |SELECT event_type, n_days, sy AS n_events,
-        |       CAST(n_days * sxy - sx * sy AS DOUBLE) /
-        |         CAST(n_days * sxx - sx * sx AS DOUBLE) AS slope_per_day,
-        |       (CAST(sy AS DOUBLE) -
-        |        (CAST(n_days * sxy - sx * sy AS DOUBLE) /
-        |         CAST(n_days * sxx - sx * sx AS DOUBLE)) * CAST(sx AS DOUBLE))
-        |         / CAST(n_days AS DOUBLE) AS intercept
-        |FROM s ORDER BY event_type""".stripMargin,
-    // q_map_ops: the map round-trips back to relational conditional
-    // counts; element_at misses are NULL (CASE with no ELSE)
-    "q_map_ops" ->
-      """SELECT l_returnflag,
-        |       CAST(COUNT(DISTINCT l_linestatus) AS INTEGER) AS n_statuses,
-        |       CAST(SUM(CASE WHEN l_linestatus = 'O' THEN 1 END) AS BIGINT)
-        |         AS n_open,
-        |       CAST(SUM(CASE WHEN l_linestatus = 'F' THEN 1 END) AS BIGINT)
-        |         AS n_final,
-        |       CAST(COUNT(DISTINCT CASE WHEN cnt >= 1000 THEN l_linestatus END)
-        |            AS INTEGER) AS n_big_statuses,
-        |       CAST(COUNT(*) AS BIGINT) AS n_total
-        |FROM (SELECT l_returnflag, l_linestatus,
-        |             COUNT(*) OVER (PARTITION BY l_returnflag, l_linestatus)
-        |               AS cnt
-        |      FROM lineitem) t
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_share_of_parent: identical two-level rollup; shares divide exact
-    // integer cent sums
-    "q_share_of_parent" ->
-      """WITH nat AS (
-        |  SELECT r_name, n_name,
-        |         CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |              AS BIGINT) AS nat_u2
-        |  FROM orders
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |  GROUP BY 1, 2
-        |)
-        |SELECT r_name, n_name,
-        |       CAST(nat_u2 AS DOUBLE) / 100.0 AS revenue,
-        |       CAST(nat_u2 AS DOUBLE) /
-        |         CAST(SUM(nat_u2) OVER (PARTITION BY r_name) AS DOUBLE)
-        |         AS share_of_region
-        |FROM nat ORDER BY r_name, n_name""".stripMargin,
-    // q_benford: digit from the exact integer-cent string; expected
-    // shares are the SAME literal constants as the Spark side (never
-    // each engine's own log10)
-    "q_benford" ->
-      """WITH dg AS (
-        |  SELECT CAST(SUBSTRING(CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT)
-        |                             AS VARCHAR), 1, 1) AS INTEGER) AS digit,
-        |         COUNT(*) AS n
-        |  FROM orders WHERE CAST(ROUND(o_totalprice * 100) AS BIGINT) > 0
-        |  GROUP BY 1
-        |), t AS (SELECT CAST(SUM(n) AS BIGINT) AS n_total FROM dg),
-        |e(digit, exp_share) AS (VALUES
-        |  (1, CAST(0.3010299956639812 AS DOUBLE)),
-        |  (2, CAST(0.17609125905568124 AS DOUBLE)),
-        |  (3, CAST(0.12493873660829992 AS DOUBLE)),
-        |  (4, CAST(0.09691001300805642 AS DOUBLE)),
-        |  (5, CAST(0.07918124604762482 AS DOUBLE)),
-        |  (6, CAST(0.06694678963061322 AS DOUBLE)),
-        |  (7, CAST(0.05799194697768673 AS DOUBLE)),
-        |  (8, CAST(0.05115252244738129 AS DOUBLE)),
-        |  (9, CAST(0.04575749056067514 AS DOUBLE)))
-        |SELECT dg.digit, CAST(dg.n AS BIGINT) AS n,
-        |       CAST(dg.n AS DOUBLE) / CAST(t.n_total AS DOUBLE) AS share,
-        |       e.exp_share,
-        |       (CAST(dg.n AS DOUBLE) / CAST(t.n_total AS DOUBLE) - e.exp_share)
-        |         * (CAST(dg.n AS DOUBLE) / CAST(t.n_total AS DOUBLE) - e.exp_share)
-        |         / e.exp_share * CAST(t.n_total AS DOUBLE) AS chi2_term
-        |FROM dg, t JOIN e ON dg.digit = e.digit
-        |ORDER BY dg.digit""".stripMargin,
-    // q_cross_corr: identical sufficient-statistics Pearson r per lag;
-    // the n·Σ products multiply in double space on both sides
-    "q_cross_corr" ->
-      """WITH daily AS (
-        |  SELECT event_type,
-        |         CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))
-        |              AS BIGINT) AS day,
-        |         COUNT(*) AS n
-        |  FROM events WHERE event_type IN ('view', 'click') GROUP BY 1, 2
-        |), v AS (SELECT day, n AS x FROM daily WHERE event_type = 'view'),
-        |c AS (SELECT day AS bday, n AS y FROM daily WHERE event_type = 'click'),
-        |lags(lag) AS (VALUES (CAST(0 AS BIGINT)), (1), (2), (3)),
-        |j AS (
-        |  SELECT l.lag, v.x, c.y FROM v CROSS JOIN lags l
-        |  JOIN c ON c.bday = v.day + l.lag
-        |), s AS (
-        |  SELECT lag, CAST(COUNT(*) AS BIGINT) AS n_days,
-        |         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-        |         CAST(SUM(x * y) AS BIGINT) AS sxy,
-        |         CAST(SUM(x * x) AS BIGINT) AS sxx,
-        |         CAST(SUM(y * y) AS BIGINT) AS syy
-        |  FROM j GROUP BY 1
-        |)
-        |SELECT lag, n_days,
-        |       CAST(n_days * sxy - sx * sy AS DOUBLE) /
-        |         SQRT(CAST(n_days * sxx - sx * sx AS DOUBLE) *
-        |              CAST(n_days * syy - sy * sy AS DOUBLE)) AS pearson_r
-        |FROM s ORDER BY lag""".stripMargin,
-    // q_rank_test: identical two-level exact rank-sum; the oracle's single
-    // ORDER BY window replaces the engine's bucket+carry decomposition
-    "q_rank_test" ->
-      """WITH v AS (
-        |  SELECT CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS v,
-        |         (l_returnflag = 'R') AS is_a
-        |  FROM lineitem WHERE l_returnflag IN ('R', 'A')
-        |), a AS (
-        |  SELECT v,
-        |         CAST(SUM(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS na,
-        |         CAST(SUM(CASE WHEN is_a THEN 0 ELSE 1 END) AS BIGINT) AS nb
-        |  FROM v GROUP BY v
-        |), p AS (
-        |  SELECT na, nb, na + nb AS t,
-        |         CAST(COALESCE(SUM(na + nb) OVER (ORDER BY v
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |           AS BIGINT) AS cum
-        |  FROM a
-        |), s AS (
-        |  SELECT CAST(SUM(na) AS BIGINT) AS n_a,
-        |         CAST(SUM(nb) AS BIGINT) AS n_b,
-        |         CAST(SUM(na * (2 * cum + t + 1)) AS BIGINT) AS r2_a
-        |  FROM p
-        |)
-        |SELECT n_a, n_b, r2_a - n_a * (n_a + 1) AS u2_a,
-        |       CAST(r2_a - n_a * (n_a + 1) AS DOUBLE) /
-        |         CAST(2 * n_a * n_b AS DOUBLE) AS auc_a
-        |FROM s""".stripMargin,
-    // q_minhash_tuning: the q_ngram_jaccard pair CTE at threshold 0.03,
-    // then the decile histogram × band-config grid; powers are the SAME
-    // explicit square chains as the Spark side (never pow(), whose libm
-    // rounding is engine-specific)
-    "q_minhash_tuning" ->
-      """WITH sh AS (
-        |  SELECT doc_id AS id,
-        |         CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |              ELSE list_distinct([concat_ws(' ', t[i], t[i+1], t[i+2])
-        |                                  for i in generate_series(1, len(t) - 2)])
-        |         END AS g
-        |  FROM (SELECT doc_id,
-        |               list_filter(string_split_regex(lower(text), '\s+'),
-        |                           x -> len(x) > 0) AS t
-        |        FROM documents)),
-        |posting AS (SELECT id, unnest(g) AS gram FROM sh),
-        |sizes AS (SELECT id, len(g) AS n_sh FROM sh),
-        |shared AS (SELECT gram FROM posting
-        |           GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 10000),
-        |pruned AS (SELECT id, gram FROM posting JOIN shared USING (gram)),
-        |inter AS (
-        |  SELECT a.id AS id_a, b.id AS id_b, CAST(COUNT(*) AS BIGINT) AS n_inter
-        |  FROM pruned a JOIN pruned b USING (gram)
-        |  WHERE a.id < b.id GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT ROUND(CAST(i.n_inter AS DOUBLE) /
-        |               CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE), 6) AS j
-        |  FROM inter i
-        |  JOIN sizes sa ON i.id_a = sa.id
-        |  JOIN sizes sb ON i.id_b = sb.id
-        |  WHERE CAST(i.n_inter AS DOUBLE) /
-        |        CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE) >= 0.03),
-        |decs AS (
-        |  SELECT CAST(LEAST(FLOOR(j * 10), 9) AS BIGINT) AS dec,
-        |         COUNT(*) AS n_pairs
-        |  FROM pairs GROUP BY 1),
-        |configs(b, r) AS (VALUES (32, 4), (16, 8), (8, 16)),
-        |grid AS (
-        |  SELECT b, r, dec, n_pairs,
-        |         (CAST(dec AS DOUBLE) + CAST(0.5 AS DOUBLE))
-        |           / CAST(10.0 AS DOUBLE) AS s
-        |  FROM decs CROSS JOIN configs),
-        |p1 AS (SELECT *, s * s AS s2 FROM grid),
-        |p2 AS (SELECT *, s2 * s2 AS s4 FROM p1),
-        |p3 AS (SELECT *, s4 * s4 AS s8 FROM p2),
-        |p4 AS (SELECT *, s8 * s8 AS s16 FROM p3),
-        |p5 AS (SELECT *, CAST(1.0 AS DOUBLE) -
-        |         (CASE WHEN r = 4 THEN s4 WHEN r = 8 THEN s8
-        |               ELSE s16 END) AS q FROM p4),
-        |p6 AS (SELECT *, q * q AS q2 FROM p5),
-        |p7 AS (SELECT *, q2 * q2 AS q4 FROM p6),
-        |p8 AS (SELECT *, q4 * q4 AS q8 FROM p7),
-        |p9 AS (SELECT *, q8 * q8 AS q16 FROM p8),
-        |pa AS (SELECT *, q16 * q16 AS q32 FROM p9),
-        |pb AS (SELECT *, CAST(1.0 AS DOUBLE) -
-        |         (CASE WHEN b = 8 THEN q8 WHEN b = 16 THEN q16
-        |               ELSE q32 END) AS p_mid FROM pa)
-        |SELECT b, r, dec, n_pairs, p_mid,
-        |       CAST(n_pairs AS DOUBLE) * p_mid AS exp_caught
-        |FROM pb ORDER BY b, dec""".stripMargin,
-    // q_null_semantics: NULLS FIRST is explicit — DuckDB's default is
-    // NULLS LAST, Spark's is NULLS FIRST
-    "q_null_semantics" ->
-      """WITH b AS (
-        |  SELECT NULLIF(o_orderstatus, 'O') AS st,
-        |         CASE WHEN o_orderkey % 7 = 0 THEN NULL
-        |              ELSE CAST(ROUND(o_totalprice * 100) AS BIGINT)
-        |         END AS cents
-        |  FROM orders
-        |)
-        |SELECT st, COUNT(*) AS n_rows, COUNT(cents) AS n_priced,
-        |       CAST(SUM(CASE WHEN cents IS NULL THEN 1 ELSE 0 END)
-        |            AS BIGINT) AS n_null_price,
-        |       CAST(SUM(cents) AS BIGINT) AS sum_cents,
-        |       MIN(cents) AS min_cents, MAX(cents) AS max_cents
-        |FROM b GROUP BY st ORDER BY st NULLS FIRST""".stripMargin,
-    // q_nullsafe_join: IS NOT DISTINCT FROM is ANSI's <=>
-    "q_nullsafe_join" ->
-      """WITH a AS (
-        |  SELECT NULLIF(substr(o_orderpriority, 1, 1), '3') AS k,
-        |         COUNT(*) AS n_a
-        |  FROM orders WHERE o_orderkey % 2 = 0 GROUP BY 1
-        |), b AS (
-        |  SELECT NULLIF(substr(o_orderpriority, 1, 1), '3') AS k,
-        |         COUNT(*) AS n_b
-        |  FROM orders WHERE o_orderkey % 2 = 1 GROUP BY 1
-        |)
-        |SELECT a.k AS k, a.n_a, b.n_b, a.n_a * b.n_b AS n_pairs
-        |FROM a JOIN b ON a.k IS NOT DISTINCT FROM b.k
-        |ORDER BY k NULLS FIRST""".stripMargin,
-    // q_ridge: the double-space solve mirrors the Spark expression order
-    // op-for-op so every IEEE rounding decision is identical; the decimal
-    // literal is CAST to DOUBLE because DuckDB parses 1000.0 as DECIMAL
-    "q_ridge" ->
-      """WITH m AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |         CAST(SUM(x1) AS BIGINT) AS s1,
-        |         CAST(SUM(x2) AS BIGINT) AS s2,
-        |         CAST(SUM(y) AS BIGINT) AS sy,
-        |         CAST(SUM(x1 * x1) AS BIGINT) AS s11,
-        |         CAST(SUM(x1 * x2) AS BIGINT) AS s12,
-        |         CAST(SUM(x2 * x2) AS BIGINT) AS s22,
-        |         CAST(SUM(x1 * y) AS BIGINT) AS s1y,
-        |         CAST(SUM(x2 * y) AS BIGINT) AS s2y
-        |  FROM (SELECT CAST(ROUND(l_quantity) AS BIGINT) AS x1,
-        |               CAST(ROUND(l_discount * 100) AS BIGINT) AS x2,
-        |               CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS y
-        |        FROM lineitem)
-        |), c AS (
-        |  SELECT n,
-        |    CAST(s11 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-        |      / CAST(n AS DOUBLE) AS c11,
-        |    CAST(s12 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s2 AS DOUBLE)
-        |      / CAST(n AS DOUBLE) AS c12,
-        |    CAST(s22 AS DOUBLE) - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE)
-        |      / CAST(n AS DOUBLE) AS c22,
-        |    CAST(s1y AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(sy AS DOUBLE)
-        |      / CAST(n AS DOUBLE) AS cy1,
-        |    CAST(s2y AS DOUBLE) - CAST(s2 AS DOUBLE) * CAST(sy AS DOUBLE)
-        |      / CAST(n AS DOUBLE) AS cy2,
-        |    CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS xb1,
-        |    CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE) AS xb2,
-        |    CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) AS yb
-        |  FROM m
-        |), f AS (
-        |  SELECT *, (c11 + CAST(1000 AS DOUBLE)) * (c22 + CAST(1000 AS DOUBLE))
-        |            - c12 * c12 AS det
-        |  FROM c
-        |), g AS (
-        |  SELECT *,
-        |    ((c22 + CAST(1000 AS DOUBLE)) * cy1 - c12 * cy2) / det AS b1,
-        |    ((c11 + CAST(1000 AS DOUBLE)) * cy2 - c12 * cy1) / det AS b2
-        |  FROM f
-        |)
-        |SELECT n, yb - b1 * xb1 - b2 * xb2 AS b0, b1, b2 FROM g""".stripMargin,
-    // q_mode: oracled from first principles (rank over the value counts,
-    // ties to the smallest value) — DuckDB's mode() is tie-unspecified
-    "q_mode" ->
-      """WITH c AS (
-        |  SELECT l_returnflag, CAST(l_quantity AS BIGINT) AS qty,
-        |         COUNT(*) AS n
-        |  FROM lineitem GROUP BY 1, 2
-        |), r AS (
-        |  SELECT l_returnflag, n, qty,
-        |         SUM(n) OVER (PARTITION BY l_returnflag) AS tot,
-        |         ROW_NUMBER() OVER (PARTITION BY l_returnflag
-        |                            ORDER BY n DESC, qty ASC) AS rk
-        |  FROM c
-        |)
-        |SELECT l_returnflag, CAST(n AS BIGINT) AS mode_count,
-        |       qty AS mode_qty, CAST(tot AS BIGINT) AS n_rows
-        |FROM r WHERE rk = 1 ORDER BY 1""".stripMargin,
-    "q_tpch_q19" ->
-      """SELECT SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) *
-        |           (100 - CAST(ROUND(l_discount * 100) AS BIGINT)))
-        |         / 10000.0 AS revenue,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#1' AND l_quantity BETWEEN 1 AND 15)
-        |   OR (p_brand = 'Brand#2' AND l_quantity BETWEEN 10 AND 25)
-        |   OR (p_brand = 'Brand#3' AND l_quantity BETWEEN 20 AND 35)""".stripMargin,
-    // q_vector_audit: same finite/zero-norm/dim predicates over the raw
-    // float coords cast to double; norms via the identical sequential dot
-    "q_vector_audit" ->
-      """WITH x AS (
-        |  SELECT len(embedding) AS dim,
-        |         len(list_filter(embedding,
-        |             x -> isnan(CAST(x AS DOUBLE))
-        |                  OR NOT isfinite(CAST(x AS DOUBLE)))) AS n_bad,
-        |         list_dot_product(list_transform(embedding, x -> CAST(x AS DOUBLE)),
-        |                          list_transform(embedding, x -> CAST(x AS DOUBLE)))
-        |           AS sq
-        |  FROM embeddings)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_vectors,
-        |       CAST(SUM(CASE WHEN dim <> 64 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_wrong_dim,
-        |       CAST(SUM(CASE WHEN n_bad > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_nonfinite,
-        |       CAST(SUM(CASE WHEN sq = 0.0 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_zero_norm,
-        |       ROUND(SQRT(MIN(sq)), 6) AS min_norm,
-        |       ROUND(SQRT(MAX(sq)), 6) AS max_norm
-        |FROM x""".stripMargin,
-    // q_negative_sample: identical salted md5 candidate hash onto the
-    // valid part-id range; positives anti-joined identically
-    "q_negative_sample" ->
-      """WITH pos AS (
-        |  SELECT DISTINCT o_custkey AS custkey, l_partkey AS partkey
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |mx AS (SELECT MAX(p_partkey) AS max_pk FROM part),
-        |cand AS (
-        |  SELECT c_custkey AS custkey,
-        |         CAST(('0x' || substr(md5(concat('neg|',
-        |                CAST(c_custkey AS VARCHAR), '|', CAST(i AS VARCHAR))),
-        |              1, 12)) AS BIGINT) % max_pk + 1 AS partkey
-        |  FROM customer, mx, generate_series(1, 3) AS t(i))
-        |SELECT c.custkey,
-        |       CAST(SUM(CASE WHEN p.partkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_negatives,
-        |       CAST(SUM(CASE WHEN p.partkey IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_collisions
-        |FROM cand c LEFT JOIN pos p
-        |  ON c.custkey = p.custkey AND c.partkey = p.partkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_dedup_savings: same md5 fingerprint + min-id survivorship rule
-    "q_dedup_savings" ->
-      """WITH surv AS (
-        |  SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-        |drp AS (
-        |  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_dupes,
-        |         CAST(SUM(n_chars) AS BIGINT) AS dup_chars
-        |  FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM surv)
-        |  GROUP BY source)
-        |SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |       COALESCE(MAX(drp.n_dupes), 0) AS n_dupes,
-        |       CAST(SUM(d.n_chars) AS BIGINT) AS total_chars,
-        |       COALESCE(MAX(drp.dup_chars), 0) AS dup_chars
-        |FROM documents d LEFT JOIN drp ON d.source = drp.source
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
-    // q_group_sample: identical salted portable md5 rank per source
-    "q_group_sample" ->
-      """SELECT source, doc_id FROM (
-        |  SELECT source, doc_id,
-        |         ROW_NUMBER() OVER (PARTITION BY source
-        |           ORDER BY md5(concat('gs|', CAST(doc_id AS VARCHAR))),
-        |                    doc_id) AS rn
-        |  FROM documents)
-        |WHERE rn <= 5 ORDER BY source, doc_id""".stripMargin,
-    // q_split_leakage: the q_dup_clusters exact pair set at 0.5 crossed
-    // with the q_split_counts portable split rule
-    "q_split_leakage" ->
-      """WITH sh AS (
-        |  SELECT doc_id AS id,
-        |         CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |              ELSE list_distinct([concat_ws(' ', t[i], t[i+1], t[i+2])
-        |                                  for i in generate_series(1, len(t) - 2)])
-        |         END AS g
-        |  FROM (SELECT doc_id,
-        |               list_filter(string_split_regex(lower(text), '\s+'),
-        |                           x -> len(x) > 0) AS t
-        |        FROM documents)),
-        |posting AS (SELECT id, unnest(g) AS gram FROM sh),
-        |sizes AS (SELECT id, len(g) AS n_sh FROM sh),
-        |shared AS (SELECT gram FROM posting
-        |           GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 10000),
-        |pruned AS (SELECT id, gram FROM posting JOIN shared USING (gram)),
-        |inter AS (
-        |  SELECT a.id AS id_a, b.id AS id_b, CAST(COUNT(*) AS BIGINT) AS n_inter
-        |  FROM pruned a JOIN pruned b USING (gram)
-        |  WHERE a.id < b.id GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT i.id_a, i.id_b
-        |  FROM inter i
-        |  JOIN sizes sa ON i.id_a = sa.id
-        |  JOIN sizes sb ON i.id_b = sb.id
-        |  WHERE CAST(i.n_inter AS DOUBLE) /
-        |        CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE) >= 0.5),
-        |sp AS (
-        |  SELECT doc_id, CASE WHEN h < 100000 THEN 'val'
-        |                      WHEN h < 200000 THEN 'test'
-        |                      ELSE 'train' END AS split
-        |  FROM (SELECT doc_id,
-        |               CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))
-        |                    AS BIGINT) % 1000000 AS h
-        |        FROM documents))
-        |SELECT LEAST(a.split, b.split) AS split_a,
-        |       GREATEST(a.split, b.split) AS split_b,
-        |       CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        |       LEAST(a.split, b.split) <> GREATEST(a.split, b.split) AS is_leak
-        |FROM pairs p
-        |JOIN sp a ON p.id_a = a.doc_id
-        |JOIN sp b ON p.id_b = b.doc_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // q_tpch_q8/q13/q17: same joins and exact integer-unit revenue; the
-    // q8 share and q17 threshold divide identical exact values
-    "q_tpch_q8" ->
-      """SELECT year(o_orderdate) AS o_year,
-        |       CAST(SUM(CASE WHEN n1.n_name = 'NATION_19'
-        |                     THEN CAST(ROUND(l_extendedprice * 100) AS BIGINT) *
-        |                          (100 - CAST(ROUND(l_discount * 100) AS BIGINT))
-        |                     ELSE 0 END) AS DOUBLE) /
-        |       SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) *
-        |           (100 - CAST(ROUND(l_discount * 100) AS BIGINT))) AS mkt_share,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO'
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |JOIN region ON n2.n_regionkey = r_regionkey AND r_name = 'ASIA'
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_tpch_q13" ->
-      """SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist FROM (
-        |  SELECT c.c_custkey, CAST(COUNT(o.o_orderkey) AS BIGINT) AS c_count
-        |  FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-        |  GROUP BY 1)
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q_tpch_q15" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |         SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) *
-        |             (100 - CAST(ROUND(l_discount * 100) AS BIGINT))) AS total_rev
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
-        |  GROUP BY 1)
-        |SELECT s_suppkey, s_name, total_rev / 10000.0 AS total_revenue
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_rev = (SELECT MAX(total_rev) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q_tpch_q17" ->
-      """WITH a AS (SELECT l_partkey AS ap, AVG(l_quantity) AS aq
-        |           FROM lineitem GROUP BY 1)
-        |SELECT SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) *
-        |           (100 - CAST(ROUND(l_discount * 100) AS BIGINT)))
-        |         / 10000.0 AS revenue,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows
-        |FROM lineitem l
-        |JOIN part ON l.l_partkey = p_partkey AND p_brand = 'Brand#1'
-        |JOIN a ON l.l_partkey = a.ap
-        |WHERE l.l_quantity < 0.5 * a.aq""".stripMargin,
-    "q_tpch_q10" ->
-      """SELECT c_custkey, c_name, revenue, c_acctbal, n_name FROM (
-        |  SELECT c_custkey, c_name, c_acctbal, n_name,
-        |         SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) *
-        |             (100 - CAST(ROUND(l_discount * 100) AS BIGINT)))
-        |           / 10000.0 AS revenue
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  WHERE l_returnflag = 'R'
-        |    AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |    AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-        |  GROUP BY 1, 2, 3, 4)
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q_tpch_q14" ->
-      """SELECT 100.0 *
-        |         SUM(CASE WHEN p_type = 'PROMO'
-        |                  THEN CAST(ROUND(l_extendedprice * 100) AS BIGINT) *
-        |                       (100 - CAST(ROUND(l_discount * 100) AS BIGINT))
-        |                  ELSE 0 END) /
-        |         SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) *
-        |             (100 - CAST(ROUND(l_discount * 100) AS BIGINT)))
-        |         AS promo_revenue_pct,
-        |       CAST(COUNT(*) AS BIGINT) AS n_rows
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1996-10-01 00:00:00'""".stripMargin,
-    "q_tpch_q18" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, SUM(l_quantity) AS sum_qty
-        |  FROM lineitem GROUP BY 1 HAVING SUM(l_quantity) > 300.0)
-        |SELECT c_name, c_custkey, o_orderkey,
-        |       strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-        |       o_totalprice, sum_qty
-        |FROM big
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-    // q_ewma: the literal recursion e_t = (e_{t-1} + c_t) * 0.5 — the same
-    // IEEE operation order as the engine's fold, so values are
-    // bit-identical and stay bounded for arbitrarily long day ranges
-    "q_ewma" ->
-      """WITH RECURSIVE x AS (
-        |  SELECT day, c, ROW_NUMBER() OVER (ORDER BY day) AS t
-        |  FROM (SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS c
-        |        FROM events GROUP BY 1)),
-        |rec AS (
-        |  SELECT t, day, c,
-        |         (CAST(0.0 AS DOUBLE) + c) * CAST(0.5 AS DOUBLE) AS e
-        |  FROM x WHERE t = 1
-        |  UNION ALL
-        |  SELECT x.t, x.day, x.c, (rec.e + x.c) * CAST(0.5 AS DOUBLE)
-        |  FROM x JOIN rec ON x.t = rec.t + 1)
-        |SELECT strftime(day, '%Y-%m-%d') AS day, c, ROUND(e, 6) AS ewma
-        |FROM rec ORDER BY day""".stripMargin,
-    // q_link_prediction: the q_dup_clusters exact pair set replayed, then
-    // common-neighbor counting with existing edges anti-joined out
-    "q_link_prediction" ->
-      """WITH sh AS (
-        |  SELECT doc_id AS id,
-        |         CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |              ELSE list_distinct([concat_ws(' ', t[i], t[i+1], t[i+2])
-        |                                  for i in generate_series(1, len(t) - 2)])
-        |         END AS g
-        |  FROM (SELECT doc_id,
-        |               list_filter(string_split_regex(lower(text), '\s+'),
-        |                           x -> len(x) > 0) AS t
-        |        FROM documents)),
-        |posting AS (SELECT id, unnest(g) AS gram FROM sh),
-        |sizes AS (SELECT id, len(g) AS n_sh FROM sh),
-        |shared AS (SELECT gram FROM posting
-        |           GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 10000),
-        |pruned AS (SELECT id, gram FROM posting JOIN shared USING (gram)),
-        |inter AS (
-        |  SELECT a.id AS id_a, b.id AS id_b, CAST(COUNT(*) AS BIGINT) AS n_inter
-        |  FROM pruned a JOIN pruned b USING (gram)
-        |  WHERE a.id < b.id GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT i.id_a, i.id_b
-        |  FROM inter i
-        |  JOIN sizes sa ON i.id_a = sa.id
-        |  JOIN sizes sb ON i.id_b = sb.id
-        |  WHERE CAST(i.n_inter AS DOUBLE) /
-        |        CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE) >= 0.5),
-        |adj AS (SELECT id_a AS u, id_b AS v FROM pairs
-        |        UNION ALL SELECT id_b, id_a FROM pairs),
-        |cand AS (
-        |  SELECT x.v AS id_a, y.v AS id_b, CAST(COUNT(*) AS BIGINT) AS n_common
-        |  FROM adj x JOIN adj y USING (u)
-        |  WHERE x.v < y.v GROUP BY 1, 2)
-        |SELECT c.id_a, c.id_b, c.n_common,
-        |       p.id_a IS NOT NULL AS is_edge
-        |FROM cand c
-        |LEFT JOIN pairs p ON c.id_a = p.id_a AND c.id_b = p.id_b
-        |ORDER BY c.id_a, c.id_b""".stripMargin,
-    // q_lang_confusion: the q_lang_id detector replayed, grouped against
-    // the declared label
-    "q_lang_confusion" ->
-      """WITH s AS (
-        |  SELECT lang,
-        |         len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS s_en,
-        |         len(list_filter(t, x -> x IN ('der','die','das','und','ist','nicht','ein','mit','zu','den'))) AS s_de,
-        |         len(list_filter(t, x -> x IN ('le','la','les','et','est','un','une','des','que','pour'))) AS s_fr,
-        |         len(list_filter(t, x -> x IN ('el','la','los','las','y','es','un','una','que','por'))) AS s_es,
-        |         len(list_filter(t, x -> x IN ('il','la','gli','e','che','un','una','per','non','sono'))) AS s_it
-        |  FROM (SELECT lang,
-        |               list_filter(string_split_regex(trim(lower(text)), '\s+'),
-        |                           x -> len(x) > 0) AS t
-        |        FROM documents)),
-        |p AS (
-        |  SELECT lang,
-        |         CASE
-        |           WHEN s_en = 0 AND s_de = 0 AND s_fr = 0 AND s_es = 0 AND s_it = 0 THEN 'und'
-        |           WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_it THEN 'en'
-        |           WHEN s_de >= s_fr AND s_de >= s_es AND s_de >= s_it THEN 'de'
-        |           WHEN s_fr >= s_es AND s_fr >= s_it THEN 'fr'
-        |           WHEN s_es >= s_it THEN 'es'
-        |           ELSE 'it'
-        |         END AS lang_pred
-        |  FROM s)
-        |SELECT lang, lang_pred, CAST(COUNT(*) AS BIGINT) AS n_docs
-        |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // q_seasonality: EXTRACT(DOW) 0=Sunday matches dayofweek-1; share
-    // computed as (100.0 * n) / total in both engines
-    "q_seasonality" ->
-      """WITH e AS (
-        |  SELECT CAST(EXTRACT(DOW FROM ts) AS INT) AS dow,
-        |         CAST(EXTRACT(HOUR FROM ts) AS INT) AS hr
-        |  FROM events)
-        |SELECT dow, hr, CAST(COUNT(*) AS BIGINT) AS n,
-        |       ROUND(100.0 * COUNT(*) / (SELECT COUNT(*) FROM e), 4) AS pct
-        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_cosine_pairs" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |c AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |         CASE WHEN list_dot_product(a.v, a.v) = 0
-        |                OR list_dot_product(b.v, b.v) = 0 THEN 0.0
-        |              ELSE list_dot_product(a.v, b.v) /
-        |                   (sqrt(list_dot_product(a.v, a.v)) *
-        |                    sqrt(list_dot_product(b.v, b.v)))
-        |         END AS cos_raw
-        |  FROM e a JOIN e b ON a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, ROUND(cos_raw, 6) AS cos
-        |FROM c WHERE cos_raw >= 0.3
-        |ORDER BY id_a, id_b""".stripMargin,
-    // pair-family verdict rows (the pair-set counterpart of the ANN
-    // verdict rows): the oracle recomputes the EXACT pair set from the raw
-    // tables and asserts each family's recall guarantee as literal TRUE —
-    // the q_cosine_pairs quadratic with the lsh_ok verdict appended
-    "q_embed_pairs" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |c AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |         CASE WHEN list_dot_product(a.v, a.v) = 0
-        |                OR list_dot_product(b.v, b.v) = 0 THEN 0.0
-        |              ELSE list_dot_product(a.v, b.v) /
-        |                   (sqrt(list_dot_product(a.v, a.v)) *
-        |                    sqrt(list_dot_product(b.v, b.v)))
-        |         END AS cos_raw
-        |  FROM e a JOIN e b ON a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, ROUND(cos_raw, 6) AS cos, TRUE AS lsh_ok
-        |FROM c WHERE cos_raw >= 0.3
-        |ORDER BY id_a, id_b""".stripMargin,
-    // q_minhash_pairs: exact char-5-shingle Jaccard pairs at 0.8. The
-    // size-ratio prefilter (J >= 0.8 implies max-size <= 1.25*min-size) is
-    // a mathematically lossless candidate bound, so the IEJoin-band here
-    // and the log-bucket band on the Spark side produce the SAME final
-    // pair set; list semantics mirror charShingles (distinct k-grams of
-    // lower(trim(text)), short text -> the text itself as one shingle)
-    "q_minhash_pairs" ->
-      """WITH sh AS (
-        |  SELECT doc_id AS id,
-        |         CASE WHEN len(s) < 5 THEN [s]
-        |              ELSE list_distinct([substr(s, i, 5)
-        |                                  for i in generate_series(1, len(s) - 4)])
-        |         END AS g
-        |  FROM (SELECT doc_id, lower(trim(text)) AS s FROM documents)),
-        |sz AS (SELECT id, g, len(g) AS n FROM sh),
-        |cand AS (
-        |  SELECT a.id AS id_a, b.id AS id_b,
-        |         len(list_intersect(a.g, b.g)) AS ni, a.n + b.n AS ns
-        |  FROM sz a JOIN sz b
-        |    ON a.id < b.id
-        |   AND a.n <= b.n * 1.25 AND b.n <= a.n * 1.25)
-        |SELECT id_a, id_b,
-        |       ROUND(CAST(ni AS DOUBLE) / (ns - ni), 6) AS jaccard,
-        |       TRUE AS mh_ok
-        |FROM cand WHERE CAST(ni AS DOUBLE) / (ns - ni) >= 0.8
-        |ORDER BY id_a, id_b""".stripMargin,
-    // q_simhash_pairs: FULL differential oracle — the portable 60-bit
-    // md5-prefix signature is recomputed independently and the exact
-    // hamming<=3 pair set compared row-for-row (the engine's chunk-bucketed
-    // candidates are pigeonhole-complete for hamming < 4, so the sets must
-    // be identical)
-    "q_simhash_pairs" ->
-      """WITH tok AS (
-        |  SELECT doc_id AS id,
-        |         unnest(list_filter(string_split_regex(lower(text), '\s+'),
-        |                            x -> len(x) > 0)) AS t
-        |  FROM documents),
-        |th AS (SELECT id, CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT) AS h FROM tok),
-        |bits AS (
-        |  SELECT id, g.b AS b,
-        |         SUM(CASE WHEN (h >> g.b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        |  FROM th, generate_series(0, 59) g(b)
-        |  GROUP BY 1, 2),
-        |sig AS (
-        |  SELECT id,
-        |         SUM(CASE WHEN s >= 0 THEN (CAST(1 AS BIGINT) << b)
-        |                  ELSE CAST(0 AS BIGINT) END) AS sig
-        |  FROM bits GROUP BY 1)
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |       CAST(bit_count(xor(a.sig, b.sig)) AS INT) AS hamming
-        |FROM sig a JOIN sig b ON a.id < b.id
-        |WHERE bit_count(xor(a.sig, b.sig)) <= 3
-        |ORDER BY id_a, id_b""".stripMargin,
-    // q_doc_embed_pairs: exact sparse-cosine pairs over the portable md5
-    // hashing-TF bigram posting — integer-valued weights make dot and
-    // norm exact cross-engine sums; gram builder mirrors wordShingles
-    // (distinct space-joined bigrams of the whitespace tokens of
-    // lower(text), shorter-than-2 token lists -> one gram of all tokens)
-    "q_doc_embed_pairs" ->
-      """WITH t AS (SELECT doc_id,
-        |                  list_filter(string_split_regex(lower(text), '\s+'),
-        |                              x -> len(x) > 0) AS t
-        |           FROM documents),
-        |sh AS (SELECT doc_id AS id,
-        |              CASE WHEN len(t) < 2 THEN [array_to_string(t, ' ')]
-        |                   ELSE list_distinct([concat_ws(' ', t[i], t[i+1])
-        |                                       for i in generate_series(1, len(t) - 1)])
-        |              END AS g
-        |       FROM t),
-        |p AS (SELECT id, CAST(('0x' || substr(md5(gram), 1, 12)) AS BIGINT) % 256 AS dim
-        |      FROM (SELECT id, unnest(g) AS gram FROM sh)),
-        |w AS (SELECT id, dim, CAST(COUNT(*) AS DOUBLE) AS w FROM p GROUP BY 1, 2),
-        |n AS (SELECT id, sqrt(SUM(w * w)) AS nrm FROM w GROUP BY 1),
-        |d AS (SELECT a.id AS id_a, b.id AS id_b, SUM(a.w * b.w) AS dot
-        |      FROM w a JOIN w b ON a.dim = b.dim AND a.id < b.id GROUP BY 1, 2)
-        |SELECT d.id_a, d.id_b, ROUND(d.dot / (na.nrm * nb.nrm), 6) AS cos,
-        |       TRUE AS lsh_ok
-        |FROM d
-        |JOIN n na ON d.id_a = na.id
-        |JOIN n nb ON d.id_b = nb.id
-        |WHERE d.dot / (na.nrm * nb.nrm) >= 0.8
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q_text_stats" ->
-      """SELECT doc_id AS id,
-        |       CAST(length(text) AS BIGINT) AS n_chars,
-        |       CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-        |                            x -> len(x) > 0)) AS BIGINT) AS n_tokens,
-        |       ROUND(length(text) /
-        |             GREATEST(len(list_filter(string_split_regex(trim(text), '\s+'),
-        |                                      x -> len(x) > 0)), 1), 4) AS avg_token_len,
-        |       ROUND(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) /
-        |             GREATEST(length(text), 1), 4) AS alpha_ratio,
-        |       ROUND(length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) /
-        |             GREATEST(length(text), 1), 4) AS punct_ratio,
-        |       ROUND(len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
-        |                 x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) /
-        |             GREATEST(len(list_filter(string_split_regex(trim(text), '\s+'),
-        |                                      x -> len(x) > 0)), 1), 4) AS stopword_ratio
-        |FROM documents ORDER BY id""".stripMargin,
-    "q_token_count" ->
-      """SELECT doc_id AS id,
-        |       CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-        |                            x -> len(x) > 0)) AS BIGINT) AS n_tokens_ws,
-        |       CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+'))
-        |            + len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS BIGINT)
-        |         AS n_tokens_re
-        |FROM documents ORDER BY id""".stripMargin,
-    // q_repetition: the gram builder mirrors q_ngram_jaccard's sh CTE
-    // (lowercase, \s+ tokens, distinct 3-grams); total grams = n_tokens - 2
-    "q_repetition" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(text), '\s+'),
-        |                     x -> len(x) > 0) AS t
-        |  FROM documents)
-        |SELECT doc_id AS id,
-        |       CAST(len(t) AS BIGINT) AS n_tokens,
-        |       CASE WHEN len(t) < 3 THEN 0.0
-        |            ELSE ROUND(1.0 -
-        |              CAST(len(list_distinct([concat_ws(' ', t[i], t[i+1], t[i+2])
-        |                                      for i in generate_series(1, len(t) - 2)]))
-        |                   AS DOUBLE) / CAST(len(t) - 2 AS DOUBLE), 6)
-        |       END AS rep_frac
-        |FROM tok ORDER BY id""".stripMargin,
-    "q_lang_id" ->
-      """WITH s AS (
-        |  SELECT doc_id AS id,
-        |         len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is','it','that','for'))) AS s_en,
-        |         len(list_filter(t, x -> x IN ('der','die','das','und','ist','nicht','ein','mit','zu','den'))) AS s_de,
-        |         len(list_filter(t, x -> x IN ('le','la','les','et','est','un','une','des','que','pour'))) AS s_fr,
-        |         len(list_filter(t, x -> x IN ('el','la','los','las','y','es','un','una','que','por'))) AS s_es,
-        |         len(list_filter(t, x -> x IN ('il','la','gli','e','che','un','una','per','non','sono'))) AS s_it
-        |  FROM (SELECT doc_id,
-        |               list_filter(string_split_regex(trim(lower(text)), '\s+'),
-        |                           x -> len(x) > 0) AS t
-        |        FROM documents))
-        |SELECT id,
-        |       CASE
-        |         WHEN s_en = 0 AND s_de = 0 AND s_fr = 0 AND s_es = 0 AND s_it = 0 THEN 'und'
-        |         WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es AND s_en >= s_it THEN 'en'
-        |         WHEN s_de >= s_fr AND s_de >= s_es AND s_de >= s_it THEN 'de'
-        |         WHEN s_fr >= s_es AND s_fr >= s_it THEN 'fr'
-        |         WHEN s_es >= s_it THEN 'es'
-        |         ELSE 'it'
-        |       END AS lang_pred
-        |FROM s ORDER BY id""".stripMargin,
-    // q_collation: lower()-normalized classic grouping
-    "q_collation" ->
-      """SELECT lower(CASE WHEN event_id % 2 = 0 THEN upper(event_type)
-        |             ELSE event_type END) AS event_type,
-        |       CAST(COUNT(*) AS BIGINT) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_sql_script: classic-syntax equivalent of the scripted block;
-    // the MAX/2 cut is bit-identical cross-engine
-    "q_sql_script" ->
-      """SELECT o_orderpriority,
-        |       COUNT(*) AS n_above,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents
-        |FROM orders
-        |WHERE o_totalprice > (SELECT MAX(o_totalprice) / 2 FROM orders)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    // q_group_by_all: DuckDB originated GROUP BY ALL — oracle mirrors
-    // the surface verbatim
-    "q_group_by_all" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |         AS sum_cents
-        |FROM orders
-        |GROUP BY ALL
-        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin,
-    // q_param_query: the same query with the parameter literals inline
-    "q_param_query" ->
-      """SELECT c_mktsegment,
-        |       CAST(COUNT(*) AS BIGINT) AS n_customers,
-        |       MIN(c_custkey) AS min_key,
-        |       CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS BIGINT)
-        |         AS sum_bal_cents
-        |FROM customer
-        |WHERE c_mktsegment IN ('BUILDING', 'MACHINERY', 'AUTOMOBILE')
-        |  AND c_acctbal >= CAST(250.0 AS DOUBLE)
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-    // q_identifier_param: the same grouped scan with the names inline
-    "q_identifier_param" ->
-      """SELECT o_orderpriority,
-        |       CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       MAX(o_totalprice) AS max_price
-        |FROM orders
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    // q_state_reader: state content == the batch aggregate; the
-    // state-metadata probe asserted as literal TRUE
-    "q_state_reader" ->
-      """SELECT CAST(epoch(time_bucket(INTERVAL '1 day', ts)) AS BIGINT)
-        |         AS window_start,
-        |       event_type,
-        |       CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       ROUND(SUM(value), 4) AS sum_value,
-        |       TRUE AS op_ok
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // q_state_rewrite: totals read from the REPARTITIONED checkpoint's
-    // state must equal the whole table's per-type totals — first half
-    // carried as initial state, second half processed at 16 partitions
-    "q_state_rewrite" ->
-      """SELECT event_type,
-        |       CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
-        |         AS cents,
-        |       TRUE AS repartitioned_ok
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-    // q_sql_pipe: the classic-syntax equivalent of the pipe pipeline
-    "q_sql_pipe" ->
-      """SELECT o_orderpriority,
-        |       COUNT(*) AS n_orders,
-        |       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-        |            AS BIGINT) AS sum_cents
-        |FROM orders WHERE o_totalprice > 100000
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_sql_text" ->
-      """SELECT doc_id AS id,
-        |       CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-        |                            x -> len(x) > 0)) AS BIGINT) AS n_tokens,
-        |       CAST(GREATEST(len(list_distinct(
-        |              [concat_ws(' ', t[i], t[i+1], t[i+2])
-        |               for i in generate_series(1, greatest(len(t)-2, 1))])), 1) AS BIGINT)
-        |         AS n_shingles
-        |FROM (SELECT doc_id, text,
-        |             list_filter(string_split_regex(trim(lower(text)), '\s+'),
-        |                         x -> len(x) > 0) AS t
-        |      FROM documents)
-        |ORDER BY id""".stripMargin,
-    "q_stats_moments" ->
-      """SELECT l_returnflag,
-        |       ROUND(AVG(l_quantity), 4) AS mean_qty,
-        |       ROUND(VAR_SAMP(l_quantity), 4) AS var_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_salted_join" ->
-      """SELECT l.l_orderkey, l.l_quantity, o.o_totalprice
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |ORDER BY l.l_orderkey, l.l_quantity, o.o_totalprice""".stripMargin,
-    "q_window_funcs" ->
-      """SELECT o_orderkey, o_orderpriority,
-        |       lag(o_totalprice, 1) OVER w AS prev_price,
-        |       lead(o_totalprice, 1) OVER w AS next_price,
-        |       CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-        |       ROUND(percent_rank() OVER w, 6) AS pct_rank,
-        |       ROUND(cume_dist() OVER w, 6) AS cdist
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_orderpriority
-        |             ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_having_in" ->
-      """SELECT o.o_orderkey, o.o_totalprice,
-        |       CAST(SUM(l.l_quantity) AS DOUBLE) AS total_qty
-        |FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |WHERE o.o_orderkey IN (SELECT l_orderkey FROM lineitem
-        |                       GROUP BY l_orderkey HAVING SUM(l_quantity) > 210)
-        |GROUP BY o.o_orderkey, o.o_totalprice
-        |ORDER BY o.o_orderkey""".stripMargin,
-    "q_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty,
-        |       CAST(COUNT(*) AS BIGINT) AS n
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "q_bool_agg" ->
-      """SELECT l_returnflag,
-        |       BOOL_AND(l_quantity > 0.0) AS all_positive,
-        |       BOOL_OR(l_discount > 0.09) AS any_deep_discount,
-        |       CAST(COUNT(*) FILTER (WHERE l_tax > 0.04) AS BIGINT) AS n_high_tax
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // q_heavy_hitters: the sketch's guarantee set equals the exact-frequency
-    // set because the item distribution has a designed gap around the
-    // threshold (see qHeavyHitters doc) — DuckDB computes exact frequencies.
-    "q_heavy_hitters" ->
-      """WITH src AS (
-        |  SELECT CASE WHEN o_orderkey % 2 = 0 THEN 'h0'
-        |              WHEN o_orderkey % 4 = 1 THEN 'h1'
-        |              ELSE 'tail_' || CAST(o_orderkey % 499 AS VARCHAR) END AS item
-        |  FROM orders),
-        |c AS (SELECT item, COUNT(*) AS cnt FROM src GROUP BY item),
-        |n AS (SELECT COUNT(*) AS n FROM src)
-        |SELECT item FROM c, n WHERE cnt * 10 > n ORDER BY item""".stripMargin,
-    "q_pruned_scan" ->
-      """SELECT event_id, user_id, event_type, value
-        |FROM events WHERE CAST(ts AS DATE) = DATE '2024-01-15'
-        |ORDER BY event_id""".stripMargin,
-    // q_zorder_scan: layout changes bytes touched, never answers — the
-    // oracle is the same filter on the original table
-    "q_zorder_scan" ->
-      """SELECT event_id, user_id, event_type, value
-        |FROM events WHERE value >= 100.0 AND value < 120.0
-        |ORDER BY event_id""".stripMargin,
-    // q_compaction: layout maintenance must never change answers — the
-    // oracle is the source content itself
-    "q_compaction" ->
-      """SELECT event_id, event_type, value
-        |FROM events ORDER BY event_id""".stripMargin,
-    // q_json_roundtrip: the roundtrip is the identity on these columns, so
-    // the oracle is simply the original table
-    "q_json_roundtrip" ->
-      "SELECT event_id, event_type, value FROM events ORDER BY event_id",
-    // q_gini: rank formula over ascending sizes; integer sums, two
-    // divisions at the end with identical operand structure
-    "q_gini" ->
-      """WITH s AS (
-        |  SELECT n_chars,
-        |         ROW_NUMBER() OVER (ORDER BY n_chars, doc_id) AS i
-        |  FROM documents),
-        |a AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |         CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-        |         CAST(SUM(i * n_chars) AS BIGINT) AS weighted
-        |  FROM s)
-        |SELECT n_docs, total_chars,
-        |       ROUND(2 * weighted / (n_docs * total_chars)
-        |             - (n_docs + 1) / n_docs, 6) AS gini
-        |FROM a""".stripMargin,
-    // q_ks_drift: ECDF difference over the compact distinct-length
-    // domain; proportions from totals, max abs difference — identical
-    // arithmetic shape in both engines
-    "q_ks_drift" ->
-      """WITH cnt AS (
-        |  SELECT n_chars,
-        |         CAST(SUM(CASE WHEN CAST(substr(source, 4) AS INT) < 10
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-        |         CAST(SUM(CASE WHEN CAST(substr(source, 4) AS INT) < 10
-        |                       THEN 0 ELSE 1 END) AS BIGINT) AS cb
-        |  FROM documents GROUP BY n_chars),
-        |ecdf AS (
-        |  SELECT
-        |    SUM(ca) OVER (ORDER BY n_chars ROWS UNBOUNDED PRECEDING) /
-        |      (SELECT CAST(SUM(ca) AS DOUBLE) FROM cnt) AS fa,
-        |    SUM(cb) OVER (ORDER BY n_chars ROWS UNBOUNDED PRECEDING) /
-        |      (SELECT CAST(SUM(cb) AS DOUBLE) FROM cnt) AS fb
-        |  FROM cnt)
-        |SELECT (SELECT CAST(SUM(ca) AS BIGINT) FROM cnt) AS n_a,
-        |       (SELECT CAST(SUM(cb) AS BIGINT) FROM cnt) AS n_b,
-        |       ROUND(MAX(ABS(fa - fb)), 6) AS ks_stat
-        |FROM ecdf""".stripMargin,
-    // q_psi_drift: proportions over ALL buckets, then the both-positive
-    // restriction, then one scalar sum — mirrored exactly
-    "q_psi_drift" ->
-      """WITH cnt AS (
-        |  SELECT CAST(FLOOR(value / 20) AS BIGINT) AS bucket,
-        |         CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |              AS BIGINT) AS cp,
-        |         CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-        |              AS BIGINT) AS cv
-        |  FROM events WHERE event_type IN ('purchase', 'view')
-        |  GROUP BY 1),
-        |p AS (
-        |  SELECT bucket, cp, cv,
-        |         cp / (SELECT CAST(SUM(cp) AS DOUBLE) FROM cnt) AS pp,
-        |         cv / (SELECT CAST(SUM(cv) AS DOUBLE) FROM cnt) AS pv
-        |  FROM cnt)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_buckets,
-        |       ROUND(SUM((pp - pv) * ln(pp / pv)), 6) AS psi
-        |FROM p WHERE cp > 0 AND cv > 0""".stripMargin,
-    // q_csv_roundtrip: quoting-safe identity on these columns (props is
-    // JSON — quotes/commas/braces must survive CSV write+read verbatim)
-    "q_csv_roundtrip" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type,
-        |       value, props
-        |FROM events ORDER BY event_id""".stripMargin,
-    // q_rolling_window: floor(epoch(·)) matches Spark's unix_timestamp
-    // truncation of the µs-truncated nanos timestamp
-    "q_rolling_window" ->
-      """SELECT event_id, event_type,
-        |       CAST(COUNT(*) OVER w AS BIGINT) AS n_prev_hour,
-        |       ROUND(SUM(value) OVER w, 4) AS sum_prev_hour
-        |FROM (SELECT event_id, event_type,
-        |             CAST(floor(epoch(ts)) AS BIGINT) AS ts_sec, value
-        |      FROM events)
-        |WINDOW w AS (PARTITION BY event_type ORDER BY ts_sec
-        |             RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-    "q_edit_pairs" ->
-      """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-        |       CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
-        |FROM customer a JOIN customer b
-        |  ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-        |WHERE levenshtein(a.c_name, b.c_name) <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-    // q_dup_clusters: the q_ngram_jaccard pair pipeline as a CTE, then
-    // min-reachable-id per node via a recursive CTE (transitive closure is
-    // fine at oracle scale; the engine side uses iterative label
-    // propagation instead)
-    "q_dup_clusters" -> dupClustersOracle,
-    "q_graph_bfs" -> dupBfsOracle,
-    // q_graph_triangles: the same exact pair set as q_dup_clusters, then
-    // oriented wedge join + closing edge; wedges integer-exact via DIV,
-    // transitivity double with identical operand order in both engines
-    "q_graph_triangles" ->
-      """WITH sh AS (
-        |  SELECT doc_id AS id,
-        |         CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |              ELSE list_distinct([concat_ws(' ', t[i], t[i+1], t[i+2])
-        |                                  for i in generate_series(1, len(t) - 2)])
-        |         END AS g
-        |  FROM (SELECT doc_id,
-        |               list_filter(string_split_regex(lower(text), '\s+'),
-        |                           x -> len(x) > 0) AS t
-        |        FROM documents)),
-        |posting AS (SELECT id, unnest(g) AS gram FROM sh),
-        |sizes AS (SELECT id, len(g) AS n_sh FROM sh),
-        |shared AS (SELECT gram FROM posting
-        |           GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 10000),
-        |pruned AS (SELECT id, gram FROM posting JOIN shared USING (gram)),
-        |inter AS (
-        |  SELECT a.id AS id_a, b.id AS id_b, CAST(COUNT(*) AS BIGINT) AS n_inter
-        |  FROM pruned a JOIN pruned b USING (gram)
-        |  WHERE a.id < b.id GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT i.id_a, i.id_b
-        |  FROM inter i
-        |  JOIN sizes sa ON i.id_a = sa.id
-        |  JOIN sizes sb ON i.id_b = sb.id
-        |  WHERE CAST(i.n_inter AS DOUBLE) /
-        |        CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE) >= 0.5),
-        |tri AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
-        |  FROM pairs ab
-        |  JOIN pairs ac ON ab.id_a = ac.id_a AND ab.id_b < ac.id_b
-        |  JOIN pairs bc ON bc.id_a = ab.id_b AND bc.id_b = ac.id_b),
-        |deg AS (
-        |  SELECT id, CAST(COUNT(*) AS BIGINT) AS deg
-        |  FROM (SELECT id_a AS id FROM pairs
-        |        UNION ALL SELECT id_b FROM pairs)
-        |  GROUP BY id),
-        |w AS (SELECT CAST(COALESCE(SUM(deg * (deg - 1) // 2), 0) AS BIGINT)
-        |             AS n_wedges FROM deg),
-        |ne AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_edges FROM pairs)
-        |SELECT ne.n_edges, tri.n_triangles, w.n_wedges,
-        |       CASE WHEN w.n_wedges > 0
-        |            THEN ROUND(tri.n_triangles * 3 / w.n_wedges, 6)
-        |            ELSE 0.0 END AS transitivity
-        |FROM ne, tri, w""".stripMargin,
-    // q_dedup_canonical: q_dup_clusters' recursive-CTE clustering plus the
-    // arithmetic quality formula (TextAnalysis.qualityScore — the same
-    // ratio recipes q_text_stats pins), arg-max via row_number
-    "q_dedup_canonical" ->
-      """WITH RECURSIVE
-        |sh AS (
-        |  SELECT doc_id AS id,
-        |         CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |              ELSE list_distinct([concat_ws(' ', t[i], t[i+1], t[i+2])
-        |                                  for i in generate_series(1, len(t) - 2)])
-        |         END AS g
-        |  FROM (SELECT doc_id,
-        |               list_filter(string_split_regex(lower(text), '\s+'),
-        |                           x -> len(x) > 0) AS t
-        |        FROM documents)),
-        |posting AS (SELECT id, unnest(g) AS gram FROM sh),
-        |sizes AS (SELECT id, len(g) AS n_sh FROM sh),
-        |shared AS (SELECT gram FROM posting
-        |           GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 10000),
-        |pruned AS (SELECT id, gram FROM posting JOIN shared USING (gram)),
-        |inter AS (
-        |  SELECT a.id AS id_a, b.id AS id_b, CAST(COUNT(*) AS BIGINT) AS n_inter
-        |  FROM pruned a JOIN pruned b USING (gram)
-        |  WHERE a.id < b.id GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT i.id_a, i.id_b
-        |  FROM inter i
-        |  JOIN sizes sa ON i.id_a = sa.id
-        |  JOIN sizes sb ON i.id_b = sb.id
-        |  WHERE CAST(i.n_inter AS DOUBLE) /
-        |        CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE) >= 0.5),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |          UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(id, comp) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT e.dst, r.comp FROM reach r JOIN edges e ON e.src = r.id),
-        |lbl AS (SELECT id, MIN(comp) AS comp FROM reach GROUP BY id),
-        |q AS (
-        |  SELECT doc_id,
-        |         ROUND(LEAST(1.0, GREATEST(0.0,
-        |           (CASE WHEN length(text) /
-        |                   GREATEST(len(list_filter(string_split_regex(trim(text), '\s+'),
-        |                                            x -> len(x) > 0)), 1)
-        |                 BETWEEN 3 AND 12 THEN 1.0 ELSE 0.5 END)
-        |           * (0.5 + 2 * len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
-        |                x -> x IN ('the','a','of','and','to','in','is','it','that','for')))
-        |                / GREATEST(len(list_filter(string_split_regex(trim(text), '\s+'),
-        |                                           x -> len(x) > 0)), 1))
-        |           - 2 * length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))
-        |               / GREATEST(length(text), 1))), 4) AS quality
-        |  FROM documents),
-        |m AS (
-        |  SELECT l.comp AS cluster_id, l.id AS doc_id, q.quality,
-        |         ROW_NUMBER() OVER (PARTITION BY l.comp
-        |                            ORDER BY q.quality DESC, l.id) AS rn,
-        |         COUNT(*) OVER (PARTITION BY l.comp) AS n_members
-        |  FROM lbl l JOIN q ON q.doc_id = l.id)
-        |SELECT cluster_id, CAST(n_members AS BIGINT) AS n_members,
-        |       doc_id AS canonical_id, quality AS canonical_quality
-        |FROM m WHERE rn = 1 ORDER BY cluster_id""".stripMargin,
-    "q_bucketed_join" ->
-      """SELECT l.l_orderkey, l.l_quantity, o.o_totalprice
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |ORDER BY l.l_orderkey, l.l_quantity, o.o_totalprice""".stripMargin,
-    "q_merge_upsert" ->
-      """WITH base AS (SELECT o_orderkey AS k, o_totalprice AS price FROM orders),
-        |u AS (SELECT o_orderkey AS k, ROUND(o_totalprice + 1000.0, 2) AS new_price
-        |      FROM orders WHERE o_orderkey % 7 = 0)
-        |SELECT COALESCE(b.k, u.k) AS k,
-        |       ROUND(COALESCE(u.new_price, b.price), 2) AS price,
-        |       CASE WHEN u.new_price IS NOT NULL THEN 'updated'
-        |            ELSE 'unchanged' END AS op
-        |FROM base b FULL OUTER JOIN u ON b.k = u.k
-        |ORDER BY k""".stripMargin,
-    "q_standardize" ->
-      """WITH e AS (SELECT vec_id,
-        |                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM embeddings),
-        |el AS (SELECT vec_id, unnest(generate_series(1, len(v))) AS i, v FROM e),
-        |x AS (SELECT vec_id, i - 1 AS dim, v[i] AS x FROM el),
-        |st AS (SELECT dim, AVG(x) AS mu, STDDEV_SAMP(x) AS sd FROM x GROUP BY dim)
-        |SELECT x.vec_id, CAST(x.dim AS BIGINT) AS dim,
-        |       ROUND((x.x - st.mu) / st.sd, 4) + 0.0 AS z
-        |FROM x JOIN st USING (dim)
-        |WHERE x.vec_id < 100
-        |ORDER BY vec_id, dim""".stripMargin,
-    "q_unpivot" ->
-      """WITH w AS (
-        |  SELECT l_returnflag,
-        |         CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty,
-        |         ROUND(SUM(l_extendedprice), 2) AS sum_base
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_returnflag, 'sum_qty' AS metric, sum_qty AS value FROM w
-        |UNION ALL
-        |SELECT l_returnflag, 'sum_base' AS metric, sum_base AS value FROM w
-        |ORDER BY l_returnflag, metric""".stripMargin,
-    "q_array_ops" ->
-      """WITH t AS (
-        |  SELECT doc_id AS id,
-        |         list_filter(string_split_regex(lower(text), '\s+'),
-        |                     x -> len(x) > 0) AS toks
-        |  FROM documents)
-        |SELECT id,
-        |       array_to_string(list_sort(toks)[1:3], ',') AS first3,
-        |       CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
-        |       CAST(CASE WHEN list_contains(toks, 'the') THEN 1 ELSE 0 END AS BIGINT)
-        |         AS has_the,
-        |       CAST(COALESCE(list_position(toks, 'the'), 0) AS BIGINT) AS pos_the
-        |FROM t ORDER BY id""".stripMargin,
-    "q_resample_fill" ->
-      """WITH ev AS (SELECT * FROM events WHERE user_id < 50),
-        |span AS (
-        |  SELECT user_id, date_trunc('hour', min(ts)) AS h0,
-        |         date_trunc('hour', max(ts)) AS h1
-        |  FROM ev GROUP BY user_id),
-        |buckets AS (
-        |  SELECT user_id,
-        |         unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS bucket
-        |  FROM span),
-        |counts AS (
-        |  SELECT user_id, date_trunc('hour', ts) AS bucket,
-        |         CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM ev GROUP BY 1, 2)
-        |SELECT b.user_id,
-        |       CAST(epoch(b.bucket) AS BIGINT) AS bucket_ts,
-        |       COALESCE(c.n, 0) AS n_events
-        |FROM buckets b LEFT JOIN counts c
-        |  ON b.user_id = c.user_id AND b.bucket = c.bucket
-        |ORDER BY b.user_id, bucket_ts""".stripMargin,
-    "q_redact" ->
-      """WITH r AS (
-        |  SELECT doc_id AS id,
-        |         regexp_replace(
-        |           regexp_replace(
-        |             regexp_replace(text,
-        |               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |             '[0-9]{9,}', '<ID>', 'g'),
-        |           '\+?[0-9][0-9()\- ]{7,}[0-9]', '<PHONE>', 'g') AS clean_text
-        |  FROM documents)
-        |SELECT id, clean_text,
-        |       CAST(CASE WHEN regexp_matches(clean_text, '<EMAIL>|<PHONE>|<ID>')
-        |                 THEN 1 ELSE 0 END AS BIGINT) AS changed
-        |FROM r ORDER BY id""".stripMargin,
-    "q_chunk_docs" ->
-      """WITH tk AS (
-        |  SELECT doc_id AS id,
-        |         list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS t
-        |  FROM documents),
-        |nz AS (SELECT * FROM tk WHERE len(t) > 0),
-        |x AS (
-        |  SELECT id, t,
-        |         unnest(generate_series(0, CAST(floor((len(t) - 1) / 48) AS BIGINT)))
-        |           AS chunk_idx
-        |  FROM nz),
-        |c AS (
-        |  SELECT id, chunk_idx,
-        |         t[1 + chunk_idx * 48 : least(chunk_idx * 48 + 64, len(t))] AS chunk
-        |  FROM x)
-        |SELECT id, chunk_idx,
-        |       CAST(len(chunk) AS BIGINT) AS n_chunk_tokens,
-        |       substr(array_to_string(chunk, ' '), 1, 40) AS chunk_head
-        |FROM c ORDER BY id, chunk_idx""".stripMargin,
-    "q_boilerplate" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |         unnest(CASE WHEN len(t) < 8 THEN [array_to_string(t, ' ')]
-        |                ELSE list_distinct([array_to_string(t[i:i+7], ' ')
-        |                                    for i in generate_series(1, len(t) - 7)])
-        |                END) AS g
-        |  FROM (SELECT doc_id,
-        |               list_filter(string_split_regex(lower(text), '\s+'),
-        |                           x -> len(x) > 0) AS t
-        |        FROM documents)),
-        |df AS (SELECT g, COUNT(*) AS df FROM sh GROUP BY g)
-        |SELECT sh.doc_id,
-        |       CAST(COUNT(*) AS BIGINT) AS n_spans,
-        |       CAST(SUM(CASE WHEN df.df >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_shared,
-        |       ROUND(CAST(SUM(CASE WHEN df.df >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
-        |             / CAST(COUNT(*) AS DOUBLE), 6) AS shared_frac
-        |FROM sh JOIN df USING (g)
-        |GROUP BY sh.doc_id ORDER BY sh.doc_id""".stripMargin,
-    "q_pack_sequences" ->
-      """WITH d AS (
-        |  SELECT source AS grp, doc_id AS id,
-        |         CAST(len(list_filter(string_split_regex(text, '\s+'),
-        |                              x -> len(x) > 0)) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (SELECT grp, id, n_tokens,
-        |             SUM(n_tokens) OVER (PARTITION BY grp ORDER BY id
-        |                                 ROWS UNBOUNDED PRECEDING) AS cum
-        |      FROM d)
-        |SELECT grp, CAST(FLOOR((cum - n_tokens) / 512) AS BIGINT) AS bin,
-        |       CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |       CAST(SUM(n_tokens) AS BIGINT) AS bin_tokens
-        |FROM c GROUP BY grp, bin ORDER BY grp, bin""".stripMargin,
-    "q_outer_join" ->
-      """SELECT c.c_custkey,
-        |       CAST(COUNT(o.o_orderkey) AS BIGINT) AS n_urgent,
-        |       ROUND(COALESCE(SUM(o.o_totalprice), 0.0), 2) AS urgent_value
-        |FROM customer c LEFT JOIN (SELECT * FROM orders
-        |                           WHERE o_orderpriority = '1-URGENT') o
-        |  ON c.c_custkey = o.o_custkey
-        |GROUP BY c.c_custkey ORDER BY c.c_custkey""".stripMargin,
-    "q_full_outer_join" ->
-      """WITH a AS (SELECT o_custkey AS k, CAST(COUNT(*) AS BIGINT) AS n_urgent
-        |           FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY 1),
-        |     b AS (SELECT o_custkey AS k, CAST(COUNT(*) AS BIGINT) AS n_low
-        |           FROM orders WHERE o_orderpriority = '5-LOW' GROUP BY 1)
-        |SELECT COALESCE(a.k, b.k) AS k,
-        |       COALESCE(a.n_urgent, 0) AS n_urgent,
-        |       COALESCE(b.n_low, 0) AS n_low
-        |FROM a FULL OUTER JOIN b ON a.k = b.k
-        |ORDER BY k""".stripMargin,
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(GROUPING(l_returnflag) AS BIGINT) AS g_rf,
-        |       CAST(GROUPING(l_linestatus) AS BIGINT) AS g_ls,
-        |       CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty,
-        |       CAST(COUNT(*) AS BIGINT) AS n
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY g_rf, g_ls, l_returnflag NULLS FIRST,
-        |         l_linestatus NULLS FIRST""".stripMargin,
-    "q_exists_correlated" ->
-      """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders
-        |FROM orders o
-        |WHERE EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity >= 48)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_correlated_scalar" ->
-      """SELECT l_orderkey, l_extendedprice
-        |FROM lineitem l1
-        |WHERE l_extendedprice = (SELECT MIN(l2.l_extendedprice)
-        |                         FROM lineitem l2
-        |                         WHERE l2.l_orderkey = l1.l_orderkey)
-        |ORDER BY l_orderkey, l_extendedprice""".stripMargin,
-    "q_arg_minmax" ->
-      """SELECT o_orderpriority,
-        |       ARG_MAX(o_totalprice, o_orderkey) AS price_at_max_key,
-        |       ARG_MIN(o_totalprice, o_orderkey) AS price_at_min_key,
-        |       MAX(o_orderkey) AS max_key
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_collect_list" ->
-      """SELECT o_custkey,
-        |       array_to_string(list_transform(list_sort(list(o_orderkey)),
-        |                                      x -> CAST(x AS VARCHAR)), ',')
-        |         AS order_ids
-        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    "q_stats_corr" ->
-      """SELECT l_returnflag,
-        |       ROUND(CORR(l_quantity, l_extendedprice), 4) AS corr_qp,
-        |       ROUND(COVAR_SAMP(l_quantity, l_extendedprice), 2) AS covar_qp,
-        |       ROUND(STDDEV_SAMP(l_extendedprice), 4) AS sd_price
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_date_ops" ->
-      """SELECT o_orderkey,
-        |       strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS o_date,
-        |       strftime(CAST(date_trunc('month', o_orderdate) AS DATE), '%Y-%m-%d')
-        |         AS month_start,
-        |       strftime(last_day(CAST(o_orderdate AS DATE)), '%Y-%m-%d') AS month_end,
-        |       strftime(CAST(o_orderdate + INTERVAL 3 MONTH AS DATE), '%Y-%m-%d')
-        |         AS plus3m,
-        |       CAST(date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-        |            AS BIGINT) AS days_since,
-        |       CAST(dayofweek(CAST(o_orderdate AS DATE)) + 1 AS BIGINT) AS dow,
-        |       CAST(quarter(CAST(o_orderdate AS DATE)) AS BIGINT) AS qtr
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_string_ops" ->
-      """SELECT c_custkey,
-        |       upper(c_mktsegment) AS seg_u,
-        |       lpad(CAST(c_custkey AS VARCHAR), 10, '0') AS key_pad,
-        |       reverse(c_name) AS name_rev,
-        |       regexp_extract(c_name, '([0-9]+)', 1) AS name_num,
-        |       replace(c_name, 'Customer', 'C') AS name_short,
-        |       concat_ws('|', c_mktsegment, CAST(c_custkey AS VARCHAR)) AS seg_key
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_part_join" ->
-      """SELECT p.p_brand,
-        |       ROUND(SUM(l.l_extendedprice * (1.0 - l.l_discount)), 2) AS revenue,
-        |       CAST(COUNT(*) AS BIGINT) AS n_items
-        |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        |GROUP BY p.p_brand ORDER BY p.p_brand""".stripMargin,
-    "q_conditional" ->
-      """SELECT o_orderkey,
-        |       COALESCE(NULLIF(o_orderstatus, 'O'), 'open') AS status_x,
-        |       GREATEST(o_totalprice, 50000.0) AS floor_price,
-        |       LEAST(o_totalprice, 250000.0) AS cap_price,
-        |       CASE WHEN o_totalprice BETWEEN 50000.0 AND 250000.0 THEN 'mid'
-        |            WHEN o_totalprice < 50000.0 THEN 'low'
-        |            ELSE 'high' END AS band
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    // q_stratified_sample: sum_ids pins the exact sampled SET per stratum,
-    // not just its cardinality
-    "q_stratified_sample" ->
-      """SELECT event_type,
-        |       CAST(COUNT(*) AS BIGINT) AS n_sampled,
-        |       CAST(SUM(event_id) AS BIGINT) AS sum_ids
-        |FROM (SELECT event_type, event_id,
-        |             CAST(('0x' || substr(md5(
-        |                 CAST(length(event_type) AS VARCHAR) || ':' ||
-        |                 event_type || '|' ||
-        |                 CAST(length(CAST(event_id AS VARCHAR)) AS VARCHAR) || ':' ||
-        |                 CAST(event_id AS VARCHAR)), 1, 12))
-        |                  AS BIGINT) % 1000000 AS h
-        |      FROM events)
-        |WHERE h < 200000
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_weighted_sample" ->
-      """WITH x AS (
-        |  SELECT lang,
-        |         LEAST(CAST(1.0 AS DOUBLE),
-        |               CAST(n_chars AS DOUBLE) / CAST(1000.0 AS DOUBLE)) AS w,
-        |         CAST(('0x' || substr(md5('w|' || CAST(doc_id AS VARCHAR)), 1, 12))
-        |              AS BIGINT) % 1000000 AS h
-        |  FROM documents)
-        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_sampled,
-        |       ROUND(SUM(w), 4) AS sum_w
-        |FROM x WHERE CAST(h AS DOUBLE) < w * 1000000
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    "q_sample_mix" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |         CASE WHEN CAST(substr(source, 4) AS INT) < 10
-        |              THEN CAST(1.0 AS DOUBLE) ELSE CAST(3.0 AS DOUBLE) END AS t,
-        |         CAST(('0x' || substr(md5('mix|' || CAST(doc_id AS VARCHAR)), 1, 12))
-        |              AS BIGINT) % 1000000 AS h
-        |  FROM documents),
-        |n AS (SELECT source, COUNT(*) AS n_src FROM d GROUP BY source),
-        |r AS (SELECT d.source, d.h, d.t, n.n_src,
-        |             MIN(CAST(n.n_src AS DOUBLE) / d.t) OVER () AS tt
-        |      FROM d JOIN n USING (source))
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_sampled
-        |FROM r
-        |WHERE CAST(h AS DOUBLE) < t * tt / CAST(n_src AS DOUBLE) * 1000000
-        |GROUP BY source ORDER BY source""".stripMargin,
-    "q_split_counts" ->
-      """SELECT CASE WHEN h < 100000 THEN 'val'
-        |            WHEN h < 200000 THEN 'test'
-        |            ELSE 'train' END AS split,
-        |       CAST(COUNT(*) AS BIGINT) AS n_docs
-        |FROM (SELECT CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))
-        |                  AS BIGINT) % 1000000 AS h
-        |      FROM documents)
-        |GROUP BY split ORDER BY split""".stripMargin,
-    "q_ngram_jaccard" ->
-      """WITH sh AS (
-        |  SELECT doc_id AS id,
-        |         CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |              ELSE list_distinct([concat_ws(' ', t[i], t[i+1], t[i+2])
-        |                                  for i in generate_series(1, len(t) - 2)])
-        |         END AS g
-        |  FROM (SELECT doc_id,
-        |               list_filter(string_split_regex(lower(text), '\s+'),
-        |                           x -> len(x) > 0) AS t
-        |        FROM documents)),
-        |posting AS (SELECT id, unnest(g) AS gram FROM sh),
-        |sizes AS (SELECT id, len(g) AS n_sh FROM sh),
-        |shared AS (SELECT gram FROM posting
-        |           GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 10000),
-        |pruned AS (SELECT id, gram FROM posting JOIN shared USING (gram)),
-        |inter AS (
-        |  SELECT a.id AS id_a, b.id AS id_b, CAST(COUNT(*) AS BIGINT) AS n_inter
-        |  FROM pruned a JOIN pruned b USING (gram)
-        |  WHERE a.id < b.id GROUP BY 1, 2)
-        |SELECT i.id_a, i.id_b,
-        |       ROUND(CAST(i.n_inter AS DOUBLE) /
-        |             CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE), 6) AS jaccard
-        |FROM inter i
-        |JOIN sizes sa ON i.id_a = sa.id
-        |JOIN sizes sb ON i.id_b = sb.id
-        |WHERE CAST(i.n_inter AS DOUBLE) /
-        |      CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE) >= 0.03
-        |ORDER BY id_a, id_b""".stripMargin,
-    // q_incremental_dedup: the q_ngram_jaccard gram builder with a side
-    // flag; shared-gram df ceiling over the UNION, only (new, old) pairs
-    "q_incremental_dedup" ->
-      """WITH sh AS (
-        |  SELECT doc_id AS id,
-        |         CASE WHEN doc_id % 10 = 0 THEN 1 ELSE 0 END AS side,
-        |         CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |              ELSE list_distinct([concat_ws(' ', t[i], t[i+1], t[i+2])
-        |                                  for i in generate_series(1, len(t) - 2)])
-        |         END AS g
-        |  FROM (SELECT doc_id,
-        |               list_filter(string_split_regex(lower(text), '\s+'),
-        |                           x -> len(x) > 0) AS t
-        |        FROM documents)),
-        |posting AS (SELECT id, side, unnest(g) AS gram FROM sh),
-        |sizes AS (SELECT id, side, len(g) AS n_sh FROM sh),
-        |shared AS (SELECT gram FROM posting
-        |           GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 10000),
-        |pruned AS (SELECT id, side, gram FROM posting JOIN shared USING (gram)),
-        |inter AS (
-        |  SELECT a.id AS id_new, b.id AS id_old, CAST(COUNT(*) AS BIGINT) AS n_inter
-        |  FROM pruned a JOIN pruned b USING (gram)
-        |  WHERE a.side = 1 AND b.side = 0 GROUP BY 1, 2)
-        |SELECT i.id_new, i.id_old,
-        |       ROUND(CAST(i.n_inter AS DOUBLE) /
-        |             CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE), 6) AS jaccard
-        |FROM inter i
-        |JOIN sizes sa ON i.id_new = sa.id AND sa.side = 1
-        |JOIN sizes sb ON i.id_old = sb.id AND sb.side = 0
-        |WHERE CAST(i.n_inter AS DOUBLE) /
-        |      CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE) >= 0.03
-        |ORDER BY id_new, id_old""".stripMargin,
-    // q_contamination: the q_ngram_jaccard pipeline with the portable md5
-    // split attached; only cross-split pairs survive
-    "q_contamination" ->
-      """WITH sh AS (
-        |  SELECT doc_id AS id,
-        |         CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |              ELSE list_distinct([concat_ws(' ', t[i], t[i+1], t[i+2])
-        |                                  for i in generate_series(1, len(t) - 2)])
-        |         END AS g
-        |  FROM (SELECT doc_id,
-        |               list_filter(string_split_regex(lower(text), '\s+'),
-        |                           x -> len(x) > 0) AS t
-        |        FROM documents)),
-        |posting AS (SELECT id, unnest(g) AS gram FROM sh),
-        |sizes AS (SELECT id, len(g) AS n_sh FROM sh),
-        |shared AS (SELECT gram FROM posting
-        |           GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 10000),
-        |pruned AS (SELECT id, gram FROM posting JOIN shared USING (gram)),
-        |inter AS (
-        |  SELECT a.id AS id_a, b.id AS id_b, CAST(COUNT(*) AS BIGINT) AS n_inter
-        |  FROM pruned a JOIN pruned b USING (gram)
-        |  WHERE a.id < b.id GROUP BY 1, 2),
-        |splits AS (
-        |  SELECT doc_id AS id,
-        |         CASE WHEN h < 100000 THEN 'val'
-        |              WHEN h < 200000 THEN 'test'
-        |              ELSE 'train' END AS split
-        |  FROM (SELECT doc_id,
-        |               CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))
-        |                    AS BIGINT) % 1000000 AS h
-        |        FROM documents))
-        |SELECT i.id_a, i.id_b,
-        |       ROUND(CAST(i.n_inter AS DOUBLE) /
-        |             CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE), 6) AS jaccard,
-        |       pa.split AS split_a, pb.split AS split_b
-        |FROM inter i
-        |JOIN sizes sa ON i.id_a = sa.id
-        |JOIN sizes sb ON i.id_b = sb.id
-        |JOIN splits pa ON i.id_a = pa.id
-        |JOIN splits pb ON i.id_b = pb.id
-        |WHERE CAST(i.n_inter AS DOUBLE) /
-        |      CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE) >= 0.03
-        |  AND pa.split <> pb.split
-        |ORDER BY id_a, id_b""".stripMargin,
-    // q_corpus_pipeline: the five oracled stage recipes composed verbatim —
-    // normalized-dedup survivors -> integer-form quality gate -> portable
-    // split + cross-split near-dup drop -> mix-sample -> pack
-    "q_corpus_pipeline" ->
-      """WITH surv AS (
-        |  SELECT doc_id, source, text FROM (
-        |    SELECT doc_id, source, text,
-        |           MIN(doc_id) OVER (PARTITION BY
-        |             trim(regexp_replace(regexp_replace(lower(text),
-        |                  '[^\p{L}\p{N} ]', '', 'g'), ' +', ' ', 'g'))) AS keep
-        |    FROM documents)
-        |  WHERE doc_id = keep),
-        |qual AS (
-        |  SELECT doc_id, source, text,
-        |         list_filter(string_split_regex(lower(text), '\s+'),
-        |                     x -> len(x) > 0) AS tl
-        |  FROM surv
-        |  WHERE length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 2
-        |          >= length(text)
-        |    AND len(list_filter(string_split_regex(trim(text), '\s+'),
-        |                        x -> len(x) > 0)) >= 10),
-        |spl AS (
-        |  SELECT doc_id, source, text,
-        |         CASE WHEN h < 100000 THEN 'val'
-        |              WHEN h < 200000 THEN 'test'
-        |              ELSE 'train' END AS split
-        |  FROM (SELECT doc_id, source, text,
-        |               CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))
-        |                    AS BIGINT) % 1000000 AS h
-        |        FROM qual)),
-        |sh AS (
-        |  SELECT doc_id AS id,
-        |         CASE WHEN len(tl) < 3 THEN [array_to_string(tl, ' ')]
-        |              ELSE list_distinct([concat_ws(' ', tl[i], tl[i+1], tl[i+2])
-        |                                  for i in generate_series(1, len(tl) - 2)])
-        |         END AS g
-        |  FROM qual),
-        |posting AS (SELECT id, unnest(g) AS gram FROM sh),
-        |sizes AS (SELECT id, len(g) AS n_sh FROM sh),
-        |shared AS (SELECT gram FROM posting
-        |           GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 10000),
-        |pruned AS (SELECT id, gram FROM posting JOIN shared USING (gram)),
-        |inter AS (
-        |  SELECT a.id AS id_a, b.id AS id_b, CAST(COUNT(*) AS BIGINT) AS ni
-        |  FROM pruned a JOIN pruned b USING (gram)
-        |  WHERE a.id < b.id GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT id_a, id_b FROM inter
-        |  JOIN sizes sa ON id_a = sa.id
-        |  JOIN sizes sb ON id_b = sb.id
-        |  WHERE CAST(ni AS DOUBLE) /
-        |        CAST(sa.n_sh + sb.n_sh - ni AS DOUBLE) >= 0.03),
-        |drops AS (
-        |  SELECT DISTINCT CASE WHEN pa.split = 'train' THEN p.id_b
-        |                       WHEN pb.split = 'train' THEN p.id_a
-        |                       ELSE greatest(p.id_a, p.id_b) END AS drop_id
-        |  FROM pairs p
-        |  JOIN spl pa ON p.id_a = pa.doc_id
-        |  JOIN spl pb ON p.id_b = pb.doc_id
-        |  WHERE pa.split <> pb.split),
-        |clean AS (
-        |  SELECT * FROM spl
-        |  WHERE doc_id NOT IN (SELECT drop_id FROM drops)),
-        |mixr AS (
-        |  SELECT c.doc_id, c.source, c.text,
-        |         CASE WHEN CAST(substr(c.source, 4) AS INT) < 10
-        |              THEN CAST(1.0 AS DOUBLE) ELSE CAST(3.0 AS DOUBLE) END AS tw,
-        |         CAST(('0x' || substr(md5('mix|' || CAST(c.doc_id AS VARCHAR)), 1, 12))
-        |              AS BIGINT) % 1000000 AS mh,
-        |         COUNT(*) OVER (PARTITION BY c.source) AS n_src
-        |  FROM clean c),
-        |mixed AS (
-        |  SELECT doc_id, source, text FROM (
-        |    SELECT *, MIN(CAST(n_src AS DOUBLE) / tw) OVER () AS feas FROM mixr)
-        |  WHERE CAST(mh AS DOUBLE) < tw * feas / CAST(n_src AS DOUBLE) * 1000000),
-        |toks AS (
-        |  SELECT source, doc_id AS id,
-        |         CAST(len(list_filter(string_split_regex(text, '\s+'),
-        |                              x -> len(x) > 0)) AS BIGINT) AS n_tokens
-        |  FROM mixed),
-        |packed AS (
-        |  SELECT source, id, n_tokens,
-        |         SUM(n_tokens) OVER (PARTITION BY source ORDER BY id
-        |                             ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM toks)
-        |SELECT source, id, n_tokens,
-        |       CAST(FLOOR((cum - n_tokens) / 512) AS BIGINT) AS bin
-        |FROM packed ORDER BY source, id""".stripMargin,
-    "q_multimodal" ->
-      """WITH f AS (
-        |  SELECT doc_id AS id,
-        |         'text/plain' AS media_type,
-        |         CAST(strlen(text) AS BIGINT) AS byte_len,
-        |         list_reduce(
-        |           list_prepend(CAST(1125899906842597 AS HUGEINT),
-        |             list_transform(string_split(text, ''),
-        |                            c -> CAST(ascii(c) AS HUGEINT))),
-        |           (a, b) -> (a * 31 + b) % CAST('18446744073709551616' AS HUGEINT)) AS u
-        |  FROM documents),
-        |m AS (
-        |  SELECT id, media_type, byte_len,
-        |         CAST(16 + u % 1024 AS INTEGER) AS width,
-        |         CAST(16 + (u // 1024) % 1024 AS INTEGER) AS height,
-        |         CAST(1 + (u // 1048576) % 32 AS INTEGER) AS n_frames
-        |  FROM f),
-        |r AS (
-        |  SELECT *, LEAST(1.0, 256.0 / width, 256.0 / height) AS scale FROM m)
-        |SELECT id, media_type, byte_len, width, height, n_frames,
-        |       CAST(FLOOR(width * scale) AS INTEGER) AS resized_width,
-        |       CAST(FLOOR(height * scale) AS INTEGER) AS resized_height,
-        |       CAST(LEAST(n_frames, 4) AS INTEGER) AS n_sampled
-        |FROM r ORDER BY id""".stripMargin,
-    "q_fingerprint" ->
-      """SELECT doc_id AS id,
-        |       list_reduce(
-        |         list_prepend(CAST(0 AS BIGINT),
-        |           list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))),
-        |         (a, b) -> (a * 131 + b) % 1000000007) AS fingerprint
-        |FROM documents ORDER BY id""".stripMargin
-  )
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Catalog.all.map(q => q.name -> q.build).toMap
+
+  /** DuckDB oracles — one per catalog query, no omissions. */
+  lazy val oracleSql: Map[String, String] =
+    Catalog.all.map(q => q.name -> q.oracle).toMap
 }

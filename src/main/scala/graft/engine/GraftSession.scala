@@ -42,14 +42,14 @@ object GraftSession {
       // instead of scanning row groups (the reference's row-count bookkeeping
       // is likewise metadata, `host/generator/generator.cc:76-99`).
       .config("spark.sql.parquet.aggregatePushdown", "true")
-      // Runtime bloom-filter semi-join reduction is OPT-IN, not default:
-      // with a selective dim filter and sound stats it prunes fact-side
-      // shuffle input, but measured on the reference join shape (33M×33M,
-      // no selective filter, in-memory inputs with unknown stats) it
+      // Runtime bloom-filter semi-join reduction stays OFF: with a
+      // selective dim filter and sound stats it prunes fact-side shuffle
+      // input, but measured on the reference join shape (33M×33M, no
+      // selective filter, in-memory inputs with unknown stats) it
       // regresses the join 3× — Spark builds a 33M-key bloom over a side
-      // it misestimates as small. Enable per-run when the workload has the
-      // selective-dim pattern.
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", sys.env.getOrElse("SPARK_GRAFT_BLOOM", "false"))
+      // it misestimates as small. A query with the selective-dim pattern
+      // sets the conf on its own session.
+      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
       // spark.sql.objectHashAggregate.sortBased.fallbackThreshold stays at
       // its 128-group default: measured on the edit-pairs bucket gather
       // (millions of mostly-singleton collect_list groups), hash-mode

@@ -608,7 +608,7 @@ object NativeExpressions {
   }
 
   /** Adjacent lowercase-alphabetic character pairs — the BPE merge-candidate
-    * extraction (`SparkEntry.qBpeMerges`), one tight loop per document.
+    * extraction (`catalog.TextLlm.qBpeMerges`), one tight loop per document.
     * Exactly `filter(transform(sequence(1, length(t)-1),
     * i -> lower(substr(t, i, 2))), p -> p rlike '^[a-z]{2}$')`: for every
     * adjacent code-point pair, the lowercased 2-char slice is emitted iff

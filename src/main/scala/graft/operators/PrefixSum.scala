@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * window (scales out), and only the bucket TOTALS — KB-scale by the
   * contract — pass through the one unpartitioned carry window.
   *
-  * Used by `SparkEntry.qRankTest` (fixed-width price buckets) and
+  * Used by `catalog.Analytics.qRankTest` (fixed-width price buckets) and
   * mirrored by `qPeakConcurrency`'s per-day sweep; the plan-audit
   * allowlist entries cite this contract.
   */

@@ -26,7 +26,7 @@ class OperatorPropertySpec extends SparkTestBase {
     }
     import spark.implicits._
     val got = rows.toDF("l_extendedprice", "l_discount")
-      .select(SparkEntry.revUnits.as("u"))
+      .select(graft.catalog.Tpch.revUnits.as("u"))
       .collect().map(_.getLong(0))
     rows.zip(got).foreach { case ((price, disc), u) =>
       val exact = (BigDecimal(price) * 100).setScale(0, BigDecimal.RoundingMode.HALF_UP) *

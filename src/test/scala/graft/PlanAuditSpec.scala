@@ -808,7 +808,7 @@ class PlanAuditSpec extends SparkTestBase {
     // only the KB-scale deduped artifact write may serialize, via a
     // post-agg round-robin repartition(1), never a Coalesce (which would
     // propagate to the reduce side and dedup the corpus on one task).
-    val df = SparkEntry.partsuppStaging(spark, sf0001)
+    val df = graft.catalog.Tpch.partsuppStaging(spark, sf0001)
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     assert(!plan.contains("Coalesce"),
@@ -1269,7 +1269,7 @@ class PlanAuditSpec extends SparkTestBase {
     // same law as the partsupp pin: the corpus-wide partial aggregate
     // must reduce on a multi-partition exchange; only the KB-scale
     // day-keyed artifact write serializes, via post-agg repartition(1)
-    val df = SparkEntry.incrementalAggBase(spark, sf0001)
+    val df = graft.catalog.Analytics.incrementalAggBase(spark, sf0001)
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     assert(!plan.contains("Coalesce"),

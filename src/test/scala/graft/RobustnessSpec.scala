@@ -152,30 +152,38 @@ class RobustnessSpec extends SparkTestBase {
     assert(a.nonEmpty && a == b,
       "racing builds disagreed — staging is not single-writer")
   }
-  test("every tag-keyed /tmp/graft_* staging root is reaper-registered") {
-    // the r10 leak class: a new staged artifact root not listed in
-    // SparkEntry.artifactRoots survives data regeneration as garbage.
-    // Tripwire: every "/tmp/graft_<root>" literal in src/main must appear
-    // in the artifactRoots literal (graft_tags is the breadcrumb dir the
-    // reaper itself maintains, not a tag-keyed artifact).
-    def read(f: java.io.File): String =
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    def scalaFiles(dir: java.io.File): Seq[java.io.File] = {
-      val fs = Option(dir.listFiles()).map(_.toSeq).getOrElse(Nil)
-      fs.filter(_.isFile).filter(_.getName.endsWith(".scala")) ++
-        fs.filter(_.isDirectory).flatMap(scalaFiles)
+  test("a changed directory tag reaps the old tag's tree under any /tmp/graft_* root") {
+    // the r10 leak class: a staged root the reaper did not know about
+    // survived data regeneration as garbage. The reaper lists
+    // /tmp/graft_*, so a root no code registers is reaped too.
+    import java.nio.file.{Files, Path}
+    import graft.catalog.Support
+    val data = Files.createTempDirectory("reap_data")
+    val part = data.resolve("t.parquet")
+    Files.writeString(part, "v1")
+    val d = data.toString
+    Support.dirTagMemo.remove(d)
+    val oldTag = Support.dirTag(d)
+    val root = Files.createTempDirectory(java.nio.file.Paths.get("/tmp"), "graft_unlisted")
+    def stage(tag: String): Path = {
+      val tree = root.resolve(tag).resolve("artifact")
+      Files.createDirectories(tree)
+      Files.writeString(tree.resolve("part-0"), "x")
+      tree
     }
-    val srcs = scalaFiles(new java.io.File("src/main/scala/graft"))
-    assert(srcs.nonEmpty)
-    val used = srcs.flatMap(f =>
-      "\"/tmp/(graft_[a-z0-9_]+)".r.findAllMatchIn(read(f)).map(_.group(1)))
-      .toSet - "graft_tags"
-    val entry = read(new java.io.File("src/main/scala/graft/SparkEntry.scala"))
-    val decl = entry.split("artifactRoots = Seq\\(")(1).split("\\)")(0)
-    val registered = "\"(graft_[a-z0-9_]+)\"".r
-      .findAllMatchIn(decl).map(_.group(1)).toSet
-    val missing = used -- registered
-    assert(missing.isEmpty,
-      s"staging roots missing from SparkEntry.artifactRoots: $missing")
+    try {
+      val stale = stage(oldTag)
+      val other = stage("0123456789abcdef")
+      Files.writeString(part, "v2 regenerated") // new length → new tag
+      Support.dirTagMemo.remove(d) // a fresh JVM's view
+      val newTag = Support.dirTag(d)
+      assert(newTag != oldTag)
+      assert(!Files.exists(stale.getParent), s"stale tree kept: $stale")
+      assert(Files.exists(other), "a tree of an unrelated tag was reaped")
+    } finally {
+      Support.dirTagMemo.remove(d)
+      graft.engine.Fs.deleteRecursively(root.toFile)
+      graft.engine.Fs.deleteRecursively(data.toFile)
+    }
   }
 }
