@@ -24,18 +24,21 @@ object Bench {
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
 
-    // (seconds, per-query listener delta); rows/bytes/shuffle/spill are
-    // the reference's per-phase counters
+    // (seconds, per-query listener delta, DataFrame construction ms);
+    // rows/bytes/shuffle/spill are the reference's per-phase counters
     // (`host/filter/filter_benchmark.cc:52-71`) at catalog scale
     def materialize(
-        name: String, report: Boolean): (Double, listener.Snapshot) = {
+        name: String, report: Boolean): (Double, listener.Snapshot, Double) = {
       val before = listener.snapshot()
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      var buildMs = 0.0
+      try {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        buildMs = (System.nanoTime() - t0) / 1e6
+        df.write.format("noop").mode("overwrite").save()
+      } catch { case e: Throwable =>
         if (report) System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        return (-1.0, before - before)
+        return (-1.0, before - before, 0.0)
       }
       val sec = (System.nanoTime() - t0) / 1e9
       // drain the listener bus BEFORE snapshotting: a fixed sleep cannot
@@ -46,7 +49,7 @@ object Bench {
       val d = listener.snapshot() - before
       if (report)
         System.err.println(f"[bench] $name%-20s ${sec}%8.3f s  ${d.render}")
-      (sec, d)
+      (sec, d, buildMs)
     }
 
     // optional args = subset of query names (focused local iteration);
@@ -88,10 +91,11 @@ object Bench {
       }
       n -> best
     }
-    // counters come from whichever measured pass succeeded
-    val counts = names.map { n =>
-      n -> (if (pass1(n)._1 >= 0) pass1(n)._2 else pass2(n)._2)
+    // counters and build time come from whichever measured pass succeeded
+    val counted = names.map { n =>
+      n -> (if (pass1(n)._1 >= 0) pass1(n) else pass2(n))
     }.toMap
+    val counts = counted.view.mapValues(_._2).toMap
     def jmap(f: String => String): String =
       names.map(k => s""""$k":${f(k)}""").mkString("{", ",", "}")
     // The stdout line is a JSON CONTRACT: format numerics with an explicit
@@ -127,6 +131,10 @@ object Bench {
     // GC-heavy row reads as anti-scaling with cores — this map separates
     // "slow because GC" from "slow because contended/serial" per row
     val gcMs = jmap(k => counts(k).gcTimeMs.toString)
+    // per-query DataFrame construction (table loads, staged-artifact
+    // reads, analysis) apart from execution: the first layer of the fixed
+    // per-query cost (ROADMAP 1a)
+    val buildMs = jmap(k => num(counted(k)._3, 1))
     val total = num(results.map(_._2).filter(_ >= 0).sum, 3)
     // the driver's round artifact retains only the LINE TAIL, so the tail
     // must be self-contained: after the per-query seconds map, repeat the
@@ -249,6 +257,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","rows":$rows,""" +
         s""""rows_per_sec":$rowRate,"bytes_per_sec":$byteRate,""" +
         s""""shuffle_mb":$shuffleMb,"spill_mb":$spillMb,"gc_ms":$gcMs,""" +
+        s""""build_ms":$buildMs,""" +
         s""""anchor_a":${anchorJson(anchorA)},"anchor_b":${anchorJson(anchorB)},""" +
         s""""anchor_drift":${num(anchorDrift, 4)},""" +
         s""""weather_ref_match":$isRefSf,""" +

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.GraftSession
+import graft.sources.Tables
 
 /** Deterministic ×N scale-up generator (r13 verdict #4): replicates a
   * driver-generated SF directory N times with per-replica KEY-SPACE
@@ -42,7 +43,7 @@ object ScaleGen {
     val n = if (args.length > 2) args(2).toInt else 10
     val spark = GraftSession.getOrCreate()
 
-    def rd(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def rd(t: String) = Tables.parquet(spark, s"$src/$t.parquet")
     def unit(t: String, key: String): Long =
       rd(t).agg(max(col(key))).first().getLong(0) + 1L
 

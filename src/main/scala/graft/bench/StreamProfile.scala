@@ -54,6 +54,10 @@ object StreamProfile {
         .write.format("noop").mode("overwrite").save()
       println(f"[stream] $n total ${(System.nanoTime() - t0) / 1e9}%.3f s")
     }
+    // the last batches' progress events may still be queued on the bus;
+    // stopping first would drop their lines
+    org.apache.spark.graftshim.ListenerBusShim.drain(
+      spark.sparkContext, timeoutMillis = 10000)
     spark.stop()
   }
 }

@@ -717,7 +717,7 @@ object Analytics extends Family {
     }
     val qArr = array(qVals.map(lit): _*)
     // a product input encoder is flattened top-level: one arg per field
-    val picks = s.read.parquet(baseDir)
+    val picks = Tables.parquet(s, baseDir)
       .unionAll(half(1))
       .agg(mergeQ(col("state.values"), col("state.gs"), col("state.deltas"),
         col("state.count"), col("state.relativeError")).as("picks"))
@@ -4164,7 +4164,7 @@ object Analytics extends Family {
     stagedOnce(baseDir) {
       incrementalAggBase(s, d).write.mode("overwrite").parquet(baseDir)
     }
-    s.read.parquet(baseDir)
+    Tables.parquet(s, baseDir)
       .unionAll(incrementalPartial(s, d, 1))
       .groupBy("day")
       .agg(sum(col("sum_cents")).as("sum_cents"),
@@ -6257,7 +6257,7 @@ object Analytics extends Family {
         .select(col("dim_day").cast("date").as("dim_date"), col("campaign"))
         .write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    Tables.parquet(s, dir)
   }
 
   // q_dpp_join and q_bloom_semijoin return the same result set
@@ -6373,12 +6373,12 @@ object Analytics extends Family {
         Tables.events(s, d).select("event_id", "event_type", "value")
           .repartition(64) // the fragmented state a drip-writer leaves
           .write.mode("overwrite").parquet(small)
-      s.read.parquet(small)
+      Tables.parquet(s, small)
         .repartitionByRange(4, col("event_id"))
         .sortWithinPartitions("event_id")
         .write.mode("overwrite").parquet(compacted)
     }
-    s.read.parquet(compacted).orderBy("event_id")
+    Tables.parquet(s, compacted).orderBy("event_id")
   }
   // q_compaction: layout maintenance must never change answers — the
   // oracle is the source content itself
@@ -6404,7 +6404,7 @@ object Analytics extends Family {
           .select(col("event_id"), col("user_id"), col("event_type"), col("value")),
         Seq("user_id", "value"), path)
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
       .filter(col("value") >= 100.0 && col("value") < 120.0)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .orderBy("event_id")

@@ -294,7 +294,7 @@ object Pairs extends Family {
         .select(col("q_id"), col("q_label"))
         .repartition(1).write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    Tables.parquet(s, dir)
   }
 
   /** k-NN label-noise audit (confident-learning-lite): for a portable
@@ -806,7 +806,7 @@ object Pairs extends Family {
           minhashSignature(charShingles(col("text"), 5), 64).as("sig"))
         .repartition(1).write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    Tables.parquet(s, dir)
   }
 
   private def stagedTfVecs(s: SparkSession, d: String): DataFrame = {
@@ -816,7 +816,7 @@ object Pairs extends Family {
           Tables.documents(s, d), "doc_id", "text", dims = 256, ngram = 2)
         .repartition(1).write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    Tables.parquet(s, dir)
   }
 
   /** MinHash+LSH near-dup pairs wrapped in the pair-set exactness audit

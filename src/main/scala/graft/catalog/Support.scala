@@ -195,7 +195,7 @@ private[graft] object Support {
     stagedOnce(dir) {
       build.repartition(1).write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    Tables.parquet(s, dir)
   }
 
   /** Write-once staged near-dup pair set at threshold 0.5 (dirTag

@@ -438,7 +438,7 @@ object Tpch extends Family {
     stagedOnce(dir) {
       partsuppStaging(s, d).write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    Tables.parquet(s, dir)
   }
 
   /** The partsupp staging plan, exposed for the PlanAuditSpec pin that the

@@ -684,7 +684,8 @@ object NativeExpressions {
     * dispatched an interpreted lambda per element, per document, inside
     * the Generate (outside whole-stage codegen). Order and duplicates
     * preserved; a null token element passes through as a null field, like
-    * the slices it mirrors.
+    * the slices it mirrors. A NULL array gives NULL, where the formulation
+    * it replaced gave `[]` (see [[bigram_pairs]]).
     */
   case class BigramPairs(child: Expression)
       extends UnaryExpression with CodegenFallback {
@@ -866,6 +867,14 @@ object NativeExpressions {
     override protected def withNewChildInternal(c: Expression): PqAdcDist = copy(child = c)
   }
 
+  /** Capacity of a DP scratch row that must hold `n` ints: twice the
+    * highest one-bit of `n` (amortized growth), or `n` itself from 2^30 up,
+    * where doubling would overflow to a negative array size. Never less
+    * than `n`.
+    */
+  private[graft] def scratchCap(n: Int): Int =
+    if (n >= (1 << 30)) n else java.lang.Integer.highestOneBit(n) * 2
+
   /** Bounded (banded / Ukkonen) Levenshtein distance: EXACT when the true
     * distance is ≤ `k`, else returns `k+1`. The DP visits only the ±k
     * diagonal band — O(k·n) cells instead of O(n·m) — with an early exit
@@ -919,7 +928,7 @@ object NativeExpressions {
     private def scratchRows(m: Int): Array[Array[Int]] = {
       val s = dpScratch.get()
       if (s(0).length < m + 1) {
-        val cap = java.lang.Integer.highestOneBit(m + 1) * 2
+        val cap = scratchCap(m + 1)
         s(0) = new Array[Int](cap)
         s(1) = new Array[Int](cap)
       }
@@ -1264,6 +1273,12 @@ object NativeExpressions {
 
   def bpe_pairs(text: Column): Column = col(BpePairs(expr(text)))
 
+  /** [[BigramPairs]]. A NULL array gives NULL, not the `[]` that the
+    * `CASE WHEN size(t) >= 2 THEN zip_with(...) ELSE array() END` it
+    * replaced gave: the two agree under `explode` (no rows either way),
+    * which is the only in-tree use (q_lm_score), but not in a bare select
+    * or under `explode_outer`.
+    */
   def bigram_pairs(tokenArr: Column): Column = col(BigramPairs(expr(tokenArr)))
 
   def portable_simhash(tokenArr: Column, bits: Int): Column =

@@ -121,6 +121,20 @@ class PropertyCheckSpec extends SparkTestBase {
     }
   }
 
+  test("bounded levenshtein scratch capacity never undershoots or overflows") {
+    // the DP scratch grows to scratchCap(m + 1); doubling the highest
+    // one-bit overflowed to a negative array size from 2^30 up. Checked
+    // on the size rule alone, so nothing of that size is allocated.
+    import graft.functions.NativeExpressions.scratchCap
+    Seq(1, 2, 63, 64, 65, (1 << 29) + 1, (1 << 30) - 1, 1 << 30, (1 << 30) + 1,
+        Int.MaxValue).foreach { n =>
+      assert(scratchCap(n) >= n, s"scratchCap($n) = ${scratchCap(n)}")
+    }
+    assert(scratchCap(65) == 128) // doubling growth below 2^30 is kept
+    assert(scratchCap(1 << 30) == (1 << 30))
+    assert(scratchCap(Int.MaxValue) == Int.MaxValue)
+  }
+
   test("property: bounded levenshtein agrees with Spark's levenshtein up to the band") {
     val strGen = Gen.zip(
       Gen.listOfN(8, Gen.oneOf('a', 'b', 'c')).map(_.mkString),
@@ -178,19 +192,29 @@ class PropertyCheckSpec extends SparkTestBase {
       8 -> Gen.alphaNumStr.map(_.take(5)),
       1 -> Gen.const(""),
       1 -> Gen.oneOf("héllo", "中文", "ß")))
+    val hofSql =
+      """CASE WHEN size(t) >= 2 THEN
+        |  zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),
+        |           (a, b) -> struct(a AS w1, b AS w2))
+        |ELSE CAST(array() AS array<struct<w1:string,w2:string>>) END""".stripMargin
     samples(tokGen, 30).foreach { toks =>
       val df = Seq(Tuple1(toks)).toDF("t")
       val native = df.select(
           graft.functions.NativeExpressions.bigram_pairs($"t"))
         .as[Seq[(String, String)]].head()
-      val hof = df.select(expr(
-          """CASE WHEN size(t) >= 2 THEN
-            |  zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),
-            |           (a, b) -> struct(a AS w1, b AS w2))
-            |ELSE CAST(array() AS array<struct<w1:string,w2:string>>) END""".stripMargin))
-        .as[Seq[(String, String)]].head()
+      val hof = df.select(expr(hofSql)).as[Seq[(String, String)]].head()
       assert(native == hof, s"bigram mismatch on $toks")
     }
+    // a NULL array: native gives NULL where the HOF gave [], so the two are
+    // equivalent only after explode (q_lm_score's use) — both yield no rows
+    val nullArr = Seq(Tuple1(Option.empty[Seq[String]])).toDF("t")
+    assert(nullArr.select(
+      graft.functions.NativeExpressions.bigram_pairs($"t")).head().isNullAt(0))
+    def exploded(bigrams: org.apache.spark.sql.Column) =
+      nullArr.select(explode(bigrams).as("bg")).select($"bg.w1", $"bg.w2")
+        .as[(String, String)].collect().toSeq
+    assert(exploded(graft.functions.NativeExpressions.bigram_pairs($"t")) ==
+      exploded(expr(hofSql)))
   }
 
   test("property: portable_simhash equals the explode + 60-conditional-sum fold") {
