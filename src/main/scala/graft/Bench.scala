@@ -133,7 +133,8 @@ object Bench {
     val gcMs = jmap(k => counts(k).gcTimeMs.toString)
     // per-query DataFrame construction (table loads, staged-artifact
     // reads, analysis) apart from execution: the first layer of the fixed
-    // per-query cost (ROADMAP 1a)
+    // per-query cost (ROADMAP 1a). Streaming rows run their whole stream
+    // inside the catalog build function, so their build_ms is stream time.
     val buildMs = jmap(k => num(counted(k)._3, 1))
     val total = num(results.map(_._2).filter(_ >= 0).sum, 3)
     // the driver's round artifact retains only the LINE TAIL, so the tail

@@ -82,10 +82,10 @@ object Parity extends Family {
     * verdict #5): same take semantics as [[qTake]], but the gather is a
     * range-partitioned co-sorted merge — the values side never shuffles
     * and nothing is broadcast or hashed, the plan that survives when the
-    * index side outgrows the broadcast build (the SF=64 knee in the
-    * RefBench sweep: a 33.5M-key hashed relation per executor). The only
-    * exchange is the index list's range shuffle to the values partitions'
-    * own boundaries. Oracle identical to q_take's (same result set).
+    * index side outgrows the broadcast build (the `take_join` leg's knee
+    * at `Probe ops take 64`: a 33.5M-key hashed relation per executor).
+    * The only exchange is the index list's range shuffle to the values
+    * partitions' own boundaries. Oracle identical to q_take's (same result set).
     */
   private def qTakeMergeDist(s: SparkSession, d: String): DataFrame = {
     val indexed = takeIndexed(s, d)

@@ -31,7 +31,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // NOT setting preferSortMergeJoin=false: shuffled-hash measures ~2x
-      // faster than sort-merge on the reference's join shapes (RefBench),
+      // faster than sort-merge on the reference's join shapes (`Probe ops join`),
       // but its hash-relation BUILD cannot spill — at 16x the shape it
       // hard-fails with "Can't acquire ... to build hash relation" while
       // sort-merge completes. Sort-merge + AQE (which still converts to

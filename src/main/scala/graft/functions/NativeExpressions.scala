@@ -875,6 +875,11 @@ object NativeExpressions {
   private[graft] def scratchCap(n: Int): Int =
     if (n >= (1 << 30)) n else java.lang.Integer.highestOneBit(n) * 2
 
+  /** Largest DP scratch row, in ints, that [[BoundedLevenshtein]] keeps on
+    * a thread between calls.
+    */
+  private[graft] val ScratchRetainInts = 4096
+
   /** Bounded (banded / Ukkonen) Levenshtein distance: EXACT when the true
     * distance is ≤ `k`, else returns `k+1`. The DP visits only the ±k
     * diagonal band — O(k·n) cells instead of O(n·m) — with an early exit
@@ -920,20 +925,27 @@ object NativeExpressions {
     // expression instance is shared across task threads via codegen's
     // addReferenceObj, hence ThreadLocal, and @transient because
     // ThreadLocal does not serialize (rebuilt lazily per executor).
+    // Rows longer than ScratchRetainInts are allocated per call and not
+    // kept: one outlier string must not pin its rows on the thread for
+    // the executor's lifetime.
     @transient private lazy val dpScratch =
       new ThreadLocal[Array[Array[Int]]] {
         override def initialValue(): Array[Array[Int]] =
           Array(new Array[Int](64), new Array[Int](64))
       }
     private def scratchRows(m: Int): Array[Array[Int]] = {
+      if (m + 1 > ScratchRetainInts)
+        return Array(new Array[Int](m + 1), new Array[Int](m + 1))
       val s = dpScratch.get()
       if (s(0).length < m + 1) {
-        val cap = scratchCap(m + 1)
+        val cap = math.min(scratchCap(m + 1), ScratchRetainInts)
         s(0) = new Array[Int](cap)
         s(1) = new Array[Int](cap)
       }
       s
     }
+    /** Ints this thread's DP scratch rows currently hold (the larger row). */
+    private[graft] def retainedScratchInts: Int = dpScratch.get().map(_.length).max
     def compute(l: UTF8String, r: UTF8String): Int = {
       // ASCII fast path: compare raw UTF-8 bytes in place (byte length ==
       // char length, byte equality == char equality) — skips two String

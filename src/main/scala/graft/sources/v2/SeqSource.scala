@@ -301,8 +301,9 @@ case class SeqScan(
   // every partition is a single mod7 residue class, so each partition is
   // trivially sorted by mod7 — declaring it lets the planner DELETE the
   // per-partition sort under a storage-partitioned merge join (measured
-  // 1.78 → ~broadcast-class in RefBench's spj section). Only valid (and
-  // only reported) in keyed mode with mod7 surviving pruning.
+  // 1.78 → ~broadcast-class in the `spj_keyed` leg of `Probe ops spj`).
+  // Only valid (and only reported) in keyed mode with mod7 surviving
+  // pruning.
   private def keyCol = s"mod$buckets"
   override def outputOrdering(): Array[SortOrder] =
     if (keyed && required.fieldNames.contains(keyCol))

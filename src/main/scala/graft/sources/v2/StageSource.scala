@@ -2538,13 +2538,12 @@ case class StageKeyedFilePartition(
 
 object StageScan {
   /** The zone-map double view of a pushed filter literal: numbers
-    * directly (java BigDecimal included — it is a Number), timestamp
-    * literals as epoch micros. None = the literal can't be zone-checked
-    * (the filter is then not remembered for skipping at all).
+    * directly (java and scala BigDecimal included — both are Numbers),
+    * timestamp literals as epoch micros. None = the literal can't be
+    * zone-checked (the filter is then not remembered for skipping at all).
     */
   def zoneValue(v: Any): Option[Double] = v match {
     case n: Number => Some(n.doubleValue)
-    case d: scala.math.BigDecimal => Some(d.doubleValue)
     case _ => StageSource.toMicros(v).map(_.toDouble)
   }
 }

@@ -135,6 +135,40 @@ class PropertyCheckSpec extends SparkTestBase {
     assert(scratchCap(Int.MaxValue) == Int.MaxValue)
   }
 
+  test("bounded levenshtein keeps no scratch above its retention constant, on both eval paths") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.NativeExpressions.{BoundedLevenshtein, ScratchRetainInts}
+    val len = ScratchRetainInts + 904
+    val ascii = Seq.tabulate(len)(i => ('a' + i % 26).toChar).mkString
+    val multi = Seq.tabulate(len)(i => "aé中".charAt(i % 3)).mkString
+    // three substitutions by absent letters and one deletion: distance 4
+    def edit(s: String) =
+      s.updated(10, 'X').updated(2000, 'Y').updated(4500, 'Z').patch(3000, "", 1)
+    val k = 6
+    val cases = Seq("short" -> "shirt", ascii -> edit(ascii), multi -> edit(multi))
+    Seq(true, false).foreach { codegen =>
+      val expr = BoundedLevenshtein(
+        BoundReference(0, StringType, nullable = true),
+        BoundReference(1, StringType, nullable = true), k)
+      val proj =
+        if (codegen) GenerateUnsafeProjection.generate(Seq(expr))
+        else InterpretedUnsafeProjection.createProjection(Seq(expr))
+      cases.foreach { case (a, b) =>
+        val (ua, ub) = (UTF8String.fromString(a), UTF8String.fromString(b))
+        val want = math.min(ua.levenshteinDistance(ub), k + 1)
+        if (a.length > ScratchRetainInts) assert(want == 4)
+        val got = proj(InternalRow(ua, ub)).getInt(0)
+        assert(got == want, s"codegen=$codegen len=${a.length}: $got != $want")
+        assert(expr.retainedScratchInts <= ScratchRetainInts,
+          s"codegen=$codegen len=${a.length}: ${expr.retainedScratchInts} ints retained")
+      }
+    }
+  }
+
   test("property: bounded levenshtein agrees with Spark's levenshtein up to the band") {
     val strGen = Gen.zip(
       Gen.listOfN(8, Gen.oneOf('a', 'b', 'c')).map(_.mkString),

@@ -37,6 +37,18 @@ class RegistrySpec extends AnyFunSuite {
     assert(Catalog.tagged(Tag.Anchor) == anchors)
   }
 
+  test("README's row and suite counts match the registry and the spec files") {
+    val src = scala.io.Source.fromFile("README.md", "UTF-8")
+    val readme = try src.mkString finally src.close()
+    def stated(noun: String): Seq[Int] =
+      s"(\\d+) $noun".r.findAllMatchIn(readme).map(_.group(1).toInt).toSeq
+    val specs = new java.io.File("src/test/scala/graft").listFiles()
+      .count(_.getName.endsWith("Spec.scala"))
+    assert(stated("named rows").nonEmpty && stated("suites").nonEmpty)
+    assert(stated("named rows").forall(_ == Catalog.all.size), stated("named rows"))
+    assert(stated("suites").forall(_ == specs), s"${stated("suites")} vs $specs spec files")
+  }
+
   test("the headline and scaling tiers resolve to their pinned name lists") {
     val headline = Seq(
       "q_filter", "q_sum", "q_take", "q_partition", "q_join",

@@ -993,6 +993,16 @@ class SourcesSpec extends SparkTestBase {
     assert(StageSource.toMicros(pos).contains(1500000L))
   }
 
+  test("zone-map literal view: every Number maps directly, timestamps to micros, strings to None") {
+    import graft.sources.v2.StageScan.zoneValue
+    assert(zoneValue(scala.math.BigDecimal("12.5")).contains(12.5))
+    assert(zoneValue(new java.math.BigDecimal("-3.25")).contains(-3.25))
+    assert(zoneValue(7).contains(7.0))
+    assert(zoneValue(1L << 40).contains((1L << 40).toDouble))
+    assert(zoneValue(new java.sql.Timestamp(1500L)).contains(1500000.0))
+    assert(zoneValue("12.5").isEmpty)
+  }
+
   test("ALTER TABLE ADD COLUMN: old files null-fill, snapshots stay readable, unsafe shapes decline") {
     // r16 verdict #5: the reference's one evolution primitive is
     // append-only AddColumn (generator.cc:32-44) — old files must read

@@ -5,7 +5,8 @@ tooling only, never a build dep — mirrors /root/reference/baseline/
 
 The reference's DataFusion/Polars legs stay env-blocked (wheels
 unresolvable offline, re-checked each round); this measures the one leg
-the sandbox supports, fresh, in the same sitting as a RefBench run.
+that installs offline, fresh, in the same sitting as a graftbench `ref_ops`
+run; its Spark counterpart is the traced per-layer `ref.*_rows_per_s`.
 
 Usage: python3 tools/pyarrow_ref.py [SF] [ITERS]   (default 16, 3;
 r18 verdict #5 records the headline pairing min-of-5 both sides)
