@@ -336,7 +336,7 @@ object Dsv2 extends Family {
     * expressed as a connector LAYOUT contract): both sides declare
     * `KeyGroupedPartitioning(identity(mod7))` with [[
     * org.apache.spark.sql.connector.read.HasPartitionKey]] partitions, so
-    * with `spark.sql.sources.v2.bucketing.enabled` the per-side GROUP BY
+    * under v2 bucketing (Spark's default) the per-side GROUP BY
     * mod7 aggregates AND the join between them plan with ZERO shuffle
     * exchanges — Spark lines the residue-class partitions up
     * one-to-one (PlanAuditSpec pins no-ShuffleExchange and the
@@ -348,27 +348,18 @@ object Dsv2 extends Family {
     * the partition-aligned path end to end.
     */
   private def qDsv2Spj(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.sources.v2.bucketing.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "true")
-    try {
-      def keyedSeq(n: Long) = s.read.format("graft.sources.v2.SeqSource")
-        .option("n", n).option("keyed", true).load()
-      val left = keyedSeq(1000000L)
-        .filter(col("id") < 700000L)
-        .groupBy(col("mod7"))
-        .agg(count(lit(1)).as("l_rows"), sum(col("cents")).as("l_cents"))
-      val right = keyedSeq(500000L)
-        .groupBy(col("mod7"))
-        .agg(count(lit(1)).as("r_rows"))
-      val out = left.hint("merge").join(right, "mod7")
-        .select(col("mod7"), col("l_rows"), col("l_cents"), col("r_rows"))
-        .orderBy("mod7")
-      // planning is lazy and reads SQLConf at plan time — force it while
-      // the conf override is live (QueryExecution caches the result)
-      out.queryExecution.executedPlan
-      out
-    } finally s.conf.set(key, prev)
+    def keyedSeq(n: Long) = s.read.format("graft.sources.v2.SeqSource")
+      .option("n", n).option("keyed", true).load()
+    val left = keyedSeq(1000000L)
+      .filter(col("id") < 700000L)
+      .groupBy(col("mod7"))
+      .agg(count(lit(1)).as("l_rows"), sum(col("cents")).as("l_cents"))
+    val right = keyedSeq(500000L)
+      .groupBy(col("mod7"))
+      .agg(count(lit(1)).as("r_rows"))
+    left.hint("merge").join(right, "mod7")
+      .select(col("mod7"), col("l_rows"), col("l_cents"), col("r_rows"))
+      .orderBy("mod7")
   }
   // q_dsv2_spj: the storage-partitioned join's content replayed
   // arithmetically — both keyed sides aggregated over generate_series
@@ -428,25 +419,16 @@ object Dsv2 extends Family {
         .write.format(fmt).option("path", liDir)
         .option("partition_by", "b").mode("overwrite").save()
     }
-    val key = "spark.sql.sources.v2.bucketing.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "true")
-    try {
-      val o = s.read.format(fmt).option("path", ordDir).load()
-        .groupBy("b")
-        .agg(count(lit(1)).as("n_ord"), sum("cents").as("ord_cents"))
-      val l = s.read.format(fmt).option("path", liDir).load()
-        .groupBy("b")
-        .agg(count(lit(1)).as("n_li"), sum("qty").as("qty_sum"))
-      val out = o.hint("merge").join(l, "b")
-        .select(col("b"), col("n_ord"), col("ord_cents"),
-          col("n_li"), col("qty_sum"))
-        .orderBy("b")
-      // planning is lazy and reads SQLConf at plan time — force it while
-      // the conf override is live
-      out.queryExecution.executedPlan
-      out
-    } finally s.conf.set(key, prev)
+    val o = s.read.format(fmt).option("path", ordDir).load()
+      .groupBy("b")
+      .agg(count(lit(1)).as("n_ord"), sum("cents").as("ord_cents"))
+    val l = s.read.format(fmt).option("path", liDir).load()
+      .groupBy("b")
+      .agg(count(lit(1)).as("n_li"), sum("qty").as("qty_sum"))
+    o.hint("merge").join(l, "b")
+      .select(col("b"), col("n_ord"), col("ord_cents"),
+        col("n_li"), col("qty_sum"))
+      .orderBy("b")
   }
   // q_dsv2_spj_staged: the staged co-bucketed join's content replayed
   // straight from orders/lineitem — the staging must be a pure layout
@@ -642,7 +624,7 @@ object Dsv2 extends Family {
     * the contract live: a vector DELETE, then an UNRELATED append, then
     * two in-plan verdicts from the connector's own metadata —
     * `no_per_row_manifest_lines` (the post-append manifest holds zero
-    * legacy D-lines) and `append_wrote_zero_dv_bytes` (the sidecar set
+    * per-row `D\t` lines) and `append_wrote_zero_dv_bytes` (the sidecar set
     * and the reference map are BYTE-IDENTICAL across the append — the
     * append's commit cost excluded the delete state entirely). At 100 TB
     * with 10M accumulated deletes this is the difference between a
@@ -668,7 +650,7 @@ object Dsv2 extends Family {
     def sidecars = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .map(_.getName).filter(_.startsWith("_dv-")).toSet
     val sidecarsBefore = sidecars
-    val refsBefore = StageSource.readDvRefs(dir, None)
+    val refsBefore = StageSource.readManifest(dir, None).dvRefs
     // the UNRELATED append: its commit must carry the delete state as
     // references, writing zero vector bytes
     s.sql(s"""INSERT INTO $t
@@ -681,7 +663,7 @@ object Dsv2 extends Family {
       java.nio.charset.StandardCharsets.UTF_8)
     val noPerRow = !manifest.linesIterator.exists(_.startsWith("D\t"))
     val zeroDvBytes = sidecars == sidecarsBefore &&
-      StageSource.readDvRefs(dir, None) == refsBefore
+      StageSource.readManifest(dir, None).dvRefs == refsBefore
     s.sql(s"""SELECT status, COUNT(*) AS n_orders, SUM(cents) AS sum_cents
       FROM $t GROUP BY status ORDER BY status""")
       .withColumn("no_per_row_manifest_lines", lit(noPerRow))
@@ -1147,24 +1129,19 @@ object Dsv2 extends Family {
       s.sql(s"INSERT INTO $dim SELECT c_custkey, c_mktsegment FROM $vc")
       marker.createNewFile(): Unit
     }
-    val key = "spark.sql.sources.v2.bucketing.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "true")
-    try {
-      val j = s.table(fact).hint("merge").join(s.table(dim), "custkey")
-        .groupBy("segment")
-        .agg(count(lit(1)).as("n_orders"), sum("cents").as("sum_cents"))
-      j.collect(): Unit
-      val plan = j.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      // the ONLY exchange allowed is the post-join aggregate's own small
-      // shuffle: the join subtree (below SortMergeJoin) must be clean
-      val joinSub = plan.linesIterator
-        .dropWhile(!_.contains("SortMergeJoin")).mkString("\n")
-      val exchangeFree = plan.contains("SortMergeJoin") &&
-        !joinSub.linesIterator.exists(_.contains("Exchange "))
-      j.withColumn("exchange_free", lit(exchangeFree)).orderBy("segment")
-    } finally s.conf.set(key, prev)
+    val j = s.table(fact).hint("merge").join(s.table(dim), "custkey")
+      .groupBy("segment")
+      .agg(count(lit(1)).as("n_orders"), sum("cents").as("sum_cents"))
+    j.collect(): Unit
+    val plan = j.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    // the ONLY exchange allowed is the post-join aggregate's own small
+    // shuffle: the join subtree (below SortMergeJoin) must be clean
+    val joinSub = plan.linesIterator
+      .dropWhile(!_.contains("SortMergeJoin")).mkString("\n")
+    val exchangeFree = plan.contains("SortMergeJoin") &&
+      !joinSub.linesIterator.exists(_.contains("Exchange "))
+    j.withColumn("exchange_free", lit(exchangeFree)).orderBy("segment")
   }
   // q_dsv2_spj_bucketed: the bucketed PK-FK join must equal the plain
   // relational answer (bucketing is pure layout), and the
@@ -1376,19 +1353,12 @@ object Dsv2 extends Family {
         .write.format(fmt).option("path", dimDir)
         .option("partition_by", "b").mode("overwrite").save()
     }
-    val key = "spark.sql.sources.v2.bucketing.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "true")
-    try {
-      val fact = s.read.format(fmt).option("path", factDir).load()
-      val dim = s.read.format(fmt).option("path", dimDir).load()
-      val out = fact.hint("merge").join(dim, "b")
-        .groupBy("label")
-        .agg(count(lit(1)).as("n_orders"), sum("cents").as("sum_cents"))
-        .orderBy("label")
-      out.queryExecution.executedPlan // force planning under the conf
-      out
-    } finally s.conf.set(key, prev)
+    val fact = s.read.format(fmt).option("path", factDir).load()
+    val dim = s.read.format(fmt).option("path", dimDir).load()
+    fact.hint("merge").join(dim, "b")
+      .groupBy("label")
+      .agg(count(lit(1)).as("n_orders"), sum("cents").as("sum_cents"))
+      .orderBy("label")
   }
   // q_dsv2_spj_dim: the direct PK-FK staged join's content — per-bucket
   // order counts and cents straight from orders
@@ -1668,7 +1638,7 @@ object Dsv2 extends Family {
     * appends/overwrites — snapshot isolation. Vacuum semantics (history
     * expired, pre-vacuum versions fail loudly, takedown-deleted files
     * make older versions unreconstructible BY DESIGN) and the
-    * pre-ledger-table decline are pinned in SourcesSpec.
+    * untimed-version decline are pinned in SourcesSpec.
     */
   private def qDsv2TimeTravel(s: SparkSession, d: String): DataFrame = {
     val cat = stageCatalog(s, d)
@@ -1696,7 +1666,7 @@ object Dsv2 extends Family {
     def atV(ver: Int) = s.sql(s"SELECT * FROM $t VERSION AS OF $ver")
     // TIMESTAMP AS OF resolves through the per-manifest commit-time
     // ledger to the snapshot current at that instant (Iceberg's
-    // snapshot-timestamp contract); pre-ledger tables decline loudly
+    // snapshot-timestamp contract); untimed versions decline loudly
     // (SourcesSpec pins the decline)
     def atT(ms: Long) =
       s.sql(s"SELECT * FROM $t TIMESTAMP AS OF timestamp_millis($ms)")

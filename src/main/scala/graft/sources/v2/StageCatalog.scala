@@ -24,9 +24,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `<root>/<namespace>/<table>` with the schema / partition spec /
   * snapshot files [[StageSource]] already maintains.
   *
-  * Deliberately NOT implemented: ALTER/RENAME (schema evolution is a
-  * table-format concern with its own round of invariants) — both throw
-  * rather than half-work.
+  * Deliberately NOT implemented: RENAME, and every ALTER except an
+  * appended nullable ADD COLUMN ([[alterTable]]) — they throw rather
+  * than half-work.
   */
 class StageCatalog extends TableCatalog with FunctionCatalog {
   private var catalogName: String = _
@@ -63,11 +63,7 @@ class StageCatalog extends TableCatalog with FunctionCatalog {
     ident.name match {
       case "snapshots" => Some(new StageSnapshotsTable(dir))
       case "changes" =>
-        val schema = StructType.fromDDL(new String(
-          java.nio.file.Files.readAllBytes(
-            new File(dirOf(inner), StageSource.SchemaFile).toPath),
-          StandardCharsets.UTF_8))
-        Some(new StageChangeFeedTable(dir, schema))
+        Some(new StageChangeFeedTable(dir, StageSource.readSchema(dir)))
       case _ => None
     }
   }
@@ -93,9 +89,7 @@ class StageCatalog extends TableCatalog with FunctionCatalog {
     if (!new File(dir, StageSource.SchemaFile).exists())
       throw new NoSuchTableException(
         (ident.namespace() :+ ident.name()).toSeq)
-    val schema = StructType.fromDDL(new String(
-      java.nio.file.Files.readAllBytes(
-        new File(dir, StageSource.SchemaFile).toPath), StandardCharsets.UTF_8))
+    val schema = StageSource.readSchema(dir.getAbsolutePath)
     // defense in depth: a hand-edited schema file must not smuggle in the
     // reserved sidecar name either
     require(!schema.fieldNames.contains("__rows"),
@@ -119,18 +113,14 @@ class StageCatalog extends TableCatalog with FunctionCatalog {
     require(StageSource.manifestVersions(dir.getAbsolutePath).contains(v),
       s"table ${ident.name} has no snapshot version $v " +
         s"(available: ${StageSource.manifestVersions(dir.getAbsolutePath).mkString(",")})")
-    loadTable(ident) match {
-      case t: StageTable => new StageTable(dir.getAbsolutePath, t.schema(),
-        StageSource.readPartCols(dir.getAbsolutePath), Some(v),
-        props = StageSource.readProps(dir.getAbsolutePath))
-    }
+    loadTable(ident) match { case t: StageTable => t.pinned(v) }
   }
 
   /** SQL `TIMESTAMP AS OF t`: Spark hands the instant in MICROseconds;
     * it resolves through the commit-time ledger ([[StageSource
     * .CommitsFile]], one line per manifest claim) to the snapshot that
     * was current then — Iceberg's snapshot-timestamp contract. Tables
-    * with any pre-ledger live snapshot decline loudly (resolving around
+    * with any untimed live snapshot decline loudly (resolving around
     * an untimed version could silently travel to the wrong snapshot).
     */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
@@ -224,8 +214,8 @@ class StageCatalog extends TableCatalog with FunctionCatalog {
     // concurrent ADD COLUMNs both reading the pre-alter schema outside it
     // meant the second write silently dropped the first ALTER's column)
     StageCommitter.lockFor(path).synchronized {
-    val table = loadTable(ident) // throws NoSuchTableException
-    val schema = table.schema()
+    loadTable(ident): Unit // throws NoSuchTableException
+    val schema = StageSource.readSchema(path)
     val added = changes.map {
       case add: TableChange.AddColumn =>
         require(add.fieldNames.length == 1,
@@ -251,53 +241,22 @@ class StageCatalog extends TableCatalog with FunctionCatalog {
       // backfill stored-column counts for every live file BEFORE the
       // schema changes — they all carry the pre-alter schema, the last
       // moment that count is knowable. The counts ride a NEW manifest
-      // version (CREATE_NEW claim, like every commit): a lost count
-      // would make readers MISDECODE old files under the evolved
-      // schema, so it must be claim-atomic, not subject to the
-      // sidecars' lossy cross-process rewrite. (_cols.tsv is also
-      // refreshed as the legacy-reader fallback.)
-      var committed = false
-      while (!committed) {
-        val live = StageSource.snapshotFiles(path, None).map(_.getName)
-        val known = StageSource.readColsAt(path, None)
-        val counts = live.map(f => f -> known.getOrElse(f, schema.length))
-        // delete-vector REFERENCES carry over verbatim (bounded
-        // encoding); legacy per-row D-lines migrate to sidecars once
-        val refs = StageSource.readDvRefs(path, None)
-        val legacy = StageSource.readLegacyDeletes(path, None)
-        val dvLines = live.toSeq.flatMap { f =>
-          refs.get(f).map(StageSource.dvRefLine(f, _))
-            .orElse(legacy.get(f).map(v =>
-              StageSource.dvRefLine(f, StageSource.writeDvFile(path, v))))
-        }
-        val colLines = counts.map { case (f, n) => StageSource.colsLine(f, n) }
-        // change summary: the ALTER backfill moves no data (empty commit)
-        val changeLns = StageSource.changeLines(Seq.empty, Seq.empty, Map.empty)
-        val nextV = StageSource.latestVersion(path).getOrElse(0) + 1
-        try {
-          java.nio.file.Files.write(
-            new File(dir, StageSource.manifestName(nextV)).toPath,
-            (live.toSeq ++ dvLines ++ colLines ++ changeLns)
-              .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8),
-            java.nio.file.StandardOpenOption.CREATE_NEW): Unit
-          StageSource.recordCommitTime(path, nextV)
-          java.nio.file.Files.write(
-            new File(dir, StageSource.ColsFile).toPath,
-            counts.map { case (f, n) => s"$f\t$n" }
-              .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8)): Unit
-          committed = true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => () // retry on the new base
-        }
+      // version (the one claim path, like every commit): a lost count
+      // would make readers MISDECODE old files under the evolved schema,
+      // so it must be claim-atomic. The ALTER moves no data: its change
+      // summary is empty.
+      StageCommitter.claim(path) { base =>
+        val live = StageSource.liveFiles(path, base).map(_.getName).toSeq
+        StageSource.Manifest(0, live, base.dvRefs,
+          live.map(f => f -> base.cols.getOrElse(f, schema.length)).toMap,
+          Some(StageSource.VersionChanges(Seq.empty, Seq.empty, Map.empty)))
       }
       // cross-process conflict detection (same-process alters serialize on
       // the lock above): if another PROCESS's ALTER changed the persisted
       // schema between this alter's read and its write, blindly writing
       // `schema ++ added` would silently drop that alter's column — fail
       // loudly instead, like every other concurrent-rewrite conflict
-      val onDisk = StructType.fromDDL(new String(
-        java.nio.file.Files.readAllBytes(
-          new File(dir, StageSource.SchemaFile).toPath), StandardCharsets.UTF_8))
+      val onDisk = StageSource.readSchema(path)
       require(onDisk.toDDL == schema.toDDL,
         s"concurrent schema change on ${ident.name}: persisted schema " +
           s"changed from '${schema.toDDL}' to '${onDisk.toDDL}' while this " +

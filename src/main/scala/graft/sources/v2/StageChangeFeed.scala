@@ -42,11 +42,10 @@ import scala.jdk.CollectionConverters._
   * reconstruction.
   *
   * Scale shape: resolution is driver-side metadata only — one manifest
-  * per version in the range (self-contained summaries; pre-r19 versions
-  * fall back to the two-manifest diff), change units map 1:1 to input
-  * partitions (file-grain parallelism, the same unit as the batch scan),
-  * and delete records for a MOR delete read only the delta's ordinals,
-  * never rescan the table.
+  * per version in the range (self-contained summaries), change units
+  * map 1:1 to input partitions (file-grain parallelism, the same unit as
+  * the batch scan), and delete records for a MOR delete read only the
+  * delta's ordinals, never rescan the table.
   */
 object StageChangeFeed {
   val TypeCol = "_change_type"
@@ -108,38 +107,26 @@ final class ChangeResolver(path: String) {
 
   private val changesMemo =
     new java.util.concurrent.ConcurrentHashMap[Int, StageSource.VersionChanges]
-  private val colsMemo =
-    new java.util.concurrent.ConcurrentHashMap[Int, Map[String, Int]]
+  private val manifestMemo =
+    new java.util.concurrent.ConcurrentHashMap[Int, StageSource.Manifest]
   private val dvMemo =
     new java.util.concurrent.ConcurrentHashMap[Int, Map[String, Array[Long]]]
 
-  /** What version v changed: the manifest's own summary when
-    * self-contained, the two-manifest diff (v−1 vs v, resolved delete
-    * vectors) for pre-r19 manifests.
+  /** What version v changed, from the manifest's own change summary (a
+    * manifest without one fails loudly, naming it).
     */
   def changes(v: Int): StageSource.VersionChanges =
     changesMemo.computeIfAbsent(v, _ =>
-      StageSource.readChanges(path, v).getOrElse {
-        val before =
-          if (v <= 1) Set.empty[String]
-          else StageSource.snapshotFiles(path, Some(v - 1)).map(_.getName).toSet
-        val after = StageSource.snapshotFiles(path, Some(v)).map(_.getName).toSet
-        val dvB = if (v <= 1) Map.empty[String, Array[Long]] else dvAt(v - 1)
-        val dvA = dvAt(v)
-        val deltas = after.intersect(before).iterator.map { f =>
-          val b = dvB.getOrElse(f, Array.empty[Long]).toSet
-          f -> dvA.getOrElse(f, Array.empty[Long]).filterNot(b)
-        }.filter(_._2.nonEmpty).toMap
-        StageSource.VersionChanges(
-          after.diff(before).toSeq.sorted, before.diff(after).toSeq.sorted,
-          deltas)
-      })
+      StageSource.readManifest(path, Some(v)).changes.getOrElse(
+        throw new IllegalStateException(s"manifest " +
+          s"${new File(path, StageSource.manifestName(v))} has no change " +
+          "summary (S line): its changes cannot be read")))
 
-  private def colsAt(v: Int): Map[String, Int] =
-    colsMemo.computeIfAbsent(v, _ => StageSource.readColsAt(path, Some(v)))
+  private def manifest(v: Int): StageSource.Manifest =
+    manifestMemo.computeIfAbsent(v, _ => StageSource.readManifest(path, Some(v)))
 
   private def dvAt(v: Int): Map[String, Array[Long]] =
-    dvMemo.computeIfAbsent(v, _ => StageSource.readDeletes(path, Some(v)))
+    dvMemo.computeIfAbsent(v, _ => manifest(v).deletes(path))
 
   def unitKeysOf(v: Int): Seq[String] = {
     val ch = changes(v)
@@ -156,11 +143,11 @@ final class ChangeResolver(path: String) {
     val abs = new File(path, f).getAbsolutePath
     kind match {
       case AddedUnit =>
-        StageChangePartition(abs, colsAt(v).getOrElse(f, -1), Insert, v,
-          skips = dvAt(v).getOrElse(f, Array.empty[Long]), only = null)
+        StageChangePartition(abs, manifest(v).cols.getOrElse(f, -1),
+          Insert, v, skips = dvAt(v).getOrElse(f, Array.empty[Long]), only = null)
       case DvDeltaUnit =>
-        StageChangePartition(abs, colsAt(v).getOrElse(f, -1), Delete, v,
-          skips = Array.empty, only = changes(v).dvDeltas(f))
+        StageChangePartition(abs, manifest(v).cols.getOrElse(f, -1),
+          Delete, v, skips = Array.empty, only = changes(v).dvDeltas(f))
       case RemovedUnit =>
         // pre-image: the file's live rows as of v−1 (its content is
         // immutable; only its delete-vector state was versioned)
@@ -168,8 +155,8 @@ final class ChangeResolver(path: String) {
           s"change feed of $path at version $v needs removed file $f, " +
             "whose bytes were physically destroyed (takedown delete or " +
             "vacuum) — this version's changes are not reconstructible")
-        StageChangePartition(abs, colsAt(v - 1).getOrElse(f, -1), Delete, v,
-          skips = if (v <= 1) Array.empty[Long]
+        StageChangePartition(abs, manifest(v - 1).cols.getOrElse(f, -1),
+          Delete, v, skips = if (v <= 1) Array.empty[Long]
             else dvAt(v - 1).getOrElse(f, Array.empty[Long]),
           only = null)
       case other =>

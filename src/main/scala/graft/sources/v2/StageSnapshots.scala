@@ -16,10 +16,13 @@ import scala.jdk.CollectionConverters._
   * Delta's `DESCRIBE HISTORY`, on the staging connector's own
   * metadata): `option("snapshots", "true")` resolves a staged table
   * path to one row per LIVE snapshot version — its commit time (null
-  * for pre-ledger manifests), file count, and what its commit CHANGED
+  * for an untimed version: a crash between the manifest claim and the
+  * commit-time append), file count, and what its commit CHANGED
   * (added/removed files, delete-vector delta files and rows), read from
-  * the r19 self-contained change summaries with the two-manifest diff
-  * as the pre-r19 fallback. This is the operability loop for the
+  * each manifest's own change summary. `self_contained` is always TRUE
+  * (every manifest this connector reads carries its summary; one
+  * without fails the read loudly) and is kept for the row contract
+  * readers select it by. This is the operability loop for the
   * maintenance tier: "which commit bloated the file count", "when did
   * the takedown land", "how much MOR debt did last night add" are one
   * metadata scan, zero data bytes.
@@ -46,7 +49,6 @@ object StageSnapshots {
     val times = StageSource.readCommitTimes(path)
     val resolver = new ChangeResolver(path)
     StageSource.manifestVersions(path).map { v =>
-      val selfContained = StageSource.readChanges(path, v).isDefined
       val ch = resolver.changes(v)
       Array[Any](
         v.toLong,
@@ -56,7 +58,7 @@ object StageSnapshots {
         ch.removed.size.toLong,
         ch.dvDeltas.count(_._2.nonEmpty).toLong,
         ch.dvDeltas.valuesIterator.map(_.length.toLong).sum,
-        selfContained)
+        true)
     }
   }
 }

@@ -63,12 +63,8 @@ class StageSource extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val path = StageSource.pathOf(options.asScala.toMap.asJava)
-    val f = new File(path, StageSource.SchemaFile)
-    require(f.exists(),
-      s"StageSource table at $path has no persisted schema — write first")
-    val base = StructType.fromDDL(new String(
-      java.nio.file.Files.readAllBytes(f.toPath), StandardCharsets.UTF_8))
+    val base = StageSource.readSchema(
+      StageSource.pathOf(options.asScala.toMap.asJava))
     // a change-data-feed read sees the data columns PLUS the two feed
     // columns — declared here so the analyzer resolves them like any
     // other scan output; a snapshots read sees the metadata schema
@@ -121,6 +117,15 @@ class StageSource extends TableProvider {
 
 object StageSource {
   val SchemaFile = "_schema.ddl"
+
+  def readSchema(path: String): StructType = {
+    val f = new File(path, SchemaFile)
+    require(f.exists(),
+      s"StageSource table at $path has no persisted schema — write first")
+    StructType.fromDDL(new String(
+      java.nio.file.Files.readAllBytes(f.toPath), StandardCharsets.UTF_8))
+  }
+
   val SuccessFile = "_SUCCESS"
   val StatsFile = "_stats.tsv"
   /** Metadata column: committed file name (row lineage). */
@@ -183,82 +188,155 @@ object StageSource {
     a
   }
 
-  /** Per-file STORED column count: `file \t ncols` — the schema-evolution
-    * sidecar. The framing is positional, so a file written before an
-    * `ALTER TABLE … ADD COLUMN` stores fewer columns than the current
-    * schema; the reader decodes exactly the file's own columns and
-    * null-fills the rest. Written at every commit; files from before
-    * this sidecar existed are backfilled at ALTER time (when they all
-    * still carry the pre-alter schema, the last moment that count is
-    * knowable).
-    */
-  val ColsFile = "_cols.tsv"
-
-  /** file name → stored column count (absent for legacy files, which
-    * store the full current schema — ALTER backfills before evolving).
-    */
-  def readCols(path: String): Map[String, Int] = {
-    val f = new File(path, ColsFile)
-    if (!f.exists()) return Map.empty
-    new String(java.nio.file.Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-      .linesIterator.filter(_.nonEmpty).map { l =>
-        val Array(file, n) = splitExact(f, l, 2); file -> n.toInt
-      }.toMap
-  }
-
   /** Snapshot manifest name for version N: the exact file list of that
-    * snapshot, one name per line. Every commit writes the next version;
-    * readers resolve a version's manifest instead of listing the
-    * directory, which is what makes overwrite LOGICAL (the old snapshot's
-    * files stay on disk, still readable via `version_as_of`) and reads
-    * immune to concurrent commits.
+    * snapshot plus its metadata lines (see [[Manifest]]). Every commit
+    * claims the next version ([[StageCommitter.claim]]); readers resolve
+    * a version's manifest instead of listing the directory, which is what
+    * makes overwrite LOGICAL (the old snapshot's files stay on disk, still
+    * readable via `version_as_of`) and reads immune to concurrent commits.
     */
   def manifestName(v: Int): String = s"_v$v.manifest"
   private val ManifestRe = "_v(\\d+)\\.manifest".r
 
-  /** Positional DELETE VECTORS ride the manifest as `D\tfile\tpos` lines
-    * (merge-on-read deletes, Iceberg's positional-delete contract): a
-    * selective DELETE on a MOR table writes these entries instead of
-    * rewriting whole files, readers skip the listed row ordinals, and
-    * [[compact]] rewrites lazily. Living INSIDE the manifest keeps the
-    * commit single-file-atomic under the CREATE_NEW claim — a reader can
-    * never see a snapshot's file list without its delete state. Each
-    * version's lines are CUMULATIVE (carry-forward happens at commit;
-    * a replaced or dropped file's entries drop with it), so resolving a
-    * version needs exactly one manifest read — including old versions
-    * under time travel.
-    */
-  private val DeleteLineTag = "D\t"
-
-  def deleteLine(file: String, pos: Long): String =
-    s"$DeleteLineTag$file\t$pos"
-
-  def isDeleteLine(l: String): Boolean = l.startsWith(DeleteLineTag)
-
-  /** Scale-bounded delete-vector encoding (r17 verdict #1): the per-row
-    * `D\t` lines above are CUMULATIVE — after N accumulated row deletes
-    * every commit (including unrelated appends) rewrote and every plan
-    * read O(N) manifest bytes driver-side, the exact O(total-state) term
-    * the rest of the engine avoids. New commits instead write each dirty
-    * file's complete vector ONCE into an immutable, CONTENT-ADDRESSED
-    * sidecar (`_dv-<md5>.bin`, run-length coded — sorted ordinals
-    * compress brutally) and the manifest carries one `V\tfile\tdvName`
-    * REFERENCE line per dirty file. Carry-forward copies the reference,
-    * not the rows: an unrelated append re-writes O(dirty files) manifest
-    * bytes and ZERO vector bytes (unchanged vectors re-reference the
-    * same sidecar by hash — content addressing makes the write
-    * idempotent under races and retries, and old snapshot versions keep
-    * resolving because no sidecar is ever mutated). Commit atomicity is
-    * unchanged: sidecars are written BEFORE the manifest claim and are
-    * invisible until a claimed manifest references them — the claim
-    * stays single-file CREATE_NEW. Legacy `D\t` manifests stay readable;
-    * the first commit after upgrade migrates them to references.
+  /** Manifest line tags. A line without a tab is a data file name (data
+    * file names never contain one); every other line starts with one of
+    * these, and a line with any other tag fails the parse loudly:
+    *
+    *  - `V\tfile\tdvName`: the file's positional DELETE VECTOR
+    *    (merge-on-read deletes, Iceberg's positional-delete contract) as
+    *    a reference to an immutable, CONTENT-ADDRESSED sidecar
+    *    `_dv-<md5>.bin` (run-length coded, see [[writeDvFile]]).
+    *    Carry-forward copies the reference, not the rows, so an unrelated
+    *    append rewrites O(dirty files) manifest bytes and zero vector
+    *    bytes. Sidecars are written BEFORE the claim and are invisible
+    *    until a claimed manifest references them, so a reader can never
+    *    see a snapshot's file list without its delete state.
+    *  - `C\tfile\tncols`: the file's STORED column count. The framing is
+    *    positional, so a file written before an `ALTER TABLE … ADD
+    *    COLUMN` stores fewer columns than the current schema; the reader
+    *    decodes exactly the file's own columns and null-fills the rest.
+    *    A lost count would MISDECODE such a file, so it rides the
+    *    claim-atomic manifest, never a lossy sidecar.
+    *  - `S\t<nAdded>\t<nRemoved>\t<nDeltas>`, `A\tfile`, `R\tfile`,
+    *    `X\tfile\t<base64 run-length ordinals>`: the SELF-CONTAINED change
+    *    summary — what THIS commit added, removed and newly deleted (the
+    *    delta only, inline). Change readers (streaming tail, change-data
+    *    feed, snapshots table) read ONE manifest per version, never its
+    *    predecessor, so a retention vacuum that expired v−1 does not kill
+    *    a reader of v. The S-line counts double as a torn-write check.
     */
   private val DvRefTag = "V\t"
+  private val ColsTag = "C\t"
+  private val SummaryTag = "S\t"
+  private val AddTag = "A\t"
+  private val RemoveTag = "R\t"
+  private val DvDeltaTag = "X\t"
 
-  def dvRefLine(file: String, dv: String): String = s"$DvRefTag$file\t$dv"
+  /** What one commit changed, as recorded by its own manifest. */
+  final case class VersionChanges(
+      added: Seq[String], removed: Seq[String],
+      dvDeltas: Map[String, Array[Long]])
 
-  def isDvRefLine(l: String): Boolean = l.startsWith(DvRefTag)
+  /** One snapshot manifest: its version, file list (in commit order), the
+    * files' delete-vector references and stored column counts, and the
+    * change summary of the commit that claimed it (None only for a
+    * manifest written without one — batch reads never need it, change
+    * reads fail loudly on it, see [[ChangeResolver.changes]]).
+    */
+  final case class Manifest(
+      version: Int, files: Seq[String],
+      dvRefs: Map[String, String] = Map.empty,
+      cols: Map[String, Int] = Map.empty,
+      changes: Option[VersionChanges] = None) {
+
+    /** The resolved delete vectors: file name → sorted row ordinals. */
+    def deletes(path: String): Map[String, Array[Long]] =
+      dvRefs.map { case (f, dv) => f -> loadDv(path, dv) }
+
+    /** The on-disk lines: files, then per file its V- and C-lines, then
+      * the change summary (X-lines last, so a truncated write loses them
+      * first — and the S-line counts catch exactly that).
+      */
+    def lines: Seq[String] = {
+      val enc = java.util.Base64.getEncoder
+      val summary = changes.toSeq.flatMap { ch =>
+        val deltas = ch.dvDeltas.toSeq.sortBy(_._1).collect {
+          case (f, d) if d.nonEmpty =>
+            s"$DvDeltaTag$f\t${enc.encodeToString(encodeDv(d))}"
+        }
+        s"$SummaryTag${ch.added.size}\t${ch.removed.size}\t${deltas.size}" +:
+          (ch.added.map(AddTag + _) ++ ch.removed.map(RemoveTag + _) ++ deltas)
+      }
+      files ++ files.flatMap(f => dvRefs.get(f).map(dv => s"$DvRefTag$f\t$dv")) ++
+        files.flatMap(f => cols.get(f).map(n => s"$ColsTag$f\t$n")) ++ summary
+    }
+  }
+
+  /** THE manifest parser. Any line it does not know — a per-row `D\t`
+    * delete line included — fails loudly, naming the file and the line:
+    * skipping it could silently resurrect deleted rows.
+    */
+  private def parseManifest(src: File, version: Int, text: String): Manifest = {
+    def bad(l: String, why: String): Nothing =
+      throw new IllegalStateException(s"manifest $src: $why: $l")
+    def fields(l: String, n: Int): Array[String] = {
+      val a = l.split('\t')
+      if (a.length != n) bad(l, s"expected $n tab-separated fields, got ${a.length}")
+      a
+    }
+    def int(l: String, x: String): Int =
+      x.toIntOption.getOrElse(bad(l, s"not an integer: $x"))
+    val files = Seq.newBuilder[String]
+    val dvRefs = Map.newBuilder[String, String]
+    val cols = Map.newBuilder[String, Int]
+    val added = Seq.newBuilder[String]
+    val removed = Seq.newBuilder[String]
+    val deltas = Map.newBuilder[String, Array[Long]]
+    var summary: Option[String] = None
+    text.linesIterator.filter(_.nonEmpty).foreach { l =>
+      val tab = l.indexOf('\t')
+      if (tab < 0) files += l
+      else l.substring(0, tab + 1) match {
+        case DvRefTag => val a = fields(l, 3); dvRefs += a(1) -> a(2)
+        case ColsTag => val a = fields(l, 3); cols += a(1) -> int(l, a(2))
+        case SummaryTag =>
+          if (summary.isDefined) bad(l, "second change-summary line")
+          summary = Some(l)
+        case AddTag => added += fields(l, 2)(1)
+        case RemoveTag => removed += fields(l, 2)(1)
+        case DvDeltaTag =>
+          val a = fields(l, 3)
+          deltas += a(1) -> decodeDv(java.util.Base64.getDecoder.decode(a(2)))
+        case _ => bad(l, "unknown line tag")
+      }
+    }
+    val changes = summary.map { s =>
+      val ch = VersionChanges(added.result(), removed.result(), deltas.result())
+      val n = fields(s, 4).drop(1).map(int(s, _)).toSeq
+      val found = Seq(ch.added.size, ch.removed.size, ch.dvDeltas.size)
+      if (n != found)
+        bad(s, s"corrupt: summary says ${n.mkString("/")} (added/removed/" +
+          s"deltas), found ${found.mkString("/")}")
+      ch
+    }
+    Manifest(version, files.result(), dvRefs.result(), cols.result(), changes)
+  }
+
+  /** Snapshot `v` (latest when None) — the one function that reads a
+    * manifest file. A table with no snapshot yet reads as the empty
+    * version-0 manifest; a named version that is absent fails loudly.
+    */
+  def readManifest(path: String, v: Option[Int]): Manifest = {
+    val version = v.orElse(latestVersion(path)).getOrElse(
+      return Manifest(0, Seq.empty))
+    val mf = new File(path, manifestName(version))
+    require(mf.exists(),
+      s"StageSource table at $path has no snapshot version $version " +
+        s"(available: ${manifestVersions(path).mkString(",")}) — it never " +
+        "existed or was expired by a vacuum")
+    parseManifest(mf, version, new String(
+      java.nio.file.Files.readAllBytes(mf.toPath), StandardCharsets.UTF_8))
+  }
 
   /** Run-length encode a sorted, distinct ordinal vector: runCount, then
     * (start, length) pairs. A contiguous span of deleted rows — the
@@ -338,186 +416,18 @@ object StageSource {
     decodeDv(java.nio.file.Files.readAllBytes(f.toPath))
   }
 
-  /** file name → delete-vector sidecar name for snapshot `v` (latest when
-    * None): the manifest's `V\t` reference lines. Carry-forward copies
-    * these references verbatim — no vector is decoded or re-encoded on
-    * the commit path of a file whose deletes didn't change.
-    */
-  def readDvRefs(path: String, v: Option[Int]): Map[String, String] = {
-    val version = v.orElse(latestVersion(path)).getOrElse(return Map.empty)
-    val mf = new File(path, manifestName(version))
-    if (!mf.exists()) return Map.empty
-    new String(java.nio.file.Files.readAllBytes(mf.toPath), StandardCharsets.UTF_8)
-      .linesIterator.filter(isDvRefLine).map { l =>
-        val Array(_, f, dv) = splitExact(mf, l, 3); f -> dv
-      }.toMap
-  }
-
-  /** Legacy per-row `D\t` vectors of snapshot `v` (pre-r18 manifests
-    * only — new commits write `V\t` references instead, migrating these
-    * on first touch).
-    */
-  def readLegacyDeletes(path: String, v: Option[Int]): Map[String, Array[Long]] = {
-    val version = v.orElse(latestVersion(path)).getOrElse(return Map.empty)
-    val mf = new File(path, manifestName(version))
-    if (!mf.exists()) return Map.empty
-    new String(java.nio.file.Files.readAllBytes(mf.toPath), StandardCharsets.UTF_8)
-      .linesIterator.filter(isDeleteLine).toSeq
-      .map { l => val Array(_, f, p) = splitExact(mf, l, 3); (f, p.toLong) }
-      .groupBy(_._1)
-      .map { case (f, ps) => f -> ps.map(_._2).distinct.sorted.toArray }
-  }
-
-  /** SELF-CONTAINED per-version change summary (r18 ADVICE #1/#3): each
-    * manifest additionally records what its OWN commit changed —
-    * `S\t<nAdded>\t<nRemoved>` marks the manifest as self-describing,
-    * `A\tfile` lists the files this commit ADDED, `R\tfile` the files it
-    * REMOVED from the snapshot, and `X\tfile\t<base64 run-length
-    * ordinals>` the delete-vector DELTA it recorded per file (the newly
-    * deleted ordinals only — inline, not a sidecar, and proportional to
-    * THIS commit's delta, the same bounded-commit-bytes contract as the
-    * V-references). Readers that need "what changed at version v" — the
-    * streaming tail and the change-data-feed — read ONE manifest instead
-    * of diffing v against v-1, so a retention-window vacuum that expired
-    * v-1 no longer kills a tail whose unconsumed data is entirely inside
-    * the window, and a long drain's planning is O(versions in range),
-    * not O(history²). Pre-r19 manifests carry no S-line; change readers
-    * fall back to the two-manifest diff for exactly those versions.
-    */
-  private val SummaryLineTag = "S\t"
-  private val AddLineTag = "A\t"
-  private val RemoveLineTag = "R\t"
-  private val DvDeltaLineTag = "X\t"
-
-  def summaryLine(nAdded: Int, nRemoved: Int, nDeltas: Int): String =
-    s"$SummaryLineTag$nAdded\t$nRemoved\t$nDeltas"
-  def addLine(file: String): String = s"$AddLineTag$file"
-  def removeLine(file: String): String = s"$RemoveLineTag$file"
-  def dvDeltaLine(file: String, sorted: Array[Long]): String =
-    s"$DvDeltaLineTag$file\t" +
-      java.util.Base64.getEncoder.encodeToString(encodeDv(sorted))
-
-  /** What one commit changed, as recorded by its own manifest. */
-  final case class VersionChanges(
-      added: Seq[String], removed: Seq[String],
-      dvDeltas: Map[String, Array[Long]])
-
-  /** The change-summary lines every manifest writer appends — kept in one
-    * place so the three commit sites (job commit, partition takedown,
-    * ALTER backfill) can never drift in format.
-    */
-  def changeLines(
-      added: Seq[String], removed: Seq[String],
-      dvDeltas: Map[String, Array[Long]]): Seq[String] = {
-    val deltaLines = dvDeltas.toSeq.sortBy(_._1).collect {
-      case (f, d) if d.nonEmpty => dvDeltaLine(f, d)
-    }
-    summaryLine(added.size, removed.size, deltaLines.size) +:
-      (added.map(addLine) ++ removed.map(removeLine) ++ deltaLines)
-  }
-
-  /** The changes manifest `v` recorded about its own commit; None for a
-    * pre-r19 manifest (no S-line), where callers must fall back to
-    * diffing snapshots v-1 and v. A missing manifest fails loudly — the
-    * version was expired by a vacuum and its per-version attribution is
-    * gone.
-    */
-  def readChanges(path: String, v: Int): Option[VersionChanges] = {
-    val mf = new File(path, manifestName(v))
-    require(mf.exists(),
-      s"StageSource table at $path has no snapshot version $v " +
-        s"(available: ${manifestVersions(path).mkString(",")}) — it was " +
-        "expired by a vacuum")
-    val lines = new String(
-      java.nio.file.Files.readAllBytes(mf.toPath), StandardCharsets.UTF_8)
-      .linesIterator.filter(_.nonEmpty).toSeq
-    val summary = lines.find(_.startsWith(SummaryLineTag))
-      .getOrElse(return None)
-    val added = lines.filter(_.startsWith(AddLineTag))
-      .map(l => splitExact(mf, l, 2)(1))
-    val removed = lines.filter(_.startsWith(RemoveLineTag))
-      .map(l => splitExact(mf, l, 2)(1))
-    val deltas = lines.filter(_.startsWith(DvDeltaLineTag)).map { l =>
-      val Array(_, f, b64) = splitExact(mf, l, 3)
-      f -> decodeDv(java.util.Base64.getDecoder.decode(b64))
-    }.toMap
-    // the summary counts double as a torn-write check — INCLUDING the
-    // X lines (review r19: changeLines writes them last, so a truncated
-    // manifest loses them first, and a feed that silently dropped a
-    // version's delete records would resurrect deleted rows on replay).
-    // Early-r19 manifests wrote a 3-field summary (no delta count); they
-    // also predate any X line, so the two-field check suffices there.
-    val s = summary.split('\t')
-    require(s.length == 3 || s.length == 4,
-      s"malformed summary line in $mf: $summary")
-    require(added.size == s(1).toInt && removed.size == s(2).toInt &&
-      (s.length < 4 || deltas.size == s(3).toInt),
-      s"manifest ${mf.getName} of $path is corrupt: summary says " +
-        s"${s.drop(1).mkString("/")} (added/removed/deltas), found " +
-        s"${added.size} / ${removed.size} / ${deltas.size}")
-    Some(VersionChanges(added, removed, deltas))
-  }
-
-  /** Stored-column-count lines (`C\tfile\tncols`) ride the manifest too:
-    * a lost count doesn't merely disable an optimization like a lost
-    * stats line — it makes the reader MISDECODE an evolved table's old
-    * files — so the count must be claim-atomic with the snapshot, not
-    * subject to the sidecars' documented lossy cross-process rewrite.
-    * `_cols.tsv` remains a fallback (pre-r17 tables, and the ALTER
-    * backfill's belt-and-braces copy).
-    */
-  private val ColsLineTag = "C\t"
-
-  def colsLine(file: String, ncols: Int): String = s"$ColsLineTag$file\t$ncols"
-
-  def isColsLine(l: String): Boolean = l.startsWith(ColsLineTag)
-
-  /** Any non-data line of a manifest (data file names never contain a
-    * tab).
-    */
-  def isMetaLine(l: String): Boolean = l.contains('\t')
-
-  /** file name → stored column count for snapshot `v` (latest when
-    * None): manifest C-lines first (claim-atomic), `_cols.tsv` fallback
-    * for files without one. Files absent from both store the full
-    * current schema (pre-evolution tables — ALTER backfills before the
-    * first evolution).
-    */
-  def readColsAt(path: String, v: Option[Int]): Map[String, Int] = {
-    val sidecar = readCols(path)
-    val version = v.orElse(latestVersion(path)).getOrElse(return sidecar)
-    val mf = new File(path, manifestName(version))
-    if (!mf.exists()) return sidecar
-    val manifest = new String(
-      java.nio.file.Files.readAllBytes(mf.toPath), StandardCharsets.UTF_8)
-      .linesIterator.filter(isColsLine).map { l =>
-        val Array(_, f, n) = splitExact(mf, l, 3); f -> n.toInt
-      }.toMap
-    sidecar ++ manifest // manifest wins
-  }
-
   /** The delete vectors of snapshot `v` (latest when None): file name →
-    * sorted deleted row ordinals. Resolves both encodings — `V\t`
-    * sidecar references (the bounded encoding) and legacy per-row `D\t`
-    * lines — unioned per file (a file never carries both after one
-    * post-upgrade commit, but a mixed manifest must still read right).
+    * sorted deleted row ordinals.
     */
-  def readDeletes(path: String, v: Option[Int]): Map[String, Array[Long]] = {
-    val legacy = readLegacyDeletes(path, v)
-    val refs = readDvRefs(path, v)
-    if (refs.isEmpty) return legacy
-    (legacy.keySet ++ refs.keySet).iterator.map { f =>
-      f -> (legacy.getOrElse(f, Array.empty[Long]) ++
-        refs.get(f).map(loadDv(path, _)).getOrElse(Array.empty[Long]))
-        .distinct.sorted
-    }.toMap
-  }
+  def readDeletes(path: String, v: Option[Int]): Map[String, Array[Long]] =
+    readManifest(path, v).deletes(path)
 
   /** Commit-time ledger: `version \t epochMillis`, one line per snapshot,
-    * appended when the version's manifest is claimed — what `TIMESTAMP AS
-    * OF` resolves against (Iceberg's snapshot-timestamp contract).
-    * Pre-feature manifests have no line and timestamp travel to them is
-    * DECLINED loudly, never guessed.
+    * appended right after the version's manifest is claimed — what
+    * `TIMESTAMP AS OF` resolves against (Iceberg's snapshot-timestamp
+    * contract). A crash between the claim and this append leaves an
+    * UNTIMED version, and timestamp travel over it is DECLINED loudly,
+    * never guessed.
     */
   val CommitsFile = "_commits.tsv"
 
@@ -528,7 +438,7 @@ object StageSource {
       java.nio.file.StandardOpenOption.CREATE,
       java.nio.file.StandardOpenOption.APPEND): Unit
 
-  /** version → commit epoch millis (absent for pre-feature versions). */
+  /** version → commit epoch millis (absent for untimed versions). */
   def readCommitTimes(path: String): Map[Int, Long] = {
     val f = new File(path, CommitsFile)
     if (!f.exists()) return Map.empty
@@ -542,8 +452,8 @@ object StageSource {
     * whose commit time is ≤ the asked instant (the snapshot that was
     * current then). Fails loudly when the instant predates the first
     * recorded commit, and when any live version carries no commit time
-    * (a pre-feature manifest makes the answer ambiguous — resolving
-    * around it could silently time-travel to the wrong snapshot).
+    * (an untimed version makes the answer ambiguous — resolving around
+    * it could silently time-travel to the wrong snapshot).
     */
   def versionAsOfMillis(path: String, millis: Long): Int = {
     val versions = manifestVersions(path)
@@ -551,10 +461,10 @@ object StageSource {
     val times = readCommitTimes(path)
     val untimed = versions.filterNot(times.contains)
     require(untimed.isEmpty,
-      s"snapshot version(s) ${untimed.mkString(",")} of $path predate " +
-        "commit-time recording — TIMESTAMP AS OF is only decidable on " +
-        "tables whose every live snapshot carries a commit time; use " +
-        "VERSION AS OF instead")
+      s"snapshot version(s) ${untimed.mkString(",")} of $path carry no " +
+        "commit time — TIMESTAMP AS OF is only decidable on tables whose " +
+        "every live snapshot carries a commit time; use VERSION AS OF " +
+        "instead")
     val at = versions.filter(v => times(v) <= millis)
     require(at.nonEmpty,
       s"no snapshot of $path existed at epoch-millis $millis " +
@@ -573,32 +483,23 @@ object StageSource {
   def latestVersion(path: String): Option[Int] =
     manifestVersions(path).lastOption
 
-  /** The file list of snapshot `v` (or the latest when None). Legacy
-    * tables without manifests fall back to the directory listing. A
-    * version whose files were physically removed (takedown delete,
-    * vacuum) fails loudly rather than returning a partial snapshot.
+  /** The file list of snapshot `v` (or the latest when None; empty before
+    * the first commit). A version whose files were physically removed
+    * (takedown delete, vacuum) fails loudly rather than returning a
+    * partial snapshot.
     */
-  def snapshotFiles(path: String, v: Option[Int]): Array[File] = {
-    val version = v.orElse(latestVersion(path)) match {
-      case None => return dataFiles(path) // legacy: no manifests yet
-      case Some(x) => x
-    }
-    val mf = new File(path, manifestName(version))
-    require(mf.exists(),
-      s"StageSource table at $path has no snapshot version $version " +
-        s"(available: ${manifestVersions(path).mkString(",")})")
-    val names = new String(
-      java.nio.file.Files.readAllBytes(mf.toPath), StandardCharsets.UTF_8)
-      .linesIterator.filter(l => l.nonEmpty && !isMetaLine(l)).toArray
-    names.map { n =>
+  def snapshotFiles(path: String, v: Option[Int]): Array[File] =
+    liveFiles(path, readManifest(path, v))
+
+  def liveFiles(path: String, m: Manifest): Array[File] =
+    m.files.map { n =>
       val f = new File(path, n)
       require(f.exists(),
-        s"snapshot version $version of $path references $n, which was " +
+        s"snapshot version ${m.version} of $path references $n, which was " +
           "physically removed (takedown delete or vacuum) — this version " +
           "is no longer reconstructible")
       f
-    }
-  }
+    }.toArray
 
   /** Repay the merge-on-read debt: rewrite ONLY the files carrying
     * delete vectors (decode, drop the deleted ordinals, re-commit
@@ -618,23 +519,18 @@ object StageSource {
     * ([[maintain]]) prices file-by-file.
     */
   def compact(path: String, only: Option[Set[String]]): Unit = {
-    val schemaFile = new File(path, SchemaFile)
-    require(schemaFile.exists(),
-      s"StageSource table at $path has no persisted schema")
-    val schema = StructType.fromDDL(new String(
-      java.nio.file.Files.readAllBytes(schemaFile.toPath), StandardCharsets.UTF_8))
+    val schema = readSchema(path)
     val partCols = readPartCols(path)
-    val dvs = only.fold(readDeletes(path, None))(s =>
-      readDeletes(path, None).filter { case (f, _) => s(f) })
+    val m = readManifest(path, None)
+    val dvs = m.deletes(path).filter { case (f, _) => only.forall(_(f)) }
     if (dvs.isEmpty) return // nothing to repay
-    val cols = readColsAt(path, None)
     val qid = "compact-" + java.util.UUID.randomUUID().toString.take(8)
     val writer = new StageDataWriter(path, schema, qid, 0, 0L, partCols)
     val factory = new StageReaderFactory(schema, schema)
     dvs.keys.toSeq.sorted.foreach { name =>
       val f = new File(path, name)
       val reader = factory.createReader(StageFilePartition(
-        f.getAbsolutePath, cols.getOrElse(name, -1), dvs(name)))
+        f.getAbsolutePath, m.cols.getOrElse(name, -1), dvs(name)))
       while (reader.next()) writer.write(reader.get())
       reader.close()
     }
@@ -674,14 +570,11 @@ object StageSource {
   def binpack(path: String, targetBytes: Long): Unit = {
     require(targetBytes > 0,
       s"$CompactTargetBytesProp must be positive, got $targetBytes")
-    val schemaFile = new File(path, SchemaFile)
-    require(schemaFile.exists(),
-      s"StageSource table at $path has no persisted schema")
-    val schema = StructType.fromDDL(new String(
-      java.nio.file.Files.readAllBytes(schemaFile.toPath), StandardCharsets.UTF_8))
+    val schema = readSchema(path)
     val partCols = readPartCols(path)
     val parts = readParts(path)
-    val small = snapshotFiles(path, None).filter(_.length < targetBytes)
+    val m = readManifest(path, None)
+    val small = liveFiles(path, m).filter(_.length < targetBytes)
     val bins = small
       .groupBy(f => parts.get(f.getName).map(_.mkString("/")).getOrElse(""))
       .toSeq.sortBy(_._1)
@@ -700,8 +593,7 @@ object StageSource {
         out.filter(_.length >= 2)
       }
     if (bins.isEmpty) return
-    val dvs = readDeletes(path, None)
-    val cols = readColsAt(path, None)
+    val dvs = m.deletes(path)
     val qid = "binpack-" + java.util.UUID.randomUUID().toString.take(8)
     val factory = new StageReaderFactory(schema, schema)
     // one writer per bin → exactly one committed file per bin (the
@@ -713,7 +605,7 @@ object StageSource {
       val writer = new StageDataWriter(path, schema, qid, i, i.toLong, partCols)
       bin.foreach { f =>
         val reader = factory.createReader(StageFilePartition(
-          f.getAbsolutePath, cols.getOrElse(f.getName, -1),
+          f.getAbsolutePath, m.cols.getOrElse(f.getName, -1),
           dvs.getOrElse(f.getName, Array.empty[Long])))
         while (reader.next()) writer.write(reader.get())
         reader.close()
@@ -801,8 +693,8 @@ object StageSource {
     require(retainLast >= 1, s"retainLast must be >= 1, got $retainLast")
     if (versions.isEmpty) return
     val retained = versions.takeRight(retainLast)
-    val keep = retained
-      .flatMap(v => snapshotFiles(path, Some(v)).map(_.getName)).toSet
+    val manifests = retained.map(v => readManifest(path, Some(v)))
+    val keep = manifests.flatMap(liveFiles(path, _).map(_.getName)).toSet
     dataFiles(path).filterNot(f => keep(f.getName))
       .foreach(f => f.delete(): Unit)
     versions.dropRight(retainLast)
@@ -810,8 +702,7 @@ object StageSource {
     // delete-vector sidecars referenced only by expired manifests go with
     // them (every retained snapshot's references stay resolvable)
     locally {
-      val keepDv = retained
-        .flatMap(v => readDvRefs(path, Some(v)).values).toSet
+      val keepDv = manifests.flatMap(_.dvRefs.values).toSet
       val all = new File(path).listFiles()
       if (all != null)
         all.filter(f => f.getName.startsWith("_dv-") && !keepDv(f.getName))
@@ -845,7 +736,6 @@ object StageSource {
     }
     prune(StatsFile)
     prune(PartsFile)
-    prune(ColsFile)
   }: Unit
 
   /** Partition SPECS (r18 verdict #4 — StageSource accepted identity
@@ -1068,8 +958,8 @@ object StageSource {
     readAllStats(path)._1
 
   /** file → col → (lower, upper) truncated UTF-8 byte bounds for string
-    * columns (absent for all-null, legacy, or non-string columns — such
-    * files are never skipped on that column).
+    * columns (absent for all-null or non-string columns, or a lost line —
+    * such files are never skipped on that column).
     */
   def readStringStats(path: String)
       : Map[String, Map[String, (Array[Byte], Array[Byte])]] =
@@ -1177,13 +1067,11 @@ class StageTable(
 
   override def deleteWhere(predicates: Array[Predicate]): Unit = {
     require(canDeleteWhere(predicates), "undecidable partition delete")
-    // same commit discipline as StageCommitter.commit (ADVICE r16 #2: a
-    // plain latest+1 write here could compute the same version as a
-    // concurrent append and clobber its snapshot): same-process callers
-    // serialize on the per-path lock, cross-process races lose the
-    // CREATE_NEW claim and retry against the re-read base — the doomed
-    // set is recomputed each attempt, so files a concurrent commit added
-    // to the doomed partitions are seen and handled, never dropped blind.
+    // same commit discipline as StageCommitter.commit: the one claim
+    // helper serializes same-process callers and retries a lost
+    // cross-process claim against the re-read base — the doomed set is
+    // recomputed each attempt, so files a concurrent commit added to the
+    // doomed partitions are seen and handled, never dropped blind.
     // specCol: a mixed layout (identity + bucket specs) resolves types by
     // the underlying columns; bucket specs themselves never decide (the
     // canDeleteWhere name check above already declined them)
@@ -1191,11 +1079,9 @@ class StageTable(
       tableSchema.fieldIndex(StageSource.specCol(c))).dataType)
     var doomed = Set.empty[String]
     StageCommitter.lockFor(path).synchronized {
-      var committed = false
-      while (!committed) {
+      StageCommitter.claim(path) { base =>
         val parts = StageSource.readParts(path)
-        val current = StageSource.snapshotFiles(path, None)
-        doomed = current.filter { f =>
+        doomed = StageSource.liveFiles(path, base).filter { f =>
           val pv = parts.getOrElse(f.getName, Array.empty[String])
           pv.length == partCols.length && predicates.forall(p =>
             StageTable.matches(p, partCols, colType, pv))
@@ -1204,39 +1090,16 @@ class StageTable(
         // then the physical removal — a takedown is the one operation
         // that must destroy bytes, so older snapshot versions referencing
         // these files intentionally stop being reconstructible (and say
-        // so loudly)
-        val survivors = current.map(_.getName).filterNot(doomed)
-        // surviving files keep their merge-on-read delete vectors and
-        // stored-column counts; the doomed files' entries drop with them
-        // surviving files' delete-vector REFERENCES carry over verbatim
-        // (bounded encoding); legacy per-row D-lines migrate to sidecars
-        val refs = StageSource.readDvRefs(path, None)
-        val legacy = StageSource.readLegacyDeletes(path, None)
-        val dvLines = survivors.flatMap { f =>
-          refs.get(f).map(StageSource.dvRefLine(f, _))
-            .orElse(legacy.get(f).map(v =>
-              StageSource.dvRefLine(f, StageSource.writeDvFile(path, v))))
-        }
-        val colLines = StageSource.readColsAt(path, None)
-          .filter { case (f, _) => survivors.contains(f) }
-          .toSeq.sorted.map { case (f, n) => StageSource.colsLine(f, n) }
-        // change summary: a takedown adds nothing and removes the doomed
-        // files (their BYTES are destroyed below, so a change-feed read
-        // of this version fails loudly at the missing files — by design)
-        val changeLns = StageSource.changeLines(
-          Seq.empty, doomed.toSeq.sorted, Map.empty)
-        val nextV = StageSource.latestVersion(path).getOrElse(0) + 1
-        try {
-          java.nio.file.Files.write(
-            new File(path, StageSource.manifestName(nextV)).toPath,
-            (survivors.toSeq ++ dvLines ++ colLines ++ changeLns)
-              .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8),
-            java.nio.file.StandardOpenOption.CREATE_NEW): Unit
-          StageSource.recordCommitTime(path, nextV)
-          committed = true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => () // lost the race: retry on the new base
-        }
+        // so loudly). Surviving files keep their delete-vector references
+        // and stored-column counts; the change summary removes the doomed
+        // files (a change-feed read of this version fails loudly at the
+        // missing bytes — by design).
+        val survivors = base.files.filterNot(doomed)
+        StageSource.Manifest(0, survivors,
+          base.dvRefs.filter(kv => !doomed(kv._1)),
+          base.cols.filter(kv => !doomed(kv._1)),
+          Some(StageSource.VersionChanges(
+            Seq.empty, doomed.toSeq.sorted, Map.empty)))
       }
       // physical deletes and sidecar rewrites stay INSIDE the lock
       // (ADVICE r17 #2: releasing it first let a same-process concurrent
@@ -1259,7 +1122,6 @@ class StageTable(
       }
       rewrite(StageSource.StatsFile)
       rewrite(StageSource.PartsFile)
-      rewrite(StageSource.ColsFile)
     }
   }
 
@@ -1344,6 +1206,10 @@ class StageTable(
     }
 
   override def properties(): util.Map[String, String] = props.asJava
+
+  /** This table pinned to snapshot `v` (SQL `VERSION AS OF`). */
+  def pinned(v: Int): StageTable =
+    new StageTable(path, tableSchema, partCols, Some(v), props, pathRouted)
 }
 
 /** What a row-level operation's SCAN reports back to the operation at
@@ -1794,16 +1660,56 @@ class StageBatchWrite(
   *    offset-log write) is SKIPPED — this pair is what makes the sink
   *    effectively exactly-once over at-least-once epoch delivery;
   *  - before applying, any half-written stats/parts lines from a crashed
-  *    attempt of the SAME epoch are dropped, so the rewrite is idempotent.
+  *    attempt of the SAME commit (query id and epoch) are dropped, so the
+  *    rewrite is idempotent.
   */
 object StageCommitter {
   // same-process commits to one table serialize on this (local mode, or
   // several queries in one driver); CROSS-process safety is the manifest
-  // CREATE_NEW claim below
+  // CREATE_NEW claim in [[claim]]
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[v2] def lockFor(path: String): Object =
     locks.computeIfAbsent(path, _ => new Object)
+
+  /** Fault-injection seam for crash-point tests: called with "moved"
+    * (data files in the table root, no manifest yet), "claimed" (manifest
+    * created, commit time not yet recorded) and "sidecars" (stats/parts
+    * rewritten, schema, ledger and `_SUCCESS` not yet). A throw there
+    * stops the commit exactly at that step. A no-op in production.
+    */
+  @volatile private[graft] var faultHook: String => Unit = _ => ()
+
+  /** THE manifest claim — every snapshot version is created here. `next`
+    * builds the new manifest from the base (the latest snapshot, re-read
+    * on every attempt); the claim writes it as version base+1 with
+    * CREATE_NEW, so of two concurrent committers exactly one creation
+    * succeeds and the loser rebuilds on the winner's manifest and claims
+    * the version after it — neither commit's changes vanish. The commit
+    * time is recorded right after the claim (a crash in between leaves an
+    * untimed version, which TIMESTAMP AS OF declines). The version `next`
+    * sets is ignored.
+    */
+  private[v2] def claim(path: String)(
+      next: StageSource.Manifest => StageSource.Manifest): Unit =
+    lockFor(path).synchronized {
+      var claimed = false
+      while (!claimed) {
+        val base = StageSource.readManifest(path, None)
+        val m = next(base).copy(version = base.version + 1)
+        try {
+          java.nio.file.Files.write(
+            new File(path, StageSource.manifestName(m.version)).toPath,
+            m.lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8),
+            java.nio.file.StandardOpenOption.CREATE_NEW): Unit
+          faultHook("claimed")
+          StageSource.recordCommitTime(path, m.version)
+          claimed = true
+        } catch {
+          case _: java.nio.file.FileAlreadyExistsException => () // lost the race: retry on the new base
+        }
+      }
+    }
 
   def commit(
       path: String, schema: StructType, partCols: Array[String],
@@ -1811,9 +1717,10 @@ object StageCommitter {
       truncate: Boolean, epoch: Option[Long],
       replaceWhere: Array[Filter] = Array.empty,
       replaceFiles: Option[Set[String]] = None,
-      // merge-on-read DELETE: new positional delete entries to record
-      // (file → sorted row ordinals) — no data file moves, the manifest
-      // gains D-lines
+      // merge-on-read DELETE/UPDATE/MERGE: new positional delete entries
+      // to record (file → sorted row ordinals) — the dirty files' vectors
+      // are rewritten as new `_dv-*.bin` sidecars and the manifest's
+      // V-lines point at them
       addDeletes: Map[String, Array[Long]] = Map.empty,
       // rewrite conflict validation over DELETE STATE: the DV set each
       // scanned file had when the operation's scan read it — a scanned
@@ -1832,29 +1739,12 @@ object StageCommitter {
     // streaming queryId is the checkpoint-persistent id, so dedup still
     // covers re-deliveries across restarts of the SAME run.
     val ledgerKey = epoch.map(e => s"$queryId:$e")
-    if (ledgerKey.isDefined && epochsFile.exists()) {
-      val done = new String(
-        java.nio.file.Files.readAllBytes(epochsFile.toPath), StandardCharsets.UTF_8)
-        .linesIterator.toSet
-      // on-disk format migration (ADVICE r16 #4): pre-r16 ledgers
-      // recorded the bare epoch number. A bare line counts as committed
-      // ONLY when this query's files for that epoch are already in the
-      // table (file names embed queryId+epoch, so a genuine re-delivery
-      // after the format upgrade left them there) — a bare line alone
-      // must NOT dedup, or a NEW query starting at epoch 0 on a legacy
-      // table would have its first batches silently dropped (that query
-      // never committed them; the line belongs to an older writer). A
-      // zero-row legacy epoch re-commits once under this rule — an
-      // empty, harmless extra snapshot version, vs. data loss the other
-      // way.
-      val legacyDup = done(epoch.get.toString) &&
-        StageSource.snapshotFiles(path, None)
-          .exists(_.getName.startsWith(s"part-$queryId-e${epoch.get}-"))
-      if (done(ledgerKey.get) || legacyDup) {
-        // re-delivered epoch: already committed, drop the staged attempt
-        cleanStaging(path, queryId)
-        return
-      }
+    if (ledgerKey.isDefined && epochsFile.exists() &&
+      new String(java.nio.file.Files.readAllBytes(epochsFile.toPath),
+        StandardCharsets.UTF_8).linesIterator.contains(ledgerKey.get)) {
+      // re-delivered epoch: already committed, drop the staged attempt
+      cleanStaging(path, queryId)
+      return
     }
     // overwrite = truncate AT JOB COMMIT, and it is LOGICAL: the next
     // manifest simply lists only the new files. The previous snapshot's
@@ -1881,37 +1771,28 @@ object StageCommitter {
         newFiles += name -> c
       }
     }
-    // CLAIM the next snapshot version atomically (CREATE_NEW): two
-    // concurrent committers both compute latest+1, but only one creation
-    // succeeds — the loser re-reads the winner's manifest as its base
-    // snapshot and claims the version after it, so neither commit's rows
-    // vanish (the pre-fix clobber lost the first commit silently).
+    faultHook("moved")
+    val newNames = newFiles.map(_._1).toSet
     // abort-with-cleanup for conflict validation failures: the just-moved
     // output files are unreferenced by any manifest — delete them like an
     // abort, then fail loudly
     def conflict(detail: String): Nothing = {
-      newFiles.foreach { case (name, _) =>
-        new File(root, name).delete(): Unit
-      }
+      newNames.foreach(name => new File(root, name).delete(): Unit)
       throw new IllegalStateException(
         s"concurrent rewrite conflict on $path: $detail — aborting " +
           "instead of silently losing a concurrent commit's changes; " +
           "re-run the operation against the current snapshot")
     }
-    var committed = false
-    while (!committed) {
+    claim(path) { base =>
       // the new snapshot's file list: overwrite starts empty; a
       // partition-scoped REPLACE WHERE starts from the previous snapshot
       // MINUS the files its partition predicates doom (each file carries
       // one partition value, so the predicate is exact); plain append
-      // starts from the whole previous snapshot (manifest if present,
-      // directory listing for a legacy table)
+      // starts from the whole previous snapshot. This query's own files
+      // of this epoch are re-added below (a re-run after a crash replaces
+      // them by name, never duplicates them).
       val snapshot = scala.collection.mutable.LinkedHashSet.empty[String]
-      // the previous snapshot's names, re-read per retry (the change
-      // summary's REMOVED list diffs against these; legacy tables resolve
-      // via directory listing, which already sees the just-moved new
-      // files — they are re-added below)
-      val prev = StageSource.snapshotFiles(path, None).map(_.getName)
+      val prev = StageSource.liveFiles(path, base).map(_.getName)
         .filterNot(n => n.startsWith(s"part-$queryId-$epochTag"))
       if (!truncate) {
         if (replaceFiles.isDefined) {
@@ -1950,39 +1831,26 @@ object StageCommitter {
       }
       newFiles.foreach { case (name, _) => snapshot += name }
       // ------------------------------------------- merge-on-read deletes
-      // the base's delete-vector state as of THIS retry, held as
-      // REFERENCES (files dropped from the snapshot — replaced,
-      // overwritten, doomed — lose theirs): carry-forward copies the
-      // reference line, never the vector, so an unrelated commit's
-      // manifest cost is O(dirty files), not O(total deleted rows).
-      // Legacy per-row D-lines (pre-upgrade manifests) surface here once
-      // and are migrated to sidecars below.
+      // the base's delete-vector REFERENCES (files dropped from the
+      // snapshot — replaced, overwritten, doomed — lose theirs):
+      // carry-forward copies the reference, never the vector, so an
+      // unrelated commit's manifest cost is O(dirty files), not O(total
+      // deleted rows).
       val baseRefs =
         if (truncate) Map.empty[String, String]
-        else StageSource.readDvRefs(path, None)
-          .filter { case (f, _) => snapshot.contains(f) }
-      val baseLegacy =
-        if (truncate) Map.empty[String, Array[Long]]
-        else StageSource.readLegacyDeletes(path, None)
-          .filter { case (f, _) => snapshot.contains(f) }
+        else base.dvRefs.filter { case (f, _) => snapshot.contains(f) }
       // conflict validation over DELETE STATE: a scanned file whose
       // vectors changed since the scan means the operation read (and
       // for UPDATE/MERGE re-inserts) rows a concurrent commit deleted —
       // the same lost-update hazard as a rewritten file. Copy-on-write
       // validates its replaced files; a delta (merge-on-read) commit
-      // validates the files it is deleting from.
+      // validates the files it is deleting from. Only the watched files'
+      // sidecars are decoded: the validation read stays proportional to
+      // this operation's delta, not to the table's total deletes.
       expectDvs.foreach { exp =>
-        val watch = replaceFiles.getOrElse(addDeletes.keySet)
-        // decode ONLY the watched files' sidecars (readDeletes would
-        // decode every dirty file's vector per retry — the O(total
-        // deletes) read the bounded encoding exists to avoid); the
-        // validation read stays proportional to this operation's delta
-        val curRefs = StageSource.readDvRefs(path, None)
-        val curLegacy = StageSource.readLegacyDeletes(path, None)
-        watch.foreach { f =>
-          val cur = (curLegacy.getOrElse(f, Array.empty[Long]) ++
-            curRefs.get(f).map(StageSource.loadDv(path, _))
-              .getOrElse(Array.empty[Long])).toSet
+        replaceFiles.getOrElse(addDeletes.keySet).foreach { f =>
+          val cur = base.dvRefs.get(f).map(StageSource.loadDv(path, _))
+            .getOrElse(Array.empty[Long]).toSet
           if (cur != exp.getOrElse(f, Set.empty))
             conflict(s"file $f gained or lost delete vectors after this " +
               "row-level operation scanned it")
@@ -2000,57 +1868,40 @@ object StageCommitter {
       }
       // one V-line per dirty file: this commit's own delta decodes ONLY
       // its target files' base vectors, unions, and writes one immutable
-      // content-addressed sidecar each (written BEFORE the claim below,
+      // content-addressed sidecar each (written BEFORE the claim,
       // invisible until a claimed manifest references it); every other
       // dirty file's reference carries forward verbatim — commit bytes
       // are proportional to the commit's own delta
       val dvDeltas = scala.collection.mutable.Map.empty[String, Array[Long]]
-      val dvLines = snapshot.toSeq.flatMap { f =>
-        if (addDeletes.contains(f)) {
-          val base = baseLegacy.getOrElse(f, Array.empty[Long]) ++
-            baseRefs.get(f).map(StageSource.loadDv(path, _))
+      val dvRefs = snapshot.iterator.flatMap { f =>
+        addDeletes.get(f) match {
+          case Some(add) =>
+            val old = baseRefs.get(f).map(StageSource.loadDv(path, _))
               .getOrElse(Array.empty[Long])
-          val merged = (base ++ addDeletes(f)).distinct.sorted
-          // the change summary's X-line: the NEWLY deleted ordinals only
-          // (an encoding migration — legacy D-lines to a V-reference —
-          // records an empty delta and is invisible to change readers)
-          val baseSet = base.toSet
-          dvDeltas(f) = merged.filterNot(baseSet)
-          Some(StageSource.dvRefLine(f, StageSource.writeDvFile(path, merged)))
-        } else baseRefs.get(f).map(StageSource.dvRefLine(f, _))
-          .orElse(baseLegacy.get(f).map(v => // legacy D-lines: migrate once
-            StageSource.dvRefLine(f, StageSource.writeDvFile(path, v))))
-      }
+            val merged = (old ++ add).distinct.sorted
+            // the change summary's X-line: the NEWLY deleted ordinals only
+            val oldSet = old.toSet
+            dvDeltas(f) = merged.filterNot(oldSet)
+            Some(f -> StageSource.writeDvFile(path, merged))
+          case None => baseRefs.get(f).map(f -> _)
+        }
+      }.toMap
       // stored-column counts, claim-atomic with the snapshot: carried
-      // files keep their base count (manifest C-lines or legacy
-      // sidecar), new files store the write schema's width; a carried
-      // file known to neither stays unlisted (pre-evolution semantics:
-      // it stores the full schema of its era)
-      val baseCols = StageSource.readColsAt(path, None)
-      val newNames = newFiles.map(_._1).toSet
-      val colLinesM = snapshot.toSeq.flatMap { f =>
-        (if (newNames(f)) Some(schema.length) else baseCols.get(f))
-          .map(n => StageSource.colsLine(f, n))
-      }
+      // files keep their base count, new files store the write schema's
+      // width
+      val cols = snapshot.iterator.flatMap { f =>
+        (if (newNames(f)) Some(schema.length) else base.cols.get(f)).map(f -> _)
+      }.toMap
       // self-contained change summary: what THIS commit added, removed
-      // and newly deleted (r18 ADVICE #1/#3 — change readers resolve one
-      // manifest, never its predecessor)
-      val changeLns = StageSource.changeLines(
-        newFiles.map(_._1).toSeq,
-        prev.filterNot(snapshot.contains).toSeq,
-        dvDeltas.toMap)
-      val nextV = StageSource.latestVersion(path).getOrElse(0) + 1
-      try {
-        java.nio.file.Files.write(
-          new File(root, StageSource.manifestName(nextV)).toPath,
-          (snapshot.toSeq ++ dvLines ++ colLinesM ++ changeLns)
-            .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8),
-          java.nio.file.StandardOpenOption.CREATE_NEW): Unit
-        StageSource.recordCommitTime(path, nextV) // TIMESTAMP AS OF anchor
-        committed = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => () // lost the race: retry on the new base
-      }
+      // and newly deleted, against the base it is claimed on (a re-run
+      // that replaces its own already-committed files by name adds and
+      // removes nothing)
+      val baseFiles = base.files.toSet
+      StageSource.Manifest(0, snapshot.toSeq, dvRefs, cols,
+        Some(StageSource.VersionChanges(
+          newFiles.map(_._1).filterNot(baseFiles).toSeq,
+          base.files.filterNot(snapshot.contains),
+          dvDeltas.toMap)))
     }
     // sidecars AFTER the manifest claim, merged against a fresh read so a
     // concurrent winner's lines survive. (A cross-process interleaving can
@@ -2058,12 +1909,12 @@ object StageCommitter {
     // construction: a file with no stats line is never zone-map-skipped
     // and aggregate pushdown declines; same-process commits are fully
     // serialized by the lock above.)
-    // A crashed attempt of THIS epoch may have left stats/parts lines —
-    // drop them (its files were just overwritten by name); all other
-    // files' lines are kept, their files remain readable in older
-    // snapshots.
+    // A crashed attempt of THIS commit (same query and epoch) may have
+    // left stats/parts lines — drop them (its files were just overwritten
+    // by name); all other files' lines are kept, their files remain
+    // readable in older snapshots.
     def keepLine(l: String): Boolean =
-      epoch.isEmpty || !l.startsWith(s"part-$queryId-$epochTag")
+      !l.startsWith(s"part-$queryId-$epochTag")
     val statLines = new StringBuilder
     locally {
       val f = new File(root, StageSource.StatsFile)
@@ -2080,14 +1931,6 @@ object StageCommitter {
           .linesIterator.filter(l => l.nonEmpty && keepLine(l))
           .foreach(l => partLines.append(l).append('\n'))
     }
-    val colLines = new StringBuilder
-    locally {
-      val f = new File(root, StageSource.ColsFile)
-      if (f.exists())
-        new String(java.nio.file.Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-          .linesIterator.filter(l => l.nonEmpty && keepLine(l))
-          .foreach(l => colLines.append(l).append('\n'))
-    }
     val b64 = java.util.Base64.getEncoder
     newFiles.foreach { case (name, c) =>
       c.stats.foreach { case (colName, mn, mx) =>
@@ -2100,18 +1943,11 @@ object StageCommitter {
       // the per-file row count (the docstring's `__rows` pseudo-column)
       // — what COUNT(*) pushdown answers from without opening the file
       statLines.append(s"$name\t__rows\t${c.rows}\t${c.rows}\n")
-      // the per-file STORED column count (schema-evolution sidecar): a
-      // file written before an ADD COLUMN stores fewer columns than the
-      // evolved schema and the reader null-fills the difference
-      colLines.append(s"$name\t${schema.length}\n")
       if (partCols.nonEmpty) partLines.append(s"$name\t${c.pv}\n")
     }
     java.nio.file.Files.write(
       new File(root, StageSource.StatsFile).toPath,
       statLines.toString.getBytes(StandardCharsets.UTF_8)): Unit
-    java.nio.file.Files.write(
-      new File(root, StageSource.ColsFile).toPath,
-      colLines.toString.getBytes(StandardCharsets.UTF_8)): Unit
     if (partCols.nonEmpty) {
       java.nio.file.Files.write(
         new File(root, StageSource.PartsFile).toPath,
@@ -2120,6 +1956,7 @@ object StageCommitter {
         new File(root, StageSource.PartColsFile).toPath,
         partCols.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8)): Unit
     }
+    faultHook("sidecars")
     // persist the schema, never TIGHTENING nullability: an append's
     // write schema is the query's (a VALUES literal arrives
     // non-nullable), but files already in the snapshot may legitimately
@@ -2395,7 +2232,7 @@ class StageScanBuilder(
   // Declined (→ Spark's row-path aggregate) whenever the answer could be
   // wrong: any filter present (stats are per-file, residual filters
   // can't be applied to them), GROUP BY, a file missing its stat line
-  // (all-null or legacy), DOUBLE min/max (NaN ordering differs between
+  // (all-null, or the line was lost), DOUBLE min/max (NaN ordering differs between
   // engines), or a long value the double-typed zone map can't represent
   // exactly (|v| > 2^53).
   private var aggAnswer: Option[(StructType, Array[Any])] = None
@@ -2416,9 +2253,10 @@ class StageScanBuilder(
     if (agg.groupByExpressions.nonEmpty) return None
     if (skipFilters.nonEmpty || partFilters.nonEmpty) return None
     val stats = StageSource.readStats(path)
-    val files = StageSource.snapshotFiles(path, versionAsOf).map(_.getName)
-    val dvs = StageSource.readDeletes(path, versionAsOf)
-    // every snapshot file must carry a row count (legacy files decline)
+    val manifest = StageSource.readManifest(path, versionAsOf)
+    val files = StageSource.liveFiles(path, manifest).map(_.getName)
+    val dvs = manifest.deletes(path)
+    // every snapshot file must carry a row count (a lost line declines)
     val counts = files.map(f => stats.get(f).flatMap(_.get("__rows")))
     if (counts.exists(_.isEmpty)) return None
     // COUNT stays exact under merge-on-read deletes (per-file vector
@@ -2552,8 +2390,8 @@ object StageScan {
   * the same unit the two-phase commit produced (one file per writer task).
   * Comparison predicates prune whole files against the commit-time zone
   * maps before any byte is read; a file with no recorded stats for a
-  * column is never skipped on that column (nulls-only or legacy files
-  * stay safe).
+  * column is never skipped on that column (nulls-only files, or files
+  * whose stats line was lost, stay safe).
   */
 case class StageScan(
     path: String, tableSchema: StructType, required: StructType,
@@ -2641,8 +2479,8 @@ case class StageScan(
   // strategy and AQE decisions over staged tables fell back to
   // size-in-bytes heuristics over unpruned data): bytes sum over the
   // PRUNED file list, and row count is the exact sidecar sum whenever
-  // every planned file carries a `__rows` line (legacy files decline to
-  // empty, never guess). PlanAuditSpec pins a broadcast decision
+  // every planned file carries a `__rows` line (a lost line declines to
+  // empty, never guesses). PlanAuditSpec pins a broadcast decision
   // flipping on these numbers.
   override def estimateStatistics(): Statistics = new Statistics {
     private val kept = prunedFiles()
@@ -2703,11 +2541,10 @@ case class StageScan(
     * even when a concurrent commit lands mid-plan; an unpinned latest
     * could otherwise surface a new partition key between
     * outputPartitioning and a runtime re-plan and trip BatchScanExec's
-    * partitioning-preservation check. (Legacy tables without manifests
-    * still resolve by directory listing.)
+    * partitioning-preservation check.
     */
-  @transient private lazy val pinnedVersion: Option[Int] =
-    versionAsOf.orElse(StageSource.latestVersion(path))
+  @transient private lazy val manifest: StageSource.Manifest =
+    StageSource.readManifest(path, versionAsOf)
 
   /** The pinned snapshot's delete vectors, resolved ONCE per scan:
     * statistics, aggregate answers and input-partition planning each
@@ -2715,7 +2552,7 @@ case class StageScan(
     * driver-side metadata I/O a heavily-deleted table can't afford.
     */
   @transient private lazy val snapshotDvs: Map[String, Array[Long]] =
-    StageSource.readDeletes(path, pinnedVersion)
+    manifest.deletes(path)
 
   /** The snapshot's files surviving zone-map, partition and runtime
     * pruning — the shared ground truth for planning AND statistics, so
@@ -2741,7 +2578,8 @@ case class StageScan(
     val colType = partCols.map(c => tableSchema.fields(
       tableSchema.fieldIndex(StageSource.specCol(c))).dataType)
     // exact per-file partition pruning: a file with no recorded value
-    // (unpartitioned/legacy) is never pruned on partition predicates
+    // (unpartitioned, or its line lost) is never pruned on partition
+    // predicates
     def partKeep(name: String): Boolean =
       parts.get(name) match {
         case Some(pv) if pv.length == partCols.length =>
@@ -2770,7 +2608,7 @@ case class StageScan(
           }
         case _ => true
       }
-    val all = StageSource.snapshotFiles(path, pinnedVersion)
+    val all = StageSource.liveFiles(path, manifest)
     totalFiles = all.length
     all.filter { f =>
       val fileStats = stats.getOrElse(f.getName, Map.empty)
@@ -2829,7 +2667,7 @@ case class StageScan(
     plannedFiles = kept.length
     cowOp.foreach(_.reportScanned(kept.map(_.getName).toSeq,
       runtimeFiltered = runtimeFiles.isDefined))
-    val cols = StageSource.readColsAt(path, pinnedVersion)
+    val cols = manifest.cols
     val dvs = snapshotDvs
     cowOp.foreach(_.reportScannedDvs(
       kept.map(f => f.getName ->
@@ -3025,55 +2863,38 @@ class StageMicroBatchStream(
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
-  // Memoized per-version metadata (r18 ADVICE #3: every trigger's
-  // latestOffset walked the whole backlog re-reading two complete
-  // manifests per version — O(history²) driver I/O on a long-history
-  // table). Versions are immutable once claimed, so caching inside the
-  // stream instance is always sound.
-  private val filesMemo =
-    new java.util.concurrent.ConcurrentHashMap[Int, Set[String]]
-  private val changesMemo =
-    new java.util.concurrent.ConcurrentHashMap[Int, Option[StageSource.VersionChanges]]
+  // Per-version metadata is memoized inside the stream instance by one
+  // resolver (r18 ADVICE #3: every trigger's latestOffset used to walk
+  // the whole backlog re-reading manifests — O(history²) driver I/O on a
+  // long-history table). Versions are immutable once claimed, so caching
+  // inside the stream instance is always sound.
+  private val resolver = new ChangeResolver(path)
   private val newFilesMemo =
     new java.util.concurrent.ConcurrentHashMap[Int, Seq[String]]
-  // change-feed resolution shares one memoizing resolver per stream
-  // instance (same immutability argument as the memos above)
-  private lazy val cdcResolver = new ChangeResolver(path)
 
-  // files of a snapshot version (empty at the pre-history version 0)
-  private def filesAt(v: Int): Set[String] =
-    if (v <= 0) Set.empty
-    else filesMemo.computeIfAbsent(v,
-      _ => StageSource.snapshotFiles(path, Some(v)).map(_.getName).toSet)
-
-  private def changesOf(v: Int): Option[StageSource.VersionChanges] =
-    changesMemo.computeIfAbsent(v, _ =>
-      try StageSource.readChanges(path, v) catch {
-        case e: IllegalArgumentException =>
-          // a missing manifest here means a retention vacuum expired a
-          // version this stream had not fully consumed — name the cause
-          throw new IllegalStateException(
-            s"streaming read of $path needs snapshot version $v, which a " +
-              "vacuum expired before this stream consumed it — re-stream " +
-              "from a fresh checkpoint, or vacuum with a retainLast that " +
-              "covers every consumer's lag", e)
-      })
+  private def changesOf(v: Int): StageSource.VersionChanges =
+    try resolver.changes(v) catch {
+      case e: IllegalArgumentException =>
+        // a missing manifest here means a retention vacuum expired a
+        // version this stream had not fully consumed — name the cause
+        throw new IllegalStateException(
+          s"streaming read of $path needs snapshot version $v, which a " +
+            "vacuum expired before this stream consumed it — re-stream " +
+            "from a fresh checkpoint, or vacuum with a retainLast that " +
+            "covers every consumer's lag", e)
+    }
 
   // the units version v contributes to the stream, in a deterministic
-  // order (what offset positions index into). Tail mode: the files the
-  // version ADDED over its predecessor — the manifest's own A-lines when
-  // self-contained (r18 ADVICE #1 — vacuum expiring v-1 must not kill
-  // the tail), the two-manifest diff for pre-r19 manifests. Change-feed
-  // mode: the version's full change-unit key list (removed files, DV
-  // deltas, added files).
+  // order (what offset positions index into), read from the version's
+  // OWN manifest (r18 ADVICE #1 — vacuum expiring v-1 must not kill the
+  // tail). Tail mode: the files the version ADDED. Change-feed mode: the
+  // version's full change-unit key list (removed files, DV deltas, added
+  // files).
   private def newFilesOf(v: Int): Seq[String] =
     if (v <= 0) Seq.empty
     else newFilesMemo.computeIfAbsent(v, _ =>
-      if (changeFeed) cdcResolver.unitKeysOf(v)
-      else changesOf(v) match {
-        case Some(ch) => ch.added.sorted
-        case None => filesAt(v).diff(filesAt(v - 1)).toSeq.sorted
-      })
+      if (changeFeed) resolver.unitKeysOf(v)
+      else changesOf(v).added.sorted)
 
   private def latestVersionNow: Int =
     StageSource.latestVersion(path).getOrElse(0)
@@ -3113,16 +2934,12 @@ class StageMicroBatchStream(
           s"(available: ${StageSource.manifestVersions(path).mkString(",")})")
       StageStreamOffset(v, if (v <= 0) 0 else Int.MaxValue)
   }
-  override def deserializeOffset(json: String): Offset =
-    StageStreamOffset(
-      """"version":(\d+)""".r.findFirstMatchIn(json)
-        .map(_.group(1).toInt)
-        .getOrElse(throw new IllegalArgumentException(s"bad offset $json")),
-      """"pos":(\d+)""".r.findFirstMatchIn(json)
-        .map(_.group(1).toInt)
-        // a pos-less offset (older checkpoint) means the version was
-        // fully consumed under version-granularity semantics
-        .getOrElse(Int.MaxValue))
+  override def deserializeOffset(json: String): Offset = {
+    def field(k: String): Int = s""""$k":(\\d+)""".r.findFirstMatchIn(json)
+      .map(_.group(1).toInt)
+      .getOrElse(throw new IllegalArgumentException(s"bad offset $json"))
+    StageStreamOffset(field("version"), field("pos"))
+  }
 
   override def getDefaultReadLimit: ReadLimit = {
     val limits = Seq(
@@ -3169,7 +2986,7 @@ class StageMicroBatchStream(
       if (!changeFeed) fileRows(unit)
       else StageChangeFeed.parseKey(unit) match {
         case (StageChangeFeed.DvDeltaUnit, f) =>
-          cdcResolver.changes(v).dvDeltas
+          resolver.changes(v).dvDeltas
             .get(f).map(_.length.toLong).getOrElse(0L)
         case (_, f) => fileRows(f)
       }
@@ -3241,86 +3058,41 @@ class StageMicroBatchStream(
     // the append-only validation below does not apply
     if (changeFeed)
       return sliced.map { case (v, key) =>
-        cdcResolver.partitionFor(v, key): InputPartition
+        resolver.partitionFor(v, key): InputPartition
       }.toArray
     // append-only validation: a removed file or a changed delete-vector
     // state on a carried file means rows this stream already emitted
     // were rewritten or deleted — fail loudly, never silently re-emit.
-    // When every version in (s, e] is self-contained (carries a change
-    // summary), the check reads exactly the range's manifests — never
-    // the predecessor of s, which a retention vacuum may have expired
-    // (r18 ADVICE #1). Pre-r19 manifests in the range fall back to the
-    // two-manifest diff.
-    val rangeChanges = ((math.max(s, 0) + 1) to e).map(v => changesOf(v))
-    if (rangeChanges.forall(_.isDefined)) {
-      val chs = rangeChanges.map(_.get)
-      val removed = chs.flatMap(_.removed)
-      require(removed.isEmpty,
-        s"streaming read of $path hit a NON-APPEND change between snapshot " +
-          s"versions $s and $e: file(s) ${removed.sorted.mkString(", ")} " +
-          "were removed (overwrite/delete/compaction/rewrite) — the staged " +
-          "streaming source tails appends only; re-stream from a fresh " +
-          "checkpoint or consume the change-data-feed instead")
-      // a delete-vector delta on a file NOT added within this range hit
-      // rows an earlier batch already emitted; deltas on files added in
-      // the same range are fine — their deleted rows are simply never
-      // emitted (this batch reads with the end version's vectors)
-      val addedInRange = chs.flatMap(_.added).toSet
-      val retro = chs.flatMap(_.dvDeltas.collect {
-        case (f, d) if d.nonEmpty && !addedInRange(f) => f
-      })
-      require(retro.isEmpty,
-        s"streaming read of $path hit a DELETE between snapshot versions " +
-          s"$s and $e: delete-vector state changed on already-emitted " +
-          s"file(s) ${retro.sorted.distinct.mkString(", ")} — rows cannot " +
-          "be retracted from an append-only stream; consume the " +
-          "change-data-feed instead")
-    } else {
-      val before = filesAt(s)
-      val after = filesAt(e)
-      val removed = before.diff(after)
-      require(removed.isEmpty,
-        s"streaming read of $path hit a NON-APPEND change between snapshot " +
-          s"versions $s and $e: file(s) ${removed.toSeq.sorted.mkString(", ")} " +
-          "were removed (overwrite/delete/compaction/rewrite) — the staged " +
-          "streaming source tails appends only; re-stream from a fresh " +
-          "checkpoint or consume the change-data-feed instead")
-      val dvS = StageSource.readDvRefs(path, Some(s)).filter(kv => before(kv._1))
-      val dvE = StageSource.readDvRefs(path, Some(e)).filter(kv => before(kv._1))
-      val legS = StageSource.readLegacyDeletes(path, Some(s))
-        .filter(kv => before(kv._1)).map { case (f, p) => f -> p.toSeq }
-      val legE = StageSource.readLegacyDeletes(path, Some(e))
-        .filter(kv => before(kv._1)).map { case (f, p) => f -> p.toSeq }
-      // when both sides are pure references, name equality IS vector
-      // equality (content addressing) — zero sidecar decodes per batch.
-      // A mixed range (a commit migrated legacy D-lines to sidecars) must
-      // compare the RESOLVED vectors instead: the migration rewrites the
-      // encoding, not the delete state, and failing on it would spuriously
-      // kill every tailed pre-upgrade table at its first post-upgrade
-      // append.
-      val dvUnchanged =
-        if (legS.isEmpty && legE.isEmpty) dvS == dvE
-        else {
-          def resolved(refs: Map[String, String],
-              legacy: Map[String, Seq[Long]]): Map[String, Seq[Long]] =
-            (refs.keySet ++ legacy.keySet).iterator.map { f =>
-              f -> (legacy.getOrElse(f, Seq.empty) ++
-                refs.get(f).map(StageSource.loadDv(path, _).toSeq)
-                  .getOrElse(Seq.empty)).distinct.sorted
-            }.toMap
-          resolved(dvS, legS) == resolved(dvE, legE)
-        }
-      require(dvUnchanged,
-        s"streaming read of $path hit a DELETE between snapshot versions " +
-          s"$s and $e: delete-vector state changed on already-emitted " +
-          "file(s) — rows cannot be retracted from an append-only stream")
-    }
-    val newFiles = sliced.map(_._2)
-    val cols = StageSource.readColsAt(path, Some(e))
-    val dvs = StageSource.readDeletes(path, Some(e))
-    newFiles.map { n =>
+    // The check reads exactly the range's manifests — never the
+    // predecessor of s, which a retention vacuum may have expired (r18
+    // ADVICE #1).
+    val chs = ((math.max(s, 0) + 1) to e).map(changesOf)
+    val removed = chs.flatMap(_.removed)
+    require(removed.isEmpty,
+      s"streaming read of $path hit a NON-APPEND change between snapshot " +
+        s"versions $s and $e: file(s) ${removed.sorted.mkString(", ")} " +
+        "were removed (overwrite/delete/compaction/rewrite) — the staged " +
+        "streaming source tails appends only; re-stream from a fresh " +
+        "checkpoint or consume the change-data-feed instead")
+    // a delete-vector delta on a file NOT added within this range hit
+    // rows an earlier batch already emitted; deltas on files added in
+    // the same range are fine — their deleted rows are simply never
+    // emitted (this batch reads with the end version's vectors)
+    val addedInRange = chs.flatMap(_.added).toSet
+    val retro = chs.flatMap(_.dvDeltas.collect {
+      case (f, d) if d.nonEmpty && !addedInRange(f) => f
+    })
+    require(retro.isEmpty,
+      s"streaming read of $path hit a DELETE between snapshot versions " +
+        s"$s and $e: delete-vector state changed on already-emitted " +
+        s"file(s) ${retro.sorted.distinct.mkString(", ")} — rows cannot " +
+        "be retracted from an append-only stream; consume the " +
+        "change-data-feed instead")
+    val last = StageSource.readManifest(path, Some(e))
+    val dvs = last.deletes(path)
+    sliced.map { case (_, n) =>
       StageFilePartition(new File(path, n).getAbsolutePath,
-        cols.getOrElse(n, -1), dvs.getOrElse(n, Array.empty[Long]))
+        last.cols.getOrElse(n, -1), dvs.getOrElse(n, Array.empty[Long]))
         : InputPartition
     }.toArray
   }

@@ -947,30 +947,26 @@ class PlanAuditSpec extends SparkTestBase {
     // cluster count; this pins the WRITE-SIDE knob that unlocks it — the
     // same join declared at 32 buckets plans 32 key-aligned partitions
     // with still zero clustering exchanges, and stays exact
-    val prev = spark.conf.get("spark.sql.sources.v2.bucketing.enabled")
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    try {
-      def seq32(n: Long) = spark.read.format("graft.sources.v2.SeqSource")
-        .option("n", n).option("keyed", true).option("buckets", 32).load()
-      val fact = seq32(100000L)
-      val dim = seq32(32L)
-        .select(org.apache.spark.sql.functions.col("mod32"),
-          org.apache.spark.sql.functions.col("cents").as("dc"))
-      val joined = fact.join(dim.hint("MERGE"), "mod32")
-      joined.queryExecution.toRdd.count(): Unit
-      val plan = joined.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert("keyed=mod32".r.findAllIn(plan).size == 2, plan.take(1500))
-      assert("parts=32".r.findAllIn(plan).size == 2, plan.take(1500))
-      assert(!plan.contains("hashpartitioning"), plan.take(2000))
-      // exactness: every fact row joins exactly one dim row
-      assert(joined.count() == 100000L)
-      import org.apache.spark.sql.functions.{col, countDistinct, sum}
-      val chk = joined
-        .agg(sum(col("id")).as("s"), countDistinct(col("mod32")).as("k"))
-        .head()
-      assert(chk.getLong(0) == 99999L * 100000L / 2 && chk.getLong(1) == 32L)
-    } finally spark.conf.set("spark.sql.sources.v2.bucketing.enabled", prev)
+    def seq32(n: Long) = spark.read.format("graft.sources.v2.SeqSource")
+      .option("n", n).option("keyed", true).option("buckets", 32).load()
+    val fact = seq32(100000L)
+    val dim = seq32(32L)
+      .select(org.apache.spark.sql.functions.col("mod32"),
+        org.apache.spark.sql.functions.col("cents").as("dc"))
+    val joined = fact.join(dim.hint("MERGE"), "mod32")
+    joined.queryExecution.toRdd.count(): Unit
+    val plan = joined.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert("keyed=mod32".r.findAllIn(plan).size == 2, plan.take(1500))
+    assert("parts=32".r.findAllIn(plan).size == 2, plan.take(1500))
+    assert(!plan.contains("hashpartitioning"), plan.take(2000))
+    // exactness: every fact row joins exactly one dim row
+    assert(joined.count() == 100000L)
+    import org.apache.spark.sql.functions.{col, countDistinct, sum}
+    val chk = joined
+      .agg(sum(col("id")).as("s"), countDistinct(col("mod32")).as("k"))
+      .head()
+    assert(chk.getLong(0) == 99999L * 100000L / 2 && chk.getLong(1) == 32L)
   }
 
   test("q_dsv2_lineage: the partitioned write shuffles by flag once; lineage rides the scan") {
@@ -1116,43 +1112,39 @@ class PlanAuditSpec extends SparkTestBase {
     // KeyGroupedPartitioning over files-with-recorded-keys — including
     // MULTIPLE files per key from separate appends, which Spark groups.
     import org.apache.spark.sql.functions.{col, count, lit, sum}
-    val prev = spark.conf.get("spark.sql.sources.v2.bucketing.enabled")
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    try {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_stage_spj").toString
-      val fmt = "graft.sources.v2.StageSource"
-      spark.sql(
-        "SELECT id AS k, id % 8 AS b, id * 3 AS cents FROM range(0, 10000)")
-        .write.format(fmt).option("path", s"$base/l")
-        .option("partition_by", "b").mode("overwrite").save()
-      // a second append: two files per key on the left — grouped, not
-      // degraded
-      spark.sql(
-        "SELECT id AS k, id % 8 AS b, id * 3 AS cents FROM range(10000, 12000)")
-        .write.format(fmt).option("path", s"$base/l")
-        .option("partition_by", "b").mode("append").save()
-      spark.sql("SELECT id % 8 AS b, id AS q FROM range(0, 4000)")
-        .write.format(fmt).option("path", s"$base/r")
-        .option("partition_by", "b").mode("overwrite").save()
-      val l = spark.read.format(fmt).option("path", s"$base/l").load()
-        .groupBy("b").agg(count(lit(1)).as("l_rows"), sum("cents").as("l_cents"))
-      val r = spark.read.format(fmt).option("path", s"$base/r").load()
-        .groupBy("b").agg(count(lit(1)).as("r_rows"))
-      val j = l.hint("merge").join(r, "b")
-      j.queryExecution.toRdd.count(): Unit
-      val plan = j.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert("StageScan\\(path=".r.findAllIn(plan).size == 2, plan.take(1500))
-      assert(!plan.contains("hashpartitioning"),
-        s"a clustering shuffle crept above the staged keyed scans:\n${plan.take(2000)}")
-      assert(plan.contains("SortMergeJoin"), plan.take(1500))
-      // exactness over the grouped two-append left side
-      assert(j.count() == 8)
-      val row = j.filter(col("b") === 0).head()
-      assert(row.getLong(row.fieldIndex("l_rows")) == 1500L, row.toString)
-      assert(row.getLong(row.fieldIndex("r_rows")) == 500L, row.toString)
-    } finally spark.conf.set("spark.sql.sources.v2.bucketing.enabled", prev)
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_stage_spj").toString
+    val fmt = "graft.sources.v2.StageSource"
+    spark.sql(
+      "SELECT id AS k, id % 8 AS b, id * 3 AS cents FROM range(0, 10000)")
+      .write.format(fmt).option("path", s"$base/l")
+      .option("partition_by", "b").mode("overwrite").save()
+    // a second append: two files per key on the left — grouped, not
+    // degraded
+    spark.sql(
+      "SELECT id AS k, id % 8 AS b, id * 3 AS cents FROM range(10000, 12000)")
+      .write.format(fmt).option("path", s"$base/l")
+      .option("partition_by", "b").mode("append").save()
+    spark.sql("SELECT id % 8 AS b, id AS q FROM range(0, 4000)")
+      .write.format(fmt).option("path", s"$base/r")
+      .option("partition_by", "b").mode("overwrite").save()
+    val l = spark.read.format(fmt).option("path", s"$base/l").load()
+      .groupBy("b").agg(count(lit(1)).as("l_rows"), sum("cents").as("l_cents"))
+    val r = spark.read.format(fmt).option("path", s"$base/r").load()
+      .groupBy("b").agg(count(lit(1)).as("r_rows"))
+    val j = l.hint("merge").join(r, "b")
+    j.queryExecution.toRdd.count(): Unit
+    val plan = j.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert("StageScan\\(path=".r.findAllIn(plan).size == 2, plan.take(1500))
+    assert(!plan.contains("hashpartitioning"),
+      s"a clustering shuffle crept above the staged keyed scans:\n${plan.take(2000)}")
+    assert(plan.contains("SortMergeJoin"), plan.take(1500))
+    // exactness over the grouped two-append left side
+    assert(j.count() == 8)
+    val row = j.filter(col("b") === 0).head()
+    assert(row.getLong(row.fieldIndex("l_rows")) == 1500L, row.toString)
+    assert(row.getLong(row.fieldIndex("r_rows")) == 500L, row.toString)
   }
 
   test("staged keyed layout declares ordering: a direct staged merge join plans sort-free") {
@@ -1164,31 +1156,27 @@ class PlanAuditSpec extends SparkTestBase {
     // sort above the hash aggregate; that sort belongs to the
     // aggregate, not the scan.)
     import org.apache.spark.sql.functions.col
-    val prev = spark.conf.get("spark.sql.sources.v2.bucketing.enabled")
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    try {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_stage_ord").toString
-      val fmt = "graft.sources.v2.StageSource"
-      spark.sql("SELECT id % 8 AS b, id AS x FROM range(0, 1000)")
-        .write.format(fmt).option("path", s"$base/l")
-        .option("partition_by", "b").mode("overwrite").save()
-      spark.sql("SELECT id % 8 AS b, id AS y FROM range(0, 800)")
-        .write.format(fmt).option("path", s"$base/r")
-        .option("partition_by", "b").mode("overwrite").save()
-      val l = spark.read.format(fmt).option("path", s"$base/l").load()
-      val r = spark.read.format(fmt).option("path", s"$base/r").load()
-      val j = l.hint("merge").join(r, "b")
-      j.queryExecution.toRdd.count(): Unit
-      val plan = j.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(plan.contains("SortMergeJoin"), plan.take(1200))
-      assert(!plan.contains("Sort ["),
-        s"a per-partition sort survived the ordering declaration:\n${plan.take(1500)}")
-      assert(!plan.linesIterator.exists(_.contains("Exchange ")),
-        s"an exchange crept into the direct staged SPJ:\n${plan.take(1500)}")
-      assert(j.count() == 100000L) // 1000×800 ÷ 8 keys = 125×100 per key × 8
-    } finally spark.conf.set("spark.sql.sources.v2.bucketing.enabled", prev)
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_stage_ord").toString
+    val fmt = "graft.sources.v2.StageSource"
+    spark.sql("SELECT id % 8 AS b, id AS x FROM range(0, 1000)")
+      .write.format(fmt).option("path", s"$base/l")
+      .option("partition_by", "b").mode("overwrite").save()
+    spark.sql("SELECT id % 8 AS b, id AS y FROM range(0, 800)")
+      .write.format(fmt).option("path", s"$base/r")
+      .option("partition_by", "b").mode("overwrite").save()
+    val l = spark.read.format(fmt).option("path", s"$base/l").load()
+    val r = spark.read.format(fmt).option("path", s"$base/r").load()
+    val j = l.hint("merge").join(r, "b")
+    j.queryExecution.toRdd.count(): Unit
+    val plan = j.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert(plan.contains("SortMergeJoin"), plan.take(1200))
+    assert(!plan.contains("Sort ["),
+      s"a per-partition sort survived the ordering declaration:\n${plan.take(1500)}")
+    assert(!plan.linesIterator.exists(_.contains("Exchange ")),
+      s"an exchange crept into the direct staged SPJ:\n${plan.take(1500)}")
+    assert(j.count() == 100000L) // 1000×800 ÷ 8 keys = 125×100 per key × 8
   }
 
   test("q_dsv2_spj_staged: the catalog row joins two staged tables exchange-free") {

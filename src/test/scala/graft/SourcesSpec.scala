@@ -313,76 +313,72 @@ class SourcesSpec extends SparkTestBase {
       .createTempDirectory("graft_stage_bk").toString
     spark.conf.set("spark.sql.catalog.stagebk", "graft.sources.v2.StageCatalog")
     spark.conf.set("spark.sql.catalog.stagebk.root", root)
-    val prev = spark.conf.get("spark.sql.sources.v2.bucketing.enabled")
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    try {
-      spark.sql("CREATE TABLE stagebk.default.fact (k BIGINT, cents BIGINT) " +
-        "PARTITIONED BY (bucket(8, k))")
-      spark.sql("INSERT INTO stagebk.default.fact " +
-        "SELECT id, id * 3 FROM range(0, 10000)")
-      spark.sql("CREATE TABLE stagebk.default.dim (k BIGINT, label STRING) " +
-        "PARTITIONED BY (bucket(8, k))")
-      spark.sql("INSERT INTO stagebk.default.dim " +
-        "SELECT id, concat('l', id) FROM range(0, 1000)")
-      val dir = new java.io.File(new java.io.File(root, "default"), "fact")
-        .getAbsolutePath
-      // the write routed by the SAME hash the catalog's SQL bucket() binds
-      assert(StageSource.readPartCols(dir).toSeq == Seq("bucket(8,k)"))
-      val parts = StageSource.readParts(dir)
-      assert(parts.values.map(_.head).toSet.subsetOf(
-        (0 until 8).map(_.toString).toSet))
-      assert(spark.sql(
-        "SELECT COUNT(DISTINCT stagebk.default.bucket(8, k)) FROM stagebk.default.fact")
-        .head().getLong(0) == 8L)
-      // storage-partitioned join: both sides report bucket(8,k) — the
-      // join subtree plans with NO exchange (the r18 width-knob win, now
-      // on real committed data)
-      val j = spark.table("stagebk.default.fact").hint("merge")
-        .join(spark.table("stagebk.default.dim"), "k")
-      j.queryExecution.toRdd.count(): Unit
-      val plan = j.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(plan.contains("SortMergeJoin"), plan.take(1500))
-      assert(!plan.linesIterator.exists(_.contains("Exchange ")),
-        s"an exchange crept into the bucketed SPJ:\n${plan.take(2000)}")
-      assert(j.count() == 1000L)
-      assert(j.agg(sum("cents")).head().getLong(0) == (0L until 1000L).map(_ * 3).sum)
-      // equality on the bucketed column prunes to ONE bucket's files
-      val point = spark.table("stagebk.default.fact").filter(col("k") === 123L)
-      assert(point.count() == 1L)
-      val pplan = point.queryExecution.executedPlan.toString
-      val m = "files=(\\d+)/(\\d+)".r.findFirstMatchIn(pplan)
-      assert(m.isDefined && m.get.group(1).toInt < m.get.group(2).toInt,
-        s"bucket pruning left the full file list:\n$pplan")
-      // IN prunes to the union of the named keys' buckets
-      assert(spark.table("stagebk.default.fact")
-        .filter(col("k").isin(5L, 9000L)).count() == 2L)
-      // inexact operations DECLINE loudly: REPLACE WHERE on a bucketed
-      // column would half-replace a hash bucket's mixed keys
-      val e = intercept[Exception] {
-        spark.range(0, 10).select(col("id").as("k"), (col("id") * 3).as("cents"))
-          .writeTo("stagebk.default.fact").overwrite(col("k") === 5L)
-      }
-      assert(e.getMessage.contains("not decidable"), e.getMessage)
-      // bucket over a non-integral column declines at DDL time
-      val e2 = intercept[Exception] {
-        spark.sql("CREATE TABLE stagebk.default.bad (s STRING) " +
-          "PARTITIONED BY (bucket(4, s))")
-      }
-      assert(e2.getMessage.contains("integral column"), e2.getMessage)
-      // PATH reads of a bucketed table work (the unresolvable reported
-      // transform degrades to an opaque layout); PATH writes decline
-      // with an actionable message, not Spark's planner error (review
-      // r19 — the bucket clustering resolves only through the catalog)
-      val fmt = "graft.sources.v2.StageSource"
-      assert(spark.read.format(fmt).option("path", dir).load()
-        .count() == 10000L)
-      val e3 = intercept[Exception] {
-        spark.range(0, 5).select(col("id").as("k"), (col("id") * 3).as("cents"))
-          .write.format(fmt).option("path", dir).mode("append").save()
-      }
-      assert(e3.getMessage.contains("through its catalog"), e3.getMessage)
-    } finally spark.conf.set("spark.sql.sources.v2.bucketing.enabled", prev)
+    spark.sql("CREATE TABLE stagebk.default.fact (k BIGINT, cents BIGINT) " +
+      "PARTITIONED BY (bucket(8, k))")
+    spark.sql("INSERT INTO stagebk.default.fact " +
+      "SELECT id, id * 3 FROM range(0, 10000)")
+    spark.sql("CREATE TABLE stagebk.default.dim (k BIGINT, label STRING) " +
+      "PARTITIONED BY (bucket(8, k))")
+    spark.sql("INSERT INTO stagebk.default.dim " +
+      "SELECT id, concat('l', id) FROM range(0, 1000)")
+    val dir = new java.io.File(new java.io.File(root, "default"), "fact")
+      .getAbsolutePath
+    // the write routed by the SAME hash the catalog's SQL bucket() binds
+    assert(StageSource.readPartCols(dir).toSeq == Seq("bucket(8,k)"))
+    val parts = StageSource.readParts(dir)
+    assert(parts.values.map(_.head).toSet.subsetOf(
+      (0 until 8).map(_.toString).toSet))
+    assert(spark.sql(
+      "SELECT COUNT(DISTINCT stagebk.default.bucket(8, k)) FROM stagebk.default.fact")
+      .head().getLong(0) == 8L)
+    // storage-partitioned join: both sides report bucket(8,k) — the
+    // join subtree plans with NO exchange (the r18 width-knob win, now
+    // on real committed data)
+    val j = spark.table("stagebk.default.fact").hint("merge")
+      .join(spark.table("stagebk.default.dim"), "k")
+    j.queryExecution.toRdd.count(): Unit
+    val plan = j.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert(plan.contains("SortMergeJoin"), plan.take(1500))
+    assert(!plan.linesIterator.exists(_.contains("Exchange ")),
+      s"an exchange crept into the bucketed SPJ:\n${plan.take(2000)}")
+    assert(j.count() == 1000L)
+    assert(j.agg(sum("cents")).head().getLong(0) == (0L until 1000L).map(_ * 3).sum)
+    // equality on the bucketed column prunes to ONE bucket's files
+    val point = spark.table("stagebk.default.fact").filter(col("k") === 123L)
+    assert(point.count() == 1L)
+    val pplan = point.queryExecution.executedPlan.toString
+    val m = "files=(\\d+)/(\\d+)".r.findFirstMatchIn(pplan)
+    assert(m.isDefined && m.get.group(1).toInt < m.get.group(2).toInt,
+      s"bucket pruning left the full file list:\n$pplan")
+    // IN prunes to the union of the named keys' buckets
+    assert(spark.table("stagebk.default.fact")
+      .filter(col("k").isin(5L, 9000L)).count() == 2L)
+    // inexact operations DECLINE loudly: REPLACE WHERE on a bucketed
+    // column would half-replace a hash bucket's mixed keys
+    val e = intercept[Exception] {
+      spark.range(0, 10).select(col("id").as("k"), (col("id") * 3).as("cents"))
+        .writeTo("stagebk.default.fact").overwrite(col("k") === 5L)
+    }
+    assert(e.getMessage.contains("not decidable"), e.getMessage)
+    // bucket over a non-integral column declines at DDL time
+    val e2 = intercept[Exception] {
+      spark.sql("CREATE TABLE stagebk.default.bad (s STRING) " +
+        "PARTITIONED BY (bucket(4, s))")
+    }
+    assert(e2.getMessage.contains("integral column"), e2.getMessage)
+    // PATH reads of a bucketed table work (the unresolvable reported
+    // transform degrades to an opaque layout); PATH writes decline
+    // with an actionable message, not Spark's planner error (review
+    // r19 — the bucket clustering resolves only through the catalog)
+    val fmt = "graft.sources.v2.StageSource"
+    assert(spark.read.format(fmt).option("path", dir).load()
+      .count() == 10000L)
+    val e3 = intercept[Exception] {
+      spark.range(0, 5).select(col("id").as("k"), (col("id") * 3).as("cents"))
+        .write.format(fmt).option("path", dir).mode("append").save()
+    }
+    assert(e3.getMessage.contains("through its catalog"), e3.getMessage)
   }
 
   test("StageSource partitioned table: one shard per value, pruning, lineage, decidable delete") {
@@ -1341,63 +1337,6 @@ class SourcesSpec extends SparkTestBase {
     sameAsCow("after compaction")
   }
 
-  test("pre-r16 bare-epoch ledger lines dedup genuine re-deliveries but never a new query's epochs") {
-    // ADVICE r17 #4 + review: the ledger key changed from bare epoch to
-    // queryId:epoch. A bare `<epoch>` line counts as committed ONLY when
-    // this query's epoch files are already in the table (a genuine
-    // re-delivery after the format upgrade) — a bare line alone must not
-    // dedup, or a NEW query starting at epoch 0 on a legacy table would
-    // have its first batches silently dropped.
-    import graft.sources.v2.{StageCommitter, StageSource}
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stage_ledger").toString + "/t"
-    val fmt = "graft.sources.v2.StageSource"
-    Seq((1L, 1.0)).toDF("k", "v")
-      .write.format(fmt).option("path", dir).mode("overwrite").save()
-    val schema = spark.read.format(fmt).option("path", dir).load().schema
-    // legacy state: qstream committed epoch 7 under the OLD binary —
-    // bare ledger line, epoch-named files already in the snapshot
-    StageCommitter.commit(dir, schema, Array.empty, "qstream",
-      stagedCommit(dir, schema, "qstream", Seq((7L, 7.0))),
-      truncate = false, epoch = None) // epoch=None: no keyed ledger line
-    val f7 = StageSource.dataFiles(dir)
-      .map(_.getName).find(_.startsWith("part-qstream-")).get
-    val renamed = f7.replace("part-qstream-", "part-qstream-e7-")
-    java.nio.file.Files.move(
-      new java.io.File(dir, f7).toPath,
-      new java.io.File(dir, renamed).toPath)
-    locally { // patch the manifest + sidecars to the epoch-named file
-      for (n <- Seq(StageSource.manifestName(
-          StageSource.latestVersion(dir).get), StageSource.StatsFile,
-          StageSource.ColsFile)) {
-        val p = new java.io.File(dir, n).toPath
-        val s = new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)
-        java.nio.file.Files.write(p, s.replace(f7, renamed)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-      }
-    }
-    java.nio.file.Files.write(
-      new java.io.File(dir, StageSource.EpochsFile).toPath,
-      "7\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val before = StageSource.manifestVersions(dir)
-    // epoch 7 re-offered to the SAME query after the upgrade: its files
-    // are present → SKIPPED, no new snapshot
-    StageCommitter.commit(dir, schema, Array.empty, "qstream",
-      stagedCommit(dir, schema, "qstream", Seq((7L, 7.0))),
-      truncate = false, epoch = Some(7L))
-    assert(StageSource.manifestVersions(dir) == before,
-      StageSource.manifestVersions(dir).toString)
-    // a NEW query's epoch 7 (fresh checkpoint, no files of its own) must
-    // COMMIT — the bare line belongs to the older writer
-    StageCommitter.commit(dir, schema, Array.empty, "qfresh",
-      stagedCommit(dir, schema, "qfresh", Seq((9L, 9.0))),
-      truncate = false, epoch = Some(7L))
-    val back = spark.read.format(fmt).option("path", dir).load()
-      .as[(Long, Double)].collect().toSet
-    assert(back == Set((1L, 1.0), (7L, 7.0), (9L, 9.0)), back.toString)
-  }
-
   test("bounded delete-vector encoding: commit bytes follow the delta, sidecars are immutable and content-addressed") {
     // r17 verdict #1: per-row cumulative D-lines made EVERY commit
     // rewrite (and every plan read) O(total deleted rows) manifest bytes
@@ -1439,6 +1378,25 @@ class SourcesSpec extends SparkTestBase {
     val dvBefore = StageSource.readDeletes(dir, None)
       .map { case (f, ps) => f -> ps.toSeq }
     assert(dvBefore.values.map(_.size).sum == 1000)
+    // a TAILED merge-on-read table applies its vectors: the insert and
+    // the delete on the same files fall in one batch range, which reads
+    // with the end version's vectors
+    import org.apache.spark.sql.streaming.Trigger
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_stage_dv_ck").toString
+    val tailed = new java.util.concurrent.atomic.AtomicLong
+    def drain(): Unit = {
+      val q = spark.readStream.format("graft.sources.v2.StageSource")
+        .option("path", dir).load()
+        .writeStream.option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          tailed.addAndGet(df.count()): Unit
+        }.start()
+      q.awaitTermination()
+    }
+    drain()
+    assert(tailed.get() == 2000L, s"tail ignored the vectors: ${tailed.get()}")
     // an UNRELATED append: manifest stays O(files) — same V-lines carried
     // verbatim — and ZERO new vector bytes are written
     spark.sql(s"INSERT INTO $t SELECT id, id * 10 FROM range(3000, 3010)")
@@ -1451,6 +1409,9 @@ class SourcesSpec extends SparkTestBase {
     assert(StageSource.readDeletes(dir, None)
       .map { case (f, ps) => f -> ps.toSeq } == dvBefore)
     assert(spark.sql(s"SELECT COUNT(*) FROM $t").head().getLong(0) == 2010L)
+    // the resumed tail emits only the appended rows
+    drain()
+    assert(tailed.get() == 2010L, s"resumed tail re-read or missed: ${tailed.get()}")
     // a second, narrower delete touches ONE file: exactly one new sidecar
     // appears (the touched file's new vector); the old sidecar remains
     // (immutable — the pre-delete snapshot still resolves through it)
@@ -1465,7 +1426,7 @@ class SourcesSpec extends SparkTestBase {
     assert(spark.sql(s"SELECT COUNT(*) FROM $t").head().getLong(0) == 2009L)
     // vacuum expires sidecars referenced only by expired manifests
     StageSource.vacuum(dir)
-    val live = StageSource.readDvRefs(dir, None).values.toSet
+    val live = StageSource.readManifest(dir, None).dvRefs.values.toSet
     assert(dvSidecars == live, s"vacuum kept ${dvSidecars.diff(live)}")
     assert(spark.sql(s"SELECT COUNT(*) FROM $t").head().getLong(0) == 2009L)
     // content addressing: the same vector maps to the same sidecar name,
@@ -1479,68 +1440,128 @@ class SourcesSpec extends SparkTestBase {
     assert(StageSource.decodeDv(StageSource.encodeDv(Array[Long]())).isEmpty)
   }
 
-  test("legacy per-row D-line manifests read correctly and migrate to sidecar references on first commit") {
+  test("manifests outside the written format fail loudly: a D-line on every read path, a summary-less manifest on every change read") {
+    // the connector reads exactly the manifest format it writes: an
+    // unknown line (a per-row `D\t` delete line included) must never be
+    // skipped — skipping it would bring deleted rows back — and a change
+    // read of a manifest without its `S\t` summary cannot be answered
     import graft.sources.v2.StageSource
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_stage_dvmig").toString
-    spark.conf.set("spark.sql.catalog.stagemig", "graft.sources.v2.StageCatalog")
-    spark.conf.set("spark.sql.catalog.stagemig.root", root)
-    val t = "stagemig.default.t_mig"
-    spark.sql(s"CREATE TABLE $t (k BIGINT, cents BIGINT) " +
-      "TBLPROPERTIES ('delete.mode'='merge-on-read')")
-    spark.sql(s"INSERT INTO $t SELECT id, id * 10 FROM range(0, 100)")
-    val dir = new java.io.File(new java.io.File(root, "default"), "t_mig")
-      .getAbsolutePath
-    // simulate a pre-upgrade manifest: file list + cumulative D-lines
-    val files = StageSource.snapshotFiles(dir, None).map(_.getName)
-    val target = files.head
-    val legacyLines = files.toSeq ++
-      Seq(StageSource.deleteLine(target, 0L), StageSource.deleteLine(target, 2L))
-    val nextV = StageSource.latestVersion(dir).get + 1
-    java.nio.file.Files.write(
-      new java.io.File(dir, StageSource.manifestName(nextV)).toPath,
-      legacyLines.mkString("", "\n", "\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE_NEW)
-    StageSource.recordCommitTime(dir, nextV)
-    // the legacy encoding reads correctly …
-    val dv0 = StageSource.readDeletes(dir, None)
-    assert(dv0.keySet == Set(target) && dv0(target).toSeq == Seq(0L, 2L),
-      dv0.map { case (f, p) => s"$f:${p.mkString(",")}" }.mkString(";"))
-    spark.sql(s"REFRESH TABLE $t")
-    assert(spark.sql(s"SELECT COUNT(*) FROM $t").head().getLong(0) == 98L)
-    // a TAILED pre-upgrade table: consume up to the legacy D-line version
-    // before the migration commit lands
     import org.apache.spark.sql.streaming.Trigger
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_stage_dvmig_ck").toString
-    val seen = new java.util.concurrent.atomic.AtomicLong
-    def drain(): Unit = {
-      val q = spark.readStream.format("graft.sources.v2.StageSource")
-        .option("path", dir).load()
-        .writeStream.option("checkpointLocation", ckpt)
+    val fmt = "graft.sources.v2.StageSource"
+    def rootMsg(t: Throwable): String =
+      if (t == null) "" else t.getMessage + " | " + rootMsg(t.getCause)
+    // v1 through the writer, then a hand-claimed v2: v1's lines, edited
+    def table(tag: String)(edit: Seq[String] => Seq[String]): String = {
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"graft_stage_$tag").toString + "/t"
+      spark.range(0, 100).select($"id".as("k"), ($"id" * 10).as("cents"))
+        .coalesce(1)
+        .write.format(fmt).option("path", dir).mode("append").save()
+      val v1 = new java.io.File(dir, StageSource.manifestName(1)).toPath
+      val lines = new String(java.nio.file.Files.readAllBytes(v1),
+        java.nio.charset.StandardCharsets.UTF_8).linesIterator.toSeq
+      java.nio.file.Files.write(
+        new java.io.File(dir, StageSource.manifestName(2)).toPath,
+        edit(lines).mkString("", "\n", "\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      StageSource.recordCommitTime(dir, 2)
+      dir
+    }
+    def batch(dir: String): Long =
+      spark.read.format(fmt).option("path", dir).load().count()
+    def changeFeed(dir: String): Long =
+      spark.read.format(fmt).option("path", dir)
+        .option("read-change-feed", "true").load().count()
+    def snapshots(dir: String): Long =
+      spark.read.format(fmt).option("path", dir)
+        .option("snapshots", "true").load().count()
+    val streamed = new java.util.concurrent.atomic.AtomicLong
+    def stream(dir: String): Long = {
+      val q = spark.readStream.format(fmt).option("path", dir).load()
+        .writeStream.option("checkpointLocation", java.nio.file.Files
+          .createTempDirectory("graft_stage_fmt_ck").toString)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          seen.addAndGet(df.count()): Unit
+          streamed.addAndGet(df.count()): Unit
         }.start()
       q.awaitTermination()
+      streamed.get()
     }
-    drain()
-    assert(seen.get() == 98L, s"legacy vectors not applied: ${seen.get()}")
-    // … and the first commit after upgrade migrates it: V-reference in
-    // the new manifest, no D-lines, identical vectors
-    spark.sql(s"INSERT INTO $t SELECT id, id * 10 FROM range(100, 110)")
-    val m = new String(java.nio.file.Files.readAllBytes(new java.io.File(
-      dir, StageSource.manifestName(StageSource.latestVersion(dir).get)).toPath))
-    assert(!m.linesIterator.exists(_.startsWith("D\t")), m)
-    assert(m.linesIterator.count(_.startsWith("V\t")) == 1, m)
-    assert(StageSource.readDeletes(dir, None)(target).toSeq == Seq(0L, 2L))
-    assert(spark.sql(s"SELECT COUNT(*) FROM $t").head().getLong(0) == 108L)
-    // the tailing stream SURVIVES the migration commit — the encoding
-    // changed (D-lines → sidecar reference), the delete state did not;
-    // the resumed drain emits only the appended rows
-    drain()
-    assert(seen.get() == 108L,
-      s"migration commit broke or duplicated the tail: ${seen.get()}")
+    def fails(what: String, dir: String, read: String => Long,
+        why: String): Unit = {
+      val e = intercept[Exception](read(dir))
+      assert(rootMsg(e).contains(s"$dir/${StageSource.manifestName(2)}") &&
+        rootMsg(e).contains(why), s"$what: ${rootMsg(e)}")
+    }
+    // a per-row delete line: every read path refuses the manifest
+    val dLine = table("fmt_dline") { ls =>
+      ls.head +: s"D\t${ls.head}\t0" +: ls.tail
+    }
+    fails("batch scan", dLine, batch, "unknown line tag")
+    fails("stream planning", dLine, stream, "unknown line tag")
+    fails("change feed", dLine, changeFeed, "unknown line tag")
+    fails("snapshots table", dLine, snapshots, "unknown line tag")
+    // no change summary: the batch scan needs none, every change read
+    // fails naming the manifest
+    val noSummary = table("fmt_nosummary") { ls =>
+      ls.filterNot(l => Seq("S\t", "A\t", "R\t", "X\t").exists(l.startsWith))
+    }
+    assert(batch(noSummary) == 100L)
+    fails("stream planning", noSummary, stream, "no change summary")
+    fails("change feed", noSummary, changeFeed, "no change summary")
+    fails("snapshots table", noSummary, snapshots, "no change summary")
+    assert(streamed.get() == 0L, s"a refused stream emitted ${streamed.get()} rows")
+  }
+
+  test("crash-point injection: a commit stopped after any protocol step leaves the previous or the next snapshot; its re-run lands exactly once") {
+    import graft.sources.v2.{StageCommitter, StageSource}
+    val fmt = "graft.sources.v2.StageSource"
+    for (step <- Seq("moved", "claimed", "sidecars")) {
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"graft_stage_crash_$step").toString + "/t"
+      Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v")
+        .write.format(fmt).option("path", dir).mode("overwrite").save() // v1
+      val schema = spark.read.format(fmt).option("path", dir).load().schema
+      def rows(version: Option[Int]): Seq[(Long, Double)] =
+        version.foldLeft(spark.read.format(fmt).option("path", dir))(
+          (r, v) => r.option("version_as_of", v.toLong))
+          .load().as[(Long, Double)].collect().toSeq.sorted
+      val before = Seq((1L, 1.0), (2L, 2.0))
+      val after = before ++ Seq((3L, 3.0), (4L, 4.0))
+      def commit(): Unit = StageCommitter.commit(dir, schema, Array.empty,
+        "qcrash", stagedCommit(dir, schema, "qcrash", Seq((3L, 3.0), (4L, 4.0))),
+        truncate = false, epoch = None)
+      StageCommitter.faultHook =
+        s => if (s == step) throw new IllegalStateException(s"crash at $s")
+      val e = try intercept[IllegalStateException](commit())
+        finally StageCommitter.faultHook = _ => ()
+      assert(e.getMessage == s"crash at $step", e.getMessage)
+      // a reader sees exactly the previous snapshot or the next one
+      val seen = rows(None)
+      assert(seen == (if (step == "moved") before else after),
+        s"$step: torn snapshot $seen")
+      // every live version still resolves under VERSION AS OF
+      assert(rows(Some(1)) == before, step)
+      StageSource.manifestVersions(dir).foreach(v => rows(Some(v)))
+      if (step == "claimed") {
+        // the claimed version carries no commit time: timestamp travel
+        // declines loudly instead of guessing
+        val t = intercept[IllegalArgumentException](StageSource
+          .versionAsOfMillis(dir, System.currentTimeMillis()))
+        assert(t.getMessage.contains("VERSION AS OF"), t.getMessage)
+      }
+      // re-running the commit succeeds and lands its rows exactly once —
+      // in the table and in the change feed's replay
+      commit()
+      assert(rows(None) == after, s"$step: re-run left ${rows(None)}")
+      val feed = spark.read.format(fmt).option("path", dir)
+        .option("read-change-feed", "true").load()
+      def nChanged(kind: String) =
+        feed.filter(col("_change_type") === kind).count()
+      assert(nChanged("insert") - nChanged("delete") == after.size,
+        s"$step: feed replays ${nChanged("insert")} inserts, " +
+          s"${nChanged("delete")} deletes")
+    }
   }
 
   test("staged-table streaming read: version-epoch tailing, admission control, resume, non-append fail-loudly") {
