@@ -23,6 +23,11 @@ import graft.functions.NativeExpressions._
   * graft_word_shingles(text, n), graft_tokenize(text),
   * graft_bounded_levenshtein(a, b, k), graft_deletion_hashes(s, k),
   * graft_array_count_eq(arr, term).
+  *
+  * Planner: `TopKPerKeyStrategy` with its optimizer rule `RankLimitRule`
+  * (per-key top-k as one heap pass), and the columnar rule
+  * `ColumnarCacheRead` (whole-stage codegen reads cached primitive columns
+  * as vectors).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -45,6 +50,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // a full sort per key group becomes one O(n log k) heap pass.
     e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
     e.injectOptimizerRule(_ => graft.plans.RankLimitRule)
+    // Scan tier: a cached scan whose parent fuses into whole-stage codegen
+    // is read as column vectors, not assembled into one UnsafeRow per row.
+    e.injectColumnar(_ => graft.plans.ColumnarCacheRead)
     e.injectFunction(entry("graft_minhash_sig",
       "graft_minhash_sig(shingles, numHashes) - MinHash signature (array<long>)",
       args => MinHashSig(args(0), intArg(args(1), "graft_minhash_sig"))))

@@ -1,7 +1,18 @@
 package graft.operators
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.vectorized.ColumnarBatch
+
+import graft.plans.ColumnarCacheRead
 
 /** Positional gather — `out[i] = values[indices[i]]` (ref
   * `dpu/shared/kernels/take.c:12-47`, `host/take/take_native.cc:18-38`).
@@ -45,9 +56,8 @@ object PositionalTake {
     * it.
     */
   def withGlobalIndex(df: DataFrame, orderCols: Seq[String], idxCol: String = "idx"): DataFrame = {
-    import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.JoinedRow
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import org.apache.spark.sql.types.{LongType, StructField}
     val spark = df.sparkSession
     val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val sorted = df
@@ -102,34 +112,20 @@ object PositionalTake {
     * executor (broadcast); use [[take]] (the join gather) when the index
     * side is too large for executor memory — that is the 100 TB path, this
     * is the hot small-gather path.
+    *
+    * Where the values plan yields column batches (see [[MergeInput]]) the
+    * merge walks each batch's `idxCol` vector and builds a row only for a
+    * match; a cached 16 M-row input no longer becomes 16 M rows to keep 2 M.
     */
   def mergeTake(
       indexedValues: DataFrame,
       sortedIndices: Array[Long],
       idxCol: String = "idx"): DataFrame = {
     val spark = indexedValues.sparkSession
-    val schema = indexedValues.schema
-    val ord = schema.fieldIndex(idxCol)
+    val values = MergeInput(indexedValues, idxCol)
     val bc = spark.sparkContext.broadcast(sortedIndices)
-    val rdd = indexedValues.queryExecution.toRdd.mapPartitions { it =>
-      val arr = bc.value
-      var p = -1
-      it.flatMap { row =>
-        val idx = row.getLong(ord)
-        if (p == -1) {
-          p = java.util.Arrays.binarySearch(arr, idx)
-          if (p < 0) p = -p - 1
-        }
-        while (p < arr.length && arr(p) < idx) p += 1
-        if (p < arr.length && arr(p) == idx) {
-          p += 1
-          // matched rows are copied out of the scan's reused buffer;
-          // non-matches (the majority) never allocate
-          Iterator.single(row.copy())
-        } else Iterator.empty
-      }
-    }
-    org.apache.spark.sql.graftshim.RddShim.internalCreateDataFrame(spark, rdd, schema)
+    val rdd = values.rdd.mapPartitions(it => values.gather(it, bc.value))
+    org.apache.spark.sql.graftshim.RddShim.internalCreateDataFrame(spark, rdd, values.schema)
   }
 
   /** DISTRIBUTED merge gather — the scale generalization of [[mergeTake]]
@@ -139,9 +135,9 @@ object PositionalTake {
     * shuffles:
     *
     *  1. a boundary pass reads the FIRST index of every values partition
-    *     (lazy iterators: each partition is opened, one row read, closed —
-    *     not a scan) — a numPartitions-sized array on the driver, the same
-    *     metadata a range-partitioned table keeps in its catalog;
+    *     (lazy iterators: each partition is opened, one row or batch read,
+    *     closed — not a scan) — a numPartitions-sized array on the driver,
+    *     the same metadata a range-partitioned table keeps in its catalog;
     *  2. the INDICES (the smaller side, by the take contract) are
     *     range-shuffled to those boundaries as packed Array[Long] chunks —
     *     the only exchange in the whole gather — and each destination
@@ -164,13 +160,11 @@ object PositionalTake {
       indices: DataFrame,
       idxCol: String = "idx"): DataFrame = {
     val spark = indexedValues.sparkSession
-    val schema = indexedValues.schema
-    val ord = schema.fieldIndex(idxCol)
-    val valuesRdd = indexedValues.queryExecution.toRdd
-    val nParts = valuesRdd.getNumPartitions
-    val firsts = valuesRdd.mapPartitionsWithIndex { (pid, it) =>
-      if (it.hasNext) Iterator.single((pid, it.next().getLong(ord)))
-      else Iterator.empty
+    val values = MergeInput(indexedValues, idxCol)
+    val schema = values.schema
+    val nParts = values.rdd.getNumPartitions
+    val firsts = values.rdd.mapPartitionsWithIndex { (pid, it) =>
+      values.firstKey(it).iterator.map((pid, _))
     }.collect().sortBy(_._1)
     if (firsts.isEmpty)
       return org.apache.spark.sql.graftshim.RddShim.internalCreateDataFrame(
@@ -207,29 +201,122 @@ object PositionalTake {
         .filter(bufs(_) != null)
         .map(p => (p, bufs(p).result()))
     }.partitionBy(identityPart)
-    val out = valuesRdd.zipPartitions(packed) { (vit, chunks) =>
+    val out = values.rdd.zipPartitions(packed) { (vit, chunks) =>
       // concatenate this partition's chunks and sort once — bounded by
       // the partition's own index mass, the merge's only buffer
       val arr = chunks.flatMap(_._2.iterator).toArray
       java.util.Arrays.sort(arr)
-      var p = 0
-      // takeWhile: once this partition's index list is drained, the
-      // remaining values rows are skipped without being read
-      vit.takeWhile(_ => p < arr.length).flatMap { v =>
-        val key = v.getLong(ord)
-        while (p < arr.length && arr(p) < key) p += 1
-        var n = 0
-        while (p < arr.length && arr(p) == key) { p += 1; n += 1 }
-        if (n == 0) Iterator.empty
-        else {
-          // matched rows are copied out of the scan's reused buffer once,
-          // shared across duplicate index occurrences
-          val c = v.copy()
-          Iterator.fill(n)(c)
-        }
-      }
+      values.gather(vit, arr)
     }
     org.apache.spark.sql.graftshim.RddShim.internalCreateDataFrame(spark, out, schema)
+  }
+
+  /** The values side of a merge gather. Its partitions are read as column
+    * batches when the plan yields them without a row conversion — a
+    * vectorized cached scan at the root, or the child of a `ColumnarToRow`
+    * transition such as a vectorized parquet scan — and as rows otherwise
+    * (e.g. the RDD-backed output of [[withGlobalIndex]]). `rdd` holds
+    * `ColumnarBatch`es or `InternalRow`s accordingly.
+    */
+  private final class MergeInput(
+      @transient val rdd: RDD[Any],
+      val schema: StructType,
+      ord: Int,
+      columnar: Boolean) extends Serializable {
+
+    /** The index of a partition's first row, if it has one. */
+    def firstKey(it: Iterator[Any]): Option[Long] =
+      if (columnar) it.map(_.asInstanceOf[ColumnarBatch]).find(_.numRows > 0)
+        .map(_.column(ord).getLong(0))
+      else it.nextOption().map(_.asInstanceOf[InternalRow].getLong(ord))
+
+    /** The rows of one partition whose index occurs in `sorted`
+      * (ascending), each once per occurrence (cp::Take's repetition).
+      */
+    def gather(it: Iterator[Any], sorted: Array[Long]): Iterator[InternalRow] = {
+      val cur = new MergeCursor(sorted)
+      // once the index array is drained, the partition's remaining rows
+      // or batches are skipped without being read
+      if (columnar) {
+        val proj = UnsafeProjection.create(schema)
+        it.map(_.asInstanceOf[ColumnarBatch]).takeWhile(_ => !cur.done).flatMap { b =>
+          // matched rows are projected and copied before the next batch is
+          // read: a vectorized parquet scan reuses its batch
+          val keys = b.column(ord)
+          val out = new ArrayBuffer[InternalRow]
+          val n = b.numRows
+          var i = 0
+          while (i < n && !cur.done) {
+            var k = cur.matches(keys.getLong(i))
+            if (k > 0) {
+              val row = proj(b.getRow(i)).copy()
+              while (k > 0) { out += row; k -= 1 }
+            }
+            i += 1
+          }
+          out.iterator
+        }
+      } else
+        it.map(_.asInstanceOf[InternalRow]).takeWhile(_ => !cur.done).flatMap { row =>
+          val k = cur.matches(row.getLong(ord))
+          // matched rows are copied out of the scan's reused buffer once,
+          // shared across repeated indices; non-matches never allocate
+          if (k == 0) Iterator.empty
+          else {
+            val c = row.copy()
+            Iterator.fill(k)(c)
+          }
+        }
+    }
+  }
+
+  private object MergeInput {
+    def apply(df: DataFrame, idxCol: String): MergeInput = {
+      val schema = df.schema
+      val ord = schema.fieldIndex(idxCol)
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+        case p => p
+      }
+      val batches = plan match {
+        case WholeStageCodegenExec(ColumnarToRowExec(InputAdapter(c))) => Some(c)
+        case ColumnarToRowExec(c) => Some(c)
+        case c if ColumnarCacheRead.vectorCache(c) => Some(c)
+        case _ => None
+      }
+      batches match {
+        case Some(c) => new MergeInput(c.executeColumnar().asInstanceOf[RDD[Any]], schema, ord, true)
+        case None => new MergeInput(df.queryExecution.toRdd.asInstanceOf[RDD[Any]], schema, ord, false)
+      }
+    }
+  }
+
+  /** One partition's walk of a sorted index array against the partition's
+    * ascending row indices, the kernel both merge gathers share. The first
+    * key seeks to its lower bound; after that the position only moves
+    * forward, carried from row to row and across batch boundaries.
+    */
+  private final class MergeCursor(sorted: Array[Long]) {
+    // -1 until the first key seeks; an empty array is done from the start
+    private var p = if (sorted.isEmpty) 0 else -1
+
+    def done: Boolean = p >= sorted.length
+
+    /** How many times `key` occurs in the array; advances past them. */
+    def matches(key: Long): Int = {
+      if (p < 0) {
+        var hi = sorted.length
+        p = 0
+        while (p < hi) {
+          val mid = (p + hi) >>> 1
+          if (sorted(mid) < key) p = mid + 1 else hi = mid
+        }
+      }
+      while (p < sorted.length && sorted(p) < key) p += 1
+      val from = p
+      while (p < sorted.length && sorted(p) == key) p += 1
+      p - from
+    }
   }
 
   /** Convenience end-to-end: index `values` by `orderCols`, keep `valueCols`,

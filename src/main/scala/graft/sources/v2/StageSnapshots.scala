@@ -53,7 +53,9 @@ object StageSnapshots {
       Array[Any](
         v.toLong,
         times.get(v).map(Long.box).orNull,
-        StageSource.snapshotFiles(path, Some(v)).length.toLong,
+        // the manifest's own file count: a partition takedown physically
+        // removes files that older live versions still list
+        StageSource.readManifest(path, Some(v)).files.length.toLong,
         ch.added.size.toLong,
         ch.removed.size.toLong,
         ch.dvDeltas.count(_._2.nonEmpty).toLong,

@@ -694,7 +694,9 @@ object StageSource {
     if (versions.isEmpty) return
     val retained = versions.takeRight(retainLast)
     val manifests = retained.map(v => readManifest(path, Some(v)))
-    val keep = manifests.flatMap(liveFiles(path, _).map(_.getName)).toSet
+    // by listed name, not through liveFiles: a retained version may list
+    // files a partition takedown already removed
+    val keep = manifests.flatMap(_.files).toSet
     dataFiles(path).filterNot(f => keep(f.getName))
       .foreach(f => f.delete(): Unit)
     versions.dropRight(retainLast)

@@ -12,25 +12,6 @@ import graft.sources.Tables
   */
 class RankLimitRuleSpec extends SparkTestBase {
 
-  // The rule arrives via GraftExtensions, which only apply at session
-  // construction — so build a dedicated session (sharing the JVM's
-  // SparkContext) and hand the default-session slot back to the plain
-  // test session afterwards. The plain session doubles as the
-  // no-rewrite control for result comparison.
-  private lazy val gspark: SparkSession = {
-    val plain = spark // force SparkTestBase.spark first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = graft.engine.GraftSession.builder(master = "local[4]")
-      .appName("graft-rule-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    SparkSession.setDefaultSession(plain)
-    SparkSession.setActiveSession(plain)
-    s
-  }
-
   private def ranked(s: SparkSession, k: Int): DataFrame = {
     val w = Window.partitionBy(col("l_returnflag"))
       .orderBy(col("l_extendedprice").desc, col("l_orderkey").desc,
@@ -42,7 +23,7 @@ class RankLimitRuleSpec extends SparkTestBase {
   }
 
   test("row_number<=k filter plans onto TopKPerKeyExec") {
-    val physical = ranked(gspark, 3).queryExecution.executedPlan.toString
+    val physical = ranked(graftSpark, 3).queryExecution.executedPlan.toString
     assert(physical.contains("TopKPerKey"), physical)
   }
 
@@ -50,21 +31,21 @@ class RankLimitRuleSpec extends SparkTestBase {
     val control = ranked(spark, 3)
     assert(!control.queryExecution.executedPlan.toString.contains("TopKPerKey"))
     val expected = control.collect().map(_.toSeq).toSet
-    assert(ranked(gspark, 3).collect().map(_.toSeq).toSet == expected)
+    assert(ranked(graftSpark, 3).collect().map(_.toSeq).toSet == expected)
     assert(expected.size == 9) // 3 flags × k=3 at sf0.001
   }
 
   test("rank() and mixed-direction orderings are left untouched") {
     val wMixed = Window.partitionBy(col("l_returnflag"))
       .orderBy(col("l_extendedprice").desc, col("l_orderkey").asc)
-    val mixed = Tables.lineitem(gspark, sf0001)
+    val mixed = Tables.lineitem(graftSpark, sf0001)
       .withColumn("rn", row_number().over(wMixed))
       .filter(col("rn") <= 3)
     assert(!mixed.queryExecution.executedPlan.toString.contains("TopKPerKey"))
 
     val wRank = Window.partitionBy(col("l_returnflag"))
       .orderBy(col("l_extendedprice").desc)
-    val rk = Tables.lineitem(gspark, sf0001)
+    val rk = Tables.lineitem(graftSpark, sf0001)
       .withColumn("r", rank().over(wRank))
       .filter(col("r") <= 3)
     assert(!rk.queryExecution.executedPlan.toString.contains("TopKPerKey"))
@@ -82,14 +63,14 @@ class RankLimitRuleSpec extends SparkTestBase {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3 && col("l_quantity") > 10)
     }
-    val rewritten = compound(gspark)
+    val rewritten = compound(graftSpark)
     assert(rewritten.queryExecution.executedPlan.toString.contains("TopKPerKey"))
     val control = compound(spark).collect().map(_.toSeq).toSet
     assert(rewritten.collect().map(_.toSeq).toSet == control)
     // OR must decline: a row past rank k can still pass the other disjunct
     val w2 = Window.partitionBy(col("l_returnflag"))
       .orderBy(col("l_extendedprice").desc, col("l_orderkey").desc)
-    val orFilter = Tables.lineitem(gspark, sf0001)
+    val orFilter = Tables.lineitem(graftSpark, sf0001)
       .withColumn("rn", row_number().over(w2))
       .filter(col("rn") <= 3 || col("l_quantity") > 10)
     assert(!orFilter.queryExecution.executedPlan.toString.contains("TopKPerKey"))
@@ -97,7 +78,7 @@ class RankLimitRuleSpec extends SparkTestBase {
 
   test("global (unpartitioned) rank filter is left to TakeOrdered paths") {
     val w = Window.orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    val df = Tables.orders(gspark, sf0001)
+    val df = Tables.orders(graftSpark, sf0001)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 5)
     assert(!df.queryExecution.executedPlan.toString.contains("TopKPerKey"))

@@ -2274,6 +2274,41 @@ class SourcesSpec extends SparkTestBase {
     assert(e2.getMessage.contains("not reconstructible"), e2.getMessage)
   }
 
+  test("after a partition takedown the snapshots table and a retaining vacuum still resolve; the removed version reads fail loudly") {
+    import graft.sources.v2.StageSource
+    import org.apache.spark.sql.connector.expressions.Expressions
+    import org.apache.spark.sql.connector.expressions.filter.Predicate
+    import org.apache.spark.sql.graftshim.V2ExprShim
+    val fmt = "graft.sources.v2.StageSource"
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_stage_td").toString + "/t"
+    spark.range(0, 60).select(($"id" % 2).as("p"), $"id".as("k"))
+      .repartition(1)
+      .write.format(fmt).option("path", dir)
+      .option("partition_by", "p").mode("append").save()          // v1
+    val t = spark.read.format(fmt).option("path", dir).load()
+    new graft.sources.v2.StageTable(dir, t.schema, Array("p"))
+      .deleteWhere(Array(new Predicate("=",
+        Array(Expressions.column("p"), V2ExprShim.longLiteral(0)))))  // v2
+    def snapshots() = spark.read.format(fmt).option("path", dir)
+      .option("snapshots", "true").load().orderBy("version")
+      .select("version", "n_files", "n_removed").as[(Long, Long, Long)].collect().toSeq
+    // v1 still lists the p=0 file the takedown removed: counted, not opened
+    assert(snapshots() == Seq((1L, 2L, 0L), (2L, 1L, 1L)), snapshots().toString)
+    StageSource.vacuum(dir, 2)
+    assert(StageSource.manifestVersions(dir) == Seq(1, 2))
+    assert(snapshots().length == 2)
+    val latest = spark.read.format(fmt).option("path", dir).load()
+    assert(latest.select("p", "k").as[(Long, Long)].collect().toSet ==
+      (0L until 60L).filter(_ % 2 == 1).map(k => (1L, k)).toSet)
+    // reading the version whose files are gone still fails loudly
+    val e = intercept[Exception] {
+      spark.read.format(fmt).option("path", dir)
+        .option("version_as_of", 1).load().count()
+    }
+    assert(e.getMessage.contains("physically removed"), e.getMessage)
+  }
+
   test("snapshots metadata table and timestamp-windowed change feeds resolve the table's history") {
     import graft.sources.v2.StageSource
     val fmt = "graft.sources.v2.StageSource"
