@@ -5092,8 +5092,8 @@ object Analytics extends Family {
     * control flow) that ports stored-procedure-style logic WITHOUT a
     * driver-side string-formatting layer; each statement inside the block
     * still plans through Catalyst, and the block returns the last
-    * statement's result. The conf flag is set/restored around the call
-    * ([[qStreamRocksdb]] discipline). The variable participates in
+    * statement's result. The conf flag is scoped to the call
+    * ([[Support.withConf]]). The variable participates in
     * constant folding, so the filter still pushes to the scan. The cut is
     * MAX/2, not AVG — max of doubles is exact and halving is a power-of-two
     * scale, so the threshold is bit-identical cross-engine; an averaged
@@ -5102,10 +5102,7 @@ object Analytics extends Family {
     */
   private def qSqlScript(s: SparkSession, d: String): DataFrame = {
     val ord = tempView(s, d, "graft_orders", Tables.orders(s, d))
-    val key = "spark.sql.scripting.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try {
+    withConf(s, "spark.sql.scripting.enabled" -> "true") {
       s.sql(
         s"""BEGIN
            |  DECLARE graft_cut DOUBLE DEFAULT 0.0;
@@ -5117,9 +5114,6 @@ object Analytics extends Family {
            |  FROM $ord WHERE o_totalprice > graft_cut
            |  GROUP BY o_orderpriority ORDER BY o_orderpriority;
            |END""".stripMargin)
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
   // q_sql_script: classic-syntax equivalent of the scripted block;
@@ -6327,10 +6321,7 @@ object Analytics extends Family {
       datediff(c, lit("1970-01-01").cast("date")).cast("long")
     val bytes = GraftFunctions.buildBloom(
       active.select(epochDay(col("dim_date")).as("k")), "k")
-    val key = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
-    val saved = s.conf.getOption(key)
-    try {
-      s.conf.set(key, "false")
+    withConf(s, "spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "false") {
       val df = eventsByDate(s, d)
         .filter(NativeExpressions.bloom_might_contain(
           epochDay(col("event_date")), bytes))
@@ -6345,9 +6336,6 @@ object Analytics extends Family {
       df.cache()
       df.count()
       df
-    } finally saved match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
   // q_bloom_semijoin: answer-identical to q_dpp_join — the bloom only
@@ -7851,9 +7839,9 @@ object Analytics extends Family {
     * join first (the filtered customer side, then orders) and the fact
     * table joins the reduced intermediate — the stats-driven plan a
     * 100 TB star schema lives or dies by, vs the syntactic order that
-    * would join the two big tables first. The conf window try/finally-
-    * restores (shared session) and forces `executedPlan` INSIDE it —
-    * SQLConf is read at plan time, not build time — so the pinned
+    * would join the two big tables first. The conf scope
+    * ([[Support.withConf]]; shared session) forces `executedPlan` INSIDE
+    * it — SQLConf is read at plan time, not build time — so the pinned
     * `optimizedPlan` is the CBO one (PlanAuditSpec asserts the innermost
     * join excludes lineitem). Tables are session-scoped (in-memory
     * catalog) external parquet mappings named per corpus dir; ANALYZE
@@ -7875,10 +7863,8 @@ object Analytics extends Family {
         s.sql(s"ANALYZE TABLE ${tbl(t)} COMPUTE STATISTICS FOR COLUMNS $cols")
       }
     }
-    val keys = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val saved = keys.map(k => k -> s.conf.getOption(k))
-    try {
-      keys.foreach(s.conf.set(_, "true"))
+    withConf(s, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.cbo.joinReorder.enabled" -> "true") {
       val df = s.sql(
         s"""SELECT c_mktsegment,
            |       COUNT(*) AS n_items,
@@ -7890,17 +7876,14 @@ object Analytics extends Family {
            |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
       df.queryExecution.executedPlan // force planning inside the CBO window
       // Verify/Bench materialize via a NEW QueryExecution (.coalesce(1)
-      // .write) built AFTER the finally-restore — without a cache they
-      // would execute a non-CBO replan. Cache the (2-row) result and
+      // .write) built AFTER the scope restores the confs — without a
+      // cache they would execute a non-CBO replan. Cache the (2-row) result and
       // populate it HERE, so every downstream action reads the plan this
       // row exists to exercise. cache() after the force above keeps THIS
       // df's optimizedPlan the raw CBO join tree (what PlanAuditSpec pins).
       df.cache()
       df.count()
       df
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
   // q_cbo_reorder: join-order-invariant relational answer — the Spark

@@ -719,19 +719,17 @@ object Dsv2 extends Family {
       round(col("o_totalprice") * 100).cast("long").as("cents"))
     ord.filter(col("k") < 1200).repartition(3)
       .write.format(fmt).option("path", srcDir).mode("append").save()
-    def drain(): Long = {
-      val q = s.readStream.format(fmt).option("path", srcDir)
+    def tail(): Long =
+      drain(s.readStream.format(fmt).option("path", srcDir)
         .option("maxFilesPerTrigger", "1").load()
         .writeStream.format(fmt).option("path", sinkDir)
         .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.recentProgress.count(_.numInputRows > 0).toLong
-    }
-    val batches1 = drain()
+        .trigger(Trigger.AvailableNow()).start(), availableNow = true)
+        .recentProgress.count(_.numInputRows > 0).toLong
+    val batches1 = tail()
     ord.filter(col("k") >= 1200 && col("k") < 1500).repartition(2)
       .write.format(fmt).option("path", srcDir).mode("append").save()
-    val batches2 = drain()
+    val batches2 = tail()
     s.read.format(fmt).option("path", sinkDir).load()
       .groupBy("status")
       .agg(count(lit(1)).as("n_orders"), sum("cents").as("sum_cents"))
@@ -801,7 +799,7 @@ object Dsv2 extends Family {
         (col("cents") + 2).as("v"))
       .coalesce(1)
       .write.format(fmt).option("path", logDir).mode("append").save()
-    val q = s.readStream.format(fmt).option("path", logDir)
+    val q = drain(s.readStream.format(fmt).option("path", logDir)
       .option("maxFilesPerTrigger", "1").load()
       .writeStream.option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
@@ -810,8 +808,7 @@ object Dsv2 extends Family {
         graft.operators.Changelog(mat, batch.select("k", "seq", "op", "v"))
           .select("k", "v")
           .write.format(fmt).option("path", matDir).mode("overwrite").save()
-      }.start()
-    q.awaitTermination()
+      }.start(), availableNow = true)
     val batches = q.recentProgress.count(_.numInputRows > 0)
     s.read.format(fmt).option("path", matDir).load()
       .select(col("k"), col("v"))
@@ -1244,8 +1241,8 @@ object Dsv2 extends Family {
     val ckpt = s"/tmp/graft_dsv2w/${dirTag(d)}/cdf_ckpt"
     graft.engine.Fs.deleteRecursively(new java.io.File(ckpt))
     val acc = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long, String, Long)]
-    def drain(): Long = {
-      val q = s.readStream.format(fmt).option("path", dir)
+    def tail() =
+      drain(s.readStream.format(fmt).option("path", dir)
         .option("read-change-feed", "true")
         .option("maxFilesPerTrigger", "1").load()
         .writeStream.option("checkpointLocation", ckpt)
@@ -1254,18 +1251,15 @@ object Dsv2 extends Family {
           df.collect().foreach(r => acc.add((r.getLong(0), r.getString(1),
             r.getLong(2), r.getString(3), r.getLong(4))))
           (): Unit
-        }.start()
-      q.awaitTermination()
-      acc.size().toLong
-    }
-    drain()
+        }.start(), availableNow = true)
+    tail()
     val preMid = acc.size()
     // the rows the mid-stream delete will retract, counted from the
     // PINNED pre-delete snapshot
     val midExpected = s.read.format(fmt).option("path", dir).load()
       .filter(col("k") % 11 === 5).count()
     s.sql(s"DELETE FROM $t WHERE k % 11 = 5")      // v5: mid-stream delete
-    drain()                                        // resumes, consumes it
+    tail()                                         // resumes, consumes it
     import scala.jdk.CollectionConverters._
     val streamed = acc.asScala.toSeq
     import s.implicits._
@@ -1522,10 +1516,8 @@ object Dsv2 extends Family {
     */
   private def qDsv2Stream(s: SparkSession, d: String): DataFrame = {
     val tag = dirTag(d)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.format("graft.sources.v2.SeqSource")
+    withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      drain(s.readStream.format("graft.sources.v2.SeqSource")
         .option("n", 210000L).option("slices", 8)
         .option("maxRowsPerBatch", 50000L)
         .load()
@@ -1534,9 +1526,8 @@ object Dsv2 extends Family {
         .writeStream.outputMode("complete").format("memory")
         .queryName(s"graft_dsv2_stream_$tag")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        .start(), availableNow = true)
+    }
     s.table(s"graft_dsv2_stream_$tag").orderBy("mod7")
   }
   // q_dsv2_stream: the streamed-in-bounded-batches aggregate must equal
@@ -1564,10 +1555,8 @@ object Dsv2 extends Family {
   private def qDsv2StreamSink(s: SparkSession, d: String): DataFrame = {
     val root = s"/tmp/graft_dsv2w/${dirTag(d)}/streamsink"
     graft.engine.Fs.deleteRecursively(new java.io.File(root))
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.format("graft.sources.v2.SeqSource")
+    withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      drain(s.readStream.format("graft.sources.v2.SeqSource")
         .option("n", 120000L).option("slices", 4)
         .option("maxRowsPerBatch", 40000L)
         .load()
@@ -1576,9 +1565,8 @@ object Dsv2 extends Family {
         .option("checkpointLocation", s"$root/.ckpt")
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        .start(), availableNow = true)
+    }
     s.read.format("graft.sources.v2.StageSource").option("path", root).load()
       .groupBy(col("mod7"))
       .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"))
@@ -1753,7 +1741,7 @@ object Dsv2 extends Family {
         |GROUP BY 1 ORDER BY 1""".stripMargin)
 
   /** Partition-scoped INSERT OVERWRITE ([[graft.sources.v2
-    * .StageWriteBuilder]]'s `SupportsOverwrite` — the daily-pipeline
+    * .StageWriteBuilder]]'s `SupportsOverwriteV2` — the daily-pipeline
     * idiom): `INSERT INTO … REPLACE WHERE status = 'O'` recomputes ONE
     * partition (corrected cents) while every other partition's files are
     * carried into the new snapshot untouched — no read, no rewrite, just

@@ -173,10 +173,7 @@ object Parity extends Family {
     */
   private def qBucketLookup(s: SparkSession, d: String): DataFrame = {
     val tag = dirTag(d)
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "false")
-    try {
+    withConf(s, "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
       val o = bucketedTable(s, s"graft_o_bkt_$tag",
         s"/tmp/graft_bucketed/$tag/orders",
         "o_orderkey BIGINT, o_totalprice DOUBLE", "o_orderkey") {
@@ -190,7 +187,7 @@ object Parity extends Family {
       // the conf override is live (QueryExecution caches the result)
       out.queryExecution.executedPlan
       out
-    } finally s.conf.set(key, prev)
+    }
   }
   // q_bucket_lookup: plain point probe
   row("q_bucket_lookup", qBucketLookup)(

@@ -32,6 +32,13 @@ object Streaming extends Family {
     staged
   }
 
+  /** The RocksDB state store for the rows on the scale backend; Spark
+    * resolves the provider from the session when a query starts.
+    */
+  private val rocksDbState =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** The STREAMING tier as a catalog row: the same tumbling-window
     * aggregate executed as a real Structured Streaming query (micro-batch
     * source → watermark → stateful agg → complete-mode memory sink), run
@@ -46,13 +53,9 @@ object Streaming extends Family {
     val name = s"graft_stream_agg_$tag"
     // state partitions sized to state volume, not batch shuffle width —
     // see qStreamIntervalJoin
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = EventsPipeline.streamingWindowedAgg(s, staged, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      drain(EventsPipeline.streamingWindowedAgg(s, staged, name))
+    }
     s.table(name).orderBy("window_start", "event_type")
   }
   // q_stream_agg: a finite stream processed to completion equals the
@@ -76,23 +79,9 @@ object Streaming extends Family {
     val tag = dirTag(d)
     val staged = stagedEvents(s, d)
     val name = s"graft_stream_rocksdb_$tag"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevPart = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = s.conf.getOption(provKey)
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = EventsPipeline.streamingWindowedAgg(
-        s, staged, name, windowLen = "30 minutes")
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevPart)
-      prevProv match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None => s.conf.unset(provKey)
-      }
+    withConf(s, "spark.sql.shuffle.partitions" -> "8", rocksDbState) {
+      drain(EventsPipeline.streamingWindowedAgg(
+        s, staged, name, windowLen = "30 minutes"))
     }
     s.table(name).orderBy("window_start", "event_type")
   }
@@ -135,10 +124,8 @@ object Streaming extends Family {
       // the delete-and-restage discipline qStreamRestart's fixture uses
       // (ADVICE r14)
       graft.engine.Fs.deleteRecursively(new java.io.File(root))
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = s.readStream
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        drain(s.readStream
           .schema(EventsPipeline.eventSchema)
           .parquet(staged)
           .groupBy(window(col("ts"), "1 day"), col("event_type"))
@@ -148,9 +135,8 @@ object Streaming extends Family {
           .format("memory")
           .queryName(s"graft_statesrc_$tag")
           .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+          .start())
+      }
       java.nio.file.Files.write(
         java.nio.file.Paths.get(root, "_STAGED"), Array.emptyByteArray): Unit
     }
@@ -226,11 +212,9 @@ object Streaming extends Family {
       }
       stage(firstHalf, s"$root/feedA")
       stage(secondHalf, s"$root/feedB")
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        EventsPipeline.typeTotalsLifecycle(
-          s, s"$root/feedA", ckptA, s"graft_staterw_a_$tag")
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        drain(EventsPipeline.streamingTypeTotals(
+          s, s"$root/feedA", ckptA, s"graft_staterw_a_$tag"))
         // the REWRITE: old state out of the 8-partition checkpoint …
         org.apache.spark.sql.graftshim.StateCoordinatorShim.ensure(s)
         // mapGroupsWithState's state rides nested under value.groupState
@@ -245,10 +229,11 @@ object Streaming extends Family {
           .groupByKey(_._1)
           .mapValues(r => EventsPipeline.TypeAgg(r._2, r._3))
         // … carried into a fresh 16-partition query over the rest
-        s.conf.set("spark.sql.shuffle.partitions", "16")
-        EventsPipeline.typeTotalsLifecycle(
-          s, s"$root/feedB", ckptB, s"graft_staterw_b_$tag", Some(init))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        withConf(s, "spark.sql.shuffle.partitions" -> "16") {
+          drain(EventsPipeline.streamingTypeTotals(
+            s, s"$root/feedB", ckptB, s"graft_staterw_b_$tag", Some(init)))
+        }
+      }
       java.nio.file.Files.write(
         java.nio.file.Paths.get(root, "_STAGED"), Array.emptyByteArray): Unit
     }
@@ -315,21 +300,13 @@ object Streaming extends Family {
         f.toPath, new java.io.File(feed, f.getName).toPath): Unit
     }
     val name = s"graft_stream_restart_$tag"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevPart = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = s.conf.getOption(provKey)
-    val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     // one phase = one query lifecycle: AvailableNow drains what is
     // currently in the feed dir as one micro-batch per file, then
     // terminates — state + offsets live only in the checkpoint between
     // phases (complete-mode memory sink supports checkpoint recovery:
     // the sink table is rebuilt from recovered state)
     def phase(): Long = {
-      val q = s.readStream
+      val q = drain(s.readStream
         .schema(EventsPipeline.eventSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(feed)
@@ -345,24 +322,17 @@ object Streaming extends Family {
         .queryName(name)
         .option("checkpointLocation", s"$root/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
+        .start(), availableNow = true)
       Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
     }
     val (lastB1, lastB2) =
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8", rocksDbState,
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
         copyIn(firstHalf)
         val b1 = phase() // the mid-feed kill: offsets+state committed, query gone
         copyIn(rest)
         val b2 = phase() // a NEW query resumes the same checkpoint
         (b1, b2)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevPart)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-        prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
       }
     s.table(name)
       .withColumn("resumed_ok", lit(lastB2 > lastB1 && lastB1 >= 0))
@@ -405,13 +375,9 @@ object Streaming extends Family {
     val name = s"graft_stream_stats_$tag"
     // state partitions sized to state volume, not batch shuffle width —
     // see qStreamIntervalJoin
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = EventsPipeline.streamingUserStats(s, staged, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      drain(EventsPipeline.streamingUserStats(s, staged, name))
+    }
     s.table(name)
       .groupBy("user_id")
       .agg(
@@ -436,22 +402,8 @@ object Streaming extends Family {
     val tag = dirTag(d)
     val staged = stagedEvents(s, d)
     val name = s"graft_stream_tws_$tag"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevPart = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = s.conf.getOption(provKey)
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = EventsPipeline.streamingUserStatsTws(s, staged, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevPart)
-      prevProv match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None => s.conf.unset(provKey)
-      }
+    withConf(s, "spark.sql.shuffle.partitions" -> "8", rocksDbState) {
+      drain(EventsPipeline.streamingUserStatsTws(s, staged, name))
     }
     s.table(name)
       .groupBy("user_id")
@@ -499,13 +451,9 @@ object Streaming extends Family {
         .write.mode("overwrite").parquet(dir)
     }
     val name = s"graft_stream_loj_$tag"
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = EventsPipeline.streamingLeftOuterJoin(s, dir, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      drain(EventsPipeline.streamingLeftOuterJoin(s, dir, name))
+    }
     s.table(name).filter(col("eid") >= 0)
       .orderBy(col("eid"), col("p_us").asc_nulls_first)
   }
@@ -552,17 +500,9 @@ object Streaming extends Family {
     // streams keep it on — there it is what bounds state between sparse
     // data arrivals). Both confs restored after the run; the driver
     // executes catalog queries sequentially.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val q = EventsPipeline.streamingPurchaseErrorJoin(s, staged, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
+    withConf(s, "spark.sql.shuffle.partitions" -> "4",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      drain(EventsPipeline.streamingPurchaseErrorJoin(s, staged, name))
     }
     s.table(name)
       .select(col("event_id"), col("user_id"),
@@ -605,17 +545,9 @@ object Streaming extends Family {
       e.unionAll(e).coalesce(1).write.mode("overwrite").parquet(dupStaged)
     }
     val name = s"graft_stream_dedup_$tag"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val q = EventsPipeline.streamingDedup(s, dupStaged, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
+    withConf(s, "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      drain(EventsPipeline.streamingDedup(s, dupStaged, name))
     }
     s.table(name)
       .select(col("event_id"), col("user_id"),
@@ -689,17 +621,9 @@ object Streaming extends Family {
     // rationale); measured 4 ≈ 8 at sf0.1 (~3.2 s) — the row's cost is the
     // genuine 3-micro-batch session-state execution (ingest + two
     // sentinel-driven emission batches), not partition-commit overhead
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val q = EventsPipeline.streamingSessionize(s, dir, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
+    withConf(s, "spark.sql.shuffle.partitions" -> "4",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      drain(EventsPipeline.streamingSessionize(s, dir, name))
     }
     s.table(name)
       .filter(col("user_id") >= 0)
@@ -742,9 +666,7 @@ object Streaming extends Family {
       col("c_custkey").as("user_id"),
       col("c_mktsegment").as("segment"),
       col("c_nationkey").as("nation"))
-    val q = EventsPipeline.streamingEnrich(s, staged, dim, name)
-    try q.processAllAvailable()
-    finally q.stop()
+    drain(EventsPipeline.streamingEnrich(s, staged, dim, name))
     s.table(name)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("segment"), col("nation"))
@@ -772,13 +694,9 @@ object Streaming extends Family {
     val name = s"graft_stream_hll_$tag"
     // state partitions sized to state volume, not batch shuffle width —
     // see qStreamIntervalJoin
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = EventsPipeline.streamingWindowedDistinct(s, staged, name)
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      drain(EventsPipeline.streamingWindowedDistinct(s, staged, name))
+    }
     val exact = Tables.events(s, d)
       .select((floor(unix_micros(col("ts")) / 86400000000L) * 86400L)
         .as("window_start"), col("user_id"))
@@ -868,20 +786,11 @@ object Streaming extends Family {
   private def qStreamEvict(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val staged = stagedEventsByTime(s, d)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val (sink, stateRows) =
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8",
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
         val (m, q) = EventsPipeline.streamingWindowedDistinctUpdate(s, staged)
-        try {
-          q.processAllAvailable()
-          (m, q.lastProgress.stateOperators.head.numRowsTotal)
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
+        (m, drain(q).lastProgress.stateOperators.head.numRowsTotal)
       }
     import scala.jdk.CollectionConverters._
     val rows = sink.asScala.toSeq.map { case (ws, (au, ne)) => (ws, au, ne) }

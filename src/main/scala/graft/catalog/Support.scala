@@ -3,13 +3,15 @@ package catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ext.Dedup
 import graft.sources.Tables
 
-/** Helpers shared by the catalog families: write-once staging under
-  * `/tmp/graft_*` keyed by [[dirTag]], the session-scoped plan memos
-  * that [[graft.SparkEntry.evictCaches]] clears, and the oracle texts
-  * rows of different families share.
+/** Helpers shared by the catalog families: the scopes a row's session
+  * settings ([[withConf]]) and streams ([[drain]]) run in, write-once
+  * staging under `/tmp/graft_*` keyed by [[dirTag]], the session-scoped
+  * plan memos that [[graft.SparkEntry.evictCaches]] clears, and the oracle
+  * texts rows of different families share.
   */
 private[graft] object Support {
 
@@ -20,6 +22,44 @@ private[graft] object Support {
   private[graft] val liKey =
     Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity",
       "l_extendedprice")
+
+  /** Runs `body` with each `key -> value` set in the session, then puts
+    * every key back as it was: its previous explicit value, or unset if it
+    * had none (so a default is never left behind as an explicit setting).
+    * The one scope for a row's session settings: the session is shared,
+    * and a setting that outlives its row changes every later row's plan.
+    * Spark reads SQL settings when it plans, so a DataFrame returned out of
+    * the scope replans under the restored values unless it was planned
+    * (`queryExecution.executedPlan`) or cached inside.
+    */
+  private[graft] def withConf[A](s: SparkSession, settings: (String, String)*)(
+      body: => A): A = {
+    val explicit = s.conf.getAll // only the keys set in this session
+    val saved = settings.map { case (k, _) => k -> explicit.get(k) }
+    try {
+      settings.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** Drives a started streaming query to the end of its input, then stops
+    * it in a `finally`: the one point where every streaming row's stream
+    * runs. An `AvailableNow` query ends by itself once it has drained what
+    * was there at its start, so it is awaited; any other query is driven
+    * with `processAllAvailable()`, which returns once no new data is left
+    * or the query has stopped. The public `StreamingQuery` API does not
+    * expose the trigger, so the caller says which it started. Returns the
+    * query for its progress reports.
+    */
+  private[graft] def drain(q: StreamingQuery,
+      availableNow: Boolean = false): StreamingQuery = {
+    try if (availableNow) q.awaitTermination() else q.processAllAvailable()
+    finally q.stop()
+    q
+  }
 
   /** Directory tag for write-once artifacts (bucketed/partitioned/json
     * tables) and temp-view names: a 64-bit md5 prefix of the path PLUS the

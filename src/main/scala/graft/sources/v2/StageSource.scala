@@ -16,7 +16,7 @@ import org.apache.spark.sql.connector.expressions.filter.{AlwaysTrue, Predicate}
 import org.apache.spark.sql.graftshim.V2ExprShim
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsOverwrite, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsOverwriteV2, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.catalog.SupportsDeleteV2
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
@@ -1437,7 +1437,8 @@ class StageDeltaWriter(
 }
 
 object StageTable {
-  /** Is a DELETE predicate decidable per-file from partition values alone?
+  /** Is a DELETE or REPLACE WHERE predicate decidable per-file from
+    * partition values alone?
     * Comparisons and IN on a partition column are; everything else —
     * non-partition columns, expressions, OR trees — is not.
     */
@@ -1453,41 +1454,6 @@ object StageTable {
               V2ExprShim.literalValue(c).isDefined) == p.children().length - 1
         case _ => false
       }
-  }
-
-  /** [[decidable]] for V1 filters (the SupportsOverwrite surface). */
-  def decidableV1(f: Filter, partCols: Array[String]): Boolean = f match {
-    case _: org.apache.spark.sql.sources.AlwaysTrue => true
-    case EqualTo(c, _) => partCols.contains(c)
-    case In(c, _) => partCols.contains(c)
-    case GreaterThan(c, _) => partCols.contains(c)
-    case GreaterThanOrEqual(c, _) => partCols.contains(c)
-    case LessThan(c, _) => partCols.contains(c)
-    case LessThanOrEqual(c, _) => partCols.contains(c)
-    case _ => false
-  }
-
-  /** Does a file's partition value satisfy a (decidable) V1 filter? */
-  def matchesV1(
-      f: Filter, partCols: Array[String], colType: Array[DataType],
-      pv: Array[String]): Boolean = {
-    def at(c: String)(test: (DataType, String) => Boolean): Boolean = {
-      val i = partCols.indexOf(c)
-      test(colType(i), pv(i))
-    }
-    f match {
-      case _: org.apache.spark.sql.sources.AlwaysTrue => true
-      case EqualTo(c, v) => at(c)(StageSource.partMatches(_, _, "=", v))
-      case In(c, vs) => at(c)((t, r) =>
-        vs.exists(StageSource.partMatches(t, r, "=", _)))
-      case GreaterThan(c, v) => at(c)(StageSource.partMatches(_, _, ">", v))
-      case GreaterThanOrEqual(c, v) =>
-        at(c)(StageSource.partMatches(_, _, ">=", v))
-      case LessThan(c, v) => at(c)(StageSource.partMatches(_, _, "<", v))
-      case LessThanOrEqual(c, v) =>
-        at(c)(StageSource.partMatches(_, _, "<=", v))
-      case _ => false
-    }
   }
 
   /** Does a file's partition value satisfy a (decidable) predicate?
@@ -1534,27 +1500,27 @@ object StageTable {
 class StageWriteBuilder(
     path: String, schema: StructType, queryId: String, truncate: Boolean,
     partCols: Array[String] = Array.empty,
-    replaceWhere: Array[Filter] = Array.empty,
+    replaceWhere: Array[Predicate] = Array.empty,
     cowOp: Option[StageRowLevelOperation] = None)
-    extends WriteBuilder with SupportsOverwrite {
+    extends WriteBuilder with SupportsOverwriteV2 {
   override def truncate(): WriteBuilder =
     new StageWriteBuilder(path, schema, queryId, truncate = true, partCols)
   // Partition-scoped overwrite (`INSERT OVERWRITE … PARTITION (…)` /
   // `REPLACE WHERE`): the daily-pipeline idiom — recompute ONE
   // partition's shard, leave every other file untouched. Accepted only
   // when each filter is decidable per-file from partition values (every
-  // committed file carries exactly one value); anything finer throws
-  // here, at plan time, instead of half-replacing data.
-  override def overwrite(filters: Array[Filter]): WriteBuilder = {
-    if (filters.isEmpty || filters.forall(
-      _.isInstanceOf[org.apache.spark.sql.sources.AlwaysTrue]))
-      return truncate()
-    filters.foreach(f => require(StageTable.decidableV1(f, partCols),
-      s"REPLACE WHERE predicate $f is not decidable from the " +
+  // committed file carries exactly one value) — the same predicate
+  // vocabulary as partition DELETE ([[StageTable.decidable]]/[[StageTable
+  // .matches]]); anything finer throws here, at plan time, instead of
+  // half-replacing data.
+  override def overwrite(predicates: Array[Predicate]): WriteBuilder = {
+    if (predicates.forall(_.isInstanceOf[AlwaysTrue])) return truncate()
+    predicates.foreach(p => require(StageTable.decidable(p, partCols),
+      s"REPLACE WHERE predicate $p is not decidable from the " +
         s"partition layout (${partCols.mkString(",")}) — align it with " +
         "the partition columns or overwrite the whole table"))
     new StageWriteBuilder(path, schema, queryId, truncate = false,
-      partCols, filters)
+      partCols, predicates)
   }
   // The write DECLARES its required clustering ([[
   // RequiresDistributionAndOrdering]]): rows must arrive grouped by the
@@ -1634,7 +1600,7 @@ case class StageCommit(files: Array[StageFileCommit])
 class StageBatchWrite(
     path: String, schema: StructType, queryId: String, truncate: Boolean,
     partCols: Array[String] = Array.empty,
-    replaceWhere: Array[Filter] = Array.empty,
+    replaceWhere: Array[Predicate] = Array.empty,
     cowOp: Option[StageRowLevelOperation] = None)
     extends BatchWrite {
   override def createBatchWriterFactory(
@@ -1717,7 +1683,7 @@ object StageCommitter {
       path: String, schema: StructType, partCols: Array[String],
       queryId: String, messages: Array[WriterCommitMessage],
       truncate: Boolean, epoch: Option[Long],
-      replaceWhere: Array[Filter] = Array.empty,
+      replaceWhere: Array[Predicate] = Array.empty,
       replaceFiles: Option[Set[String]] = None,
       // merge-on-read DELETE/UPDATE/MERGE: new positional delete entries
       // to record (file → sorted row ordinals) — the dirty files' vectors
@@ -1827,7 +1793,7 @@ object StageCommitter {
           snapshot ++= prev.filterNot { n =>
             val pv = parts.getOrElse(n, Array.empty[String])
             pv.length == partCols.length && replaceWhere.forall(
-              StageTable.matchesV1(_, partCols, colType, pv))
+              StageTable.matches(_, partCols, colType, pv))
           }
         }
       }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.catalog.Support.withConf
 import graft.sources.Tables
 
 /** Bucketing: pre-partitioned co-located joins — the at-scale answer to
@@ -11,9 +12,7 @@ class BucketingSpec extends SparkTestBase {
 
   test("bucketed tables join with no shuffle exchange") {
     // warehouse dir is a temp dir, set statically in SparkTestBase
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       Tables.lineitem(spark, sf0001)
         .select("l_orderkey", "l_quantity")
         .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
@@ -30,7 +29,6 @@ class BucketingSpec extends SparkTestBase {
       assert(!plan.contains("Exchange"), s"expected shuffle-free plan, got:\n$plan")
       assert(joined.count() == Tables.lineitem(spark, sf0001).count())
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       spark.sql("DROP TABLE IF EXISTS li_bucketed")
       spark.sql("DROP TABLE IF EXISTS o_bucketed")
     }

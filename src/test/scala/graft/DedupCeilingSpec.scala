@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.catalog.Support.withConf
 import graft.ext.Dedup
 import graft.sources.Tables
 
@@ -58,13 +59,9 @@ class DedupCeilingSpec extends SparkTestBase {
   }
 
   test("capAudit.failFraction: breach throws eagerly; bad conf values fail at the conf") {
-    def withConf[T](v: String)(body: => T): T = {
-      spark.conf.set("graft.capAudit.failFraction", v)
-      try body finally spark.conf.unset("graft.capAudit.failFraction")
-    }
     // the degenerate corpus drops 100% of candidate mass — any fraction
     // breached must throw at query BUILD, not warn after the fact
-    withConf("0.5") {
+    withConf(spark, "graft.capAudit.failFraction" -> "0.5") {
       val e = intercept[IllegalStateException] {
         Dedup.minhashPairs(degenerate, "doc_id", "text",
           shingleK = 5, numHashes = 64, bands = 8, threshold = 0.8,
@@ -75,7 +72,7 @@ class DedupCeilingSpec extends SparkTestBase {
     // malformed / out-of-range values name the conf key and the bad value
     // instead of surfacing a bare NumberFormatException mid-build
     for (bad <- Seq("half", "-0.1", "0", "1.5")) {
-      withConf(bad) {
+      withConf(spark, "graft.capAudit.failFraction" -> bad) {
         val e = intercept[IllegalArgumentException] {
           Dedup.minhashPairs(degenerate, "doc_id", "text",
             shingleK = 5, numHashes = 64, bands = 8, threshold = 0.8,

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.catalog.Support.withConf
 import graft.operators.Relational
 import graft.sources.Tables
 
@@ -142,42 +143,38 @@ class OperatorPropertySpec extends SparkTestBase {
     // cache reader off) must give the same answers
     val batchSize = "spark.sql.inMemoryColumnarStorage.batchSize"
     val vectorized = "spark.sql.inMemoryColumnarStorage.enableVectorizedReader"
-    val saved = Seq(batchSize, vectorized).map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(batchSize, "7")
-    // each use plans anew (a plan fixes its scan's reader when it is built)
-    def inCache = indexed.select("idx", "v")
-    val cached = inCache.cache()
-    try {
-      val runs = cached.filter(col("idx") % 5 < 3).select("idx")
-      val runArr = runs.as[Long].collect().sorted
-      val dupRuns = runs.union(runs.filter(col("idx") % 10 < 3))
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.select("idx", "v").as[(Long, Double)].collect().sortBy(_._1).toSeq
-      val want = rows(PositionalTake.take(indexed, runs, "idx"))
-      val wantDup = rows(PositionalTake.take(indexed, dupRuns, "idx"))
-      assert(want.length == runArr.length && wantDup.length > want.length)
-      def gathers(): Seq[Seq[(Long, Double)]] = Seq(
-        rows(PositionalTake.mergeTake(inCache, runArr)),
-        rows(PositionalTake.mergeTake(inCache, Array.empty[Long])),
-        rows(PositionalTake.mergeTake(inCache, Array(-5L, Long.MaxValue))),
-        rows(PositionalTake.mergeTakeDist(inCache, runs)),
-        rows(PositionalTake.mergeTakeDist(inCache, dupRuns)),
-        rows(PositionalTake.mergeTakeDist(inCache, farDf)))
-      def readsBatches: Boolean = graft.plans.ColumnarCacheRead.vectorCache(
-        inCache.queryExecution.executedPlan)
-      spark.conf.set(vectorized, "true")
-      assert(readsBatches)
-      val viaBatches = gathers()
-      assert(viaBatches == Seq(want, Nil, Nil, want, wantDup, Nil))
-      spark.conf.set(vectorized, "false")
-      assert(!readsBatches)
-      assert(gathers() == viaBatches)
-    } finally {
-      cached.unpersist()
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+    withConf(spark, batchSize -> "7") {
+      // each use plans anew (a plan fixes its scan's reader when it is built)
+      def inCache = indexed.select("idx", "v")
+      val cached = inCache.cache()
+      try {
+        val runs = cached.filter(col("idx") % 5 < 3).select("idx")
+        val runArr = runs.as[Long].collect().sorted
+        val dupRuns = runs.union(runs.filter(col("idx") % 10 < 3))
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.select("idx", "v").as[(Long, Double)].collect().sortBy(_._1).toSeq
+        val want = rows(PositionalTake.take(indexed, runs, "idx"))
+        val wantDup = rows(PositionalTake.take(indexed, dupRuns, "idx"))
+        assert(want.length == runArr.length && wantDup.length > want.length)
+        def gathers(): Seq[Seq[(Long, Double)]] = Seq(
+          rows(PositionalTake.mergeTake(inCache, runArr)),
+          rows(PositionalTake.mergeTake(inCache, Array.empty[Long])),
+          rows(PositionalTake.mergeTake(inCache, Array(-5L, Long.MaxValue))),
+          rows(PositionalTake.mergeTakeDist(inCache, runs)),
+          rows(PositionalTake.mergeTakeDist(inCache, dupRuns)),
+          rows(PositionalTake.mergeTakeDist(inCache, farDf)))
+        def readsBatches: Boolean = graft.plans.ColumnarCacheRead.vectorCache(
+          inCache.queryExecution.executedPlan)
+        val viaBatches = withConf(spark, vectorized -> "true") {
+          assert(readsBatches)
+          gathers()
+        }
+        assert(viaBatches == Seq(want, Nil, Nil, want, wantDup, Nil))
+        withConf(spark, vectorized -> "false") {
+          assert(!readsBatches)
+          assert(gathers() == viaBatches)
+        }
+      } finally cached.unpersist(): Unit
     }
   }
 

@@ -4,6 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions.col
 
+import graft.catalog.Support.withConf
+
 /** Plan-shape assertions for write-layout catalog queries: the property
   * these rows exist to pin (which bytes a scan is allowed to touch) is
   * visible only in the physical plan, not in the result — the counterpart
@@ -42,15 +44,9 @@ class PlanAuditSpec extends SparkTestBase {
     // inside the fact scan, cutting shuffle input before the exchange —
     // at 100 TB this is what keeps a 1%-selective PK-FK join from
     // shuffling the full fact table. Thresholds are lowered to make the
-    // optimizer's size heuristics fire at test scale; try/finally
-    // restores (shared test session).
+    // optimizer's size heuristics fire at test scale, in a conf scope
+    // (shared test session).
     import graft.sources.Tables
-    val keys = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
     // expected count planned OUTSIDE the conf window (no bloom, default
     // join strategy) — the baseline the bloom-filtered plan must equal
     val expected = Tables.lineitem(spark, sf0001)
@@ -58,11 +54,12 @@ class PlanAuditSpec extends SparkTestBase {
         .filter(col("o_orderpriority") === "1-URGENT"),
         col("l_orderkey") === col("o_orderkey"))
       .count()
-    try {
-      spark.conf.set(keys(0), "true")
-      spark.conf.set(keys(1), "0")
-      spark.conf.set(keys(2), "100MB")
-      spark.conf.set(keys(3), "-1") // force the shuffle join the filter targets
+    withConf(spark,
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
+        // force the shuffle join the filter targets
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = Tables.lineitem(spark, sf0001).select("l_orderkey", "l_quantity")
       val ord = Tables.orders(spark, sf0001)
         .filter(col("o_orderpriority") === "1-URGENT")
@@ -73,9 +70,6 @@ class PlanAuditSpec extends SparkTestBase {
         s"no bloom runtime filter on the fact side:\n$plan")
       // semantics preserved: the bloom is a pre-filter, never a decider
       assert(joined.count() == expected && expected > 0)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -697,21 +691,12 @@ class PlanAuditSpec extends SparkTestBase {
     // lowered so the sf-test-scale skew qualifies; broadcast is disabled
     // to force the shuffle join AQE can operate on.
     import org.apache.spark.sql.functions._
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    spark.conf.set(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB")
-    spark.conf.set(
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64KB")
-    try {
+    withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB") {
       val left = spark.range(400000L).select(
         when(col("id") % 2 === 0, lit(7L)).otherwise(col("id")).as("k"),
         col("id").as("v"))
@@ -724,9 +709,6 @@ class PlanAuditSpec extends SparkTestBase {
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true"),
         s"OptimizeSkewedJoin did not fire:\n${finalPlan.take(1500)}")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -1085,10 +1067,7 @@ class PlanAuditSpec extends SparkTestBase {
     // the flip: with a threshold between the two pruned sizes, the tiny
     // partition broadcasts and the big one sort-merges — SAME table,
     // SAME join, only the partition filter differs
-    val thrKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevThr = spark.conf.get(thrKey)
-    spark.conf.set(thrKey, "65536")
-    try {
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "65536") {
       val probe = spark.range(0, 1000000).select(col("id").as("pk"))
       def planOf(side: org.apache.spark.sql.DataFrame): String = {
         val j = probe.join(side, col("pk") === col("k"))
@@ -1101,7 +1080,7 @@ class PlanAuditSpec extends SparkTestBase {
       val bigPlan = planOf(big)
       assert(!bigPlan.contains("BroadcastHashJoin"),
         s"pruned-big side wrongly broadcast:\n${bigPlan.take(1500)}")
-    } finally spark.conf.set(thrKey, prevThr)
+    }
   }
 
   test("staged-table SPJ: the committed layout is reported; join + aggs plan zero shuffles") {
@@ -1353,11 +1332,9 @@ class PlanAuditSpec extends SparkTestBase {
       assert(shape(sortedL.join(sortedR.hint("MERGE"), "k"))._2 == 0)
       assert(shape(strs.filter(col("id") > 5).agg(count(lit(1))))._2 == 0)
       // with whole-stage codegen off nothing fuses, so nothing is wrapped
-      val wholeStage = "spark.sql.codegen.wholeStage"
-      val saved = s.conf.getOption(wholeStage)
-      s.conf.set(wholeStage, "false")
-      try assert(shape(longs.agg(sum("v")))._2 == 0)
-      finally saved.fold(s.conf.unset(wholeStage))(s.conf.set(wholeStage, _))
+      withConf(s, "spark.sql.codegen.wholeStage" -> "false") {
+        assert(shape(longs.agg(sum("v")))._2 == 0)
+      }
       assert(shape(longs.agg(sum("v"))) == (1, 1, 1))
     } finally Seq(longs, other, strs, sortedL, sortedR).foreach(_.unpersist())
   }

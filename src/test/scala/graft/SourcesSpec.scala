@@ -634,6 +634,14 @@ class SourcesSpec extends SparkTestBase {
     }
     assert(spark.sql("SELECT count(*) FROM stagerw.default.t").head().getLong(0) == 2)
     spark.sql("DROP TABLE stagerw.default.t")
+    // a literal-first inequality arrives in SQL operand order and is
+    // flipped like partition DELETE's: `1 < p` replaces p = 2 and p = 3
+    spark.sql("CREATE TABLE stagerw.default.u (k BIGINT, p INT) PARTITIONED BY (p)")
+    spark.sql("INSERT INTO stagerw.default.u VALUES (1,1), (2,2), (3,3)")
+    spark.sql("INSERT INTO stagerw.default.u REPLACE WHERE 1 < p VALUES (20,2)")
+    assert(spark.sql("SELECT k, p FROM stagerw.default.u")
+      .as[(Long, Int)].collect().toSet == Set((1L, 1), (20L, 2)))
+    spark.sql("DROP TABLE stagerw.default.u")
   }
 
   test("SQL VERSION AS OF pins a snapshot through the catalog") {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.catalog.Support.withConf
 import graft.sources.Tables
 import graft.streaming.EventsPipeline
 
@@ -93,11 +94,8 @@ class StreamingSpec extends SparkTestBase {
 
   test("windowed agg on the RocksDB state store matches batch and engages RocksDB") {
     import scala.jdk.CollectionConverters._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val q = EventsPipeline.streamingWindowedAgg(spark, stagedEvents, "rocks_out")
       try {
         q.processAllAvailable()
@@ -115,9 +113,6 @@ class StreamingSpec extends SparkTestBase {
             _.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")))),
           "no rocksdb* custom metrics in stateOperators progress")
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
     }
   }
 
