@@ -25,7 +25,9 @@ import graft.functions.NativeExpressions._
   * graft_array_count_eq(arr, term).
   *
   * Planner: `TopKPerKeyStrategy` with its optimizer rule `RankLimitRule`
-  * (per-key top-k as one heap pass), and the columnar rule
+  * (per-key top-k as one heap pass), `DriverMergeStrategy` (a
+  * grouping-free aggregate merges its partial rows on the driver, with no
+  * `Exchange SinglePartition` stage), and the columnar rule
   * `ColumnarCacheRead` (whole-stage codegen reads cached primitive columns
   * as vectors).
   */
@@ -50,6 +52,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // a full sort per key group becomes one O(n log k) heap pass.
     e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
     e.injectOptimizerRule(_ => graft.plans.RankLimitRule)
+    // A grouping-free aggregate's partial rows are added on the driver, as
+    // the reference's host adds each DPU's partial sum: one job, no
+    // single-partition exchange.
+    e.injectPlannerStrategy(_ => graft.plans.DriverMergeStrategy)
     // Scan tier: a cached scan whose parent fuses into whole-stage codegen
     // is read as column vectors, not assembled into one UnsafeRow per row.
     e.injectColumnar(_ => graft.plans.ColumnarCacheRead)

@@ -28,7 +28,10 @@ object Relational {
     df.filter(pred).select(cols.map(col): _*)
 
   /** Scalar SUM over one column (ref `host/aggr/aggr_dpu.cc:31-89`).
-    * Partial→final aggregation is automatic; no driver-side adds.
+    * Each partition sums its rows; on a session with `GraftExtensions` the
+    * driver then adds the per-partition partials
+    * (`graft.plans.DriverMergeExec`), as the reference's host adds each
+    * DPU's `sum_result` (`aggr_dpu.cc:82-85`), with no exchange between.
     */
   def sumAgg(df: DataFrame, valueCol: String, as: String = "sum_v"): DataFrame =
     df.agg(sum(col(valueCol)).as(as))

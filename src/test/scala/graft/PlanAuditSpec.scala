@@ -225,6 +225,16 @@ class PlanAuditSpec extends SparkTestBase {
       "sum scan reads columns the aggregate never touches")
   }
 
+  test("q_sum and q_tpch_q6 merge their partial aggregates on the driver, with no SinglePartition exchange") {
+    for (q <- Seq("q_sum", "q_tpch_q6")) {
+      val df = SparkEntry.queries(q)(graftSpark, sf0001)
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("DriverMerge") && !plan.contains("!DriverMerge") &&
+        !plan.contains("SinglePartition"), s"$q:\n$plan")
+    }
+  }
+
   test("bloom prefilter probes the fact scan below the semi join") {
     val plan = SparkEntry.queries("q_bloom_prefilter")(spark, sf0001)
       .queryExecution.executedPlan.toString
@@ -1290,7 +1300,8 @@ class PlanAuditSpec extends SparkTestBase {
   test("cached scans feed fused operators as column vectors, and only those") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, TableCacheQueryStageExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.functions.{count, lit, sum}
     val s = graftSpark
     val helper = new AdaptiveSparkPlanHelper {}
@@ -1301,14 +1312,18 @@ class PlanAuditSpec extends SparkTestBase {
         case p => p
       }
     }
-    // (cached scans, ColumnarToRow transitions, transitions over a cached scan)
+    // (cached scans, ColumnarToRow transitions, transitions over a cached
+    // scan); a cached scan is an adaptive `TableCacheQueryStage` or, in a
+    // plan with no exchange (grouping-free aggregates merge on the driver),
+    // a bare in-memory scan: the helper descends into query stages, so
+    // counting the scans counts each once either way
     def shape(df: DataFrame): (Int, Int, Int) = {
       val p = finalPlan(df)
       val c2r = helper.collect(p) {
         case ColumnarToRowExec(InputAdapter(c)) => c
         case ColumnarToRowExec(c) => c
       }
-      (helper.collect(p) { case t: TableCacheQueryStageExec => t }.length,
+      (helper.collect(p) { case t: InMemoryTableScanExec => t }.length,
         c2r.length, c2r.count(graft.plans.ColumnarCacheRead.vectorCache))
     }
     val longs = s.range(10000).select(col("id").as("idx"), (col("id") % 97).as("v")).cache()
@@ -1321,6 +1336,8 @@ class PlanAuditSpec extends SparkTestBase {
     try {
       assert(shape(longs.agg(sum("v"))) == (1, 1, 1))
       assert(shape(longs.filter(col("v") < 10).agg(count(lit(1)))) == (1, 1, 1))
+      // a grouped aggregate keeps its exchange, so its scan is a query stage
+      assert(shape(longs.groupBy(col("v") % 3).agg(sum("idx"))) == (1, 1, 1))
       // one transition per scan, also with two cached scans in one plan
       assert(shape(longs.select("v").filter(col("v") > 5)
         .union(other.filter(col("v") > 5)).agg(count(lit(1)))) == (2, 2, 2))
